@@ -33,7 +33,7 @@ from monitoring_data_ingestion_spark.plans import REGISTRY
 # This round's optimization rewrites (scale-adaptive widen width,
 # lazy sub-plan handles, the integer-division limb fix, the tfidf
 # tokenize widen) are RESULT-IDENTICAL plan changes verified by the
-# full 299-query sf0.01 driver-sim at HEAD plus targeted oracle
+# full 304-query sf0.01 DuckDB-oracle sweep at HEAD plus targeted oracle
 # pytest — below the re-witness bar per the documented r16 judgment
 # for the same class of change (and the r10 cohort happens to
 # re-witness several of the touched text/dedup queries anyway).

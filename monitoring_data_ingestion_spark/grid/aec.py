@@ -161,76 +161,86 @@ class _BitWriter:
 
 
 class _BitReader:
-    """MSB-first bit cursor.  The one-bit positions are precomputed
-    once (``flatnonzero``) so every FS codeword read is O(1) amortized
-    via a monotone cursor — argmax over the remaining tail would make
-    decoding an operational-size field O(bits²)."""
+    """MSB-first bit cursor that LOCATES fields; the payload values are
+    gathered afterwards in vectorized passes.
+
+    Cost model: a scalar fixed-width field (block ID, reference sample)
+    is sliced from the coded BYTES — O(1), no per-bit loop.  A run of FS
+    codewords is stepped over with one ``np.searchsorted`` into the
+    one-bit index from the cursor — O(log ones) per run, however long.
+    :meth:`fields` and :meth:`fs_values` then decode every recorded run
+    at once (a 64-bit window per fixed-width field, one gap per FS
+    codeword), so a whole field costs O(bits) numpy work plus a few
+    scalar steps per BLOCK."""
 
     def __init__(self, data: bytes) -> None:
-        self.bits = np.unpackbits(
-            np.frombuffer(data, dtype=np.uint8)
-        ).view(np.bool_)
-        self._ones = np.flatnonzero(self.bits)
-        self._oi = 0  # monotone cursor into _ones (never rewinds)
+        self.data = data
+        self.size = len(data) * 8
+        buf = np.frombuffer(data, dtype=np.uint8)
+        self.ones = np.flatnonzero(np.unpackbits(buf).view(np.bool_))
+        # the big-endian 64-bit word starting at EVERY byte offset (an
+        # overlapping stride-1 view; 8 zero bytes of tail keep the last
+        # words in bounds)
+        padded = np.concatenate([buf, np.zeros(8, dtype=np.uint8)])
+        self._words = np.ndarray(
+            (len(buf),), dtype=">u8", buffer=padded, strides=(1,)
+        )
         self.pos = 0
 
-    def read(self, width: int) -> int:
-        if self.pos + width > len(self.bits):
+    def skip(self, width: int) -> None:
+        if self.pos + width > self.size:
             raise ValueError("truncated CCSDS/AEC bitstream")
-        v = 0
-        for b in self.bits[self.pos : self.pos + width]:
-            v = (v << 1) | int(b)
         self.pos += width
-        return v
 
-    def read_many(self, width: int, count: int) -> np.ndarray:
-        """``count`` consecutive ``width``-bit fields, vectorized."""
-        need = width * count
-        if self.pos + need > len(self.bits):
-            raise ValueError("truncated CCSDS/AEC bitstream")
-        if width == 0 or count == 0:
-            return np.zeros(count, dtype=np.int64)
-        chunk = self.bits[self.pos : self.pos + need]
-        weights = np.left_shift(
-            np.int64(1), np.arange(width - 1, -1, -1, dtype=np.int64)
-        )
-        vals = chunk.reshape(count, width).astype(np.int64) @ weights
-        self.pos += need
-        return vals
+    def read(self, width: int) -> int:
+        start = self.pos
+        self.skip(width)
+        v = int.from_bytes(self.data[start >> 3 : (self.pos + 7) >> 3], "big")
+        return (v >> (-self.pos & 7)) & ((1 << width) - 1)
 
     def align(self) -> None:
         self.pos = (self.pos + 7) // 8 * 8
 
-    def _skip_ones(self) -> int:
-        oi, ones, pos = self._oi, self._ones, self.pos
-        while oi < len(ones) and ones[oi] < pos:
-            oi += 1
-        self._oi = oi
+    def skip_fs(self, count: int) -> int:
+        """Step over ``count`` consecutive FS codewords; return the
+        index into :attr:`ones` of the first codeword's one-bit."""
+        oi = int(self.ones.searchsorted(self.pos))
+        if oi + count > len(self.ones):
+            raise ValueError("truncated CCSDS/AEC bitstream (open FS code)")
+        self.pos = int(self.ones[oi + count - 1]) + 1
         return oi
 
     def read_fs(self) -> int:
-        oi = self._skip_ones()
-        if oi >= len(self._ones):
-            raise ValueError("truncated CCSDS/AEC bitstream (open FS code)")
-        one = int(self._ones[oi])
-        nz = one - self.pos
-        self.pos = one + 1
-        self._oi = oi + 1
-        return nz
+        start = self.pos
+        self.skip_fs(1)
+        return self.pos - 1 - start
 
-    def read_fs_many(self, count: int) -> np.ndarray:
-        """``count`` consecutive FS codewords — the gaps between the
-        next ``count`` one-bits, vectorized."""
-        if count == 0:
-            return np.zeros(0, dtype=np.int64)
-        oi = self._skip_ones()
-        if oi + count > len(self._ones):
-            raise ValueError("truncated CCSDS/AEC bitstream (open FS code)")
-        sel = self._ones[oi : oi + count].astype(np.int64)
-        starts = np.concatenate(([np.int64(self.pos)], sel[:-1] + 1))
-        self.pos = int(sel[-1]) + 1
-        self._oi = oi + count
-        return sel - starts
+    def fields(self, pos: np.ndarray, width: np.ndarray) -> np.ndarray:
+        """Fixed-width (1-32 bit) fields starting at bit offsets ``pos``:
+        each read through the 64-bit big-endian window at its byte."""
+        words = self._words[pos >> 3].astype(np.uint64)
+        words <<= (pos & 7).astype(np.uint64)
+        return (words >> (64 - width).astype(np.uint64)).astype(np.int64)
+
+    def fs_values(self, start: np.ndarray, first_one: np.ndarray,
+                  counts: np.ndarray) -> np.ndarray:
+        """Values of FS codeword runs (run r: ``counts[r]`` codewords
+        from bit ``start[r]``, its first one-bit at ``ones[first_one[r]]``)
+        concatenated in run order — each value is the gap of zeros
+        before its one-bit."""
+        run, off = _expand(counts)
+        idx = first_one[run] + off
+        ends = self.ones[idx]
+        prev = np.where(off == 0, start[run], self.ones[idx - 1] + 1)
+        return ends - prev
+
+
+def _expand(counts: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(run index, offset within run) of every element of runs of
+    lengths ``counts``, flattened in run order."""
+    run = np.repeat(np.arange(len(counts)), counts)
+    first = np.cumsum(counts) - counts
+    return run, np.arange(len(run)) - first[run]
 
 
 def _preprocess(samples: np.ndarray, nbits: int, rsi_blocks: int,
@@ -259,59 +269,61 @@ def _preprocess(samples: np.ndarray, nbits: int, rsi_blocks: int,
 
 def _postprocess(mapped: np.ndarray, nbits: int, rsi_blocks: int,
                  block: int) -> np.ndarray:
-    """Inverse of :func:`_preprocess`.
+    """Inverse of :func:`_preprocess`, in one linear pass.
 
-    The inverse mapper is a running recurrence (each θ depends on the
-    previous prediction), but the SATURATED branch (m > 2θ) only fires
-    near the range edges — the common in-range branch is the plain
-    zigzag inverse, whose delta does NOT depend on the predictor.  So
-    the whole stretch is reconstructed vectorized (zigzag + cumsum),
-    violations of the in-range assumption detected against the
-    candidate prefix (exact: the candidate equals the true state up to
-    the FIRST violation), the one saturated sample handled scalar, and
-    the vector pass resumed — O(n) with per-saturation restarts
-    instead of a per-sample Python loop."""
+    Each step's θ depends on the previous sample, so the inverse mapper
+    is a recurrence — but its common IN-RANGE branch (m ≤ 2θ) is the
+    plain zigzag inverse, whose delta does not depend on the predictor,
+    and its SATURATED branch resets the state to m (lower half of the
+    range) or xmax − m (upper half) whatever the exact predictor was.
+    So every reference group is first reconstructed vectorized (zigzag
+    + segmented cumsum); the candidate is exact up to its group's FIRST
+    saturated sample, and from there the group finishes in a scalar
+    loop over Python ints (O(1) per sample).  Cost: O(n) numpy work
+    plus O(samples after a group's first saturation) interpreter steps."""
     m = mapped.astype(np.int64)
     xmax = (1 << nbits) - 1
-    out = np.empty_like(m)
-    ref_stride = rsi_blocks * block
-    for s0 in range(0, len(m), ref_stride):
-        end = min(s0 + ref_stride, len(m))
-        p = int(m[s0])
-        if not 0 <= p <= xmax:
-            raise ValueError(
-                f"CCSDS reference sample {p} exceeds {nbits}-bit range"
-            )
-        out[s0] = p
-        i = s0 + 1
-        while i < end:
-            v = m[i:end]
-            d = np.where(v & 1, -((v + 1) >> 1), v >> 1)
-            ps = p + np.cumsum(d)
-            prev = np.concatenate(([np.int64(p)], ps[:-1]))
-            theta = np.minimum(prev, xmax - prev)
-            viol = v > 2 * theta
-            if not viol.any():
-                # pure in-range stretch: v ≤ 2θ bounds every step
-                # inside [0, xmax] by construction
-                out[i:end] = ps
-                p = int(ps[-1])
-                break
-            f = int(np.argmax(viol))
-            if f:
-                out[i : i + f] = ps[:f]
-                p = int(ps[f - 1])
-            vv = int(v[f])
-            th = min(p, xmax - p)
-            p += vv - th if p < xmax - p else th - vv
-            if not 0 <= p <= xmax:
-                raise ValueError(
-                    "CCSDS preprocessor state escaped the sample range "
-                    "(corrupt stream)"
-                )
-            out[i + f] = p
-            i += f + 1
-    return out
+    n = len(m)
+    stride = rsi_blocks * block
+    starts = np.arange(0, n, stride)
+    refs = m[starts]
+    if int(refs.max()) > xmax:
+        p = int(refs[np.argmax(refs > xmax)])
+        raise ValueError(
+            f"CCSDS reference sample {p} exceeds {nbits}-bit range"
+        )
+    if int(m.max()) > xmax:
+        # every mapped value of a valid stream is ≤ xmax; a larger one
+        # lands in the saturated branch and leaves the sample range
+        raise ValueError(
+            "CCSDS preprocessor state escaped the sample range "
+            "(corrupt stream)"
+        )
+    d = np.where(m & 1, -((m + 1) >> 1), m >> 1)
+    d[starts] = refs
+    cs = np.cumsum(d)
+    group = np.arange(n) // stride
+    cand = cs - (cs[starts] - refs)[group]
+    prev = np.roll(cand, 1)  # predictor of each non-reference sample
+    viol = m > 2 * np.minimum(prev, xmax - prev)
+    viol[starts] = False
+    hits = np.flatnonzero(viol)
+    if not len(hits):
+        return cand
+    half = xmax >> 1  # p ≤ half ⟺ p < xmax − p (xmax is odd)
+    firsts = hits[np.r_[True, group[hits[1:]] != group[hits[:-1]]]]
+    for f in firsts.tolist():
+        end = min((f // stride + 1) * stride, n)
+        p = int(cand[f - 1])
+        tail = []
+        for v, dv in zip(m[f:end].tolist(), d[f:end].tolist()):
+            if p <= half:
+                p = p + dv if v <= 2 * p else v
+            else:
+                p = p + dv if v <= 2 * (xmax - p) else xmax - v
+            tail.append(p)
+        cand[f:end] = tail
+    return cand
 
 
 def aec_encode(
@@ -452,7 +464,13 @@ def aec_decode(
     block_size: int = 32,
     rsi: int = 128,
 ) -> np.ndarray:
-    """Decode a CCSDS 121.0 stream → int64 array of ``n_samples``."""
+    """Decode a CCSDS 121.0 stream → int64 array of ``n_samples``.
+
+    Two passes: a scalar BLOCK-HEADER pass reads each block's option ID
+    (and reference sample) and steps over its payload, recording where
+    the FS codewords and raw fields lie; then every split-k / FS,
+    uncompressed and second-extension payload of the stream is gathered
+    in one vectorized pass per kind."""
     if not 1 <= nbits <= 32:
         raise ValueError(f"CCSDS sample resolution {nbits} out of 1-32")
     if not flags & FLAG_MSB:
@@ -470,42 +488,49 @@ def aec_decode(
     id_len = _id_len(nbits)
     id_uncomp = (1 << id_len) - 1
     pad_rsi = bool(flags & FLAG_PAD_RSI)
+    preprocess = bool(flags & FLAG_PREPROCESS)
     nblocks = (n_samples + j - 1) // j
     m = np.zeros(nblocks * j, dtype=np.int64)
+    # payload runs located by the header pass, one tuple per block:
+    # FS runs (start bit, first one index, count, first sample, shift k),
+    # raw-field runs (start bit, width, count, first sample) OR-ed in,
+    # second-extension blocks (start bit, first one index, first
+    # sample, is_ref)
+    fs_runs: list[tuple[int, int, int, int, int]] = []
+    raw_runs: list[tuple[int, int, int, int]] = []
+    se_runs: list[tuple[int, int, int, bool]] = []
     bi = 0
     while bi < nblocks:
         if pad_rsi and bi and bi % rsi == 0:
             r.align()  # coded data byte-aligns at each RSI boundary
-        is_ref = flags & FLAG_PREPROCESS and bi % rsi == 0
+        is_ref = preprocess and bi % rsi == 0
+        start = bi * j
         opt = r.read(id_len)
         if opt == 0:
-            low = r.read(1)
-            if low == 0:
-                # zero-block run
-                if is_ref:
-                    m[bi * j] = r.read(nbits)
+            zero_block = r.read(1) == 0
+            if is_ref:
+                m[start] = r.read(nbits)
+            if zero_block:
                 code = r.read_fs() + 1  # FS(value-1) → value
-                seg_end = _seg_end(bi, rsi)
                 if code == 5:  # ROS: zero to the end of the segment
-                    run = min(seg_end, nblocks) - bi
+                    run = min(_seg_end(bi, rsi), nblocks) - bi
                 elif code <= 4:
                     run = code
                 else:
                     run = code - 1
+                if bi + run > (bi // rsi + 1) * rsi:
+                    # a zero run never crosses an RSI boundary: with
+                    # preprocessing the next group's reference sample
+                    # was never transmitted, and without it the run
+                    # accounting restarts there — malformed either way
+                    raise ValueError(
+                        "CCSDS zero-block run crosses an RSI boundary "
+                        "(swallows a reference sample)"
+                    )
                 if bi + run > nblocks:
                     raise ValueError(
                         "CCSDS zero-block run exceeds the sample count"
                     )
-                if flags & FLAG_PREPROCESS:
-                    for b2 in range(bi + 1, bi + run):
-                        if b2 % rsi == 0:
-                            # an interior reference block's sample was
-                            # never transmitted — the stream is
-                            # malformed, not a zero field
-                            raise ValueError(
-                                "CCSDS zero-block run swallows a "
-                                "reference sample"
-                            )
                 bi += run
                 continue
             # second extension: J/2 gammas; with a reference sample
@@ -513,56 +538,60 @@ def aec_decode(
             # its b half (δ1) — the a half is discarded undecoded,
             # libaec's decoder posture (accepts half-pair (0, δ1)
             # encoders and those folding other values into a alike)
-            start = bi * j
+            pos = r.pos
+            se_runs.append((pos, r.skip_fs(j // 2), start, is_ref))
+        elif opt == id_uncomp:
+            raw_runs.append((r.pos, nbits, j, start))
+            r.skip(j * nbits)
+        else:
+            k = opt - 1
+            if k > nbits - 1:
+                raise ValueError(
+                    f"CCSDS split exponent {k} exceeds the {nbits}-bit "
+                    "samples"
+                )
             if is_ref:
                 m[start] = r.read(nbits)
-            gam = r.read_fs_many(j // 2)
-            # invert gamma = s(s+1)/2 + b with a+b = s, vectorized
-            # (float sqrt seed + exact integer correction)
-            s_ = ((np.sqrt(8.0 * gam + 1.0) - 1.0) // 2).astype(np.int64)
-            over = s_ * (s_ + 1) // 2 > gam
-            while over.any():
-                s_[over] -= 1
-                over = s_ * (s_ + 1) // 2 > gam
-            under = (s_ + 1) * (s_ + 2) // 2 <= gam
-            while under.any():
-                s_[under] += 1
-                under = (s_ + 1) * (s_ + 2) // 2 <= gam
-            b_ = gam - s_ * (s_ + 1) // 2
-            a_ = s_ - b_
-            if is_ref:
-                m[start + 1] = b_[0]
-                m[start + 2 : start + j : 2] = a_[1:]
-                m[start + 3 : start + j : 2] = b_[1:]
-            else:
-                m[start : start + j : 2] = a_
-                m[start + 1 : start + j : 2] = b_
-            bi += 1
-            continue
-        if opt == id_uncomp:
-            m[bi * j : (bi + 1) * j] = r.read_many(nbits, j)
-            bi += 1
-            continue
-        k = opt - 1
-        if k > nbits - 1:
-            raise ValueError(
-                f"CCSDS split exponent {k} exceeds the {nbits}-bit samples"
-            )
-        start = bi * j
-        i0 = 0
-        if is_ref:
-            m[start] = r.read(nbits)
-            i0 = 1
-        highs = r.read_fs_many(j - i0)
-        if k:
-            m[start + i0 : start + j] = (highs << k) | r.read_many(
-                k, j - i0
-            )
-        else:
-            m[start + i0 : start + j] = highs
+                start += 1
+            count = (bi + 1) * j - start
+            pos = r.pos
+            fs_runs.append((pos, r.skip_fs(count), count, start, k))
+            if k:
+                raw_runs.append((r.pos, k, count, start))
+                r.skip(count * k)
         bi += 1
+    if fs_runs:
+        pos, one, count, dst, k = (np.array(c) for c in zip(*fs_runs))
+        run, off = _expand(count)
+        m[dst[run] + off] = r.fs_values(pos, one, count) << k[run]
+    if raw_runs:
+        pos, width, count, dst = (np.array(c) for c in zip(*raw_runs))
+        run, off = _expand(count)
+        m[dst[run] + off] |= r.fields(pos[run] + off * width[run], width[run])
+    if se_runs:
+        pos, one, dst, ref = (np.array(c) for c in zip(*se_runs))
+        count = np.full(len(pos), j // 2)
+        gam = r.fs_values(pos, one, count)
+        # invert gamma = s(s+1)/2 + b with a+b = s, vectorized
+        # (float sqrt seed + exact integer correction)
+        s_ = ((np.sqrt(8.0 * gam + 1.0) - 1.0) // 2).astype(np.int64)
+        over = s_ * (s_ + 1) // 2 > gam
+        while over.any():
+            s_[over] -= 1
+            over = s_ * (s_ + 1) // 2 > gam
+        under = (s_ + 1) * (s_ + 2) // 2 <= gam
+        while under.any():
+            s_[under] += 1
+            under = (s_ + 1) * (s_ + 2) // 2 <= gam
+        b_ = gam - s_ * (s_ + 1) // 2
+        a_ = s_ - b_
+        run, off = _expand(count)
+        at = dst[run] + 2 * off
+        keep_a = ~(ref[run] & (off == 0))  # the ref's slot keeps the ref
+        m[at[keep_a]] = a_[keep_a]
+        m[at + 1] = b_
     m = m[:n_samples]
-    if flags & FLAG_PREPROCESS:
+    if preprocess:
         return _postprocess(m, nbits, rsi, block_size)
     if int(m.max(initial=0)) >> nbits:
         raise ValueError("decoded CCSDS sample exceeds the declared range")

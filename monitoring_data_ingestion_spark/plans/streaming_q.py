@@ -301,8 +301,8 @@ def era5_grid_anomaly_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     sink, not a batch re-statement.
 
     Scale: each micro-batch is one month of grid scanned executor-side;
-    normals broadcast (~|cells| rows); the only wide stage is the
-    idempotent partitioned write. sf_dir is unused — the grid is the
+    normals broadcast (~|cells| rows); the idempotent partitioned write
+    runs in the scan's tasks, so no stage shuffles. sf_dir is unused — the grid is the
     reference's own data model, independent of the relational fixtures.
     """
     import atexit
@@ -825,8 +825,9 @@ def era5_grib_anomaly_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     join, subtract, AND the partitioned sink round-trip.
 
     Scale: one month-file per micro-batch (the archive's arrival unit);
-    normals broadcast; the only wide stage is the idempotent
-    partitioned write — the parquet flagship's exact posture, now with
+    normals broadcast; the idempotent partitioned write runs in the
+    decode task, so no stage shuffles — the parquet flagship's exact
+    posture, now with
     the download format at the front. sf_dir keys only the
     session-cached landing; the data is the engine's own model.
     """

@@ -18,8 +18,9 @@ query over the ``gridmonths`` custom source (sources/python_datasource.py):
 
 Scale posture: each micro-batch is one month of grid (|cells|×|vars|
 rows) scanned executor-side via Arrow; the normals table is ~|cells|
-rows — broadcast, so the join needs no shuffle; the only wide stage is
-the (idempotent) partitioned write. A 1000-executor backfill uses the
+rows — broadcast, so the join needs no shuffle, and the partitioned
+write runs in the scan's own tasks (no exchange) — a micro-batch is one
+narrow stage. A 1000-executor backfill uses the
 BATCH reader over the same landing dir instead (one partition per month,
 embarrassingly parallel), then flips to this paced stream at the head —
 same transform, same sink, same layout.
@@ -67,12 +68,16 @@ def anomaly_transform(stream: DataFrame, normals: DataFrame) -> DataFrame:
 def month_partitioned_writer(out_dir: str):
     """Idempotent month-keyed sink: dynamic partition overwrite means a
     replayed micro-batch rewrites exactly its own months (S7's atomic
-    rename generalized to partition swaps)."""
+    rename generalized to partition swaps).
+
+    The batch is written as it arrives, without a shuffle: each input
+    task writes one file into every ``month_key`` partition it holds.
+    A one-file micro-batch (``maxFilesPerTrigger=1``) is one task, so
+    each month partition gets one file."""
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
         (
             batch_df.withColumn("month_key", F.date_format("time", "yyyy-MM"))
-            .repartition("month_key")
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("month_key")

@@ -13,9 +13,12 @@ from hypothesis import strategies as st
 
 from monitoring_data_ingestion_spark.grid.aec import (
     FLAG_MSB,
+    FLAG_PAD_RSI,
     FLAG_PREPROCESS,
     FLAG_RESTRICTED,
     FLAG_SIGNED,
+    _postprocess,
+    _preprocess,
     aec_decode,
     aec_encode,
 )
@@ -61,6 +64,99 @@ def test_roundtrip_property(nbits, n, block, rsi, pre, style, seed):
     enc = aec_encode(x, nbits, flags=flags, block_size=block, rsi=rsi)
     dec = aec_decode(enc, n, nbits, flags=flags, block_size=block, rsi=rsi)
     assert np.array_equal(dec, x)
+
+
+# operational size: one 0.25° Africa field (291 × 281 cells) at 12 bits,
+# GRIB2 template 5.42's defaults (J = 32, RSI = 128 blocks → 4,096-sample
+# reference groups)
+_OP_SHAPE = (291, 281)
+_OP_NBITS = 12
+
+
+def _precip_like(seed: int) -> np.ndarray:
+    """Zero-heavy field: dry cells at 0, wet cells gamma-distributed —
+    every dry→wet step saturates the preprocessor's mapper."""
+    rng = np.random.default_rng(seed)
+    lat = np.linspace(37.5, -35.0, _OP_SHAPE[0])[:, None]
+    p_wet = 0.15 + 0.7 * np.cos(np.radians(4 * lat)) ** 2
+    wet = rng.random(_OP_SHAPE) < p_wet
+    amount = rng.gamma(0.8, 400.0, _OP_SHAPE)
+    return np.clip(np.round(wet * amount), 0, 2**_OP_NBITS - 1).astype(
+        np.int64
+    ).reshape(-1)
+
+
+def _t2m_like(seed: int) -> np.ndarray:
+    """Smooth field well inside the range: the mapper never saturates."""
+    rng = np.random.default_rng(seed)
+    lat = np.linspace(37.5, -35.0, _OP_SHAPE[0])[:, None]
+    lon = np.linspace(-18.0, 52.0, _OP_SHAPE[1])[None, :]
+    t = (
+        2000 + 600 * np.cos(np.radians(2 * lat))
+        + 150 * np.sin(np.radians(3 * lon))
+        + rng.normal(0.0, 8.0, _OP_SHAPE)
+    )
+    return np.round(t).astype(np.int64).reshape(-1)
+
+
+def _unmap_reference(mapped: np.ndarray, nbits: int, rsi: int,
+                     block: int) -> np.ndarray:
+    """The inverse mapper as the module docstring states it, one sample
+    at a time: the reference value for _postprocess."""
+    xmax = (1 << nbits) - 1
+    out = []
+    for i, v in enumerate(mapped.tolist()):
+        if i % (rsi * block) == 0:
+            p = v  # reference sample, raw
+        else:
+            theta = min(p, xmax - p)
+            if v <= 2 * theta:
+                p += -((v + 1) // 2) if v % 2 else v // 2
+            elif p < xmax - p:
+                p += v - theta
+            else:
+                p -= v - theta
+        out.append(p)
+    return np.array(out, dtype=np.int64)
+
+
+@pytest.mark.parametrize("pad_rsi", [False, True])
+@pytest.mark.parametrize("field", [_precip_like, _t2m_like])
+def test_operational_size_roundtrip(field, pad_rsi):
+    """81,771 12-bit samples (20 reference groups) round-trip bit-exactly,
+    with and without byte-aligned RSI groups."""
+    x = field(5)
+    flags = FLAG_MSB | FLAG_PREPROCESS | (FLAG_PAD_RSI if pad_rsi else 0)
+    enc = aec_encode(x, _OP_NBITS, flags=flags)
+    assert np.array_equal(aec_decode(enc, len(x), _OP_NBITS, flags=flags), x)
+    with pytest.raises(ValueError, match="truncated"):
+        aec_decode(enc[: len(enc) * 3 // 4], len(x), _OP_NBITS, flags=flags)
+
+
+def test_postprocess_matches_scalar_reference():
+    """The linear inverse mapper against the plain per-sample loop, on
+    the preprocessed operational fields (the precipitation-like one
+    saturates thousands of times) and on arbitrary mapped values, which
+    saturate at both ends of the range."""
+    xmax = (1 << _OP_NBITS) - 1
+    precip = _precip_like(7)
+    p = precip[:-1]
+    saturated = np.abs(precip[1:] - p) > np.minimum(p, xmax - p)
+    assert saturated.sum() > 1000
+    for x in (precip, _t2m_like(7)):
+        m = _preprocess(x, _OP_NBITS, 128, 32)
+        got = _postprocess(m, _OP_NBITS, 128, 32)
+        assert np.array_equal(got, _unmap_reference(m, _OP_NBITS, 128, 32))
+        assert np.array_equal(got, x)
+    rng = np.random.default_rng(11)
+    for rsi, block in ((128, 32), (1, 8), (3, 16)):
+        m = rng.integers(0, xmax + 1, size=20_000)
+        calm = rng.random(len(m)) < 0.6  # long in-range runs
+        m[calm] = rng.integers(0, 4, size=int(calm.sum()))
+        assert np.array_equal(
+            _postprocess(m, _OP_NBITS, rsi, block),
+            _unmap_reference(m, _OP_NBITS, rsi, block),
+        )
 
 
 def test_compression_beats_raw_on_smooth_fields():
@@ -167,6 +263,14 @@ def test_guards_stop_loudly():
         aec_decode(
             bad, 32, 4,
             flags=FLAG_MSB | FLAG_PREPROCESS, block_size=8, rsi=2,
+        )
+    # ... and WITHOUT preprocessing too: ID 000 + '0', run value 2 =
+    # FS(1) — with rsi = 1 the run crosses into block 1's RSI group,
+    # where zero-run accounting restarts (libaec never emits it)
+    with pytest.raises(ValueError, match="crosses an RSI boundary"):
+        aec_decode(
+            bytes([0b00000100]), 16, 4,
+            flags=FLAG_MSB, block_size=8, rsi=1,
         )
     # a split exponent past the sample width would shift garbage in:
     # n = 5 → 3-bit IDs, ID 6 → k = 5 > n − 1 = 4

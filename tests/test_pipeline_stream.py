@@ -158,3 +158,85 @@ def test_paced_trigger_rejects_available_now(spark, landing, normals, tmp_path):
             str(tmp_path / "commit"),
             months_per_trigger=1, available_now=True,
         )
+
+
+def _part_files(month_dir: str) -> list[str]:
+    return [f for f in os.listdir(month_dir) if f.startswith("part-")]
+
+
+def test_two_month_batch_publishes_both_partitions_and_replay_converges(
+    spark, landing, normals, tmp_path
+):
+    """One task carrying two months (no shuffle groups them): each
+    month_key partition receives exactly that month's rows, an earlier
+    month's partition is left alone, and re-publishing the batch
+    converges instead of duplicating."""
+    out = str(tmp_path / "two_month_out")
+    write = month_partitioned_writer(out)
+    earlier = anomaly_transform(
+        spark.read.parquet(os.path.join(landing, "1993-03.parquet")), normals
+    )
+    write(earlier, 0)
+    batch = anomaly_transform(
+        spark.read.parquet(*(
+            os.path.join(landing, f"1994-0{m}.parquet") for m in (1, 2)
+        )),
+        normals,
+    ).coalesce(1)
+    expected = {
+        key: sorted(
+            batch.filter(F.date_format("time", "yyyy-MM") == key).collect()
+        )
+        for key in ("1994-01", "1994-02")
+    }
+    rows_per_month = len(VAR_OFFSETS) * len(LATS) * len(LONS)
+    for batch_id in (1, 2):  # the second publish is a replay
+        write(batch, batch_id)
+        assert sorted(
+            d for d in os.listdir(out) if d.startswith("month_key=")
+        ) == ["month_key=1993-03", "month_key=1994-01", "month_key=1994-02"]
+        for key, rows in expected.items():
+            month_dir = os.path.join(out, f"month_key={key}")
+            assert len(rows) == rows_per_month
+            assert sorted(spark.read.parquet(month_dir).collect()) == rows
+            assert len(_part_files(month_dir)) == 1  # one input task
+        assert spark.read.parquet(
+            os.path.join(out, "month_key=1993-03")
+        ).count() == rows_per_month
+
+
+def test_one_file_batch_publishes_without_a_shuffle_stage(
+    spark, landing, normals, tmp_path
+):
+    """A one-file micro-batch (the maxFilesPerTrigger=1 shape) publishes
+    in the stages a plain scan of the batch already runs: the write adds
+    no exchange, and its single task writes one file per month."""
+    normals.count()  # the broadcast side reads the materialized cache
+    batch = anomaly_transform(
+        spark.read.parquet(os.path.join(landing, "1994-03.parquet")), normals
+    )
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def stages(group: str, action) -> list[int]:
+        sc.setJobGroup(group, group)
+        try:
+            action()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return sorted(
+            s
+            for job in tracker.getJobIdsForGroup(group)
+            for s in tracker.getJobInfo(job).stageIds
+        )
+
+    out = str(tmp_path / "one_file_out")
+    scan = stages(
+        f"scan-{tmp_path.name}", lambda: batch.write.format("noop").mode("overwrite").save()
+    )
+    publish = stages(
+        f"publish-{tmp_path.name}", lambda: month_partitioned_writer(out)(batch, 0)
+    )
+    assert len(publish) == len(scan)
+    assert tracker.getStageInfo(publish[-1]).numTasks == 1
+    assert len(_part_files(os.path.join(out, "month_key=1994-03"))) == 1
