@@ -4,7 +4,12 @@ GRIB2 complex/JPEG2000/Gaussian packings, the projected grid families
 (Lambert / polar stereographic / Mercator), landing inventories,
 reduced grids and the GeoTIFF publish round-trip.  Split out of the
 former monolithic plans/grid_q.py in r16 — every registry name and
-oracle is unchanged."""
+oracle is unchanged.
+
+The gate → archive synth → decode scaffold and the shared witness
+columns live in plans/grid_common.py (``landed_records`` /
+``doc_archives``); each query here owns only its archive ``build`` function
+and its witness arithmetic."""
 
 from __future__ import annotations
 
@@ -15,7 +20,14 @@ from pyspark.sql import functions as F
 
 from ..sources.readers import table
 from .catalog import query
-from .grid_common import _is_present, _present  # noqa: F401
+from .grid_common import (
+    _present,
+    doc_archives,
+    doc_id,
+    landed_records,
+    vsum,
+    wsum,
+)
 
 def _synth_grib1_file(d: int) -> bytes:
     """The shared 3-record GRIB1 fixture file for document ``d`` (used by
@@ -118,55 +130,25 @@ def grid_grib1_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 100 TB archive shape). Python is sanctioned here: this IS the
     byte-codec boundary, like the PPM/PCM queries.
     """
-    from typing import Iterator
-
-    import pandas as pd
-
     from ..grid.grib1 import decode_grib1, select_record
 
-    ids = (
-        table(spark, sf_dir, "documents")
-        .filter((F.col("doc_id") % 3 == 2) & (F.col("doc_id") < 300))
-        .select("doc_id")
+    def decode(d: int, buf: bytes):
+        rn = 1 + (d // 3) % 3
+        rec = decode_grib1(select_record(buf, rn))
+        yield {
+            "record_number": rn,
+            "ni": rec.ni,
+            "nj": rec.nj,
+            "lat_first_mdeg": rec.lat_first_mdeg,
+            "values": rec.values.reshape(-1).tolist(),
+        }
+
+    decoded = doc_archives(
+        spark, sf_dir, (3, 2, 300), _synth_grib1_file, decode,
+        "record_number int, ni int, nj int, lat_first_mdeg int, "
+        "values array<double>",
     )
-
-    def synth(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            yield pd.DataFrame(
-                [{"doc_id": int(d), "grib": _synth_grib1_file(int(d))} for d in pdf["doc_id"]]
-            )
-
-    def decode(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id, buf in zip(pdf["doc_id"], pdf["grib"]):
-                d = int(doc_id)
-                rn = 1 + (d // 3) % 3
-                rec = decode_grib1(select_record(bytes(buf), rn))
-                rows.append(
-                    {
-                        "doc_id": d,
-                        "record_number": rn,
-                        "ni": rec.ni,
-                        "nj": rec.nj,
-                        "lat_first_mdeg": rec.lat_first_mdeg,
-                        "values": rec.values.reshape(-1).tolist(),
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    files = ids.mapInPandas(synth, schema="doc_id bigint, grib binary")
-    decoded = files.mapInPandas(
-        decode,
-        schema=(
-            "doc_id bigint, record_number int, ni int, nj int, "
-            "lat_first_mdeg int, values array<double>"
-        ),
-    )
-    # Arrow maps Python NaN in a list<double> to NULL — filter both
-    # spellings of "missing" (isnan(NULL) is false, so NULL needs its
-    # own clause).
-    present = F.filter("values", _is_present)
+    present = F.filter("values", _present)
     return decoded.select(
         "doc_id",
         "record_number",
@@ -366,52 +348,26 @@ def grid_grib1_inventory(spark: SparkSession, sf_dir: str) -> DataFrame:
     as ``grid_grib1_decode``; the oracle restates the header fields
     closed-form.
     """
-    from typing import Iterator
-
-    import pandas as pd
-
     from ..grid.grib1 import inspect_grib1, iter_messages
 
-    ids = (
-        table(spark, sf_dir, "documents")
-        .filter((F.col("doc_id") % 3 == 2) & (F.col("doc_id") < 300))
-        .select("doc_id")
-    )
+    def inventory(d: int, buf: bytes):
+        for n, msg in enumerate(iter_messages(buf), start=1):
+            h = inspect_grib1(msg)
+            yield {
+                "record_number": n,
+                "parameter": h["parameter"],
+                "year": h["year"],
+                "month": h["month"],
+                "ni": h["ni"],
+                "nj": h["nj"],
+                "nbits": h["nbits"],
+                "has_bitmap": h["has_bitmap"],
+            }
 
-    def synth(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            yield pd.DataFrame(
-                [{"doc_id": int(d), "grib": _synth_grib1_file(int(d))} for d in pdf["doc_id"]]
-            )
-
-    def inventory(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id, buf in zip(pdf["doc_id"], pdf["grib"]):
-                for n, msg in enumerate(iter_messages(bytes(buf)), start=1):
-                    h = inspect_grib1(msg)
-                    rows.append(
-                        {
-                            "doc_id": int(doc_id),
-                            "record_number": n,
-                            "parameter": h["parameter"],
-                            "year": h["year"],
-                            "month": h["month"],
-                            "ni": h["ni"],
-                            "nj": h["nj"],
-                            "nbits": h["nbits"],
-                            "has_bitmap": h["has_bitmap"],
-                        }
-                    )
-            yield pd.DataFrame(rows)
-
-    files = ids.mapInPandas(synth, schema="doc_id bigint, grib binary")
-    return files.mapInPandas(
-        inventory,
-        schema=(
-            "doc_id bigint, record_number int, parameter int, year int, "
-            "month int, ni int, nj int, nbits int, has_bitmap boolean"
-        ),
+    return doc_archives(
+        spark, sf_dir, (3, 2, 300), _synth_grib1_file, inventory,
+        "record_number int, parameter int, year int, month int, ni int, "
+        "nj int, nbits int, has_bitmap boolean",
     ).orderBy("doc_id", "record_number")
 
 
@@ -481,70 +437,44 @@ def grid_grib2_match_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     inventory strings only (a few hundred bytes per record), so at
     archive scale matching costs metadata, not raster I/O.
     """
-    from typing import Iterator
-
     import numpy as np
-    import pandas as pd
 
     from ..grid.grib2 import decode_grib2, encode_grib2_message, match_records
 
-    ids = (
-        table(spark, sf_dir, "documents")
-        .filter((F.col("doc_id") % 3 == 1) & (F.col("doc_id") < 300))
-        .select("doc_id")
-    )
+    def build(d: int) -> bytes:
+        ni, nj = 6 + d % 4, 4 + d % 3
+        i = np.arange(ni)[None, :]
+        j = np.arange(nj)[:, None]
+        msgs = []
+        for r in range(4):
+            v = 200 + 2 * ((d * 11 + r * 7 + i * 5 + j * 3) % 100)
+            msgs.append(
+                encode_grib2_message(
+                    v.astype(np.float64),
+                    category=r % 2,
+                    number=r,
+                    reference_value=200.0,
+                    binary_scale=1,
+                    nbits=8,
+                )
+            )
+        return b"".join(msgs)
 
-    def synth(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                ni, nj = 6 + d % 4, 4 + d % 3
-                i = np.arange(ni)[None, :]
-                j = np.arange(nj)[:, None]
-                msgs = []
-                for r in range(4):
-                    v = 200 + 2 * ((d * 11 + r * 7 + i * 5 + j * 3) % 100)
-                    msgs.append(
-                        encode_grib2_message(
-                            v.astype(np.float64),
-                            category=r % 2,
-                            number=r,
-                            reference_value=200.0,
-                            binary_scale=1,
-                            nbits=8,
-                        )
-                    )
-                rows.append({"doc_id": d, "grib": b"".join(msgs)})
-            yield pd.DataFrame(rows)
+    def match_decode(d: int, buf: bytes):
+        for rank, msg in enumerate(
+            match_records(buf, f"c{d % 2},", limit=2), start=1
+        ):
+            rec = decode_grib2(msg)
+            yield {
+                "match_rank": rank,
+                "category": rec.category,
+                "number": rec.number,
+                "values": rec.values.reshape(-1).tolist(),
+            }
 
-    def match_decode(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id, buf in zip(pdf["doc_id"], pdf["grib"]):
-                d = int(doc_id)
-                for rank, msg in enumerate(
-                    match_records(bytes(buf), f"c{d % 2},", limit=2), start=1
-                ):
-                    rec = decode_grib2(msg)
-                    rows.append(
-                        {
-                            "doc_id": d,
-                            "match_rank": rank,
-                            "category": rec.category,
-                            "number": rec.number,
-                            "values": rec.values.reshape(-1).tolist(),
-                        }
-                    )
-            yield pd.DataFrame(rows)
-
-    files = ids.mapInPandas(synth, schema="doc_id bigint, grib binary")
-    decoded = files.mapInPandas(
-        match_decode,
-        schema=(
-            "doc_id bigint, match_rank int, category int, number int, "
-            "values array<double>"
-        ),
+    decoded = doc_archives(
+        spark, sf_dir, (3, 1, 300), build, match_decode,
+        "match_rank int, category int, number int, values array<double>",
     )
     return decoded.select(
         "doc_id",
@@ -764,84 +694,61 @@ def grid_grib2_complex_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     executor-side, only per-record statistic rows shuffle, files decode
     embarrassingly parallel.
     """
-    from typing import Iterator
-
     import numpy as np
-    import pandas as pd
 
     from ..grid.grib2 import decode_grib2, encode_grib2_message, iter_messages2
 
-    ids = (
-        table(spark, sf_dir, "documents")
-        .filter((F.col("doc_id") % 3 == 0) & (F.col("doc_id") < 300))
-        .select("doc_id")
+    def build(d: int) -> bytes:
+        ni, nj = 6 + d % 5, 3 + d % 3
+        i = np.arange(ni)[None, :]
+        j = np.arange(nj)[:, None]
+        msgs = []
+        for r in range(4):
+            v = (150 + 2 * ((d * 13 + r * 7 + i * 5 + j * 3) % 80)).astype(
+                np.float64
+            )
+            kw = dict(
+                reference_value=150.0,
+                binary_scale=1,
+                group_len=4 + d % 5,
+                category=r,
+                number=r,
+            )
+            if r == 1:
+                mm = (i * 2 + j + d) % 5 == 0
+                msgs.append(
+                    encode_grib2_message(
+                        v, packing="complex",
+                        missing_mask=mm | np.zeros_like(v, bool), **kw,
+                    )
+                )
+            elif r == 2:
+                msgs.append(
+                    encode_grib2_message(
+                        v, packing="complex_diff",
+                        spatial_diff_order=1 + d % 2, **kw,
+                    )
+                )
+            elif r == 3:
+                msgs.append(encode_grib2_message(v, packing="png", **kw))
+            else:
+                msgs.append(encode_grib2_message(v, packing="complex", **kw))
+        return b"".join(msgs)
+
+    def decode(d: int, buf: bytes):
+        for rn, msg in enumerate(iter_messages2(buf), start=1):
+            rec = decode_grib2(msg)
+            yield {
+                "record_number": rn,
+                "tmpl": rec.packing_template,
+                "values": rec.values.reshape(-1).tolist(),
+            }
+
+    decoded = doc_archives(
+        spark, sf_dir, (3, 0, 300), build, decode,
+        "record_number int, tmpl int, values array<double>",
     )
-
-    def synth(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                ni, nj = 6 + d % 5, 3 + d % 3
-                i = np.arange(ni)[None, :]
-                j = np.arange(nj)[:, None]
-                msgs = []
-                for r in range(4):
-                    v = (150 + 2 * ((d * 13 + r * 7 + i * 5 + j * 3) % 80)).astype(
-                        np.float64
-                    )
-                    kw = dict(
-                        reference_value=150.0,
-                        binary_scale=1,
-                        group_len=4 + d % 5,
-                        category=r,
-                        number=r,
-                    )
-                    if r == 1:
-                        mm = (i * 2 + j + d) % 5 == 0
-                        msgs.append(
-                            encode_grib2_message(
-                                v, packing="complex",
-                                missing_mask=mm | np.zeros_like(v, bool), **kw,
-                            )
-                        )
-                    elif r == 2:
-                        msgs.append(
-                            encode_grib2_message(
-                                v, packing="complex_diff",
-                                spatial_diff_order=1 + d % 2, **kw,
-                            )
-                        )
-                    elif r == 3:
-                        msgs.append(encode_grib2_message(v, packing="png", **kw))
-                    else:
-                        msgs.append(encode_grib2_message(v, packing="complex", **kw))
-                rows.append({"doc_id": d, "grib": b"".join(msgs)})
-            yield pd.DataFrame(rows)
-
-    def decode(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id, buf in zip(pdf["doc_id"], pdf["grib"]):
-                d = int(doc_id)
-                for rn, msg in enumerate(iter_messages2(bytes(buf)), start=1):
-                    rec = decode_grib2(msg)
-                    rows.append(
-                        {
-                            "doc_id": d,
-                            "record_number": rn,
-                            "tmpl": rec.packing_template,
-                            "values": rec.values.reshape(-1).tolist(),
-                        }
-                    )
-            yield pd.DataFrame(rows)
-
-    files = ids.mapInPandas(synth, schema="doc_id bigint, grib binary")
-    decoded = files.mapInPandas(
-        decode,
-        schema="doc_id bigint, record_number int, tmpl int, values array<double>",
-    )
-    present = F.filter("values", _is_present)
+    present = F.filter("values", _present)
     return decoded.select(
         "doc_id",
         "record_number",
@@ -934,80 +841,57 @@ def grid_grib2_jpeg2000_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     bytes stay executor-side, only per-record statistic rows shuffle,
     files decode embarrassingly parallel in Arrow batches.
     """
-    from typing import Iterator
-
     import numpy as np
-    import pandas as pd
 
     from ..grid.grib2 import decode_grib2, encode_grib2_message, iter_messages2
 
-    ids = (
-        table(spark, sf_dir, "documents")
-        .filter((F.col("doc_id") % 7 == 2) & (F.col("doc_id") < 350))
-        .select("doc_id")
-    )
-
-    def synth(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                ni, nj = 10 + d % 6, 4 + d % 4
-                i = np.arange(ni)[None, :]
-                j = np.arange(nj)[:, None]
-                msgs = []
-                for r in range(3):
-                    mod = 5000 if r == 2 else 90
-                    v = (
-                        150 + 2 * ((d * 11 + r * 17 + i * 3 + j * 7) % mod)
-                    ).astype(np.float64)
-                    kw = dict(
-                        reference_value=150.0,
-                        binary_scale=1,
-                        category=r,
-                        number=r,
-                        packing="jpeg2000",
+    def build(d: int) -> bytes:
+        ni, nj = 10 + d % 6, 4 + d % 4
+        i = np.arange(ni)[None, :]
+        j = np.arange(nj)[:, None]
+        msgs = []
+        for r in range(3):
+            mod = 5000 if r == 2 else 90
+            v = (
+                150 + 2 * ((d * 11 + r * 17 + i * 3 + j * 7) % mod)
+            ).astype(np.float64)
+            kw = dict(
+                reference_value=150.0,
+                binary_scale=1,
+                category=r,
+                number=r,
+                packing="jpeg2000",
+            )
+            if r == 1:
+                present = (i + 2 * j + d) % 4 != 0
+                msgs.append(
+                    encode_grib2_message(
+                        v, bitmap=present | np.zeros_like(v, bool), **kw
                     )
-                    if r == 1:
-                        present = (i + 2 * j + d) % 4 != 0
-                        msgs.append(
-                            encode_grib2_message(
-                                v, bitmap=present | np.zeros_like(v, bool), **kw
-                            )
-                        )
-                    else:
-                        msgs.append(encode_grib2_message(v, **kw))
-                rows.append({"doc_id": d, "grib": b"".join(msgs)})
-            yield pd.DataFrame(rows)
+                )
+            else:
+                msgs.append(encode_grib2_message(v, **kw))
+        return b"".join(msgs)
 
-    def decode(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id, buf in zip(pdf["doc_id"], pdf["grib"]):
-                d = int(doc_id)
-                for rn, msg in enumerate(iter_messages2(bytes(buf)), start=1):
-                    rec = decode_grib2(msg)
-                    rows.append(
-                        {
-                            "doc_id": d,
-                            "record_number": rn,
-                            "tmpl": rec.packing_template,
-                            "values": rec.values.reshape(-1).tolist(),
-                        }
-                    )
-            yield pd.DataFrame(rows)
+    def decode(d: int, buf: bytes):
+        for rn, msg in enumerate(iter_messages2(buf), start=1):
+            rec = decode_grib2(msg)
+            yield {
+                "record_number": rn,
+                "tmpl": rec.packing_template,
+                "values": rec.values.reshape(-1).tolist(),
+            }
 
-    files = ids.mapInPandas(synth, schema="doc_id bigint, grib binary")
-    decoded = files.mapInPandas(
-        decode,
-        schema="doc_id bigint, record_number int, tmpl int, values array<double>",
+    decoded = doc_archives(
+        spark, sf_dir, (7, 2, 350), build, decode,
+        "record_number int, tmpl int, values array<double>",
     )
-    present = F.filter("values", _is_present)
+    present = F.filter("values", _present)
     weighted = F.zip_with(
         "values",
         F.sequence(F.lit(0), F.size("values") - 1),
         lambda v, idx: F.when(
-            _is_present(v), v.cast("bigint") * idx.cast("bigint")
+            _present(v), v.cast("bigint") * idx.cast("bigint")
         ).otherwise(F.lit(0).cast("bigint")),
     )
     return decoded.select(
@@ -1128,77 +1012,47 @@ def grid_grib2_gaussian_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     parallel. Latitude recovery is O(nj^2) arithmetic on metadata, not
     data (nj rows, never Ni*Nj cells).
     """
-    from typing import Iterator
-
     import numpy as np
-    import pandas as pd
 
     from ..grid.grib2 import decode_grib2, encode_grib2_message, iter_messages2
 
-    ids = (
-        table(spark, sf_dir, "documents")
-        .filter((F.col("doc_id") % 11 == 3) & (F.col("doc_id") < 440))
-        .select("doc_id")
-    )
+    def build(d: int) -> bytes:
+        n, ni = 4 + d % 3, 9 + d % 5
+        i = np.arange(ni)[None, :]
+        j = np.arange(2 * n)[:, None]
+        msgs = []
+        for r in range(2):
+            v = (
+                150 + 2 * ((d * 7 + r * 19 + i * 5 + j * 3) % 70)
+            ).astype(np.float64)
+            msgs.append(
+                encode_grib2_message(
+                    v,
+                    gaussian=True,
+                    packing="jpeg2000" if r == 1 else "simple",
+                    reference_value=150.0,
+                    binary_scale=1,
+                    category=r,
+                    number=r,
+                )
+            )
+        return b"".join(msgs)
 
-    def synth(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                n, ni = 4 + d % 3, 9 + d % 5
-                i = np.arange(ni)[None, :]
-                j = np.arange(2 * n)[:, None]
-                msgs = []
-                for r in range(2):
-                    v = (
-                        150 + 2 * ((d * 7 + r * 19 + i * 5 + j * 3) % 70)
-                    ).astype(np.float64)
-                    msgs.append(
-                        encode_grib2_message(
-                            v,
-                            gaussian=True,
-                            packing="jpeg2000" if r == 1 else "simple",
-                            reference_value=150.0,
-                            binary_scale=1,
-                            category=r,
-                            number=r,
-                        )
-                    )
-                rows.append({"doc_id": d, "grib": b"".join(msgs)})
-            yield pd.DataFrame(rows)
+    def decode(d: int, buf: bytes):
+        for rn, msg in enumerate(iter_messages2(buf), start=1):
+            rec = decode_grib2(msg)
+            yield {
+                "record_number": rn,
+                "tmpl": rec.packing_template,
+                "gaussian_n": rec.gaussian_n,
+                "values": rec.values.reshape(-1).tolist(),
+                "lats": rec.latitudes_deg.tolist(),
+            }
 
-    def decode(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id, buf in zip(pdf["doc_id"], pdf["grib"]):
-                d = int(doc_id)
-                for rn, msg in enumerate(iter_messages2(bytes(buf)), start=1):
-                    rec = decode_grib2(msg)
-                    rows.append(
-                        {
-                            "doc_id": d,
-                            "record_number": rn,
-                            "tmpl": rec.packing_template,
-                            "gaussian_n": rec.gaussian_n,
-                            "values": rec.values.reshape(-1).tolist(),
-                            "lats": rec.latitudes_deg.tolist(),
-                        }
-                    )
-            yield pd.DataFrame(rows)
-
-    files = ids.mapInPandas(synth, schema="doc_id bigint, grib binary")
-    decoded = files.mapInPandas(
-        decode,
-        schema=(
-            "doc_id bigint, record_number int, tmpl int, gaussian_n int, "
-            "values array<double>, lats array<double>"
-        ),
-    )
-    weighted = F.zip_with(
-        "values",
-        F.sequence(F.lit(0), F.size("values") - 1),
-        lambda v, idx: v.cast("bigint") * idx.cast("bigint"),
+    decoded = doc_archives(
+        spark, sf_dir, (11, 3, 440), build, decode,
+        "record_number int, tmpl int, gaussian_n int, values array<double>, "
+        "lats array<double>",
     )
     lat_udeg = F.transform(
         "lats", lambda x: F.round(x * F.lit(1e6)).cast("bigint")
@@ -1215,10 +1069,8 @@ def grid_grib2_gaussian_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         "tmpl",
         "gaussian_n",
         F.size("values").cast("bigint").alias("n_cells"),
-        F.aggregate(
-            "values", zero, lambda a, x: a + x.cast("bigint")
-        ).alias("vsum"),
-        F.aggregate(weighted, zero, lambda a, x: a + x).alias("wsum"),
+        vsum(),
+        wsum(),
         F.element_at(lat_udeg, 1).alias("lat0_udeg"),
         F.aggregate(lat_weighted, zero, lambda a, x: a + x).alias("latwsum"),
     ).orderBy("doc_id", "record_number")
@@ -1285,12 +1137,6 @@ def _projected_stats(decoded: DataFrame, keys: tuple) -> DataFrame:
     """Shared tail of the projected-grid codec queries: value stats, the
     raster-order-sensitive wsum, and anchor/far-corner coordinates in
     integer microdegrees."""
-    weighted = F.zip_with(
-        "values",
-        F.sequence(F.lit(0), F.size("values") - 1),
-        lambda v, idx: v.cast("bigint") * idx.cast("bigint"),
-    )
-    zero = F.lit(0).cast("bigint")
 
     def udeg(c):
         return F.round(F.col(c) * F.lit(1e6)).cast("bigint")
@@ -1298,10 +1144,8 @@ def _projected_stats(decoded: DataFrame, keys: tuple) -> DataFrame:
     return decoded.select(
         *keys,
         F.size("values").cast("bigint").alias("n_cells"),
-        F.aggregate("values", zero, lambda a, x: a + x.cast("bigint")).alias(
-            "vsum"
-        ),
-        F.aggregate(weighted, zero, lambda a, x: a + x).alias("wsum"),
+        vsum(),
+        wsum(),
         udeg("lat0").alias("lat0_udeg"),
         udeg("lon0").alias("lon0_udeg"),
         udeg("corner_lat").alias("corner_lat_udeg"),
@@ -1405,80 +1249,54 @@ def grid_grib2_lambert_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows shuffle. Coordinate recovery is vectorized numpy inside the
     Arrow stage, O(cells) with no Python-loop inner step.
     """
-    from typing import Iterator
-
     import numpy as np
-    import pandas as pd
 
     from ..grid.grib2 import decode_grib2, encode_grib2_message, iter_messages2
 
-    ids = (
-        table(spark, sf_dir, "documents")
-        .filter((F.col("doc_id") % 13 == 1) & (F.col("doc_id") < 390))
-        .select("doc_id")
-    )
+    def build(d: int) -> bytes:
+        ni, nj = 8 + d % 4, 5 + d % 3
+        dx = 3000.0 * (1 + d % 3)
+        i = np.arange(ni)[None, :]
+        j = np.arange(nj)[:, None]
+        msgs = []
+        for rn in (1, 2):
+            latin1, latin2 = _lcc_parallels(rn)
+            v = (
+                140 + 2 * ((d * 5 + (rn - 1) * 23 + i * 7 + j * 11) % 60)
+            ).astype(np.float64)
+            msgs.append(
+                encode_grib2_message(
+                    v,
+                    lambert=dict(
+                        _LCC_BASE, latin1=latin1, latin2=latin2,
+                        dx_m=dx, dy_m=dx,
+                    ),
+                    scanning_mode=0x40,
+                    reference_value=140.0,
+                    binary_scale=1,
+                    category=rn,
+                    number=rn,
+                )
+            )
+        return b"".join(msgs)
 
-    def synth(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                ni, nj = 8 + d % 4, 5 + d % 3
-                dx = 3000.0 * (1 + d % 3)
-                i = np.arange(ni)[None, :]
-                j = np.arange(nj)[:, None]
-                msgs = []
-                for rn in (1, 2):
-                    latin1, latin2 = _lcc_parallels(rn)
-                    v = (
-                        140 + 2 * ((d * 5 + (rn - 1) * 23 + i * 7 + j * 11) % 60)
-                    ).astype(np.float64)
-                    msgs.append(
-                        encode_grib2_message(
-                            v,
-                            lambert=dict(
-                                _LCC_BASE, latin1=latin1, latin2=latin2,
-                                dx_m=dx, dy_m=dx,
-                            ),
-                            scanning_mode=0x40,
-                            reference_value=140.0,
-                            binary_scale=1,
-                            category=rn,
-                            number=rn,
-                        )
-                    )
-                rows.append({"doc_id": d, "grib": b"".join(msgs)})
-            yield pd.DataFrame(rows)
+    def decode(d: int, buf: bytes):
+        for rn, msg in enumerate(iter_messages2(buf), start=1):
+            rec = decode_grib2(msg)
+            yield {
+                "record_number": rn,
+                "grid_tmpl": rec.grid_template,
+                "values": rec.values.reshape(-1).tolist(),
+                "lat0": float(rec.cell_lats_deg[0, 0]),
+                "lon0": float(rec.cell_lons_deg[0, 0]),
+                "corner_lat": float(rec.cell_lats_deg[-1, -1]),
+                "corner_lon": float(rec.cell_lons_deg[-1, -1]),
+            }
 
-    def decode(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id, buf in zip(pdf["doc_id"], pdf["grib"]):
-                d = int(doc_id)
-                for rn, msg in enumerate(iter_messages2(bytes(buf)), start=1):
-                    rec = decode_grib2(msg)
-                    rows.append(
-                        {
-                            "doc_id": d,
-                            "record_number": rn,
-                            "grid_tmpl": rec.grid_template,
-                            "values": rec.values.reshape(-1).tolist(),
-                            "lat0": float(rec.cell_lats_deg[0, 0]),
-                            "lon0": float(rec.cell_lons_deg[0, 0]),
-                            "corner_lat": float(rec.cell_lats_deg[-1, -1]),
-                            "corner_lon": float(rec.cell_lons_deg[-1, -1]),
-                        }
-                    )
-            yield pd.DataFrame(rows)
-
-    files = ids.mapInPandas(synth, schema="doc_id bigint, grib binary")
-    decoded = files.mapInPandas(
-        decode,
-        schema=(
-            "doc_id bigint, record_number int, grid_tmpl int, "
-            "values array<double>, lat0 double, lon0 double, "
-            "corner_lat double, corner_lon double"
-        ),
+    decoded = doc_archives(
+        spark, sf_dir, (13, 1, 390), build, decode,
+        "record_number int, grid_tmpl int, values array<double>, "
+        "lat0 double, lon0 double, corner_lat double, corner_lon double",
     )
     return _projected_stats(
         decoded, ("doc_id", "record_number", "grid_tmpl")
@@ -1593,68 +1411,40 @@ def grid_grib2_polar_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle, O(cells) vectorized coordinate recovery in the Arrow
     stage.
     """
-    from typing import Iterator
-
     import numpy as np
-    import pandas as pd
 
     from ..grid.grib2 import decode_grib2, encode_grib2_message, iter_messages2
 
-    ids = (
-        table(spark, sf_dir, "documents")
-        .filter((F.col("doc_id") % 17 == 5) & (F.col("doc_id") < 425))
-        .select("doc_id")
-    )
+    def build(d: int) -> bytes:
+        ni, nj = 7 + d % 5, 5 + d % 4
+        dx = 20000.0 * (1 + d % 2)
+        i = np.arange(ni)[None, :]
+        j = np.arange(nj)[:, None]
+        v = (200 + 2 * ((d * 3 + i * 13 + j * 7) % 55)).astype(np.float64)
+        return encode_grib2_message(
+            v,
+            polar_stereo=dict(_PS_BASE, dx_m=dx, dy_m=dx),
+            scanning_mode=0x40,
+            reference_value=200.0,
+            binary_scale=1,
+        )
 
-    def synth(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                ni, nj = 7 + d % 5, 5 + d % 4
-                dx = 20000.0 * (1 + d % 2)
-                i = np.arange(ni)[None, :]
-                j = np.arange(nj)[:, None]
-                v = (200 + 2 * ((d * 3 + i * 13 + j * 7) % 55)).astype(
-                    np.float64
-                )
-                msg = encode_grib2_message(
-                    v,
-                    polar_stereo=dict(_PS_BASE, dx_m=dx, dy_m=dx),
-                    scanning_mode=0x40,
-                    reference_value=200.0,
-                    binary_scale=1,
-                )
-                rows.append({"doc_id": d, "grib": msg})
-            yield pd.DataFrame(rows)
+    def decode(d: int, buf: bytes):
+        for msg in iter_messages2(buf):
+            rec = decode_grib2(msg)
+            yield {
+                "grid_tmpl": rec.grid_template,
+                "values": rec.values.reshape(-1).tolist(),
+                "lat0": float(rec.cell_lats_deg[0, 0]),
+                "lon0": float(rec.cell_lons_deg[0, 0]),
+                "corner_lat": float(rec.cell_lats_deg[-1, -1]),
+                "corner_lon": float(rec.cell_lons_deg[-1, -1]),
+            }
 
-    def decode(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id, buf in zip(pdf["doc_id"], pdf["grib"]):
-                d = int(doc_id)
-                for msg in iter_messages2(bytes(buf)):
-                    rec = decode_grib2(msg)
-                    rows.append(
-                        {
-                            "doc_id": d,
-                            "grid_tmpl": rec.grid_template,
-                            "values": rec.values.reshape(-1).tolist(),
-                            "lat0": float(rec.cell_lats_deg[0, 0]),
-                            "lon0": float(rec.cell_lons_deg[0, 0]),
-                            "corner_lat": float(rec.cell_lats_deg[-1, -1]),
-                            "corner_lon": float(rec.cell_lons_deg[-1, -1]),
-                        }
-                    )
-            yield pd.DataFrame(rows)
-
-    files = ids.mapInPandas(synth, schema="doc_id bigint, grib binary")
-    decoded = files.mapInPandas(
-        decode,
-        schema=(
-            "doc_id bigint, grid_tmpl int, values array<double>, "
-            "lat0 double, lon0 double, corner_lat double, corner_lon double"
-        ),
+    decoded = doc_archives(
+        spark, sf_dir, (17, 5, 425), build, decode,
+        "grid_tmpl int, values array<double>, lat0 double, lon0 double, "
+        "corner_lat double, corner_lon double",
     )
     return _projected_stats(decoded, ("doc_id", "grid_tmpl"))
 
@@ -1760,68 +1550,40 @@ def grid_grib2_mercator_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle, O(cells) vectorized coordinate recovery in the Arrow
     stage.
     """
-    from typing import Iterator
-
     import numpy as np
-    import pandas as pd
 
     from ..grid.grib2 import decode_grib2, encode_grib2_message, iter_messages2
 
-    ids = (
-        table(spark, sf_dir, "documents")
-        .filter((F.col("doc_id") % 19 == 7) & (F.col("doc_id") < 475))
-        .select("doc_id")
-    )
+    def build(d: int) -> bytes:
+        ni, nj = 8 + d % 4, 4 + d % 5
+        dx = 40000.0 * (1 + d % 3)
+        i = np.arange(ni)[None, :]
+        j = np.arange(nj)[:, None]
+        v = (250 + 2 * ((d * 9 + i * 3 + j * 5) % 65)).astype(np.float64)
+        return encode_grib2_message(
+            v,
+            mercator=dict(_MERC_BASE, dx_m=dx, dy_m=dx),
+            scanning_mode=0x40,
+            reference_value=250.0,
+            binary_scale=1,
+        )
 
-    def synth(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                ni, nj = 8 + d % 4, 4 + d % 5
-                dx = 40000.0 * (1 + d % 3)
-                i = np.arange(ni)[None, :]
-                j = np.arange(nj)[:, None]
-                v = (250 + 2 * ((d * 9 + i * 3 + j * 5) % 65)).astype(
-                    np.float64
-                )
-                msg = encode_grib2_message(
-                    v,
-                    mercator=dict(_MERC_BASE, dx_m=dx, dy_m=dx),
-                    scanning_mode=0x40,
-                    reference_value=250.0,
-                    binary_scale=1,
-                )
-                rows.append({"doc_id": d, "grib": msg})
-            yield pd.DataFrame(rows)
+    def decode(d: int, buf: bytes):
+        for msg in iter_messages2(buf):
+            rec = decode_grib2(msg)
+            yield {
+                "grid_tmpl": rec.grid_template,
+                "values": rec.values.reshape(-1).tolist(),
+                "lat0": float(rec.cell_lats_deg[0, 0]),
+                "lon0": float(rec.cell_lons_deg[0, 0]),
+                "corner_lat": float(rec.cell_lats_deg[-1, -1]),
+                "corner_lon": float(rec.cell_lons_deg[-1, -1]),
+            }
 
-    def decode(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id, buf in zip(pdf["doc_id"], pdf["grib"]):
-                d = int(doc_id)
-                for msg in iter_messages2(bytes(buf)):
-                    rec = decode_grib2(msg)
-                    rows.append(
-                        {
-                            "doc_id": d,
-                            "grid_tmpl": rec.grid_template,
-                            "values": rec.values.reshape(-1).tolist(),
-                            "lat0": float(rec.cell_lats_deg[0, 0]),
-                            "lon0": float(rec.cell_lons_deg[0, 0]),
-                            "corner_lat": float(rec.cell_lats_deg[-1, -1]),
-                            "corner_lon": float(rec.cell_lons_deg[-1, -1]),
-                        }
-                    )
-            yield pd.DataFrame(rows)
-
-    files = ids.mapInPandas(synth, schema="doc_id bigint, grib binary")
-    decoded = files.mapInPandas(
-        decode,
-        schema=(
-            "doc_id bigint, grid_tmpl int, values array<double>, "
-            "lat0 double, lon0 double, corner_lat double, corner_lon double"
-        ),
+    decoded = doc_archives(
+        spark, sf_dir, (19, 7, 475), build, decode,
+        "grid_tmpl int, values array<double>, lat0 double, lon0 double, "
+        "corner_lat double, corner_lon double",
     )
     return _projected_stats(decoded, ("doc_id", "grid_tmpl"))
 
@@ -1896,68 +1658,47 @@ def grid_grib_mixed_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-record statistic rows shuffle — the mixed-product 100 TB
     landing-area shape.
     """
-    from typing import Iterator
-
     import numpy as np
-    import pandas as pd
 
     from ..grid.grib1 import encode_grib1_message
     from ..grid.grib2 import encode_grib2_message
-    from ..sources.grib_source import RECORD_SCHEMA, _decode_batches
 
-    ids = (
-        table(spark, sf_dir, "documents")
-        .filter((F.col("doc_id") % 5 == 1) & (F.col("doc_id") < 300))
-        .select("doc_id")
-    )
+    def build(d: int) -> bytes:
+        ni, nj = 7 + d % 4, 4 + d % 3
+        i = np.arange(ni)[None, :]
+        j = np.arange(nj)[:, None]
 
-    def synth(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                ni, nj = 7 + d % 4, 4 + d % 3
-                i = np.arange(ni)[None, :]
-                j = np.arange(nj)[:, None]
+        def field(r: int) -> np.ndarray:
+            return (
+                100 + 2 * ((d * 7 + r * 13 + i * 3 + j * 5) % 50)
+            ).astype(np.float64)
 
-                def field(r: int) -> np.ndarray:
-                    return (
-                        100 + 2 * ((d * 7 + r * 13 + i * 3 + j * 5) % 50)
-                    ).astype(np.float64)
+        msgs = [
+            encode_grib1_message(
+                field(0), parameter=11, level_type=100, level=850,
+                reference_value=100.0, binary_scale=1, nbits=8,
+            ),
+            encode_grib1_message(
+                field(1), parameter=61, level_type=100, level=500,
+                reference_value=100.0, binary_scale=1, nbits=8,
+                scanning_mode=0x40,
+            ),
+            encode_grib2_message(
+                field(2), category=0, number=7,
+                level_type=100, level_scale=1, level_value=8500,
+                reference_value=100.0, binary_scale=1, nbits=8,
+            ),
+            encode_grib2_message(
+                field(3), category=0, number=11, level_type=0xFF,
+                reference_value=100.0, binary_scale=1,
+                packing="complex_diff", group_len=5 + d % 7,
+            ),
+        ]
+        return b"".join(msgs)
 
-                msgs = [
-                    encode_grib1_message(
-                        field(0), parameter=11, level_type=100, level=850,
-                        reference_value=100.0, binary_scale=1, nbits=8,
-                    ),
-                    encode_grib1_message(
-                        field(1), parameter=61, level_type=100, level=500,
-                        reference_value=100.0, binary_scale=1, nbits=8,
-                        scanning_mode=0x40,
-                    ),
-                    encode_grib2_message(
-                        field(2), category=0, number=7,
-                        level_type=100, level_scale=1, level_value=8500,
-                        reference_value=100.0, binary_scale=1, nbits=8,
-                    ),
-                    encode_grib2_message(
-                        field(3), category=0, number=11, level_type=0xFF,
-                        reference_value=100.0, binary_scale=1,
-                        packing="complex_diff", group_len=5 + d % 7,
-                    ),
-                ]
-                rows.append({"path": f"doc://{d}", "content": b"".join(msgs)})
-            yield pd.DataFrame(rows)
-
-    files = ids.mapInPandas(synth, schema="path string, content binary")
-    records = files.mapInPandas(_decode_batches, schema=RECORD_SCHEMA)
-    weighted = F.zip_with(
-        "values",
-        F.sequence(F.lit(0), F.size("values") - 1),
-        lambda v, idx: v.cast("bigint") * idx.cast("bigint"),
-    )
+    records = landed_records(spark, sf_dir, (5, 1, 300), build)
     return records.select(
-        F.regexp_extract("path", r"doc://(\d+)", 1).cast("bigint").alias("doc_id"),
+        "doc_id",
         "record_number",
         "edition",
         "parameter",
@@ -1967,12 +1708,8 @@ def grid_grib_mixed_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         "level",
         "lat_first_mdeg",
         F.size("values").cast("bigint").alias("n_cells"),
-        F.aggregate(
-            "values", F.lit(0).cast("bigint"), lambda a, x: a + x.cast("bigint")
-        ).alias("vsum"),
-        F.aggregate(weighted, F.lit(0).cast("bigint"), lambda a, x: a + x).alias(
-            "wsum"
-        ),
+        vsum(),
+        wsum(),
     ).orderBy("doc_id", "record_number")
 
 
@@ -2104,65 +1841,47 @@ def grid_grib_statistical_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the landing posture — archive bytes decode executor-side in
     one Arrow stage; only per-record statistic rows shuffle.
     """
-    from typing import Iterator
-
     import numpy as np
-    import pandas as pd
 
     from ..grid.grib2 import encode_grib2_message
-    from ..sources.grib_source import RECORD_SCHEMA, _decode_batches
 
-    ids = (
-        table(spark, sf_dir, "documents")
-        .filter((F.col("doc_id") % 31 == 9) & (F.col("doc_id") < 620))
-        .select("doc_id")
-    )
+    def build(d: int) -> bytes:
+        ni, nj = 6 + d % 3, 4 + d % 2
+        i = np.arange(ni)[None, :]
+        j = np.arange(nj)[:, None]
 
-    def synth(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                ni, nj = 6 + d % 3, 4 + d % 2
-                i = np.arange(ni)[None, :]
-                j = np.arange(nj)[:, None]
+        def field(r: int) -> np.ndarray:
+            return (
+                110 + 2 * ((d * 3 + r * 17 + i * 5 + j * 7) % 40)
+            ).astype(np.float64)
 
-                def field(r: int) -> np.ndarray:
-                    return (
-                        110 + 2 * ((d * 3 + r * 17 + i * 5 + j * 7) % 40)
-                    ).astype(np.float64)
-
-                msgs = [
-                    encode_grib2_message(
-                        field(0), category=0, number=7,
-                        reference_value=110.0, binary_scale=1, nbits=8,
+        msgs = [
+            encode_grib2_message(
+                field(0), category=0, number=7,
+                reference_value=110.0, binary_scale=1, nbits=8,
+            ),
+            encode_grib2_message(
+                field(1), category=0, number=11,
+                reference_value=110.0, binary_scale=1, nbits=8,
+                statistical=dict(
+                    process=d % 2,
+                    interval_end=(
+                        2020, 1 + d % 12, 1 + d % 28, d % 24, 0,
                     ),
-                    encode_grib2_message(
-                        field(1), category=0, number=11,
-                        reference_value=110.0, binary_scale=1, nbits=8,
-                        statistical=dict(
-                            process=d % 2,
-                            interval_end=(
-                                2020, 1 + d % 12, 1 + d % 28, d % 24, 0,
-                            ),
-                            range_hours=6 + d % 18,
-                        ),
-                    ),
-                ]
-                rows.append({"path": f"doc://{d}", "content": b"".join(msgs)})
-            yield pd.DataFrame(rows)
+                    range_hours=6 + d % 18,
+                ),
+            ),
+        ]
+        return b"".join(msgs)
 
-    files = ids.mapInPandas(synth, schema="path string, content binary")
-    records = files.mapInPandas(_decode_batches, schema=RECORD_SCHEMA)
+    records = landed_records(spark, sf_dir, (31, 9, 620), build)
     return records.select(
-        F.regexp_extract("path", r"doc://(\d+)", 1).cast("bigint").alias("doc_id"),
+        "doc_id",
         "record_number",
         "statistical_process",
         "interval_end",
         F.size("values").cast("bigint").alias("n_cells"),
-        F.aggregate(
-            "values", F.lit(0).cast("bigint"), lambda a, x: a + x.cast("bigint")
-        ).alias("vsum"),
+        vsum(),
     ).orderBy("doc_id", "record_number")
 
 
@@ -2316,59 +2035,39 @@ def grid_grib_projected_landing(spark: SparkSession, sf_dir: str) -> DataFrame:
     plain column predicate Catalyst can push against the exploded
     relation; only per-record statistic rows shuffle.
     """
-    from typing import Iterator
-
     import numpy as np
-    import pandas as pd
 
     from ..grid.grib2 import encode_grib2_message
-    from ..sources.grib_source import (
-        RECORD_SCHEMA,
-        _decode_batches,
-        grib1_cells,
-    )
+    from ..sources.grib_source import grib1_cells
 
-    ids = (
-        table(spark, sf_dir, "documents")
-        .filter((F.col("doc_id") % 41 == 8) & (F.col("doc_id") < 574))
-        .select("doc_id")
-    )
+    def build(d: int) -> bytes:
+        msgs = []
+        for r, (kind, ni, nj, dx) in enumerate(_proj_landing_grids(d)):
+            i = np.arange(ni)[None, :]
+            j = np.arange(nj)[:, None]
+            v = (
+                130 + 2 * ((d * 7 + r * 13 + i * 3 + j * 5) % 45)
+            ).astype(np.float64)
+            grid_kw = (
+                dict(lambert=dict(
+                    _LCC_BASE, latin1=33.0, latin2=45.0,
+                    dx_m=dx, dy_m=dx,
+                ))
+                if kind == "lcc"
+                else dict(polar_stereo=dict(_PS_BASE, dx_m=dx, dy_m=dx))
+                if kind == "ps"
+                else dict(mercator=dict(_MERC_BASE, dx_m=dx, dy_m=dx))
+            )
+            msgs.append(
+                encode_grib2_message(
+                    v, scanning_mode=0x40, reference_value=130.0,
+                    binary_scale=1, nbits=8, category=r, number=r,
+                    **grid_kw,
+                )
+            )
+        return b"".join(msgs)
 
-    def synth(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                msgs = []
-                for r, (kind, ni, nj, dx) in enumerate(_proj_landing_grids(d)):
-                    i = np.arange(ni)[None, :]
-                    j = np.arange(nj)[:, None]
-                    v = (
-                        130 + 2 * ((d * 7 + r * 13 + i * 3 + j * 5) % 45)
-                    ).astype(np.float64)
-                    grid_kw = (
-                        dict(lambert=dict(
-                            _LCC_BASE, latin1=33.0, latin2=45.0,
-                            dx_m=dx, dy_m=dx,
-                        ))
-                        if kind == "lcc"
-                        else dict(polar_stereo=dict(_PS_BASE, dx_m=dx, dy_m=dx))
-                        if kind == "ps"
-                        else dict(mercator=dict(_MERC_BASE, dx_m=dx, dy_m=dx))
-                    )
-                    msgs.append(
-                        encode_grib2_message(
-                            v, scanning_mode=0x40, reference_value=130.0,
-                            binary_scale=1, nbits=8, category=r, number=r,
-                            **grid_kw,
-                        )
-                    )
-                rows.append({"path": f"doc://{d}", "content": b"".join(msgs)})
-            yield pd.DataFrame(rows)
-
-    files = ids.mapInPandas(synth, schema="path string, content binary")
-    records = files.mapInPandas(_decode_batches, schema=RECORD_SCHEMA)
-    cells = grib1_cells(records)
+    cells = grib1_cells(landed_records(spark, sf_dir, (41, 8, 574), build))
     lo, hi = _PROJ_BOX
     box = (F.col("lat_deg") > F.lit(lo)) & (F.col("lat_deg") < F.lit(hi))
     latm = F.round(F.col("lat_deg") * F.lit(1e3)).cast("bigint")
@@ -2377,9 +2076,7 @@ def grid_grib_projected_landing(spark: SparkSession, sf_dir: str) -> DataFrame:
     zero = F.lit(0).cast("bigint")
     return (
         cells.select(
-            F.regexp_extract("path", r"doc://(\d+)", 1)
-            .cast("bigint")
-            .alias("doc_id"),
+            doc_id(),
             "record_number",
             "grid_template",
             "lat_deg",
@@ -2502,53 +2199,31 @@ def grid_grib2_reduced_gaussian_decode(spark: SparkSession, sf_dir: str) -> Data
     (the documented native-codec swap-in point), O(rows) metadata for
     the latitude axis, statistic rows shuffle.
     """
-    from typing import Iterator
-
     import numpy as np
-    import pandas as pd
 
     from ..grid.grib2 import encode_grib2_message
-    from ..sources.grib_source import RECORD_SCHEMA, _decode_batches
 
-    ids = (
-        table(spark, sf_dir, "documents")
-        .filter((F.col("doc_id") % 21 == 6) & (F.col("doc_id") < 462))
-        .select("doc_id")
-    )
+    def build(d: int) -> bytes:
+        nj = 2 * (2 + d % 2)
+        row_ni = [3 + ((d + 3 * j) % 4) for j in range(nj)]
+        vals = np.concatenate(
+            [
+                120.0
+                + 2 * ((d * 5 + j * 11 + np.arange(n) * 7) % 45)
+                for j, n in enumerate(row_ni)
+            ]
+        )
+        return encode_grib2_message(
+            vals,
+            reduced_ni=row_ni,
+            packing="complex_diff" if d % 2 else "simple",
+            reference_value=120.0,
+            binary_scale=1,
+            nbits=8,
+        )
 
-    def synth(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                nj = 2 * (2 + d % 2)
-                row_ni = [3 + ((d + 3 * j) % 4) for j in range(nj)]
-                vals = np.concatenate(
-                    [
-                        120.0
-                        + 2 * ((d * 5 + j * 11 + np.arange(n) * 7) % 45)
-                        for j, n in enumerate(row_ni)
-                    ]
-                )
-                msg = encode_grib2_message(
-                    vals,
-                    reduced_ni=row_ni,
-                    packing="complex_diff" if d % 2 else "simple",
-                    reference_value=120.0,
-                    binary_scale=1,
-                    nbits=8,
-                )
-                rows.append({"path": f"doc://{d}", "content": msg})
-            yield pd.DataFrame(rows)
-
-    files = ids.mapInPandas(synth, schema="path string, content binary")
-    records = files.mapInPandas(_decode_batches, schema=RECORD_SCHEMA)
+    records = landed_records(spark, sf_dir, (21, 6, 462), build)
     zero = F.lit(0).cast("bigint")
-    weighted = F.zip_with(
-        "values",
-        F.sequence(F.lit(0), F.size("values") - 1),
-        lambda v, idx: v.cast("bigint") * idx.cast("bigint"),
-    )
     lat_weighted = F.zip_with(
         "latitudes_udeg",
         F.sequence(F.lit(1), F.size("latitudes_udeg")),
@@ -2564,15 +2239,13 @@ def grid_grib2_reduced_gaussian_decode(spark: SparkSession, sf_dir: str) -> Data
         "values", cell_lat_udeg, lambda v, lu: v.cast("bigint") * lu
     )
     return records.select(
-        F.regexp_extract("path", r"doc://(\d+)", 1).cast("bigint").alias("doc_id"),
+        "doc_id",
         "grid_template",
         "nj",
         "ni",
         F.size("values").cast("bigint").alias("n_cells"),
-        F.aggregate(
-            "values", zero, lambda a, x: a + x.cast("bigint")
-        ).alias("vsum"),
-        F.aggregate(weighted, zero, lambda a, x: a + x).alias("wsum"),
+        vsum(),
+        wsum(),
         F.aggregate(lat_weighted, zero, lambda a, x: a + x).alias("latwsum"),
         F.aggregate(cell_lon_udeg, zero, lambda a, x: a + x).alias(
             "lonsum_udeg"
@@ -2664,52 +2337,30 @@ def grid_grib1_reduced_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the landing posture — per-record CPU in one Arrow stage,
     O(rows) metadata for the latitude axis, statistic rows shuffle.
     """
-    from typing import Iterator
-
     import numpy as np
-    import pandas as pd
 
     from ..grid.grib1 import encode_grib1_message
-    from ..sources.grib_source import RECORD_SCHEMA, _decode_batches
 
-    ids = (
-        table(spark, sf_dir, "documents")
-        .filter((F.col("doc_id") % 23 == 5) & (F.col("doc_id") < 460))
-        .select("doc_id")
-    )
+    def build(d: int) -> bytes:
+        nj = 2 * (2 + d % 2)
+        row_ni = [3 + ((d + 2 * j) % 4) for j in range(nj)]
+        vals = np.concatenate(
+            [
+                80.0 + 2 * ((d * 7 + j * 13 + np.arange(n) * 5) % 40)
+                for j, n in enumerate(row_ni)
+            ]
+        )
+        return encode_grib1_message(
+            vals,
+            parameter=52,
+            reduced_ni=row_ni,
+            forecast=dict(unit=1, value=6 * (1 + d % 3)),
+            reference_value=80.0,
+            nbits=8,
+        )
 
-    def synth(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                nj = 2 * (2 + d % 2)
-                row_ni = [3 + ((d + 2 * j) % 4) for j in range(nj)]
-                vals = np.concatenate(
-                    [
-                        80.0 + 2 * ((d * 7 + j * 13 + np.arange(n) * 5) % 40)
-                        for j, n in enumerate(row_ni)
-                    ]
-                )
-                msg = encode_grib1_message(
-                    vals,
-                    parameter=52,
-                    reduced_ni=row_ni,
-                    forecast=dict(unit=1, value=6 * (1 + d % 3)),
-                    reference_value=80.0,
-                    nbits=8,
-                )
-                rows.append({"path": f"doc://{d}", "content": msg})
-            yield pd.DataFrame(rows)
-
-    files = ids.mapInPandas(synth, schema="path string, content binary")
-    records = files.mapInPandas(_decode_batches, schema=RECORD_SCHEMA)
+    records = landed_records(spark, sf_dir, (23, 5, 460), build)
     zero = F.lit(0).cast("bigint")
-    weighted = F.zip_with(
-        "values",
-        F.sequence(F.lit(0), F.size("values") - 1),
-        lambda v, idx: v.cast("bigint") * idx.cast("bigint"),
-    )
     lat_weighted = F.zip_with(
         "latitudes_udeg",
         F.sequence(F.lit(1), F.size("latitudes_udeg")),
@@ -2725,17 +2376,15 @@ def grid_grib1_reduced_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         "values", cell_lat_udeg, lambda v, lu: v.cast("bigint") * lu
     )
     return records.select(
-        F.regexp_extract("path", r"doc://(\d+)", 1).cast("bigint").alias("doc_id"),
+        "doc_id",
         "edition",
         "parameter",
         "forecast_hours",
         "nj",
         "ni",
         F.size("values").cast("bigint").alias("n_cells"),
-        F.aggregate(
-            "values", zero, lambda a, x: a + x.cast("bigint")
-        ).alias("vsum"),
-        F.aggregate(weighted, zero, lambda a, x: a + x).alias("wsum"),
+        vsum(),
+        wsum(),
         F.aggregate(lat_weighted, zero, lambda a, x: a + x).alias("latwsum"),
         F.aggregate(cell_lon_udeg, zero, lambda a, x: a + x).alias(
             "lonsum_udeg"
@@ -2821,62 +2470,41 @@ def grid_grib1_reduced_latlon_scan(spark: SparkSession, sf_dir: str) -> DataFram
     Scale: the landing posture — one Arrow decode stage, O(rows)
     latitude metadata, statistic rows shuffle.
     """
-    from typing import Iterator
-
     import numpy as np
-    import pandas as pd
 
     from ..grid.grib1 import encode_grib1_message
-    from ..sources.grib_source import RECORD_SCHEMA, _decode_batches
 
-    ids = (
-        table(spark, sf_dir, "documents")
-        .filter((F.col("doc_id") % 89 == 7) & (F.col("doc_id") < 712))
-        .select("doc_id")
-    )
+    def build(d: int) -> bytes:
+        nj = 4 + d % 3
+        row_ni = [3 + ((d + 5 * j) % 4) for j in range(nj)]
 
-    def synth(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                nj = 4 + d % 3
-                row_ni = [3 + ((d + 5 * j) % 4) for j in range(nj)]
-
-                def field(r: int) -> np.ndarray:
-                    return np.concatenate(
-                        [
-                            90.0
-                            + ((d * 11 + r * 7 + j * 13 + np.arange(n) * 3) % 40)
-                            for j, n in enumerate(row_ni)
-                        ]
-                    )
-
-                enc = dict(
-                    reduced_ni=row_ni,
-                    reduced_latlon=True,
-                    lat_first_mdeg=70_000 - (d % 20) * 1000,
-                    dlat_mdeg=2_500,
-                    reference_value=90.0,
-                    nbits=8,
-                )
-                msgs = [
-                    encode_grib1_message(field(1), **enc),
-                    encode_grib1_message(
-                        field(2), second_order=dict(groups="rows"), **enc
-                    ),
+        def field(r: int) -> np.ndarray:
+            return np.concatenate(
+                [
+                    90.0
+                    + ((d * 11 + r * 7 + j * 13 + np.arange(n) * 3) % 40)
+                    for j, n in enumerate(row_ni)
                 ]
-                rows.append({"path": f"doc://{d}", "content": b"".join(msgs)})
-            yield pd.DataFrame(rows)
+            )
 
-    files = ids.mapInPandas(synth, schema="path string, content binary")
-    records = files.mapInPandas(_decode_batches, schema=RECORD_SCHEMA)
+        enc = dict(
+            reduced_ni=row_ni,
+            reduced_latlon=True,
+            lat_first_mdeg=70_000 - (d % 20) * 1000,
+            dlat_mdeg=2_500,
+            reference_value=90.0,
+            nbits=8,
+        )
+        msgs = [
+            encode_grib1_message(field(1), **enc),
+            encode_grib1_message(
+                field(2), second_order=dict(groups="rows"), **enc
+            ),
+        ]
+        return b"".join(msgs)
+
+    records = landed_records(spark, sf_dir, (89, 7, 712), build)
     zero = F.lit(0).cast("bigint")
-    weighted = F.zip_with(
-        "values",
-        F.sequence(F.lit(0), F.size("values") - 1),
-        lambda v, idx: v.cast("bigint") * idx.cast("bigint"),
-    )
     lat_weighted = F.zip_with(
         "latitudes_udeg",
         F.sequence(F.lit(1), F.size("latitudes_udeg")),
@@ -2892,15 +2520,13 @@ def grid_grib1_reduced_latlon_scan(spark: SparkSession, sf_dir: str) -> DataFram
         "values", cell_lat_udeg, lambda v, lu: v.cast("bigint") * lu
     )
     return records.select(
-        F.regexp_extract("path", r"doc://(\d+)", 1).cast("bigint").alias("doc_id"),
+        "doc_id",
         "record_number",
         "nj",
         "ni",
         F.size("values").cast("bigint").alias("n_cells"),
-        F.aggregate(
-            "values", zero, lambda a, x: a + x.cast("bigint")
-        ).alias("vsum"),
-        F.aggregate(weighted, zero, lambda a, x: a + x).alias("wsum"),
+        vsum(),
+        wsum(),
         F.aggregate(lat_weighted, zero, lambda a, x: a + x).alias("latwsum"),
         F.aggregate(cell_lon_udeg, zero, lambda a, x: a + x).alias(
             "lonsum_udeg"
@@ -2963,73 +2589,49 @@ def grid_grib1_second_order_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: identical plan shape to every landing scan — one Arrow
     decode stage, only per-record statistic rows shuffle.
     """
-    from typing import Iterator
-
     import numpy as np
-    import pandas as pd
 
     from ..grid.grib1 import encode_grib1_message
-    from ..sources.grib_source import RECORD_SCHEMA, _decode_batches
 
-    ids = (
-        table(spark, sf_dir, "documents")
-        .filter((F.col("doc_id") % 73 == 17) & (F.col("doc_id") < 700))
-        .select("doc_id")
-    )
+    def build(d: int) -> bytes:
+        ni, nj = 5 + d % 3, 4 + d % 2
+        i = np.arange(ni)[None, :]
+        j = np.arange(nj)[:, None]
 
-    def synth(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                ni, nj = 5 + d % 3, 4 + d % 2
-                i = np.arange(ni)[None, :]
-                j = np.arange(nj)[:, None]
+        def field(r: int) -> np.ndarray:
+            return (
+                60 + ((d * 7 + r * 13 + i * 3 + j * 11) % 50)
+            ).astype(np.float64)
 
-                def field(r: int) -> np.ndarray:
-                    return (
-                        60 + ((d * 7 + r * 13 + i * 3 + j * 11) % 50)
-                    ).astype(np.float64)
+        total = ni * nj
+        k = 1 + d % (total - 1)
+        enc = dict(reference_value=60.0, nbits=8)
+        msgs = [
+            encode_grib1_message(
+                field(0), second_order=dict(groups="rows"), **enc
+            ),
+            encode_grib1_message(
+                field(1),
+                second_order=dict(groups="rows", varying=True),
+                **enc,
+            ),
+            encode_grib1_message(
+                field(2),
+                second_order=dict(
+                    groups=[k, total - k], varying=True
+                ),
+                **enc,
+            ),
+        ]
+        return b"".join(msgs)
 
-                total = ni * nj
-                k = 1 + d % (total - 1)
-                enc = dict(reference_value=60.0, nbits=8)
-                msgs = [
-                    encode_grib1_message(
-                        field(0), second_order=dict(groups="rows"), **enc
-                    ),
-                    encode_grib1_message(
-                        field(1),
-                        second_order=dict(groups="rows", varying=True),
-                        **enc,
-                    ),
-                    encode_grib1_message(
-                        field(2),
-                        second_order=dict(
-                            groups=[k, total - k], varying=True
-                        ),
-                        **enc,
-                    ),
-                ]
-                rows.append({"path": f"doc://{d}", "content": b"".join(msgs)})
-            yield pd.DataFrame(rows)
-
-    files = ids.mapInPandas(synth, schema="path string, content binary")
-    records = files.mapInPandas(_decode_batches, schema=RECORD_SCHEMA)
-    zero = F.lit(0).cast("bigint")
-    weighted = F.zip_with(
-        "values",
-        F.sequence(F.lit(0), F.size("values") - 1),
-        lambda v, idx: v.cast("bigint") * idx.cast("bigint"),
-    )
+    records = landed_records(spark, sf_dir, (73, 17, 700), build)
     return records.select(
-        F.regexp_extract("path", r"doc://(\d+)", 1).cast("bigint").alias("doc_id"),
+        "doc_id",
         "record_number",
         F.size("values").cast("bigint").alias("n_cells"),
-        F.aggregate(
-            "values", zero, lambda a, x: a + x.cast("bigint")
-        ).alias("vsum"),
-        F.aggregate(weighted, zero, lambda a, x: a + x).alias("wsum"),
+        vsum(),
+        wsum(),
     ).orderBy("doc_id", "record_number")
 
 
@@ -3169,7 +2771,7 @@ def grid_geotiff_publish_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         "values",
         F.sequence(F.lit(0), F.size("values") - 1),
         lambda v, idx: F.when(
-            _is_present(v), v.cast("bigint") * idx.cast("bigint")
+            _present(v), v.cast("bigint") * idx.cast("bigint")
         ).otherwise(F.lit(0).cast("bigint")),
     )
     return records.select(
@@ -3182,13 +2784,13 @@ def grid_geotiff_publish_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.aggregate(
             "values",
             zero,
-            lambda a, x: a + F.when(_is_present(x), 0).otherwise(1).cast("bigint"),
+            lambda a, x: a + F.when(_present(x), 0).otherwise(1).cast("bigint"),
         ).alias("n_nodata"),
         F.aggregate(
             "values",
             zero,
             lambda a, x: a
-            + F.when(_is_present(x), x).otherwise(F.lit(0)).cast("bigint"),
+            + F.when(_present(x), x).otherwise(F.lit(0)).cast("bigint"),
         ).alias("vsum"),
         F.aggregate(weighted, zero, lambda a, x: a + x).alias("wsum"),
     ).orderBy("doc_id", "month")

@@ -5,17 +5,27 @@ missing-value management, IEEE floats, CCSDS/AEC, log packing,
 run-length level packing, the deprecated satellite form and the
 chemistry/aerosol families.  Split out of the former monolithic
 plans/grid_q.py in r16 — every registry name and oracle is
-unchanged."""
+unchanged.
+
+The gate → archive synth → decode scaffold and the shared witness
+columns live in plans/grid_common.py (``landed_records`` /
+``doc_archives``); each query here owns only its archive ``build`` function
+and its witness arithmetic."""
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.readers import table
 from .catalog import query
-from .grid_common import _is_present, _present  # noqa: F401
-from .grid_spectral_q import _spectral_coeffs  # noqa: F401
+from .grid_common import (
+    _present,
+    doc_archives,
+    landed_records,
+    present_stats,
+    vsum,
+)
+from .grid_spectral_q import _spectral_coeffs
 
 @query(
     "grid_grib1_reduced_bitmap_scan",
@@ -102,19 +112,9 @@ def grid_grib1_reduced_bitmap_scan(spark: SparkSession, sf_dir: str) -> DataFram
     shipped once per executor, exactly how a centre's bitmap table
     would ride a 100 TB scan.
     """
-    from typing import Iterator
-
     import numpy as np
-    import pandas as pd
 
     from ..grid.grib1 import encode_grib1_message
-    from ..sources.grib_source import RECORD_SCHEMA, _decode_batches
-
-    ids = (
-        table(spark, sf_dir, "documents")
-        .filter((F.col("doc_id") % 29 == 11) & (F.col("doc_id") < 580))
-        .select("doc_id")
-    )
 
     # the consumer-side catalog: ECMWF-style centre 74 (the encoder's
     # fixed centre octet), numbers 1-7, each mask a pure function of
@@ -125,48 +125,39 @@ def grid_grib1_reduced_bitmap_scan(spark: SparkSession, sf_dir: str) -> DataFram
         (74, n): (np.arange(16) + n) % 3 != 0 for n in range(1, 8)
     }
 
-    def synth(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                nj = 2 * (2 + d % 2)
-                row_ni = [3 + ((d + 5 * j) % 4) for j in range(nj)]
-                v1 = np.concatenate(
-                    [
-                        60.0 + 2 * ((d * 3 + j * 7 + np.arange(n) * 5) % 35)
-                        for j, n in enumerate(row_ni)
-                    ]
-                )
-                pos1 = np.arange(v1.size)
-                bm1 = (d + pos1) % 4 != 0
-                msg1 = encode_grib1_message(
-                    v1, reduced_ni=row_ni, bitmap=bm1,
-                    reference_value=60.0, nbits=8,
-                )
-                rows2 = [3, 4, 5, 4]
-                pos2 = np.arange(16)
-                v2 = 40.0 + 3 * ((d * 7 + pos2 * 5) % 30)
-                n = 1 + d % 7
-                msg2 = encode_grib1_message(
-                    v2, reduced_ni=rows2,
-                    predefined_bitmap=dict(
-                        number=n, mask=(pos2 + n) % 3 != 0
-                    ),
-                    reference_value=40.0, nbits=8,
-                )
-                rows.append({"path": f"doc://{d}", "content": msg1 + msg2})
-            yield pd.DataFrame(rows)
+    def build(d: int) -> bytes:
+        nj = 2 * (2 + d % 2)
+        row_ni = [3 + ((d + 5 * j) % 4) for j in range(nj)]
+        v1 = np.concatenate(
+            [
+                60.0 + 2 * ((d * 3 + j * 7 + np.arange(n) * 5) % 35)
+                for j, n in enumerate(row_ni)
+            ]
+        )
+        pos1 = np.arange(v1.size)
+        bm1 = (d + pos1) % 4 != 0
+        msg1 = encode_grib1_message(
+            v1, reduced_ni=row_ni, bitmap=bm1,
+            reference_value=60.0, nbits=8,
+        )
+        rows2 = [3, 4, 5, 4]
+        pos2 = np.arange(16)
+        v2 = 40.0 + 3 * ((d * 7 + pos2 * 5) % 30)
+        n = 1 + d % 7
+        msg2 = encode_grib1_message(
+            v2, reduced_ni=rows2,
+            predefined_bitmap=dict(
+                number=n, mask=(pos2 + n) % 3 != 0
+            ),
+            reference_value=40.0, nbits=8,
+        )
+        return msg1 + msg2
 
-    files = ids.mapInPandas(synth, schema="path string, content binary")
-    records = files.mapInPandas(
-        lambda it: _decode_batches(it, predefined_bitmaps=catalog),
-        schema=RECORD_SCHEMA,
+    records = landed_records(
+        spark, sf_dir, (29, 11, 580), build, predefined_bitmaps=catalog
     )
     cells = records.select(
-        F.regexp_extract("path", r"doc://(\d+)", 1).cast("bigint").alias(
-            "doc_id"
-        ),
+        "doc_id",
         "record_number",
         "nj",
         F.posexplode("values").alias("pos", "v"),
@@ -176,26 +167,7 @@ def grid_grib1_reduced_bitmap_scan(spark: SparkSession, sf_dir: str) -> DataFram
         .agg(
             F.min("nj").alias("nj"),
             F.count(F.lit(1)).cast("bigint").alias("n_cells"),
-            # Arrow maps the codec's NaN to NULL on the array<double>
-            # transfer and any residual NaN must count the same way,
-            # so "present" is NOT NULL AND NOT NaN on this surface
-            # (Spark's isnan(NULL) is false, not NULL)
-            F.count(F.when(_present("v"), F.lit(1)))
-            .cast("bigint")
-            .alias("n_present"),
-            F.sum(F.when(_present("v"), F.col("v")).otherwise(F.lit(0.0)))
-            .cast("bigint")
-            .alias("vsum"),
-            F.sum(
-                F.when(_present("v"), F.col("v") * F.col("pos")).otherwise(
-                    F.lit(0.0)
-                )
-            )
-            .cast("bigint")
-            .alias("wsum"),
-            F.sum(F.when(~_present("v"), F.col("pos")).otherwise(F.lit(0)))
-            .cast("bigint")
-            .alias("misspos"),
+            *present_stats(),
         )
         .orderBy("doc_id", "record_number")
     )
@@ -264,69 +236,42 @@ def grid_grib1_spectral_complex_scan(spark: SparkSession, sf_dir: str) -> DataFr
     fixed-width packing, so this is the byte shape a 100 TB pre-GRIB2
     ERA archive scan actually reads.
     """
-    from typing import Iterator
-
-    import pandas as pd
-
     from ..grid.grib1 import decode_grib1, encode_grib1_message, iter_messages
 
-    ids = (
-        table(spark, sf_dir, "documents")
-        .filter((F.col("doc_id") % 31 == 12) & (F.col("doc_id") < 620))
-        .select("doc_id")
-    )
+    def build(d: int) -> bytes:
+        t = 4 + d % 3
+        c = _spectral_coeffs(d, t, 7, 13, 5, 11, 101)
+        return encode_grib1_message(
+            c, spectral=dict(truncation=t), nbits=8, parameter=80
+        ) + encode_grib1_message(
+            c,
+            spectral=dict(
+                truncation=t,
+                sub_truncation=1 + d % 2,
+                laplacian=1.0,
+            ),
+            nbits=16,
+            parameter=80,
+        )
 
-    def synth(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                t = 4 + d % 3
-                c = _spectral_coeffs(d, t, 7, 13, 5, 11, 101)
-                buf = encode_grib1_message(
-                    c, spectral=dict(truncation=t), nbits=8, parameter=80
-                ) + encode_grib1_message(
-                    c,
-                    spectral=dict(
-                        truncation=t,
-                        sub_truncation=1 + d % 2,
-                        laplacian=1.0,
-                    ),
-                    nbits=16,
-                    parameter=80,
-                )
-                rows.append({"doc_id": d, "grib": buf})
-            yield pd.DataFrame(rows)
+    def decode(d: int, buf: bytes):
+        for msg in iter_messages(buf):
+            rec = decode_grib1(msg)
+            co = rec.spectral_coeffs
+            yield {
+                "complex_form": int(
+                    rec.spectral_sub_truncation is not None
+                ),
+                "truncation": rec.spectral_truncation,
+                "sub_truncation": rec.spectral_sub_truncation,
+                "re": co.real.tolist(),
+                "im": co.imag.tolist(),
+            }
 
-    def decode(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id, buf in zip(pdf["doc_id"], pdf["grib"]):
-                d = int(doc_id)
-                for msg in iter_messages(bytes(buf)):
-                    rec = decode_grib1(msg)
-                    co = rec.spectral_coeffs
-                    rows.append(
-                        {
-                            "doc_id": d,
-                            "complex_form": int(
-                                rec.spectral_sub_truncation is not None
-                            ),
-                            "truncation": rec.spectral_truncation,
-                            "sub_truncation": rec.spectral_sub_truncation,
-                            "re": co.real.tolist(),
-                            "im": co.imag.tolist(),
-                        }
-                    )
-            yield pd.DataFrame(rows)
-
-    files = ids.mapInPandas(synth, schema="doc_id bigint, grib binary")
-    decoded = files.mapInPandas(
-        decode,
-        schema=(
-            "doc_id bigint, complex_form int, truncation int, "
-            "sub_truncation int, re array<double>, im array<double>"
-        ),
+    decoded = doc_archives(
+        spark, sf_dir, (31, 12, 620), build, decode,
+        "complex_form int, truncation int, sub_truncation int, "
+        "re array<double>, im array<double>",
     )
     pair = F.posexplode(F.arrays_zip("re", "im")).alias("k", "pair")
     return (
@@ -413,75 +358,35 @@ def grid_grib2_diff_missing_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     archive scan read the producer's actual bytes instead of
     quarantining every masked record.
     """
-    from typing import Iterator
-
     import numpy as np
-    import pandas as pd
 
     from ..grid.grib2 import encode_grib2_message
-    from ..sources.grib_source import RECORD_SCHEMA, _decode_batches
 
-    ids = (
-        table(spark, sf_dir, "documents")
-        .filter((F.col("doc_id") % 37 == 14) & (F.col("doc_id") < 740))
-        .select("doc_id")
-    )
+    def build(d: int) -> bytes:
+        ni, nj = 5 + d % 3, 3 + d % 2
+        i = np.arange(ni)[None, :]
+        j = np.arange(nj)[:, None]
+        v = (70 + 3 * ((d * 7 + i * 5 + j * 11) % 50)).astype(np.float64)
+        mm = ((i + 2 * j + d) % 5 == 0) | np.zeros_like(v, bool)
+        return encode_grib2_message(
+            v,
+            packing="complex_diff",
+            spatial_diff_order=1 + d % 2,
+            group_len=4 + d % 5,
+            missing_mask=mm,
+            reference_value=0.0,
+        )
 
-    def synth(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                ni, nj = 5 + d % 3, 3 + d % 2
-                i = np.arange(ni)[None, :]
-                j = np.arange(nj)[:, None]
-                v = (70 + 3 * ((d * 7 + i * 5 + j * 11) % 50)).astype(
-                    np.float64
-                )
-                mm = ((i + 2 * j + d) % 5 == 0) | np.zeros_like(v, bool)
-                msg = encode_grib2_message(
-                    v,
-                    packing="complex_diff",
-                    spatial_diff_order=1 + d % 2,
-                    group_len=4 + d % 5,
-                    missing_mask=mm,
-                    reference_value=0.0,
-                )
-                rows.append({"path": f"doc://{d}", "content": msg})
-            yield pd.DataFrame(rows)
-
-    files = ids.mapInPandas(synth, schema="path string, content binary")
-    records = files.mapInPandas(_decode_batches, schema=RECORD_SCHEMA)
+    records = landed_records(spark, sf_dir, (37, 14, 740), build)
     cells = records.select(
-        F.regexp_extract("path", r"doc://(\d+)", 1).cast("bigint").alias(
-            "doc_id"
-        ),
+        "doc_id",
         F.posexplode("values").alias("pos", "v"),
     )
     return (
         cells.groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_cells"),
-            # Arrow maps the codec's NaN to NULL on the array<double>
-            # transfer and any residual NaN must count the same way,
-            # so "present" is NOT NULL AND NOT NaN on this surface
-            # (Spark's isnan(NULL) is false, not NULL)
-            F.count(F.when(_present("v"), F.lit(1)))
-            .cast("bigint")
-            .alias("n_present"),
-            F.sum(F.when(_present("v"), F.col("v")).otherwise(F.lit(0.0)))
-            .cast("bigint")
-            .alias("vsum"),
-            F.sum(
-                F.when(_present("v"), F.col("v") * F.col("pos")).otherwise(
-                    F.lit(0.0)
-                )
-            )
-            .cast("bigint")
-            .alias("wsum"),
-            F.sum(F.when(~_present("v"), F.col("pos")).otherwise(F.lit(0)))
-            .cast("bigint")
-            .alias("misspos"),
+            *present_stats(),
         )
         .orderBy("doc_id")
     )
@@ -562,78 +467,60 @@ def grid_grib2_deprecated_satellite_scan(
     Scale: identical plan shape to every landing scan — one Arrow
     decode stage, only per-record statistic rows shuffle.
     """
-    from typing import Iterator
-
     import numpy as np
-    import pandas as pd
 
     from ..grid.grib2 import encode_grib2_message
-    from ..sources.grib_source import RECORD_SCHEMA, _decode_batches
 
-    ids = (
-        table(spark, sf_dir, "documents")
-        .filter((F.col("doc_id") % 43 == 17) & (F.col("doc_id") < 700))
-        .select("doc_id")
-    )
+    def build(d: int) -> bytes:
+        ni, nj = 4 + d % 3, 3 + d % 2
+        i = np.arange(ni)[None, :]
+        j = np.arange(nj)[:, None]
 
-    def synth(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                ni, nj = 4 + d % 3, 3 + d % 2
-                i = np.arange(ni)[None, :]
-                j = np.arange(nj)[:, None]
+        def field(r: int) -> np.ndarray:
+            return (
+                20 + 2 * ((d * 3 + r * 5 + i * 7 + j * 9) % 30)
+            ).astype(np.float64)
 
-                def field(r: int) -> np.ndarray:
-                    return (
-                        20 + 2 * ((d * 3 + r * 5 + i * 7 + j * 9) % 30)
-                    ).astype(np.float64)
+        enc = dict(
+            category=0, number=7,
+            reference_value=20.0, binary_scale=1, nbits=8,
+        )
+        bands30 = [
+            dict(
+                series=333,
+                number=50 + b,
+                instrument=150 + ((d + 7 * b) % 100),
+                scale=-(b % 2),
+                value=400 + d % 50 + 3 * b,
+            )
+            for b in range(1 + d % 3)
+        ]
+        msgs = [
+            encode_grib2_message(
+                field(0),
+                satellite=dict(deprecated=True, bands=bands30),
+                **enc,
+            ),
+            encode_grib2_message(
+                field(1),
+                satellite=dict(
+                    bands=[
+                        dict(
+                            series=500, number=77,
+                            instrument=600 + d % 120,
+                            scale=1, value=900 + d % 30,
+                        )
+                    ]
+                ),
+                **enc,
+            ),
+        ]
+        return b"".join(msgs)
 
-                enc = dict(
-                    category=0, number=7,
-                    reference_value=20.0, binary_scale=1, nbits=8,
-                )
-                bands30 = [
-                    dict(
-                        series=333,
-                        number=50 + b,
-                        instrument=150 + ((d + 7 * b) % 100),
-                        scale=-(b % 2),
-                        value=400 + d % 50 + 3 * b,
-                    )
-                    for b in range(1 + d % 3)
-                ]
-                msgs = [
-                    encode_grib2_message(
-                        field(0),
-                        satellite=dict(deprecated=True, bands=bands30),
-                        **enc,
-                    ),
-                    encode_grib2_message(
-                        field(1),
-                        satellite=dict(
-                            bands=[
-                                dict(
-                                    series=500, number=77,
-                                    instrument=600 + d % 120,
-                                    scale=1, value=900 + d % 30,
-                                )
-                            ]
-                        ),
-                        **enc,
-                    ),
-                ]
-                rows.append({"path": f"doc://{d}", "content": b"".join(msgs)})
-            yield pd.DataFrame(rows)
-
-    files = ids.mapInPandas(synth, schema="path string, content binary")
-    records = files.mapInPandas(_decode_batches, schema=RECORD_SCHEMA)
+    records = landed_records(spark, sf_dir, (43, 17, 700), build)
     zero = F.lit(0).cast("bigint")
     return records.select(
-        F.regexp_extract("path", r"doc://(\d+)", 1).cast("bigint").alias(
-            "doc_id"
-        ),
+        "doc_id",
         "record_number",
         "product_template",
         "satellite_bands",
@@ -648,9 +535,7 @@ def grid_grib2_deprecated_satellite_scan(
         ).alias("wave_sum"),
         "level_type",
         "forecast_hours",
-        F.aggregate(
-            "values", zero, lambda a, x: a + x.cast("bigint")
-        ).alias("vsum"),
+        vsum(),
     ).orderBy("doc_id", "record_number")
 
 
@@ -716,47 +601,29 @@ def grid_grib2_ieee_float_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     decode CPU (a memcpy-shaped frombuffer per record, the cheapest
     packing the engine reads).
     """
-    from typing import Iterator
-
     import numpy as np
-    import pandas as pd
 
     from ..grid.grib2 import encode_grib2_message
-    from ..sources.grib_source import RECORD_SCHEMA, _decode_batches
 
-    ids = (
-        table(spark, sf_dir, "documents")
-        .filter((F.col("doc_id") % 41 == 15) & (F.col("doc_id") < 820))
-        .select("doc_id")
-    )
+    def build(d: int) -> bytes:
+        ni, nj = 4 + d % 3, 3 + d % 2
+        i = np.arange(ni)[None, :]
+        j = np.arange(nj)[:, None]
+        # quarter-exact values: vq/4 with vq the oracle's ints
+        v1 = (((d * 3 + i * 7 + j * 5) % 40) * 2 - 20) / 4.0
+        v1 = (v1 + np.zeros((nj, ni))).astype(np.float64)
+        pos = (j * ni + i).astype(np.int64)
+        v2 = (((d * 7 + pos * 3) % 50) - 12) / 4.0
+        bm2 = (pos + d) % 5 != 0
+        msgs = [
+            encode_grib2_message(v1, packing="ieee32"),
+            encode_grib2_message(v2, packing="ieee64", bitmap=bm2),
+        ]
+        return b"".join(msgs)
 
-    def synth(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                ni, nj = 4 + d % 3, 3 + d % 2
-                i = np.arange(ni)[None, :]
-                j = np.arange(nj)[:, None]
-                # quarter-exact values: vq/4 with vq the oracle's ints
-                v1 = (((d * 3 + i * 7 + j * 5) % 40) * 2 - 20) / 4.0
-                v1 = (v1 + np.zeros((nj, ni))).astype(np.float64)
-                pos = (j * ni + i).astype(np.int64)
-                v2 = (((d * 7 + pos * 3) % 50) - 12) / 4.0
-                bm2 = (pos + d) % 5 != 0
-                msgs = [
-                    encode_grib2_message(v1, packing="ieee32"),
-                    encode_grib2_message(v2, packing="ieee64", bitmap=bm2),
-                ]
-                rows.append({"path": f"doc://{d}", "content": b"".join(msgs)})
-            yield pd.DataFrame(rows)
-
-    files = ids.mapInPandas(synth, schema="path string, content binary")
-    records = files.mapInPandas(_decode_batches, schema=RECORD_SCHEMA)
+    records = landed_records(spark, sf_dir, (41, 15, 820), build)
     cells = records.select(
-        F.regexp_extract("path", r"doc://(\d+)", 1).cast("bigint").alias(
-            "doc_id"
-        ),
+        "doc_id",
         "record_number",
         F.posexplode("values").alias("pos", "v"),
     )
@@ -843,55 +710,34 @@ def grid_grib2_secondary_missing_scan(
     shuffle; supporting mvm=2 is what lets a 100 TB radar-product
     archive land without quarantining every below-threshold record.
     """
-    from typing import Iterator
-
     import numpy as np
-    import pandas as pd
 
     from ..grid.grib2 import encode_grib2_message
-    from ..sources.grib_source import RECORD_SCHEMA, _decode_batches
 
-    ids = (
-        table(spark, sf_dir, "documents")
-        .filter((F.col("doc_id") % 47 == 21) & (F.col("doc_id") < 940))
-        .select("doc_id")
-    )
+    def build(d: int) -> bytes:
+        ni, nj = 5 + d % 3, 3 + d % 2
+        i = np.arange(ni)[None, :]
+        j = np.arange(nj)[:, None]
+        v = (80 + 2 * ((d * 5 + i * 3 + j * 7) % 45)).astype(np.float64)
+        kind = (i + 2 * j + d) % 7
+        mm = (kind == 0) | np.zeros_like(v, bool)
+        sm = (kind == 1) | np.zeros_like(v, bool)
+        order = d % 3
+        kw = dict(
+            packing="complex" if order == 0 else "complex_diff",
+            missing_mask=mm,
+            secondary_mask=sm,
+            secondary_substitute=float(500 + d % 20),
+            group_len=3 + d % 6,
+            reference_value=0.0,
+        )
+        if order:
+            kw["spatial_diff_order"] = order
+        return encode_grib2_message(v, **kw)
 
-    def synth(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                ni, nj = 5 + d % 3, 3 + d % 2
-                i = np.arange(ni)[None, :]
-                j = np.arange(nj)[:, None]
-                v = (80 + 2 * ((d * 5 + i * 3 + j * 7) % 45)).astype(
-                    np.float64
-                )
-                kind = (i + 2 * j + d) % 7
-                mm = (kind == 0) | np.zeros_like(v, bool)
-                sm = (kind == 1) | np.zeros_like(v, bool)
-                order = d % 3
-                kw = dict(
-                    packing="complex" if order == 0 else "complex_diff",
-                    missing_mask=mm,
-                    secondary_mask=sm,
-                    secondary_substitute=float(500 + d % 20),
-                    group_len=3 + d % 6,
-                    reference_value=0.0,
-                )
-                if order:
-                    kw["spatial_diff_order"] = order
-                msg = encode_grib2_message(v, **kw)
-                rows.append({"path": f"doc://{d}", "content": msg})
-            yield pd.DataFrame(rows)
-
-    files = ids.mapInPandas(synth, schema="path string, content binary")
-    records = files.mapInPandas(_decode_batches, schema=RECORD_SCHEMA)
+    records = landed_records(spark, sf_dir, (47, 21, 940), build)
     cells = records.select(
-        F.regexp_extract("path", r"doc://(\d+)", 1).cast("bigint").alias(
-            "doc_id"
-        ),
+        "doc_id",
         F.posexplode("values").alias("pos", "v"),
     )
     sub2 = F.lit(500) + F.col("doc_id") % 20
@@ -976,47 +822,26 @@ def grid_grib2_aec_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     pure-Python block decoder is the same swap-in CPU constant as the
     complex unpacker (grib2._decode_complex_s7 docstring).
     """
-    from typing import Iterator
-
     import numpy as np
-    import pandas as pd
 
     from ..grid.grib2 import encode_grib2_message
-    from ..sources.grib_source import RECORD_SCHEMA, _decode_batches
 
-    ids = (
-        table(spark, sf_dir, "documents")
-        .filter((F.col("doc_id") % 53 == 11) & (F.col("doc_id") < 1060))
-        .select("doc_id")
-    )
+    def build(d: int) -> bytes:
+        ni, nj = 6 + d % 4, 3 + d % 2
+        pos = np.arange(ni * nj)
+        v = (100 + ((d * 3 + pos * 5) % 40)).astype(np.float64).reshape(nj, ni)
+        return encode_grib2_message(
+            v,
+            packing="aec",
+            nbits=8,
+            reference_value=100.0,
+            aec_block_size=8 << (d % 3),
+            aec_rsi=1 + d % 4,
+        )
 
-    def synth(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                ni, nj = 6 + d % 4, 3 + d % 2
-                pos = np.arange(ni * nj)
-                v = (100 + ((d * 3 + pos * 5) % 40)).astype(
-                    np.float64
-                ).reshape(nj, ni)
-                msg = encode_grib2_message(
-                    v,
-                    packing="aec",
-                    nbits=8,
-                    reference_value=100.0,
-                    aec_block_size=8 << (d % 3),
-                    aec_rsi=1 + d % 4,
-                )
-                rows.append({"path": f"doc://{d}", "content": msg})
-            yield pd.DataFrame(rows)
-
-    files = ids.mapInPandas(synth, schema="path string, content binary")
-    records = files.mapInPandas(_decode_batches, schema=RECORD_SCHEMA)
+    records = landed_records(spark, sf_dir, (53, 11, 1060), build)
     cells = records.select(
-        F.regexp_extract("path", r"doc://(\d+)", 1).cast("bigint").alias(
-            "doc_id"
-        ),
+        "doc_id",
         F.posexplode("values").alias("pos", "v"),
     )
     return (
@@ -1078,46 +903,27 @@ def grid_grib2_log_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: codec posture — one Arrow decode stage; the exp inversion
     is one vectorized numpy pass per record.
     """
-    from typing import Iterator
-
     import numpy as np
-    import pandas as pd
 
     from ..grid.grib2 import encode_grib2_message
-    from ..sources.grib_source import RECORD_SCHEMA, _decode_batches
 
-    ids = (
-        table(spark, sf_dir, "documents")
-        .filter((F.col("doc_id") % 59 == 7) & (F.col("doc_id") < 1180))
-        .select("doc_id")
-    )
+    def build(d: int) -> bytes:
+        ni, nj = 4 + d % 3, 3 + d % 2
+        i = np.arange(ni)[None, :]
+        j = np.arange(nj)[:, None]
+        k = ((d * 3 + i * 5 + j * 7) % 9).astype(np.float64)
+        v = np.exp(k) - 10.0
+        return encode_grib2_message(
+            v,
+            packing="log",
+            log_offset=10.0,
+            nbits=8,
+            reference_value=0.0,
+        )
 
-    def synth(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                ni, nj = 4 + d % 3, 3 + d % 2
-                i = np.arange(ni)[None, :]
-                j = np.arange(nj)[:, None]
-                k = ((d * 3 + i * 5 + j * 7) % 9).astype(np.float64)
-                v = np.exp(k) - 10.0
-                msg = encode_grib2_message(
-                    v,
-                    packing="log",
-                    log_offset=10.0,
-                    nbits=8,
-                    reference_value=0.0,
-                )
-                rows.append({"path": f"doc://{d}", "content": msg})
-            yield pd.DataFrame(rows)
-
-    files = ids.mapInPandas(synth, schema="path string, content binary")
-    records = files.mapInPandas(_decode_batches, schema=RECORD_SCHEMA)
+    records = landed_records(spark, sf_dir, (59, 7, 1180), build)
     cells = records.select(
-        F.regexp_extract("path", r"doc://(\d+)", 1).cast("bigint").alias(
-            "doc_id"
-        ),
+        "doc_id",
         F.posexplode("values").alias("pos", "v"),
     )
     v6 = F.round(F.col("v") * F.lit(1e6)).cast("bigint")
@@ -1197,62 +1003,43 @@ def grid_grib2_chemistry_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     as a plain filterable column, so "only NO2" is a pushed predicate
     on the landed table, not a re-decode.
     """
-    from typing import Iterator
-
     import numpy as np
-    import pandas as pd
 
     from ..grid.grib2 import encode_grib2_message
-    from ..sources.grib_source import RECORD_SCHEMA, _decode_batches
 
-    ids = (
-        table(spark, sf_dir, "documents")
-        .filter((F.col("doc_id") % 61 == 13) & (F.col("doc_id") < 1220))
-        .select("doc_id")
-    )
+    def build(d: int) -> bytes:
+        ni, nj = 4 + d % 3, 3 + d % 2
+        pos = np.arange(ni * nj)
+        ens = {"type": 3, "member": 1 + d % 50, "size": 51}
+        stat = {
+            "process": 1,
+            "interval_end": (2022, 1 + d % 12, 3, 0, 0),
+            "range_hours": 24,
+        }
+        content = b""
+        for r, extra in enumerate(
+            (
+                {},
+                {"ensemble": ens},
+                {"statistical": stat},
+                {"ensemble": ens, "statistical": stat},
+            )
+        ):
+            v = (
+                50 + ((d * 3 + r * 7 + pos * 5) % 60)
+            ).astype(np.float64).reshape(nj, ni)
+            content += encode_grib2_message(
+                v,
+                chemistry=(d * 7 + r) % 200,
+                nbits=8,
+                reference_value=50.0,
+                **extra,
+            )
+        return content
 
-    def synth(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                ni, nj = 4 + d % 3, 3 + d % 2
-                pos = np.arange(ni * nj)
-                ens = {"type": 3, "member": 1 + d % 50, "size": 51}
-                stat = {
-                    "process": 1,
-                    "interval_end": (2022, 1 + d % 12, 3, 0, 0),
-                    "range_hours": 24,
-                }
-                content = b""
-                for r, extra in enumerate(
-                    (
-                        {},
-                        {"ensemble": ens},
-                        {"statistical": stat},
-                        {"ensemble": ens, "statistical": stat},
-                    )
-                ):
-                    v = (
-                        50 + ((d * 3 + r * 7 + pos * 5) % 60)
-                    ).astype(np.float64).reshape(nj, ni)
-                    content += encode_grib2_message(
-                        v,
-                        chemistry=(d * 7 + r) % 200,
-                        nbits=8,
-                        reference_value=50.0,
-                        **extra,
-                    )
-                rows.append({"path": f"doc://{d}", "content": content})
-            yield pd.DataFrame(rows)
-
-    files = ids.mapInPandas(synth, schema="path string, content binary")
-    records = files.mapInPandas(_decode_batches, schema=RECORD_SCHEMA)
-    zero = F.lit(0).cast("bigint")
+    records = landed_records(spark, sf_dir, (61, 13, 1220), build)
     return records.select(
-        F.regexp_extract("path", r"doc://(\d+)", 1).cast("bigint").alias(
-            "doc_id"
-        ),
+        "doc_id",
         "record_number",
         "product_template",
         "constituent_type",
@@ -1260,9 +1047,7 @@ def grid_grib2_chemistry_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         "statistical_process",
         "interval_end",
         F.size("values").cast("bigint").alias("n_cells"),
-        F.aggregate(
-            "values", zero, lambda a, x: a + x.cast("bigint")
-        ).alias("vsum"),
+        vsum(),
     ).orderBy("doc_id", "record_number")
 
 
@@ -1338,78 +1123,57 @@ def grid_grib2_aerosol_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     Arrow decode stage, statistic rows shuffle, aerosol metadata as
     filterable columns.
     """
-    from typing import Iterator
-
     import numpy as np
-    import pandas as pd
 
     from ..grid.grib2 import encode_grib2_message
-    from ..sources.grib_source import RECORD_SCHEMA, _decode_batches
 
-    ids = (
-        table(spark, sf_dir, "documents")
-        .filter((F.col("doc_id") % 67 == 5) & (F.col("doc_id") < 1340))
-        .select("doc_id")
-    )
+    def build(d: int) -> bytes:
+        ni, nj = 4 + d % 3, 3 + d % 2
+        pos = np.arange(ni * nj)
 
-    def synth(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                ni, nj = 4 + d % 3, 3 + d % 2
-                pos = np.arange(ni * nj)
+        def field(r: int) -> np.ndarray:
+            return (
+                30 + ((d * 5 + r * 11 + pos * 3) % 50)
+            ).astype(np.float64).reshape(nj, ni)
 
-                def field(r: int) -> np.ndarray:
-                    return (
-                        30 + ((d * 5 + r * 11 + pos * 3) % 50)
-                    ).astype(np.float64).reshape(nj, ni)
+        sizes = {
+            "size_interval": 2,
+            "first_size": (8, 20 + d % 30),
+            "second_size": (7, 50 + d % 45),
+        }
+        m45 = encode_grib2_message(
+            field(0),
+            aerosol={"type": 62000 + d % 20, **sizes},
+            ensemble={"type": 3, "member": 1 + d % 40, "size": 40},
+            nbits=8,
+            reference_value=30.0,
+        )
+        wl = {
+            "type": 62010,
+            **sizes,
+            "wavelength_interval": 11,
+            "first_wavelength": (9, 440 + d % 200),
+            "second_wavelength": (9, 865),
+        }
+        m48 = encode_grib2_message(
+            field(1), aerosol=wl, nbits=8, reference_value=30.0
+        )
+        m49 = encode_grib2_message(
+            field(2),
+            aerosol=wl,
+            ensemble={"type": 3, "member": 1 + d % 40, "size": 40},
+            nbits=8,
+            reference_value=30.0,
+        )
+        return m45 + m48 + m49
 
-                sizes = {
-                    "size_interval": 2,
-                    "first_size": (8, 20 + d % 30),
-                    "second_size": (7, 50 + d % 45),
-                }
-                m45 = encode_grib2_message(
-                    field(0),
-                    aerosol={"type": 62000 + d % 20, **sizes},
-                    ensemble={"type": 3, "member": 1 + d % 40, "size": 40},
-                    nbits=8,
-                    reference_value=30.0,
-                )
-                wl = {
-                    "type": 62010,
-                    **sizes,
-                    "wavelength_interval": 11,
-                    "first_wavelength": (9, 440 + d % 200),
-                    "second_wavelength": (9, 865),
-                }
-                m48 = encode_grib2_message(
-                    field(1), aerosol=wl, nbits=8, reference_value=30.0
-                )
-                m49 = encode_grib2_message(
-                    field(2),
-                    aerosol=wl,
-                    ensemble={"type": 3, "member": 1 + d % 40, "size": 40},
-                    nbits=8,
-                    reference_value=30.0,
-                )
-                rows.append(
-                    {"path": f"doc://{d}", "content": m45 + m48 + m49}
-                )
-            yield pd.DataFrame(rows)
-
-    files = ids.mapInPandas(synth, schema="path string, content binary")
-    records = files.mapInPandas(_decode_batches, schema=RECORD_SCHEMA)
+    records = landed_records(spark, sf_dir, (67, 5, 1340), build)
 
     def nm(col: str):
         return F.round(F.col(col) * F.lit(1e9)).cast("bigint")
 
-    zero = F.lit(0).cast("bigint")
     return records.select(
-        F.regexp_extract("path", r"doc://(\d+)", 1).cast("bigint").alias(
-            "doc_id"
-        ),
+        "doc_id",
         "record_number",
         "product_template",
         "aerosol_type",
@@ -1421,9 +1185,7 @@ def grid_grib2_aerosol_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         nm("aerosol_second_wavelength_m").alias("second_wavelength_nm"),
         "ensemble_member",
         F.size("values").cast("bigint").alias("n_cells"),
-        F.aggregate(
-            "values", zero, lambda a, x: a + x.cast("bigint")
-        ).alias("vsum"),
+        vsum(),
     ).orderBy("doc_id", "record_number")
 
 
@@ -1498,52 +1260,34 @@ def grid_grib2_reduced_bitmap_scan(spark: SparkSession, sf_dir: str) -> DataFram
     rows shuffle; masked ocean/land fields on reduced ERA5-native
     grids are exactly what a 100 TB CDS archive scan reads.
     """
-    from typing import Iterator
-
     import numpy as np
-    import pandas as pd
 
     from ..grid.grib2 import encode_grib2_message
-    from ..sources.grib_source import RECORD_SCHEMA, _decode_batches
 
-    ids = (
-        table(spark, sf_dir, "documents")
-        .filter((F.col("doc_id") % 71 == 3) & (F.col("doc_id") < 1420))
-        .select("doc_id")
-    )
+    def build(d: int) -> bytes:
+        nj = 2 * (2 + d % 2)
+        row_ni = [3 + ((d + 5 * j) % 4) for j in range(nj)]
+        content = b""
+        for r, packing in ((1, "simple"), (2, "complex_diff")):
+            v = np.concatenate(
+                [
+                    60.0
+                    + 2 * ((d * 3 + r * 5 + j * 7 + np.arange(n) * 5) % 35)
+                    for j, n in enumerate(row_ni)
+                ]
+            )
+            pos = np.arange(v.size)
+            bm = (d + r + pos) % 4 != 0
+            content += encode_grib2_message(
+                v, reduced_ni=row_ni, bitmap=bm,
+                reference_value=60.0, nbits=8,
+                packing=packing, group_len=4,
+            )
+        return content
 
-    def synth(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                nj = 2 * (2 + d % 2)
-                row_ni = [3 + ((d + 5 * j) % 4) for j in range(nj)]
-                content = b""
-                for r, packing in ((1, "simple"), (2, "complex_diff")):
-                    v = np.concatenate(
-                        [
-                            60.0
-                            + 2 * ((d * 3 + r * 5 + j * 7 + np.arange(n) * 5) % 35)
-                            for j, n in enumerate(row_ni)
-                        ]
-                    )
-                    pos = np.arange(v.size)
-                    bm = (d + r + pos) % 4 != 0
-                    content += encode_grib2_message(
-                        v, reduced_ni=row_ni, bitmap=bm,
-                        reference_value=60.0, nbits=8,
-                        packing=packing, group_len=4,
-                    )
-                rows.append({"path": f"doc://{d}", "content": content})
-            yield pd.DataFrame(rows)
-
-    files = ids.mapInPandas(synth, schema="path string, content binary")
-    records = files.mapInPandas(_decode_batches, schema=RECORD_SCHEMA)
+    records = landed_records(spark, sf_dir, (71, 3, 1420), build)
     cells = records.select(
-        F.regexp_extract("path", r"doc://(\d+)", 1).cast("bigint").alias(
-            "doc_id"
-        ),
+        "doc_id",
         "record_number",
         "nj",
         F.posexplode("values").alias("pos", "v"),
@@ -1553,22 +1297,7 @@ def grid_grib2_reduced_bitmap_scan(spark: SparkSession, sf_dir: str) -> DataFram
         .agg(
             F.min("nj").alias("nj"),
             F.count(F.lit(1)).cast("bigint").alias("n_cells"),
-            F.count(F.when(_present("v"), F.lit(1)))
-            .cast("bigint")
-            .alias("n_present"),
-            F.sum(F.when(_present("v"), F.col("v")).otherwise(F.lit(0.0)))
-            .cast("bigint")
-            .alias("vsum"),
-            F.sum(
-                F.when(_present("v"), F.col("v") * F.col("pos")).otherwise(
-                    F.lit(0.0)
-                )
-            )
-            .cast("bigint")
-            .alias("wsum"),
-            F.sum(F.when(~_present("v"), F.col("pos")).otherwise(F.lit(0)))
-            .cast("bigint")
-            .alias("misspos"),
+            *present_stats(),
         )
         .orderBy("doc_id", "record_number")
     )
@@ -1643,59 +1372,36 @@ def grid_grib2_runlength_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     archives (radar mosaics at 1 km), and the level table rides in
     section 5 per record, no side catalog.
     """
-    from typing import Iterator
-
     import numpy as np
-    import pandas as pd
 
     from ..grid.grib2 import encode_grib2_message
-    from ..sources.grib_source import RECORD_SCHEMA, _decode_batches
 
     tbl = [5, 10, 20, 40, 80, 160]
 
-    ids = (
-        table(spark, sf_dir, "documents")
-        .filter((F.col("doc_id") % 73 == 9) & (F.col("doc_id") < 1460))
-        .select("doc_id")
-    )
+    def build(d: int) -> bytes:
+        ni, nj = 10 + d % 5, 6 + d % 3
+        pos = np.arange(ni * nj)
+        lv = np.where((d + pos) % 7 < 3, 0, 1 + ((d * 3 + pos // 5) % 6))
+        v = np.where(
+            lv == 0,
+            np.nan,
+            np.array([np.nan] + tbl)[lv] / 10.0,
+        ).reshape(nj, ni)
+        return encode_grib2_message(
+            v,
+            packing="runlength",
+            rle_table=tbl,
+            nbits=4,
+            decimal_scale=1,
+            radar=dict(
+                lat=36.0, lon=140.0, elevation=50,
+                site_id="RJTD", site_number=100 + d % 50,
+            ),
+        )
 
-    def synth(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                ni, nj = 10 + d % 5, 6 + d % 3
-                pos = np.arange(ni * nj)
-                lv = np.where(
-                    (d + pos) % 7 < 3,
-                    0,
-                    1 + ((d * 3 + pos // 5) % 6),
-                )
-                v = np.where(
-                    lv == 0,
-                    np.nan,
-                    np.array([np.nan] + tbl)[lv] / 10.0,
-                ).reshape(nj, ni)
-                msg = encode_grib2_message(
-                    v,
-                    packing="runlength",
-                    rle_table=tbl,
-                    nbits=4,
-                    decimal_scale=1,
-                    radar=dict(
-                        lat=36.0, lon=140.0, elevation=50,
-                        site_id="RJTD", site_number=100 + d % 50,
-                    ),
-                )
-                rows.append({"path": f"doc://{d}", "content": msg})
-            yield pd.DataFrame(rows)
-
-    files = ids.mapInPandas(synth, schema="path string, content binary")
-    records = files.mapInPandas(_decode_batches, schema=RECORD_SCHEMA)
+    records = landed_records(spark, sf_dir, (73, 9, 1460), build)
     cells = records.select(
-        F.regexp_extract("path", r"doc://(\d+)", 1).cast("bigint").alias(
-            "doc_id"
-        ),
+        "doc_id",
         "record_number",
         "product_template",
         "radar_site_number",
@@ -1793,59 +1499,38 @@ def grid_grib2_reforecast_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     predicate ("only the v12 runs") on the landed archive, not a
     re-decode.
     """
-    from typing import Iterator
-
     import numpy as np
-    import pandas as pd
 
     from ..grid.grib2 import encode_grib2_message
-    from ..sources.grib_source import RECORD_SCHEMA, _decode_batches
 
-    ids = (
-        table(spark, sf_dir, "documents")
-        .filter((F.col("doc_id") % 79 == 15) & (F.col("doc_id") < 1580))
-        .select("doc_id")
-    )
+    def build(d: int) -> bytes:
+        ni, nj = 4 + d % 3, 3 + d % 2
+        pos = np.arange(ni * nj)
+        mv = (2011 + d % 10, 1 + d % 12, 1 + d % 28, d % 24, 0, 0)
+        ens = {"type": 3, "member": 1 + d % 10, "size": 11}
+        stat = {
+            "process": 1,
+            "interval_end": (2020, 1 + d % 12, 4, 6, 0),
+            "range_hours": 6,
+        }
+        content = b""
+        for r, extra in enumerate(({}, {"statistical": stat})):
+            v = (
+                20 + ((d * 7 + r * 13 + pos * 3) % 60)
+            ).astype(np.float64).reshape(nj, ni)
+            content += encode_grib2_message(
+                v,
+                nbits=8,
+                reference_value=20.0,
+                ensemble=ens,
+                model_version=mv,
+                **extra,
+            )
+        return content
 
-    def synth(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                ni, nj = 4 + d % 3, 3 + d % 2
-                pos = np.arange(ni * nj)
-                mv = (
-                    2011 + d % 10, 1 + d % 12, 1 + d % 28, d % 24, 0, 0
-                )
-                ens = {"type": 3, "member": 1 + d % 10, "size": 11}
-                stat = {
-                    "process": 1,
-                    "interval_end": (2020, 1 + d % 12, 4, 6, 0),
-                    "range_hours": 6,
-                }
-                content = b""
-                for r, extra in enumerate(({}, {"statistical": stat})):
-                    v = (
-                        20 + ((d * 7 + r * 13 + pos * 3) % 60)
-                    ).astype(np.float64).reshape(nj, ni)
-                    content += encode_grib2_message(
-                        v,
-                        nbits=8,
-                        reference_value=20.0,
-                        ensemble=ens,
-                        model_version=mv,
-                        **extra,
-                    )
-                rows.append({"path": f"doc://{d}", "content": content})
-            yield pd.DataFrame(rows)
-
-    files = ids.mapInPandas(synth, schema="path string, content binary")
-    records = files.mapInPandas(_decode_batches, schema=RECORD_SCHEMA)
-    zero = F.lit(0).cast("bigint")
+    records = landed_records(spark, sf_dir, (79, 15, 1580), build)
     return records.select(
-        F.regexp_extract("path", r"doc://(\d+)", 1).cast("bigint").alias(
-            "doc_id"
-        ),
+        "doc_id",
         "record_number",
         "product_template",
         "ensemble_member",
@@ -1854,7 +1539,5 @@ def grid_grib2_reforecast_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         "statistical_process",
         "interval_end",
         F.size("values").cast("bigint").alias("n_cells"),
-        F.aggregate(
-            "values", zero, lambda a, x: a + x.cast("bigint")
-        ).alias("vsum"),
+        vsum(),
     ).orderBy("doc_id", "record_number")

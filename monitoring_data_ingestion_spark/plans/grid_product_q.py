@@ -4,17 +4,21 @@ cluster / probability / percentile family, satellite and radar
 products, forecast-lead and layer surfaces, wgrib2-style -match
 selection and edition-1 Gaussian grids.  Split out of the former
 monolithic plans/grid_q.py in r16 — every registry name and oracle is
-unchanged."""
+unchanged.
+
+The gate → archive synth → decode scaffold and the shared witness
+columns live in plans/grid_common.py (``landed_records`` /
+``doc_archives``); each query here owns only its archive ``build`` function
+and its witness arithmetic."""
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.readers import table
 from .catalog import query
-from .grid_codec_q import _gauss_lat_values_sql  # noqa: F401
-from .grid_common import _is_present, _present  # noqa: F401
+from .grid_codec_q import _gauss_lat_values_sql
+from .grid_common import doc_id, landed_records, vsum, wsum
 
 @query(
     "grid_grib2_multifield_scan",
@@ -72,69 +76,44 @@ def grid_grib2_multifield_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     one Arrow stage; header-only field splitting costs section slicing,
     never value bits; only per-record statistic rows shuffle.
     """
-    from typing import Iterator
-
     import numpy as np
-    import pandas as pd
 
     from ..grid.grib2 import encode_grib2_message, merge_grib2_fields
-    from ..sources.grib_source import RECORD_SCHEMA, _decode_batches
 
-    ids = (
-        table(spark, sf_dir, "documents")
-        .filter((F.col("doc_id") % 37 == 4) & (F.col("doc_id") < 666))
-        .select("doc_id")
-    )
+    def build(d: int) -> bytes:
+        def field(r: int, ni: int, nj: int) -> np.ndarray:
+            i = np.arange(ni)[None, :]
+            j = np.arange(nj)[:, None]
+            return (
+                140 + 2 * ((d * 9 + r * 17 + i * 5 + j * 3) % 50)
+            ).astype(np.float64)
 
-    def synth(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-
-                def field(r: int, ni: int, nj: int) -> np.ndarray:
-                    i = np.arange(ni)[None, :]
-                    j = np.arange(nj)[:, None]
-                    return (
-                        140 + 2 * ((d * 9 + r * 17 + i * 5 + j * 3) % 50)
-                    ).astype(np.float64)
-
-                ni, nj = 5 + d % 3, 4 + d % 2
-                packings = ("simple", "complex_diff", "png")
-                multi = merge_grib2_fields(
-                    [
-                        encode_grib2_message(
-                            field(r, ni, nj), category=0, number=r + 1,
-                            reference_value=140.0, binary_scale=1, nbits=8,
-                            packing=packings[r],
-                        )
-                        for r in range(3)
-                    ]
-                )
-                single = encode_grib2_message(
-                    field(3, 3 + d % 2, 3), category=0, number=4,
+        ni, nj = 5 + d % 3, 4 + d % 2
+        packings = ("simple", "complex_diff", "png")
+        multi = merge_grib2_fields(
+            [
+                encode_grib2_message(
+                    field(r, ni, nj), category=0, number=r + 1,
                     reference_value=140.0, binary_scale=1, nbits=8,
+                    packing=packings[r],
                 )
-                rows.append({"path": f"doc://{d}", "content": multi + single})
-            yield pd.DataFrame(rows)
+                for r in range(3)
+            ]
+        )
+        single = encode_grib2_message(
+            field(3, 3 + d % 2, 3), category=0, number=4,
+            reference_value=140.0, binary_scale=1, nbits=8,
+        )
+        return multi + single
 
-    files = ids.mapInPandas(synth, schema="path string, content binary")
-    records = files.mapInPandas(_decode_batches, schema=RECORD_SCHEMA)
-    weighted = F.zip_with(
-        "values",
-        F.sequence(F.lit(0), F.size("values") - 1),
-        lambda v, idx: v.cast("bigint") * idx.cast("bigint"),
-    )
-    zero = F.lit(0).cast("bigint")
+    records = landed_records(spark, sf_dir, (37, 4, 666), build)
     return records.select(
-        F.regexp_extract("path", r"doc://(\d+)", 1).cast("bigint").alias("doc_id"),
+        "doc_id",
         "record_number",
         "number",
         F.size("values").cast("bigint").alias("n_cells"),
-        F.aggregate(
-            "values", zero, lambda a, x: a + x.cast("bigint")
-        ).alias("vsum"),
-        F.aggregate(weighted, zero, lambda a, x: a + x).alias("wsum"),
+        vsum(),
+        wsum(),
     ).orderBy("doc_id", "record_number")
 
 
@@ -204,79 +183,53 @@ def grid_grib2_ensemble_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the landing posture — submessage splitting is section
     slicing; per-record statistic rows shuffle; nothing else moves.
     """
-    from typing import Iterator
-
     import numpy as np
-    import pandas as pd
 
     from ..grid.grib2 import encode_grib2_message, merge_grib2_fields
-    from ..sources.grib_source import RECORD_SCHEMA, _decode_batches
 
-    ids = (
-        table(spark, sf_dir, "documents")
-        .filter((F.col("doc_id") % 43 == 11) & (F.col("doc_id") < 645))
-        .select("doc_id")
-    )
+    def build(d: int) -> bytes:
+        ni, nj = 5 + d % 2, 4 + d % 3
+        i = np.arange(ni)[None, :]
+        j = np.arange(nj)[:, None]
 
-    def synth(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                ni, nj = 5 + d % 2, 4 + d % 3
-                i = np.arange(ni)[None, :]
-                j = np.arange(nj)[:, None]
+        def field(r: int) -> np.ndarray:
+            return (
+                125 + 2 * ((d * 11 + r * 7 + i * 3 + j * 13) % 55)
+            ).astype(np.float64)
 
-                def field(r: int) -> np.ndarray:
-                    return (
-                        125 + 2 * ((d * 11 + r * 7 + i * 3 + j * 13) % 55)
-                    ).astype(np.float64)
+        msgs = [
+            encode_grib2_message(
+                field(m), category=0, number=1,
+                reference_value=125.0, binary_scale=1, nbits=8,
+                ensemble=dict(type=3, member=m, size=3),
+            )
+            for m in range(3)
+        ]
+        msgs.append(
+            encode_grib2_message(
+                field(3), category=0, number=1,
+                reference_value=125.0, binary_scale=1, nbits=8,
+                ensemble=dict(type=0, member=0, size=3),
+                statistical=dict(
+                    process=1,
+                    interval_end=(2020, 1 + d % 12, 1, 6, 0),
+                    range_hours=6,
+                ),
+            )
+        )
+        return merge_grib2_fields(msgs)
 
-                msgs = [
-                    encode_grib2_message(
-                        field(m), category=0, number=1,
-                        reference_value=125.0, binary_scale=1, nbits=8,
-                        ensemble=dict(type=3, member=m, size=3),
-                    )
-                    for m in range(3)
-                ]
-                msgs.append(
-                    encode_grib2_message(
-                        field(3), category=0, number=1,
-                        reference_value=125.0, binary_scale=1, nbits=8,
-                        ensemble=dict(type=0, member=0, size=3),
-                        statistical=dict(
-                            process=1,
-                            interval_end=(2020, 1 + d % 12, 1, 6, 0),
-                            range_hours=6,
-                        ),
-                    )
-                )
-                rows.append(
-                    {"path": f"doc://{d}", "content": merge_grib2_fields(msgs)}
-                )
-            yield pd.DataFrame(rows)
-
-    files = ids.mapInPandas(synth, schema="path string, content binary")
-    records = files.mapInPandas(_decode_batches, schema=RECORD_SCHEMA)
-    weighted = F.zip_with(
-        "values",
-        F.sequence(F.lit(0), F.size("values") - 1),
-        lambda v, idx: v.cast("bigint") * idx.cast("bigint"),
-    )
-    zero = F.lit(0).cast("bigint")
+    records = landed_records(spark, sf_dir, (43, 11, 645), build)
     return records.select(
-        F.regexp_extract("path", r"doc://(\d+)", 1).cast("bigint").alias("doc_id"),
+        "doc_id",
         "record_number",
         "ensemble_member",
         "ensemble_size",
         "statistical_process",
         "interval_end",
         F.size("values").cast("bigint").alias("n_cells"),
-        F.aggregate(
-            "values", zero, lambda a, x: a + x.cast("bigint")
-        ).alias("vsum"),
-        F.aggregate(weighted, zero, lambda a, x: a + x).alias("wsum"),
+        vsum(),
+        wsum(),
     ).orderBy("doc_id", "record_number")
 
 
@@ -339,79 +292,55 @@ def grid_grib2_derived_ensemble_scan(spark: SparkSession, sf_dir: str) -> DataFr
     Scale: the landing posture — submessage splitting is section
     slicing; only per-record statistic rows shuffle.
     """
-    from typing import Iterator
-
     import numpy as np
-    import pandas as pd
 
     from ..grid.grib2 import encode_grib2_message, merge_grib2_fields
-    from ..sources.grib_source import RECORD_SCHEMA, _decode_batches
 
-    ids = (
-        table(spark, sf_dir, "documents")
-        .filter((F.col("doc_id") % 47 == 13) & (F.col("doc_id") < 645))
-        .select("doc_id")
-    )
+    def build(d: int) -> bytes:
+        ni, nj = 5 + d % 3, 3 + d % 2
+        i = np.arange(ni)[None, :]
+        j = np.arange(nj)[:, None]
 
-    def synth(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                ni, nj = 5 + d % 3, 3 + d % 2
-                i = np.arange(ni)[None, :]
-                j = np.arange(nj)[:, None]
+        def field(r: int) -> np.ndarray:
+            return (
+                120 + 2 * ((d * 5 + r * 9 + i * 7 + j * 3) % 50)
+            ).astype(np.float64)
 
-                def field(r: int) -> np.ndarray:
-                    return (
-                        120 + 2 * ((d * 5 + r * 9 + i * 7 + j * 3) % 50)
-                    ).astype(np.float64)
+        msgs = [
+            encode_grib2_message(
+                field(m), category=0, number=1,
+                reference_value=120.0, binary_scale=1, nbits=8,
+                ensemble=dict(type=3, member=m, size=2),
+            )
+            for m in range(2)
+        ]
+        msgs.append(
+            encode_grib2_message(
+                field(2), category=0, number=1,
+                reference_value=120.0, binary_scale=1, nbits=8,
+                derived=dict(type=0, size=2),  # unweighted mean
+            )
+        )
+        msgs.append(
+            encode_grib2_message(
+                field(3), category=0, number=1,
+                reference_value=120.0, binary_scale=1, nbits=8,
+                derived=dict(type=4, size=2),  # spread
+                statistical=dict(
+                    process=0,
+                    interval_end=(2020, 1 + d % 12, 2, 18, 0),
+                    range_hours=6,
+                    # n = 2: spread of HOURLY MAXIMA — the
+                    # compound form time_range_count surfaces
+                    inner_specs=[dict(process=2, range_hours=1)],
+                ),
+            )
+        )
+        return merge_grib2_fields(msgs)
 
-                msgs = [
-                    encode_grib2_message(
-                        field(m), category=0, number=1,
-                        reference_value=120.0, binary_scale=1, nbits=8,
-                        ensemble=dict(type=3, member=m, size=2),
-                    )
-                    for m in range(2)
-                ]
-                msgs.append(
-                    encode_grib2_message(
-                        field(2), category=0, number=1,
-                        reference_value=120.0, binary_scale=1, nbits=8,
-                        derived=dict(type=0, size=2),  # unweighted mean
-                    )
-                )
-                msgs.append(
-                    encode_grib2_message(
-                        field(3), category=0, number=1,
-                        reference_value=120.0, binary_scale=1, nbits=8,
-                        derived=dict(type=4, size=2),  # spread
-                        statistical=dict(
-                            process=0,
-                            interval_end=(2020, 1 + d % 12, 2, 18, 0),
-                            range_hours=6,
-                            # n = 2: spread of HOURLY MAXIMA — the
-                            # compound form time_range_count surfaces
-                            inner_specs=[dict(process=2, range_hours=1)],
-                        ),
-                    )
-                )
-                rows.append(
-                    {"path": f"doc://{d}", "content": merge_grib2_fields(msgs)}
-                )
-            yield pd.DataFrame(rows)
-
-    files = ids.mapInPandas(synth, schema="path string, content binary")
-    records = files.mapInPandas(_decode_batches, schema=RECORD_SCHEMA)
-    weighted = F.zip_with(
-        "values",
-        F.sequence(F.lit(0), F.size("values") - 1),
-        lambda v, idx: v.cast("bigint") * idx.cast("bigint"),
-    )
-    zero = F.lit(0).cast("bigint")
+    records = landed_records(spark, sf_dir, (47, 13, 645), build)
     return records.select(
-        F.regexp_extract("path", r"doc://(\d+)", 1).cast("bigint").alias("doc_id"),
+        "doc_id",
         "record_number",
         "ensemble_member",
         "derived_forecast",
@@ -420,10 +349,8 @@ def grid_grib2_derived_ensemble_scan(spark: SparkSession, sf_dir: str) -> DataFr
         "time_range_count",
         "interval_end",
         F.size("values").cast("bigint").alias("n_cells"),
-        F.aggregate(
-            "values", zero, lambda a, x: a + x.cast("bigint")
-        ).alias("vsum"),
-        F.aggregate(weighted, zero, lambda a, x: a + x).alias("wsum"),
+        vsum(),
+        wsum(),
     ).orderBy("doc_id", "record_number")
 
 
@@ -499,117 +426,93 @@ def grid_grib2_cluster_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the landing posture — submessage splitting is section
     slicing; only per-record statistic rows shuffle.
     """
-    from typing import Iterator
-
     import numpy as np
-    import pandas as pd
 
     from ..grid.grib2 import encode_grib2_message, merge_grib2_fields
-    from ..sources.grib_source import RECORD_SCHEMA, _decode_batches
 
-    ids = (
-        table(spark, sf_dir, "documents")
-        .filter((F.col("doc_id") % 43 == 11) & (F.col("doc_id") < 645))
-        .select("doc_id")
-    )
+    def build(d: int) -> bytes:
+        ni, nj = 4 + d % 3, 3 + d % 2
+        i = np.arange(ni)[None, :]
+        j = np.arange(nj)[:, None]
 
-    def synth(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                ni, nj = 4 + d % 3, 3 + d % 2
-                i = np.arange(ni)[None, :]
-                j = np.arange(nj)[:, None]
+        def field(r: int) -> np.ndarray:
+            return (
+                80 + 2 * ((d * 7 + r * 5 + i * 3 + j * 11) % 45)
+            ).astype(np.float64)
 
-                def field(r: int) -> np.ndarray:
-                    return (
-                        80 + 2 * ((d * 7 + r * 5 + i * 3 + j * 11) % 45)
-                    ).astype(np.float64)
+        enc = dict(
+            category=0, number=1,
+            reference_value=80.0, binary_scale=1, nbits=8,
+        )
+        size = 10 + d % 5
+        msgs = [
+            encode_grib2_message(
+                field(0),
+                ensemble=dict(type=3, member=0, size=size),
+                **enc,
+            ),
+            encode_grib2_message(
+                field(1),
+                derived=dict(type=0, size=size),
+                **enc,
+            ),
+            encode_grib2_message(
+                field(2),
+                cluster=dict(
+                    type=2, size=size,
+                    identifier=1 + d % 5, total=3 + d % 3,
+                    method=d % 2,
+                    members=list(range(2 + d % 3)),
+                    stddev=(1, 10 + d % 20),
+                    bounds=(
+                        60_000_000, 30_000_000,
+                        40_000_000, -10_000_000,
+                    ),
+                ),
+                **enc,
+            ),
+            encode_grib2_message(
+                field(3),
+                cluster=dict(
+                    type=0, size=size,
+                    identifier=2 + d % 4, total=3 + d % 3,
+                    method=1,
+                    members=list(range(1 + d % 2)),
+                    distance=(0, 3 + d % 9),
+                    center=(45_000_000, 10_000_000, 500_000),
+                ),
+                **enc,
+            ),
+            # 4.13: cluster + statistical interval — the
+            # statistical block rides AFTER the NC-long member
+            # list (the only variable-offset 4.x form), so the
+            # oracle's interval-end pin proves the offset walk
+            encode_grib2_message(
+                field(4),
+                cluster=dict(
+                    type=4, size=size,
+                    identifier=3 + d % 3, total=3 + d % 3,
+                    method=0,
+                    members=list(range(2 + d % 2)),
+                    stddev=(0, 5 + d % 7),
+                    bounds=(
+                        55_000_000, 25_000_000,
+                        35_000_000, -5_000_000,
+                    ),
+                ),
+                statistical=dict(
+                    process=0,
+                    interval_end=(2020, 1 + d % 12, 3, 6, 0),
+                    range_hours=12,
+                ),
+                **enc,
+            ),
+        ]
+        return merge_grib2_fields(msgs)
 
-                enc = dict(
-                    category=0, number=1,
-                    reference_value=80.0, binary_scale=1, nbits=8,
-                )
-                size = 10 + d % 5
-                msgs = [
-                    encode_grib2_message(
-                        field(0),
-                        ensemble=dict(type=3, member=0, size=size),
-                        **enc,
-                    ),
-                    encode_grib2_message(
-                        field(1),
-                        derived=dict(type=0, size=size),
-                        **enc,
-                    ),
-                    encode_grib2_message(
-                        field(2),
-                        cluster=dict(
-                            type=2, size=size,
-                            identifier=1 + d % 5, total=3 + d % 3,
-                            method=d % 2,
-                            members=list(range(2 + d % 3)),
-                            stddev=(1, 10 + d % 20),
-                            bounds=(
-                                60_000_000, 30_000_000,
-                                40_000_000, -10_000_000,
-                            ),
-                        ),
-                        **enc,
-                    ),
-                    encode_grib2_message(
-                        field(3),
-                        cluster=dict(
-                            type=0, size=size,
-                            identifier=2 + d % 4, total=3 + d % 3,
-                            method=1,
-                            members=list(range(1 + d % 2)),
-                            distance=(0, 3 + d % 9),
-                            center=(45_000_000, 10_000_000, 500_000),
-                        ),
-                        **enc,
-                    ),
-                    # 4.13: cluster + statistical interval — the
-                    # statistical block rides AFTER the NC-long member
-                    # list (the only variable-offset 4.x form), so the
-                    # oracle's interval-end pin proves the offset walk
-                    encode_grib2_message(
-                        field(4),
-                        cluster=dict(
-                            type=4, size=size,
-                            identifier=3 + d % 3, total=3 + d % 3,
-                            method=0,
-                            members=list(range(2 + d % 2)),
-                            stddev=(0, 5 + d % 7),
-                            bounds=(
-                                55_000_000, 25_000_000,
-                                35_000_000, -5_000_000,
-                            ),
-                        ),
-                        statistical=dict(
-                            process=0,
-                            interval_end=(2020, 1 + d % 12, 3, 6, 0),
-                            range_hours=12,
-                        ),
-                        **enc,
-                    ),
-                ]
-                rows.append(
-                    {"path": f"doc://{d}", "content": merge_grib2_fields(msgs)}
-                )
-            yield pd.DataFrame(rows)
-
-    files = ids.mapInPandas(synth, schema="path string, content binary")
-    records = files.mapInPandas(_decode_batches, schema=RECORD_SCHEMA)
-    weighted = F.zip_with(
-        "values",
-        F.sequence(F.lit(0), F.size("values") - 1),
-        lambda v, idx: v.cast("bigint") * idx.cast("bigint"),
-    )
-    zero = F.lit(0).cast("bigint")
+    records = landed_records(spark, sf_dir, (43, 11, 645), build)
     return records.select(
-        F.regexp_extract("path", r"doc://(\d+)", 1).cast("bigint").alias("doc_id"),
+        "doc_id",
         "record_number",
         "ensemble_member",
         "derived_forecast",
@@ -621,10 +524,8 @@ def grid_grib2_cluster_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         "interval_end",
         "time_range_count",
         F.size("values").cast("bigint").alias("n_cells"),
-        F.aggregate(
-            "values", zero, lambda a, x: a + x.cast("bigint")
-        ).alias("vsum"),
-        F.aggregate(weighted, zero, lambda a, x: a + x).alias("wsum"),
+        vsum(),
+        wsum(),
     ).orderBy("doc_id", "record_number")
 
 
@@ -694,65 +595,47 @@ def grid_grib_quarantine_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     decode stage, only statistic rows shuffle) — quarantine adds a
     per-record try/except, no extra pass and no extra shuffle.
     """
-    from typing import Iterator
-
     import numpy as np
-    import pandas as pd
 
     from ..grid.grib2 import encode_grib2_message
-    from ..sources.grib_source import RECORD_SCHEMA, _decode_batches
 
-    ids = (
-        table(spark, sf_dir, "documents")
-        .filter((F.col("doc_id") % 59 == 23) & (F.col("doc_id") < 645))
-        .select("doc_id")
-    )
+    def build(d: int) -> bytes:
+        ni, nj = 4 + d % 3, 3 + d % 2
+        i = np.arange(ni)[None, :]
+        j = np.arange(nj)[:, None]
 
-    def synth(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                ni, nj = 4 + d % 3, 3 + d % 2
-                i = np.arange(ni)[None, :]
-                j = np.arange(nj)[:, None]
+        def field(r: int) -> np.ndarray:
+            return (
+                40 + 2 * ((d * 11 + r * 3 + i * 7 + j * 5) % 30)
+            ).astype(np.float64)
 
-                def field(r: int) -> np.ndarray:
-                    return (
-                        40 + 2 * ((d * 11 + r * 3 + i * 7 + j * 5) % 30)
-                    ).astype(np.float64)
+        enc = dict(
+            category=0, number=1,
+            reference_value=40.0, binary_scale=1, nbits=8,
+        )
+        msgs = [encode_grib2_message(field(r), **enc) for r in range(3)]
+        # record 2: PDT word patched to the RESERVED 4.65534
+        # (never assignable — the fixture's reject template is
+        # now PERMANENT; its r14 pick 4.30 and r15 pick 4.40
+        # both since started decoding) — the decode must
+        # quarantine it and CONTINUE
+        bad = bytearray(msgs[1])
+        pos = 16
+        while bad[pos + 4] != 4:
+            pos += int.from_bytes(bad[pos : pos + 4], "big")
+        bad[pos + 7] = 0xFF
+        bad[pos + 8] = 0xFE
+        # record 4: a torn trailing message (magic present,
+        # body chopped) — framing quarantine ends the file
+        torn = msgs[2][: len(msgs[2]) - 9]
+        return msgs[0] + bytes(bad) + msgs[2] + torn
 
-                enc = dict(
-                    category=0, number=1,
-                    reference_value=40.0, binary_scale=1, nbits=8,
-                )
-                msgs = [encode_grib2_message(field(r), **enc) for r in range(3)]
-                # record 2: PDT word patched to the RESERVED 4.65534
-                # (never assignable — the fixture's reject template is
-                # now PERMANENT; its r14 pick 4.30 and r15 pick 4.40
-                # both since started decoding) — the decode must
-                # quarantine it and CONTINUE
-                bad = bytearray(msgs[1])
-                pos = 16
-                while bad[pos + 4] != 4:
-                    pos += int.from_bytes(bad[pos : pos + 4], "big")
-                bad[pos + 7] = 0xFF
-                bad[pos + 8] = 0xFE
-                # record 4: a torn trailing message (magic present,
-                # body chopped) — framing quarantine ends the file
-                torn = msgs[2][: len(msgs[2]) - 9]
-                content = msgs[0] + bytes(bad) + msgs[2] + torn
-                rows.append({"path": f"doc://{d}", "content": content})
-            yield pd.DataFrame(rows)
-
-    files = ids.mapInPandas(synth, schema="path string, content binary")
-    records = files.mapInPandas(
-        lambda it: _decode_batches(it, on_error="quarantine"),
-        schema=RECORD_SCHEMA,
+    records = landed_records(
+        spark, sf_dir, (59, 23, 645), build, on_error="quarantine"
     )
     zero = F.lit(0).cast("bigint")
     return records.select(
-        F.regexp_extract("path", r"doc://(\d+)", 1).cast("bigint").alias("doc_id"),
+        "doc_id",
         "record_number",
         F.col("error").isNotNull().cast("bigint").alias("is_error"),
         F.when(F.col("error").startswith("record framing"), "framing")
@@ -824,75 +707,49 @@ def grid_grib2_error_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the landing posture — submessage splitting is section
     slicing; only per-record statistic rows shuffle.
     """
-    from typing import Iterator
-
     import numpy as np
-    import pandas as pd
 
     from ..grid.grib2 import encode_grib2_message, merge_grib2_fields
-    from ..sources.grib_source import RECORD_SCHEMA, _decode_batches
 
-    ids = (
-        table(spark, sf_dir, "documents")
-        .filter((F.col("doc_id") % 53 == 17) & (F.col("doc_id") < 645))
-        .select("doc_id")
-    )
+    def build(d: int) -> bytes:
+        ni, nj = 4 + d % 3, 3 + d % 2
+        i = np.arange(ni)[None, :]
+        j = np.arange(nj)[:, None]
 
-    def synth(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                ni, nj = 4 + d % 3, 3 + d % 2
-                i = np.arange(ni)[None, :]
-                j = np.arange(nj)[:, None]
+        def field(r: int) -> np.ndarray:
+            return (
+                60 + 2 * ((d * 3 + r * 7 + i * 5 + j * 9) % 40)
+            ).astype(np.float64)
 
-                def field(r: int) -> np.ndarray:
-                    return (
-                        60 + 2 * ((d * 3 + r * 7 + i * 5 + j * 9) % 40)
-                    ).astype(np.float64)
+        enc = dict(
+            category=0, number=1,
+            reference_value=60.0, binary_scale=1, nbits=8,
+        )
+        msgs = [
+            encode_grib2_message(field(0), **enc),
+            encode_grib2_message(field(1), error=True, **enc),
+            encode_grib2_message(
+                field(2),
+                statistical=dict(
+                    process=1,
+                    interval_end=(2020, 1 + d % 12, 2, 6, 0),
+                    range_hours=6,
+                ),
+                **enc,
+            ),
+        ]
+        return merge_grib2_fields(msgs)
 
-                enc = dict(
-                    category=0, number=1,
-                    reference_value=60.0, binary_scale=1, nbits=8,
-                )
-                msgs = [
-                    encode_grib2_message(field(0), **enc),
-                    encode_grib2_message(field(1), error=True, **enc),
-                    encode_grib2_message(
-                        field(2),
-                        statistical=dict(
-                            process=1,
-                            interval_end=(2020, 1 + d % 12, 2, 6, 0),
-                            range_hours=6,
-                        ),
-                        **enc,
-                    ),
-                ]
-                rows.append(
-                    {"path": f"doc://{d}", "content": merge_grib2_fields(msgs)}
-                )
-            yield pd.DataFrame(rows)
-
-    files = ids.mapInPandas(synth, schema="path string, content binary")
-    records = files.mapInPandas(_decode_batches, schema=RECORD_SCHEMA)
-    weighted = F.zip_with(
-        "values",
-        F.sequence(F.lit(0), F.size("values") - 1),
-        lambda v, idx: v.cast("bigint") * idx.cast("bigint"),
-    )
-    zero = F.lit(0).cast("bigint")
+    records = landed_records(spark, sf_dir, (53, 17, 645), build)
     return records.select(
-        F.regexp_extract("path", r"doc://(\d+)", 1).cast("bigint").alias("doc_id"),
+        "doc_id",
         "record_number",
         "product_template",
         "statistical_process",
         "interval_end",
         F.size("values").cast("bigint").alias("n_cells"),
-        F.aggregate(
-            "values", zero, lambda a, x: a + x.cast("bigint")
-        ).alias("vsum"),
-        F.aggregate(weighted, zero, lambda a, x: a + x).alias("wsum"),
+        vsum(),
+        wsum(),
     ).orderBy("doc_id", "record_number")
 
 
@@ -1000,79 +857,62 @@ def grid_grib2_satellite_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: identical plan shape to every landing scan — one Arrow
     decode stage, only per-record statistic rows shuffle.
     """
-    from typing import Iterator
-
     import numpy as np
-    import pandas as pd
 
     from ..grid.grib2 import encode_grib2_message
-    from ..sources.grib_source import RECORD_SCHEMA, _decode_batches
 
-    ids = (
-        table(spark, sf_dir, "documents")
-        .filter((F.col("doc_id") % 61 == 29) & (F.col("doc_id") < 645))
-        .select("doc_id")
-    )
+    def build(d: int) -> bytes:
+        ni, nj = 4 + d % 3, 3 + d % 2
+        i = np.arange(ni)[None, :]
+        j = np.arange(nj)[:, None]
 
-    def synth(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                ni, nj = 4 + d % 3, 3 + d % 2
-                i = np.arange(ni)[None, :]
-                j = np.arange(nj)[:, None]
+        def field(r: int) -> np.ndarray:
+            return (
+                40 + 2 * ((d * 7 + r * 5 + i * 3 + j * 11) % 45)
+            ).astype(np.float64)
 
-                def field(r: int) -> np.ndarray:
-                    return (
-                        40 + 2 * ((d * 7 + r * 5 + i * 3 + j * 11) % 45)
-                    ).astype(np.float64)
+        enc = dict(
+            category=4, number=7,
+            reference_value=40.0, binary_scale=1, nbits=8,
+        )
+        obs_bands = [
+            dict(
+                series=300 + d % 5,
+                number=10 + b,
+                instrument=600 + (d + b) % 7,
+                scale=(b % 3) - 1,
+                value=700 + (d % 50) + b,
+            )
+            for b in range(1 + d % 3)
+        ]
+        msgs = [
+            encode_grib2_message(
+                field(0), satellite=dict(bands=obs_bands), **enc
+            ),
+            encode_grib2_message(
+                field(1),
+                satellite=dict(
+                    simulated=True,
+                    bands=[
+                        dict(
+                            series=310,
+                            number=15,
+                            instrument=650 + d % 5,
+                            scale=0,
+                            value=900 + d % 30,
+                        )
+                    ],
+                ),
+                forecast=dict(unit=1, value=6 * (1 + d % 4)),
+                **enc,
+            ),
+            encode_grib2_message(field(2), **enc),
+        ]
+        return b"".join(msgs)
 
-                enc = dict(
-                    category=4, number=7,
-                    reference_value=40.0, binary_scale=1, nbits=8,
-                )
-                obs_bands = [
-                    dict(
-                        series=300 + d % 5,
-                        number=10 + b,
-                        instrument=600 + (d + b) % 7,
-                        scale=(b % 3) - 1,
-                        value=700 + (d % 50) + b,
-                    )
-                    for b in range(1 + d % 3)
-                ]
-                msgs = [
-                    encode_grib2_message(
-                        field(0), satellite=dict(bands=obs_bands), **enc
-                    ),
-                    encode_grib2_message(
-                        field(1),
-                        satellite=dict(
-                            simulated=True,
-                            bands=[
-                                dict(
-                                    series=310,
-                                    number=15,
-                                    instrument=650 + d % 5,
-                                    scale=0,
-                                    value=900 + d % 30,
-                                )
-                            ],
-                        ),
-                        forecast=dict(unit=1, value=6 * (1 + d % 4)),
-                        **enc,
-                    ),
-                    encode_grib2_message(field(2), **enc),
-                ]
-                rows.append({"path": f"doc://{d}", "content": b"".join(msgs)})
-            yield pd.DataFrame(rows)
-
-    files = ids.mapInPandas(synth, schema="path string, content binary")
-    records = files.mapInPandas(_decode_batches, schema=RECORD_SCHEMA)
-    zero = F.lit(0).cast("bigint")
+    records = landed_records(spark, sf_dir, (61, 29, 645), build)
     return records.select(
-        F.regexp_extract("path", r"doc://(\d+)", 1).cast("bigint").alias("doc_id"),
+        "doc_id",
         "record_number",
         "product_template",
         "satellite_bands",
@@ -1090,9 +930,7 @@ def grid_grib2_satellite_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             6,
         ).alias("wave_sum"),
         "forecast_hours",
-        F.aggregate(
-            "values", zero, lambda a, x: a + x.cast("bigint")
-        ).alias("vsum"),
+        vsum(),
     ).orderBy("doc_id", "record_number")
 
 
@@ -1187,99 +1025,82 @@ def grid_grib2_ensemble_satellite_scan(spark: SparkSession, sf_dir: str) -> Data
     Scale: identical plan shape to every landing scan — one Arrow
     decode stage, only per-record statistic rows shuffle.
     """
-    from typing import Iterator
-
     import numpy as np
-    import pandas as pd
 
     from ..grid.grib2 import encode_grib2_message
-    from ..sources.grib_source import RECORD_SCHEMA, _decode_batches
 
-    ids = (
-        table(spark, sf_dir, "documents")
-        .filter((F.col("doc_id") % 67 == 31) & (F.col("doc_id") < 700))
-        .select("doc_id")
-    )
+    def build(d: int) -> bytes:
+        ni, nj = 4 + d % 3, 3 + d % 2
+        i = np.arange(ni)[None, :]
+        j = np.arange(nj)[:, None]
 
-    def synth(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                ni, nj = 4 + d % 3, 3 + d % 2
-                i = np.arange(ni)[None, :]
-                j = np.arange(nj)[:, None]
+        def field(r: int) -> np.ndarray:
+            return (
+                30 + 2 * ((d * 5 + r * 9 + i * 7 + j * 3) % 35)
+            ).astype(np.float64)
 
-                def field(r: int) -> np.ndarray:
-                    return (
-                        30 + 2 * ((d * 5 + r * 9 + i * 7 + j * 3) % 35)
-                    ).astype(np.float64)
+        enc = dict(
+            category=4, number=9,
+            reference_value=30.0, binary_scale=1, nbits=8,
+        )
+        bands33 = [
+            dict(
+                series=300 + b,
+                number=12 + b,
+                instrument=600 + b,
+                scale=b % 2,
+                value=500 + d % 40 + 3 * b,
+            )
+            for b in range(1 + d % 2)
+        ]
+        msgs = [
+            encode_grib2_message(
+                field(0),
+                satellite=dict(simulated=True, bands=bands33),
+                ensemble=dict(type=3, member=1 + d % 5, size=10),
+                forecast=dict(unit=1, value=6 * (1 + d % 3)),
+                **enc,
+            ),
+            encode_grib2_message(
+                field(1),
+                satellite=dict(
+                    simulated=True,
+                    bands=[
+                        dict(
+                            series=310, number=20, instrument=650,
+                            scale=-1, value=90 + d % 10,
+                        )
+                    ],
+                ),
+                ensemble=dict(type=4, member=2 + d % 4, size=8),
+                forecast=dict(unit=1, value=6),
+                statistical=dict(
+                    process=1,
+                    interval_end=(2021, 1 + d % 12, 2, 6, 0),
+                    range_hours=6,
+                ),
+                **enc,
+            ),
+            encode_grib2_message(
+                field(2),
+                satellite=dict(
+                    simulated=True,
+                    bands=[
+                        dict(
+                            series=320, number=25, instrument=660,
+                            scale=0, value=777,
+                        )
+                    ],
+                ),
+                forecast=dict(unit=1, value=12),
+                **enc,
+            ),
+        ]
+        return b"".join(msgs)
 
-                enc = dict(
-                    category=4, number=9,
-                    reference_value=30.0, binary_scale=1, nbits=8,
-                )
-                bands33 = [
-                    dict(
-                        series=300 + b,
-                        number=12 + b,
-                        instrument=600 + b,
-                        scale=b % 2,
-                        value=500 + d % 40 + 3 * b,
-                    )
-                    for b in range(1 + d % 2)
-                ]
-                msgs = [
-                    encode_grib2_message(
-                        field(0),
-                        satellite=dict(simulated=True, bands=bands33),
-                        ensemble=dict(type=3, member=1 + d % 5, size=10),
-                        forecast=dict(unit=1, value=6 * (1 + d % 3)),
-                        **enc,
-                    ),
-                    encode_grib2_message(
-                        field(1),
-                        satellite=dict(
-                            simulated=True,
-                            bands=[
-                                dict(
-                                    series=310, number=20, instrument=650,
-                                    scale=-1, value=90 + d % 10,
-                                )
-                            ],
-                        ),
-                        ensemble=dict(type=4, member=2 + d % 4, size=8),
-                        forecast=dict(unit=1, value=6),
-                        statistical=dict(
-                            process=1,
-                            interval_end=(2021, 1 + d % 12, 2, 6, 0),
-                            range_hours=6,
-                        ),
-                        **enc,
-                    ),
-                    encode_grib2_message(
-                        field(2),
-                        satellite=dict(
-                            simulated=True,
-                            bands=[
-                                dict(
-                                    series=320, number=25, instrument=660,
-                                    scale=0, value=777,
-                                )
-                            ],
-                        ),
-                        forecast=dict(unit=1, value=12),
-                        **enc,
-                    ),
-                ]
-                rows.append({"path": f"doc://{d}", "content": b"".join(msgs)})
-            yield pd.DataFrame(rows)
-
-    files = ids.mapInPandas(synth, schema="path string, content binary")
-    records = files.mapInPandas(_decode_batches, schema=RECORD_SCHEMA)
-    zero = F.lit(0).cast("bigint")
+    records = landed_records(spark, sf_dir, (67, 31, 700), build)
     return records.select(
-        F.regexp_extract("path", r"doc://(\d+)", 1).cast("bigint").alias("doc_id"),
+        "doc_id",
         "record_number",
         "product_template",
         "ensemble_member",
@@ -1294,9 +1115,7 @@ def grid_grib2_ensemble_satellite_scan(spark: SparkSession, sf_dir: str) -> Data
         "forecast_hours",
         "statistical_process",
         "interval_end",
-        F.aggregate(
-            "values", zero, lambda a, x: a + x.cast("bigint")
-        ).alias("vsum"),
+        vsum(),
     ).orderBy("doc_id", "record_number")
 
 
@@ -1368,65 +1187,46 @@ def grid_grib2_radar_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: identical plan shape to every landing scan — one Arrow
     decode stage, only per-record statistic rows shuffle.
     """
-    from typing import Iterator
-
     import numpy as np
-    import pandas as pd
 
     from ..grid.grib2 import encode_grib2_message
-    from ..sources.grib_source import RECORD_SCHEMA, _decode_batches
 
-    ids = (
-        table(spark, sf_dir, "documents")
-        .filter((F.col("doc_id") % 71 == 13) & (F.col("doc_id") < 700))
-        .select("doc_id")
-    )
+    def build(d: int) -> bytes:
+        ni, nj = 4 + d % 3, 3 + d % 2
+        i = np.arange(ni)[None, :]
+        j = np.arange(nj)[:, None]
 
-    def synth(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                ni, nj = 4 + d % 3, 3 + d % 2
-                i = np.arange(ni)[None, :]
-                j = np.arange(nj)[:, None]
+        def field(r: int) -> np.ndarray:
+            return (
+                20 + ((d * 3 + r * 11 + i * 5 + j * 7) % 45)
+            ).astype(np.float64)
 
-                def field(r: int) -> np.ndarray:
-                    return (
-                        20 + ((d * 3 + r * 11 + i * 5 + j * 7) % 45)
-                    ).astype(np.float64)
+        enc = dict(reference_value=20.0, binary_scale=0, nbits=8)
+        site_id = ["KTLX", "KFWS", "KAMA", "KINX"][d % 4]
+        msgs = [
+            encode_grib2_message(
+                field(0),
+                discipline=15,
+                category=1,
+                number=195,
+                radar=dict(
+                    sites=1 + d % 4,
+                    site_id=site_id,
+                    site_number=300 + d % 50,
+                    lat_udeg=30_500_000 + (d % 20) * 1_000_000,
+                    lon_udeg=-(90_000_000 + (d % 30) * 500_000),
+                    elevation_m=100 + d % 300,
+                    mode=d % 3,
+                ),
+                **enc,
+            ),
+            encode_grib2_message(field(1), **enc),
+        ]
+        return b"".join(msgs)
 
-                enc = dict(
-                    reference_value=20.0, binary_scale=0, nbits=8,
-                )
-                site_id = ["KTLX", "KFWS", "KAMA", "KINX"][d % 4]
-                msgs = [
-                    encode_grib2_message(
-                        field(0),
-                        discipline=15,
-                        category=1,
-                        number=195,
-                        radar=dict(
-                            sites=1 + d % 4,
-                            site_id=site_id,
-                            site_number=300 + d % 50,
-                            lat_udeg=30_500_000 + (d % 20) * 1_000_000,
-                            lon_udeg=-(90_000_000 + (d % 30) * 500_000),
-                            elevation_m=100 + d % 300,
-                            mode=d % 3,
-                        ),
-                        **enc,
-                    ),
-                    encode_grib2_message(field(1), **enc),
-                ]
-                rows.append({"path": f"doc://{d}", "content": b"".join(msgs)})
-            yield pd.DataFrame(rows)
-
-    files = ids.mapInPandas(synth, schema="path string, content binary")
-    records = files.mapInPandas(_decode_batches, schema=RECORD_SCHEMA)
-    zero = F.lit(0).cast("bigint")
+    records = landed_records(spark, sf_dir, (71, 13, 700), build)
     return records.select(
-        F.regexp_extract("path", r"doc://(\d+)", 1).cast("bigint").alias("doc_id"),
+        "doc_id",
         "record_number",
         "product_template",
         "radar_sites",
@@ -1437,9 +1237,7 @@ def grid_grib2_radar_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         "radar_elevation_m",
         "radar_operating_mode",
         "forecast_hours",
-        F.aggregate(
-            "values", zero, lambda a, x: a + x.cast("bigint")
-        ).alias("vsum"),
+        vsum(),
     ).orderBy("doc_id", "record_number")
 
 
@@ -1509,80 +1307,60 @@ def grid_grib2_probability_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the landing posture — submessage splitting is section
     slicing; only per-record statistic rows shuffle.
     """
-    from typing import Iterator
-
     import numpy as np
-    import pandas as pd
 
     from ..grid.grib2 import encode_grib2_message, merge_grib2_fields
-    from ..sources.grib_source import RECORD_SCHEMA, _decode_batches
 
-    ids = (
-        table(spark, sf_dir, "documents")
-        .filter((F.col("doc_id") % 41 == 7) & (F.col("doc_id") < 645))
-        .select("doc_id")
-    )
+    def build(d: int) -> bytes:
+        ni, nj = 4 + d % 3, 3 + d % 2
+        i = np.arange(ni)[None, :]
+        j = np.arange(nj)[:, None]
 
-    def synth(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                ni, nj = 4 + d % 3, 3 + d % 2
-                i = np.arange(ni)[None, :]
-                j = np.arange(nj)[:, None]
+        def field(r: int) -> np.ndarray:
+            return (
+                50 + ((d * 13 + r * 3 + i * 5 + j * 7) % 40)
+            ).astype(np.float64)
 
-                def field(r: int) -> np.ndarray:
-                    return (
-                        50 + ((d * 13 + r * 3 + i * 5 + j * 7) % 40)
-                    ).astype(np.float64)
+        enc = dict(category=1, number=8, reference_value=50.0, nbits=8)
+        msgs = [
+            encode_grib2_message(
+                field(0), **enc,
+                probability=dict(
+                    number=0, total=4, type=3, lower=(2, 27315 + d)
+                ),
+            ),
+            encode_grib2_message(
+                field(1), **enc,
+                probability=dict(
+                    number=1, total=4, type=0,
+                    lower=(0, -(5 + d % 7)),
+                ),
+            ),
+            encode_grib2_message(
+                field(2), **enc,
+                probability=dict(
+                    number=2, total=4, type=2,
+                    lower=(1, d % 50), upper=(1, d % 50 + 25),
+                ),
+            ),
+            encode_grib2_message(
+                field(3), **enc,
+                probability=dict(
+                    number=3, total=4, type=1,
+                    upper=(-1, 2 + d % 5),
+                ),
+                statistical=dict(
+                    process=1,
+                    interval_end=(2020, 1 + d % 12, 1, 6, 0),
+                    range_hours=6,
+                ),
+            ),
+        ]
+        return merge_grib2_fields(msgs)
 
-                enc = dict(
-                    category=1, number=8, reference_value=50.0, nbits=8
-                )
-                msgs = [
-                    encode_grib2_message(
-                        field(0), **enc,
-                        probability=dict(
-                            number=0, total=4, type=3, lower=(2, 27315 + d)
-                        ),
-                    ),
-                    encode_grib2_message(
-                        field(1), **enc,
-                        probability=dict(
-                            number=1, total=4, type=0,
-                            lower=(0, -(5 + d % 7)),
-                        ),
-                    ),
-                    encode_grib2_message(
-                        field(2), **enc,
-                        probability=dict(
-                            number=2, total=4, type=2,
-                            lower=(1, d % 50), upper=(1, d % 50 + 25),
-                        ),
-                    ),
-                    encode_grib2_message(
-                        field(3), **enc,
-                        probability=dict(
-                            number=3, total=4, type=1,
-                            upper=(-1, 2 + d % 5),
-                        ),
-                        statistical=dict(
-                            process=1,
-                            interval_end=(2020, 1 + d % 12, 1, 6, 0),
-                            range_hours=6,
-                        ),
-                    ),
-                ]
-                rows.append(
-                    {"path": f"doc://{d}", "content": merge_grib2_fields(msgs)}
-                )
-            yield pd.DataFrame(rows)
-
-    files = ids.mapInPandas(synth, schema="path string, content binary")
-    records = files.mapInPandas(_decode_batches, schema=RECORD_SCHEMA)
+    records = landed_records(spark, sf_dir, (41, 7, 645), build)
     return records.select(
-        F.regexp_extract("path", r"doc://(\d+)", 1).cast("bigint").alias("doc_id"),
+        "doc_id",
         "record_number",
         "probability_type",
         "prob_lower_limit",
@@ -1591,9 +1369,7 @@ def grid_grib2_probability_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         "interval_end",
         "time_range_count",
         F.size("values").cast("bigint").alias("n_cells"),
-        F.aggregate(
-            "values", F.lit(0).cast("bigint"), lambda a, x: a + x.cast("bigint")
-        ).alias("vsum"),
+        vsum(),
     ).orderBy("doc_id", "record_number")
 
 
@@ -1651,69 +1427,47 @@ def grid_grib2_percentile_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the landing posture — submessage splitting is section
     slicing; only per-record statistic rows shuffle.
     """
-    from typing import Iterator
-
     import numpy as np
-    import pandas as pd
 
     from ..grid.grib2 import encode_grib2_message, merge_grib2_fields
-    from ..sources.grib_source import RECORD_SCHEMA, _decode_batches
 
-    ids = (
-        table(spark, sf_dir, "documents")
-        .filter((F.col("doc_id") % 37 == 5) & (F.col("doc_id") < 645))
-        .select("doc_id")
-    )
+    def build(d: int) -> bytes:
+        ni, nj = 4 + d % 2, 3 + d % 3
+        i = np.arange(ni)[None, :]
+        j = np.arange(nj)[:, None]
 
-    def synth(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                ni, nj = 4 + d % 2, 3 + d % 3
-                i = np.arange(ni)[None, :]
-                j = np.arange(nj)[:, None]
+        def field(r: int) -> np.ndarray:
+            return (
+                80 + ((d * 7 + r * 11 + i * 3 + j * 5) % 45)
+            ).astype(np.float64)
 
-                def field(r: int) -> np.ndarray:
-                    return (
-                        80 + ((d * 7 + r * 11 + i * 3 + j * 5) % 45)
-                    ).astype(np.float64)
+        enc = dict(category=1, number=8, reference_value=80.0, nbits=8)
+        msgs = [
+            encode_grib2_message(field(r), **enc, percentile=p)
+            for r, p in ((0, 10), (1, 50), (2, 90))
+        ]
+        msgs.append(
+            encode_grib2_message(
+                field(3), **enc, percentile=75,
+                statistical=dict(
+                    process=0,
+                    interval_end=(2020, 1 + d % 12, 3, 12, 0),
+                    range_hours=24,
+                ),
+            )
+        )
+        return merge_grib2_fields(msgs)
 
-                enc = dict(
-                    category=1, number=8, reference_value=80.0, nbits=8
-                )
-                msgs = [
-                    encode_grib2_message(field(r), **enc, percentile=p)
-                    for r, p in ((0, 10), (1, 50), (2, 90))
-                ]
-                msgs.append(
-                    encode_grib2_message(
-                        field(3), **enc, percentile=75,
-                        statistical=dict(
-                            process=0,
-                            interval_end=(2020, 1 + d % 12, 3, 12, 0),
-                            range_hours=24,
-                        ),
-                    )
-                )
-                rows.append(
-                    {"path": f"doc://{d}", "content": merge_grib2_fields(msgs)}
-                )
-            yield pd.DataFrame(rows)
-
-    files = ids.mapInPandas(synth, schema="path string, content binary")
-    records = files.mapInPandas(_decode_batches, schema=RECORD_SCHEMA)
+    records = landed_records(spark, sf_dir, (37, 5, 645), build)
     return records.select(
-        F.regexp_extract("path", r"doc://(\d+)", 1).cast("bigint").alias("doc_id"),
+        "doc_id",
         "record_number",
         "percentile_value",
         "statistical_process",
         "interval_end",
         "time_range_count",
         F.size("values").cast("bigint").alias("n_cells"),
-        F.aggregate(
-            "values", F.lit(0).cast("bigint"), lambda a, x: a + x.cast("bigint")
-        ).alias("vsum"),
+        vsum(),
     ).orderBy("doc_id", "record_number")
 
 
@@ -1769,66 +1523,46 @@ def grid_grib2_forecast_lead_scan(spark: SparkSession, sf_dir: str) -> DataFrame
     Scale: the landing posture — submessage splitting is section
     slicing; only per-record statistic rows shuffle.
     """
-    from typing import Iterator
-
     import numpy as np
-    import pandas as pd
 
     from ..grid.grib2 import encode_grib2_message, merge_grib2_fields
-    from ..sources.grib_source import RECORD_SCHEMA, _decode_batches
 
-    ids = (
-        table(spark, sf_dir, "documents")
-        .filter((F.col("doc_id") % 53 == 17) & (F.col("doc_id") < 645))
-        .select("doc_id")
-    )
+    def build(d: int) -> bytes:
+        ni, nj = 4 + d % 3, 3 + d % 2
+        i = np.arange(ni)[None, :]
+        j = np.arange(nj)[:, None]
 
-    def synth(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                ni, nj = 4 + d % 3, 3 + d % 2
-                i = np.arange(ni)[None, :]
-                j = np.arange(nj)[:, None]
+        def field(r: int) -> np.ndarray:
+            return (
+                60 + ((d * 3 + r * 7 + i * 11 + j * 2) % 50)
+            ).astype(np.float64)
 
-                def field(r: int) -> np.ndarray:
-                    return (
-                        60 + ((d * 3 + r * 7 + i * 11 + j * 2) % 50)
-                    ).astype(np.float64)
+        enc = dict(category=0, number=0, reference_value=60.0, nbits=8)
+        msgs = [
+            encode_grib2_message(field(0), **enc),  # analysis
+            encode_grib2_message(
+                field(1), **enc,
+                forecast=dict(unit=1, value=6 + d % 12),
+            ),
+            encode_grib2_message(
+                field(2), **enc,
+                forecast=dict(unit=10, value=2 + d % 3),  # 3-hour
+            ),
+            encode_grib2_message(
+                field(3), **enc,
+                forecast=dict(unit=2, value=1 + d % 5),  # days
+                statistical=dict(
+                    process=1,
+                    interval_end=(2020, 2, 1, 0, 0),
+                    range_hours=24,
+                ),
+            ),
+        ]
+        return merge_grib2_fields(msgs)
 
-                enc = dict(
-                    category=0, number=0, reference_value=60.0, nbits=8
-                )
-                msgs = [
-                    encode_grib2_message(field(0), **enc),  # analysis
-                    encode_grib2_message(
-                        field(1), **enc,
-                        forecast=dict(unit=1, value=6 + d % 12),
-                    ),
-                    encode_grib2_message(
-                        field(2), **enc,
-                        forecast=dict(unit=10, value=2 + d % 3),  # 3-hour
-                    ),
-                    encode_grib2_message(
-                        field(3), **enc,
-                        forecast=dict(unit=2, value=1 + d % 5),  # days
-                        statistical=dict(
-                            process=1,
-                            interval_end=(2020, 2, 1, 0, 0),
-                            range_hours=24,
-                        ),
-                    ),
-                ]
-                rows.append(
-                    {"path": f"doc://{d}", "content": merge_grib2_fields(msgs)}
-                )
-            yield pd.DataFrame(rows)
-
-    files = ids.mapInPandas(synth, schema="path string, content binary")
-    records = files.mapInPandas(_decode_batches, schema=RECORD_SCHEMA)
+    records = landed_records(spark, sf_dir, (53, 17, 645), build)
     return records.select(
-        F.regexp_extract("path", r"doc://(\d+)", 1).cast("bigint").alias("doc_id"),
+        "doc_id",
         "record_number",
         "forecast_hours",
         F.expr(
@@ -1837,9 +1571,7 @@ def grid_grib2_forecast_lead_scan(spark: SparkSession, sf_dir: str) -> DataFrame
         ).alias("valid_time"),
         "statistical_process",
         F.size("values").cast("bigint").alias("n_cells"),
-        F.aggregate(
-            "values", F.lit(0).cast("bigint"), lambda a, x: a + x.cast("bigint")
-        ).alias("vsum"),
+        vsum(),
     ).orderBy("doc_id", "record_number")
 
 
@@ -1899,61 +1631,43 @@ def grid_grib1_forecast_lead_scan(spark: SparkSession, sf_dir: str) -> DataFrame
     Scale: the landing posture — one decode task per file batch; only
     per-record statistic rows shuffle.
     """
-    from typing import Iterator
-
     import numpy as np
-    import pandas as pd
 
     from ..grid.grib1 import encode_grib1_message
-    from ..sources.grib_source import RECORD_SCHEMA, _decode_batches
 
-    ids = (
-        table(spark, sf_dir, "documents")
-        .filter((F.col("doc_id") % 53 == 29) & (F.col("doc_id") < 645))
-        .select("doc_id")
-    )
+    def build(d: int) -> bytes:
+        ni, nj = 4 + d % 3, 3 + d % 2
+        i = np.arange(ni)[None, :]
+        j = np.arange(nj)[:, None]
 
-    def synth(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                ni, nj = 4 + d % 3, 3 + d % 2
-                i = np.arange(ni)[None, :]
-                j = np.arange(nj)[:, None]
+        def field(r: int) -> np.ndarray:
+            return (
+                60 + ((d * 3 + r * 7 + i * 11 + j * 2) % 50)
+            ).astype(np.float64)
 
-                def field(r: int) -> np.ndarray:
-                    return (
-                        60 + ((d * 3 + r * 7 + i * 11 + j * 2) % 50)
-                    ).astype(np.float64)
+        enc = dict(reference_value=60.0, nbits=8)
+        msgs = [
+            encode_grib1_message(field(0), **enc),  # analysis
+            encode_grib1_message(
+                field(1), **enc,
+                forecast=dict(unit=12, value=1 + d % 4),  # 12-hour
+            ),
+            encode_grib1_message(
+                field(2), **enc,
+                forecast=dict(unit=1, value=300 + d % 90),  # TRI 10
+            ),
+            encode_grib1_message(
+                field(3), **enc,
+                statistical=dict(
+                    process=1, start=d % 4, end=d % 4 + 6
+                ),
+            ),
+        ]
+        return b"".join(msgs)
 
-                enc = dict(reference_value=60.0, nbits=8)
-                msgs = [
-                    encode_grib1_message(field(0), **enc),  # analysis
-                    encode_grib1_message(
-                        field(1), **enc,
-                        forecast=dict(unit=12, value=1 + d % 4),  # 12-hour
-                    ),
-                    encode_grib1_message(
-                        field(2), **enc,
-                        forecast=dict(unit=1, value=300 + d % 90),  # TRI 10
-                    ),
-                    encode_grib1_message(
-                        field(3), **enc,
-                        statistical=dict(
-                            process=1, start=d % 4, end=d % 4 + 6
-                        ),
-                    ),
-                ]
-                rows.append(
-                    {"path": f"doc://{d}", "content": b"".join(msgs)}
-                )
-            yield pd.DataFrame(rows)
-
-    files = ids.mapInPandas(synth, schema="path string, content binary")
-    records = files.mapInPandas(_decode_batches, schema=RECORD_SCHEMA)
+    records = landed_records(spark, sf_dir, (53, 29, 645), build)
     return records.select(
-        F.regexp_extract("path", r"doc://(\d+)", 1).cast("bigint").alias("doc_id"),
+        "doc_id",
         "record_number",
         "forecast_hours",
         F.expr(
@@ -1963,9 +1677,7 @@ def grid_grib1_forecast_lead_scan(spark: SparkSession, sf_dir: str) -> DataFrame
         "statistical_process",
         "interval_end",
         F.size("values").cast("bigint").alias("n_cells"),
-        F.aggregate(
-            "values", F.lit(0).cast("bigint"), lambda a, x: a + x.cast("bigint")
-        ).alias("vsum"),
+        vsum(),
     ).orderBy("doc_id", "record_number")
 
 
@@ -2028,67 +1740,47 @@ def grid_grib_layer_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the landing posture — decode is one embarrassingly parallel
     Arrow stage; only per-record statistic rows shuffle.
     """
-    from typing import Iterator
-
     import numpy as np
-    import pandas as pd
 
     from ..grid.grib1 import encode_grib1_message
     from ..grid.grib2 import encode_grib2_message
-    from ..sources.grib_source import RECORD_SCHEMA, _decode_batches
 
-    ids = (
-        table(spark, sf_dir, "documents")
-        .filter((F.col("doc_id") % 53 == 41) & (F.col("doc_id") < 645))
-        .select("doc_id")
-    )
+    def build(d: int) -> bytes:
+        ni, nj = 4 + d % 3, 3 + d % 2
+        i = np.arange(ni)[None, :]
+        j = np.arange(nj)[:, None]
 
-    def synth(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                ni, nj = 4 + d % 3, 3 + d % 2
-                i = np.arange(ni)[None, :]
-                j = np.arange(nj)[:, None]
+        def field(r: int) -> np.ndarray:
+            return (
+                60 + ((d * 3 + r * 7 + i * 11 + j * 2) % 50)
+            ).astype(np.float64)
 
-                def field(r: int) -> np.ndarray:
-                    return (
-                        60 + ((d * 3 + r * 7 + i * 11 + j * 2) % 50)
-                    ).astype(np.float64)
+        enc2 = dict(category=0, number=0, reference_value=60.0, nbits=8)
+        enc1 = dict(reference_value=60.0, nbits=8)
+        msgs = [
+            encode_grib2_message(
+                field(0), **enc2,
+                level_type=100, level_value=850 + d % 100,
+            ),
+            encode_grib2_message(
+                field(1), **enc2,
+                level_type=106, level_value=0,
+                level2=dict(type=106, scale=-1, value=1 + d % 3),
+            ),
+            encode_grib1_message(
+                field(2), **enc1,
+                level_type=100, level=500 + d % 200,
+            ),
+            encode_grib1_message(
+                field(3), **enc1,
+                level_type=112, level=d % 20, level2=d % 20 + 10,
+            ),
+        ]
+        return b"".join(msgs)
 
-                enc2 = dict(
-                    category=0, number=0, reference_value=60.0, nbits=8
-                )
-                enc1 = dict(reference_value=60.0, nbits=8)
-                msgs = [
-                    encode_grib2_message(
-                        field(0), **enc2,
-                        level_type=100, level_value=850 + d % 100,
-                    ),
-                    encode_grib2_message(
-                        field(1), **enc2,
-                        level_type=106, level_value=0,
-                        level2=dict(type=106, scale=-1, value=1 + d % 3),
-                    ),
-                    encode_grib1_message(
-                        field(2), **enc1,
-                        level_type=100, level=500 + d % 200,
-                    ),
-                    encode_grib1_message(
-                        field(3), **enc1,
-                        level_type=112, level=d % 20, level2=d % 20 + 10,
-                    ),
-                ]
-                rows.append(
-                    {"path": f"doc://{d}", "content": b"".join(msgs)}
-                )
-            yield pd.DataFrame(rows)
-
-    files = ids.mapInPandas(synth, schema="path string, content binary")
-    records = files.mapInPandas(_decode_batches, schema=RECORD_SCHEMA)
+    records = landed_records(spark, sf_dir, (53, 41, 645), build)
     return records.select(
-        F.regexp_extract("path", r"doc://(\d+)", 1).cast("bigint").alias("doc_id"),
+        "doc_id",
         "record_number",
         "edition",
         "level_type",
@@ -2096,9 +1788,7 @@ def grid_grib_layer_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         "level2_type",
         "level2",
         F.size("values").cast("bigint").alias("n_cells"),
-        F.aggregate(
-            "values", F.lit(0).cast("bigint"), lambda a, x: a + x.cast("bigint")
-        ).alias("vsum"),
+        vsum(),
     ).orderBy("doc_id", "record_number")
 
 
@@ -2151,85 +1841,60 @@ def grid_grib_match_lead_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     a few hundred bytes per record, so a lead/level/parameter match
     reads ~0.1% of the bytes a full decode would.
     """
-    from functools import partial
-    from typing import Iterator
-
     import numpy as np
-    import pandas as pd
 
     from ..grid.grib1 import encode_grib1_message
     from ..grid.grib2 import encode_grib2_message
-    from ..sources.grib_source import RECORD_SCHEMA, _decode_batches
 
-    ids = (
-        table(spark, sf_dir, "documents")
-        .filter((F.col("doc_id") % 53 == 5) & (F.col("doc_id") < 645))
-        .select("doc_id")
-    )
+    def build(d: int) -> bytes:
+        ni, nj = 4 + d % 3, 3 + d % 2
+        i = np.arange(ni)[None, :]
+        j = np.arange(nj)[:, None]
 
-    def synth(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                ni, nj = 4 + d % 3, 3 + d % 2
-                i = np.arange(ni)[None, :]
-                j = np.arange(nj)[:, None]
+        def field(r: int) -> np.ndarray:
+            return (
+                60 + ((d * 3 + r * 7 + i * 11 + j * 2) % 50)
+            ).astype(np.float64)
 
-                def field(r: int) -> np.ndarray:
-                    return (
-                        60 + ((d * 3 + r * 7 + i * 11 + j * 2) % 50)
-                    ).astype(np.float64)
+        enc2 = dict(category=0, number=0, reference_value=60.0, nbits=8)
+        enc1 = dict(reference_value=60.0, nbits=8)
+        poisoned = bytearray(
+            encode_grib1_message(
+                field(3), **enc1, forecast=dict(unit=1, value=18)
+            )
+        )
+        # Flip the BDS flags to "spherical harmonic coefficients"
+        # (bit 1 of octet 4): headers still inventory fine, but
+        # any attempt to DECODE this record stops loudly — so a
+        # scan that only yields the matched records proves the
+        # match ran header-side.
+        pds_len = int.from_bytes(poisoned[8:11], "big")
+        gds_off = 8 + pds_len
+        bds_off = gds_off + int.from_bytes(
+            poisoned[gds_off : gds_off + 3], "big"
+        )
+        poisoned[bds_off + 3] |= 0x80
+        msgs = [
+            encode_grib2_message(field(0), **enc2),  # analysis f0
+            encode_grib2_message(
+                field(1), **enc2, forecast=dict(unit=1, value=6)
+            ),
+            encode_grib1_message(
+                field(2), **enc1,
+                forecast=dict(unit=10, value=2),  # 3-hour unit → f6
+            ),
+            bytes(poisoned),  # f18, undecodable
+        ]
+        return b"".join(msgs)
 
-                enc2 = dict(
-                    category=0, number=0, reference_value=60.0, nbits=8
-                )
-                enc1 = dict(reference_value=60.0, nbits=8)
-                poisoned = bytearray(
-                    encode_grib1_message(
-                        field(3), **enc1, forecast=dict(unit=1, value=18)
-                    )
-                )
-                # Flip the BDS flags to "spherical harmonic coefficients"
-                # (bit 1 of octet 4): headers still inventory fine, but
-                # any attempt to DECODE this record stops loudly — so a
-                # scan that only yields the matched records proves the
-                # match ran header-side.
-                pds_len = int.from_bytes(poisoned[8:11], "big")
-                gds_off = 8 + pds_len
-                bds_off = gds_off + int.from_bytes(
-                    poisoned[gds_off : gds_off + 3], "big"
-                )
-                poisoned[bds_off + 3] |= 0x80
-                msgs = [
-                    encode_grib2_message(field(0), **enc2),  # analysis f0
-                    encode_grib2_message(
-                        field(1), **enc2, forecast=dict(unit=1, value=6)
-                    ),
-                    encode_grib1_message(
-                        field(2), **enc1,
-                        forecast=dict(unit=10, value=2),  # 3-hour unit → f6
-                    ),
-                    bytes(poisoned),  # f18, undecodable
-                ]
-                rows.append(
-                    {"path": f"doc://{d}", "content": b"".join(msgs)}
-                )
-            yield pd.DataFrame(rows)
-
-    files = ids.mapInPandas(synth, schema="path string, content binary")
-    records = files.mapInPandas(
-        partial(_decode_batches, match=r":f6$"), schema=RECORD_SCHEMA
-    )
+    records = landed_records(spark, sf_dir, (53, 5, 645), build, match=r":f6$")
     return records.select(
-        F.regexp_extract("path", r"doc://(\d+)", 1).cast("bigint").alias("doc_id"),
+        "doc_id",
         "record_number",
         "edition",
         "forecast_hours",
         F.size("values").cast("bigint").alias("n_cells"),
-        F.aggregate(
-            "values", F.lit(0).cast("bigint"), lambda a, x: a + x.cast("bigint")
-        ).alias("vsum"),
+        vsum(),
     ).orderBy("doc_id", "record_number")
 
 
@@ -2301,63 +1966,35 @@ def grid_grib1_gaussian_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the landing posture — decode and explode are one Arrow +
     JVM stage; only per-record statistic rows shuffle.
     """
-    from typing import Iterator
-
     import numpy as np
-    import pandas as pd
 
     from ..grid.grib1 import encode_grib1_message
-    from ..sources.grib_source import (
-        RECORD_SCHEMA,
-        _decode_batches,
-        grib1_cells,
-    )
+    from ..sources.grib_source import grib1_cells
 
-    ids = (
-        table(spark, sf_dir, "documents")
-        .filter((F.col("doc_id") % 11 == 7) & (F.col("doc_id") < 440))
-        .select("doc_id")
-    )
+    def build(d: int) -> bytes:
+        n = 4 + d % 3
+        ni, nj1 = 9 + d % 5, 3 + d % 2
+        i = np.arange(ni)[None, :]
 
-    def synth(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                n = 4 + d % 3
-                ni, nj1 = 9 + d % 5, 3 + d % 2
-                i = np.arange(ni)[None, :]
+        def field(r: int, nj: int) -> np.ndarray:
+            j = np.arange(nj)[:, None]
+            return (
+                60 + ((d * 3 + r * 7 + i * 11 + j * 2) % 50)
+            ).astype(np.float64)
 
-                def field(r: int, nj: int) -> np.ndarray:
-                    j = np.arange(nj)[:, None]
-                    return (
-                        60 + ((d * 3 + r * 7 + i * 11 + j * 2) % 50)
-                    ).astype(np.float64)
+        enc = dict(reference_value=60.0, nbits=8)
+        msgs = [
+            encode_grib1_message(
+                field(0, nj1), **enc,
+                lat_first_mdeg=60_000, dlat_mdeg=1_000,
+            ),
+            encode_grib1_message(field(1, 2 * n), **enc, gaussian=True),
+        ]
+        return b"".join(msgs)
 
-                enc = dict(reference_value=60.0, nbits=8)
-                msgs = [
-                    encode_grib1_message(
-                        field(0, nj1), **enc,
-                        lat_first_mdeg=60_000, dlat_mdeg=1_000,
-                    ),
-                    encode_grib1_message(field(1, 2 * n), **enc, gaussian=True),
-                ]
-                rows.append(
-                    {"path": f"doc://{d}", "content": b"".join(msgs)}
-                )
-            yield pd.DataFrame(rows)
-
-    files = ids.mapInPandas(synth, schema="path string, content binary")
-    cells = grib1_cells(
-        files.mapInPandas(_decode_batches, schema=RECORD_SCHEMA)
-    )
+    cells = grib1_cells(landed_records(spark, sf_dir, (11, 7, 440), build))
     return (
-        cells.groupBy(
-            F.regexp_extract("path", r"doc://(\d+)", 1)
-            .cast("bigint")
-            .alias("doc_id"),
-            "record_number",
-        )
+        cells.groupBy(doc_id(), "record_number")
         .agg(
             F.count(F.lit(1)).alias("n_cells"),
             F.sum(F.col("value").cast("bigint")).alias("vsum"),

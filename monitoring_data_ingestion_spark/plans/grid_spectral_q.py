@@ -3,17 +3,27 @@ families (SURVEY.md §2 S5): rotated and Schmidt-stretched lat/lon
 grids, spherical-harmonic round-trips, spectral synthesis and the
 5.51 complex spectral packing, robust inventories and level-match
 selection.  Split out of the former monolithic plans/grid_q.py in
-r16 — every registry name and oracle is unchanged."""
+r16 — every registry name and oracle is unchanged.
+
+The gate → archive synth → decode scaffold and the shared witness
+columns live in plans/grid_common.py (``landed_records`` /
+``doc_archives``); each query here owns only its archive ``build`` function
+and its witness arithmetic."""
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.readers import table
 from .catalog import query
-from .grid_codec_q import _projected_stats  # noqa: F401
-from .grid_common import _is_present, _present  # noqa: F401
+from .grid_codec_q import _projected_stats
+from .grid_common import (
+    doc_archives,
+    doc_id,
+    landed_inventory,
+    landed_records,
+    vsum,
+)
 
 def _unrotate_trig(rlat, rlon, sp_lat, sp_lon, angle):
     """Rotated → true coordinates by the DIRECT spherical formulas
@@ -137,69 +147,43 @@ def grid_grib2_rotated_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: codec-query posture — bytes executor-side, statistic rows
     shuffle, O(cells) vectorized trig in the Arrow stage.
     """
-    from typing import Iterator
-
     import numpy as np
-    import pandas as pd
 
     from ..grid.grib2 import decode_grib2, encode_grib2_message, iter_messages2
 
-    ids = (
-        table(spark, sf_dir, "documents")
-        .filter((F.col("doc_id") % 17 == 11) & (F.col("doc_id") < 500))
-        .select("doc_id")
-    )
+    def build(d: int) -> bytes:
+        ni, nj = 7 + d % 4, 4 + d % 3
+        i = np.arange(ni)[None, :]
+        j = np.arange(nj)[:, None]
+        v = (70 + ((d * 3 + i * 11 + j * 2) % 50)).astype(np.float64)
+        return encode_grib2_message(
+            v,
+            rotated=_rotated_params(d),
+            lat_first_udeg=(8 + d % 6) * 1_000_000,
+            lon_first_udeg=-(10 + d % 9) * 1_000_000,
+            dlat_udeg=500_000,
+            dlon_udeg=500_000,
+            scanning_mode=0x40 if d % 2 else 0x00,
+            reference_value=70.0,
+            nbits=8,
+        )
 
-    def synth(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                ni, nj = 7 + d % 4, 4 + d % 3
-                i = np.arange(ni)[None, :]
-                j = np.arange(nj)[:, None]
-                v = (70 + ((d * 3 + i * 11 + j * 2) % 50)).astype(np.float64)
-                msg = encode_grib2_message(
-                    v,
-                    rotated=_rotated_params(d),
-                    lat_first_udeg=(8 + d % 6) * 1_000_000,
-                    lon_first_udeg=-(10 + d % 9) * 1_000_000,
-                    dlat_udeg=500_000,
-                    dlon_udeg=500_000,
-                    scanning_mode=0x40 if d % 2 else 0x00,
-                    reference_value=70.0,
-                    nbits=8,
-                )
-                rows.append({"doc_id": d, "grib": msg})
-            yield pd.DataFrame(rows)
+    def decode(d: int, buf: bytes):
+        for msg in iter_messages2(buf):
+            rec = decode_grib2(msg)
+            yield {
+                "grid_tmpl": rec.grid_template,
+                "values": rec.values.reshape(-1).tolist(),
+                "lat0": float(rec.cell_lats_deg[0, 0]),
+                "lon0": float(rec.cell_lons_deg[0, 0]),
+                "corner_lat": float(rec.cell_lats_deg[-1, -1]),
+                "corner_lon": float(rec.cell_lons_deg[-1, -1]),
+            }
 
-    def decode(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id, buf in zip(pdf["doc_id"], pdf["grib"]):
-                d = int(doc_id)
-                for msg in iter_messages2(bytes(buf)):
-                    rec = decode_grib2(msg)
-                    rows.append(
-                        {
-                            "doc_id": d,
-                            "grid_tmpl": rec.grid_template,
-                            "values": rec.values.reshape(-1).tolist(),
-                            "lat0": float(rec.cell_lats_deg[0, 0]),
-                            "lon0": float(rec.cell_lons_deg[0, 0]),
-                            "corner_lat": float(rec.cell_lats_deg[-1, -1]),
-                            "corner_lon": float(rec.cell_lons_deg[-1, -1]),
-                        }
-                    )
-            yield pd.DataFrame(rows)
-
-    files = ids.mapInPandas(synth, schema="doc_id bigint, grib binary")
-    decoded = files.mapInPandas(
-        decode,
-        schema=(
-            "doc_id bigint, grid_tmpl int, values array<double>, "
-            "lat0 double, lon0 double, corner_lat double, corner_lon double"
-        ),
+    decoded = doc_archives(
+        spark, sf_dir, (17, 11, 500), build, decode,
+        "grid_tmpl int, values array<double>, lat0 double, lon0 double, "
+        "corner_lat double, corner_lon double",
     )
     return _projected_stats(decoded, ("doc_id", "grid_tmpl"))
 
@@ -294,70 +278,42 @@ def grid_grib1_rotated_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     embarrassingly parallel Arrow stage (O(cells) vectorized trig);
     only per-record statistic rows shuffle.
     """
-    from typing import Iterator
-
     import numpy as np
-    import pandas as pd
 
     from ..grid.grib1 import encode_grib1_message
-    from ..sources.grib_source import (
-        RECORD_SCHEMA,
-        _decode_batches,
-        grib1_cells,
-    )
+    from ..sources.grib_source import grib1_cells
 
-    ids = (
-        table(spark, sf_dir, "documents")
-        .filter((F.col("doc_id") % 17 == 3) & (F.col("doc_id") < 500))
-        .select("doc_id")
-    )
+    def build(d: int) -> bytes:
+        ni, nj = 7 + d % 4, 4 + d % 3
+        i = np.arange(ni)[None, :]
+        j = np.arange(nj)[:, None]
 
-    def synth(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                ni, nj = 7 + d % 4, 4 + d % 3
-                i = np.arange(ni)[None, :]
-                j = np.arange(nj)[:, None]
+        def field(r: int) -> np.ndarray:
+            return (
+                60 + ((d * 3 + r * 7 + i * 11 + j * 2) % 50)
+            ).astype(np.float64)
 
-                def field(r: int) -> np.ndarray:
-                    return (
-                        60 + ((d * 3 + r * 7 + i * 11 + j * 2) % 50)
-                    ).astype(np.float64)
+        enc = dict(reference_value=60.0, nbits=8)
+        p = _rotated_params(d)
+        msgs = [
+            encode_grib1_message(
+                field(0), **enc,
+                lat_first_mdeg=60_000, dlat_mdeg=1_000,
+            ),
+            encode_grib1_message(
+                field(1), **enc,
+                lat_first_mdeg=(8 + d % 6) * 1000,
+                lon_first_mdeg=-(10 + d % 9) * 1000,
+                dlat_mdeg=500, dlon_mdeg=500,
+                scanning_mode=0x40 if d % 2 else 0x00,
+                rotated=p,
+            ),
+        ]
+        return b"".join(msgs)
 
-                enc = dict(reference_value=60.0, nbits=8)
-                p = _rotated_params(d)
-                msgs = [
-                    encode_grib1_message(
-                        field(0), **enc,
-                        lat_first_mdeg=60_000, dlat_mdeg=1_000,
-                    ),
-                    encode_grib1_message(
-                        field(1), **enc,
-                        lat_first_mdeg=(8 + d % 6) * 1000,
-                        lon_first_mdeg=-(10 + d % 9) * 1000,
-                        dlat_mdeg=500, dlon_mdeg=500,
-                        scanning_mode=0x40 if d % 2 else 0x00,
-                        rotated=p,
-                    ),
-                ]
-                rows.append(
-                    {"path": f"doc://{d}", "content": b"".join(msgs)}
-                )
-            yield pd.DataFrame(rows)
-
-    files = ids.mapInPandas(synth, schema="path string, content binary")
-    cells = grib1_cells(
-        files.mapInPandas(_decode_batches, schema=RECORD_SCHEMA)
-    )
+    cells = grib1_cells(landed_records(spark, sf_dir, (17, 3, 500), build))
     return (
-        cells.groupBy(
-            F.regexp_extract("path", r"doc://(\d+)", 1)
-            .cast("bigint")
-            .alias("doc_id"),
-            "record_number",
-        )
+        cells.groupBy(doc_id(), "record_number")
         .agg(
             F.count(F.lit(1)).alias("n_cells"),
             F.sum(F.col("value").cast("bigint")).alias("vsum"),
@@ -450,64 +406,34 @@ def grid_grib_spectral_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage, only per-record statistic rows shuffle; header cost is a
     few hundred bytes and the coefficient unpack is vectorized numpy.
     """
-    from typing import Iterator
-
-    import pandas as pd
-
     from ..grid.grib1 import decode_grib1, encode_grib1_message
     from ..grid.grib2 import decode_grib2, encode_grib2_message
     from ..sources.grib_source import iter_grib_messages
 
-    ids = (
-        table(spark, sf_dir, "documents")
-        .filter((F.col("doc_id") % 13 == 5) & (F.col("doc_id") < 500))
-        .select("doc_id")
-    )
+    def build(d: int) -> bytes:
+        t = 3 + d % 4
+        c = _spectral_coeffs(d, t, 7, 13, 5, 11, 101)
+        return encode_grib1_message(
+            c, spectral=dict(truncation=t), nbits=8, parameter=80
+        ) + encode_grib2_message(
+            c, spectral=dict(truncation=t), nbits=8,
+            category=3, number=9,
+        )
 
-    def synth(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                t = 3 + d % 4
-                c = _spectral_coeffs(d, t, 7, 13, 5, 11, 101)
-                buf = encode_grib1_message(
-                    c, spectral=dict(truncation=t), nbits=8, parameter=80
-                ) + encode_grib2_message(
-                    c, spectral=dict(truncation=t), nbits=8,
-                    category=3, number=9,
-                )
-                rows.append({"doc_id": d, "grib": buf})
-            yield pd.DataFrame(rows)
+    def decode(d: int, buf: bytes):
+        for edition, msg in iter_grib_messages(buf):
+            rec = (decode_grib1(msg) if edition == 1 else decode_grib2(msg))
+            co = rec.spectral_coeffs
+            yield {
+                "edition": edition,
+                "truncation": rec.spectral_truncation,
+                "re": co.real.tolist(),
+                "im": co.imag.tolist(),
+            }
 
-    def decode(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id, buf in zip(pdf["doc_id"], pdf["grib"]):
-                d = int(doc_id)
-                for edition, msg in iter_grib_messages(bytes(buf)):
-                    rec = (
-                        decode_grib1(msg) if edition == 1 else decode_grib2(msg)
-                    )
-                    co = rec.spectral_coeffs
-                    rows.append(
-                        {
-                            "doc_id": d,
-                            "edition": edition,
-                            "truncation": rec.spectral_truncation,
-                            "re": co.real.tolist(),
-                            "im": co.imag.tolist(),
-                        }
-                    )
-            yield pd.DataFrame(rows)
-
-    files = ids.mapInPandas(synth, schema="doc_id bigint, grib binary")
-    decoded = files.mapInPandas(
-        decode,
-        schema=(
-            "doc_id bigint, edition int, truncation int, "
-            "re array<double>, im array<double>"
-        ),
+    decoded = doc_archives(
+        spark, sf_dir, (13, 5, 500), build, decode,
+        "edition int, truncation int, re array<double>, im array<double>",
     )
     pair = F.posexplode(F.arrays_zip("re", "im")).alias("k", "pair")
     return (
@@ -635,10 +561,7 @@ def grid_grib2_spectral_synthesis(spark: SparkSession, sf_dir: str) -> DataFrame
     archive scale each record synthesizes independently
     (embarrassingly parallel), and only statistic rows shuffle.
     """
-    from typing import Iterator
-
     import numpy as np
-    import pandas as pd
 
     from ..grid.grib2 import (
         decode_grib2,
@@ -646,56 +569,28 @@ def grid_grib2_spectral_synthesis(spark: SparkSession, sf_dir: str) -> DataFrame
         spectral_synthesis,
     )
 
-    ids = (
-        table(spark, sf_dir, "documents")
-        .filter((F.col("doc_id") % 17 == 6) & (F.col("doc_id") < 500))
-        .select("doc_id")
-    )
+    def build(d: int) -> bytes:
+        t = 3 + d % 3
+        c = _spectral_coeffs(d, t, 3, 7, 11, 5, 41)
+        return encode_grib2_message(c, spectral=dict(truncation=t), nbits=8)
 
-    def synth(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                t = 3 + d % 3
-                c = _spectral_coeffs(d, t, 3, 7, 11, 5, 41)
-                rows.append(
-                    {
-                        "doc_id": d,
-                        "grib": encode_grib2_message(
-                            c, spectral=dict(truncation=t), nbits=8
-                        ),
-                    }
-                )
-            yield pd.DataFrame(rows)
+    w = np.arange(48).reshape(6, 8) + 1
 
-    def synthesize(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        w = np.arange(48).reshape(6, 8) + 1
-        for pdf in batches:
-            rows = []
-            for doc_id, buf in zip(pdf["doc_id"], pdf["grib"]):
-                rec = decode_grib2(bytes(buf))
-                vals, _ = spectral_synthesis(
-                    rec.spectral_coeffs, rec.spectral_truncation, 6, 8
-                )
-                rows.append(
-                    {
-                        "doc_id": int(doc_id),
-                        "truncation": rec.spectral_truncation,
-                        "n_cells": int(vals.size),
-                        "val_sum": float(vals.sum()),
-                        "val_wsum": float((vals * w).sum()),
-                    }
-                )
-            yield pd.DataFrame(rows)
+    def synthesize(d: int, buf: bytes):
+        rec = decode_grib2(buf)
+        vals, _ = spectral_synthesis(
+            rec.spectral_coeffs, rec.spectral_truncation, 6, 8
+        )
+        yield {
+            "truncation": rec.spectral_truncation,
+            "n_cells": int(vals.size),
+            "val_sum": float(vals.sum()),
+            "val_wsum": float((vals * w).sum()),
+        }
 
-    files = ids.mapInPandas(synth, schema="doc_id bigint, grib binary")
-    out = files.mapInPandas(
-        synthesize,
-        schema=(
-            "doc_id bigint, truncation int, n_cells bigint, "
-            "val_sum double, val_wsum double"
-        ),
+    out = doc_archives(
+        spark, sf_dir, (17, 6, 500), build, synthesize,
+        "truncation int, n_cells bigint, val_sum double, val_wsum double",
     )
     return out.select(
         "doc_id",
@@ -771,68 +666,48 @@ def grid_grib_inventory_robust_scan(spark: SparkSession, sf_dir: str) -> DataFra
     Scale: the 100 TB metadata pass — a few hundred header bytes per
     record, value bits never touched, one metadata row per record out.
     """
-    from typing import Iterator
-
     import numpy as np
-    import pandas as pd
 
     from ..grid.grib1 import encode_grib1_message
     from ..grid.grib2 import encode_grib2_message
-    from ..sources.grib_source import INVENTORY_SCHEMA, _inventory_batches
 
-    ids = (
-        table(spark, sf_dir, "documents")
-        .filter((F.col("doc_id") % 23 == 4) & (F.col("doc_id") < 500))
-        .select("doc_id")
-    )
+    v = np.arange(12, dtype=np.float64).reshape(3, 4)
 
-    def synth(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        v = np.arange(12, dtype=np.float64).reshape(3, 4)
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                enc = dict(reference_value=0.0, nbits=8)
-                m1 = encode_grib1_message(
-                    v, parameter=11,
-                    forecast=dict(unit=1, value=6 * (1 + d % 3)), **enc,
-                )
-                m2 = bytearray(
-                    encode_grib1_message(
-                        v, parameter=61, forecast=dict(unit=1, value=6), **enc
-                    )
-                )
-                m2[8 + 20] = 2  # PDS octet 21: TRI -> 2 (valid-between)
-                m3 = bytearray(
-                    encode_grib2_message(
-                        v, category=0, number=11,
-                        forecast=dict(unit=1, value=2), **enc,
-                    )
-                )
-                pos = 16
-                while m3[pos + 4] != 4:
-                    pos += int.from_bytes(m3[pos : pos + 4], "big")
-                m3[pos + 17] = 3  # section-4 octet 18: time unit -> month
-                c = _spectral_coeffs(d, 3, 7, 13, 5, 11, 101)
-                m4 = encode_grib1_message(
-                    c, spectral=dict(truncation=3), nbits=8, parameter=80
-                )
-                m5 = encode_grib2_message(
-                    c, spectral=dict(truncation=3), nbits=8,
-                    category=3, number=9,
-                )
-                rows.append(
-                    {
-                        "path": f"doc://{d}",
-                        "content": m1 + bytes(m2) + bytes(m3) + m4 + m5,
-                    }
-                )
-            yield pd.DataFrame(rows)
+    def build(d: int) -> bytes:
+        enc = dict(reference_value=0.0, nbits=8)
+        m1 = encode_grib1_message(
+            v, parameter=11,
+            forecast=dict(unit=1, value=6 * (1 + d % 3)), **enc,
+        )
+        m2 = bytearray(
+            encode_grib1_message(
+                v, parameter=61, forecast=dict(unit=1, value=6), **enc
+            )
+        )
+        m2[8 + 20] = 2  # PDS octet 21: TRI -> 2 (valid-between)
+        m3 = bytearray(
+            encode_grib2_message(
+                v, category=0, number=11,
+                forecast=dict(unit=1, value=2), **enc,
+            )
+        )
+        pos = 16
+        while m3[pos + 4] != 4:
+            pos += int.from_bytes(m3[pos : pos + 4], "big")
+        m3[pos + 17] = 3  # section-4 octet 18: time unit -> month
+        c = _spectral_coeffs(d, 3, 7, 13, 5, 11, 101)
+        m4 = encode_grib1_message(
+            c, spectral=dict(truncation=3), nbits=8, parameter=80
+        )
+        m5 = encode_grib2_message(
+            c, spectral=dict(truncation=3), nbits=8,
+            category=3, number=9,
+        )
+        return m1 + bytes(m2) + bytes(m3) + m4 + m5
 
-    files = ids.mapInPandas(synth, schema="path string, content binary")
-    inv = files.mapInPandas(_inventory_batches, schema=INVENTORY_SCHEMA)
+    inv = landed_inventory(spark, sf_dir, (23, 4, 500), build)
     return inv.select(
-        F.regexp_extract("path", r"doc://(\d+)", 1).cast("bigint").alias("doc_id"),
+        "doc_id",
         "record_number",
         "edition",
         "parameter",
@@ -910,84 +785,59 @@ def grid_grib2_match_level_decode(spark: SparkSession, sf_dir: str) -> DataFrame
     non-matching raster bytes are never unpacked — the 100 TB
     archive-subsetting path.
     """
-    from typing import Iterator
-
     import numpy as np
-    import pandas as pd
 
     from ..grid.grib2 import decode_grib2, encode_grib2_message, match_records
 
-    ids = (
-        table(spark, sf_dir, "documents")
-        .filter((F.col("doc_id") % 29 == 3) & (F.col("doc_id") < 500))
-        .select("doc_id")
-    )
+    i = np.arange(4)[None, :]
+    j = np.arange(3)[:, None]
 
-    def synth(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        i = np.arange(4)[None, :]
-        j = np.arange(3)[:, None]
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
+    def build(d: int) -> bytes:
+        def field(r: int) -> np.ndarray:
+            return (
+                100 + ((d * 3 + r * 7 + i * 5 + j * 2) % 50)
+            ).astype(np.float64)
 
-                def field(r: int) -> np.ndarray:
-                    return (
-                        100 + ((d * 3 + r * 7 + i * 5 + j * 2) % 50)
-                    ).astype(np.float64)
+        enc = dict(reference_value=100.0, nbits=8)
+        msgs = [
+            encode_grib2_message(
+                field(0), level_type=106, level_value=0,
+                level2=dict(type=106, value=2 + d % 3), **enc,
+            ),
+            encode_grib2_message(field(1), **enc),
+            encode_grib2_message(
+                field(2), level_type=100,
+                level_value=500 + 100 * (d % 2), **enc,
+            ),
+            encode_grib2_message(
+                field(3), level_type=103, level_value=10, **enc
+            ),
+        ]
+        poison = bytearray(msgs[3])
+        pos = 16
+        while poison[pos + 4] != 5:
+            pos += int.from_bytes(poison[pos : pos + 4], "big")
+        poison[pos + 9 : pos + 11] = (99).to_bytes(2, "big")
+        msgs[3] = bytes(poison)
+        return b"".join(msgs)
 
-                enc = dict(reference_value=100.0, nbits=8)
-                msgs = [
-                    encode_grib2_message(
-                        field(0), level_type=106, level_value=0,
-                        level2=dict(type=106, value=2 + d % 3), **enc,
-                    ),
-                    encode_grib2_message(field(1), **enc),
-                    encode_grib2_message(
-                        field(2), level_type=100,
-                        level_value=500 + 100 * (d % 2), **enc,
-                    ),
-                    encode_grib2_message(
-                        field(3), level_type=103, level_value=10, **enc
-                    ),
-                ]
-                poison = bytearray(msgs[3])
-                pos = 16
-                while poison[pos + 4] != 5:
-                    pos += int.from_bytes(poison[pos : pos + 4], "big")
-                poison[pos + 9 : pos + 11] = (99).to_bytes(2, "big")
-                msgs[3] = bytes(poison)
-                rows.append({"doc_id": d, "grib": b"".join(msgs)})
-            yield pd.DataFrame(rows)
+    def match_decode(d: int, buf: bytes):
+        patterns = ((1, f":l106/0-{2 + d % 3}:"), (2, ":l100/"))
+        for pid, pattern in patterns:
+            for msg in match_records(buf, pattern):
+                rec = decode_grib2(msg)
+                yield {
+                    "pattern_id": pid,
+                    "level_type": rec.level_type,
+                    "level": rec.level_value,
+                    "level2": rec.level2_value,
+                    "values": rec.values.reshape(-1).tolist(),
+                }
 
-    def match_decode(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id, buf in zip(pdf["doc_id"], pdf["grib"]):
-                d = int(doc_id)
-                patterns = ((1, f":l106/0-{2 + d % 3}:"), (2, ":l100/"))
-                for pid, pattern in patterns:
-                    for msg in match_records(bytes(buf), pattern):
-                        rec = decode_grib2(msg)
-                        rows.append(
-                            {
-                                "doc_id": d,
-                                "pattern_id": pid,
-                                "level_type": rec.level_type,
-                                "level": rec.level_value,
-                                "level2": rec.level2_value,
-                                "values": rec.values.reshape(-1).tolist(),
-                            }
-                        )
-            yield pd.DataFrame(rows)
-
-    files = ids.mapInPandas(synth, schema="doc_id bigint, grib binary")
-    decoded = files.mapInPandas(
-        match_decode,
-        schema=(
-            "doc_id bigint, pattern_id int, level_type int, level int, "
-            "level2 int, values array<double>"
-        ),
+    decoded = doc_archives(
+        spark, sf_dir, (29, 3, 500), build, match_decode,
+        "pattern_id int, level_type int, level int, level2 int, "
+        "values array<double>",
     )
     return decoded.select(
         "doc_id",
@@ -996,9 +846,7 @@ def grid_grib2_match_level_decode(spark: SparkSession, sf_dir: str) -> DataFrame
         "level",
         "level2",
         F.size("values").cast("bigint").alias("n_cells"),
-        F.aggregate(
-            "values", F.lit(0).cast("bigint"), lambda a, x: a + x.cast("bigint")
-        ).alias("vsum"),
+        vsum(),
     ).orderBy("doc_id", "pattern_id")
 
 
@@ -1061,66 +909,39 @@ def grid_grib2_spectral_complex_decode(spark: SparkSession, sf_dir: str) -> Data
     supporting 5.51 is what makes a 100 TB ERA5 native-spectral scan
     read the bytes producers actually publish.
     """
-    from typing import Iterator
-
-    import pandas as pd
-
     from ..grid.grib2 import decode_grib2, encode_grib2_message, iter_messages2
 
-    ids = (
-        table(spark, sf_dir, "documents")
-        .filter((F.col("doc_id") % 19 == 7) & (F.col("doc_id") < 500))
-        .select("doc_id")
-    )
+    def build(d: int) -> bytes:
+        t = 4 + d % 3
+        c = _spectral_coeffs(d, t, 7, 13, 5, 11, 101)
+        return encode_grib2_message(
+            c, spectral=dict(truncation=t), nbits=8
+        ) + encode_grib2_message(
+            c,
+            spectral=dict(
+                truncation=t,
+                sub_truncation=1 + d % 2,
+                laplacian=1.0,
+            ),
+            nbits=16,
+        )
 
-    def synth(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                t = 4 + d % 3
-                c = _spectral_coeffs(d, t, 7, 13, 5, 11, 101)
-                buf = encode_grib2_message(
-                    c, spectral=dict(truncation=t), nbits=8
-                ) + encode_grib2_message(
-                    c,
-                    spectral=dict(
-                        truncation=t,
-                        sub_truncation=1 + d % 2,
-                        laplacian=1.0,
-                    ),
-                    nbits=16,
-                )
-                rows.append({"doc_id": d, "grib": buf})
-            yield pd.DataFrame(rows)
+    def decode(d: int, buf: bytes):
+        for msg in iter_messages2(buf):
+            rec = decode_grib2(msg)
+            co = rec.spectral_coeffs
+            yield {
+                "packing_template": rec.packing_template,
+                "truncation": rec.spectral_truncation,
+                "sub_truncation": rec.spectral_sub_truncation,
+                "re": co.real.tolist(),
+                "im": co.imag.tolist(),
+            }
 
-    def decode(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id, buf in zip(pdf["doc_id"], pdf["grib"]):
-                d = int(doc_id)
-                for msg in iter_messages2(bytes(buf)):
-                    rec = decode_grib2(msg)
-                    co = rec.spectral_coeffs
-                    rows.append(
-                        {
-                            "doc_id": d,
-                            "packing_template": rec.packing_template,
-                            "truncation": rec.spectral_truncation,
-                            "sub_truncation": rec.spectral_sub_truncation,
-                            "re": co.real.tolist(),
-                            "im": co.imag.tolist(),
-                        }
-                    )
-            yield pd.DataFrame(rows)
-
-    files = ids.mapInPandas(synth, schema="doc_id bigint, grib binary")
-    decoded = files.mapInPandas(
-        decode,
-        schema=(
-            "doc_id bigint, packing_template int, truncation int, "
-            "sub_truncation int, re array<double>, im array<double>"
-        ),
+    decoded = doc_archives(
+        spark, sf_dir, (19, 7, 500), build, decode,
+        "packing_template int, truncation int, sub_truncation int, "
+        "re array<double>, im array<double>",
     )
     pair = F.posexplode(F.arrays_zip("re", "im")).alias("k", "pair")
     return (
@@ -1263,57 +1084,29 @@ def grid_grib_spectral_landing(spark: SparkSession, sf_dir: str) -> DataFrame:
     pure JVM with map-side partial aggregation — nothing shuffles but
     statistic rows, same as every landing query.
     """
-    from functools import partial
-    from typing import Iterator
-
-    import pandas as pd
-
     from ..grid.grib1 import encode_grib1_message
     from ..grid.grib2 import encode_grib2_message
-    from ..sources.grib_source import (
-        RECORD_SCHEMA,
-        _decode_batches,
-        grib1_cells,
-    )
+    from ..sources.grib_source import grib1_cells
 
-    ids = (
-        table(spark, sf_dir, "documents")
-        .filter((F.col("doc_id") % 31 == 11) & (F.col("doc_id") < 500))
-        .select("doc_id")
-    )
+    def build(d: int) -> bytes:
+        t = 3 + d % 3
+        return encode_grib1_message(
+            _spectral_coeffs(d, t, 3, 7, 11, 5, 41),
+            spectral=dict(truncation=t), nbits=8, parameter=80,
+        ) + encode_grib2_message(
+            _spectral_coeffs(d + 7, t, 3, 7, 11, 5, 41),
+            spectral=dict(
+                truncation=t, sub_truncation=1, laplacian=1.0
+            ),
+            nbits=16, category=3, number=9,
+        )
 
-    def synth(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                t = 3 + d % 3
-                buf = encode_grib1_message(
-                    _spectral_coeffs(d, t, 3, 7, 11, 5, 41),
-                    spectral=dict(truncation=t), nbits=8, parameter=80,
-                ) + encode_grib2_message(
-                    _spectral_coeffs(d + 7, t, 3, 7, 11, 5, 41),
-                    spectral=dict(
-                        truncation=t, sub_truncation=1, laplacian=1.0
-                    ),
-                    nbits=16, category=3, number=9,
-                )
-                rows.append({"path": f"doc://{d}", "content": buf})
-            yield pd.DataFrame(rows)
-
-    files = ids.mapInPandas(synth, schema="path string, content binary")
-    records = files.mapInPandas(
-        partial(_decode_batches, synthesize_spectral=(6, 8)),
-        schema=RECORD_SCHEMA,
+    records = landed_records(
+        spark, sf_dir, (31, 11, 500), build, synthesize_spectral=(6, 8)
     )
     cells = grib1_cells(records)
     return (
-        cells.groupBy(
-            F.regexp_extract("path", r"doc://(\d+)", 1)
-            .cast("bigint")
-            .alias("doc_id"),
-            "record_number",
-        )
+        cells.groupBy(doc_id(), "record_number")
         .agg(
             F.min("grid_template").alias("gt"),
             F.count(F.lit(1)).alias("n_cells"),
@@ -1483,78 +1276,53 @@ def grid_grib2_stretched_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: codec-query posture — bytes executor-side, statistic rows
     shuffle, O(cells) vectorized trig in the Arrow stage.
     """
-    from typing import Iterator
-
     import numpy as np
-    import pandas as pd
 
     from ..grid.grib2 import decode_grib2, encode_grib2_message, iter_messages2
 
-    ids = (
-        table(spark, sf_dir, "documents")
-        .filter((F.col("doc_id") % 37 == 9) & (F.col("doc_id") < 500))
-        .select("doc_id")
-    )
+    def build(d: int) -> bytes:
+        ni, nj = 6 + d % 3, 4 + d % 2
+        i = np.arange(ni)[None, :]
+        j = np.arange(nj)[:, None]
+        msgs = []
+        for tmpl in (2, 3):
+            v = (
+                80 + ((d * 3 + tmpl * 13 + i * 11 + j * 2) % 50)
+            ).astype(np.float64)
+            kw = dict(stretched=_stretched_params(d))
+            if tmpl == 3:
+                kw["rotated"] = _rotated_params(d)
+            msgs.append(
+                encode_grib2_message(
+                    v,
+                    lat_first_udeg=(8 + d % 6) * 1_000_000,
+                    lon_first_udeg=-(10 + d % 9) * 1_000_000,
+                    dlat_udeg=500_000,
+                    dlon_udeg=500_000,
+                    scanning_mode=0x40 if d % 2 else 0x00,
+                    reference_value=80.0,
+                    nbits=8,
+                    **kw,
+                )
+            )
+        return b"".join(msgs)
 
-    def synth(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                ni, nj = 6 + d % 3, 4 + d % 2
-                i = np.arange(ni)[None, :]
-                j = np.arange(nj)[:, None]
-                msgs = []
-                for tmpl in (2, 3):
-                    v = (
-                        80 + ((d * 3 + tmpl * 13 + i * 11 + j * 2) % 50)
-                    ).astype(np.float64)
-                    kw = dict(stretched=_stretched_params(d))
-                    if tmpl == 3:
-                        kw["rotated"] = _rotated_params(d)
-                    msgs.append(
-                        encode_grib2_message(
-                            v,
-                            lat_first_udeg=(8 + d % 6) * 1_000_000,
-                            lon_first_udeg=-(10 + d % 9) * 1_000_000,
-                            dlat_udeg=500_000,
-                            dlon_udeg=500_000,
-                            scanning_mode=0x40 if d % 2 else 0x00,
-                            reference_value=80.0,
-                            nbits=8,
-                            **kw,
-                        )
-                    )
-                rows.append({"doc_id": d, "grib": b"".join(msgs)})
-            yield pd.DataFrame(rows)
+    def decode(d: int, buf: bytes):
+        for msg in iter_messages2(buf):
+            rec = decode_grib2(msg)
+            yield {
+                "grid_tmpl": rec.grid_template,
+                "values": rec.values.reshape(-1).tolist(),
+                "lat0": float(rec.cell_lats_deg[0, 0]),
+                "lon0": float(rec.cell_lons_deg[0, 0]),
+                "corner_lat": float(rec.cell_lats_deg[-1, -1]),
+                "corner_lon": float(rec.cell_lons_deg[-1, -1]),
+            }
 
-    def decode(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id, buf in zip(pdf["doc_id"], pdf["grib"]):
-                d = int(doc_id)
-                for msg in iter_messages2(bytes(buf)):
-                    rec = decode_grib2(msg)
-                    rows.append(
-                        {
-                            "doc_id": d,
-                            "grid_tmpl": rec.grid_template,
-                            "values": rec.values.reshape(-1).tolist(),
-                            "lat0": float(rec.cell_lats_deg[0, 0]),
-                            "lon0": float(rec.cell_lons_deg[0, 0]),
-                            "corner_lat": float(rec.cell_lats_deg[-1, -1]),
-                            "corner_lon": float(rec.cell_lons_deg[-1, -1]),
-                        }
-                    )
-            yield pd.DataFrame(rows)
-
-    files = ids.mapInPandas(synth, schema="doc_id bigint, grib binary")
-    decoded = files.mapInPandas(
-        decode,
-        schema=(
-            "doc_id bigint, grid_tmpl int, values array<double>, "
-            "lat0 double, lon0 double, corner_lat double, corner_lon double"
-        ),
+    decoded = doc_archives(
+        spark, sf_dir, (37, 9, 500), build, decode,
+        "grid_tmpl int, values array<double>, lat0 double, lon0 double, "
+        "corner_lat double, corner_lon double",
     )
     return _projected_stats(decoded, ("doc_id", "grid_tmpl")).orderBy(
         "doc_id", "grid_tmpl"

@@ -1461,6 +1461,20 @@ def test_grib_flagship_publishes_partitioned_parquet(spark):
         "grid_grib1_gaussian_scan",
         "grid_grib2_rotated_decode",
         "grid_grib1_rotated_scan",
+        "grid_grib1_inventory",
+        "grid_grib2_match_decode",
+        "grid_grib_statistical_scan",
+        "grid_grib_projected_landing",
+        "grid_grib2_reduced_gaussian_decode",
+        "grid_grib2_multifield_scan",
+        "grid_grib2_ensemble_scan",
+        "grid_grib_spectral_roundtrip",
+        "grid_grib2_spectral_synthesis",
+        "grid_grib_inventory_robust_scan",
+        "grid_grib2_match_level_decode",
+        "grid_grib2_spectral_complex_decode",
+        "grid_grib_spectral_landing",
+        "grid_grib2_stretched_decode",
     ],
 )
 def test_r10_codec_queries_python_only_at_codec_boundary(spark, name):
