@@ -92,9 +92,10 @@ def dsum_narrow(col: Column | str, scale: int, int_digits: int) -> Column:
 
     Caller asserts |value| < 10^int_digits (a DOMAIN bound, not a fixture
     observation — e.g. a TPC-H quantity ≤ 50, a price < 10^6).  A value
-    outside the bound casts to NULL and silently leaves the sum, so the
-    bound must hold at every scale; the driver's oracle hash would flag
-    the mismatch.  int_digits + scale ≤ 8 engages the long-sum rewrite.
+    outside the bound fails the query loudly: under the session's ANSI
+    mode the decimal cast raises NUMERIC_VALUE_OUT_OF_RANGE, so the bound
+    must hold at every scale.  int_digits + scale ≤ 8 engages the
+    long-sum rewrite.
     """
     if int_digits + scale > 8:
         return dsum(col, scale)
@@ -117,9 +118,10 @@ def limb_sums(value: Column, name: str, scale: int = 8, int_digits: int = 6) -> 
 
     Per row: u = cast(value AS decimal(int_digits+scale, scale)) · 10^scale
     (exact long while int_digits + scale ≤ 18, enforced below), split at
-    10^6.  A value outside ±10^int_digits casts to NULL and silently leaves
-    the sum (non-ANSI cast) — int_digits is a caller-asserted DOMAIN bound,
-    the same contract :func:`dsum_narrow` documents.
+    10^6.  A value outside ±10^int_digits fails the query loudly (the ANSI
+    decimal cast raises NUMERIC_VALUE_OUT_OF_RANGE) — int_digits is a
+    caller-asserted DOMAIN bound, the same contract :func:`dsum_narrow`
+    documents.
     Combine with :func:`sum_from_limbs` / :func:`money_from_limbs`.
 
     r17 (ADVICE r16): ``hi`` is now true integer division (IntegralDivide —

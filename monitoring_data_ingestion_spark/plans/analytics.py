@@ -26,8 +26,9 @@ from pyspark.sql import functions as F
 from pyspark import StorageLevel
 
 from ..functions.deterministic import dsum_expr
+from ..session_cache import memo_plan, register_cache
 from ..sources.readers import table
-from .catalog import memo_plan, query, register_cache
+from .catalog import query
 
 # Shared deterministic text definitions (identical in oracle SQL below).
 _STOPWORDS = ("the", "a", "of", "to", "and", "in", "is", "it", "that", "for")
@@ -385,10 +386,10 @@ def _shingled_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw document text for nothing. The guard keeps the local-small-file
     fix out of the 100 TB path.
     """
+    docs = table(spark, sf_dir, "documents")
+
     def build() -> DataFrame:
-        d = _widen_if_narrow(
-            spark, table(spark, sf_dir, "documents"), "doc_id", amp=300
-        )
+        d = _widen_if_narrow(spark, docs, "doc_id", amp=300)
         toks = d.select("doc_id", _tokens(F.col("text")).alias("t"))
         return toks.select(
             "doc_id", F.array_distinct(_shingles(F.col("t"))).alias("sh")
@@ -396,8 +397,8 @@ def _shingled_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # r17: memoized lazy handle — the tokenizer/shingle expression tree
     # costs ~60 ms of driver build per call and every dedup query rebuilds
-    # it (plans/catalog.py::memo_plan; metadata only, never rows).
-    return memo_plan(spark, sf_dir, ("documents",), "shingled_docs", build)
+    # it (session_cache.memo_plan; metadata only, never rows).
+    return memo_plan(spark, "shingled_docs", build, docs)
 
 
 def _shingle_arrays_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -698,15 +699,10 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cluster endpoints consume it too) — memoized lazy handle. The bands
     # persist is RE-ARMED here because the memoized plan skips the builder
     # (persist lifecycle must sit outside any memoized build).
-    candidates = memo_plan(
-        spark, sf_dir, ("documents",), "minhash_candidates", build_candidates
-    )
+    docs = table(spark, sf_dir, "documents")
+    candidates = memo_plan(spark, "minhash_candidates", build_candidates, docs)
     _minhash_bands(spark, sf_dir)  # re-arm the bands cache registration
-    return _jaccard_verify_text(
-        table(spark, sf_dir, "documents"),
-        candidates,
-        memo=(spark, sf_dir, "minhash_verify"),
-    )
+    return _jaccard_verify_text(docs, candidates, memo="minhash_verify")
 
 
 def _minhash_bands(spark: SparkSession, sf_dir: str):
@@ -724,7 +720,8 @@ def _minhash_bands(spark: SparkSession, sf_dir: str):
     evicting+recomputing, and the cache is registered for explicit
     release_caches() teardown.
     """
-    base = _shingled_docs(spark, sf_dir).withColumnRenamed("sh", "shingles")
+    shingled = _shingled_docs(spark, sf_dir)
+    base = shingled.withColumnRenamed("sh", "shingles")
 
     # One MD5 per distinct shingle; the 32 signature values are cheap
     # integer universal-hashes of that 28-bit key (all JVM-side, codegen'd).
@@ -737,7 +734,7 @@ def _minhash_bands(spark: SparkSession, sf_dir: str):
     # transform/array_min lambdas, same integer arithmetic).
     # r17: the parsed signature plan is additionally a memoized lazy
     # handle — JVM-parsing + analyzing the 48-expression block still cost
-    # ~110 ms per build (plans/catalog.py::memo_plan; metadata only).
+    # ~110 ms per build (session_cache.memo_plan; metadata only).
     def build_bands() -> DataFrame:
         keyed = base.selectExpr(
             "doc_id",
@@ -761,7 +758,7 @@ def _minhash_bands(spark: SparkSession, sf_dir: str):
         return docs.selectExpr("doc_id", *band_exprs)
 
     bands = register_cache(
-        memo_plan(spark, sf_dir, ("documents",), "minhash_bands", build_bands)
+        memo_plan(spark, "minhash_bands", build_bands, shingled)
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     long_bands = bands.select(
@@ -776,7 +773,7 @@ def _minhash_bands(spark: SparkSession, sf_dir: str):
 def _jaccard_verify_text(
     docs: DataFrame,
     candidates: DataFrame,
-    memo: tuple | None = None,
+    memo: str | None = None,
 ) -> DataFrame:
     """Exact-Jaccard verification over the CANDIDATE documents only: the
     distinct doc ids appearing in any candidate pair are semi-joined back
@@ -810,14 +807,14 @@ def _jaccard_verify_text(
             F.array_distinct(_shingles(_tokens(F.col("text")))).alias("sh"),
         )
 
-    # r17: callers with a stable candidate set pass a memo key so the
-    # candidate-shingle sub-plan (the expensive analysis: the shingle
-    # expression tree over a semi-join) is a memoized lazy handle; the
-    # persist lifecycle stays OUT of the memoized build so the rows
-    # re-register with the CacheManager on every invocation.
+    # r17: callers whose candidate handle is memoized pass a memo tag so
+    # the candidate-shingle sub-plan (the expensive analysis: the shingle
+    # expression tree over a semi-join) is a memoized lazy handle, keyed
+    # on both input handles; the persist lifecycle stays OUT of the
+    # memoized build so the rows re-register with the CacheManager on
+    # every invocation.
     if memo is not None:
-        m_spark, m_sf, m_tag = memo
-        sh_plan = memo_plan(m_spark, m_sf, ("documents",), m_tag, build_sh_needed)
+        sh_plan = memo_plan(docs.sparkSession, memo, build_sh_needed, docs, candidates)
     else:
         sh_plan = build_sh_needed()
     sh_needed = register_cache(sh_plan.persist(StorageLevel.MEMORY_AND_DISK))

@@ -15,125 +15,17 @@ Determinism contract (so order-insensitive value-hashes match bit-for-bit):
 
 from __future__ import annotations
 
-import logging
 from dataclasses import dataclass, field
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-logger = logging.getLogger(__name__)
+# Re-exported: bench.py imports release_caches from here.
+from ..session_cache import release_caches  # noqa: F401
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
 REGISTRY: dict[str, "QuerySpec"] = {}
-
-# Explicit cache lifecycle: query builders that persist() an intermediate
-# register it here, and harnesses (bench, tests, the CLI) release between
-# queries. Without this, a cached frame lives until session end — at scale
-# that is executor memory held hostage by a query that already returned.
-_ACTIVE_CACHES: list[DataFrame] = []
-
-
-def register_cache(df: DataFrame) -> DataFrame:
-    """Track a persisted DataFrame for explicit release via release_caches()."""
-    _ACTIVE_CACHES.append(df)
-    return df
-
-
-def release_caches() -> None:
-    """Unpersist every registered cache (idempotent, safe mid-plan: Spark
-    recomputes an unpersisted dependency instead of failing)."""
-    while _ACTIVE_CACHES:
-        try:
-            _ACTIVE_CACHES.pop().unpersist()
-        except Exception:
-            # Cleanup must not fail the harness (a dead session makes
-            # unpersist throw), but keep the signal: systematic failures
-            # here mean executor memory is never being released.
-            logger.debug("release_caches: unpersist failed", exc_info=True)
-
-
-# Lazy SUB-PLAN handles for expensive shared builders (r17, guide §5 "the
-# driver should do almost no data work"): constructing the minhash signature
-# block, the shingle-array projection or the IVF codebook costs 100-400 ms
-# of pure driver time per build (selectExpr parsing + analysis + py4j), and
-# the engine's harnesses rebuild the same sub-plan for every invocation.
-# The memo holds only UNRESOLVED LAZY plans — metadata, never rows; every
-# execution still computes from parquet (the r16 scan-handle cache, one
-# level up). Keyed on (session, tag, shuffle parallelism, source file
-# stats): a rewritten fixture, a different session, or a re-sized session
-# invalidates. Regular files only — directory tables are never memoized
-# (their mtime does not change when a part file is rewritten).
-_PLAN_MEMO: dict[tuple, DataFrame] = {}
-
-
-def memo_plan(
-    spark: SparkSession,
-    sf_dir: str,
-    tables: tuple[str, ...],
-    tag: str,
-    build: Callable[[], DataFrame],
-) -> DataFrame:
-    """Memoized lazy plan handle for a named sub-plan over fixture tables."""
-    import os
-    import stat as stat_mod
-
-    stats = []
-    for t in tables:
-        path = f"{sf_dir}/{t}.parquet"
-        try:
-            st = os.stat(path)
-        except OSError:
-            return build()  # let the builder fail loudly / handle it
-        if not stat_mod.S_ISREG(st.st_mode):
-            return build()  # directory layout: never memoize (stale listing)
-        stats.append((path, st.st_mtime_ns, st.st_size))
-    key = (
-        spark,
-        tag,
-        spark.conf.get("spark.sql.shuffle.partitions"),
-        tuple(stats),
-    )
-    df = _PLAN_MEMO.get(key)
-    if df is None:
-        df = build()
-        if len(_PLAN_MEMO) > 256:  # bounded; entries are tiny plan handles
-            _PLAN_MEMO.clear()
-        _PLAN_MEMO[key] = df
-    return df
-
-
-def session_cache_suffix(spark: SparkSession, sf_dir: str) -> str:
-    """Catalog-safe cache key for per-session built artifacts (IVF index,
-    bucketed oriented-edge table, incremental-agg snapshots).
-
-    Keys on the FULL normalized absolute fixture path, not its basename:
-    two distinct fixture dirs sharing a basename (``/a/sf1`` vs
-    ``/b/sf1``) must never serve each other's index. A RECURSIVE
-    fingerprint of the source files (relative path, size, mtime) is
-    folded in so a fixture regenerated IN PLACE mid-session invalidates
-    the cache too — including files rewritten inside a subdirectory,
-    which leave the parent directory entry's mtime unchanged (a
-    top-level-only listing would serve a stale index for partitioned
-    fixtures). Folded through md5 because it feeds a metastore table
-    name (identifier charset + length limits)."""
-    import hashlib
-    import os
-
-    full = os.path.abspath(os.path.normpath(sf_dir))
-    h = hashlib.md5(full.encode())
-    try:
-        for root, dirs, files in os.walk(full):
-            dirs.sort()  # deterministic walk order
-            rel = os.path.relpath(root, full)
-            for name in sorted(files):
-                st = os.stat(os.path.join(root, name))
-                h.update(f"{rel}/{name}:{st.st_size}:{st.st_mtime_ns}".encode())
-    except OSError:
-        pass  # nonexistent dir: path-only key; the read will fail loudly
-    digest = h.hexdigest()[:16]
-    app = spark.sparkContext.applicationId.replace("-", "_")
-    return f"{app}_{digest}"
 
 
 @dataclass(frozen=True)

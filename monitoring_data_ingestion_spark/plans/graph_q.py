@@ -712,7 +712,7 @@ def graph_triangle_census_indexed(spark: SparkSession, sf_dir: str) -> DataFrame
     query (census, edge support, clustering coefficients). Build
     discipline mirrors ``knn_ivf_partitioned``: one index per Spark
     session and fixture (keyed by applicationId + full-path/mtime
-    fingerprint, ``catalog.session_cache_suffix``), external path under
+    fingerprint, ``session_cache.session_cache_suffix``), external path under
     tmp with atexit cleanup, so repeated runs serve from the built index.
     """
     import atexit
@@ -721,7 +721,7 @@ def graph_triangle_census_indexed(spark: SparkSession, sf_dir: str) -> DataFrame
     import tempfile
 
     from ..operators.bucketing import write_bucketed
-    from .catalog import session_cache_suffix
+    from ..session_cache import session_cache_suffix
 
     suffix = session_cache_suffix(spark, sf_dir)
     tbl = f"mdi_graph_oriented_{suffix}"

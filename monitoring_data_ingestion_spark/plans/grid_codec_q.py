@@ -522,7 +522,7 @@ def ensure_grib1_landing(
     import numpy as np
 
     from ..grid.grib1 import encode_grib1_message
-    from .catalog import session_cache_suffix
+    from ..session_cache import session_cache_suffix
 
     base = os.path.join(
         tempfile.gettempdir(),
@@ -1153,6 +1153,30 @@ def _projected_stats(decoded: DataFrame, keys: tuple) -> DataFrame:
     ).orderBy(*[k for k in keys if k != "grid_tmpl"])
 
 
+_PROJECTED_CELLS_SCHEMA = (
+    "grid_tmpl int, values array<double>, lat0 double, lon0 double, "
+    "corner_lat double, corner_lon double"
+)
+
+
+def _projected_cells(d: int, buf: bytes):
+    """``doc_archives`` decoder shared by the single-record projected-grid
+    queries: per GRIB2 record its template, raster-order values, and the
+    anchor and far-corner cell coordinates :func:`_projected_stats` reads."""
+    from ..grid.grib2 import decode_grib2, iter_messages2
+
+    for msg in iter_messages2(buf):
+        rec = decode_grib2(msg)
+        yield {
+            "grid_tmpl": rec.grid_template,
+            "values": rec.values.reshape(-1).tolist(),
+            "lat0": float(rec.cell_lats_deg[0, 0]),
+            "lon0": float(rec.cell_lons_deg[0, 0]),
+            "corner_lat": float(rec.cell_lats_deg[-1, -1]),
+            "corner_lon": float(rec.cell_lons_deg[-1, -1]),
+        }
+
+
 _LCC_BASE = dict(la1=21.138, lo1=-122.72, lad=38.5, lov=-97.5)
 _LCC_RADIUS = 6_371_229.0
 
@@ -1413,7 +1437,7 @@ def grid_grib2_polar_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import numpy as np
 
-    from ..grid.grib2 import decode_grib2, encode_grib2_message, iter_messages2
+    from ..grid.grib2 import encode_grib2_message
 
     def build(d: int) -> bytes:
         ni, nj = 7 + d % 5, 5 + d % 4
@@ -1429,22 +1453,9 @@ def grid_grib2_polar_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
             binary_scale=1,
         )
 
-    def decode(d: int, buf: bytes):
-        for msg in iter_messages2(buf):
-            rec = decode_grib2(msg)
-            yield {
-                "grid_tmpl": rec.grid_template,
-                "values": rec.values.reshape(-1).tolist(),
-                "lat0": float(rec.cell_lats_deg[0, 0]),
-                "lon0": float(rec.cell_lons_deg[0, 0]),
-                "corner_lat": float(rec.cell_lats_deg[-1, -1]),
-                "corner_lon": float(rec.cell_lons_deg[-1, -1]),
-            }
-
     decoded = doc_archives(
-        spark, sf_dir, (17, 5, 425), build, decode,
-        "grid_tmpl int, values array<double>, lat0 double, lon0 double, "
-        "corner_lat double, corner_lon double",
+        spark, sf_dir, (17, 5, 425), build, _projected_cells,
+        _PROJECTED_CELLS_SCHEMA,
     )
     return _projected_stats(decoded, ("doc_id", "grid_tmpl"))
 
@@ -1552,7 +1563,7 @@ def grid_grib2_mercator_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import numpy as np
 
-    from ..grid.grib2 import decode_grib2, encode_grib2_message, iter_messages2
+    from ..grid.grib2 import encode_grib2_message
 
     def build(d: int) -> bytes:
         ni, nj = 8 + d % 4, 4 + d % 5
@@ -1568,22 +1579,9 @@ def grid_grib2_mercator_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
             binary_scale=1,
         )
 
-    def decode(d: int, buf: bytes):
-        for msg in iter_messages2(buf):
-            rec = decode_grib2(msg)
-            yield {
-                "grid_tmpl": rec.grid_template,
-                "values": rec.values.reshape(-1).tolist(),
-                "lat0": float(rec.cell_lats_deg[0, 0]),
-                "lon0": float(rec.cell_lons_deg[0, 0]),
-                "corner_lat": float(rec.cell_lats_deg[-1, -1]),
-                "corner_lon": float(rec.cell_lons_deg[-1, -1]),
-            }
-
     decoded = doc_archives(
-        spark, sf_dir, (19, 7, 475), build, decode,
-        "grid_tmpl int, values array<double>, lat0 double, lon0 double, "
-        "corner_lat double, corner_lon double",
+        spark, sf_dir, (19, 7, 475), build, _projected_cells,
+        _PROJECTED_CELLS_SCHEMA,
     )
     return _projected_stats(decoded, ("doc_id", "grid_tmpl"))
 

@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .catalog import query
-from .grid_codec_q import _projected_stats
+from .grid_codec_q import _PROJECTED_CELLS_SCHEMA, _projected_cells, _projected_stats
 from .grid_common import (
     doc_archives,
     doc_id,
@@ -149,7 +149,7 @@ def grid_grib2_rotated_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import numpy as np
 
-    from ..grid.grib2 import decode_grib2, encode_grib2_message, iter_messages2
+    from ..grid.grib2 import encode_grib2_message
 
     def build(d: int) -> bytes:
         ni, nj = 7 + d % 4, 4 + d % 3
@@ -168,22 +168,9 @@ def grid_grib2_rotated_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
             nbits=8,
         )
 
-    def decode(d: int, buf: bytes):
-        for msg in iter_messages2(buf):
-            rec = decode_grib2(msg)
-            yield {
-                "grid_tmpl": rec.grid_template,
-                "values": rec.values.reshape(-1).tolist(),
-                "lat0": float(rec.cell_lats_deg[0, 0]),
-                "lon0": float(rec.cell_lons_deg[0, 0]),
-                "corner_lat": float(rec.cell_lats_deg[-1, -1]),
-                "corner_lon": float(rec.cell_lons_deg[-1, -1]),
-            }
-
     decoded = doc_archives(
-        spark, sf_dir, (17, 11, 500), build, decode,
-        "grid_tmpl int, values array<double>, lat0 double, lon0 double, "
-        "corner_lat double, corner_lon double",
+        spark, sf_dir, (17, 11, 500), build, _projected_cells,
+        _PROJECTED_CELLS_SCHEMA,
     )
     return _projected_stats(decoded, ("doc_id", "grid_tmpl"))
 
@@ -1278,7 +1265,7 @@ def grid_grib2_stretched_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import numpy as np
 
-    from ..grid.grib2 import decode_grib2, encode_grib2_message, iter_messages2
+    from ..grid.grib2 import encode_grib2_message
 
     def build(d: int) -> bytes:
         ni, nj = 6 + d % 3, 4 + d % 2
@@ -1307,22 +1294,9 @@ def grid_grib2_stretched_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         return b"".join(msgs)
 
-    def decode(d: int, buf: bytes):
-        for msg in iter_messages2(buf):
-            rec = decode_grib2(msg)
-            yield {
-                "grid_tmpl": rec.grid_template,
-                "values": rec.values.reshape(-1).tolist(),
-                "lat0": float(rec.cell_lats_deg[0, 0]),
-                "lon0": float(rec.cell_lons_deg[0, 0]),
-                "corner_lat": float(rec.cell_lats_deg[-1, -1]),
-                "corner_lon": float(rec.cell_lons_deg[-1, -1]),
-            }
-
     decoded = doc_archives(
-        spark, sf_dir, (37, 9, 500), build, decode,
-        "grid_tmpl int, values array<double>, lat0 double, lon0 double, "
-        "corner_lat double, corner_lon double",
+        spark, sf_dir, (37, 9, 500), build, _projected_cells,
+        _PROJECTED_CELLS_SCHEMA,
     )
     return _projected_stats(decoded, ("doc_id", "grid_tmpl")).orderBy(
         "doc_id", "grid_tmpl"

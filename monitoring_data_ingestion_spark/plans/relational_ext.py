@@ -1058,7 +1058,7 @@ def agg_incremental_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Build discipline mirrors knn_ivf_partitioned: one store per Spark
     session and fixture (applicationId + full-path/mtime fingerprint,
-    ``catalog.session_cache_suffix``), so repeated invocations
+    ``session_cache.session_cache_suffix``), so repeated invocations
     re-serve the committed state through the replay-idempotent path.
     """
     import atexit
@@ -1067,7 +1067,7 @@ def agg_incremental_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from ..operators.incremental import IncrementalAggregate
-    from .catalog import session_cache_suffix
+    from ..session_cache import session_cache_suffix
 
     e = table(spark, sf_dir, "events").select(
         "event_type", "value", F.dayofmonth("ts").alias("d")

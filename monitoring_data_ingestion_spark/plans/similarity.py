@@ -36,8 +36,9 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..functions.deterministic import limb_sums, sum_from_limbs
+from ..session_cache import memo_plan, register_cache
 from ..sources.readers import table
-from .catalog import memo_plan, query, register_cache
+from .catalog import query
 
 LSH_BANDS = 4
 LSH_PLANES_PER_BAND = 3  # sign bits per band → 8 buckets per band
@@ -76,15 +77,15 @@ def _vectors(spark: SparkSession, sf_dir: str, widen: bool = True) -> DataFrame:
     # bruteforce query side, analytics.knn_cosine_bruteforce).
     from .analytics import _widen_if_narrow
 
+    emb = table(spark, sf_dir, "embeddings")
+
     def build() -> DataFrame:
-        v = table(spark, sf_dir, "embeddings")
-        if widen:
-            v = _widen_if_narrow(spark, v, "vec_id", amp=10)
+        v = _widen_if_narrow(spark, emb, "vec_id", amp=10) if widen else emb
         return v.selectExpr(
             "vec_id", "label", "cast(embedding AS array<double>) AS e"
         ).selectExpr("vec_id", "label", "e", f"sqrt({_dot_expr('e', 'e')}) AS nrm")
 
-    return memo_plan(spark, sf_dir, ("embeddings",), f"vectors_w{int(widen)}", build)
+    return memo_plan(spark, f"vectors_w{int(widen)}", build, emb)
 
 
 def _band_bucket(b: int) -> Column:
@@ -272,7 +273,7 @@ def knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Codebook: per-label mean vector, assembled in dimension order.
     # r17: the codebook sub-plan (posexplode → limb mean → array assembly)
     # is a memoized lazy handle — building+analyzing it cost ~90 ms of
-    # driver time per invocation (plans/catalog.py::memo_plan; the
+    # build time per invocation (session_cache.memo_plan; the
     # persisted ROWS still release via release_caches, and persist()
     # re-arms the same handle afterwards).
     def build_codebook() -> DataFrame:
@@ -289,17 +290,10 @@ def knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(F.col("label").alias("clabel"), "ce", "cnrm")
         )
 
-    centv = register_cache(
-        memo_plan(
-            spark, sf_dir, ("embeddings",), "ivf_codebook", build_codebook
-        ).persist()
-    )
+    centv = register_cache(memo_plan(spark, "ivf_codebook", build_codebook, v).persist())
 
     return _ivf_serve(
-        v,
-        centv,
-        vq=_vectors(spark, sf_dir, widen=False),
-        memo=(spark, sf_dir, "ivf_candidates"),
+        v, centv, vq=_vectors(spark, sf_dir, widen=False), memo="ivf_candidates"
     )
 
 
@@ -361,7 +355,7 @@ def _ivf_serve(
     v: DataFrame,
     centv: DataFrame,
     vq: DataFrame | None = None,
-    memo: tuple | None = None,
+    memo: str | None = None,
 ) -> DataFrame:
     """The IVF serving path given a codebook (clabel, ce, cnrm): assign
     every vector to its nearest centroid's inverted list, probe the
@@ -381,16 +375,14 @@ def _ivf_serve(
     """
     if vq is None:
         vq = v
-    # r17: callers whose codebook plan is itself stable per (session,
-    # fixture) — NOT the Lloyd loop, whose codebook embeds an eager
-    # localCheckpoint — pass a memo key so the candidate-generation
-    # sub-plan (crossJoin + window + min_by construction, ~80 ms of
-    # driver time) is a memoized lazy handle (plans/catalog.py).
+    # r17: callers whose input handles are memoized — NOT the Lloyd loop,
+    # whose codebook embeds an eager localCheckpoint — pass a memo tag so
+    # the candidate-generation sub-plan (crossJoin + window + min_by
+    # construction, ~80 ms of build time) is a memoized lazy handle,
+    # keyed on all three input handles (session_cache.memo_plan).
     if memo is not None:
-        m_spark, m_sf, m_tag = memo
         cand = memo_plan(
-            m_spark, m_sf, ("embeddings",), m_tag,
-            lambda: _ivf_candidates(v, centv, vq),
+            v.sparkSession, memo, lambda: _ivf_candidates(v, centv, vq), v, centv, vq
         )
     else:
         cand = _ivf_candidates(v, centv, vq)
@@ -1746,7 +1738,7 @@ def knn_ivf_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Build discipline mirrors era5_grid_anomaly_pipeline: one index tree
     per Spark session and fixture (keyed by applicationId + full-path/
-    mtime fingerprint, ``catalog.session_cache_suffix``), so repeated runs serve
+    mtime fingerprint, ``session_cache.session_cache_suffix``), so repeated runs serve
     from the already-built index — build once, serve many, the vector-
     store lifecycle.
     """
@@ -1756,7 +1748,7 @@ def knn_ivf_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from ..operators.ann_index import build_ivf_index, serve_knn
-    from .catalog import session_cache_suffix
+    from ..session_cache import session_cache_suffix
 
     v = _vectors(spark, sf_dir)
     base = os.path.join(

@@ -841,7 +841,7 @@ def era5_grib_anomaly_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         monthly_normals,
     )
     from ..streaming.sinks import IdempotentForeachBatch
-    from .catalog import session_cache_suffix
+    from ..session_cache import session_cache_suffix
     from .grid_codec_q import ensure_grib1_landing
 
     landing = ensure_grib1_landing(spark, sf_dir, n_months=36)
@@ -919,7 +919,7 @@ def _ensure_torn_grib1_landing(spark: SparkSession, sf_dir: str) -> str:
     import shutil
     import tempfile
 
-    from .catalog import session_cache_suffix
+    from ..session_cache import session_cache_suffix
     from .grid_codec_q import ensure_grib1_landing
 
     src = ensure_grib1_landing(spark, sf_dir, n_months=36)
@@ -1030,7 +1030,7 @@ def era5_grib_quarantine_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
         monthly_normals,
     )
     from ..streaming.sinks import IdempotentForeachBatch
-    from .catalog import session_cache_suffix
+    from ..session_cache import session_cache_suffix
 
     landing = _ensure_torn_grib1_landing(spark, sf_dir)
     base = os.path.join(
@@ -1193,7 +1193,7 @@ def ensure_spectral_landing(spark: SparkSession, sf_dir: str) -> str:
 
     from ..grid.grib1 import encode_grib1_message
     from ..grid.grib2 import encode_grib2_message
-    from .catalog import session_cache_suffix
+    from ..session_cache import session_cache_suffix
     from .grid_spectral_q import _spectral_coeffs
 
     base = os.path.join(

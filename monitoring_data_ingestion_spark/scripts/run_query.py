@@ -60,7 +60,7 @@ def run(argv: list[str] | None = None, spark=None) -> int:
         spark = get_spark(app_name=f"run-query-{args.name}")
         spark.sparkContext.setLogLevel("ERROR")
 
-    from ..plans.catalog import release_caches
+    from ..session_cache import release_caches
 
     df = REGISTRY[args.name].fn(spark, args.sf_dir)
     try:

@@ -206,7 +206,7 @@ def _plan_markers(df) -> dict[str, int | bool]:
 
 def run_probe(spark, sf_dir: str, queries=PROBE_QUERIES) -> dict:
     from monitoring_data_ingestion_spark.plans import REGISTRY
-    from monitoring_data_ingestion_spark.plans.catalog import release_caches
+    from monitoring_data_ingestion_spark.session_cache import release_caches
 
     out = {}
     for name in queries:

@@ -11,12 +11,12 @@ from __future__ import annotations
 
 import glob
 import os
-import stat as stat_mod
-from functools import lru_cache
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import TimestampNTZType
+
+from ..session_cache import memo_plan
 
 # The fixture star schema + stream + LLM-pipeline tables (TESTDATA.md).
 TABLES = (
@@ -33,11 +33,11 @@ TABLES = (
 )
 
 
-@lru_cache(maxsize=256)
-def _nanos_ts_cols(path: str) -> tuple[str, ...]:
+def nanos_ts_cols(spark: SparkSession, path: str) -> tuple[str, ...]:
     """Columns stored as parquet TIMESTAMP(NANOS) (Spark can't scan them
     natively — the engine normalizes at the scan edge, like the reference's
-    nodata-sentinel mapping, SURVEY §2.2 P5)."""
+    nodata-sentinel mapping, SURVEY §2.2 P5). Reads the footer; when any
+    exist, switches the session to reading them as nanos-longs."""
     try:
         import pyarrow.parquet as pq
         import pyarrow as pa
@@ -53,65 +53,49 @@ def _nanos_ts_cols(path: str) -> tuple[str, ...]:
         schema = pq.read_schema(target)
     except Exception:  # pragma: no cover
         return ()
-    return tuple(
+    nanos = tuple(
         f.name for f in schema if pa.types.is_timestamp(f.type) and f.type.unit == "ns"
     )
+    if nanos:
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    return nanos
 
 
-# Lazy scan handles, keyed on (session, path, mtime_ns, size). Building a
-# scan DataFrame is NOT free: spark.read.parquet lists the path and reads
-# footers for schema inference on every call (measured 75-400 ms per call
-# at sf0.1 — 0.3-0.5 s of pure driver latency per multi-table query build,
-# guide §5 "the driver should do almost no data work"). The cache holds
-# only the unresolved LAZY plan — metadata, never rows — so repeated
-# builds of the same query skip the re-listing; execution still computes
-# everything from parquet. The mtime/size key invalidates handles for
-# fixtures rewritten in place (tests regenerating tmp dirs).
-_SCAN_CACHE: dict[tuple, DataFrame] = {}
+def normalize_scan_edge(df: DataFrame, nanos: tuple[str, ...]) -> DataFrame:
+    """The engine's timestamp contract at the scan edge, shared by the batch
+    reader and the events stream so both see identical values.
+
+    ``nanos`` columns (read as nanos-longs, see :func:`nanos_ts_cols`)
+    become microsecond timestamps, truncating like DuckDB/Arrow µs
+    semantics. Parquet micros without isAdjustedToUTC infer as
+    TIMESTAMP_NTZ, which watermarks and epoch arithmetic reject; those
+    are cast to TIMESTAMP — wall-clock values are preserved (cast
+    interprets and renders in the session timezone).
+    """
+    for c in nanos:
+        # Integer division: float division would lose precision at ~1e18 ns.
+        df = df.withColumn(c, F.expr(f"timestamp_micros(`{c}` div 1000)"))
+    for field in df.schema.fields:
+        if isinstance(field.dataType, TimestampNTZType):
+            df = df.withColumn(field.name, F.col(field.name).cast("timestamp"))
+    return df
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan one fixture table. Lazy: no data moves until an action.
 
-    Scan-edge normalization: parquet TIMESTAMP(NANOS) columns (which Spark
-    rejects) are read as nanos-longs and converted to microsecond
-    timestamps (truncating, matching DuckDB/Arrow µs semantics).
+    The handle is memoized per session on the table's file fingerprint
+    (session_cache.memo_plan): building it lists the path and reads
+    footers (75-400 ms at sf0.1), and query builds re-scan the same
+    tables many times. Scan-edge normalization: :func:`normalize_scan_edge`.
     """
     path = f"{sf_dir}/{name}.parquet"
-    key = None
-    try:
-        st = os.stat(path)
-        # Cache REGULAR FILES only (ADVICE r16): a directory-layout table's
-        # mtime/size does not change when a part file inside is rewritten,
-        # so a cached handle would keep a stale frozen file listing.
-        # Directory fixtures (tests regenerating tmp dirs) always rebuild.
-        if stat_mod.S_ISREG(st.st_mode):
-            key = (spark, path, st.st_mtime_ns, st.st_size)
-    except OSError:
-        pass  # nonexistent yet: let spark.read fail loudly below
-    if key is not None:
-        cached = _SCAN_CACHE.get(key)
-        if cached is not None:
-            return cached
-    nanos = _nanos_ts_cols(path)
-    if nanos:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(path)
-    for c in nanos:
-        # Integer division: float division would lose precision at ~1e18 ns.
-        df = df.withColumn(c, F.expr(f"timestamp_micros(`{c}` div 1000)"))
-    # Parquet micros without isAdjustedToUTC infer as TIMESTAMP_NTZ; the
-    # engine's timestamp contract is instant semantics (watermarks, epoch
-    # arithmetic). Cast at the scan edge — wall-clock values are preserved
-    # (cast interprets and renders in the session timezone).
-    for field in df.schema.fields:
-        if isinstance(field.dataType, TimestampNTZType):
-            df = df.withColumn(field.name, F.col(field.name).cast("timestamp"))
-    if key is not None:
-        if len(_SCAN_CACHE) > 512:  # bounded; entries are tiny plan handles
-            _SCAN_CACHE.clear()
-        _SCAN_CACHE[key] = df
-    return df
+
+    def scan() -> DataFrame:
+        nanos = nanos_ts_cols(spark, path)
+        return normalize_scan_edge(spark.read.parquet(path), nanos)
+
+    return memo_plan(spark, "scan", scan, path)
 
 
 def tables(spark: SparkSession, sf_dir: str, *names: str) -> tuple[DataFrame, ...]:

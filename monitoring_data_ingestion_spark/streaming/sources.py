@@ -9,10 +9,9 @@ part of the next micro-batch, with exactly-once tracking in the checkpoint.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql.types import StructType, TimestampNTZType
+from pyspark.sql.types import StructType
 
-from ..sources.readers import _nanos_ts_cols
+from ..sources.readers import nanos_ts_cols, normalize_scan_edge
 
 
 def file_stream(
@@ -49,27 +48,13 @@ def file_stream(
 
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The events fixture as an unbounded stream.
-
-    Scan-edge normalization matches the batch reader exactly (TIMESTAMP
-    (NANOS) → nanos-long → microsecond timestamp, truncating): a query
-    moved from batch to streaming sees identical values.
-
-    Parquet micros without isAdjustedToUTC infer as TIMESTAMP_NTZ, which
-    ``withWatermark`` rejects (event time must be an instant) — those
-    columns are cast to TIMESTAMP at the scan edge. Wall-clock values are
-    preserved (cast interprets and renders in the session timezone), so
-    batch/streaming equality holds.
+    """The events fixture as an unbounded stream, normalized at the scan
+    edge by the batch reader's own :func:`normalize_scan_edge`: a query
+    moved from batch to streaming sees identical values, and watermarks
+    get instant-typed event time.
     """
     path = f"{sf_dir}/events.parquet"
-    nanos = _nanos_ts_cols(path)
-    if nanos:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    nanos = nanos_ts_cols(spark, path)
     raw_schema = spark.read.parquet(path).schema
     stream = file_stream(spark, sf_dir, raw_schema, path_glob="events.parquet")
-    for c in nanos:
-        stream = stream.withColumn(c, F.expr(f"timestamp_micros(`{c}` div 1000)"))
-    for field in raw_schema.fields:
-        if isinstance(field.dataType, TimestampNTZType):
-            stream = stream.withColumn(field.name, F.col(field.name).cast("timestamp"))
-    return stream
+    return normalize_scan_edge(stream, nanos)

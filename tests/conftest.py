@@ -14,7 +14,7 @@ def spark():
 
     s = get_spark(app_name="mdi-spark-tests", shuffle_partitions=8)
     yield s
-    from monitoring_data_ingestion_spark.plans.catalog import release_caches
+    from monitoring_data_ingestion_spark.session_cache import release_caches
 
     release_caches()
 
@@ -26,6 +26,6 @@ def _release_query_caches():
     InMemoryRelation into any later plan with a matching subtree, which
     breaks plan-shape assertions (and holds executor memory)."""
     yield
-    from monitoring_data_ingestion_spark.plans.catalog import release_caches
+    from monitoring_data_ingestion_spark.session_cache import release_caches
 
     release_caches()

@@ -353,3 +353,35 @@ def test_limb_sums_exact_vs_wide_decimal(spark):
         limb_sums(F.col("v"), "_x", scale=6, int_digits=13)
     with pytest.raises(ValueError):
         limb_sums(F.col("v"), "_x", scale=4, int_digits=2)
+
+
+@pytest.mark.parametrize(
+    "helper, at_bound, want",
+    [
+        ("dsum_narrow", [99.99, 99.99, 0.01], 199.99),
+        ("limb_sums", [99.999999, 99.999999, 0.000001], 199.999999),
+    ],
+)
+def test_narrow_sums_fail_loudly_past_domain_bound(spark, helper, at_bound, want):
+    """The narrow exact sums (int_digits=2) sum exactly up to the domain
+    bound, and a value past it fails the query under the session's ANSI
+    mode instead of silently leaving the sum."""
+    from monitoring_data_ingestion_spark.functions.deterministic import (
+        dsum_narrow,
+        limb_sums,
+        sum_from_limbs,
+    )
+
+    def total(vals):
+        df = spark.createDataFrame([Row(g=1, v=float(v)) for v in vals]).groupBy("g")
+        if helper == "dsum_narrow":
+            agg = df.agg(dsum_narrow("v", 2, 2).alias("s"))
+        else:
+            agg = df.agg(*limb_sums(F.col("v"), "_s", scale=6, int_digits=2)).select(
+                sum_from_limbs("_s", 6).alias("s")
+            )
+        return agg.collect()[0]["s"]
+
+    assert total(at_bound) == want
+    with pytest.raises(Exception, match="NUMERIC_VALUE_OUT_OF_RANGE"):
+        total([*at_bound, 123.0])

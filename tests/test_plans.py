@@ -1244,7 +1244,7 @@ def test_session_cache_suffix_keys_on_full_path_and_mtime(spark, tmp_path):
     import os
     import time
 
-    from monitoring_data_ingestion_spark.plans.catalog import session_cache_suffix
+    from monitoring_data_ingestion_spark.session_cache import session_cache_suffix
 
     a = tmp_path / "x" / "sf1"
     b = tmp_path / "y" / "sf1"
@@ -1257,6 +1257,106 @@ def test_session_cache_suffix_keys_on_full_path_and_mtime(spark, tmp_path):
     assert sa == session_cache_suffix(spark, str(a))  # stable
     os.utime(a / "t.parquet", ns=(1, 1))  # regenerate in place
     assert sa != session_cache_suffix(spark, str(a))
+
+
+def test_handle_cache_dies_with_its_session(spark):
+    """Memoized handles live on their session object: once a session is
+    dropped, its entries (which reference it) are collected with it — no
+    process-global cache keys on, or pins, a session."""
+    import gc
+    import weakref
+
+    from pyspark import RDD
+
+    from monitoring_data_ingestion_spark.plans.analytics import _shingled_docs
+
+    # Constructing a SparkSession re-binds RDD.toDF to a closure over the
+    # new session; restore it so only the handle cache could pin `other`.
+    to_df = RDD.toDF
+    other = spark.newSession()
+    RDD.toDF = to_df
+    _shingled_docs(other, SF_SMOKE)
+    ref = weakref.ref(other)
+    del other
+    gc.collect()
+    assert ref() is None
+
+
+def test_handle_cache_misses_on_widen_conf_change(spark):
+    """Every conf the widen decision reads is part of the memo key: a
+    changed spark.sql.files.maxPartitionBytes rebuilds the sub-plan, and
+    restoring it serves the original handle again."""
+    from monitoring_data_ingestion_spark.plans.analytics import _shingled_docs
+
+    key = "spark.sql.files.maxPartitionBytes"
+    first = _shingled_docs(spark, SF_SMOKE)
+    assert _shingled_docs(spark, SF_SMOKE) is first
+    old = spark.conf.get(key)
+    spark.conf.set(key, "3m")
+    try:
+        assert _shingled_docs(spark, SF_SMOKE) is not first
+    finally:
+        spark.conf.set(key, old)
+    assert _shingled_docs(spark, SF_SMOKE) is first
+
+
+def test_jaccard_verify_memo_keys_on_candidates(spark):
+    """A memoized verify keys on its candidate handle: two calls with the
+    same memo tag and different candidate frames each verify their own
+    pairs (the memo used to keep the first call's needed-doc set)."""
+    from monitoring_data_ingestion_spark.plans.analytics import _jaccard_verify_text
+
+    docs = spark.createDataFrame(
+        [(1, "a b c d e f"), (2, "a b c d e f"), (3, "p q r s t u"), (4, "p q r s t u")],
+        "doc_id bigint, text string",
+    )
+
+    def verified(pairs):
+        cand = spark.createDataFrame(pairs, "doc_a bigint, doc_b bigint")
+        out = _jaccard_verify_text(docs, cand, memo="verify_memo_test")
+        return [(r.doc_a, r.doc_b) for r in out.collect()]
+
+    assert verified([(1, 2)]) == [(1, 2)]
+    assert verified([(3, 4)]) == [(3, 4)]
+
+
+def test_directory_table_cached_until_rewritten(spark, tmp_path):
+    """Directory-layout tables are cached on the recursive fingerprint of
+    their files: an unchanged table is served from the cache, and a part
+    file rewritten in place is re-read, not served stale."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    part = tmp_path / "t.parquet" / "part-0.parquet"
+    part.parent.mkdir()
+    pq.write_table(pa.table({"x": [1, 2]}), part)
+    first = table(spark, str(tmp_path), "t")
+    assert table(spark, str(tmp_path), "t") is first
+    assert sorted(r.x for r in first.collect()) == [1, 2]
+    pq.write_table(pa.table({"x": [3, 4, 5]}), part)
+    again = table(spark, str(tmp_path), "t")
+    assert sorted(r.x for r in again.collect()) == [3, 4, 5]
+
+
+def test_directory_table_rewritten_with_nanos_ts_is_normalized(spark, tmp_path):
+    """A directory table whose part file is rewritten in place with its ts
+    column as TIMESTAMP(NANOS) must be re-normalized at the scan edge: the
+    nanos-column detection may not be remembered from the old footer
+    (Spark rejects an unconverted nanos column outright)."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    part = tmp_path / "ev.parquet" / "part-0.parquet"
+    part.parent.mkdir()
+    ts = [dt.datetime(2020, 1, 1, 0, 0, 0, 123456)]
+    want = 1_577_836_800_123_456  # µs since the epoch, session tz UTC
+    pq.write_table(pa.table({"ts": pa.array(ts, pa.timestamp("us"))}), part)
+    micros = F.unix_micros("ts").alias("us")
+    assert table(spark, str(tmp_path), "ev").select(micros).collect()[0].us == want
+    pq.write_table(pa.table({"ts": pa.array(ts, pa.timestamp("ns"))}), part)
+    assert table(spark, str(tmp_path), "ev").select(micros).collect()[0].us == want
 
 
 def test_grib1_decode_python_only_at_codec_boundary(spark):
@@ -1285,7 +1385,7 @@ def test_grib_landing_scan_parallelism_is_per_file(spark):
     assert final.count("MapInPandas") == 1  # decode only; synth is driver-side files
     assert "BatchEvalPython" not in plan
     # The upstream binaryFile relation reads 12 files → 12 input partitions.
-    from monitoring_data_ingestion_spark.plans.catalog import session_cache_suffix
+    from monitoring_data_ingestion_spark.session_cache import session_cache_suffix
     import tempfile
 
     base = os.path.join(
