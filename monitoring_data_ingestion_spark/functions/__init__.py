@@ -1,4 +1,4 @@
-from .deterministic import dsum, davg, dsum_expr
+from .deterministic import exact_sum, exact_sum_sql
 from .math import clamp, modulo, randlat, randlon
 from .temporal import (
     add_calendar,
@@ -12,9 +12,8 @@ from .strings import layer_name, output_path
 from .hashing import hmac_sha256_hex
 
 __all__ = [
-    "dsum",
-    "davg",
-    "dsum_expr",
+    "exact_sum",
+    "exact_sum_sql",
     "clamp",
     "modulo",
     "randlat",

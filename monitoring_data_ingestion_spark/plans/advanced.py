@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ..functions.deterministic import dsum, dsum_expr
+from ..functions.deterministic import exact_sum, exact_sum_sql
 from ..sources.readers import table
 from .catalog import query
 
@@ -107,7 +107,7 @@ def ts_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
 WITH hourly AS (
   SELECT user_id, CAST(date_trunc('hour', ts) AS TIMESTAMP) AS hr,
-         {dsum_expr('value', 6)} / COUNT(*) AS v
+         {exact_sum_sql('value', 6)} / COUNT(*) AS v
   FROM events WHERE user_id <= 20 GROUP BY 1, 2
 ),
 spine AS (
@@ -165,7 +165,7 @@ def ts_interpolate_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = table(spark, sf_dir, "events").filter(F.col("user_id") <= 20)
     hourly = e.groupBy(
         "user_id", F.date_trunc("hour", "ts").alias("hr")
-    ).agg((dsum("value", 6) / F.count(F.lit(1))).alias("v"))
+    ).agg((exact_sum("value", 6) / F.count(F.lit(1))).alias("v"))
     bounds = hourly.agg(F.min("hr").alias("lo"), F.max("hr").alias("hi"))
     spine = (
         hourly.select("user_id")
@@ -211,11 +211,11 @@ def ts_interpolate_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
 WITH sums AS (
   SELECT l_returnflag,
          COUNT(*) AS n,
-         {dsum_expr('l_quantity', 2)} AS sx,
-         {dsum_expr('l_extendedprice', 2)} AS sy,
-         {dsum_expr('l_quantity * l_quantity', 4)} AS sxx,
-         {dsum_expr('l_extendedprice * l_extendedprice', 4)} AS syy,
-         {dsum_expr('l_quantity * l_extendedprice', 4)} AS sxy
+         {exact_sum_sql('l_quantity', 2)} AS sx,
+         {exact_sum_sql('l_extendedprice', 2)} AS sy,
+         {exact_sum_sql('l_quantity * l_quantity', 4)} AS sxx,
+         {exact_sum_sql('l_extendedprice * l_extendedprice', 4)} AS syy,
+         {exact_sum_sql('l_quantity * l_extendedprice', 4)} AS sxy
   FROM lineitem GROUP BY l_returnflag
 )
 SELECT l_returnflag,
@@ -244,11 +244,11 @@ def agg_regression_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     q, p = F.col("l_quantity"), F.col("l_extendedprice")
     sums = l.groupBy("l_returnflag").agg(
         F.count(F.lit(1)).alias("n"),
-        dsum(q, 2).alias("sx"),
-        dsum(p, 2).alias("sy"),
-        dsum(q * q, 4).alias("sxx"),
-        dsum(p * p, 4).alias("syy"),
-        dsum(q * p, 4).alias("sxy"),
+        exact_sum(q, 2).alias("sx"),
+        exact_sum(p, 2).alias("sy"),
+        exact_sum(q * q, 4).alias("sxx"),
+        exact_sum(p * p, 4).alias("syy"),
+        exact_sum(q * p, 4).alias("sxy"),
     )
     n, sx, sy = F.col("n"), F.col("sx"), F.col("sy")
     sxx, syy, sxy = F.col("sxx"), F.col("syy"), F.col("sxy")
@@ -306,11 +306,11 @@ def agg_boolean_bitwise(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("reshape", "unpivot"),
     oracle=f"""
 WITH cust AS (
-  SELECT c_nationkey AS nk, {dsum_expr('c_acctbal', 2)} AS customer_bal
+  SELECT c_nationkey AS nk, {exact_sum_sql('c_acctbal', 2)} AS customer_bal
   FROM customer GROUP BY 1
 ),
 supp AS (
-  SELECT s_nationkey AS nk, {dsum_expr('s_acctbal', 2)} AS supplier_bal
+  SELECT s_nationkey AS nk, {exact_sum_sql('s_acctbal', 2)} AS supplier_bal
   FROM supplier GROUP BY 1
 ),
 wide AS (
@@ -336,12 +336,12 @@ def unpivot_nation_balances(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = (
         table(spark, sf_dir, "customer")
         .groupBy(F.col("c_nationkey").alias("nk"))
-        .agg(dsum("c_acctbal", 2).alias("customer_bal"))
+        .agg(exact_sum("c_acctbal", 2).alias("customer_bal"))
     )
     supp = (
         table(spark, sf_dir, "supplier")
         .groupBy(F.col("s_nationkey").alias("nk"))
-        .agg(dsum("s_acctbal", 2).alias("supplier_bal"))
+        .agg(exact_sum("s_acctbal", 2).alias("supplier_bal"))
     )
     wide = (
         n.join(F.broadcast(cust), n.n_nationkey == cust.nk, "left")
@@ -363,7 +363,7 @@ def unpivot_nation_balances(spark: SparkSession, sf_dir: str) -> DataFrame:
 WITH yearly AS (
   SELECT o_orderpriority,
          CAST(year(o_orderdate) AS INTEGER) AS yr,
-         {dsum_expr('o_totalprice', 2)} AS revenue
+         {exact_sum_sql('o_totalprice', 2)} AS revenue
   FROM orders
   GROUP BY 1, 2
 )
@@ -387,7 +387,7 @@ def ts_yoy_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = table(spark, sf_dir, "orders")
     yearly = o.groupBy(
         "o_orderpriority", F.year("o_orderdate").alias("yr")
-    ).agg(dsum("o_totalprice", 2).alias("revenue"))
+    ).agg(exact_sum("o_totalprice", 2).alias("revenue"))
     w = Window.partitionBy("o_orderpriority").orderBy("yr")
     growth = (F.col("revenue") - F.lag("revenue").over(w)) / F.lag("revenue").over(w)
     return yearly.select(

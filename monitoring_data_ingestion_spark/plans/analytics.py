@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 
 from pyspark import StorageLevel
 
-from ..functions.deterministic import dsum_expr
+from ..functions.deterministic import exact_sum, exact_sum_sql
 from ..session_cache import memo_plan, register_cache
 from ..sources.readers import table
 from .catalog import query
@@ -1176,7 +1176,7 @@ WITH expanded AS (
   FROM embeddings, UNNEST(generate_series(1, len(embedding))) AS t(i)
 )
 SELECT label, CAST(pos AS INTEGER) AS pos,
-       {dsum_expr('val', 8)} / COUNT(val) AS centroid
+       {exact_sum_sql('val', 8)} / COUNT(val) AS centroid
 FROM expanded GROUP BY label, pos
 ORDER BY label, pos
 """,
@@ -1192,9 +1192,7 @@ def embedding_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         expanded.groupBy("label", "pos")
         .agg(
-            (
-                F.sum(F.col("val").cast("decimal(30,8)")).cast("double") / F.count("val")
-            ).alias("centroid")
+            (exact_sum("val", 8) / F.count("val")).alias("centroid")
         )
         .orderBy("label", "pos")
     )

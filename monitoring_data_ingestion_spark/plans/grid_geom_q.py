@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..functions.deterministic import exact_sum
 from ..grid.ops import point_in_polygon
 from ..grid.shapefile import main_ring
 from ..sources.readers import table
@@ -234,9 +235,7 @@ def grid_regrid_coarsen(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(
             F.count(F.lit(1)).alias("n_points"),
-            (F.sum(F.col("value").cast("decimal(30,2)")).cast("double") / F.count("value")).alias(
-                "mean_value"
-            ),
+            (exact_sum("value", 2) / F.count("value")).alias("mean_value"),
         )
         .orderBy("cell_lat", "cell_lon")
     )
@@ -429,10 +428,7 @@ def grid_zonal_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("zone")
         .agg(
             F.count(F.lit(1)).alias("n_points"),
-            (
-                F.sum(F.col("value").cast("decimal(30,2)")).cast("double")
-                / F.count("value")
-            ).alias("mean_value"),
+            (exact_sum("value", 2) / F.count("value")).alias("mean_value"),
             F.min("value").alias("min_value"),
             F.max("value").alias("max_value"),
         )
@@ -638,19 +634,13 @@ def grid_area_weighted_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     corners = la.crossJoin(lo).select("lat", "lon", value.alias("value"))
     w = F.cos(F.col("lat") * F.lit(3.141592653589793) / 180.0)
     return (
-        corners.select(
-            (F.floor(F.col("lat") / 10.0) * 10).cast("int").alias("band"),
-            (w * F.col("value")).cast("decimal(30,12)").alias("wv"),
-            w.cast("decimal(30,12)").alias("w"),
-            F.col("value").cast("decimal(30,6)").alias("v"),
-        )
-        .groupBy("band")
+        corners.groupBy((F.floor(F.col("lat") / 10.0) * 10).cast("int").alias("band"))
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_cells"),
-            F.round(F.sum("wv").cast("double") / F.sum("w").cast("double"), 6).alias(
+            F.round(exact_sum(w * F.col("value"), 12) / exact_sum(w, 12), 6).alias(
                 "weighted_mean"
             ),
-            F.round(F.sum("v").cast("double") / F.count(F.lit(1)), 6).alias("simple_mean"),
+            F.round(exact_sum("value", 6) / F.count(F.lit(1)), 6).alias("simple_mean"),
         )
         .orderBy("band")
     )

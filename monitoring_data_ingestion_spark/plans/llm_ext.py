@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..functions.deterministic import exact_sum
 from ..sources.readers import table
 from .analytics import _SHINGLES_SQL, _TOKENS_SQL, _shingled_docs, _tokens
 from .catalog import query
@@ -577,10 +578,9 @@ def sample_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id")
         .agg(
             F.sum("c").cast("bigint").alias("n_tokens"),
-            F.round(
-                F.sum(F.col("c") * F.col("r").cast("decimal(18,6)")).cast("double"),
-                6,
-            ).alias("log_weight"),
+            F.round(exact_sum(F.col("c") * F.col("r").cast("decimal(18,6)"), 6), 6).alias(
+                "log_weight"
+            ),
         )
     )
     u = (

@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ..functions.deterministic import dsum, dsum_expr
+from ..functions.deterministic import exact_sum, exact_sum_sql
 from ..operators.zorder import morton2, morton2_sql
 from ..sources.readers import table
 from .catalog import query
@@ -88,7 +88,7 @@ SELECT o_orderpriority,
        CAST(COUNT(*) FILTER (WHERE o_totalprice > 150000) AS BIGINT) AS n_large,
        CAST(SUM(CAST(o_totalprice AS DECIMAL(30,2)))
             FILTER (WHERE year(o_orderdate) < 1997) AS DOUBLE) AS early_revenue,
-       {dsum_expr('o_totalprice', 2)} AS total_revenue
+       {exact_sum_sql('o_totalprice', 2)} AS total_revenue
 FROM orders
 GROUP BY o_orderpriority
 ORDER BY o_orderpriority
@@ -106,14 +106,10 @@ def agg_filter_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.when(F.col("o_orderstatus") == "F", 1)).alias("n_finished"),
             F.count(F.when(F.col("o_totalprice") > 150000, 1)).alias("n_large"),
-            F.sum(
-                F.when(F.year("o_orderdate") < 1997, F.col("o_totalprice")).cast(
-                    "decimal(30,2)"
-                )
-            )
-            .cast("double")
-            .alias("early_revenue"),
-            dsum("o_totalprice", 2).alias("total_revenue"),
+            exact_sum(F.when(F.year("o_orderdate") < 1997, F.col("o_totalprice")), 2).alias(
+                "early_revenue"
+            ),
+            exact_sum("o_totalprice", 2).alias("total_revenue"),
         )
         .orderBy("o_orderpriority")
     )
@@ -291,10 +287,10 @@ def agg_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
         l.groupBy("l_returnflag")
         .agg(
             (
-                dsum(F.col("l_extendedprice") * F.col("l_quantity"), 4)
-                / dsum("l_quantity", 2)
+                exact_sum(F.col("l_extendedprice") * F.col("l_quantity"), 4)
+                / exact_sum("l_quantity", 2)
             ).alias("wavg_price"),
-            dsum("l_quantity", 2).alias("total_weight"),
+            exact_sum("l_quantity", 2).alias("total_weight"),
         )
         .orderBy("l_returnflag")
     )
@@ -730,7 +726,7 @@ def agg_share_of_total(spark: SparkSession, sf_dir: str) -> DataFrame:
         c.join(F.broadcast(n), c["c_nationkey"] == n["n_nationkey"])
         .join(F.broadcast(r), n["n_regionkey"] == r["r_regionkey"])
         .groupBy(F.col("r_name").alias("region"), F.col("n_name").alias("nation"))
-        .agg(F.sum(F.col("c_acctbal").cast("decimal(30,2)")).cast("double").alias("balance"))
+        .agg(exact_sum("c_acctbal", 2).alias("balance"))
     )
     w_region = Window.partitionBy("region")
     w_all = Window.partitionBy()
@@ -788,9 +784,7 @@ def window_ntile_stratify(spark: SparkSession, sf_dir: str) -> DataFrame:
         ranked.groupBy("quartile")
         .agg(
             F.count(F.lit(1)).alias("n_orders"),
-            F.sum(F.col("o_totalprice").cast("decimal(30,2)"))
-            .cast("double")
-            .alias("quartile_value"),
+            exact_sum("o_totalprice", 2).alias("quartile_value"),
             F.min("o_totalprice").alias("min_price"),
             F.max("o_totalprice").alias("max_price"),
         )
@@ -1528,9 +1522,7 @@ def dq_schema_profile_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             if kind == "num":
                 aggs.append(
-                    F.round(
-                        F.sum(h.cast("decimal(18,2)")).cast("double") / F.count(h), 6
-                    ).alias(f"{col}__mean__{tag}")
+                    F.round(exact_sum(h, 2, 16) / F.count(h), 6).alias(f"{col}__mean__{tag}")
                 )
             else:
                 aggs.append(

@@ -35,7 +35,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ..functions.deterministic import limb_sums, sum_from_limbs
+from ..functions.deterministic import exact_sum
 from ..session_cache import memo_plan, register_cache
 from ..sources.readers import table
 from .catalog import query
@@ -279,9 +279,8 @@ def knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build_codebook() -> DataFrame:
         expanded = v.select("label", F.posexplode("e").alias("pos", "val"))
         cent = expanded.groupBy("label", "pos").agg(
-            *limb_sums(F.col("val"), "_c"),
-            F.count("val").alias("_n"),
-        ).select("label", "pos", (sum_from_limbs("_c", 8) / F.col("_n")).alias("c"))
+            (exact_sum("val", 8, 6) / F.count("val")).alias("c")
+        )
         return (
             cent.groupBy("label")
             .agg(F.array_sort(F.collect_list(F.struct("pos", "c"))).alias("pc"))
@@ -513,7 +512,7 @@ def knn_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     cent_long = (
         expanded.groupBy("cid", "pos")
         .agg(
-            (F.sum(F.col("val").cast("decimal(30,8)")).cast("double") / F.count("val")).alias("c")
+            (exact_sum("val", 8) / F.count("val")).alias("c")
         )
         .localCheckpoint()
     )
@@ -546,9 +545,7 @@ def knn_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(F.col("bucket").alias("cid"), F.posexplode("e").alias("pos", "val"))
             .groupBy("cid", "pos")
             .agg(
-                (
-                    F.sum(F.col("val").cast("decimal(30,8)")).cast("double") / F.count("val")
-                ).alias("m")
+                (exact_sum("val", 8) / F.count("val")).alias("m")
             )
         )
         cent_long = (
@@ -819,7 +816,7 @@ def knn_pq_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("vec_id") != F.col("query_id"))
         .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
-        .agg(F.sum(F.col("ldot").cast("decimal(30,12)")).cast("double").alias("approx_dot"))
+        .agg(exact_sum("ldot", 12).alias("approx_dot"))
     )
     return _pq_rank(v, adot)
 
@@ -843,7 +840,7 @@ def _pq_model(v: DataFrame):
     )
     subexp = subs.select("label", "m", F.posexplode("x").alias("pos", "val"))
     subcent_long = subexp.groupBy("label", "m", "pos").agg(
-        (F.sum(F.col("val").cast("decimal(30,8)")).cast("double") / F.count("val")).alias("c")
+        (exact_sum("val", 8) / F.count("val")).alias("c")
     )
     subcent = (
         subcent_long.groupBy(F.col("label").alias("clabel"), "m")
@@ -992,7 +989,7 @@ def knn_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Coarse codebook: per-label centroids (same as knn_ivf).
     expanded = v.select("label", F.posexplode("e").alias("pos", "val"))
     cent = expanded.groupBy("label", "pos").agg(
-        (F.sum(F.col("val").cast("decimal(30,8)")).cast("double") / F.count("val")).alias("c")
+        (exact_sum("val", 8) / F.count("val")).alias("c")
     )
     centv = (
         cent.groupBy("label")
@@ -1013,7 +1010,7 @@ def knn_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.col("clabel") == F.col("code")),
         )
         .groupBy("query_id", "neighbor_id")
-        .agg(F.sum(F.col("ldot").cast("decimal(30,12)")).cast("double").alias("approx_dot"))
+        .agg(exact_sum("ldot", 12).alias("approx_dot"))
     )
     return _pq_rank(v, adot)
 
@@ -1075,8 +1072,8 @@ def _label_codebook(v: DataFrame) -> DataFrame:
     # r16: exact mean via two-limb long sums (bit-identical to the
     # decimal(30,8) route, primitive-long aggregate updates — see knn_ivf).
     cent = expanded.groupBy("label", "pos").agg(
-        *limb_sums(F.col("val"), "_c"), F.count("val").alias("_n")
-    ).select("label", "pos", (sum_from_limbs("_c", 8) / F.col("_n")).alias("c"))
+        (exact_sum("val", 8, 6) / F.count("val")).alias("c")
+    )
     return (
         cent.groupBy("label")
         .agg(F.array_sort(F.collect_list(F.struct("pos", "c"))).alias("pc"))
@@ -1253,7 +1250,6 @@ def dedup_semantic_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- distributed PCA: fixed-size moment aggregation + in-plan power iteration
 
 PCA_ITERS = 6  # fixed budget: the 6-step iterate IS the declared semantics
-_PCA_DEC = "decimal(30,12)"  # ≤13 sig digits — portable double→decimal zone
 
 # The corpus-sized moments pass sums in FIXED-POINT LONGS instead of
 # decimal: each product rounds to an integer at 1e10 scale, so the hash
@@ -1427,22 +1423,20 @@ def embedding_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
         u = (
             cov.join(F.broadcast(v.select(F.col("i").alias("j"), "v")), "j")
             .groupBy("i")
-            .agg(F.sum((F.col("c") * F.col("v")).cast(_PCA_DEC)).cast("double").alias("u"))
+            .agg(exact_sum(F.col("c") * F.col("v"), 12).alias("u"))
             .localCheckpoint()
         )
-        nrm = F.sqrt(
-            F.sum((F.col("u") * F.col("u")).cast(_PCA_DEC)).over(w_all).cast("double")
-        )
+        nrm = F.sqrt(exact_sum(F.col("u") * F.col("u"), 12, over=w_all))
         v = u.select("i", (F.col("u") / nrm).alias("v"))
     x_long = emb.select("vec_id", F.posexplode("e").alias("i", "x"))
     proj = (
         x_long.join(F.broadcast(v), "i")
         .groupBy("vec_id")
-        .agg(F.sum((F.col("x") * F.col("v")).cast(_PCA_DEC)).cast("double").alias("xv"))
+        .agg(exact_sum(F.col("x") * F.col("v"), 12).alias("xv"))
     )
     bias = (
         mu.join(F.broadcast(v), "i")
-        .agg(F.sum((F.col("mu") * F.col("v")).cast(_PCA_DEC)).cast("double").alias("b"))
+        .agg(exact_sum(F.col("mu") * F.col("v"), 12).alias("b"))
     )
     return (
         proj.join(emb.select("vec_id", "label"), "vec_id")

@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ..functions.deterministic import dsum, dsum_expr
+from ..functions.deterministic import exact_sum, exact_sum_sql
 from ..grid.fixture import grid_oracle_sql
 from ..sources.readers import table
 from ..streaming.ops import purchase_click_interval_join, tumbling_window_agg
@@ -33,7 +33,7 @@ from .catalog import query
 SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS window_start,
        event_type,
        COUNT(*) AS n_events,
-       {dsum_expr('value', 6)} AS total_value
+       {exact_sum_sql('value', 6)} AS total_value
 FROM events
 GROUP BY 1, 2
 ORDER BY window_start, event_type
@@ -129,7 +129,7 @@ WITH grid AS (
 )
 SELECT CAST(window_start AS TIMESTAMP) AS window_start,
        COUNT(*) AS n_events,
-       {dsum_expr('value', 6)} / COUNT(value) AS mean_value
+       {exact_sum_sql('value', 6)} / COUNT(value) AS mean_value
 FROM grid GROUP BY 1 ORDER BY window_start
 """,
 )
@@ -166,7 +166,7 @@ SELECT CAST(MIN(ts) AS TIMESTAMP) AS session_start,
        CAST(MAX(ts) + INTERVAL 30 MINUTE AS TIMESTAMP) AS session_end,
        user_id,
        COUNT(*) AS n_events,
-       {dsum_expr('value', 6)} AS session_value
+       {exact_sum_sql('value', 6)} AS session_value
 FROM numbered
 GROUP BY user_id, session_id
 ORDER BY user_id, session_start
@@ -193,7 +193,7 @@ def stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
 SELECT user_id % 5 AS tier,
        COUNT(*) AS n_events,
-       {dsum_expr('value', 6)} AS total_value
+       {exact_sum_sql('value', 6)} AS total_value
 FROM events
 GROUP BY 1
 ORDER BY tier
@@ -220,7 +220,7 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     enriched = src.join(F.broadcast(static_tiers), "user_id")
     agg = enriched.groupBy("tier").agg(
         F.count(F.lit(1)).alias("n_events"),
-        dsum("value", 6).alias("total_value"),
+        exact_sum("value", 6).alias("total_value"),
     )
     out = run_available_now_to_memory(agg, output_mode="complete")
     return out.orderBy("tier")

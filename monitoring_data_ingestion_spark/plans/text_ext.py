@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..functions.deterministic import exact_sum
 from ..functions.strings import pii_match_count, redact_pii
 from ..sources.readers import table
 from .analytics import _TOKENS_SQL, _tokens, _widen_if_narrow
@@ -500,11 +501,7 @@ def text_ngram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         scored.groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_bigrams"),
-            F.round(
-                F.sum(F.col("nll").cast("decimal(18,6)")).cast("double")
-                / F.count(F.lit(1)),
-                6,
-            ).alias("lm_score"),
+            F.round(exact_sum("nll", 6, 12) / F.count(F.lit(1)), 6).alias("lm_score"),
         )
         .orderBy("doc_id")
     )
@@ -758,7 +755,7 @@ def text_classifier_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket = F.conv(F.substring(F.md5("tok"), 1, 4), 16, 10).cast("bigint") % CLS_BUCKETS
     w = (bucket * 13 % 7 - 3).cast("double") / 8
     scored = toks.select("doc_id", w.alias("w"))
-    mean = F.sum(F.col("w").cast("decimal(18,6)")).cast("double") / F.count(F.lit(1))
+    mean = exact_sum("w", 6, 12) / F.count(F.lit(1))
     return (
         scored.groupBy("doc_id")
         .agg(
@@ -1046,11 +1043,7 @@ def text_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
         tiled.groupBy(bucket.alias("bucket"), F.col("tile").cast("int").alias("tile"))
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-            F.round(
-                F.sum(F.col("lm_score").cast("decimal(18,6)")).cast("double")
-                / F.count(F.lit(1)),
-                6,
-            ).alias("mean_lm_score"),
+            F.round(exact_sum("lm_score", 6, 12) / F.count(F.lit(1)), 6).alias("mean_lm_score"),
             F.round(F.min("lm_score"), 6).alias("min_lm_score"),
             F.round(F.max("lm_score"), 6).alias("max_lm_score"),
             F.sum("n_bigrams").cast("bigint").alias("total_bigrams"),
@@ -1138,11 +1131,7 @@ def text_jsd_domain_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         grid.select("source", tp.alias("tp"), tq.alias("tq"))
         .groupBy("source")
         .agg(
-            F.round(
-                F.sum(F.col("tp").cast("decimal(18,6)")).cast("double")
-                + F.sum(F.col("tq").cast("decimal(18,6)")).cast("double"),
-                6,
-            ).alias("jsd_nats")
+            F.round(exact_sum("tp", 6, 12) + exact_sum("tq", 6, 12), 6).alias("jsd_nats")
         )
         .orderBy("source")
     )

@@ -15,14 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ..functions.deterministic import (
-    davg,
-    davg_narrow,
-    dsum,
-    dsum_expr,
-    limb_sums,
-    sum_from_limbs,
-)
+from ..functions.deterministic import exact_sum, exact_sum_sql
 from ..sources.readers import table
 from .catalog import query
 
@@ -35,7 +28,7 @@ from .catalog import query
 SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS window_start,
        event_type,
        COUNT(*) AS n_events,
-       {dsum_expr('value', 6)} AS total_value
+       {exact_sum_sql('value', 6)} AS total_value
 FROM events
 GROUP BY 1, 2
 ORDER BY window_start, event_type
@@ -64,13 +57,7 @@ def ts_tumbling_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            *limb_sums(F.col("value"), "_tv", scale=6, int_digits=12),
-        )
-        .select(
-            "window_start",
-            "event_type",
-            "n_events",
-            sum_from_limbs("_tv", 6).alias("total_value"),
+            exact_sum("value", 6, 12).alias("total_value"),
         )
         .orderBy("window_start", "event_type")
     )
@@ -124,10 +111,7 @@ def ts_moving_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     return e.select(
         "event_id",
         "user_id",
-        (
-            F.sum(F.col("value").cast("decimal(30,6)")).over(w).cast("double")
-            / F.count("value").over(w)
-        ).alias("moving_avg"),
+        (exact_sum("value", 6, over=w) / F.count("value").over(w)).alias("moving_avg"),
     ).orderBy("user_id", "event_id")
 
 
@@ -150,7 +134,7 @@ SELECT user_id, CAST(session_id AS BIGINT) AS session_id,
        CAST(MIN(ts) AS TIMESTAMP) AS session_start,
        CAST(MAX(ts) AS TIMESTAMP) AS session_end,
        COUNT(*) AS n_events,
-       {dsum_expr('value', 6)} AS session_value
+       {exact_sum_sql('value', 6)} AS session_value
 FROM numbered
 GROUP BY user_id, session_id
 ORDER BY user_id, session_id
@@ -185,15 +169,7 @@ def ts_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("ts").alias("session_start"),
             F.max("ts").alias("session_end"),
             F.count(F.lit(1)).alias("n_events"),
-            *limb_sums(F.col("value"), "_sv", scale=6, int_digits=12),
-        )
-        .select(
-            "user_id",
-            "session_id",
-            "session_start",
-            "session_end",
-            "n_events",
-            sum_from_limbs("_sv", 6).alias("session_value"),
+            exact_sum("value", 6, 12).alias("session_value"),
         )
         .orderBy("user_id", "session_id")
     )
@@ -271,12 +247,12 @@ WITH monthly AS (
   SELECT o_orderpriority AS series,
          CAST(date_trunc('month', o_orderdate) AS TIMESTAMP) AS month_start,
          month(o_orderdate) AS month_of_year,
-         {dsum_expr('o_totalprice', 2)} / COUNT(o_totalprice) AS monthly_avg
+         {exact_sum_sql('o_totalprice', 2)} / COUNT(o_totalprice) AS monthly_avg
   FROM orders
   GROUP BY 1, 2, 3
 ), normals AS (
   SELECT series, month_of_year,
-         {dsum_expr('monthly_avg', 8)} / COUNT(monthly_avg) AS normal_value
+         {exact_sum_sql('monthly_avg', 8)} / COUNT(monthly_avg) AS normal_value
   FROM monthly GROUP BY 1, 2
 )
 SELECT m.series AS series, m.month_start AS month_start,
@@ -310,11 +286,11 @@ def era5_monthly_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderpriority").alias("series"),
         F.date_trunc("month", "o_orderdate").alias("month_start"),
         F.month("o_orderdate").alias("month_of_year"),
-    ).agg(davg_narrow("o_totalprice", 2, 6).alias("monthly_avg"))
+    ).agg((exact_sum("o_totalprice", 2, 6) / F.count("o_totalprice")).alias("monthly_avg"))
     # Scale 8 keeps int_digits+scale within double's ~15 significant
     # digits, so the decimal quantization is engine-portable.
     normals = monthly.groupBy("series", "month_of_year").agg(
-        davg("monthly_avg", 8).alias("normal_value")
+        (exact_sum("monthly_avg", 8) / F.count("monthly_avg")).alias("normal_value")
     )
     return (
         monthly.join(F.broadcast(normals), ["series", "month_of_year"])
@@ -336,7 +312,7 @@ def era5_monthly_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
 SELECT event_type,
        COUNT(*) AS n,
-       {dsum_expr("CAST(json_extract_string(props, '$.k') AS BIGINT)", 0)} AS sum_k
+       {exact_sum_sql("CAST(json_extract_string(props, '$.k') AS BIGINT)", 0)} AS sum_k
 FROM events
 GROUP BY event_type ORDER BY event_type
 """,
@@ -349,7 +325,7 @@ def ts_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     k = F.get_json_object("props", "$.k").cast("bigint")
     return (
         e.groupBy("event_type")
-        .agg(F.count(F.lit(1)).alias("n"), dsum(k, 0).alias("sum_k"))
+        .agg(F.count(F.lit(1)).alias("n"), exact_sum(k, 0).alias("sum_k"))
         .orderBy("event_type")
     )
 
@@ -416,7 +392,7 @@ WITH bounds AS (
   CROSS JOIN (SELECT DISTINCT event_type FROM events) et
 ), hourly AS (
   SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS hour, event_type,
-         COUNT(*) AS n, {dsum_expr('value', 6)} AS total
+         COUNT(*) AS n, {exact_sum_sql('value', 6)} AS total
   FROM events GROUP BY 1, 2
 )
 SELECT s.hour AS hour, s.event_type AS event_type,
@@ -457,7 +433,7 @@ def ts_gap_fill_ffill(spark: SparkSession, sf_dir: str) -> DataFrame:
     spine = spine_hours.crossJoin(F.broadcast(types))
     hourly = e.groupBy(
         F.date_trunc("hour", "ts").alias("hour"), "event_type"
-    ).agg(F.count(F.lit(1)).alias("n"), dsum("value", 6).alias("total"))
+    ).agg(F.count(F.lit(1)).alias("n"), exact_sum("value", 6).alias("total"))
     w = (
         Window.partitionBy("event_type")
         .orderBy("hour")
@@ -616,9 +592,9 @@ def ts_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
 WITH stats AS (
   SELECT event_type,
-         {dsum_expr('value', 6)} / COUNT(value) AS mu,
-         SQRT(({dsum_expr('value * value', 6)} -
-               {dsum_expr('value', 6)} * {dsum_expr('value', 6)} / COUNT(value))
+         {exact_sum_sql('value', 6)} / COUNT(value) AS mu,
+         SQRT(({exact_sum_sql('value * value', 6)} -
+               {exact_sum_sql('value', 6)} * {exact_sum_sql('value', 6)} / COUNT(value))
               / (COUNT(value) - 1)) AS sigma
   FROM events GROUP BY event_type
 )
@@ -641,8 +617,8 @@ def ts_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     e = table(spark, sf_dir, "events")
     n = F.count("value")
-    s1 = dsum("value", 6)
-    s2 = dsum(F.col("value") * F.col("value"), 6)
+    s1 = exact_sum("value", 6)
+    s2 = exact_sum(F.col("value") * F.col("value"), 6)
     stats = e.groupBy("event_type").agg(
         (s1 / n).alias("mu"),
         F.sqrt((s2 - s1 * s1 / n) / (n - F.lit(1))).alias("sigma"),
@@ -1180,14 +1156,13 @@ def ts_level_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
     order_w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     pre_f = order_w.rowsBetween(-10, -1)
     post_f = order_w.rowsBetween(1, 10)
-    dec = F.col("value").cast("decimal(18,6)")
     w = e.select(
         "user_id",
         "event_id",
         "ts",
-        (F.sum(dec).over(pre_f).cast("double") / 10).alias("pre_mean"),
+        (exact_sum("value", 6, 12, over=pre_f) / 10).alias("pre_mean"),
         F.count(F.lit(1)).over(pre_f).alias("n_pre"),
-        (F.sum(dec).over(post_f).cast("double") / 10).alias("post_mean"),
+        (exact_sum("value", 6, 12, over=post_f) / 10).alias("post_mean"),
         F.count(F.lit(1)).over(post_f).alias("n_post"),
     )
     return (
@@ -1369,10 +1344,7 @@ def ts_trailing_window_range(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_id",
             "ts",
             F.count(F.lit(1)).over(w).alias("n_last_hour"),
-            F.sum(F.col("value").cast("decimal(30,6)"))
-            .over(w)
-            .cast("double")
-            .alias("sum_last_hour"),
+            exact_sum("value", 6, over=w).alias("sum_last_hour"),
         )
         .orderBy("user_id", "event_id")
     )
@@ -1453,13 +1425,8 @@ def ts_downsample_lttb(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor((F.col("rn") - 1) * LTTB_BUCKETS / F.col("n")).cast("bigint"),
     )
     avgs = b.groupBy("user_id", "bucket").agg(
-        (
-            F.sum(F.col("x").cast("decimal(38,0)")).cast("double") / F.count(F.lit(1))
-        ).alias("ax"),
-        (
-            F.sum(F.col("value").cast("decimal(30,6)")).cast("double")
-            / F.count(F.lit(1))
-        ).alias("ay"),
+        (exact_sum("x", 0, 38) / F.count(F.lit(1))).alias("ax"),
+        (exact_sum("value", 6) / F.count(F.lit(1))).alias("ay"),
     )
     pa = F.broadcast(
         avgs.select(
@@ -1650,7 +1617,7 @@ def ts_event_sequence_pattern(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
 WITH hourly AS (
   SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS hour_ts,
-         {dsum_expr('value', 6)} / COUNT(value) AS v
+         {exact_sum_sql('value', 6)} / COUNT(value) AS v
   FROM events GROUP BY 1
 ), tr AS (
   SELECT hour_ts, v,
@@ -1695,16 +1662,14 @@ def ts_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     e = table(spark, sf_dir, "events")
     hourly = e.groupBy(F.date_trunc("hour", "ts").alias("hour_ts")).agg(
-        davg("value", 6).alias("v")
+        (exact_sum("value", 6) / F.count("value")).alias("v")
     )
     w = Window.orderBy("hour_ts").rowsBetween(-12, 12)
     tr = hourly.select(
         "hour_ts",
         "v",
         F.count(F.lit(1)).over(w).alias("wn"),
-        (F.sum(F.col("v").cast("decimal(30,12)")).over(w).cast("double") / 25.0).alias(
-            "trend"
-        ),
+        (exact_sum("v", 12, over=w) / 25.0).alias("trend"),
     )
     detrended = tr.filter(F.col("wn") == 25).select(
         "hour_ts",
@@ -1714,9 +1679,7 @@ def ts_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.hour("hour_ts").cast("int").alias("hod"),
     )
     seasonal = detrended.groupBy("hod").agg(
-        (F.sum(F.col("resid").cast("decimal(30,12)")).cast("double") / F.count(F.lit(1))).alias(
-            "s"
-        )
+        (exact_sum("resid", 12) / F.count(F.lit(1))).alias("s")
     )
     return (
         detrended.join(F.broadcast(seasonal), "hod")
@@ -1741,7 +1704,7 @@ CUSUM_H = 60.0  # alarm threshold ≈ 5σ of the accumulated drift
     oracle=f"""
 WITH hourly AS (
   SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS hour_ts,
-         ROUND({dsum_expr('value', 6)} / COUNT(value), 6) AS v
+         ROUND({exact_sum_sql('value', 6)} / COUNT(value), 6) AS v
   FROM events GROUP BY 1
 ), mu AS (
   SELECT CAST(SUM(CAST(v AS DECIMAL(30,12))) AS DOUBLE) / COUNT(*) AS mu FROM hourly
@@ -1787,11 +1750,9 @@ def ts_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     e = table(spark, sf_dir, "events")
     hourly = e.groupBy(F.date_trunc("hour", "ts").alias("hour_ts")).agg(
-        F.round(davg("value", 6), 6).alias("v")
+        F.round(exact_sum("value", 6) / F.count("value"), 6).alias("v")
     )
-    mu = hourly.agg(
-        (F.sum(F.col("v").cast("decimal(30,12)")).cast("double") / F.count(F.lit(1))).alias("mu")
-    )
+    mu = hourly.agg((exact_sum("v", 12) / F.count(F.lit(1))).alias("mu"))
     w_cum = Window.orderBy("hour_ts").rowsBetween(Window.unboundedPreceding, 0)
     p_up = F.sum(
         F.round(F.col("v") - F.col("mu") - CUSUM_K, 6).cast("decimal(30,12)")
@@ -1825,7 +1786,7 @@ ACF_MAX_LAG = 6
     oracle=f"""
 WITH hourly AS (
   SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS hour_ts,
-         ROUND({dsum_expr('value', 6)} / COUNT(value), 6) AS v
+         ROUND({exact_sum_sql('value', 6)} / COUNT(value), 6) AS v
   FROM events GROUP BY 1
 ), mu AS (
   SELECT CAST(SUM(CAST(v AS DECIMAL(30,12))) AS DOUBLE) / COUNT(*) AS mu FROM hourly
@@ -1868,18 +1829,14 @@ def ts_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     e = table(spark, sf_dir, "events")
     hourly = e.groupBy(F.date_trunc("hour", "ts").alias("hour_ts")).agg(
-        F.round(davg("value", 6), 6).alias("v")
+        F.round(exact_sum("value", 6) / F.count("value"), 6).alias("v")
     )
-    mu = hourly.agg(
-        (F.sum(F.col("v").cast("decimal(30,12)")).cast("double") / F.count(F.lit(1))).alias("mu")
-    )
+    mu = hourly.agg((exact_sum("v", 12) / F.count(F.lit(1))).alias("mu"))
     dev = hourly.crossJoin(F.broadcast(mu)).select(
         "hour_ts", F.round(F.col("v") - F.col("mu"), 6).alias("d")
     )
     denom = dev.agg(
-        F.sum(F.round(F.col("d") * F.col("d"), 6).cast("decimal(30,6)"))
-        .cast("double")
-        .alias("den")
+        exact_sum(F.round(F.col("d") * F.col("d"), 6), 6).alias("den")
     )
     lags = dev.sparkSession.range(1, ACF_MAX_LAG + 1).select(
         F.col("id").cast("int").alias("lag")
@@ -1899,9 +1856,7 @@ def ts_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_pairs"),
             F.round(
-                F.sum(F.round(F.col("d") * F.col("dl"), 6).cast("decimal(30,6)"))
-                .cast("double")
-                / F.min("den"),
+                exact_sum(F.round(F.col("d") * F.col("dl"), 6), 6) / F.min("den"),
                 6,
             ).alias("acf"),
         )

@@ -15,16 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ..functions.deterministic import (
-    davg,
-    dmoney,
-    dmoney_expr,
-    dsum,
-    dsum_expr,
-    limb_sums,
-    money_from_limbs,
-    sum_from_limbs,
-)
+from ..functions.deterministic import exact_sum, exact_sum_sql
 from ..sources.readers import table
 from .catalog import query
 
@@ -39,13 +30,13 @@ from .catalog import query
     tags=("agg", "filter"),
     oracle=f"""
 SELECT l_returnflag, l_linestatus,
-       {dsum_expr('l_quantity', 2)} AS sum_qty,
-       {dsum_expr('l_extendedprice', 2)} AS sum_base_price,
-       {dmoney_expr('l_extendedprice * (1 - l_discount)')} AS sum_disc_price,
-       {dmoney_expr('(l_extendedprice * (1 - l_discount)) * (1 + l_tax)')} AS sum_charge,
-       {dsum_expr('l_quantity', 2)} / COUNT(l_quantity) AS avg_qty,
-       {dsum_expr('l_extendedprice', 2)} / COUNT(l_extendedprice) AS avg_price,
-       {dsum_expr('l_discount', 6)} / COUNT(l_discount) AS avg_disc,
+       {exact_sum_sql('l_quantity', 2)} AS sum_qty,
+       {exact_sum_sql('l_extendedprice', 2)} AS sum_base_price,
+       {exact_sum_sql('l_extendedprice * (1 - l_discount)', 8, cents=True)} AS sum_disc_price,
+       {exact_sum_sql('(l_extendedprice * (1 - l_discount)) * (1 + l_tax)', 8, cents=True)} AS sum_charge,
+       {exact_sum_sql('l_quantity', 2)} / COUNT(l_quantity) AS avg_qty,
+       {exact_sum_sql('l_extendedprice', 2)} / COUNT(l_extendedprice) AS avg_price,
+       {exact_sum_sql('l_discount', 6)} / COUNT(l_discount) AS avg_disc,
        COUNT(*) AS count_order
 FROM lineitem
 WHERE l_shipdate <= TIMESTAMP '1998-09-02'
@@ -79,33 +70,20 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     l = table(spark, sf_dir, "lineitem")
     disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     charge = disc_price * (1 + F.col("l_tax"))
-    agg = (
+    sum_qty = exact_sum("l_quantity", 2, 6)
+    sum_price = exact_sum("l_extendedprice", 2, 6)
+    return (
         l.filter(F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp"))
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
-            F.sum(F.col("l_quantity").cast("decimal(8,2)")).alias("_sq"),
-            F.sum(F.col("l_extendedprice").cast("decimal(8,2)")).alias("_sp"),
-            *limb_sums(disc_price, "_dp"),
-            *limb_sums(charge, "_ch"),
-            F.sum(F.col("l_discount").cast("decimal(8,6)")).alias("_sd"),
-            F.count("l_quantity").alias("_cq"),
-            F.count("l_extendedprice").alias("_cp"),
-            F.count("l_discount").alias("_cd"),
+            sum_qty.alias("sum_qty"),
+            sum_price.alias("sum_base_price"),
+            exact_sum(disc_price, 8, 6, cents=True).alias("sum_disc_price"),
+            exact_sum(charge, 8, 6, cents=True).alias("sum_charge"),
+            (sum_qty / F.count("l_quantity")).alias("avg_qty"),
+            (sum_price / F.count("l_extendedprice")).alias("avg_price"),
+            (exact_sum("l_discount", 6, 2) / F.count("l_discount")).alias("avg_disc"),
             F.count(F.lit(1)).alias("count_order"),
-        )
-    )
-    return (
-        agg.select(
-            "l_returnflag",
-            "l_linestatus",
-            F.col("_sq").cast("double").alias("sum_qty"),
-            F.col("_sp").cast("double").alias("sum_base_price"),
-            money_from_limbs("_dp").alias("sum_disc_price"),
-            money_from_limbs("_ch").alias("sum_charge"),
-            (F.col("_sq").cast("double") / F.col("_cq")).alias("avg_qty"),
-            (F.col("_sp").cast("double") / F.col("_cp")).alias("avg_price"),
-            (F.col("_sd").cast("double") / F.col("_cd")).alias("avg_disc"),
-            "count_order",
         )
         .coalesce(1)
         .sortWithinPartitions("l_returnflag", "l_linestatus")
@@ -118,7 +96,7 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("join", "agg", "topk"),
     oracle=f"""
 SELECT l.l_orderkey AS l_orderkey,
-       {dsum_expr('l.l_extendedprice * (1 - l.l_discount)', 8)} AS revenue,
+       {exact_sum_sql('l.l_extendedprice * (1 - l.l_discount)', 8)} AS revenue,
        o.o_orderdate AS o_orderdate
 FROM customer c
 JOIN orders o ON c.c_custkey = o.o_custkey
@@ -139,7 +117,8 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrderedAndProject (no global sort).
 
     r16: revenue uses the exact limb sum (see q1) — long arithmetic per
-    row instead of BigDecimal, bit-identical to dsum(·, 8).
+    row instead of BigDecimal, bit-identical to exact_sum(·, 8)
+    with no declared domain.
     """
     c = table(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
     o = table(spark, sf_dir, "orders").filter(
@@ -152,8 +131,10 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         c.join(o, c.c_custkey == o.o_custkey)
         .join(l, l.l_orderkey == o.o_orderkey)
         .groupBy("l_orderkey", "o_orderdate")
-        .agg(*limb_sums(F.col("l_extendedprice") * (1 - F.col("l_discount")), "_rev"))
-        .select("l_orderkey", sum_from_limbs("_rev", 8).alias("revenue"), "o_orderdate")
+        .agg(
+            exact_sum(F.col("l_extendedprice") * (1 - F.col("l_discount")), 8, 6).alias("revenue")
+        )
+        .select("l_orderkey", "revenue", "o_orderdate")
         .orderBy(F.desc("revenue"), "l_orderkey")
         .limit(10)
     )
@@ -165,7 +146,7 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("join", "agg"),
     oracle=f"""
 SELECT n.n_name AS n_name,
-       {dmoney_expr('l.l_extendedprice * (1 - l.l_discount)')} AS revenue
+       {exact_sum_sql('l.l_extendedprice * (1 - l.l_discount)', 8, cents=True)} AS revenue
 FROM customer c
 JOIN orders o ON c.c_custkey = o.o_custkey
 JOIN lineitem l ON l.l_orderkey = o.o_orderkey
@@ -187,8 +168,9 @@ def q5_region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     skew).
 
     r16: revenue uses the exact limb sum (see q1) — bit-identical to
-    dmoney, long arithmetic per row; the ≤|nations|-row result sorts in
-    one partition instead of a range exchange.
+    exact_sum(·, 8, cents=True) with no declared domain, long arithmetic
+    per row; the ≤|nations|-row result sorts in one partition instead of
+    a range exchange.
     """
     c = table(spark, sf_dir, "customer")
     o = table(spark, sf_dir, "orders").filter(
@@ -210,8 +192,10 @@ def q5_region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey"))
         .join(F.broadcast(r), F.col("n_regionkey") == F.col("r_regionkey"))
         .groupBy("n_name")
-        .agg(*limb_sums(F.col("l_extendedprice") * (1 - F.col("l_discount")), "_rev"))
-        .select("n_name", money_from_limbs("_rev").alias("revenue"))
+        .agg(
+            exact_sum(F.col("l_extendedprice") * (1 - F.col("l_discount")), 8, 6, cents=True)
+            .alias("revenue")
+        )
         .coalesce(1)
         .sortWithinPartitions(F.desc("revenue"), "n_name")
     )
@@ -433,10 +417,10 @@ def join_positional_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
 SELECT l_returnflag,
        COUNT(*) AS n_rows,
        COUNT(DISTINCT l_suppkey) AS n_supp,
-       {dsum_expr('l_quantity', 2)} AS total_qty,
+       {exact_sum_sql('l_quantity', 2)} AS total_qty,
        CAST(MIN(l_extendedprice) AS DOUBLE) AS min_price,
        CAST(MAX(l_extendedprice) AS DOUBLE) AS max_price,
-       {dsum_expr('l_extendedprice', 2)} / COUNT(l_extendedprice) AS mean_price
+       {exact_sum_sql('l_extendedprice', 2)} / COUNT(l_extendedprice) AS mean_price
 FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag
 """,
 )
@@ -452,10 +436,10 @@ def agg_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).alias("n_rows"),
             F.countDistinct("l_suppkey").alias("n_supp"),
-            dsum("l_quantity", 2).alias("total_qty"),
+            exact_sum("l_quantity", 2).alias("total_qty"),
             F.min("l_extendedprice").alias("min_price"),
             F.max("l_extendedprice").alias("max_price"),
-            davg("l_extendedprice", 2).alias("mean_price"),
+            (exact_sum("l_extendedprice", 2) / F.count("l_extendedprice")).alias("mean_price"),
         )
         .orderBy("l_returnflag")
     )
@@ -466,8 +450,8 @@ def agg_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("agg",),
     oracle=f"""
 SELECT l_linestatus,
-       SQRT(({dsum_expr('l_quantity * l_quantity', 4)} -
-             {dsum_expr('l_quantity', 2)} * {dsum_expr('l_quantity', 2)} / COUNT(l_quantity))
+       SQRT(({exact_sum_sql('l_quantity * l_quantity', 4)} -
+             {exact_sum_sql('l_quantity', 2)} * {exact_sum_sql('l_quantity', 2)} / COUNT(l_quantity))
             / (COUNT(l_quantity) - 1)) AS sd_qty
 FROM lineitem GROUP BY l_linestatus ORDER BY l_linestatus
 """,
@@ -476,8 +460,8 @@ def agg_stddev(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sample stddev via exact decimal sums (deterministic across runs)."""
     l = table(spark, sf_dir, "lineitem")
     n = F.count("l_quantity")
-    s = dsum("l_quantity", 2)
-    s2 = dsum(F.col("l_quantity") * F.col("l_quantity"), 4)
+    s = exact_sum("l_quantity", 2)
+    s2 = exact_sum(F.col("l_quantity") * F.col("l_quantity"), 4)
     return (
         l.groupBy("l_linestatus")
         .agg(F.sqrt((s2 - s * s / n) / (n - F.lit(1))).alias("sd_qty"))
@@ -512,7 +496,7 @@ def agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("agg", "cube"),
     oracle=f"""
 SELECT o_orderstatus AS o_orderstatus, o_orderpriority AS o_orderpriority,
-       COUNT(*) AS n, {dsum_expr('o_totalprice', 2)} AS total
+       COUNT(*) AS n, {exact_sum_sql('o_totalprice', 2)} AS total
 FROM orders
 GROUP BY CUBE (o_orderstatus, o_orderpriority)
 ORDER BY o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST
@@ -523,7 +507,7 @@ def agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = table(spark, sf_dir, "orders")
     return (
         o.cube("o_orderstatus", "o_orderpriority")
-        .agg(F.count(F.lit(1)).alias("n"), dsum("o_totalprice", 2).alias("total"))
+        .agg(F.count(F.lit(1)).alias("n"), exact_sum("o_totalprice", 2).alias("total"))
         .orderBy(
             F.col("o_orderstatus").asc_nulls_first(),
             F.col("o_orderpriority").asc_nulls_first(),
@@ -638,7 +622,7 @@ def window_running_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     return o.select(
         "o_custkey",
         "o_orderkey",
-        F.sum(F.col("o_totalprice").cast("decimal(30,2)")).over(w).cast("double").alias("running_total"),
+        exact_sum("o_totalprice", 2, over=w).alias("running_total"),
     ).orderBy("o_custkey", "o_orderkey")
 
 
@@ -861,7 +845,7 @@ def filter_bbox_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("filter", "null"),
     oracle=f"""
 SELECT l_returnflag,
-       {dsum_expr('CASE WHEN l_quantity <= 45 THEN l_quantity END', 2)} /
+       {exact_sum_sql('CASE WHEN l_quantity <= 45 THEN l_quantity END', 2)} /
          COUNT(CASE WHEN l_quantity <= 45 THEN l_quantity END) AS avg_valid,
        COUNT(*) - COUNT(CASE WHEN l_quantity <= 45 THEN l_quantity END) AS n_missing
 FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag
@@ -876,7 +860,7 @@ def project_null_sentinel(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         l.groupBy("l_returnflag")
         .agg(
-            (dsum(valid, 2) / F.count(valid)).alias("avg_valid"),
+            (exact_sum(valid, 2) / F.count(valid)).alias("avg_valid"),
             (F.count(F.lit(1)) - F.count(valid)).alias("n_missing"),
         )
         .orderBy("l_returnflag")

@@ -18,15 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ..functions.deterministic import (
-    davg,
-    dmoney,
-    dmoney_expr,
-    dsum,
-    dsum_expr,
-    limb_sums,
-    money_from_limbs,
-)
+from ..functions.deterministic import exact_sum, exact_sum_sql
 from ..sources.readers import table
 from .catalog import query
 
@@ -129,7 +121,7 @@ def q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     headline=True,
     tags=("agg", "filter"),
     oracle=f"""
-SELECT {dmoney_expr('l_extendedprice * l_discount')} AS revenue,
+SELECT {exact_sum_sql('l_extendedprice * l_discount', 8, cents=True)} AS revenue,
        COUNT(*) AS n_lines
 FROM lineitem
 WHERE l_shipdate >= TIMESTAMP '1996-01-01'
@@ -150,7 +142,8 @@ def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     r16: revenue sums through the exact two-limb long sum (see q1 —
     l_extendedprice·l_discount is non-negative and < 10^6 by TPC-H domain
-    bounds), bit-identical to dmoney with primitive-long updates.
+    bounds), bit-identical to exact_sum(·, 8, cents=True) with no declared
+    domain, with primitive-long updates.
     """
     l = table(spark, sf_dir, "lineitem")
     return (
@@ -161,10 +154,10 @@ def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.col("l_quantity") < 24)
         )
         .agg(
-            *limb_sums(F.col("l_extendedprice") * F.col("l_discount"), "_rev"),
+            exact_sum(F.col("l_extendedprice") * F.col("l_discount"), 8, 6, cents=True)
+            .alias("revenue"),
             F.count(F.lit(1)).alias("n_lines"),
         )
-        .select(money_from_limbs("_rev").alias("revenue"), "n_lines")
     )
 
 
@@ -173,7 +166,7 @@ def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("join", "agg"),
     oracle=f"""
 SELECT supp_nation, cust_nation, l_year,
-       {dsum_expr('volume', 8)} AS revenue
+       {exact_sum_sql('volume', 8)} AS revenue
 FROM (
   SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
          CAST(year(l.l_shipdate) AS BIGINT) AS l_year,
@@ -228,7 +221,7 @@ def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("l_year", F.year("l_shipdate").cast("bigint"))
         .withColumn("volume", F.col("l_extendedprice") * (1 - F.col("l_discount")))
         .groupBy("supp_nation", "cust_nation", "l_year")
-        .agg(dsum("volume", 8).alias("revenue"))
+        .agg(exact_sum("volume", 8).alias("revenue"))
         .orderBy("supp_nation", "cust_nation", "l_year")
     )
 
@@ -238,7 +231,7 @@ def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     headline=True,
     tags=("join", "agg"),
     oracle=f"""
-SELECT nation, o_year, {dmoney_expr('amount')} AS sum_profit
+SELECT nation, o_year, {exact_sum_sql('amount', 8, cents=True)} AS sum_profit
 FROM (
   SELECT n.n_name AS nation,
          CAST(year(o.o_orderdate) AS BIGINT) AS o_year,
@@ -282,7 +275,7 @@ def q9_profit_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("amount"),
         )
         .groupBy("nation", "o_year")
-        .agg(dmoney("amount").alias("sum_profit"))
+        .agg(exact_sum("amount", 8, cents=True).alias("sum_profit"))
         .orderBy("nation", F.desc("o_year"))
     )
 
@@ -292,7 +285,7 @@ def q9_profit_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("join", "agg", "topk"),
     oracle=f"""
 SELECT c.c_custkey AS c_custkey, c.c_name AS c_name,
-       {dsum_expr('l.l_extendedprice * (1 - l.l_discount)', 8)} AS revenue,
+       {exact_sum_sql('l.l_extendedprice * (1 - l.l_discount)', 8)} AS revenue,
        c.c_acctbal AS c_acctbal, n.n_name AS n_name
 FROM customer c
 JOIN orders o ON c.c_custkey = o.o_custkey
@@ -326,7 +319,7 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(l, F.col("l_orderkey") == F.col("o_orderkey"))
         .join(F.broadcast(n), F.col("c_nationkey") == F.col("n_nationkey"))
         .groupBy("c_custkey", "c_name", "c_acctbal", "n_name")
-        .agg(dsum(F.col("l_extendedprice") * (1 - F.col("l_discount")), 8).alias("revenue"))
+        .agg(exact_sum(F.col("l_extendedprice") * (1 - F.col("l_discount")), 8).alias("revenue"))
         .select("c_custkey", "c_name", "revenue", "c_acctbal", "n_name")
         .orderBy(F.desc("revenue"), "c_custkey")
         .limit(20)
@@ -337,8 +330,8 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q14_promo_revenue",
     tags=("join", "agg"),
     oracle=f"""
-SELECT 100.00 * {dsum_expr("CASE WHEN p.p_type = 'PROMO' THEN l.l_extendedprice * (1 - l.l_discount) ELSE 0 END", 8)}
-       / {dsum_expr('l.l_extendedprice * (1 - l.l_discount)', 8)} AS promo_revenue
+SELECT 100.00 * {exact_sum_sql("CASE WHEN p.p_type = 'PROMO' THEN l.l_extendedprice * (1 - l.l_discount) ELSE 0 END", 8)}
+       / {exact_sum_sql('l.l_extendedprice * (1 - l.l_discount)', 8)} AS promo_revenue
 FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
 WHERE l.l_shipdate >= TIMESTAMP '1997-03-01'
   AND l.l_shipdate < TIMESTAMP '1997-04-01'
@@ -360,7 +353,7 @@ def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     promo = F.when(F.col("p_type") == "PROMO", rev).otherwise(F.lit(0.0))
     return (
         l.join(F.broadcast(p), F.col("l_partkey") == F.col("p_partkey"))
-        .agg((F.lit(100.0) * dsum(promo, 8) / dsum(rev, 8)).alias("promo_revenue"))
+        .agg((F.lit(100.0) * exact_sum(promo, 8) / exact_sum(rev, 8)).alias("promo_revenue"))
     )
 
 
@@ -370,7 +363,7 @@ def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
 SELECT c.c_name AS c_name, c.c_custkey AS c_custkey, o.o_orderkey AS o_orderkey,
        CAST(o.o_orderdate AS TIMESTAMP) AS o_orderdate, o.o_totalprice AS o_totalprice,
-       {dsum_expr('l.l_quantity', 2)} AS total_qty
+       {exact_sum_sql('l.l_quantity', 2)} AS total_qty
 FROM customer c
 JOIN orders o ON c.c_custkey = o.o_custkey
 JOIN lineitem l ON o.o_orderkey = l.l_orderkey
@@ -396,7 +389,7 @@ def q18_large_volume_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     l = table(spark, sf_dir, "lineitem")
     big = (
         l.groupBy("l_orderkey")
-        .agg(F.sum(F.col("l_quantity").cast("decimal(30,2)")).alias("q"))
+        .agg(exact_sum("l_quantity", 2).alias("q"))
         .filter(F.col("q") > 210)
         .select(F.col("l_orderkey").alias("big_orderkey"))
     )
@@ -405,7 +398,7 @@ def q18_large_volume_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(c, F.col("c_custkey") == F.col("o_custkey"))
         .join(l, F.col("l_orderkey") == F.col("o_orderkey"))
         .groupBy("c_name", "c_custkey", "o_orderkey", "o_orderdate", "o_totalprice")
-        .agg(dsum("l_quantity", 2).alias("total_qty"))
+        .agg(exact_sum("l_quantity", 2).alias("total_qty"))
         .orderBy(F.desc("o_totalprice"), "o_orderkey")
         .limit(100)
     )
@@ -415,7 +408,7 @@ def q18_large_volume_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q19_disjunctive_revenue",
     tags=("join", "filter", "agg"),
     oracle=f"""
-SELECT {dsum_expr('l.l_extendedprice * (1 - l.l_discount)', 8)} AS revenue,
+SELECT {exact_sum_sql('l.l_extendedprice * (1 - l.l_discount)', 8)} AS revenue,
        COUNT(*) AS n_lines
 FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
 WHERE (p.p_brand = 'Brand#12' AND p.p_size BETWEEN 1 AND 5  AND l.l_quantity BETWEEN 1 AND 11)
@@ -453,7 +446,7 @@ def q19_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         l.join(F.broadcast(p), F.col("p_partkey") == F.col("l_partkey"))
         .filter(cond)
         .agg(
-            dsum(F.col("l_extendedprice") * (1 - F.col("l_discount")), 8).alias("revenue"),
+            exact_sum(F.col("l_extendedprice") * (1 - F.col("l_discount")), 8).alias("revenue"),
             F.count(F.lit(1)).alias("n_lines"),
         )
     )
@@ -504,11 +497,11 @@ def q21_late_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("join", "agg", "subquery"),
     oracle=f"""
 WITH avg_bal AS (
-  SELECT {dsum_expr('c_acctbal', 2)} / COUNT(c_acctbal) AS a
+  SELECT {exact_sum_sql('c_acctbal', 2)} / COUNT(c_acctbal) AS a
   FROM customer WHERE c_acctbal > 0
 )
 SELECT c.c_nationkey AS c_nationkey, COUNT(*) AS numcust,
-       {dsum_expr('c.c_acctbal', 2)} AS totacctbal
+       {exact_sum_sql('c.c_acctbal', 2)} AS totacctbal
 FROM customer c, avg_bal
 WHERE c.c_acctbal > avg_bal.a
   AND NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
@@ -528,7 +521,7 @@ def q22_idle_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = table(spark, sf_dir, "orders")
     avg_bal = (
         c.filter(F.col("c_acctbal") > 0)
-        .agg(davg("c_acctbal", 2).alias("a"))
+        .agg((exact_sum("c_acctbal", 2) / F.count("c_acctbal")).alias("a"))
     )
     return (
         c.crossJoin(F.broadcast(avg_bal))
@@ -537,7 +530,7 @@ def q22_idle_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("c_nationkey")
         .agg(
             F.count(F.lit(1)).alias("numcust"),
-            dsum("c_acctbal", 2).alias("totacctbal"),
+            exact_sum("c_acctbal", 2).alias("totacctbal"),
         )
         .orderBy("c_nationkey")
     )
@@ -548,7 +541,7 @@ def q22_idle_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("agg", "rollup"),
     oracle=f"""
 SELECT o_orderstatus AS o_orderstatus, o_orderpriority AS o_orderpriority,
-       COUNT(*) AS n, {dsum_expr('o_totalprice', 2)} AS total
+       COUNT(*) AS n, {exact_sum_sql('o_totalprice', 2)} AS total
 FROM orders
 GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority))
 ORDER BY o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST
@@ -577,9 +570,9 @@ def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("agg", "pivot"),
     oracle=f"""
 SELECT o_orderstatus,
-       {dsum_expr("CASE WHEN o_orderpriority = '1-URGENT' THEN o_totalprice END", 2)} AS urgent,
-       {dsum_expr("CASE WHEN o_orderpriority = '2-HIGH' THEN o_totalprice END", 2)} AS high,
-       {dsum_expr("CASE WHEN o_orderpriority = '5-LOW' THEN o_totalprice END", 2)} AS low,
+       {exact_sum_sql("CASE WHEN o_orderpriority = '1-URGENT' THEN o_totalprice END", 2)} AS urgent,
+       {exact_sum_sql("CASE WHEN o_orderpriority = '2-HIGH' THEN o_totalprice END", 2)} AS high,
+       {exact_sum_sql("CASE WHEN o_orderpriority = '5-LOW' THEN o_totalprice END", 2)} AS low,
        COUNT(*) AS n
 FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus
 """,
@@ -594,7 +587,7 @@ def agg_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     pivoted = (
         o.groupBy("o_orderstatus")
         .pivot("o_orderpriority", ["1-URGENT", "2-HIGH", "5-LOW"])
-        .agg(dsum("o_totalprice", 2))
+        .agg(exact_sum("o_totalprice", 2))
         .withColumnsRenamed({"1-URGENT": "urgent", "2-HIGH": "high", "5-LOW": "low"})
     )
     counts = o.groupBy("o_orderstatus").agg(F.count(F.lit(1)).alias("n"))
@@ -712,8 +705,8 @@ def agg_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("join", "agg"),
     oracle=f"""
 SELECT o_year,
-       {dsum_expr("CASE WHEN nation = 'NATION_5' THEN volume ELSE 0 END", 8)} /
-       {dsum_expr('volume', 8)} AS mkt_share
+       {exact_sum_sql("CASE WHEN nation = 'NATION_5' THEN volume ELSE 0 END", 8)} /
+       {exact_sum_sql('volume', 8)} AS mkt_share
 FROM (
   SELECT CAST(year(o.o_orderdate) AS BIGINT) AS o_year,
          l.l_extendedprice * (1 - l.l_discount) AS volume,
@@ -768,7 +761,7 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(n2), F.col("s_nationkey") == F.col("s_nkey"))
         .withColumn("o_year", F.year("o_orderdate").cast("bigint"))
         .groupBy("o_year")
-        .agg((dsum(share_num, 8) / dsum(vol, 8)).alias("mkt_share"))
+        .agg((exact_sum(share_num, 8) / exact_sum(vol, 8)).alias("mkt_share"))
         .orderBy("o_year")
     )
 
@@ -818,7 +811,7 @@ def q13_customer_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
 WITH revenue AS (
   SELECT l_suppkey AS supplier_no,
-         {dsum_expr('l_extendedprice * (1 - l_discount)', 8)} AS total_revenue
+         {exact_sum_sql('l_extendedprice * (1 - l_discount)', 8)} AS total_revenue
   FROM lineitem
   WHERE l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1996-04-01'
   GROUP BY l_suppkey
@@ -844,7 +837,7 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     s = table(spark, sf_dir, "supplier")
     revenue = l.groupBy(F.col("l_suppkey").alias("supplier_no")).agg(
-        dsum(F.col("l_extendedprice") * (1 - F.col("l_discount")), 8).alias("total_revenue")
+        exact_sum(F.col("l_extendedprice") * (1 - F.col("l_discount")), 8).alias("total_revenue")
     )
     top = revenue.agg(F.max("total_revenue").alias("mx"))
     return (
@@ -861,10 +854,10 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("join", "agg", "subquery"),
     oracle=f"""
 WITH part_avg AS (
-  SELECT l_partkey, 0.5 * ({dsum_expr('l_quantity', 2)} / COUNT(l_quantity)) AS half_avg
+  SELECT l_partkey, 0.5 * ({exact_sum_sql('l_quantity', 2)} / COUNT(l_quantity)) AS half_avg
   FROM lineitem GROUP BY l_partkey
 )
-SELECT {dsum_expr('l.l_extendedprice', 2)} / 7.0 AS avg_yearly, COUNT(*) AS n_lines
+SELECT {exact_sum_sql('l.l_extendedprice', 2)} / 7.0 AS avg_yearly, COUNT(*) AS n_lines
 FROM lineitem l
 JOIN part p ON p.p_partkey = l.l_partkey
 JOIN part_avg a ON a.l_partkey = l.l_partkey
@@ -882,14 +875,14 @@ def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     l = table(spark, sf_dir, "lineitem")
     p = table(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#23")
     part_avg = l.groupBy(F.col("l_partkey").alias("pa_key")).agg(
-        (F.lit(0.5) * davg("l_quantity", 2)).alias("half_avg")
+        (F.lit(0.5) * (exact_sum("l_quantity", 2) / F.count("l_quantity"))).alias("half_avg")
     )
     return (
         l.join(F.broadcast(p), F.col("p_partkey") == F.col("l_partkey"))
         .join(part_avg, F.col("pa_key") == F.col("l_partkey"))
         .filter(F.col("l_quantity") < F.col("half_avg"))
         .agg(
-            (dsum("l_extendedprice", 2) / 7.0).alias("avg_yearly"),
+            (exact_sum("l_extendedprice", 2) / 7.0).alias("avg_yearly"),
             F.count(F.lit(1)).alias("n_lines"),
         )
     )
@@ -1050,9 +1043,9 @@ def q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     vals = (
         l.join(F.broadcast(s), l.l_suppkey == s.s_suppkey)
         .groupBy("l_partkey")
-        .agg(dsum(F.col("l_extendedprice") * F.col("l_quantity"), 4).alias("part_value"))
+        .agg(exact_sum(F.col("l_extendedprice") * F.col("l_quantity"), 4).alias("part_value"))
     )
-    total = vals.agg(dsum("part_value", 4).alias("tot"))
+    total = vals.agg(exact_sum("part_value", 4).alias("tot"))
     return (
         vals.crossJoin(F.broadcast(total))
         .filter(F.col("part_value") > F.col("tot") * 0.001)
@@ -1200,10 +1193,10 @@ def q20_promo_part_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     shipped = (
         l.join(F.broadcast(promo), l.l_partkey == promo.p_partkey, "left_semi")
         .groupBy("l_suppkey")
-        .agg(dsum("l_quantity", 2).alias("promo_qty"))
+        .agg(exact_sum("l_quantity", 2).alias("promo_qty"))
     )
     thresh = shipped.agg(
-        (dsum("promo_qty", 2) * 0.5 / F.count(F.lit(1))).alias("qty_bound")
+        (exact_sum("promo_qty", 2) * 0.5 / F.count(F.lit(1))).alias("qty_bound")
     )
     s = table(spark, sf_dir, "supplier")
     n = table(spark, sf_dir, "nation")
@@ -1378,9 +1371,7 @@ def join_salted_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
         joined.groupBy("dim_group")
         .agg(
             F.count(F.lit(1)).alias("n_rows"),
-            F.sum(F.col("l_extendedprice").cast("decimal(30,2)"))
-            .cast("double")
-            .alias("revenue"),
+            exact_sum("l_extendedprice", 2).alias("revenue"),
         )
         .orderBy("dim_group")
     )

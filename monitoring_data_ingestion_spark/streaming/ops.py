@@ -14,12 +14,10 @@ batch engine.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _dsum(col: str, scale: int = 6) -> Column:
-    return F.sum(F.col(col).cast(f"decimal(30,{scale})")).cast("double")
+from ..functions.deterministic import exact_sum
 
 
 def tumbling_window_agg(
@@ -35,7 +33,7 @@ def tumbling_window_agg(
     return (
         df.withWatermark(ts_col, watermark)
         .groupBy(F.window(ts_col, duration).alias("w"), *keys)
-        .agg(F.count(F.lit(1)).alias("n_events"), _dsum(value_col).alias("total_value"))
+        .agg(F.count(F.lit(1)).alias("n_events"), exact_sum(value_col, 6).alias("total_value"))
         .select(F.col("w.start").alias("window_start"), *keys, "n_events", "total_value")
     )
 
@@ -55,7 +53,7 @@ def sliding_window_agg(
         .groupBy(F.window(ts_col, duration, slide).alias("w"))
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            (_dsum(value_col) / F.count(value_col)).alias("mean_value"),
+            (exact_sum(value_col, 6) / F.count(value_col)).alias("mean_value"),
         )
         .select(F.col("w.start").alias("window_start"), "n_events", "mean_value")
     )
@@ -74,7 +72,7 @@ def session_window_agg(
     return (
         df.withWatermark(ts_col, watermark)
         .groupBy(F.session_window(ts_col, gap).alias("w"), *keys)
-        .agg(F.count(F.lit(1)).alias("n_events"), _dsum(value_col).alias("session_value"))
+        .agg(F.count(F.lit(1)).alias("n_events"), exact_sum(value_col, 6).alias("session_value"))
         .select(
             F.col("w.start").alias("session_start"),
             F.col("w.end").alias("session_end"),

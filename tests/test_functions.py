@@ -9,9 +9,11 @@ comparison uses a seeded example grid in a single collect)."""
 from __future__ import annotations
 
 import calendar
+import math
 import hmac as pyhmac
 import hashlib
 from datetime import datetime, timedelta, timezone
+from decimal import ROUND_HALF_UP, Decimal
 
 import pytest
 from hypothesis import given, settings, strategies as st
@@ -297,22 +299,20 @@ def test_hmac_matches_stdlib(body, secret):
 
 
 def test_limb_sums_exact_vs_wide_decimal(spark):
-    """limb_sums must reproduce the decimal(30,s) sum bit-for-bit, INCLUDING
-    the large-magnitude domain (|value| up to 10^int_digits) where the old
-    double-division high limb silently went inexact (ADVICE r16: u = value
-    · 10^scale can reach 10^18, past double's 2^53 integer range)."""
-    from monitoring_data_ingestion_spark.functions.deterministic import (
-        dsum,
-        limb_sums,
-        money_from_limbs,
-        sum_from_limbs,
-    )
+    """The limb representation must reproduce the decimal(30,s) sum
+    bit-for-bit, INCLUDING the large-magnitude domain (|value| up to
+    10^int_digits) where a double-division high limb silently went inexact
+    (u = value · 10^scale can reach 10^18, past double's 2^53 integer
+    range), and negative half-cent totals under ``cents=True`` (a
+    long-arithmetic ``(lo + 5·10^5) div 10^6`` cents step rounded -0.015
+    to -0.01 instead of -0.02)."""
+    from monitoring_data_ingestion_spark.functions.deterministic import exact_sum
 
     # Values chosen to break a double-division split: near ±10^12 at scale
     # 6 the scaled long is ~10^18, where doubles resolve only to 128s.
     # Dyadic fractions so the float literal is exact and stays in-domain
     # (|v| < 10^12 — under ANSI an out-of-domain cast fails loudly).
-    # 911856239313·10^6 (and friends) round DOWN as doubles: the old
+    # 911856239313·10^6 (and friends) round DOWN as doubles: a
     # double-division high limb truncated to ...312 — off by one.
     vals = [
         911_856_239_313.0,
@@ -325,63 +325,78 @@ def test_limb_sums_exact_vs_wide_decimal(spark):
         0.0,
     ]
     df = spark.createDataFrame([Row(g=1, v=float(v)) for v in vals])
-    got = (
-        df.groupBy("g")
-        .agg(*limb_sums(F.col("v"), "_s", scale=6, int_digits=12))
-        .select(sum_from_limbs("_s", 6).alias("s"))
-        .collect()[0]["s"]
-    )
-    want = df.groupBy("g").agg(dsum(F.col("v"), 6).alias("s")).collect()[0]["s"]
+    got, want = df.groupBy("g").agg(exact_sum("v", 6, 12), exact_sum("v", 6)).collect()[0][1:]
     assert got == want
 
-    # The money path (scale 8, non-negative) stays bit-identical too.
-    money_vals = [99_999.12345678, 0.00000001, 54_321.99999999, 777.5]
-    mdf = spark.createDataFrame([Row(g=1, v=float(v)) for v in money_vals])
-    got_m = (
+    # The money path (scale 8, cents) stays bit-identical, for negative
+    # half-cent totals too (HALF_UP rounds away from zero, as DuckDB).
+    money = {
+        1: [99_999.12345678, 0.00000001, 54_321.99999999, 777.5],
+        2: [-0.015],
+        3: [-12.345, -0.005],
+        4: [-99_999.995],
+    }
+    mdf = spark.createDataFrame([Row(g=g, v=v) for g, vs in money.items() for v in vs])
+    rows = (
         mdf.groupBy("g")
-        .agg(*limb_sums(F.col("v"), "_m"))
-        .select(money_from_limbs("_m").alias("m"))
-        .collect()[0]["m"]
+        .agg(
+            exact_sum("v", 8, 6, cents=True).alias("limbs"),
+            exact_sum("v", 8, cents=True).alias("wide"),
+        )
+        .collect()
     )
-    from monitoring_data_ingestion_spark.functions.deterministic import dmoney
-
-    want_m = mdf.groupBy("g").agg(dmoney(F.col("v")).alias("m")).collect()[0]["m"]
-    assert got_m == want_m
-
-    # Domain guards: out-of-contract arguments fail loudly at build time.
-    with pytest.raises(ValueError):
-        limb_sums(F.col("v"), "_x", scale=6, int_digits=13)
-    with pytest.raises(ValueError):
-        limb_sums(F.col("v"), "_x", scale=4, int_digits=2)
+    got_m = {r["g"]: r["limbs"] for r in rows}
+    assert got_m == {r["g"]: r["wide"] for r in rows}
+    assert [got_m[g] for g in (2, 3, 4)] == [-0.02, -12.35, -100_000.0]
 
 
 @pytest.mark.parametrize(
-    "helper, at_bound, want",
+    "int_digits, scale, kind",
     [
-        ("dsum_narrow", [99.99, 99.99, 0.01], 199.99),
-        ("limb_sums", [99.999999, 99.999999, 0.000001], 199.999999),
+        pytest.param(2, 2, "narrow", id="narrow"),
+        pytest.param(4, 6, "limbs", id="limbs"),
+        pytest.param(10, 2, "bounded", id="bounded"),
+        pytest.param(12, 6, "limbs", id="limbs_widest"),
+        pytest.param(13, 6, "bounded", id="bounded_past_limbs"),
+        pytest.param(None, 6, "wide", id="wide"),
     ],
 )
-def test_narrow_sums_fail_loudly_past_domain_bound(spark, helper, at_bound, want):
-    """The narrow exact sums (int_digits=2) sum exactly up to the domain
-    bound, and a value past it fails the query under the session's ANSI
-    mode instead of silently leaving the sum."""
+def test_narrow_sums_fail_loudly_past_domain_bound(spark, int_digits, scale, kind):
+    """Each representation :func:`exact_sum` picks from the declared domain
+    sums exactly at ±bound, and a value just past it fails the query under
+    the session's ANSI mode instead of silently leaving the sum. An
+    all-NULL group sums to NULL in every representation."""
     from monitoring_data_ingestion_spark.functions.deterministic import (
-        dsum_narrow,
-        limb_sums,
-        sum_from_limbs,
+        _representation,
+        exact_sum,
     )
 
-    def total(vals):
-        df = spark.createDataFrame([Row(g=1, v=float(v)) for v in vals]).groupBy("g")
-        if helper == "dsum_narrow":
-            agg = df.agg(dsum_narrow("v", 2, 2).alias("s"))
-        else:
-            agg = df.agg(*limb_sums(F.col("v"), "_s", scale=6, int_digits=2)).select(
-                sum_from_limbs("_s", 6).alias("s")
-            )
-        return agg.collect()[0]["s"]
+    assert _representation(scale, int_digits) == kind
 
-    assert total(at_bound) == want
-    with pytest.raises(Exception, match="NUMERIC_VALUE_OUT_OF_RANGE"):
-        total([*at_bound, 123.0])
+    def agg(groups):
+        rows = [Row(g=g, v=v) for g, vals in enumerate(groups) for v in vals]
+        df = spark.createDataFrame(rows, "g int, v double").groupBy("g")
+        return df.agg(exact_sum("v", scale, int_digits).alias("s")).orderBy("g")
+
+    plan = agg([[1.0]])._jdf.queryExecution().optimizedPlan().toString()
+    assert ("UnscaledValue" in plan) == (kind == "narrow")
+    assert (" div 1000000" in plan) == (kind == "limbs")
+    if kind == "bounded":
+        assert f"decimal({int_digits + scale},{scale})" in plan
+    if kind == "wide":
+        assert f"decimal(30,{scale})" in plan
+
+    if int_digits is None:
+        assert [r["s"] for r in agg([[None, None]]).collect()] == [None]
+        return
+    # The largest double whose HALF_UP quantization stays in the domain.
+    step = Decimal(1).scaleb(-scale)
+    bound = float(Decimal(10**int_digits) - step)
+    while Decimal(bound).quantize(step, ROUND_HALF_UP) >= 10**int_digits:
+        bound = math.nextafter(bound, 0.0)
+    want = float(2 * Decimal(bound).quantize(step, ROUND_HALF_UP))
+    got = [r["s"] for r in agg([[bound, bound], [-bound, -bound], [None, None]]).collect()]
+    assert got == [want, -want, None]
+    for past in (10.0**int_digits, -(10.0**int_digits)):
+        with pytest.raises(Exception, match="NUMERIC_VALUE_OUT_OF_RANGE"):
+            agg([[bound, past]]).collect()

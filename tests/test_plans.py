@@ -209,6 +209,73 @@ def test_no_python_in_relational_paths(spark):
         assert m is None, f"{name} crosses the Python boundary ({m.group(0)})"
 
 
+def test_no_hand_rolled_exact_sums():
+    """Every double-of-an-exact-decimal-sum goes through
+    ``functions.deterministic.exact_sum``: a source scan finds no
+    ``F.sum(...)`` over a decimal cast anywhere else. The allowlisted
+    sites keep the DECIMAL sum itself: stored or salted partials that a
+    later sum merges, a counter taken modulo 10^4, and cumulative CUSUM
+    sums whose running extreme is subtracted exactly before the cast."""
+    import ast
+    import re
+    from pathlib import Path
+
+    import monitoring_data_ingestion_spark as pkg
+
+    allowed = {
+        ("operators/incremental.py", "partial_aggregates"),
+        ("plans/relational_ext.py", "agg_salted_skew"),
+        ("plans/timeseries.py", "ts_counter_rate"),
+        ("plans/timeseries.py", "ts_cusum_changepoint"),
+    }
+    decimal_cast = re.compile(r"\.cast\(\s*(f?[\"']decimal\(|_[A-Z_]*DEC\b)")
+    root = Path(pkg.__file__).parent
+    found = set()
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        if rel == "functions/deterministic.py":
+            continue
+        src = path.read_text()
+        tree = ast.parse(src)
+        funcs = [n for n in ast.walk(tree) if isinstance(n, ast.FunctionDef)]
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "sum"
+                and isinstance(node.func.value, ast.Name)
+                and node.func.value.id == "F"
+                and decimal_cast.search(ast.get_source_segment(src, node))
+            ):
+                outer = [f for f in funcs if f.lineno <= node.lineno <= f.end_lineno]
+                found.add((rel, outer[0].name if outer else f"line {node.lineno}"))
+    assert found == allowed
+
+
+def test_headline_exact_sums_aggregate_over_longs(spark):
+    """Plan-only pin for the r16 headline speedup: the exact sums of q1,
+    q3 and q5 run as long sums (DecimalAggregates' UnscaledValue rewrite
+    or the two-limb div/mod split), and no decimal(30,·) BigDecimal sum
+    reaches a HashAggregate."""
+    import re
+
+    limb = re.compile(r" (?:div|%) 1000000\)\)")
+    for name in ("q1_pricing_summary", "q3_shipping_priority", "q5_region_revenue"):
+        df = q(name)(spark, SF_SMOKE)
+        funcs = re.findall(r"HashAggregate\(keys=\[.*?\], functions=\[(.*)\]", _plan(df))
+        assert funcs, name
+        n_sums = 0
+        for f in funcs:
+            assert "decimal(30," not in f, (name, f)
+            n_sums += f.count("sum(")
+            assert f.count("sum(") == f.count("sum(UnscaledValue(") + len(limb.findall(f)), (
+                name,
+                f,
+            )
+        assert n_sums > 0, name
+    assert "UnscaledValue" in _optimized(q("q1_pricing_summary")(spark, SF_SMOKE))
+
+
 def test_semi_join_for_exists(spark):
     """q4's correlated EXISTS must be a left-semi hash join."""
     plan = _plan(q("q4_order_priority")(spark, SF_SMOKE))
