@@ -16,9 +16,10 @@ one Float32 sample per pixel, LZW-compressed with the TTN3 float
 predictor (or raw with ``compress=False``), north-up affine
 georeferencing via ModelPixelScale + ModelTiepoint, WGS-84 geographic
 CRS keys, and the GDAL_NODATA ASCII tag — the same raster model GDAL
-produces for the reference's outputs. The pure-Python LZW loop is
-byte-at-a-time (fine for test-sized rasters and per-partition sink
-tiles); rasterio remains the fast path for bulk export.
+produces for the reference's outputs. The pure-Python LZW encoder keys
+its string table on integer codes and packs the emitted codes in one
+numpy pass; the decoder still walks the stream one byte at a time.
+rasterio remains the fast path for bulk export.
 """
 
 from __future__ import annotations
@@ -81,54 +82,50 @@ _LZW_EOI = 257
 
 
 def _lzw_encode(data: bytes) -> bytes:
-    out = bytearray()
-    bitbuf = 0
-    nbits = 0
-    width = 9
-    table: dict[bytes, int] = {}
+    # The table maps each multi-byte string to its code, keyed on the
+    # integer (prefix_code << 8) | last_byte; single bytes are their own
+    # codes and are never stored. ``w`` is the code of the current match.
+    # Codes and their bit widths are collected first and packed once.
+    codes = [_LZW_CLEAR]
+    widths = [9]
+    put_code = codes.append
+    put_width = widths.append
+    table: dict[int, int] = {}
+    lookup = table.get
     next_code = 258
-
-    def put(code: int) -> None:
-        nonlocal bitbuf, nbits
-        bitbuf = (bitbuf << width) | code
-        nbits += width
-        while nbits >= 8:
-            nbits -= 8
-            out.append((bitbuf >> nbits) & 0xFF)
-
-    def reset() -> None:
-        nonlocal table, next_code, width
-        table = {bytes([i]): i for i in range(256)}
-        next_code = 258
-        width = 9
-
-    reset()
-    put(_LZW_CLEAR)
-    w = b""
-    for b in data:
-        wc = w + bytes([b])
-        if wc in table:
-            w = wc
-            continue
-        put(table[w])
-        table[wc] = next_code
-        next_code += 1
-        # Early change: codes are written one bit wider as soon as the
-        # entry numbered 2^width - 2 exists.
-        if next_code in (511, 1023, 2047):
-            width += 1
-        w = bytes([b])
-        if next_code == 4094:  # 12-bit space nearly full — reset
-            # No phantom-append accounting is needed here (unlike the
-            # final-code/EOI path below): the code just written was
-            # emitted inside the loop, so our insert and the decoder's
-            # phantom append stayed in lockstep — its table size is
-            # next_code - 1 = 4093, nowhere near a width boundary, and
-            # both sides write/read this CLEAR at 12 bits.
-            put(_LZW_CLEAR)
-            reset()
-    if w:
-        put(table[w])
+    width = 9
+    it = iter(data)
+    w = next(it, -1)
+    if w >= 0:
+        for b in it:
+            key = (w << 8) | b
+            code = lookup(key)
+            if code is not None:
+                w = code
+                continue
+            put_code(w)
+            put_width(width)
+            table[key] = next_code
+            next_code += 1
+            # Early change: codes are written one bit wider as soon as the
+            # entry numbered 2^width - 2 exists.
+            if next_code == 511 or next_code == 1023 or next_code == 2047:
+                width += 1
+            w = b
+            if next_code == 4094:  # 12-bit space nearly full — reset
+                # No phantom-append accounting is needed here (unlike the
+                # final-code/EOI path below): the code just written was
+                # emitted inside the loop, so our insert and the decoder's
+                # phantom append stayed in lockstep — its table size is
+                # next_code - 1 = 4093, nowhere near a width boundary, and
+                # both sides write/read this CLEAR at 12 bits.
+                put_code(_LZW_CLEAR)
+                put_width(12)
+                table.clear()
+                next_code = 258
+                width = 9
+        put_code(w)
+        put_width(width)
         # The decoder appends a phantom table entry for this final data
         # code too (it cannot know no more data follows), so its table
         # grows one past ours here. If that phantom append lands exactly
@@ -138,13 +135,20 @@ def _lzw_encode(data: bytes) -> bytes:
         # must be written at the widened width. Without this accounting
         # ~3/4096 of strips (final code ending at a width boundary) were
         # silently corrupt for any TIFF reader.
-        next_code += 1
-        if next_code in (511, 1023, 2047):
+        if next_code + 1 in (511, 1023, 2047):
             width += 1
-    put(_LZW_EOI)
-    if nbits:
-        out.append((bitbuf << (8 - nbits)) & 0xFF)
-    return bytes(out)
+    put_code(_LZW_EOI)
+    put_width(width)
+    return _pack_codes_msb(codes, widths)
+
+
+def _pack_codes_msb(codes: list[int], widths: list[int]) -> bytes:
+    """Concatenate each code's low ``width`` bits, most significant bit
+    first, zero-padding the last byte (TIFF 6.0 §13 bit order)."""
+    shifts = np.arange(11, -1, -1, dtype=np.uint16)  # codes are ≤ 12 bits
+    bits = (np.array(codes, dtype=np.uint16)[:, None] >> shifts) & 1
+    keep = shifts < np.array(widths, dtype=np.uint16)[:, None]
+    return np.packbits(bits[keep].astype(np.uint8)).tobytes()
 
 
 def _lzw_decode(data: bytes) -> bytes:

@@ -105,10 +105,10 @@ def grid_polygon_clip(spark: SparkSession, sf_dir: str) -> DataFrame:
     clip outline keep their row but lose their value to NULL — exactly the
     −9999-nodata convention mapped to SQL NULL at the scan edge.
 
-    The ray-cast runs as a folded literal edge array, fully inside
-    whole-stage codegen (no UDF, no broadcast, geometry embedded in the
-    plan) — for the reference's single clip outline this is the fastest
-    possible form at any scale (map-side, zero shuffle).
+    The ray-cast runs over a folded literal edge array (no UDF, no
+    broadcast, geometry embedded in the plan; map-side, zero shuffle).
+    Its `aggregate` is interpreted (CodegenFallback), so the projection
+    that holds it runs outside whole-stage codegen.
     """
     c = table(spark, sf_dir, "customer").filter(F.col("c_custkey") <= 2000)
     pts = c.select(
@@ -172,9 +172,10 @@ def grid_shapefile_clip(spark: SparkSession, sf_dir: str) -> DataFrame:
     own .shp reader (grid/shapefile.py) replacing GDAL.
 
     Same plan shape as grid_polygon_clip: the parsed outline folds into a
-    literal edge array, the ray-cast whole-stage-codegens, zero shuffle —
-    the cutline never becomes a join side, so at 100 TB the clip stays a
-    free rider on the scan.
+    literal edge array, the ray-cast is an interpreted `aggregate`
+    (CodegenFallback, not whole-stage codegen), zero shuffle — the
+    cutline never becomes a join side, so at 100 TB the clip stays a
+    map-side rider on the scan.
     """
     poly = shapefile_cutline()
     c = table(spark, sf_dir, "customer").filter(F.col("c_custkey") <= 2000)

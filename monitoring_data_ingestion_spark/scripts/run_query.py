@@ -9,7 +9,10 @@ call any registered operation by name with options —
 With no ``--output`` the result prints as JSON lines (first ``--limit``
 rows, default 20) — the interactive twin of the parquet sink. ``--list``
 enumerates the catalog with tags, ``--explain`` prints the formatted
-physical plan instead of executing (the plan-audit workflow).
+physical plan instead of executing (the plan-audit workflow), and
+``--timings`` prints one JSON line to stderr with the milliseconds spent
+building the DataFrame (``fn(spark, sf_dir)``, py4j included), analyzing,
+optimizing and physical planning it — without executing.
 """
 
 from __future__ import annotations
@@ -17,6 +20,7 @@ from __future__ import annotations
 import argparse
 import json
 import sys
+import time
 
 
 def build_parser() -> argparse.ArgumentParser:
@@ -33,8 +37,28 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--limit", type=int, default=20, help="rows to print without --output")
     p.add_argument("--list", action="store_true", help="list catalog queries and exit")
     p.add_argument("--explain", action="store_true", help="print the physical plan only")
+    p.add_argument(
+        "--timings", action="store_true",
+        help="print build/analyze/optimize/plan milliseconds to stderr; no execution",
+    )
     p.add_argument("--tag", help="with --list: only queries carrying this tag")
     return p
+
+
+def plan_timings(df, t0: float) -> dict[str, float]:
+    """Milliseconds per planning layer of ``df``, built since ``t0``.
+
+    Each QueryExecution phase is lazy and computed once, so forcing them in
+    order times analysis, optimization and physical planning separately.
+    PySpark analyzes every intermediate DataFrame as it is built, so most
+    analysis cost lands in ``build_ms``."""
+    qe = df._jdf.queryExecution()
+    marks = [t0, time.perf_counter()]
+    for phase in (qe.analyzed, qe.optimizedPlan, qe.executedPlan):
+        phase()
+        marks.append(time.perf_counter())
+    names = ("build_ms", "analyze_ms", "optimize_ms", "plan_ms")
+    return {k: round(1000 * (b - a), 1) for k, a, b in zip(names, marks, marks[1:])}
 
 
 def run(argv: list[str] | None = None, spark=None) -> int:
@@ -62,8 +86,12 @@ def run(argv: list[str] | None = None, spark=None) -> int:
 
     from ..session_cache import release_caches
 
+    t0 = time.perf_counter()
     df = REGISTRY[args.name].fn(spark, args.sf_dir)
     try:
+        if args.timings:
+            print(json.dumps({"query": args.name, **plan_timings(df, t0)}), file=sys.stderr)
+            return 0
         if args.explain:
             df.explain(mode="formatted")
             return 0

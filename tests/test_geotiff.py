@@ -85,6 +85,48 @@ def test_grid_to_raster_orientation_and_nodata():
     assert r.west == -5.0 and r.north == 15.0
 
 
+def _grid_to_raster_loop(pdf, nodata=-9999.0):
+    """The per-cell loop grid_to_raster replaced, kept as the reference."""
+    lats = np.sort(pdf["lat"].unique())[::-1]
+    lons = np.sort(pdf["lon"].unique())
+    yres = float(lats[0] - lats[1]) if len(lats) > 1 else 1.0
+    xres = float(lons[1] - lons[0]) if len(lons) > 1 else 1.0
+    lat_idx = {v: i for i, v in enumerate(lats)}
+    lon_idx = {v: i for i, v in enumerate(lons)}
+    values = np.full((len(lats), len(lons)), nodata, dtype="float32")
+    vals = pdf["value"].to_numpy()
+    for r, (la, lo) in enumerate(zip(pdf["lat"].to_numpy(), pdf["lon"].to_numpy())):
+        v = vals[r]
+        if v is not None and v == v:
+            values[lat_idx[la], lon_idx[lo]] = v
+    return values, float(lons[0]) - xres / 2, float(lats[0]) + yres / 2, xres, yres
+
+
+@pytest.mark.parametrize("shape", [(9, 13), (1, 13), (9, 1), (1, 1)], ids=str)
+def test_grid_to_raster_matches_per_cell_loop(shape):
+    """Vectorized placement equals the per-cell loop on shuffled rows with
+    NULLs, NaNs and missing cells, including single-row/column grids."""
+    import pandas as pd
+
+    rng = np.random.default_rng(sum(shape))
+    h, w = shape
+    lat, lon = np.meshgrid(np.arange(h) * 0.25 - 1.0, np.arange(w) * 0.25 + 10.0, indexing="ij")
+    vals = rng.normal(280, 15, h * w)
+    vals[rng.random(h * w) < 0.2] = np.nan
+    pdf = pd.DataFrame({"lat": lat.ravel(), "lon": lon.ravel(), "value": vals})
+    pdf = pdf.astype({"value": object})
+    pdf.loc[rng.random(h * w) < 0.2, "value"] = None
+    keep = rng.random(h * w) >= 0.15
+    keep[0] = keep[-1] = True  # the grid's extent stays the full axes
+    pdf = pdf[keep].sample(frac=1.0, random_state=3)
+    for frame in (pdf, pdf.astype({"value": "float64"})):
+        r = grid_to_raster(frame)
+        values, west, north, xres, yres = _grid_to_raster_loop(frame)
+        assert r.values.dtype == np.float32
+        np.testing.assert_array_equal(r.values, values)
+        assert (r.west, r.north, r.xres, r.yres) == (west, north, xres, yres)
+
+
 def test_to_geotiff_sink_writes_per_group(spark, tmp_path):
     rows = []
     for var in ("t2m", "tp"):
@@ -170,6 +212,83 @@ def test_lzw_round_trip_exercises_width_bumps_and_reset():
     for n in (0, 1, 2, 17):
         d = os.urandom(n)
         assert _lzw_decode(_lzw_encode(d)) == d
+
+
+def _bytes_keyed_lzw_encode(data: bytes) -> bytes:
+    """The bytes-keyed encoder _lzw_encode replaced, kept as the byte
+    reference: a dict from byte strings to codes, one put() per code."""
+    out = bytearray()
+    bitbuf = 0
+    nbits = 0
+    width = 9
+    table: dict[bytes, int] = {}
+    next_code = 258
+
+    def put(code: int) -> None:
+        nonlocal bitbuf, nbits
+        bitbuf = (bitbuf << width) | code
+        nbits += width
+        while nbits >= 8:
+            nbits -= 8
+            out.append((bitbuf >> nbits) & 0xFF)
+
+    def reset() -> None:
+        nonlocal table, next_code, width
+        table = {bytes([i]): i for i in range(256)}
+        next_code = 258
+        width = 9
+
+    reset()
+    put(256)
+    w = b""
+    for b in data:
+        wc = w + bytes([b])
+        if wc in table:
+            w = wc
+            continue
+        put(table[w])
+        table[wc] = next_code
+        next_code += 1
+        if next_code in (511, 1023, 2047):
+            width += 1
+        w = bytes([b])
+        if next_code == 4094:
+            put(256)
+            reset()
+    if w:
+        put(table[w])
+        next_code += 1
+        if next_code in (511, 1023, 2047):
+            width += 1
+    put(257)
+    if nbits:
+        out.append((bitbuf << (8 - nbits)) & 0xFF)
+    return bytes(out)
+
+
+def test_lzw_encoder_bytes_match_bytes_keyed_reference():
+    """Seeded fuzz: the integer-keyed encoder writes exactly the bytes of
+    the bytes-keyed encoder it replaced — empty and 1-byte inputs, inputs
+    of 70 KB and more that cross the 4094-code reset, inputs whose final
+    code lands on each width boundary, and random short inputs over small
+    and full alphabets."""
+    import random
+
+    from monitoring_data_ingestion_spark.grid.geotiff import _fp_predict_rows, _lzw_encode
+
+    rnd = random.Random(2024)
+    cases = [b"", b"\x00", b"\xff", b"\x07" * 70_000]
+    cases += [bytes(rnd.randrange(256) for _ in range(n)) for n in (70_000, 72_001)]
+    cases += [bytes(rnd.randrange(3) for _ in range(70_000))]
+    cases.append(_fp_predict_rows(np.random.default_rng(1).normal(280, 15, (71, 73)).astype("f4")))
+    for boundary in (510, 1022, 2046):  # final next_code 511/1023/2047 after the phantom
+        source = bytes(rnd.randrange(256) for _ in range(6 * boundary))
+        cases.append(_prefix_with_final_next_code(source, boundary))
+    for _ in range(400):
+        alphabet = rnd.choice((1, 2, 4, 16, 256))
+        cases.append(bytes(rnd.randrange(alphabet) for _ in range(rnd.randrange(3000))))
+    for s in cases:
+        assert _lzw_encode(s) == _bytes_keyed_lzw_encode(s), len(s)
 
 
 def _independent_lzw_decode(data: bytes) -> bytes:

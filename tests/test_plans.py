@@ -1657,3 +1657,96 @@ def test_r10_codec_queries_python_only_at_codec_boundary(spark, name):
     assert final.count("MapInPandas") == 2
     assert "BatchEvalPython" not in plan
     assert "CartesianProduct" not in plan
+
+
+def _seq(jseq) -> list:
+    return [jseq.apply(i) for i in range(jseq.size())]
+
+
+def _expr_nodes(expr) -> list:
+    out = [expr]
+    for child in _seq(expr.children()):
+        out += _expr_nodes(child)
+    return out
+
+
+def _ring(n: int) -> list[tuple[float, float]]:
+    import math
+
+    return [
+        (30.0 * math.cos(2 * math.pi * k / n) - 5.0, 25.0 * math.sin(2 * math.pi * k / n))
+        for k in range(n)
+    ]
+
+
+def _clip_frame(spark, ring):
+    from monitoring_data_ingestion_spark.grid.ops import point_in_polygon
+
+    pts = spark.range(400).select(
+        (F.col("id") % 20 * 4.0 - 40.5).alias("lat"),
+        (F.floor(F.col("id") / 20) * 4.0 - 45.5).alias("lon"),
+    )
+    return pts.select("lat", "lon", point_in_polygon(F.col("lat"), F.col("lon"), ring).alias("inside"))
+
+
+def _array_literals(plan) -> list:
+    return [
+        e
+        for root in _seq(plan.expressions())
+        for e in _expr_nodes(root)
+        if e.getClass().getSimpleName() == "Literal" and e.dataType().typeName() == "array"
+    ]
+
+
+def test_clip_plan_does_not_grow_with_polygon(spark):
+    """point_in_polygon's analyzed expression has the same size for a
+    4-vertex and a 1,000-vertex ring — the edge list enters the plan as
+    one JSON string, not one struct per edge — and the optimizer folds it
+    into ONE array literal holding every edge. The folded form still
+    computes the reference ray cast, edge for edge."""
+    sizes = {}
+    for n in (4, 1000):
+        ring = _ring(n)
+        df = _clip_frame(spark, ring)
+        qe = df._jdf.queryExecution()
+        (inside,) = [e for e in _seq(qe.analyzed().expressions()) if e.name() == "inside"]
+        sizes[n] = len(_expr_nodes(inside))
+        lits = _array_literals(qe.optimizedPlan())
+        assert len(lits) == 1, n
+        assert lits[0].value().numElements() == n
+
+        def crosses(lat, lon):
+            hits = 0
+            for (x1, y1), (x2, y2) in zip(ring, ring[1:] + ring[:1]):
+                if ((y1 > lat) != (y2 > lat)) and (lon < (x2 - x1) * (lat - y1) / (y2 - y1) + x1):
+                    hits += 1
+            return hits % 2 == 1
+
+        got = df.collect()
+        assert [r.inside for r in got] == [crosses(r.lat, r.lon) for r in got]
+        assert any(r.inside for r in got) and not all(r.inside for r in got)
+    assert sizes[4] == sizes[1000]
+
+
+def test_clip_literal_doubles_are_bit_exact(spark):
+    """The folded edge literal carries exactly the input doubles — signs,
+    negative zero and exponent-form values included — in edge order
+    (x1, y1, x2, y2), closing the ring back to the first vertex."""
+    import struct
+
+    ring = [
+        (-100.2, -50.3),
+        (1e-05, 80.7),
+        (-2.5e-07, 1.5e16),
+        (-0.0, -1.7976931348623157e308),
+        (0.1 + 0.2, 5e-324),
+        (-130.8, 40.6),
+    ]
+    qe = _clip_frame(spark, ring)._jdf.queryExecution()
+    (lit,) = _array_literals(qe.optimizedPlan())
+    arr = lit.value()
+    assert arr.numElements() == len(ring)
+    for i, ((x1, y1), (x2, y2)) in enumerate(zip(ring, ring[1:] + ring[:1])):
+        edge = arr.getStruct(i, 4)
+        for j, want in enumerate((x1, y1, x2, y2)):
+            assert struct.pack("<d", edge.getDouble(j)) == struct.pack("<d", want), (i, j)

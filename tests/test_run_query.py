@@ -48,3 +48,15 @@ def test_print_rows_and_explain(spark, capsys):
 
     assert run(["q6_forecast_revenue", "--sf-dir", SF_SMOKE, "--explain"], spark=spark) == 0
     assert "Physical Plan" in capsys.readouterr().out
+
+
+def test_timings_report_planning_layers_without_executing(spark, capsys):
+    jobs_before = spark.sparkContext.statusTracker().getJobIdsForGroup()
+    assert run(["grid_polygon_clip", "--sf-dir", SF_SMOKE, "--timings"], spark=spark) == 0
+    captured = capsys.readouterr()
+    assert captured.out == ""
+    rec = json.loads(captured.err.strip().splitlines()[-1])
+    assert rec["query"] == "grid_polygon_clip"
+    for k in ("build_ms", "analyze_ms", "optimize_ms", "plan_ms"):
+        assert rec[k] >= 0.0
+    assert spark.sparkContext.statusTracker().getJobIdsForGroup() == jobs_before
