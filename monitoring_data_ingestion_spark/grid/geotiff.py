@@ -18,7 +18,8 @@ georeferencing via ModelPixelScale + ModelTiepoint, WGS-84 geographic
 CRS keys, and the GDAL_NODATA ASCII tag — the same raster model GDAL
 produces for the reference's outputs. The pure-Python LZW encoder keys
 its string table on integer codes and packs the emitted codes in one
-numpy pass; the decoder still walks the stream one byte at a time.
+numpy pass; the decoder walks the stream one byte at a time, in linear
+time.
 rasterio remains the fast path for bulk export.
 """
 
@@ -28,6 +29,8 @@ import struct
 from dataclasses import dataclass
 
 import numpy as np
+
+from ..ingest.sinks import atomic_open
 
 try:  # pragma: no cover - not present in this environment
     import rasterio
@@ -173,7 +176,9 @@ def _lzw_decode(data: bytes) -> bytes:
             pos += 1
             nbits += 8
         nbits -= width
-        return (bitbuf >> nbits) & ((1 << width) - 1)
+        code = bitbuf >> nbits
+        bitbuf &= (1 << nbits) - 1  # keep only unread bits: linear time
+        return code
 
     reset_table()
     prev: bytes | None = None
@@ -410,28 +415,30 @@ def decode_geotiff(data: bytes) -> GeoRaster:
 
 
 def write_geotiff(raster: GeoRaster, path: str) -> None:
-    """Write one raster file; rasterio (LZW predictor=3, the reference's
-    creation options) when available, else the pure-Python encoder."""
-    if HAVE_RASTERIO:  # pragma: no cover - not present in this environment
-        transform = from_origin(raster.west, raster.north, raster.xres, raster.yres)
-        with rasterio.open(
-            path,
-            "w",
-            driver="GTiff",
-            height=raster.values.shape[0],
-            width=raster.values.shape[1],
-            count=1,
-            dtype="float32",
-            crs="EPSG:4326",
-            transform=transform,
-            compress="lzw",
-            predictor=3,
-            nodata=raster.nodata,
-        ) as dst:
-            dst.write(raster.values.astype("float32"), 1)
-        return
-    with open(path, "wb") as f:
-        f.write(encode_geotiff(raster))
+    """Publish one raster file through ``ingest.sinks.atomic_open``, so a
+    failed re-write keeps the last good raster; rasterio (LZW
+    predictor=3, the reference's creation options) when available, else
+    the pure-Python encoder."""
+    with atomic_open(path) as f:
+        if HAVE_RASTERIO:  # pragma: no cover - not present in this environment
+            transform = from_origin(raster.west, raster.north, raster.xres, raster.yres)
+            with rasterio.open(
+                f,
+                "w",
+                driver="GTiff",
+                height=raster.values.shape[0],
+                width=raster.values.shape[1],
+                count=1,
+                dtype="float32",
+                crs="EPSG:4326",
+                transform=transform,
+                compress="lzw",
+                predictor=3,
+                nodata=raster.nodata,
+            ) as dst:
+                dst.write(raster.values.astype("float32"), 1)
+        else:
+            f.write(encode_geotiff(raster))
 
 
 def read_geotiff(path: str) -> GeoRaster:

@@ -26,9 +26,10 @@ import re
 import shutil
 import time
 import urllib.request
-import uuid
 from dataclasses import dataclass, field
 from typing import Any, Callable
+
+from .sinks import atomic_open
 
 POLL_INITIAL_S = 1.0
 POLL_GROWTH = 1.5
@@ -36,19 +37,17 @@ POLL_CAP_S = 120.0  # src/sources/era5monthly.js:178-183
 
 
 def download(url: str, dest_path: str, opener=urllib.request.urlopen) -> str:
-    """Streaming GET → temp file → atomic rename (S2/S7). Accepts 200/206;
-    202 means "not ready" and raises for the caller's retry loop."""
-    tmp = f"{dest_path}.tmp-{uuid.uuid4().hex}"
+    """Streaming GET through ``atomic_open`` (S2/S7): a dropped connection
+    leaves no file at ``dest_path``. Accepts 200/206; 202 means "not
+    ready" and raises for the caller's retry loop."""
     with opener(url) as resp:
         status = getattr(resp, "status", 200)
         if status == 202:
             raise RuntimeError(f"resource not ready (202): {url}")
         if status not in (200, 206):
             raise RuntimeError(f"download failed ({status}): {url}")
-        os.makedirs(os.path.dirname(dest_path) or ".", exist_ok=True)
-        with open(tmp, "wb") as f:
+        with atomic_open(dest_path) as f:
             shutil.copyfileobj(resp, f)
-    os.rename(tmp, dest_path)
     return dest_path
 
 
@@ -87,26 +86,26 @@ def multipart_byteranges_to_file(dest_path: str, body: bytes, content_type: str)
             continue
         parts.append((int(rng.group(1)), payload))
     parts.sort(key=lambda p: p[0])
-    tmp = f"{dest_path}.tmp-{uuid.uuid4().hex}"
-    with open(tmp, "wb") as f:
+    with atomic_open(dest_path) as f:
         for _, payload in parts:
             f.write(payload)
-    os.rename(tmp, dest_path)
     return dest_path
 
 
 def destructive_cat(files: list[str], dest_path: str | None = None) -> str:
     """Concatenate files into one, deleting the inputs (S10) — the
-    union-all of file payloads; DataFrame-level union is U1."""
+    union-all of file payloads; DataFrame-level union is U1. The inputs
+    are removed only once the output is in place, so a crash loses
+    nothing; ``dest_path`` may itself be one of the inputs."""
     dest_path = dest_path or files[0] + ".cat"
-    tmp = f"{dest_path}.tmp-{uuid.uuid4().hex}"
-    with open(tmp, "wb") as out:
+    with atomic_open(dest_path) as out:
         for path in files:
             with open(path, "rb") as f:
                 shutil.copyfileobj(f, out)
+    dest = os.path.abspath(dest_path)
     for path in files:
-        os.remove(path)
-    os.rename(tmp, dest_path)
+        if os.path.abspath(path) != dest:
+            os.remove(path)
     return dest_path
 
 

@@ -1,15 +1,27 @@
 """Publish sinks (SURVEY.md §2.1 S6-S12).
 
-Atomic file publish (temp + rename, /root/reference/src/utility.js:94-103),
-compressed JSON inventory (src/utility.js:89-92 — the reference *names*
-`.br` outputs but never actually compresses; the engine implements the
-evident intent, with gzip fallback when brotli isn't installed), heartbeat
-(src/rabbit.js:14-16), merged inventory scan (src/rabbit.js:73-85), and the
-HMAC-signed webhook notification (src/utility.js:144-163).
+Every file the engine publishes reaches disk through ONE primitive,
+:func:`atomic_open`: the bytes go to a hidden, uniquely named temp file
+in the destination's own directory, which is ``os.replace``d into place
+when the write finishes and unlinked when it raises — a reader sees the
+old file or the new one, never half of either, and a failed write leaves
+no litter (the reference's temp + rename, src/utility.js:82-87,94-103).  The temp file is created with mode 0o666 filtered by the
+process umask, so a published file has the same permissions as one made
+by a plain ``open(path, "w")``.  ``write_file_atomically`` and
+``write_json_atomically`` are one-liners over it; the HTTP clients, the
+GeoTIFF writer, the heartbeat listener and the streaming commit marker
+use it directly.
+
+On top of it: compressed JSON inventory (src/utility.js:89-92 — the
+reference *names* `.br` outputs but never actually compresses; the engine
+implements the evident intent, with gzip fallback when brotli isn't
+installed), heartbeat (src/rabbit.js:14-16), merged inventory scan
+(src/rabbit.js:73-85), and the HMAC-signed webhook notification
+(src/utility.js:144-163).
 
 DataFrame outputs use `df.write.parquet` with overwrite semantics — Spark's
-v2 file committer provides the same atomic-publish guarantee the reference
-hand-rolls with rename.
+v2 file committer provides the same atomic-publish guarantee for a
+directory of part files.
 """
 
 from __future__ import annotations
@@ -17,9 +29,10 @@ from __future__ import annotations
 import glob
 import json
 import os
-import tempfile
 import urllib.request
-from typing import Any
+import uuid
+from contextlib import contextmanager
+from typing import Any, BinaryIO, Iterator
 
 from ..functions.hashing import hmac_sha256_hex
 
@@ -39,20 +52,28 @@ except ImportError:  # pragma: no cover
     BROTLI_AVAILABLE = False
 
 
-def write_file_atomically(path: str, data: bytes) -> None:
-    """Temp file + rename — readers never observe a torn file."""
-    d = os.path.dirname(os.path.abspath(path))
+@contextmanager
+def atomic_open(path: str) -> Iterator[BinaryIO]:
+    """Binary file handle whose bytes appear at ``path`` all at once, on a
+    clean exit from the ``with`` block; on an exception the destination
+    is untouched and the temp file removed (see the module docstring)."""
+    d, name = os.path.split(os.path.abspath(path))
     os.makedirs(d, exist_ok=True)
-    fd, tmp = tempfile.mkstemp(dir=d, prefix=".tmp-")
+    tmp = os.path.join(d, f".{name}.{uuid.uuid4().hex}.tmp")
+    fd = os.open(tmp, os.O_WRONLY | os.O_CREAT | os.O_EXCL, 0o666)
     try:
         with os.fdopen(fd, "wb") as f:
-            f.write(data)
+            yield f
         os.replace(tmp, path)
     except BaseException:
-        try:
-            os.unlink(tmp)
-        finally:
-            raise
+        os.unlink(tmp)
+        raise
+
+
+def write_file_atomically(path: str, data: bytes) -> None:
+    """Publish ``data`` at ``path`` through :func:`atomic_open`."""
+    with atomic_open(path) as f:
+        f.write(data)
 
 
 def write_json_atomically(path: str, obj: Any, compress: bool = False) -> None:

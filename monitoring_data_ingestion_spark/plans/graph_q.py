@@ -715,20 +715,16 @@ def graph_triangle_census_indexed(spark: SparkSession, sf_dir: str) -> DataFrame
     fingerprint, ``session_cache.session_cache_suffix``), external path under
     tmp with atexit cleanup, so repeated runs serve from the built index.
     """
-    import atexit
     import os
-    import shutil
-    import tempfile
 
     from ..operators.bucketing import write_bucketed
-    from ..session_cache import session_cache_suffix
+    from ..session_cache import scratch_tree, session_cache_suffix
 
     suffix = session_cache_suffix(spark, sf_dir)
     tbl = f"mdi_graph_oriented_{suffix}"
     deg_tbl = f"mdi_graph_deg_{suffix}"
-    if not spark.catalog.tableExists(tbl):
-        base = os.path.join(tempfile.gettempdir(), tbl)
-        shutil.rmtree(base, ignore_errors=True)
+
+    def build(base: str) -> None:
         edges = _copurchase_edges(spark, sf_dir).localCheckpoint()
         deg = _degrees(edges)
         oriented = _orient(edges, deg)
@@ -744,10 +740,7 @@ def graph_triangle_census_indexed(spark: SparkSession, sf_dir: str) -> DataFrame
             "path", os.path.join(base, "deg")
         ).saveAsTable(deg_tbl)
 
-        def _cleanup() -> None:
-            shutil.rmtree(base, ignore_errors=True)
-
-        atexit.register(_cleanup)
+    scratch_tree(spark, "mdi_graph_oriented", build, sf_dir)
     oriented = spark.table(tbl)
     deg = spark.table(deg_tbl)
     tri = _wedge_close(oriented)

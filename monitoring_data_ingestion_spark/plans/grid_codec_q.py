@@ -507,37 +507,26 @@ _LANDING_PARAMS = (11, 61)
 def ensure_grib1_landing(
     spark: SparkSession, sf_dir: str, n_months: int = _LANDING_MONTHS
 ) -> str:
-    """Write the shared GRIB1 landing directory once per session (atomic
-    per-file temp+rename, the reference's download discipline) and
-    return its path. The default 12-month landing (year 2020) feeds the
-    batch landing scan AND the streaming anomaly pipeline; the 36-month
-    form (2020-2022, month index t continuing the same formula) feeds
-    the byte-real flagship, whose normals need multiple years per
-    calendar month. Year 2020 is always t=0-11, so the 12-month landing
-    is exactly the 36-month landing's first year."""
-    import atexit
-    import shutil
-    import tempfile
-
+    """Write the shared GRIB1 landing directory once per session (a
+    ``session_cache.scratch_tree``) and return its path. The default
+    12-month landing (year 2020) feeds the batch landing scan AND the
+    streaming anomaly pipeline; the 36-month form (2020-2022, month
+    index t continuing the same formula) feeds the byte-real flagship,
+    whose normals need multiple years per calendar month. Year 2020 is
+    always t=0-11, so the 12-month landing is exactly the 36-month
+    landing's first year."""
     import numpy as np
 
     from ..grid.grib1 import encode_grib1_message
-    from ..session_cache import session_cache_suffix
+    from ..session_cache import scratch_tree
 
-    base = os.path.join(
-        tempfile.gettempdir(),
-        f"mdi_grib_landing_{n_months}_{session_cache_suffix(spark, sf_dir)}",
-    )
-    complete = os.path.join(base, "_complete")
-    landing = os.path.join(base, "landing")
-    base_year = 2020
-    if not os.path.exists(complete):
-        shutil.rmtree(base, ignore_errors=True)
+    def build(base: str) -> None:
+        landing = os.path.join(base, "landing")
         os.makedirs(landing)
         i = np.arange(_LANDING_NI)[None, :]
         j = np.arange(_LANDING_NJ)[:, None]
         for t in range(n_months):
-            year, month = base_year + t // 12, t % 12 + 1
+            year, month = 2020 + t // 12, t % 12 + 1
             msgs = []
             for p, param in enumerate(_LANDING_PARAMS):
                 v = 100 + 50 * p + 2 * ((t * 17 + p * 23 + i * 3 + j * 5) % 50)
@@ -551,14 +540,11 @@ def ensure_grib1_landing(
                         nbits=8,
                     )
                 )
-            name = f"era5_{year}_{month:02d}.grib"
-            tmp = os.path.join(landing, f".{name}.tmp")
-            with open(tmp, "wb") as f:
+            with open(os.path.join(landing, f"era5_{year}_{month:02d}.grib"), "wb") as f:
                 f.write(b"".join(msgs))
-            os.rename(tmp, os.path.join(landing, name))
-        open(complete, "w").close()
-        atexit.register(shutil.rmtree, base, ignore_errors=True)
-    return landing
+
+    base = scratch_tree(spark, f"mdi_grib_landing_{n_months}", build, sf_dir)
+    return os.path.join(base, "landing")
 
 
 @query(

@@ -44,6 +44,7 @@ from pyspark.sql import functions as F
 from ..sources.grib_source import (
     INVENTORY_SCHEMA,
     RECORD_SCHEMA,
+    _columns,
     _decode_batches,
     _inventory_batches,
 )
@@ -51,10 +52,6 @@ from ..sources.readers import table
 
 Gate = tuple[int, int, int]
 Build = Callable[[int], bytes]
-
-
-def _columns(schema: str) -> list[str]:
-    return [c.split()[0] for c in schema.split(", ")]
 
 
 def _per_document(

@@ -54,9 +54,10 @@ def shapefile_cutline() -> tuple[tuple[float, float], ...]:
     """(lon, lat) cutline vertices parsed from the vendored shapefile.
 
     The outline is pre-decimated to 125 vertices: the geometry rides the
-    query plan as a literal edge array (zero shuffle, zero broadcast),
-    and a 4,987-vertex coastline would bloat codegen for no accuracy gain
-    on the fixture's 1°-offset synthetic grid.
+    query plan as a literal edge array (zero shuffle, zero broadcast)
+    that an interpreted ``aggregate`` walks once per cell, so a
+    4,987-vertex coastline would cost every cell 40× the edge tests for
+    no accuracy gain on the fixture's 1°-offset synthetic grid.
     """
     path = os.environ.get("SPARK_MDI_CLIP_SHP", VENDORED_SHP)
     return tuple(main_ring(path))
@@ -402,7 +403,7 @@ def grid_zonal_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     clip-by-cutline then summarize, /root/reference/src/file-conversions.js
     :174-195 composed with the cdo means at :203-211).
 
-    Zone assignment is the same codegen'd literal ray-cast as
+    Zone assignment is the same interpreted literal ray-cast as
     grid_polygon_clip, chained into a CASE across the zone list — a pure
     map stage with the geometry folded into the plan; the per-zone rollup
     is one partial+final hash aggregate whose exchange carries |zones|

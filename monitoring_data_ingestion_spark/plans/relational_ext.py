@@ -1055,24 +1055,17 @@ def agg_incremental_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``session_cache.session_cache_suffix``), so repeated invocations
     re-serve the committed state through the replay-idempotent path.
     """
-    import atexit
     import os
-    import shutil
-    import tempfile
 
     from ..operators.incremental import IncrementalAggregate
-    from ..session_cache import session_cache_suffix
+    from ..session_cache import scratch_tree
 
     e = table(spark, sf_dir, "events").select(
         "event_type", "value", F.dayofmonth("ts").alias("d")
     )
-    base = os.path.join(
-        tempfile.gettempdir(),
-        f"mdi_incr_agg_{session_cache_suffix(spark, sf_dir)}",
-    )
-    agg = IncrementalAggregate(spark, base, keys=("event_type",), value_col="value")
-    if agg.table.latest_version() is None:
-        atexit.register(shutil.rmtree, base, ignore_errors=True)
+    # The store is a subdirectory: the tree's root holds its marker.
+    store = os.path.join(scratch_tree(spark, "mdi_incr_agg", lambda b: None, sf_dir), "store")
+    agg = IncrementalAggregate(spark, store, keys=("event_type",), value_col="value")
     for i, (lo, hi) in enumerate(((1, 10), (11, 20), (21, 31))):
         agg.apply(e.filter(F.col("d").between(lo, hi)).drop("d"), batch_id=f"load-{i}")
     return agg.finalize().orderBy("event_type")

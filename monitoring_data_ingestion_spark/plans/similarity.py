@@ -1736,24 +1736,15 @@ def knn_ivf_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the already-built index — build once, serve many, the vector-
     store lifecycle.
     """
-    import atexit
-    import os
-    import shutil
-    import tempfile
-
     from ..operators.ann_index import build_ivf_index, serve_knn
-    from ..session_cache import session_cache_suffix
+    from ..session_cache import scratch_tree
 
     v = _vectors(spark, sf_dir)
-    base = os.path.join(
-        tempfile.gettempdir(),
-        f"mdi_ivf_index_{session_cache_suffix(spark, sf_dir)}",
+    base = scratch_tree(
+        spark,
+        "mdi_ivf_index",
+        lambda b: build_ivf_index(v.select("vec_id", "e", "nrm"), _label_codebook(v), b),
+        sf_dir,
     )
-    complete = os.path.join(base, "_built")
-    if not os.path.exists(complete):
-        shutil.rmtree(base, ignore_errors=True)
-        build_ivf_index(v.select("vec_id", "e", "nrm"), _label_codebook(v), base)
-        open(complete, "w").close()
-        atexit.register(shutil.rmtree, base, ignore_errors=True)
     queries_df = v.filter(F.col("vec_id") < N_QUERIES).select("vec_id", "e", "nrm")
     return serve_knn(spark, base, queries_df, nprobe=IVF_NPROBE, topk=IVF_TOPK)

@@ -305,31 +305,23 @@ def era5_grid_anomaly_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs in the scan's tasks, so no stage shuffles. sf_dir is unused — the grid is the
     reference's own data model, independent of the relational fixtures.
     """
-    import atexit
     import os
-    import shutil
-    import tempfile
 
     from ..grid.fixture import write_grid_landing
+    from ..session_cache import scratch_tree
     from ..streaming.pipeline import monthly_anomaly_query, monthly_normals
     from ..sources.python_datasource import FORMAT_NAME, register
 
-    # ONE fixed tree per Spark session (keyed by applicationId), not a
-    # fresh mkdtemp per invocation: repeated runs reuse the landing data
-    # and the checkpoint — the second invocation is a no-op resume through
-    # the same exactly-once machinery (T2 replay), and temp accumulation
-    # is bounded to one tree per session, swept at interpreter exit.
-    base = os.path.join(
-        tempfile.gettempdir(),
-        f"mdi_era5_pipeline_{spark.sparkContext.applicationId}",
+    # ONE fixed tree per Spark session, not a fresh mkdtemp per
+    # invocation: repeated runs reuse the landing data and the
+    # checkpoint — the second invocation is a no-op resume through the
+    # same exactly-once machinery (T2 replay).
+    base = scratch_tree(
+        spark,
+        "mdi_era5_pipeline",
+        lambda b: write_grid_landing(spark, os.path.join(b, "landing"), _GRID_START, _GRID_END),
     )
     landing = os.path.join(base, "landing")
-    complete = os.path.join(base, "_landing_complete")
-    if not os.path.exists(complete):
-        shutil.rmtree(base, ignore_errors=True)  # half-written prior tree
-        write_grid_landing(spark, landing, _GRID_START, _GRID_END)
-        open(complete, "w").close()
-        atexit.register(shutil.rmtree, base, ignore_errors=True)
 
     register(spark)
     history = spark.read.format(FORMAT_NAME).option("path", landing).load()
@@ -392,47 +384,36 @@ def stream_late_landing_pickup(spark: SparkSession, sf_dir: str) -> DataFrame:
     rides the checkpoint like every landing stream.  sf_dir is unused —
     the landing is the source's own data model.
     """
-    import atexit
     import os
-    import shutil
-    import tempfile
 
     import pandas as pd
 
+    from ..session_cache import scratch_tree
     from ..streaming.sources import file_stream
 
-    base = os.path.join(
-        tempfile.gettempdir(),
-        f"mdi_late_landing_{spark.sparkContext.applicationId}",
-    )
-    landing = os.path.join(base, "landing")
-    out = os.path.join(base, "out")
-    ckpt = os.path.join(base, "ckpt")
-    complete = os.path.join(base, "_complete")
+    def month_file(base: str, m: int) -> str:
+        return os.path.join(base, "landing", f"month_{m:02d}.parquet")
 
-    def month_file(m: int) -> str:
-        return os.path.join(landing, f"month_{m:02d}.parquet")
-
-    def write_month(m: int) -> None:
+    def write_month(base: str, m: int) -> None:
         pd.DataFrame(
             {
                 "month": [m] * 10,
                 "i": list(range(10)),
                 "value": [(m * 31 + i * 7) % 97 for i in range(10)],
             }
-        ).to_parquet(month_file(m), index=False)
+        ).to_parquet(month_file(base, m), index=False)
 
-    def drain() -> None:
+    def drain(base: str) -> None:
         stream = file_stream(
             spark,
-            landing,
-            spark.read.parquet(month_file(1)).schema,
+            os.path.join(base, "landing"),
+            spark.read.parquet(month_file(base, 1)).schema,
             path_glob="month_*.parquet",
         )
         q = (
             stream.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
+            .option("path", os.path.join(base, "out"))
+            .option("checkpointLocation", os.path.join(base, "ckpt"))
             .outputMode("append")
             .trigger(availableNow=True)
             .start()
@@ -441,22 +422,20 @@ def stream_late_landing_pickup(spark: SparkSession, sf_dir: str) -> DataFrame:
             q.stop()
             raise TimeoutError("late-landing drain did not finish")
 
-    if not os.path.exists(complete):
-        shutil.rmtree(base, ignore_errors=True)  # half-written prior tree
-        os.makedirs(landing)
+    def build(base: str) -> None:
+        os.makedirs(os.path.join(base, "landing"))
         for m in range(1, 12):
-            write_month(m)
-        drain()  # months 1-11 commit through the checkpoint
+            write_month(base, m)
+        drain(base)  # months 1-11 commit through the checkpoint
         # month 12 lands LATE with a decades-old preserved mtime — the
         # exact shape the 7-day default silently skips
-        write_month(12)
+        write_month(base, 12)
         backdate = 946_684_800  # 2000-01-01T00:00:00Z
-        os.utime(month_file(12), (backdate, backdate))
-        open(complete, "w").close()
-        atexit.register(shutil.rmtree, base, ignore_errors=True)
+        os.utime(month_file(base, 12), (backdate, backdate))
 
-    drain()  # resume: must pick up the backdated month 12
-    published = spark.read.parquet(out)
+    base = scratch_tree(spark, "mdi_late_landing", build)
+    drain(base)  # resume: must pick up the backdated month 12
+    published = spark.read.parquet(os.path.join(base, "out"))
     return (
         published.groupBy("month")
         .agg(
@@ -832,7 +811,6 @@ def era5_grib_anomaly_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     session-cached landing; the data is the engine's own model.
     """
     import os
-    import tempfile
 
     from ..sources.grib_source import grib1_cells, grib1_records, grib1_records_stream
     from ..streaming.pipeline import (
@@ -841,25 +819,13 @@ def era5_grib_anomaly_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         monthly_normals,
     )
     from ..streaming.sinks import IdempotentForeachBatch
-    from ..session_cache import session_cache_suffix
+    from ..session_cache import scratch_tree
     from .grid_codec_q import ensure_grib1_landing
 
     landing = ensure_grib1_landing(spark, sf_dir, n_months=36)
     # One pipeline tree per (session, landing): repeated runs resume the
-    # checkpoint through the exactly-once machinery (no re-publish),
-    # and the tree is swept at interpreter exit — the landing is
-    # regenerated per session (fresh fingerprint suffix), so an
-    # unswept tree would be orphaned forever.
-    base = os.path.join(
-        tempfile.gettempdir(),
-        f"mdi_grib_flagship_{session_cache_suffix(spark, landing)}",
-    )
-    if not os.path.exists(base):
-        import atexit
-        import shutil
-
-        os.makedirs(base, exist_ok=True)
-        atexit.register(shutil.rmtree, base, ignore_errors=True)
+    # checkpoint through the exactly-once machinery (no re-publish).
+    base = scratch_tree(spark, "mdi_grib_flagship", lambda b: None, landing)
 
     def to_grid(cells: DataFrame) -> DataFrame:
         return cells.select(
@@ -914,23 +880,15 @@ def _ensure_torn_grib1_landing(spark: SparkSession, sf_dir: str) -> str:
     which is cut 40 bytes into its second record (tp) — the partial
     download a crashed transfer leaves behind.  Record 1 (t2m) of the
     torn month is intact and must still land."""
-    import atexit
     import os
-    import shutil
-    import tempfile
 
-    from ..session_cache import session_cache_suffix
+    from ..session_cache import scratch_tree
     from .grid_codec_q import ensure_grib1_landing
 
     src = ensure_grib1_landing(spark, sf_dir, n_months=36)
-    base = os.path.join(
-        tempfile.gettempdir(),
-        f"mdi_grib_torn_{session_cache_suffix(spark, src)}",
-    )
-    complete = os.path.join(base, "_complete")
-    landing = os.path.join(base, "landing")
-    if not os.path.exists(complete):
-        shutil.rmtree(base, ignore_errors=True)
+
+    def build(base: str) -> None:
+        landing = os.path.join(base, "landing")
         os.makedirs(landing)
         for name in sorted(os.listdir(src)):
             with open(os.path.join(src, name), "rb") as f:
@@ -938,13 +896,10 @@ def _ensure_torn_grib1_landing(spark: SparkSession, sf_dir: str) -> str:
             if name == "era5_2022_06.grib":
                 rec1_len = int.from_bytes(data[4:7], "big")
                 data = data[: rec1_len + 40]
-            tmp = os.path.join(landing, f".{name}.tmp")
-            with open(tmp, "wb") as f:
+            with open(os.path.join(landing, name), "wb") as f:
                 f.write(data)
-            os.rename(tmp, os.path.join(landing, name))
-        open(complete, "w").close()
-        atexit.register(shutil.rmtree, base, ignore_errors=True)
-    return landing
+
+    return os.path.join(scratch_tree(spark, "mdi_grib_torn", build, src), "landing")
 
 
 @query(
@@ -1017,7 +972,6 @@ def era5_grib_quarantine_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle.
     """
     import os
-    import tempfile
 
     from ..sources.grib_source import (
         grib1_cells,
@@ -1030,19 +984,10 @@ def era5_grib_quarantine_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
         monthly_normals,
     )
     from ..streaming.sinks import IdempotentForeachBatch
-    from ..session_cache import session_cache_suffix
+    from ..session_cache import scratch_tree
 
     landing = _ensure_torn_grib1_landing(spark, sf_dir)
-    base = os.path.join(
-        tempfile.gettempdir(),
-        f"mdi_grib_qpub_{session_cache_suffix(spark, landing)}",
-    )
-    if not os.path.exists(base):
-        import atexit
-        import shutil
-
-        os.makedirs(base, exist_ok=True)
-        atexit.register(shutil.rmtree, base, ignore_errors=True)
+    base = scratch_tree(spark, "mdi_grib_qpub", lambda b: None, landing)
 
     # Same projection as the flagship (kept local so this query never
     # perturbs the flagship's audited plan): landing cells → the
@@ -1181,29 +1126,20 @@ def _spectral_stream_ref() -> str:
 
 
 def ensure_spectral_landing(spark: SparkSession, sf_dir: str) -> str:
-    """Write the shared 6-month SPECTRAL landing once per session
-    (atomic temp+rename) and return its path: each 2021 month-file
-    holds one GRIB1 simple-spectral record and one GRIB2 5.51
+    """Write the shared 6-month SPECTRAL landing once per session (a
+    ``session_cache.scratch_tree``) and return its path: each 2021
+    month-file holds one GRIB1 simple-spectral record and one GRIB2 5.51
     complex-spectral record (T=4, month-keyed integer coefficients) —
     the native form an ERA5/IFS spectral archive arrives in."""
-    import atexit
     import os
-    import shutil
-    import tempfile
 
     from ..grid.grib1 import encode_grib1_message
     from ..grid.grib2 import encode_grib2_message
-    from ..session_cache import session_cache_suffix
+    from ..session_cache import scratch_tree
     from .grid_spectral_q import _spectral_coeffs
 
-    base = os.path.join(
-        tempfile.gettempdir(),
-        f"mdi_spectral_landing_{session_cache_suffix(spark, sf_dir)}",
-    )
-    complete = os.path.join(base, "_complete")
-    landing = os.path.join(base, "landing")
-    if not os.path.exists(complete):
-        shutil.rmtree(base, ignore_errors=True)
+    def build(base: str) -> None:
+        landing = os.path.join(base, "landing")
         os.makedirs(landing)
         for mo in range(6):
             buf = encode_grib1_message(
@@ -1216,14 +1152,10 @@ def ensure_spectral_landing(spark: SparkSession, sf_dir: str) -> str:
                 nbits=16, category=3, number=9,
                 reftime=(2021, mo + 1, 1, 0, 0),
             )
-            name = f"ifs_2021_{mo + 1:02d}.grib"
-            tmp = os.path.join(landing, f".{name}.tmp")
-            with open(tmp, "wb") as f:
+            with open(os.path.join(landing, f"ifs_2021_{mo + 1:02d}.grib"), "wb") as f:
                 f.write(buf)
-            os.rename(tmp, os.path.join(landing, name))
-        open(complete, "w").close()
-        atexit.register(shutil.rmtree, base, ignore_errors=True)
-    return landing
+
+    return os.path.join(scratch_tree(spark, "mdi_spectral_landing", build, sf_dir), "landing")
 
 
 @query(

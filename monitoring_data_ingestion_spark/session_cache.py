@@ -30,6 +30,22 @@ dies with its session: nothing keys on a session, and no process-global
 structure holds one except a persisted frame awaiting release. At most
 ``MAX_ENTRIES`` handles are kept per session, evicted oldest first.
 
+Scratch trees live on disk, not on the session object, but share its
+lifetime. Queries that need files — a landing directory of encoded
+month-files, a streaming checkpoint and its published output, a
+persisted index, a versioned store — get them from :func:`scratch_tree`:
+one directory per (tag, session, input fingerprints) under the system
+temp dir, named ``<tag>_<session_cache_suffix(spark, *inputs)>``. One
+completion marker, ``_complete`` at the tree's root, decides whether the
+build runs: a tree without it is half-built (a crash or an error mid-
+build) and is removed and rebuilt from empty, and the marker is written
+only after the build returns, so the marker, not any per-file rename,
+is what makes the tree visible. A component that lists a directory gets
+a subdirectory of the tree, never its root. Repeated calls in a session
+return the same tree, so a streaming query there resumes its checkpoint.
+Each build registers one ``atexit`` sweep of its tree: the key carries
+the application id, so no later session could ever reuse it.
+
 Persisted frames. A builder that persist()s an intermediate registers it
 with :func:`register_cache`; harnesses (bench, tests, the CLI) call
 :func:`release_caches` between queries. The registry is process-wide.
@@ -39,10 +55,13 @@ held by a query that already returned.
 
 from __future__ import annotations
 
+import atexit
 import hashlib
 import logging
 import os
+import shutil
 import stat
+import tempfile
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -127,20 +146,41 @@ def memo_plan(
     return df
 
 
-def session_cache_suffix(spark: SparkSession, sf_dir: str) -> str:
-    """Catalog-safe cache key for per-session built artifacts (IVF index,
-    bucketed oriented-edge table, incremental-agg snapshots).
+def session_cache_suffix(spark: SparkSession, *inputs: str) -> str:
+    """Catalog-safe key for per-session built artifacts: the session's
+    application id, then one digest per input path.
 
-    Keys on the FULL absolute fixture path, not its basename (``/a/sf1``
-    and ``/b/sf1`` never serve each other's index), and on the
-    :func:`fingerprint` of everything below it, so a fixture regenerated
-    in place mid-session invalidates too. Folded through md5 because it
-    feeds a metastore table name (identifier charset + length limits)."""
-    full = os.path.abspath(sf_dir)
-    # A missing dir keys on its path alone; the read then fails loudly.
-    digest = hashlib.md5(repr(fingerprint(full) or full).encode()).hexdigest()
+    Keys on each input's FULL absolute path, not its basename (``/a/sf1``
+    and ``/b/sf1`` never serve each other's index), and on its
+    :func:`fingerprint`, so a fixture regenerated in place mid-session
+    invalidates too. Folded through md5 because it feeds a metastore
+    table name (identifier charset + length limits). With no inputs the
+    key is the session alone."""
     app = spark.sparkContext.applicationId.replace("-", "_")
-    return f"{app}_{digest[:16]}"
+    digests = []
+    for path in inputs:
+        full = os.path.abspath(path)
+        # A missing path keys on its name alone; the read then fails loudly.
+        key = repr(fingerprint(full) or full).encode()
+        digests.append(hashlib.md5(key).hexdigest()[:16])
+    return "_".join((app, *digests))
+
+
+def scratch_tree(
+    spark: SparkSession, tag: str, build: Callable[[str], None], *inputs: str
+) -> str:
+    """The session's scratch tree ``<tmp>/<tag>_<session_cache_suffix>``,
+    calling ``build(base)`` on an empty tree only when no complete one
+    exists; see "Lifetime" in the module docstring."""
+    base = os.path.join(tempfile.gettempdir(), f"{tag}_{session_cache_suffix(spark, *inputs)}")
+    marker = os.path.join(base, "_complete")
+    if not os.path.exists(marker):
+        shutil.rmtree(base, ignore_errors=True)  # a half-built earlier tree
+        os.makedirs(base)
+        atexit.register(shutil.rmtree, base, ignore_errors=True)
+        build(base)
+        open(marker, "w").close()
+    return base
 
 
 def register_cache(df: DataFrame) -> DataFrame:

@@ -83,29 +83,13 @@ RECORD_SCHEMA = (
     "values array<double>, error string"
 )
 
-_RECORD_COLUMNS = [
-    "path", "record_number", "edition", "grid_template",
-    "product_template", "parameter",
-    "category", "number", "level_type", "level", "level2_type", "level2",
-    "year", "month", "day",
-    "hour", "forecast_hours", "statistical_process", "interval_end",
-    "time_range_count",
-    "ensemble_member", "ensemble_size", "derived_forecast",
-    "cluster_identifier", "cluster_total", "cluster_size",
-    "probability_type", "prob_lower_limit", "prob_upper_limit",
-    "percentile_value", "satellite_bands", "satellite_series",
-    "satellite_numbers", "satellite_instruments",
-    "central_wavenumbers",
-    "radar_sites", "radar_site_id", "radar_site_number",
-    "radar_site_lat", "radar_site_lon", "radar_elevation_m",
-    "radar_operating_mode", "constituent_type", "aerosol_type",
-    "aerosol_size_interval", "aerosol_first_size_m",
-    "aerosol_second_size_m", "aerosol_wavelength_interval",
-    "aerosol_first_wavelength_m", "aerosol_second_wavelength_m",
-    "model_version", "ni", "nj",
-    "lat_first_mdeg", "lon_first_mdeg", "dlat_mdeg", "dlon_mdeg",
-    "latitudes_udeg", "cell_lats_deg", "cell_lons_deg", "values", "error",
-]
+
+def _columns(schema: str) -> list[str]:
+    """Column names of a DDL schema string, in order."""
+    return [c.split()[0] for c in schema.split(", ")]
+
+
+_RECORD_COLUMNS = _columns(RECORD_SCHEMA)
 
 
 def iter_grib_messages(buf: bytes):
@@ -184,6 +168,7 @@ INVENTORY_SCHEMA = (
     "year int, month int, day int, hour int, ni int, nj int, "
     "total_bytes int, error string"
 )
+_INVENTORY_COLUMNS = _columns(INVENTORY_SCHEMA)
 
 
 def _parse_on_error(on_error: str) -> bool:
@@ -459,19 +444,13 @@ def inventory_line(edition: int, msg: bytes, s: dict | None = None) -> str:
 def _inventory_batches(batches: "Iterator", on_error: str = "fail") -> "Iterator":
     import pandas as pd
 
-    cols = [
-        "path", "record_number", "edition", "parameter", "category",
-        "number", "level_type", "level", "level2_type", "level2",
-        "forecast_hours", "year", "month", "day", "hour",
-        "ni", "nj", "total_bytes", "error",
-    ]
     quarantine = _parse_on_error(on_error)
     for pdf in batches:
         rows = []
         for path, content in zip(pdf["path"], pdf["content"]):
             for kind, n, payload in _scan_units(bytes(content), quarantine):
                 if kind == "error":
-                    rows.append(_quarantine_row(cols, path, n, payload))
+                    rows.append(_quarantine_row(_INVENTORY_COLUMNS, path, n, payload))
                     continue
                 edition, msg, s = payload
                 try:
@@ -486,8 +465,8 @@ def _inventory_batches(batches: "Iterator", on_error: str = "fail") -> "Iterator
                 except ValueError as e:
                     if not quarantine:
                         raise
-                    rows.append(_quarantine_row(cols, path, n, str(e)))
-        yield pd.DataFrame(rows, columns=cols)
+                    rows.append(_quarantine_row(_INVENTORY_COLUMNS, path, n, str(e)))
+        yield pd.DataFrame(rows, columns=_INVENTORY_COLUMNS)
 
 
 def grib_inventory(

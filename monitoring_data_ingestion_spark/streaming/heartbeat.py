@@ -8,25 +8,17 @@ heartbeat document on every query progress event — the freshness monitor
 
 from __future__ import annotations
 
-import json
 import os
-import uuid
 from datetime import datetime, timezone
 
 from pyspark.sql.streaming import StreamingQueryListener
 
-
-def _write_atomic(path: str, obj: dict) -> None:
-    tmp = f"{path}.tmp-{uuid.uuid4().hex}"
-    with open(tmp, "w", encoding="utf-8") as f:
-        json.dump(obj, f)
-    os.rename(tmp, path)
+from ..ingest.sinks import write_json_atomically
 
 
 class HeartbeatListener(StreamingQueryListener):
     """Writes ``{"last_beat": iso, "query": name, "batch_id": n}`` on every
-    progress event, atomically (temp + rename, the reference's
-    write_json_atomically semantics).
+    progress event, atomically (``ingest.sinks.write_json_atomically``).
 
     ``query_name`` scopes the heartbeat to ONE query: a session-level
     StreamingQueryListener receives events from EVERY streaming query,
@@ -46,7 +38,7 @@ class HeartbeatListener(StreamingQueryListener):
     def onQueryStarted(self, event) -> None:
         if not self._mine(event.name):
             return
-        _write_atomic(
+        write_json_atomically(
             self.heart_path,
             {
                 "last_beat": datetime.now(timezone.utc).isoformat(),
@@ -59,7 +51,7 @@ class HeartbeatListener(StreamingQueryListener):
         p = event.progress
         if not self._mine(p.name):
             return
-        _write_atomic(
+        write_json_atomically(
             self.heart_path,
             {
                 "last_beat": datetime.now(timezone.utc).isoformat(),

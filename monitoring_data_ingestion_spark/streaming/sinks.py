@@ -3,8 +3,8 @@
 T2's contract (outputs first, state commit last, atomic rename —
 /root/reference/src/rabbit.js:51-61, src/utility.js:94-103) maps to an
 idempotent ``foreachBatch``: Spark may re-deliver a batch after a crash,
-so the sink must make re-processing a no-op. Batch-id markers committed
-by atomic rename give exactly-once output for any deterministic batch
+so the sink must make re-processing a no-op. Batch-id markers published
+through ``ingest.sinks.atomic_open`` give exactly-once output for any deterministic batch
 function.
 """
 
@@ -15,6 +15,8 @@ import uuid
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+
+from ..ingest.sinks import write_file_atomically
 
 
 def run_available_now_to_memory(
@@ -104,10 +106,7 @@ class IdempotentForeachBatch:
         if self.is_committed(batch_id):
             return
         self.write_fn(batch_df, batch_id)
-        tmp = self._marker(batch_id) + f".tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w", encoding="utf-8") as f:
-            f.write("ok")
-        os.rename(tmp, self._marker(batch_id))
+        write_file_atomically(self._marker(batch_id), b"ok")
 
 
 def foreach_batch_query(

@@ -51,6 +51,22 @@ def test_write_read_file(tmp_path):
     np.testing.assert_array_equal(back.values, r.values)
 
 
+def test_failed_republish_keeps_last_good_raster(tmp_path):
+    """A re-write that fails mid-encode must leave the published raster
+    as it was and no temp file behind (publish is temp + rename)."""
+    path = str(tmp_path / "grid.tif")
+    r = _raster()
+    write_geotiff(r, path)
+    bad = GeoRaster(
+        values=np.zeros(5, dtype="float32"),
+        west=-180.0, north=90.0, xres=10.0, yres=10.0, nodata=-9999.0,
+    )
+    with pytest.raises(ValueError):
+        write_geotiff(bad, path)
+    np.testing.assert_array_equal(read_geotiff(path).values, r.values)
+    assert os.listdir(tmp_path) == ["grid.tif"]
+
+
 def test_tiff_structure_is_valid():
     """Byte-level sanity: header magic, ascending IFD tags, float32
     sample format — what any external TIFF reader checks first."""

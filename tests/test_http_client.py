@@ -109,7 +109,7 @@ def test_download_atomic(server, tmp_path):
     dest = str(tmp_path / "f.bin")
     download(f"{server}/files/result.bin", dest)
     assert open(dest, "rb").read().startswith(b"GRIB-payload-")
-    assert not [p for p in tmp_path.iterdir() if ".tmp-" in p.name]
+    assert [p.name for p in tmp_path.iterdir()] == ["f.bin"]  # no temp left
 
 
 def test_multipart_byteranges(tmp_path):
@@ -137,3 +137,35 @@ def test_destructive_cat(tmp_path):
     out = destructive_cat(paths, str(tmp_path / "all.bin"))
     assert open(out, "rb").read() == b"chunk0|chunk1|chunk2|"
     assert not any((tmp_path / f"part{i}").exists() for i in range(3))
+
+
+def test_destructive_cat_into_one_of_its_inputs(tmp_path):
+    paths = []
+    for i in range(3):
+        p = tmp_path / f"part{i}"
+        p.write_bytes(f"chunk{i}|".encode())
+        paths.append(str(p))
+    out = destructive_cat(paths, paths[0])
+    assert out == paths[0]
+    assert open(out, "rb").read() == b"chunk0|chunk1|chunk2|"
+    assert sorted(p.name for p in tmp_path.iterdir()) == ["part0"]
+
+
+def test_download_failure_leaves_no_file(tmp_path):
+    """A connection that drops mid-body publishes nothing."""
+
+    class Dropped:
+        status = 200
+
+        def read(self, n=-1):
+            raise ConnectionResetError("peer went away")
+
+        def __enter__(self):
+            return self
+
+        def __exit__(self, *exc):
+            return False
+
+    with pytest.raises(ConnectionResetError):
+        download("http://unused", str(tmp_path / "f.bin"), opener=lambda url: Dropped())
+    assert list(tmp_path.iterdir()) == []

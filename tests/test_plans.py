@@ -252,6 +252,48 @@ def test_no_hand_rolled_exact_sums():
     assert found == allowed
 
 
+def test_one_publish_rule_on_disk():
+    """Files reach disk through ``ingest.sinks.atomic_open`` and session
+    scratch trees through ``session_cache.scratch_tree``: a source scan
+    finds no other ``os.rename``/``os.replace`` and no query module that
+    picks its own temp dir or registers its own exit sweep. The
+    allowlisted renames are different operations: a directory swap, and
+    part-file/directory moves out of a Spark staging write."""
+    import ast
+    from pathlib import Path
+
+    import monitoring_data_ingestion_spark as pkg
+
+    allowed_renames = {
+        ("ingest/sinks.py", "atomic_open"),
+        ("operators/compaction.py", "recover_compaction"),
+        ("operators/compaction.py", "compact_parquet"),
+        ("grid/fixture.py", "write_grid_landing"),
+        ("scripts/scale_probe.py", "_write_single_file"),
+    }
+    root = Path(pkg.__file__).parent
+    renames, scaffolds = set(), set()
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        tree = ast.parse(path.read_text())
+        funcs = [n for n in ast.walk(tree) if isinstance(n, ast.FunctionDef)]
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.Attribute) or not isinstance(node.value, ast.Name):
+                continue
+            outer = [f for f in funcs if f.lineno <= node.lineno <= f.end_lineno]
+            where = (rel, outer[-1].name if outer else f"line {node.lineno}")
+            call = (node.value.id, node.attr)
+            if call in (("os", "rename"), ("os", "replace")):
+                renames.add(where)
+            if rel.startswith("plans/") and call in (
+                ("tempfile", "gettempdir"),
+                ("atexit", "register"),
+            ):
+                scaffolds.add(where)
+    assert renames == allowed_renames
+    assert scaffolds == set()
+
+
 def test_headline_exact_sums_aggregate_over_longs(spark):
     """Plan-only pin for the r16 headline speedup: the exact sums of q1,
     q3 and q5 run as long sums (DecimalAggregates' UnscaledValue rewrite
@@ -1324,6 +1366,41 @@ def test_session_cache_suffix_keys_on_full_path_and_mtime(spark, tmp_path):
     assert sa == session_cache_suffix(spark, str(a))  # stable
     os.utime(a / "t.parquet", ns=(1, 1))  # regenerate in place
     assert sa != session_cache_suffix(spark, str(a))
+
+
+def test_scratch_tree_builds_once_per_key(spark, tmp_path):
+    """``scratch_tree``: a repeat call returns the same tree without
+    building; a tree that lost its completion marker is rebuilt from
+    empty; a changed input fingerprint gives a new tree."""
+    import os
+
+    from monitoring_data_ingestion_spark.session_cache import scratch_tree
+
+    src = tmp_path / "input.bin"
+    src.write_bytes(b"v1")
+    built = []
+
+    def build(base):
+        assert os.listdir(base) == []
+        built.append(base)
+        with open(os.path.join(base, "data"), "w") as f:
+            f.write("x")
+
+    base = scratch_tree(spark, "mdi_test_tree", build, str(src))
+    assert built == [base] and os.path.isfile(os.path.join(base, "data"))
+    assert scratch_tree(spark, "mdi_test_tree", build, str(src)) == base
+    assert built == [base]
+
+    os.remove(os.path.join(base, "_complete"))  # a build that never finished
+    with open(os.path.join(base, "stray"), "w") as f:
+        f.write("half")
+    assert scratch_tree(spark, "mdi_test_tree", build, str(src)) == base
+    assert built == [base, base]
+    assert sorted(os.listdir(base)) == ["_complete", "data"]
+
+    src.write_bytes(b"v2 longer")
+    other = scratch_tree(spark, "mdi_test_tree", build, str(src))
+    assert other != base and built == [base, base, other]
 
 
 def test_handle_cache_dies_with_its_session(spark):

@@ -87,3 +87,38 @@ def test_compress_json_bytes_roundtrip():
         assert json.loads(brotli.decompress(payload)) == obj
     # compression actually happened
     assert len(payload) < len(json.dumps(obj).encode()) + 20
+
+
+def test_atomic_publish_has_plain_file_mode(tmp_path):
+    """A published file gets the same permissions as one made by a plain
+    ``open(path, "w")`` in the same directory — readable by a downstream
+    server running as another user wherever the umask allows it."""
+    import stat
+
+    from monitoring_data_ingestion_spark.ingest.sinks import write_json_atomically
+
+    plain = tmp_path / "plain.json"
+    with open(plain, "w") as f:
+        f.write("{}")
+    published = tmp_path / "state.json"
+    write_json_atomically(str(published), {"a": 1})
+    assert stat.S_IMODE(published.stat().st_mode) == stat.S_IMODE(plain.stat().st_mode)
+
+
+def test_atomic_open_failure_keeps_old_file_and_leaves_no_temp(tmp_path):
+    import pytest
+
+    from monitoring_data_ingestion_spark.ingest.sinks import atomic_open
+
+    path = tmp_path / "heart.json"
+    path.write_bytes(b"old")
+    with pytest.raises(RuntimeError):
+        with atomic_open(str(path)) as f:
+            f.write(b"half of the new")
+            raise RuntimeError("writer died")
+    assert path.read_bytes() == b"old"
+    assert os.listdir(tmp_path) == ["heart.json"]
+    with atomic_open(str(path)) as f:
+        f.write(b"new")
+    assert path.read_bytes() == b"new"
+    assert os.listdir(tmp_path) == ["heart.json"]
