@@ -282,11 +282,16 @@ def _parse_byte_conf(s: str) -> int:
 
 def _scan_layout(spark: SparkSession, df: DataFrame) -> tuple[int, int] | None:
     """(planned split count, raw byte total) of the relation's scan,
-    estimated from the FileIndex (``df.inputFiles()`` + local file sizes)
+    computed from the FileIndex (``df.inputFiles()`` + local file sizes)
     with Spark's own FilePartition sizing: maxSplitBytes =
     min(maxPartitionBytes, max(openCostInBytes, paddedTotal /
-    defaultParallelism)), splits ≈ paddedTotal / maxSplitBytes, where
-    paddedTotal charges openCostInBytes per file.
+    defaultParallelism)), where paddedTotal charges openCostInBytes per
+    file. The count replays ``FilePartition.getFilePartitions``: each file
+    is cut into maxSplitBytes chunks, the chunks are taken largest first,
+    and a partition is closed when the next chunk would push its running
+    size (chunk bytes plus openCostInBytes each) past maxSplitBytes. A
+    single small file is one partition, not two — a closed-form
+    paddedTotal / maxSplitBytes overcounts by the first file's open cost.
 
     Deliberately NOT ``df.rdd.getNumPartitions()``: that converts the plan
     to an RDD — a full physical-planning round-trip per call. Returns None
@@ -319,7 +324,16 @@ def _scan_layout(spark: SparkSession, df: DataFrame) -> tuple[int, int] | None:
     padded = sum(sz + open_cost for sz in sizes)
     cores = max(int(spark.sparkContext.defaultParallelism), 1)
     max_split = max(min(max_part, max(open_cost, padded // cores)), 1)
-    return max(1, -(-padded // max_split)), sum(sizes)
+    chunks = sorted(
+        (min(max_split, sz - off) for sz in sizes for off in range(0, sz, max_split)),
+        reverse=True,
+    )
+    parts, cur = 0, 0
+    for chunk in chunks:
+        if cur + chunk > max_split:
+            parts, cur = parts + 1, 0
+        cur += chunk + open_cost
+    return max(1, parts + (cur > 0)), sum(sizes)
 
 
 def _scan_split_estimate(spark: SparkSession, df: DataFrame) -> int | None:
@@ -331,9 +345,11 @@ def _scan_split_estimate(spark: SparkSession, df: DataFrame) -> int | None:
 def _widen_if_narrow(
     spark: SparkSession, df: DataFrame, key: str, amp: int = 32
 ) -> DataFrame:
-    """Repartition ``df`` by ``key`` only when its scan is narrower than the
-    session shuffle parallelism — to a width derived from DATA VOLUME, not
-    the core count.
+    """Repartition ``df`` by ``key`` only when its scan has fewer splits than
+    ``min(shuffle partitions, defaultParallelism)`` — the number of tasks
+    the session can run at once — to a width derived from DATA VOLUME, not
+    the core count. A scan that already fills every task slot gains nothing
+    from a raw-row shuffle, even when the shuffle parallelism is higher.
 
     Widening matters locally (a single small parquet file would cap a
     compute-amplifying downstream stage at 1-2 tasks) but would be a
@@ -352,12 +368,13 @@ def _widen_if_narrow(
     k-centroid cross join, query-batch size) — at sf0.1 this yields 8–16
     partitions for the embedding scans (measured optimum) and still
     saturates the session for the ~300× text fan-outs; on a production
-    table the guard (est ≥ n) keeps the repartition out of the plan
+    table the guard (est ≥ slots) keeps the repartition out of the plan
     entirely, exactly as before.
     """
     n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    slots = min(n, max(int(spark.sparkContext.defaultParallelism), 1))
     layout = _scan_layout(spark, df)
-    if layout is None or layout[0] >= n:
+    if layout is None or layout[0] >= slots:
         return df
     est, raw = layout
     open_cost = _parse_byte_conf(

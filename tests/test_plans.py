@@ -435,13 +435,14 @@ def test_fuzzy_dedup_blocks_are_equi_join(spark):
 def test_bruteforce_knn_corpus_widen_is_guarded(spark):
     """knn_cosine_bruteforce scores the corpus map-side against the
     broadcast query set. r16: a GUARDED widen repartitions the corpus by
-    vec_id only when the scan has fewer splits than the session shuffle
-    parallelism — the smoke fixture is one tiny file, so here the widen
-    must fire (the 20×-amplifying dot-product stage would otherwise run
-    on one core). On a production-sized corpus the scan estimate exceeds
-    the parallelism and the guard must keep the corpus-wide shuffle OUT
-    of the plan — pinned by shrinking the session parallelism below the
-    scan's split count, which flips the same predicate."""
+    vec_id only when the scan has fewer splits than min(shuffle
+    partitions, task slots) — the smoke fixture is one tiny file, so here
+    the widen must fire (the 20×-amplifying dot-product stage would
+    otherwise run on one core). On a production-sized corpus the scan
+    estimate exceeds the parallelism and the guard must keep the
+    corpus-wide shuffle OUT of the plan — pinned by shrinking the session
+    parallelism below the scan's split count, which flips the same
+    predicate."""
     plan = _plan(q("knn_cosine_bruteforce")(spark, SF_SMOKE))
     # narrow scan → widen fires: vec_id exchange + the top-k window's.
     assert "Exchange hashpartitioning(vec_id" in plan
@@ -500,6 +501,35 @@ def test_shingle_repartition_only_when_scan_narrow(spark, tmp_path):
     assert "RepartitionByExpression" in narrow  # single small file → widen
     wide = _optimized(_shingled_docs(spark, wide_dir))
     assert "RepartitionByExpression" not in wide  # already parallel → no shuffle
+
+
+def test_shingle_widen_bounded_by_task_slots(spark, tmp_path):
+    """The widen guard's bound is min(shuffle partitions, defaultParallelism):
+    with shuffle partitions raised to twice the task slots, a scan that
+    fills every slot must not be shuffled, while a narrower scan still
+    widens. Holds on any host because the shuffle parallelism is set
+    relative to the slot count rather than fixed."""
+    from monitoring_data_ingestion_spark.plans.analytics import (
+        _scan_split_estimate,
+        _shingled_docs,
+    )
+
+    d = int(spark.sparkContext.defaultParallelism)
+    wide_dir = str(tmp_path / "wide")
+    docs = table(spark, SF_SMOKE, "documents")
+    docs.repartition(2 * d).write.parquet(f"{wide_dir}/documents.parquet")
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        spark.conf.set("spark.sql.shuffle.partitions", str(2 * d))
+        wide = _optimized(_shingled_docs(spark, wide_dir))
+        assert "RepartitionByExpression" not in wide  # fills every slot
+        # The single-file fixture widens exactly when its split count is
+        # below the slot count (one split: every host with >= 2 slots).
+        est = _scan_split_estimate(spark, docs)
+        narrow = _optimized(_shingled_docs(spark, SF_SMOKE))
+        assert ("RepartitionByExpression" in narrow) == (est < d)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
 def test_scan_split_estimate_conservative_off_local(spark):
