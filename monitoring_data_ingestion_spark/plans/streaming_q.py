@@ -290,8 +290,8 @@ ORDER BY g.time, g.variable, g.lat, g.lon
 def era5_grid_anomaly_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's ENTIRE service loop on the real grid fixture: a
     36-month gridmonths landing dir → custom Python streaming source
-    (month cursor as the offset) → sentinel→NULL → broadcast normals join
-    → anomaly subtract → idempotent month-partitioned publish — then the
+    (month cursor as the offset) → sentinel→NULL → broadcast normals
+    rasters → anomaly subtract → idempotent month-partitioned publish — then the
     published dataset read back as the result
     (/root/reference/src/rabbit.js:28-61, src/sources/era5monthly.js:36-155).
 
@@ -301,8 +301,10 @@ def era5_grid_anomaly_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     sink, not a batch re-statement.
 
     Scale: each micro-batch is one month of grid scanned executor-side;
-    normals broadcast (~|cells| rows); the idempotent partitioned write
-    runs in the scan's tasks, so no stage shuffles. sf_dir is unused — the grid is the
+    normals broadcast as one dense raster per (variable, month)
+    (|vars|×12 rows, each cell's normal found by index arithmetic); the
+    idempotent partitioned write runs in the scan's tasks, so no stage
+    shuffles. sf_dir is unused — the grid is the
     reference's own data model, independent of the relational fixtures.
     """
     import os
@@ -327,7 +329,7 @@ def era5_grid_anomaly_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     history = spark.read.format(FORMAT_NAME).option("path", landing).load()
     # persisted: the stream-static join re-executes the static side per
     # micro-batch — unpersisted, the full-history aggregate recomputes
-    # once per month-file (the table is ~|cells|x|vars|x12 rows)
+    # once per month-file (the table is |vars|x12 rasters of |cells|)
     normals = monthly_normals(history, _NORMAL_YEARS).persist()
 
     q = monthly_anomaly_query(
@@ -788,7 +790,7 @@ def era5_grib_anomaly_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     end-to-end: a 36-month (2020-2022) ``.grib`` landing directory drains
     through ``readStream(binaryFile)`` one month-file per micro-batch →
     Arrow GRIB1 decode → JVM cell explode → the SAME
-    ``anomaly_transform`` (sentinel→NULL, broadcast normals join,
+    ``anomaly_transform`` (sentinel→NULL, broadcast normals rasters,
     subtract) and the SAME idempotent month-partitioned publish
     (dynamic partition overwrite + commit marker, output-before-state)
     as the parquet flagship — then the published dataset read back
@@ -804,7 +806,7 @@ def era5_grib_anomaly_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     join, subtract, AND the partitioned sink round-trip.
 
     Scale: one month-file per micro-batch (the archive's arrival unit);
-    normals broadcast; the idempotent partitioned write runs in the
+    normals broadcast as |vars|×12 rasters; the idempotent partitioned write runs in the
     decode task, so no stage shuffles — the parquet flagship's exact
     posture, now with
     the download format at the front. sf_dir keys only the
@@ -965,7 +967,7 @@ def era5_grib_quarantine_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     for 2022-06.
 
     Scale: identical plan shape to the flagship (one Arrow decode
-    stage per micro-batch, broadcast normals join, month-partitioned
+    stage per micro-batch, broadcast normals rasters, month-partitioned
     dynamic overwrite); quarantine is a per-record try/except inside
     the existing decode stage and the manifest write is a tiny
     batch-keyed parquet append — no extra pass over the data, no new

@@ -1,6 +1,6 @@
 """End-to-end: the reference's main loop as one Structured Streaming query.
 
-gridmonths stream → sentinel→NULL → broadcast normals join → anomaly →
+gridmonths stream → sentinel→NULL → broadcast normals rasters → anomaly →
 idempotent month-partitioned publish. The fixture's closed-form values
 (tests/gridfix.py) make the expected anomaly exact:
 
@@ -11,11 +11,16 @@ idempotent month-partitioned publish. The fixture's closed-form values
 
 from __future__ import annotations
 
+import math
 import os
+import struct
+from datetime import datetime
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from monitoring_data_ingestion_spark.grid.ops import nodata_to_null
 from monitoring_data_ingestion_spark.streaming.pipeline import (
     anomaly_transform,
     month_partitioned_writer,
@@ -39,9 +44,24 @@ def normals(spark, landing):
     return monthly_normals(history, years=[1991, 1992, 1993]).cache()
 
 
+def _per_cell(normals):
+    """The grid-aligned normals read back as one row per (lat, lon,
+    variable, month): slot ``j*len(lon_axis) + i`` of ``normal_grid``."""
+    return normals.select(
+        "variable", "month", "lat_axis", "lon_axis", F.posexplode("normal_grid").alias("slot", "normal_value")
+    ).select(
+        F.col("lat_axis")[F.expr("slot div size(lon_axis)").cast("int")].alias("lat"),
+        F.col("lon_axis")[F.expr("slot % size(lon_axis)")].alias("lon"),
+        "variable",
+        "month",
+        "normal_value",
+    )
+
+
 def test_normals_match_closed_form(normals):
     # normal(month m) = lat*10 + lon + m + 1 + var_offset; the always-
     # sentinel corner cell averages nothing (NULL normal).
+    normals = _per_cell(normals)
     corner = normals.filter((F.col("lat") == LATS[0]) & (F.col("lon") == LONS[0]))
     assert corner.filter(F.col("normal_value").isNotNull()).count() == 0
     row = normals.filter(
@@ -49,6 +69,184 @@ def test_normals_match_closed_form(normals):
         & (F.col("month") == 2)
     ).collect()[0]
     assert row["normal_value"] == pytest.approx(LATS[1] * 10 + LONS[2] + 2 + 1)
+
+
+def _per_cell_anomaly(stream, history, years):
+    """Reference: the relational form, a left join of every cell to its
+    per-cell normal on (lat, lon, variable, month)."""
+    normals = (
+        nodata_to_null(history)
+        .filter(F.year("time").isin(list(years)))
+        .groupBy("lat", "lon", "variable", F.month("time").alias("month"))
+        .agg(F.avg("value").alias("normal_value"))
+    )
+    return (
+        nodata_to_null(stream)
+        .withColumn("month", F.month("time"))
+        .join(F.broadcast(normals), ["lat", "lon", "variable", "month"], "left")
+        .select(
+            "time", "lat", "lon", "variable", "value",
+            (F.col("value") - F.col("normal_value")).alias("anomaly"),
+        )
+    )
+
+
+def _bits(df) -> list[tuple]:
+    """Rows with every double as its IEEE bit pattern, so -0.0 != 0.0
+    and NaN == NaN; sorted, since row order is not part of the result."""
+
+    def key(v):
+        return struct.pack(">d", v).hex() if isinstance(v, float) else repr(v)
+
+    return sorted(tuple(key(v) for v in row) for row in df.collect())
+
+
+def _assert_matches_per_cell_join(stream, history, years):
+    normals = monthly_normals(history, years).persist()
+    try:
+        got_bits = _bits(anomaly_transform(stream, normals))
+    finally:
+        normals.unpersist()
+    assert len(got_bits) == stream.count()
+    assert got_bits == _bits(_per_cell_anomaly(stream, history, years))
+
+
+def test_anomaly_matches_per_cell_join_on_closed_form_fixture(spark, landing):
+    """A two-month batch of the closed-form fixture, sentinel corner
+    (NULL normal) included; ``unused_var`` has no normals at all."""
+    history = spark.read.parquet(os.path.join(landing, "199[123]-*.parquet")).filter(
+        F.col("variable") != "unused_var"
+    )
+    stream = spark.read.parquet(*(os.path.join(landing, f"1994-0{m}.parquet") for m in (1, 2)))
+    _assert_matches_per_cell_join(stream, history, (1991, 1992, 1993))
+
+
+_SCHEMA = "time timestamp, lat double, lon double, variable string, value double"
+
+
+def _lattice_rows(lats, lons, years, value):
+    return [
+        (datetime(y, 1, 1), lat, lon, "t2m", value(j, i, y))
+        for y in years
+        for j, lat in enumerate(lats)
+        for i, lon in enumerate(lons)
+    ]
+
+
+def test_anomaly_matches_per_cell_join_at_coordinate_edges(spark):
+    """Cells off the lattice get NULL; NULL, NaN, infinite and -0.0
+    coordinates raise no ANSI cast error and match exactly as the
+    equi-join matches them (-0.0 equals the lattice's 0.0)."""
+    lats, lons = [0.5, 0.25, 0.0, -0.25], [-0.25, 0.0, 0.25]
+    history = spark.createDataFrame(
+        _lattice_rows(lats, lons, (1991, 1992), lambda j, i, y: j * 3.7 + i / 3 + y % 7), _SCHEMA
+    )
+    t = datetime(1995, 1, 1)
+    live = _lattice_rows(lats, lons, (1995,), lambda j, i, y: 1.0 + j - i)
+    edges = [
+        (t, -0.0, -0.0, "t2m", 2.0),
+        (t, None, 0.25, "t2m", 3.0),
+        (t, 0.25, None, "t2m", 4.0),
+        (t, math.nan, 0.25, "t2m", 5.0),
+        (t, 0.25, math.nan, "t2m", 6.0),
+        (t, math.inf, 0.25, "t2m", 7.0),
+        (t, 0.25, -math.inf, "t2m", 8.0),
+        (t, 0.1, 0.25, "t2m", 9.0),  # between two latitudes
+        (t, 0.25 + 1e-12, 0.25, "t2m", 10.0),  # nearest slot, not equal
+        (t, 5.0, 0.25, "t2m", 11.0),  # past the axis
+        (t, 0.25, 0.125, "t2m", 12.0),
+        (t, 0.25, 0.25, "snow", 13.0),  # no normals for this variable
+        (None, 0.25, 0.25, "t2m", 14.0),  # no month
+    ]
+    stream = spark.createDataFrame(live + edges, _SCHEMA)
+    _assert_matches_per_cell_join(stream, history, (1991, 1992))
+    anomalies = [r["anomaly"] for r in anomaly_transform(
+        stream, monthly_normals(history, (1991, 1992))
+    ).collect()]
+    assert sum(a is not None for a in anomalies) == len(live) + 1  # + the -0.0 cell
+
+
+def test_anomaly_matches_per_cell_join_on_tenth_degree_grid(spark):
+    """A 0.1 degree grid whose ``mdeg / 1000.0`` coordinates are inexact
+    in binary: every lattice cell finds its normal, and a coordinate one
+    ulp away (the accumulated ``37.5 - 0.1 - 0.1 - ...``) finds none."""
+    lats = [(37_500 - 100 * j) / 1000.0 for j in range(12)]
+    lons = [(-18_000 + 100 * i) / 1000.0 for i in range(9)]
+    history = spark.createDataFrame(
+        _lattice_rows(lats, lons, (2020, 2021), lambda j, i, y: (j * 9 + i) * 0.1 + (y - 2020) / 3),
+        _SCHEMA,
+    )
+    drifted, lat = [], 37.5
+    for j in range(1, 12):
+        lat -= 0.1
+        drifted.append((datetime(2022, 1, 1), lat, lons[1], "t2m", 1.0 * j))
+    assert sum(d[1] not in lats for d in drifted) > 0
+    live = _lattice_rows(lats, lons, (2022,), lambda j, i, y: j - i * 0.1)
+    stream = spark.createDataFrame(live + drifted, _SCHEMA)
+    _assert_matches_per_cell_join(stream, history, (2020, 2021))
+
+
+@pytest.mark.parametrize(
+    "lats",
+    [
+        pytest.param([0.5, 0.25, 0.0], id="missing-cell"),
+        pytest.param(
+            np.degrees(np.arcsin(np.polynomial.legendre.leggauss(6)[0])).tolist(), id="gaussian-lat"
+        ),
+    ],
+)
+def test_normals_off_a_uniform_lattice_fail_loudly(spark, lats):
+    """Normals that are not a full, uniformly spaced lattice raise an
+    error naming the (variable, month) when they materialize, and the
+    anomaly built on them never publishes silent NULLs."""
+    lons = [10.0, 10.5, 11.0]
+    rows = _lattice_rows(lats, lons, (1991,), lambda j, i, y: float(j + i))
+    if len(lats) == 3:
+        rows = [r for r in rows if not (r[1] == lats[1] and r[2] == lons[1])]
+    history = spark.createDataFrame(rows, _SCHEMA)
+    normals = monthly_normals(history, (1991,))
+    with pytest.raises(Exception, match=r"variable=t2m, month=1\)"):
+        normals.persist().count()
+    normals.unpersist()
+    stream = spark.createDataFrame(_lattice_rows(lats, lons, (1995,), lambda j, i, y: 1.0), _SCHEMA)
+    with pytest.raises(Exception, match=r"not a full, uniformly spaced"):
+        anomaly_transform(stream, monthly_normals(history, (1991,))).collect()
+
+
+def _plan_nodes(plan, name: str) -> list:
+    """Nodes of a physical plan named ``name``, AQE wrappers unwrapped."""
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()
+    found = [plan] if plan.nodeName() == name else []
+    children = plan.children()
+    for k in range(children.size()):
+        found += _plan_nodes(children.apply(k), name)
+    return found
+
+
+def test_anomaly_batch_broadcasts_one_row_per_variable_month(spark, landing, normals):
+    """Plan only: the anomaly batch's single BroadcastExchange carries
+    the normals rasters, keyed on (variable, month) alone, one row per
+    (variable, calendar month) — no per-cell (lat, lon) broadcast."""
+    import re
+
+    batch = anomaly_transform(
+        spark.read.parquet(os.path.join(landing, "1994-03.parquet")), normals
+    )
+    plan = batch._jdf.queryExecution().executedPlan()
+    (exchange,) = _plan_nodes(plan, "BroadcastExchange")
+    output = exchange.child().output()
+    built = {output.apply(k).name() for k in range(output.size())}
+    assert {"variable", "month", "normal_grid"} <= built
+    assert not built & {"lat", "lon", "normal_value"}
+    (join,) = _plan_nodes(plan, "BroadcastHashJoin")
+    keys = join.rightKeys()
+    key_names = {
+        n for k in range(keys.size()) for n in re.findall(r"(\w+)#\d+", keys.apply(k).toString())
+    }
+    assert key_names == {"variable", "month"}
+    assert normals.count() == normals.select("variable", "month").distinct().count()
+    assert normals.count() == len(VAR_OFFSETS) * 3  # the fixture's months 1-3
 
 
 def test_stream_pipeline_drains_and_matches_closed_form(spark, landing, normals, tmp_path):
