@@ -37,40 +37,19 @@ the ``wgrib`` edition-1 path:
   other value simple-packed) and synthesizing to a Gaussian grid
   through :func:`spectral_synthesis` / :func:`spectral_legendre` —
   never an implicit georef.
-* Section 4 (Product definition): template 4.0 — parameter category +
-  number, the pair wgrib2 inventory strings name; 4.8 — statistical
-  processing over a time interval (process code + interval end); 4.1 /
-  4.11 — individual ensemble member (type, perturbation number,
-  ensemble size), 4.11 with the statistical block following the three
-  ensemble octets; 4.2/4.12 — derived-ensemble products; 4.3/4.4 and
-  4.13/4.14 — cluster-derived products (rectangular/circular domains,
-  the 4.13/4.14 statistical block at a VARIABLE offset after the
-  member list); 4.5/4.9 — probability, 4.6/4.10 — percentile, 4.7 —
-  analysis/forecast error (4.0's layout, distinguished only by the
-  surfaced product_template), 4.15 — spatio-statistical processing;
-  4.31/4.32 — satellite products (observational / simulated imagery)
-  whose contributing-spectral-band list stands where the family's
-  fixed-surface octets would be (4.31 carries no lead octets either);
-  4.33/4.34 — ensemble simulated satellite (4.32's leading layout,
-  the three 4.1-style ensemble octets AFTER the band list, 4.34's
-  statistical block at a VARIABLE offset after those); 4.20 — radar
-  products (site-based layout: site coordinates/elevation/ids and
-  operating mode; no fixed surfaces, no lead octets); 4.30 — the
-  DEPRECATED satellite form (4.31's layout with a band block one
-  octet NARROWER per band — instrument type is 1 octet, not 2 — so
-  each template decodes through its own band width; pre-2003 archives
-  still carry it); 4.40-4.43 — atmospheric chemistry (the CAMS
-  family: the 2-octet code-table-4.230 constituent type inserted
-  after the parameter number, composing the plain / ensemble /
-  statistical / ensemble-statistical base forms) and 4.44-4.48 —
-  aerosol (code-table-4.233 type + code-table-4.91 size interval with
-  signed-magnitude (scale, value) bounds; 4.48/4.49 add the optical
-  wavelength interval, 4.49 the ensemble form) — both parsed by
-  SPLICING the inserted block out so the remainder decodes through
-  the base template's exact offsets; 4.60/4.61 — individual ensemble
-  REFORECAST (4.1/4.11 plus the model-version date appended after the
-  ensemble octets, 4.61's statistical block seven octets past
-  4.11's — the GEFS v12 reforecast archive form).
+* Section 4 (Product definition): templates 4.0-4.15 (the 4.0 family:
+  ensemble members, derived-ensemble and cluster products,
+  probability, percentile, analysis/forecast error, statistical
+  intervals, spatio-statistical processing), 4.20 (radar), 4.30-4.34
+  (satellite: observed, simulated, ensemble), 4.40-4.49 (atmospheric
+  chemistry and aerosol) and 4.60/4.61 (ensemble reforecast).  Each is
+  ONE entry of the ``_PDT`` table: its blocks of fields in octet order,
+  each field with its width, kind (unsigned, sign-magnitude, scaled
+  pair, date, counted list, ...) and error label — the octet-table form
+  WMO-No. 306 and wgrib2 use.  The encoder picks the template from the
+  product kwargs it was given and packs the blocks; the decoder and
+  both inventories walk the same blocks, computing every offset from
+  the widths before it.  A template outside the table raises.
 * Section 5 (Data representation): template 5.0 (simple packing with an
   IEEE 754 binary32 reference value — GRIB2 dropped GRIB1's IBM float,
   signed-magnitude binary/decimal scale factors, nbits), template 5.2
@@ -123,6 +102,7 @@ import math
 import re
 import struct
 from dataclasses import dataclass
+from typing import NamedTuple
 
 import numpy as np
 
@@ -558,6 +538,13 @@ def _projected_increment(g: bytes, off: int) -> int:
 # Shape-of-earth octet (code table 3.2) -> sphere radius in metres for
 # the codes the codec emits/accepts.
 _EARTH_RADIUS_M = {0: 6_367_470.0, 6: 6_371_229.0}
+
+# The grid definition templates the decode and the landing inventory
+# read.  3.1-3.3 (rotated/stretched), 3.10 (Mercator), 3.20 (polar
+# stereographic), 3.30 (Lambert) and 3.40 (Gaussian) share 3.0's Nx/Ny
+# octets; 3.50 (spherical harmonics) has no grid at all.  Any other
+# layout would yield garbage grid dimensions.
+_GRID_TEMPLATES = frozenset((0, 1, 2, 3, 10, 20, 30, 40, 50))
 
 
 @dataclass
@@ -1331,51 +1318,563 @@ def _decode_complex_s7(
     return x, miss, miss2
 
 
-def _surface_type_octet(value) -> int:
-    """Fixed-surface TYPE octet at encode: 0-255 with 255 meaning
-    'surface coded missing' (legal to request explicitly) — but out of
-    range stops loudly instead of '& 0xFF' masking to a different
-    surface type."""
-    v = int(value)
-    if not 0 <= v <= 255:
-        raise ValueError(f"fixed surface type {v} out of range 0-255")
-    return v
+# --- section 4: product definition templates ------------------------------
+#
+# WMO-No. 306 (Manual on Codes, Vol. I.2) defines every product
+# definition template as an octet table, and wgrib2 reads each one from
+# a table.  So does this module: _PDT maps each template number to its
+# blocks in octet order, and one packer (_pack_fields) and one walker
+# (_parse_pdt) serve the encoder, the full decode and both inventories.
+# No offset is written down: the walker computes each one from the
+# widths before it, which is why a block that follows a counted list
+# (4.13/4.14 after the cluster members, 4.34 after the bands) needs no
+# special case.
+
+_REQUIRED = object()  # no default: the product kwarg must carry the key
 
 
-def _pdt_octet(value, what: str) -> int:
-    """Validate a 1-octet product-definition field at ENCODE: the wire
-    holds 0-255 with 255 reserved as the coded-missing sentinel, so an
-    out-of-range value (e.g. ensemble member 256) must stop loudly —
-    ``& 0xFF`` masking would silently encode it as a DIFFERENT member."""
-    v = int(value)
-    if not 0 <= v <= 254:
-        raise ValueError(
-            f"{what} {v} out of range 0-254 (255 is the missing sentinel)"
+class _F(NamedTuple):
+    """One section-4 field.  ``name`` is the Grib2Record field it
+    decodes to (None: not surfaced), ``key`` the dotted path the encoder
+    reads in the product kwargs (None: the kwarg itself), ``width`` its
+    octets (per item for a list) and ``label`` what its errors call it.
+    ``missing``: the all-ones word is coded missing, None both ways.
+    ``arg`` is the kind's parameter: a constant's bytes, an unsigned
+    field's ceiling, a signed field's (lo, hi, divisor), a scaled pair's
+    non-negative flag, the phrase an empty count reports, a list's
+    item fields."""
+
+    name: str | None
+    key: str | None
+    width: int
+    kind: str
+    label: object = ""
+    missing: bool = False
+    default: object = _REQUIRED
+    arg: object = None
+
+
+def _const(raw: bytes) -> _F:
+    return _F(None, None, len(raw), "const", arg=raw)
+
+
+def _code(name, key, label, **kw) -> _F:
+    """One code-table octet: 0-254, 255 is coded missing.  ``& 0xFF``
+    masking would encode an out-of-range value as a DIFFERENT code, so
+    it stops loudly instead."""
+    return _F(name, key, 1, "u", label, missing=True, **kw)
+
+
+def _items(name, key, label, items) -> _F:
+    """A list whose length is the last count field read.  ``name``
+    "columns" surfaces one tuple per named item field, "first" only the
+    first item's fields."""
+    return _F(name, key, sum(f.width for f in items), "list", label, arg=items)
+
+
+_PARAM = (
+    _F("category", "category", 1, "u", "parameter category"),
+    _F("number", "number", 1, "u", "parameter number"),
+)
+# Generating process (forecast), background/forecast process ids,
+# cutoff hours/minutes, then the lead in code-table-4.4 units: GFS
+# f000-f384 products differ ONLY in the lead.
+_LEAD = (
+    _const(b"\x02\x00\x00\x00\x00\x00"),
+    _F("forecast_hours", "forecast", 5, "lead", "forecast time", default=None),
+)
+# The second surface is the BOTTOM of a layer product (0-10 cm soil,
+# cloud layers); coded missing on a point level.
+_SURFACES = (
+    _F("level", "level", 6, "surface", ("fixed surface type", "fixed-surface")),
+    _F("level2", "level2", 6, "surface",
+       ("second fixed surface type", "second-surface"), missing=True),
+)
+_FAMILY = (_PARAM, _LEAD, _SURFACES)
+_ENSEMBLE = (
+    _code("ensemble_type", "ensemble.type", "ensemble type"),
+    _code("ensemble_member", "ensemble.member", "ensemble member"),
+    _code("ensemble_size", "ensemble.size", "ensemble size"),
+)
+_DERIVED = (
+    _code("derived_forecast", "derived.type", "derived forecast type"),
+    _code("ensemble_size", "derived.size", "ensemble size"),
+)
+
+
+def _cluster(domain: tuple) -> tuple:
+    """4.3/4.4: the 4.2 octets, the cluster block, the domain geometry,
+    the in-cluster spread as scaled pairs, then the NC member numbers
+    (NC = len(members); without it the list length is unknowable)."""
+    return (
+        _code("derived_forecast", "cluster.type", "derived forecast type"),
+        _code("ensemble_size", "cluster.size", "ensemble size"),
+        _code("cluster_identifier", "cluster.identifier", "cluster identifier"),
+        _code(None, "cluster.hires", "high-resolution cluster", default=None),
+        _code(None, "cluster.lores", "low-resolution cluster", default=None),
+        _code("cluster_total", "cluster.total", "total number of clusters"),
+        _code("cluster_method", "cluster.method", "clustering method"),
+        *domain,
+        _F("cluster_size", "cluster.members", 1, "count",
+           "cluster member count", arg="forecasts in the cluster"),
+        _F("cluster_stddev", "cluster.stddev", 5, "pair",
+           "cluster standard deviation", default=None),
+        _F("cluster_mean_distance", "cluster.distance", 5, "pair",
+           "cluster distance from the mean", default=None),
+        _items("columns", "cluster.members", "cluster members",
+               (_code("cluster_members", None, "cluster member"),)),
+    )
+
+
+_CLUSTER_RECTANGLE = _cluster(tuple(
+    _F(None, f"cluster.bounds.{i}", 4, "sm", f"cluster domain {side}")
+    for i, side in enumerate(("north", "south", "east", "west"))
+))
+_CLUSTER_CIRCLE = _cluster(tuple(
+    _F(None, f"cluster.center.{i}", 4, "sm", f"cluster domain {part}")
+    for i, part in enumerate(("centre latitude", "centre longitude", "radius"))
+))
+_PROBABILITY = (
+    _code("probability_number", "probability.number",
+          "forecast probability number"),
+    _code("probability_total", "probability.total",
+          "total forecast probabilities"),
+    _code("probability_type", "probability.type", "probability type"),
+    _F("prob_lower_limit", "probability.lower", 5, "pair", "threshold",
+       default=None),
+    _F("prob_upper_limit", "probability.upper", 5, "pair", "threshold",
+       default=None),
+)
+_PERCENTILE = (
+    _F("percentile_value", "percentile", 1, "u", "percentile value",
+       missing=True, arg=100),
+)
+# 4.15 is an AREA statistic: statistical_process/interval_end stay None.
+_SPATIAL = (
+    _code("spatial_statistical_process", "spatial.stat",
+          "spatial statistical process"),
+    _code("spatial_process_type", "spatial.type", "spatial processing type"),
+    _code("spatial_points", "spatial.points", "spatial data-point count"),
+)
+# The statistical block: interval end, n time-range specifications
+# (n > 1 nests statistics, "average of daily maxima"; only the
+# outermost process surfaces, so n rides along), each an hourly range
+# of successive fields with continuous processing.
+_STATISTICAL = (
+    _F("interval_end", "statistical.interval_end", 7, "date",
+       "statistical interval end"),
+    _F("time_range_count", "statistical.specs", 1, "count",
+       "time-range specification count", arg="time-range specifications"),
+    _const(b"\x00\x00\x00\x00"),  # no missing values in the interval
+    _items("first", "statistical.specs", "time-range specifications", (
+        _code("statistical_process", "process", "statistical process"),
+        _const(b"\x02\x01"),  # increment type: successive fields; unit: hour
+        _F(None, "range_hours", 4, "u", "statistical range hours"),
+        _const(b"\x01\x00\x00\x00\x00"),  # increment unit: hour; continuous
+    )),
+)
+_MODEL_VERSION = (
+    _F("model_version", "model_version", 7, "date", "model version date"),
+)
+_CHEMISTRY = (
+    _F("constituent_type", "chemistry", 2, "u", "chemical constituent type",
+       missing=True),
+)
+_AEROSOL = (
+    _F("aerosol_type", "aerosol.type", 2, "u", "aerosol type", missing=True),
+    _code("aerosol_size_interval", "aerosol.size_interval",
+          "aerosol size-interval type", default=None),
+    _F("aerosol_first_size_m", "aerosol.first_size", 5, "pair",
+       "aerosol first size", default=None),
+    _F("aerosol_second_size_m", "aerosol.second_size", 5, "pair",
+       "aerosol second size", default=None),
+)
+_AEROSOL_WAVELENGTH = _AEROSOL + (
+    _code("aerosol_wavelength_interval", "aerosol.wavelength_interval",
+          "aerosol wavelength-interval type", default=None),
+    _F("aerosol_first_wavelength_m", "aerosol.first_wavelength", 5, "pair",
+       "aerosol first wavelength", default=None),
+    _F("aerosol_second_wavelength_m", "aerosol.second_wavelength", 5, "pair",
+       "aerosol second wavelength", default=None),
+)
+# 4.20 and 4.30/4.31 are observations at the reference time: no lead
+# octets, no fixed surfaces.
+_RADAR = (
+    _const(b"\x08"),  # type of generating process: observation
+    _code("radar_sites", "radar.sites", "radar site count", default=1),
+    _const(b"\x01"),  # unit of time range: hour
+    _F("radar_site_lat", "radar.lat_udeg", 4, "sm", "radar site latitude",
+       missing=True, default=None, arg=(-90_000_000, 90_000_000, 1e6)),
+    _F("radar_site_lon", "radar.lon_udeg", 4, "sm", "radar site longitude",
+       missing=True, default=None, arg=(-180_000_000, 360_000_000, 1e6)),
+    _F("radar_elevation_m", "radar.elevation_m", 2, "u", "radar site elevation",
+       missing=True, default=0),
+    _F("radar_site_id", "radar.site_id", 4, "ascii", "radar site id",
+       default="XXXX"),
+    _F("radar_site_number", "radar.site_number", 2, "u", "radar site number",
+       missing=True, default=0),
+    _code("radar_operating_mode", "radar.mode", "radar operating mode",
+          default=0),
+    _code(None, "radar.calibration", "reflectivity calibration constant",
+          default=0),
+    _code(None, "radar.qc", "quality control indicator", default=0),
+    _code(None, "radar.clutter", "clutter filter indicator", default=0),
+    _code(None, "radar.antenna_elevation", "constant antenna elevation angle",
+          default=0),
+    _F(None, "radar.accumulation_minutes", 2, "u", "radar accumulation minutes",
+       default=0),
+    _code(None, "radar.echo_top_reference",
+          "reference reflectivity for echo top", default=0),
+    _F(None, "radar.bin_spacing_m", 3, "u", "radar bin spacing", default=0),
+    _F(None, "radar.radial_spacing", 2, "u", "radar radial spacing", default=0),
+)
+_OBSERVED = (
+    _const(b"\x08"),  # type of generating process: observation
+    _code(None, "satellite.process",
+          "observation generating process identifier", default=0),
+)
+
+
+def _bands(instrument: _F) -> tuple:
+    """The contributing spectral bands: NB, then per band the satellite
+    series, number, instrument type and central wave number (m^-1, an
+    exact scaled pair; a magnitude, so never negative)."""
+    return (
+        _F("satellite_bands", "satellite.bands", 1, "count",
+           "spectral band count", arg="contributing spectral bands"),
+        _items("columns", "satellite.bands", "spectral bands", (
+            _F("satellite_series", "series", 2, "u", "satellite series"),
+            _F("satellite_numbers", "number", 2, "u", "satellite number"),
+            instrument,
+            _F("central_wavenumbers", "wave", 5, "pair", "central-wave-number",
+               arg=True),
+        )),
+    )
+
+
+_BANDS = _bands(
+    _F("satellite_instruments", "instrument", 2, "u", "instrument type")
+)
+
+# Template number -> (the product kwargs that select it, its blocks).
+_PDT = {
+    0: ((), _FAMILY),
+    1: (("ensemble",), (*_FAMILY, _ENSEMBLE)),
+    2: (("derived",), (*_FAMILY, _DERIVED)),
+    3: (("cluster", "bounds"), (*_FAMILY, _CLUSTER_RECTANGLE)),
+    4: (("cluster", "center"), (*_FAMILY, _CLUSTER_CIRCLE)),
+    5: (("probability",), (*_FAMILY, _PROBABILITY)),
+    6: (("percentile",), (*_FAMILY, _PERCENTILE)),
+    # Analysis/forecast ERROR: 4.0's layout exactly, so only the
+    # template number tells an error field from the analysis.
+    7: (("error",), _FAMILY),
+    8: (("statistical",), (*_FAMILY, _STATISTICAL)),
+    9: (("probability", "statistical"), (*_FAMILY, _PROBABILITY, _STATISTICAL)),
+    10: (("percentile", "statistical"), (*_FAMILY, _PERCENTILE, _STATISTICAL)),
+    11: (("ensemble", "statistical"), (*_FAMILY, _ENSEMBLE, _STATISTICAL)),
+    12: (("derived", "statistical"), (*_FAMILY, _DERIVED, _STATISTICAL)),
+    # 4.13/4.14: the statistical block sits at a VARIABLE offset, after
+    # the NC member numbers.
+    13: (("cluster", "bounds", "statistical"),
+         (*_FAMILY, _CLUSTER_RECTANGLE, _STATISTICAL)),
+    14: (("cluster", "center", "statistical"),
+         (*_FAMILY, _CLUSTER_CIRCLE, _STATISTICAL)),
+    15: (("spatial",), (*_FAMILY, _SPATIAL)),
+    20: (("radar",), (_PARAM, _RADAR)),
+    # 4.30, the deprecated form of 4.31 that pre-2003 archives carry:
+    # each band's instrument type is ONE octet, so a band is 10 octets.
+    30: (("satellite", "deprecated"), (_PARAM, _OBSERVED, _bands(
+        _code("satellite_instruments", "instrument", "instrument type")))),
+    31: (("satellite",), (_PARAM, _OBSERVED, _BANDS)),
+    32: (("satellite", "simulated"), (_PARAM, _LEAD, _BANDS)),
+    # 4.33/4.34: the ensemble octets (and 4.34's statistical block)
+    # follow the NB-long band list.
+    33: (("satellite", "simulated", "ensemble"),
+         (_PARAM, _LEAD, _BANDS, _ENSEMBLE)),
+    34: (("satellite", "simulated", "ensemble", "statistical"),
+         (_PARAM, _LEAD, _BANDS, _ENSEMBLE, _STATISTICAL)),
+    # 4.40-4.49: the 4.0/4.1/4.8/4.11 layouts with the chemical
+    # constituent or aerosol insert after the parameter number.
+    40: (("chemistry",), (_PARAM, _CHEMISTRY, _LEAD, _SURFACES)),
+    41: (("chemistry", "ensemble"),
+         (_PARAM, _CHEMISTRY, _LEAD, _SURFACES, _ENSEMBLE)),
+    42: (("chemistry", "statistical"),
+         (_PARAM, _CHEMISTRY, _LEAD, _SURFACES, _STATISTICAL)),
+    43: (("chemistry", "ensemble", "statistical"),
+         (_PARAM, _CHEMISTRY, _LEAD, _SURFACES, _ENSEMBLE, _STATISTICAL)),
+    44: (("aerosol",), (_PARAM, _AEROSOL, _LEAD, _SURFACES)),
+    45: (("aerosol", "ensemble"),
+         (_PARAM, _AEROSOL, _LEAD, _SURFACES, _ENSEMBLE)),
+    46: (("aerosol", "statistical"),
+         (_PARAM, _AEROSOL, _LEAD, _SURFACES, _STATISTICAL)),
+    47: (("aerosol", "ensemble", "statistical"),
+         (_PARAM, _AEROSOL, _LEAD, _SURFACES, _ENSEMBLE, _STATISTICAL)),
+    48: (("aerosol", "wavelength"),
+         (_PARAM, _AEROSOL_WAVELENGTH, _LEAD, _SURFACES)),
+    49: (("aerosol", "wavelength", "ensemble"),
+         (_PARAM, _AEROSOL_WAVELENGTH, _LEAD, _SURFACES, _ENSEMBLE)),
+    # Ensemble REFORECAST (the GEFS v12 archive form): the model-version
+    # date follows the ensemble octets.
+    60: (("ensemble", "model_version"), (*_FAMILY, _ENSEMBLE, _MODEL_VERSION)),
+    61: (("ensemble", "model_version", "statistical"),
+         (*_FAMILY, _ENSEMBLE, _MODEL_VERSION, _STATISTICAL)),
+}
+_PDT_BY_KEY = {frozenset(key): t for t, (key, _) in _PDT.items()}
+# What the inventories read: category, number, the insert they skip,
+# the lead and both surfaces, every one ahead of the first other block.
+_HEAD_BLOCKS = (
+    _PARAM, _CHEMISTRY, _AEROSOL, _AEROSOL_WAVELENGTH, _LEAD, _SURFACES,
+)
+
+
+def _lookup(src, key: str | None, default):
+    for part in key.split(".") if key else ():
+        if not isinstance(src, dict):
+            src = src[int(part)]
+        elif part in src or default is _REQUIRED:
+            src = src[part]
+        else:
+            return default
+    return src
+
+
+def _pack_u(f: _F, v) -> bytes:
+    if v is None and f.missing:
+        return b"\xff" * f.width
+    v = int(v)
+    hi = f.arg if f.arg is not None else 256 ** f.width - 1 - f.missing
+    if not 0 <= v <= hi:
+        sentinel = (
+            f" ({hi + 1} is the missing sentinel)"
+            if f.missing and f.arg is None else ""
         )
+        raise ValueError(f"{f.label} {v} out of range 0-{hi}{sentinel}")
+    return v.to_bytes(f.width, "big")
+
+
+def _parse_u(f: _F, s4: bytes, off: int):
+    v = int.from_bytes(s4[off : off + f.width], "big")
+    if f.missing and v == 256 ** f.width - 1:
+        return None
+    if f.arg is not None and v > f.arg:
+        raise ValueError(f"{f.label} {v} out of range 0-{f.arg}")
     return v
 
 
-def _scaled_pair(limit) -> bytes:
-    """Template 4.5 threshold pair at ENCODE: (scale factor, scaled
-    value) → 1 + 4 octets, both signed-magnitude; ``None`` → coded
-    missing (the probability type doesn't bound that side).  A -127
-    scale would collide with the 0xFF missing sentinel, so the legal
-    signed-magnitude range is -126..127."""
-    if limit is None:
-        return b"\xff" + b"\xff\xff\xff\xff"
-    scale, value = int(limit[0]), int(limit[1])
+def _pack_sm(f: _F, v) -> bytes:
+    if v is None and f.missing:
+        return b"\xff" * f.width
+    top = 1 << (8 * f.width - 1)
+    lo, hi = f.arg[:2] if f.arg else (1 - top, top - 1)
+    if not lo <= int(v) <= hi:
+        raise ValueError(f"{f.label} {int(v)} out of range")
+    return _signed_magnitude(int(v), f.width)
+
+
+def _sm_read(raw: bytes) -> int:
+    v, top = int.from_bytes(raw, "big"), 1 << (8 * len(raw) - 1)
+    return top - v if v & top else v
+
+
+def _parse_sm(f: _F, s4: bytes, off: int):
+    raw = s4[off : off + f.width]
+    if f.missing and raw == b"\xff" * f.width:
+        return None
+    v = _sm_read(raw)
+    lo, hi, div = f.arg
+    if not lo <= v <= hi:
+        raise ValueError(f"{f.label} {v / div} out of range")
+    return v / div
+
+
+def _pack_pair(label: str, v, nonneg: bool = False) -> bytes:
+    """(scale factor, scaled value) -> 1 + 4 signed-magnitude octets;
+    None -> coded missing.  Scale -127 and value -(2^31 - 1) are the
+    all-ones words, so they would decode as missing: both stop."""
+    if v is None:
+        return b"\xff" * 5
+    scale, value = int(v[0]), int(v[1])
     if not -126 <= scale <= 127:
         raise ValueError(
-            f"threshold scale factor {scale} out of signed-magnitude range"
+            f"{label} scale factor {scale} out of signed-magnitude range"
         )
-    if value == -(2**31 - 1):
-        # sign-magnitude -(2^31-1) is the all-ones word — it would
-        # round-trip as coded-missing (no limit), silently losing the
-        # threshold; same collision class as scale -127
+    if nonneg and value < 0:
+        raise ValueError(f"{label} value {value} out of range")
+    if abs(value) >= 1 << 31:
         raise ValueError(
-            "threshold scaled value collides with the coded-missing sentinel"
+            f"{label} value {value} out of range (signed-magnitude 32-bit overflow)"
         )
-    return bytes([(0x80 | -scale) if scale < 0 else scale]) + _s32be(value)
+    if value == 1 - (1 << 31):
+        raise ValueError(
+            f"{label} scaled value collides with the coded-missing sentinel"
+        )
+    return _signed_magnitude(scale, 1) + _signed_magnitude(value, 4)
+
+
+def _pack_surface(f: _F, v) -> bytes:
+    """Type 0-255 (255 = missing, legal to ask for on the first
+    surface), then the scaled level."""
+    if v is None and f.missing:
+        return b"\xff" * 6
+    t = _pack_u(f._replace(width=1, label=f.label[0], arg=None), v["type"])
+    return t + _pack_pair(f.label[1], (v.get("scale", 0), v["value"]))
+
+
+def _parse_surface(f: _F, s4: bytes, off: int) -> dict:
+    """A coded-missing type blanks the whole surface; so does an
+    all-ones part.  Values are signed-MAGNITUDE (a -2 PVU surface is
+    wire 0x80000002)."""
+    t = s4[off] if s4[off] != 0xFF else None
+    sc, raw = s4[off + 1 : off + 2], s4[off + 2 : off + 6]
+    scale = None if t is None or sc == b"\xff" else _sm_read(sc)
+    value = None if t is None or raw == b"\xff" * 4 else _sm_read(raw)
+    return {f"{f.name}_type": t, f"{f.name}_scale": scale, f"{f.name}_value": value}
+
+
+def _date_ok(p: tuple) -> bool:
+    return (
+        len(p) == 6 and 0 <= p[0] <= 0xFFFF and 1 <= p[1] <= 12
+        and 1 <= p[2] <= 31 and 0 <= p[3] < 24 and 0 <= p[4] < 60 and 0 <= p[5] < 60
+    )
+
+
+def _pack_date(f: _F, v) -> bytes:
+    """(year, month, day, hour, minute[, second = 0])."""
+    p = tuple(int(x) for x in v) + (0,) * (len(v) == 5)
+    if not _date_ok(p):
+        raise ValueError(f"{f.label} {v} out of range")
+    return struct.pack(">HBBBBB", *p)
+
+
+def _parse_date(f: _F, s4: bytes, off: int) -> tuple:
+    p = struct.unpack_from(">HBBBBB", s4, off)
+    if not _date_ok(p):
+        raise ValueError(f"{f.label} {p[:5]} out of range")
+    return p[:5]
+
+
+def _pack_lead(f: _F, v) -> bytes:
+    """Only units the decoder turns into whole hours encode: a calendar
+    unit would make a message the engine itself rejects."""
+    unit, value = (1, 0) if v is None else (int(v["unit"]), int(v["value"]))
+    if not 0 <= value < 1 << 31:
+        raise ValueError(f"{f.label} {value} out of range")
+    _forecast_hours(unit, value)
+    return bytes([unit]) + value.to_bytes(4, "big")
+
+
+def _pack_ascii(f: _F, v) -> bytes:
+    if len(str(v)) != f.width or not str(v).isascii():
+        raise ValueError(
+            f"{f.label} {str(v)!r} must be {f.width} CCITT IA5 characters"
+        )
+    return str(v).encode("ascii")
+
+
+def _parse_ascii(f: _F, s4: bytes, off: int):
+    raw = s4[off : off + f.width]
+    if raw == b"\xff" * f.width:
+        return None
+    try:
+        return raw.decode("ascii").strip("\x00 ") or None
+    except UnicodeDecodeError:
+        raise ValueError(f"{f.label} is not CCITT IA5 (ASCII)") from None
+
+
+def _pack_count(f: _F, v) -> bytes:
+    if not 1 <= len(v) <= 254:
+        raise ValueError(f"{f.label} {len(v)} out of range 1-254")
+    return bytes([len(v)])
+
+
+_PACK = {
+    "const": lambda f, v: f.arg,
+    "u": _pack_u,
+    "sm": _pack_sm,
+    "pair": lambda f, v: _pack_pair(f.label, v, bool(f.arg)),
+    "surface": _pack_surface,
+    "date": _pack_date,
+    "lead": _pack_lead,
+    "ascii": _pack_ascii,
+    "count": _pack_count,
+    "list": lambda f, v: b"".join(_pack_fields(f.arg, item) for item in v),
+}
+_PARSE = {
+    "u": _parse_u,
+    "sm": _parse_sm,
+    "pair": lambda f, s4, off: _scaled_limit(s4, off),
+    "date": _parse_date,
+    "lead": lambda f, s4, off: _forecast_hours(s4[off], _rs32be(s4, off + 1)),
+    "ascii": _parse_ascii,
+}
+
+
+def _pack_fields(fields, src) -> bytes:
+    return b"".join(
+        _PACK[f.kind](f, _lookup(src, f.key, f.default)) for f in fields
+    )
+
+
+def _parse_pdt(s4: bytes, head: bool = False) -> dict:
+    """Section 4 (5-octet header included) -> Grib2Record fields, walking
+    the template's blocks with a running offset.  Loud on every defect:
+    an unknown template, a truncated block, an empty count, an
+    out-of-range field.  ``head`` reads only the inventory fields (see
+    _HEAD_BLOCKS) and a lead the hours column cannot hold as None, the
+    way wgrib2 still lists such a record."""
+    (t,) = struct.unpack_from(">H", s4, 7)
+    if t not in _PDT:
+        raise ValueError(f"unsupported product definition template {t}")
+    # No lead or no surfaces on the template: None, never 4.0's lead 0.
+    out = dict.fromkeys((
+        "forecast_hours", "level_type", "level_scale", "level_value",
+        "level2_type", "level2_scale", "level2_value",
+    ))
+    out["product_template"] = t
+    off, count = 9, 0
+    for block in _PDT[t][1]:
+        if head and block not in _HEAD_BLOCKS:
+            break
+        if len(s4) < off + sum(f.width for f in block if f.kind != "list"):
+            raise ValueError(f"truncated product definition template 4.{t}")
+        for f in block:
+            if f.kind == "list":
+                if len(s4) < off + count * f.width:
+                    raise ValueError(
+                        f"truncated product definition template 4.{t} "
+                        f"({count} {f.label})"
+                    )
+                cols = {}
+                at = off
+                for i in f.arg:
+                    if i.name is not None:
+                        cols[i.name] = tuple(
+                            _PARSE[i.kind](i, s4, at + r * f.width)
+                            for r in range(count)
+                        )
+                    at += i.width
+                if f.name == "first":
+                    cols = {k: c[0] for k, c in cols.items()}
+                out.update(cols)
+                off += count * f.width
+                continue
+            if f.kind == "count":
+                count = s4[off]
+                if count in (0, 0xFF):
+                    raise ValueError(
+                        f"product definition template 4.{t} with no {f.arg}"
+                    )
+                out[f.name] = count
+            elif f.kind == "surface":
+                out.update(_parse_surface(f, s4, off))
+            elif f.name is not None:
+                try:
+                    out[f.name] = _PARSE[f.kind](f, s4, off)
+                except ValueError:
+                    if not (head and f.kind == "lead"):
+                        raise
+            off += f.width
+    return out
 
 
 def encode_grib2_message(
@@ -2234,30 +2733,21 @@ def encode_grib2_message(
             + tmpl30
             + tmpl_extra,
         )
-    # ``statistical`` selects product definition template 4.8
-    # (statistical processing over a time interval — accumulations /
-    # averages); keys: ``process`` (code table 4.10), ``interval_end``
-    # (y, m, d, h, mi) and ``range_hours``; optional ``inner_specs``
-    # (list of dicts with ``process``/``range_hours``) appends further
-    # time-range specifications for COMPOUND statistics ("average of
-    # daily maxima" is n = 2).  ``ensemble`` (keys: ``type`` code table
-    # 4.6, ``member``, ``size``) selects 4.1; ``derived`` (keys:
-    # ``type`` code table 4.7, ``size``) selects 4.2 (derived forecast
-    # from all members — ensemble mean / spread); ``probability`` (keys:
-    # ``number``, ``total``, ``type`` code table 4.9, optional
-    # ``lower``/``upper`` = (scale factor, scaled value) threshold
-    # pairs, absent → coded missing) selects 4.5; ``percentile``
-    # (0-100) selects 4.6.  Combined with ``statistical`` they become
-    # 4.11 / 4.12 / 4.9 / 4.10, whose statistical block follows the
-    # family's extra octets.  Octets 10-34 are identical to 4.0 across
-    # all ten, so one parser serves them on decode.  ``satellite``
-    # (key ``bands``: list of dicts with ``series``/``number``/
-    # ``instrument`` and the central wave number as an exact
-    # (``scale``, ``value``) pair; optional ``simulated=True``,
-    # ``process``) selects 4.31 (observation — no lead octets, reject
-    # ``forecast``) or 4.32 (simulated imagery — keeps the lead
-    # block); NEITHER has fixed surfaces, so explicit level kwargs
-    # reject loudly.
+    # The product kwargs pick the section-4 template (_PDT lists the
+    # kwargs each one needs) and fill its fields (the dotted keys in its
+    # blocks): ``statistical`` {process, interval_end, range_hours,
+    # optional inner_specs of {process, range_hours} for a compound
+    # statistic}, ``ensemble`` {type, member, size}, ``derived`` {type,
+    # size}, ``probability`` {number, total, type, optional lower/upper
+    # (scale, value) thresholds}, ``percentile`` (0-100), ``spatial``
+    # {stat, type, points}, ``cluster`` {type, size, identifier, total,
+    # method, members, bounds OR center, optional stddev/distance},
+    # ``satellite`` {bands of {series, number, instrument, scale,
+    # value}, optional simulated/deprecated/process}, ``radar`` (site
+    # block), ``chemistry`` (constituent type), ``aerosol`` {type,
+    # optional size/wavelength intervals}, ``model_version`` (y, m, d,
+    # h, mi, s).  ``forecast`` {unit (code table 4.4), value} defaults
+    # to an analysis.
     n_products = sum(
         x is not None
         for x in (
@@ -2392,433 +2882,66 @@ def encode_grib2_message(
             raise ValueError(
                 "model_version does not combine with chemistry/aerosol"
             )
-    # ``forecast`` (keys: ``unit`` code table 4.4, ``value``) sets the
-    # lead-time octets shared by the whole 4.0 family; default is an
-    # analysis field (hour unit, lead 0).  Only units the decoder can
-    # convert to whole hours are accepted — encoding a calendar unit
-    # would produce a message the engine itself rejects.
-    if forecast is None:
-        fc_unit, fc_value = 1, 0
-    else:
-        fc_unit, fc_value = int(forecast["unit"]), int(forecast["value"])
-        if not 0 <= fc_value < 1 << 31:
-            raise ValueError(f"forecast time {fc_value} out of range")
-        _forecast_hours(fc_unit, fc_value)  # validates unit/divisibility
-    # ``level2`` (keys: ``type``, ``value``, optional ``scale``) fills
-    # the second fixed surface — otherwise coded missing (point level).
-    if level2 is None:
-        sfc2 = bytes([0xFF, 0xFF]) + b"\xff\xff\xff\xff"
-    else:
-        t2 = _pdt_octet(level2["type"], "second fixed surface type")
-        sc2, v2 = int(level2.get("scale", 0)), int(level2["value"])
-        if not -127 <= sc2 <= 127:
-            raise ValueError(f"second-surface scale factor {sc2} out of range")
-        if not 0 <= v2 < 0xFFFFFFFF:  # all-ones is the missing sentinel
-            raise ValueError(f"second-surface value {v2} out of range")
-        sfc2 = bytes(
-            [t2, (0x80 | abs(sc2)) if sc2 < 0 else sc2]
-        ) + struct.pack(">I", v2)
-    pdt_extra = b""
-    if ensemble is not None:
-        tmpl4 = 11 if statistical is not None else 1
-        pdt_extra += bytes(
-            [
-                _pdt_octet(ensemble["type"], "ensemble type"),
-                _pdt_octet(ensemble["member"], "ensemble member"),
-                _pdt_octet(ensemble["size"], "ensemble size"),
-            ]
-        )
-        if model_version is not None:
-            # 4.60/4.61: the model-version date (YYYY-MM-DD hh:mm:ss)
-            # appended AFTER the ensemble octets, before the 4.61
-            # statistical block — the reforecast form GEFS v12
-            # archives ship.
-            tmpl4 = 61 if statistical is not None else 60
-            my, mmo, md, mh, mmi, msec = (int(x) for x in model_version)
-            if not (
-                1 <= mmo <= 12 and 1 <= md <= 31 and mh < 24
-                and mmi < 60 and msec < 60
-            ):
-                raise ValueError(
-                    f"model version date {model_version} out of range"
-                )
-            pdt_extra += struct.pack(">H", my) + bytes(
-                [mmo, md, mh, mmi, msec]
-            )
-    elif derived is not None:
-        tmpl4 = 12 if statistical is not None else 2
-        pdt_extra += bytes(
-            [
-                _pdt_octet(derived["type"], "derived forecast type"),
-                _pdt_octet(derived["size"], "ensemble size"),
-            ]
-        )
-    elif probability is not None:
-        tmpl4 = 9 if statistical is not None else 5
-        pdt_extra += bytes(
-            [
-                _pdt_octet(probability["number"], "forecast probability number"),
-                _pdt_octet(probability["total"], "total forecast probabilities"),
-                _pdt_octet(probability["type"], "probability type"),
-            ]
-        )
-        pdt_extra += _scaled_pair(probability.get("lower"))
-        pdt_extra += _scaled_pair(probability.get("upper"))
-    elif percentile is not None:
-        tmpl4 = 10 if statistical is not None else 6
-        p = _pdt_octet(percentile, "percentile value")
-        if p > 100:
-            raise ValueError(f"percentile value {p} out of range 0-100")
-        pdt_extra += bytes([p])
-    elif cluster is not None:
-        # Templates 4.3 (``bounds`` = (north, south, east, west) µdeg
-        # rectangular domain) / 4.4 (``center`` = (lat µdeg, lon µdeg,
-        # radius) circular domain): the 4.2 derived octets, the
-        # cluster block, the domain geometry, the in-cluster standard
-        # deviation / distance from the ensemble mean as (scale,
-        # scaled value) pairs (absent → coded missing), then the
-        # member numbers (their count IS NC).  Combined with
-        # ``statistical`` they become 4.13 / 4.14, whose statistical
-        # block follows the member list (the generic append below
-        # lands it there).
-        has_bounds = "bounds" in cluster
-        has_center = "center" in cluster
-        if has_bounds == has_center:
+    if cluster is not None:
+        if ("bounds" in cluster) == ("center" in cluster):
             raise ValueError(
                 "cluster needs exactly one of bounds=(n, s, e, w) "
                 "(template 4.3) or center=(lat, lon, radius) "
                 "(template 4.4)"
             )
-        if statistical is not None:
-            tmpl4 = 13 if has_bounds else 14
-        else:
-            tmpl4 = 3 if has_bounds else 4
-        members = list(cluster["members"])
-        if not 1 <= len(members) <= 254:
+        domain, n = ("bounds", 4) if "bounds" in cluster else ("center", 3)
+        if len(cluster[domain]) != n:
             raise ValueError(
-                f"cluster member count {len(members)} out of range 1-254"
+                f"cluster {domain} {tuple(cluster[domain])} needs {n} values"
             )
-        geometry = cluster["bounds"] if has_bounds else cluster["center"]
-        pdt_extra += bytes(
-            [
-                _pdt_octet(cluster["type"], "derived forecast type"),
-                _pdt_octet(cluster["size"], "ensemble size"),
-                _pdt_octet(cluster["identifier"], "cluster identifier"),
-                0xFF if cluster.get("hires") is None
-                else _pdt_octet(cluster["hires"], "high-resolution cluster"),
-                0xFF if cluster.get("lores") is None
-                else _pdt_octet(cluster["lores"], "low-resolution cluster"),
-                _pdt_octet(cluster["total"], "total number of clusters"),
-                _pdt_octet(cluster["method"], "clustering method"),
-            ]
+    if satellite is not None and satellite.get("deprecated") and (
+        satellite.get("simulated") or ensemble is not None
+    ):
+        # 4.30 is the deprecated OBSERVATIONAL form only — the
+        # simulated/ensemble combinations postdate its retirement
+        raise ValueError(
+            "template 4.30 (deprecated satellite) is observational "
+            "only — it has no simulated or ensemble forms"
         )
-        for g in geometry:
-            pdt_extra += _s32be(int(g))
-        pdt_extra += bytes([len(members)])
-        pdt_extra += _scaled_pair(cluster.get("stddev"))
-        pdt_extra += _scaled_pair(cluster.get("distance"))
-        pdt_extra += bytes(_pdt_octet(m, "cluster member") for m in members)
-    elif spatial is not None:
-        # Template 4.15 (spatio-statistical processing — NDFD-style
-        # smoothed/re-gridded products): octets 35-37 carry the
-        # statistical process used WITHIN the spatial area (code table
-        # 4.10), the type of spatial processing (code table 4.15) and
-        # the number of data points used.
-        tmpl4 = 15
-        pdt_extra += bytes(
-            [
-                _pdt_octet(spatial["stat"], "spatial statistical process"),
-                _pdt_octet(spatial["type"], "spatial processing type"),
-                _pdt_octet(spatial["points"], "spatial data-point count"),
-            ]
-        )
-    elif error:
-        # template 4.7: analysis/forecast error — 4.0's exact layout,
-        # distinguished only by the template number
-        tmpl4 = 7
-    else:
-        tmpl4 = 8 if statistical is not None else 0
-    if statistical is not None:
-        ey, em, ed, eh, emi = statistical["interval_end"]
-        specs = [(statistical["process"], statistical["range_hours"])]
-        for sp in statistical.get("inner_specs") or []:
-            specs.append((sp["process"], sp["range_hours"]))
-        pdt_extra += (
-            struct.pack(">H", ey)
-            + bytes([em, ed, eh, emi, 0])  # end of interval (sec = 0)
-            + bytes(
-                [_pdt_octet(len(specs), "time-range specification count")]
-            )
-            + struct.pack(">I", 0)  # no missing values in interval
-        )
-        for proc, hours in specs:  # outermost first, per the spec
-            pdt_extra += (
-                bytes([_pdt_octet(proc, "statistical process")])
-                + bytes([2])  # time-increment type: successive fields
-                + bytes([1])  # range time unit: hour
-                + struct.pack(">I", hours)
-                + bytes([1])  # increment time unit: hour
-                + struct.pack(">I", 0)  # continuous processing
-            )
-    chem_insert = b""
-    if chemistry is not None:
-        # Templates 4.40-4.43: the base form (0/1/8/11 decided above)
-        # plus the 2-octet code-table-4.230 constituent type inserted
-        # after the parameter number.
-        ct = int(chemistry)
-        if not 0 <= ct <= 0xFFFE:
-            raise ValueError(
-                f"chemical constituent type {ct} out of range 0-65534 "
-                "(65535 is the missing sentinel)"
-            )
-        chem_insert = struct.pack(">H", ct)
-        tmpl4 = {0: 40, 1: 41, 8: 42, 11: 43}[tmpl4]
-    elif aerosol is not None:
-        # Templates 4.44-4.48: aerosol type (code table 4.233), the
-        # code-table-4.91 size-interval type and the two sizes as
-        # signed-magnitude (scale, value) pairs in metres; 4.48 adds
-        # the optical wavelength interval the same way.
-        at = int(aerosol["type"])
-        if not 0 <= at <= 0xFFFE:
-            raise ValueError(
-                f"aerosol type {at} out of range 0-65534 "
-                "(65535 is the missing sentinel)"
-            )
-        def _interval_octet(key: str, what: str) -> bytes:
-            v = aerosol.get(key)
-            if v is None:
-                return b"\xff"  # coded missing
-            return bytes([_pdt_octet(v, what)])
-
-        chem_insert = (
-            struct.pack(">H", at)
-            + _interval_octet("size_interval", "aerosol size-interval type")
-            + _scaled_pair(aerosol.get("first_size"))
-            + _scaled_pair(aerosol.get("second_size"))
-        )
-        if "first_wavelength" in aerosol or "second_wavelength" in aerosol:
-            chem_insert += (
-                _interval_octet(
-                    "wavelength_interval", "aerosol wavelength-interval type"
-                )
-                + _scaled_pair(aerosol.get("first_wavelength"))
-                + _scaled_pair(aerosol.get("second_wavelength"))
-            )
-            # 4.48 plain / 4.49 individual ensemble member (the CAMS
-            # AOD-ensemble form); the statistical combination was
-            # rejected above
-            tmpl4 = {0: 48, 1: 49}[tmpl4]
-        else:
-            tmpl4 = {0: 44, 1: 45, 8: 46, 11: 47}[tmpl4]
+    products = dict(
+        ensemble=ensemble, derived=derived, probability=probability,
+        percentile=percentile, spatial=spatial, cluster=cluster,
+        error=error or None, satellite=satellite, radar=radar,
+        chemistry=chemistry, aerosol=aerosol, model_version=model_version,
+        statistical=statistical,
+    )
+    key = {k for k, v in products.items() if v is not None}
+    if cluster is not None:
+        key.add(domain)
     if satellite is not None:
-        # Templates 4.31 (observational satellite product) / 4.32
-        # (simulated satellite imagery, ``simulated=True`` — keeps the
-        # family's generating-process + lead block): ``bands`` is a
-        # list of dicts with ``series`` / ``number`` / ``instrument``
-        # and the central wave number as an exact (``scale``,
-        # ``value``) pair (m^-1 = value · 10^-scale).  No fixed
-        # surfaces — the band list stands where the family's level
-        # octets would be.
-        bands = list(satellite["bands"])
-        if not 1 <= len(bands) <= 254:
-            raise ValueError(
-                f"spectral band count {len(bands)} out of range 1-254"
-            )
-        deprecated = bool(satellite.get("deprecated"))
-        if deprecated and (
-            satellite.get("simulated") or ensemble is not None
-        ):
-            # 4.30 is the deprecated OBSERVATIONAL form only — the
-            # simulated/ensemble combinations postdate its retirement
-            raise ValueError(
-                "template 4.30 (deprecated satellite) is observational "
-                "only — it has no simulated or ensemble forms"
-            )
-        band_bytes = b""
-        for b in bands:
-            if deprecated:
-                # 4.30's band block is one octet NARROWER: the
-                # instrument type is a single octet (the layout shear
-                # hazard that kept this template a named boundary)
-                band_bytes += struct.pack(
-                    ">HH", int(b["series"]), int(b["number"])
-                ) + bytes(
-                    [_pdt_octet(b["instrument"], "instrument type")]
-                )
-            else:
-                band_bytes += struct.pack(
-                    ">HHH",
-                    int(b["series"]),
-                    int(b["number"]),
-                    int(b["instrument"]),
-                )
-            bsc, bv = int(b.get("scale", 0)), int(b["value"])
-            # A wave number is a magnitude: the wire value is
-            # sign-magnitude (like every GRIB2 scaled value), so a
-            # raw value >= 2^31 would decode as NEGATIVE — reject it
-            # here rather than silently corrupting the band.
-            if not 0 <= bv < 1 << 31:
-                raise ValueError(
-                    f"central-wave-number value {bv} out of range"
-                )
-            # _scaled_pair emits the same 1+4-octet signed-magnitude
-            # layout and rejects the -127-scale / all-ones-value
-            # sentinel collisions a local reimplementation missed.
-            band_bytes += _scaled_pair((bsc, bv))
-        if satellite.get("simulated"):
-            # 4.32, or the ensemble forms 4.33 (point in time) / 4.34
-            # (statistical interval) — all three keep 4.0's
-            # generating-process + lead block; the ensemble octets and
-            # (4.34) the statistical block ride in pdt_extra, built by
-            # the generic branches above in exactly the band-list-
-            # relative order the spec puts them.
-            if ensemble is not None:
-                tmpl4 = 34 if statistical is not None else 33
-            else:
-                tmpl4 = 32
-            sat_body = (
-                bytes([category, number, 2, 0, 0])
-                + b"\x00\x00"  # hours of cutoff
-                + bytes([0])  # minutes
-                + bytes([fc_unit])
-                + struct.pack(">I", fc_value)
-            )
-        else:
-            tmpl4 = 30 if deprecated else 31
-            sat_body = bytes(
-                [
-                    category,
-                    number,
-                    8,  # type of generating process: observation
-                    _pdt_octet(
-                        satellite.get("process", 0),
-                        "observation generating process identifier",
-                    ),
-                ]
-            )
-        s4 = section(
-            4,
-            struct.pack(">H", 0)  # number of coordinate values
-            + struct.pack(">H", tmpl4)
-            + sat_body
-            + bytes([len(bands)])
-            + band_bytes
-            # 4.33/4.34 only (empty otherwise): ensemble octets, then
-            # the 4.34 statistical block, AFTER the band list
-            + pdt_extra,
+        key |= {k for k in ("simulated", "deprecated") if satellite.get(k)}
+        products["satellite"] = dict(satellite, bands=[
+            dict(b, wave=(b.get("scale", 0), b["value"]))
+            for b in satellite["bands"]
+        ])
+    if aerosol is not None and (
+        "first_wavelength" in aerosol or "second_wavelength" in aerosol
+    ):
+        key.add("wavelength")
+    if statistical is not None:
+        products["statistical"] = dict(statistical, specs=[
+            statistical, *(statistical.get("inner_specs") or ())
+        ])
+    tmpl4 = _PDT_BY_KEY.get(frozenset(key))
+    if tmpl4 is None:
+        raise ValueError(
+            f"no product definition template combines {' + '.join(sorted(key))}"
         )
-    elif radar is not None:
-        # Template 4.20 (radar product): the site block — number of
-        # sites, time unit, site latitude/longitude (signed-magnitude
-        # µdeg), elevation (m), CCITT-IA5 + numeric site ids, operating
-        # mode (code table 4.12), calibration/QC/clutter octets,
-        # antenna elevation, accumulation interval, echo-top reference
-        # and the bin/radial spacings.  No fixed surfaces, no lead.
-        tmpl4 = 20
-        sid = str(radar.get("site_id", "XXXX"))
-        if len(sid) != 4 or not sid.isascii():
-            raise ValueError(
-                f"radar site id {sid!r} must be 4 CCITT IA5 characters"
-            )
-        # None → the all-ones sign-magnitude coded-missing word, like
-        # the sibling elevation/id/number/mode fields (a real product
-        # may carry no site coordinates); range checks apply only to
-        # PRESENT coordinates.
-        if radar.get("lat_udeg") is None:
-            lat_bytes = b"\xff\xff\xff\xff"
-        else:
-            site_lat = int(radar["lat_udeg"])
-            if not -90_000_000 <= site_lat <= 90_000_000:
-                raise ValueError(
-                    f"radar site latitude {site_lat} out of range"
-                )
-            lat_bytes = _s32be(site_lat)
-        if radar.get("lon_udeg") is None:
-            lon_bytes = b"\xff\xff\xff\xff"
-        else:
-            site_lon = int(radar["lon_udeg"])
-            if not -180_000_000 <= site_lon <= 360_000_000:
-                raise ValueError(
-                    f"radar site longitude {site_lon} out of range"
-                )
-            lon_bytes = _s32be(site_lon)
-        elev = int(radar.get("elevation_m", 0))
-        if not 0 <= elev < 0xFFFF:
-            raise ValueError(f"radar site elevation {elev} out of range")
-        snum = int(radar.get("site_number", 0))
-        if not 0 <= snum < 0xFFFF:
-            raise ValueError(f"radar site number {snum} out of range")
-        s4 = section(
-            4,
-            struct.pack(">H", 0)  # number of coordinate values
-            + struct.pack(">H", tmpl4)
-            + bytes(
-                [
-                    category,
-                    number,
-                    8,  # type of generating process: observation
-                    _pdt_octet(radar.get("sites", 1), "radar site count"),
-                    1,  # indicator of unit of time range: hour
-                ]
-            )
-            + lat_bytes
-            + lon_bytes
-            + struct.pack(">H", elev)
-            + sid.encode("ascii")
-            + struct.pack(">H", snum)
-            + bytes(
-                [
-                    _pdt_octet(radar.get("mode", 0), "radar operating mode"),
-                    _pdt_octet(
-                        radar.get("calibration", 0),
-                        "reflectivity calibration constant",
-                    ),
-                    _pdt_octet(radar.get("qc", 0), "quality control indicator"),
-                    _pdt_octet(
-                        radar.get("clutter", 0), "clutter filter indicator"
-                    ),
-                    _pdt_octet(
-                        radar.get("antenna_elevation", 0),
-                        "constant antenna elevation angle",
-                    ),
-                ]
-            )
-            + struct.pack(">H", int(radar.get("accumulation_minutes", 0)))
-            + bytes(
-                [
-                    _pdt_octet(
-                        radar.get("echo_top_reference", 0),
-                        "reference reflectivity for echo top",
-                    )
-                ]
-            )
-            + int(radar.get("bin_spacing_m", 0)).to_bytes(3, "big")
-            + struct.pack(">H", int(radar.get("radial_spacing", 0))),
-        )
-    else:
-        s4 = section(
-            4,
-            struct.pack(">H", 0)  # number of coordinate values
-            + struct.pack(">H", tmpl4)
-            + bytes([category, number])
-            # 4.40-4.48 constituent/aerosol block — empty otherwise
-            + chem_insert
-            + bytes([2, 0, 0])  # process type, background/forecast ids
-            + b"\x00\x00"  # hours of cutoff
-            + bytes([0])  # minutes
-            + bytes([fc_unit])  # time unit (code table 4.4)
-            + struct.pack(">I", fc_value)  # forecast time in those units
-            # Fixed surface 1 through the shared validated encoders:
-            # the type octet 0-255 (255 = the missing sentinel, legal
-            # explicitly), the (scale, value) pair signed-magnitude
-            # with the -127-scale / all-ones-value sentinel collisions
-            # rejected — '& 0xFF' masking here silently encoded a
-            # DIFFERENT surface type.
-            + bytes([_surface_type_octet(level_type)])
-            + _scaled_pair((level_scale, level_value))
-            + sfc2  # fixed surface 2 (layer bottom, or all-ones missing)
-            + pdt_extra,
-        )
+    src = dict(
+        products, category=category, number=number, forecast=forecast,
+        level=dict(type=level_type, scale=level_scale, value=level_value),
+        level2=level2,
+    )
+    s4 = section(
+        4,
+        struct.pack(">HH", 0, tmpl4)  # no coordinate values; the template
+        + b"".join(_pack_fields(block, src) for block in _PDT[tmpl4][1]),
+    )
     s5 = section(5, s5_body)
     if bm is not None:
         bm_bits = np.packbits(bm.reshape(-1).astype(np.uint8)).tobytes()
@@ -2963,42 +3086,6 @@ def _check_grib2_envelope(msg: bytes) -> None:
         raise ValueError("missing 7777 terminator")
 
 
-def _parse_surface(
-    s4: bytes, off: int
-) -> tuple[int | None, int | None, int | None]:
-    """One fixed-surface block (type octet, signed-magnitude scale
-    factor octet, 4-octet scaled value) at byte offset ``off`` of
-    section 4 (which here includes its 5-byte header). 0xFF / all-ones
-    = coded missing → None — LOUDLY absent rather than a silent 0 a
-    level filter would match."""
-    level_type = s4[off] if s4[off] != 0xFF else None
-    if level_type is None or s4[off + 1] == 0xFF:
-        level_scale = None
-    else:
-        level_scale = (
-            -(s4[off + 1] & 0x7F) if s4[off + 1] & 0x80 else s4[off + 1]
-        )
-    (raw_lv,) = struct.unpack_from(">I", s4, off + 2)
-    if level_type is None or raw_lv == 0xFFFFFFFF:
-        level_value = None
-    else:
-        # signed-MAGNITUDE like every other GRIB2 scaled value (a
-        # -2 PVU surface is wire 0x80000002) — an unsigned read would
-        # label it level 2147483650 on every surface
-        level_value = (
-            -(raw_lv & 0x7FFFFFFF) if raw_lv & 0x80000000 else raw_lv
-        )
-    return level_type, level_scale, level_value
-
-
-def parse_fixed_surface(s4: bytes) -> tuple[int | None, int | None, int | None]:
-    """Template 4.0 FIRST fixed surface (octets 23-28): (type, scale
-    factor, scaled value). ONE parser shared by the full decode and the
-    header-only inventory path, so the two can never disagree on the
-    same record's level."""
-    return _parse_surface(s4, 22)
-
-
 def surface_level(value: int | None, scale: int | None) -> int | None:
     """Fixed surface (scaled value, scale factor) → integer level:
     level = value / 10^scale. NULL propagates; a non-integral level
@@ -3055,48 +3142,6 @@ def surface_level_text(value: int | None, scale: int | None) -> str:
     return sign + text
 
 
-# Chemistry (4.40-4.43) / aerosol (4.44-4.49) base-template remap: each
-# wire template is its 4.0-family base with a constituent / aerosol
-# block INSERTED between the parameter number and the generating-
-# process octet.
-_CHEM_AEROSOL_BASE = {
-    40: 0, 41: 1, 42: 8, 43: 11,
-    44: 0, 45: 1, 46: 8, 47: 11, 48: 0, 49: 1,
-}
-
-
-def _chem_insert_len(tmpl4: int) -> int:
-    """Octet length of the 4.40-4.49 inserted block: 2 (constituent),
-    13 (aerosol type + size interval) or 24 (+ wavelength interval)."""
-    return 2 if tmpl4 <= 43 else (24 if tmpl4 in (48, 49) else 13)
-
-
-def _splice_chem_aerosol(s4: bytes, tmpl4: int) -> "tuple[bytes, int]":
-    """Splice the 4.40-4.49 insert OUT of section 4 so the remainder
-    decodes through the base template's exact offsets — ONE helper
-    shared by the full decode, the codec-level inventory and the
-    landing inventory (like parse_fixed_surface), so the surfaces can
-    never disagree on the family's layout.  Threading +2/+13/+24
-    shifts through every downstream branch is the layout-shear hazard
-    class that kept 4.30 a boundary for fourteen rounds."""
-    ins = _chem_insert_len(tmpl4)
-    if len(s4) < 13 + ins:
-        raise ValueError(
-            f"truncated product definition template 4.{tmpl4}"
-        )
-    return s4[:11] + s4[11 + ins:], _CHEM_AEROSOL_BASE[tmpl4]
-
-
-
-def parse_second_surface(s4: bytes) -> tuple[int | None, int | None, int | None]:
-    """Template 4.0 SECOND fixed surface (octets 29-34) — the bottom of
-    a LAYER product (0-10 cm soil moisture, a cloud-base-to-top layer,
-    the max-wind layer).  Coded missing (the usual case) on point-level
-    products; a decoder that never reads these octets collapses every
-    layer onto its top surface, indistinguishable from a point level."""
-    return _parse_surface(s4, 28)
-
-
 # Code table 4.4 fixed-duration time units → hours.  Calendar units
 # (month/year/decade/normal/century) have no fixed hour length and
 # reject loudly; minutes/seconds convert when whole-hour-divisible.
@@ -3140,60 +3185,6 @@ def _scaled_limit(s4: bytes, off: int) -> float | None:
     scale = -(sf & 0x7F) if sf & 0x80 else sf
     value = -(raw & 0x7FFFFFFF) if raw & 0x80000000 else raw
     return float(value) / (10.0 ** scale)
-
-
-def _parse_satellite_bands(
-    s4: bytes, nb_off: int, tmpl4: int
-) -> tuple[
-    int,
-    tuple[int, ...],
-    tuple[int, ...],
-    tuple[int, ...],
-    tuple[float | None, ...],
-]:
-    """Contributing-spectral-band list shared by the satellite family:
-    NB at ``nb_off`` (0-based), then NB blocks of satellite series
-    (2), satellite number (2), instrument type (2 octets on
-    4.31/4.32/4.33/4.34; ONE octet on the deprecated 4.30 — the whole
-    reason the templates must dispatch on their own band widths) and
-    the central wave number as a (scale factor, scaled value) pair —
-    the SAME signed-magnitude convention as every other GRIB2 scaled
-    field.  NB absent or zero makes the list length unknowable, so it
-    stops loudly (guessing would mis-slice every following octet —
-    the same rule as the 4.13/4.14 member list)."""
-    blk = 10 if tmpl4 == 30 else 11
-    nb = s4[nb_off]
-    if nb == 0 or nb == 0xFF:
-        raise ValueError(
-            f"product definition template 4.{tmpl4} with no "
-            "contributing spectral bands"
-        )
-    if len(s4) < nb_off + 1 + blk * nb:
-        raise ValueError(
-            f"truncated product definition template 4.{tmpl4} "
-            f"({nb} spectral bands)"
-        )
-    series, numbers, instruments, waves = [], [], [], []
-    for b in range(nb):
-        o = nb_off + 1 + blk * b
-        if tmpl4 == 30:
-            sr, num = struct.unpack_from(">HH", s4, o)
-            inst = s4[o + 4]
-            wave_off = o + 5
-        else:
-            sr, num, inst = struct.unpack_from(">HHH", s4, o)
-            wave_off = o + 6
-        series.append(int(sr))
-        numbers.append(int(num))
-        instruments.append(int(inst))
-        waves.append(_scaled_limit(s4, wave_off))
-    return (
-        nb,
-        tuple(series),
-        tuple(numbers),
-        tuple(instruments),
-        tuple(waves),
-    )
 
 
 def _iter_field_sections(msg: bytes):
@@ -3299,12 +3290,8 @@ def decode_grib2(msg: bytes) -> Grib2Record:
     stereographic), 3.30 (Lambert conformal), 3.40 (global Gaussian,
     regular AND reduced per-row-Ni form), 3.50 (spherical harmonic
     coefficients, triangular), plus the rotated/stretched lat/lon
-    forms 3.1/3.2/3.3; product templates 4.0-4.15 (ensemble members,
-    derived-ensemble and cluster-derived products, probability
-    forecasts, percentile forecasts, analysis/forecast error,
-    statistical intervals, spatio-statistical processing — the whole
-    operational family; the record's ``product_template`` carries the
-    number); data
+    forms 3.1/3.2/3.3; every product template of the ``_PDT`` table
+    (the record's ``product_template`` carries the number); data
     representation templates 5.0 (simple), 5.2/5.3 (complex ±
     spatial differencing), 5.40 (JPEG2000), 5.41 (PNG), 5.50/5.51
     (spectral simple/complex packing — must pair with 3.50).  Everything
@@ -3328,7 +3315,7 @@ def _decode_field(s: dict[int, bytes]) -> Grib2Record:
 
     s3 = s[3]
     (tmpl_no,) = struct.unpack_from(">H", s3, 12)
-    if tmpl_no not in (0, 1, 2, 3, 10, 20, 30, 40, 50):
+    if tmpl_no not in _GRID_TEMPLATES:
         raise ValueError(f"unsupported grid definition template {tmpl_no}")
     spectral_truncation: int | None = None
     if tmpl_no == 50:
@@ -3656,356 +3643,7 @@ def _decode_field(s: dict[int, bytes]) -> Grib2Record:
                     lambert_params["kind"] = "stretched_rotated"
                     lambert_params.update(st)
 
-    s4 = s[4]
-    (tmpl4,) = struct.unpack_from(">H", s4, 7)
-    tmpl4_wire = tmpl4  # the template number the WIRE carries — what
-    # product_template surfaces (the chemistry/aerosol remap below
-    # redirects layout decoding only)
-    constituent_type = None
-    aerosol_type = aerosol_size_interval = None
-    aerosol_first_size_m = aerosol_second_size_m = None
-    aerosol_wavelength_interval = None
-    aerosol_first_wavelength_m = aerosol_second_wavelength_m = None
-    if tmpl4 in _CHEM_AEROSOL_BASE:
-        # Chemistry (4.40-4.43) and aerosol (4.44-4.49) families — the
-        # CAMS / NCEP-dust product templates wgrib2 scans through the
-        # same -match path the reference shells out to
-        # (/root/reference/src/file-conversions.js:76-112).  The
-        # inserted block is parsed here, then _splice_chem_aerosol
-        # (shared with both inventory surfaces) cuts it out so the
-        # remainder decodes through the base template's exact offsets.
-        if len(s4) < 13 + _chem_insert_len(tmpl4):
-            raise ValueError(
-                f"truncated product definition template 4.{tmpl4}"
-            )
-        (ctype,) = struct.unpack_from(">H", s4, 11)
-        if tmpl4 <= 43:
-            constituent_type = ctype if ctype != 0xFFFF else None
-        else:
-            aerosol_type = ctype if ctype != 0xFFFF else None
-            aerosol_size_interval = s4[13] if s4[13] != 0xFF else None
-            aerosol_first_size_m = _scaled_limit(s4, 14)
-            aerosol_second_size_m = _scaled_limit(s4, 19)
-            if tmpl4 in (48, 49):
-                aerosol_wavelength_interval = (
-                    s4[24] if s4[24] != 0xFF else None
-                )
-                aerosol_first_wavelength_m = _scaled_limit(s4, 25)
-                aerosol_second_wavelength_m = _scaled_limit(s4, 30)
-        s4, tmpl4 = _splice_chem_aerosol(s4, tmpl4)
-    if tmpl4 not in (
-        0, 1, 2, 3, 4, 5, 6, 7, 8, 9, 10, 11, 12, 13, 14, 15,
-        20, 30, 31, 32, 33, 34, 60, 61,
-    ):
-        # only templates sharing 4.0's leading layout (category/number at
-        # octets 10-11, fixed surfaces at 23-34 — 4.1 ensemble member,
-        # 4.2 derived forecast, 4.3/4.4 cluster-derived forecasts,
-        # 4.5 probability, 4.6 percentile, 4.7 analysis/forecast
-        # error (LAYOUT-identical to 4.0 — only the surfaced
-        # product_template distinguishes an error field from the
-        # analysis itself),
-        # 4.8 statistical and their 4.11/4.12/4.13/4.14/4.9/4.10
-        # statistical
-        # forms extend it; plus the satellite family 4.31/4.32 and its
-        # ensemble forms 4.33/4.34 (band list, no fixed surfaces) and
-        # the radar template 4.20 (site-based layout), each handled on
-        # its own branch below) may be read; anything else would
-        # decode garbage level columns.
-        raise ValueError(f"unsupported product definition template {tmpl4}")
-    category, number = s4[9], s4[10]
-    satellite_bands = satellite_series = satellite_numbers = None
-    satellite_instruments = central_wavenumbers = None
-    radar_sites = radar_site_id = radar_site_number = None
-    radar_site_lat = radar_site_lon = None
-    radar_elevation_m = radar_operating_mode = None
-    sat_ensemble: tuple | None = None
-    sat_stat_base: int | None = None
-    if tmpl4 == 20:
-        # RADAR template: site-based layout sharing NOTHING past the
-        # parameter octets with the 4.0 family — no fixed surfaces, no
-        # forecast-time octets (a radar product is an observation at
-        # the reference time), the octets instead carrying the site's
-        # coordinates, identifiers and operating characteristics.
-        # wgrib2 decodes these through the same -match scan path the
-        # reference uses (/root/reference/src/file-conversions.js:
-        # 76-112).
-        level_type = level_scale = level_value = None
-        level2_type = level2_scale = level2_value = None
-        forecast_hours = None
-        if len(s4) < 43:
-            raise ValueError("truncated product definition template 4.20")
-        radar_sites = s4[12] if s4[12] != 0xFF else None
-        # The all-ones sign-magnitude word is the coded-missing
-        # sentinel for the site coordinates, like every sibling radar_*
-        # field — reading it through _rs32be would decode ~-2147.48°
-        # and quarantine a real product whose site metadata is simply
-        # absent.  Range checks apply only to PRESENT coordinates.
-        if s4[14:18] == b"\xff\xff\xff\xff":
-            radar_site_lat = None
-        else:
-            radar_site_lat = _rs32be(s4, 14) / 1e6
-            if not -90.0 <= radar_site_lat <= 90.0:
-                raise ValueError(
-                    f"radar site latitude {radar_site_lat} out of range"
-                )
-        if s4[18:22] == b"\xff\xff\xff\xff":
-            radar_site_lon = None
-        else:
-            radar_site_lon = _rs32be(s4, 18) / 1e6
-            if not -180.0 <= radar_site_lon <= 360.0:
-                # same signed-magnitude pair, same loudness as latitude
-                raise ValueError(
-                    f"radar site longitude {radar_site_lon} out of range"
-                )
-        (elev,) = struct.unpack_from(">H", s4, 22)
-        radar_elevation_m = elev if elev != 0xFFFF else None
-        sid = s4[24:28]
-        if sid != b"\xff\xff\xff\xff":
-            # CCITT IA5 (ASCII) 4-character site id; a non-ASCII octet
-            # is a corrupt section, not a site name
-            try:
-                radar_site_id = sid.decode("ascii").strip("\x00 ") or None
-            except UnicodeDecodeError:
-                raise ValueError(
-                    "radar site id is not CCITT IA5 (ASCII)"
-                ) from None
-        (snum,) = struct.unpack_from(">H", s4, 28)
-        radar_site_number = snum if snum != 0xFFFF else None
-        radar_operating_mode = s4[30] if s4[30] != 0xFF else None
-    elif tmpl4 in (30, 31, 32, 33, 34):
-        # Satellite family: NO fixed surfaces (a satellite view has no
-        # level — reading octets 23-34 would decode band data as level
-        # columns), and 4.30/4.31 have no forecast-time octets either
-        # (observations at the reference time).  4.32 (simulated
-        # satellite imagery) keeps 4.0's generating-process + lead
-        # block, then NB at octet 23; 4.30/4.31 have NB at octet 14
-        # after the observation-generating-process identifier — 4.30
-        # is the DEPRECATED form whose band block is one octet
-        # narrower (1-octet instrument type), dispatched on its own
-        # width in _parse_satellite_bands.  4.33/4.34 (individual
-        # ensemble member for SIMULATED satellite data) share 4.32's
-        # leading layout, then append the three 4.1-style ensemble
-        # octets AFTER the band list — 4.34 continues with the 4.8
-        # statistical block after those (the second variable-offset
-        # statistical family besides 4.13/4.14).
-        level_type = level_scale = level_value = None
-        level2_type = level2_scale = level2_value = None
-        if tmpl4 in (30, 31):
-            forecast_hours = None
-            nb_off = 13
-        else:
-            forecast_hours = _forecast_hours(s4[17], _rs32be(s4, 18))
-            nb_off = 22
-        (
-            satellite_bands,
-            satellite_series,
-            satellite_numbers,
-            satellite_instruments,
-            central_wavenumbers,
-        ) = _parse_satellite_bands(s4, nb_off, tmpl4)
-        if tmpl4 in (33, 34):
-            eo = nb_off + 1 + 11 * satellite_bands
-            if len(s4) < eo + 3:
-                raise ValueError(
-                    f"truncated product definition template 4.{tmpl4}"
-                )
-            sat_ensemble = (
-                s4[eo] if s4[eo] != 0xFF else None,
-                s4[eo + 1] if s4[eo + 1] != 0xFF else None,
-                s4[eo + 2] if s4[eo + 2] != 0xFF else None,
-            )
-            if tmpl4 == 34:
-                sat_stat_base = eo + 3
-    else:
-        # Octets 18-22, shared by the whole 4.0 family: forecast lead
-        # time (unit from code table 4.4, signed-magnitude value) —
-        # GFS f000-f384 style products are distinguished ONLY by this
-        # field, so a decoder ignoring it would collapse every lead
-        # into the analysis.
-        forecast_hours = _forecast_hours(s4[17], _rs32be(s4, 18))
-        level_type, level_scale, level_value = parse_fixed_surface(s4)
-        level2_type, level2_scale, level2_value = parse_second_surface(s4)
-    ensemble_type = ensemble_member = ensemble_size = None
-    if sat_ensemble is not None:
-        # 4.33/4.34: the same three ensemble octets as 4.1/4.11, read
-        # above at their band-list-relative offset
-        ensemble_type, ensemble_member, ensemble_size = sat_ensemble
-    derived_forecast = None
-    cluster_identifier = cluster_total = cluster_method = None
-    cluster_size = cluster_members = None
-    cluster_stddev = cluster_mean_distance = None
-    probability_number = probability_total = probability_type = None
-    prob_lower_limit = prob_upper_limit = None
-    percentile_value = None
-    spatial_statistical_process = spatial_process_type = None
-    spatial_points = None
-    model_version = None
-    if tmpl4 in (1, 11, 60, 61):
-        # 4.1 (individual ensemble member) appends octets 35-37: type
-        # of ensemble forecast (code table 4.6), perturbation number,
-        # ensemble size; 4.11 continues with the 4.8 statistical block.
-        # 4.60/4.61 (individual ensemble REFORECAST — GEFS v12's
-        # reforecast archive form) append the MODEL VERSION DATE
-        # (octets 38-44) after the ensemble octets; 4.61 continues
-        # with the statistical block from octet 45.
-        if len(s4) < 37:
-            raise ValueError(f"truncated product definition template 4.{tmpl4}")
-        ensemble_type = s4[34] if s4[34] != 0xFF else None
-        ensemble_member = s4[35] if s4[35] != 0xFF else None
-        ensemble_size = s4[36] if s4[36] != 0xFF else None
-        if tmpl4 in (60, 61):
-            if len(s4) < 44:
-                raise ValueError(
-                    f"truncated product definition template 4.{tmpl4}"
-                )
-            (mv_year,) = struct.unpack_from(">H", s4, 37)
-            model_version = (mv_year, s4[39], s4[40], s4[41], s4[42])
-            if not (
-                1 <= s4[39] <= 12 and 1 <= s4[40] <= 31
-                and s4[41] < 24 and s4[42] < 60 and s4[43] < 60
-            ):
-                raise ValueError(
-                    f"model version date {model_version} out of range"
-                )
-    elif tmpl4 in (2, 12):
-        # 4.2 (derived forecast from ALL ensemble members — the mean /
-        # spread products ECMWF ENS and GEFS publish beside the 4.1
-        # members) appends octets 35-36: derived-forecast type (code
-        # table 4.7: 0 unweighted mean, 2 std dev, 4 spread, ...) and
-        # the number of forecasts in the ensemble; 4.12 continues with
-        # the statistical block.
-        if len(s4) < 36:
-            raise ValueError(f"truncated product definition template 4.{tmpl4}")
-        derived_forecast = s4[34] if s4[34] != 0xFF else None
-        ensemble_size = s4[35] if s4[35] != 0xFF else None
-    elif tmpl4 in (3, 4, 13, 14):
-        # 4.3 / 4.4 (derived forecast from a CLUSTER of ensemble
-        # members over a rectangular / circular area — the cluster
-        # products EPS post-processing publishes beside the 4.2
-        # all-member products) and their 4.13 / 4.14 statistical
-        # siblings: octets 35-36 repeat the 4.2 layout
-        # (code-table-4.7 derived type, ensemble size), then the
-        # cluster block — identifier (37), the clusters holding the
-        # high-/low-resolution controls (38-39, validated but not
-        # surfaced), total clusters (40), code-table-4.8 method (41),
-        # the domain geometry (42-57 rect: N/S lat + E/W lon;
-        # 42-53 circ: center lat/lon + radius — validated, not
-        # surfaced), NC = forecasts in the cluster, the in-cluster
-        # standard deviation and distance from the ensemble mean as
-        # (scale, scaled value) pairs, and the NC member numbers.
-        # On 4.13/4.14 the 4.8 statistical block follows the member
-        # list — a VARIABLE offset (the only family whose statistical
-        # base depends on a count field), handled below.
-        nc_off = 57 if tmpl4 in (3, 13) else 53  # 0-based octet of NC
-        if len(s4) < nc_off + 1:
-            raise ValueError(f"truncated product definition template 4.{tmpl4}")
-        derived_forecast = s4[34] if s4[34] != 0xFF else None
-        ensemble_size = s4[35] if s4[35] != 0xFF else None
-        cluster_identifier = s4[36] if s4[36] != 0xFF else None
-        cluster_total = s4[39] if s4[39] != 0xFF else None
-        cluster_method = s4[40] if s4[40] != 0xFF else None
-        nc = s4[nc_off]
-        if nc == 0 or nc == 0xFF:
-            # without NC the member list length is unknowable — a
-            # guessed length would mis-slice every following octet
-            raise ValueError(
-                f"product definition template 4.{tmpl4} with no "
-                "forecasts in the cluster"
-            )
-        if len(s4) < nc_off + 11 + nc:
-            raise ValueError(
-                f"truncated product definition template 4.{tmpl4} "
-                f"({nc} cluster members)"
-            )
-        cluster_size = nc
-        cluster_stddev = _scaled_limit(s4, nc_off + 1)
-        cluster_mean_distance = _scaled_limit(s4, nc_off + 6)
-        cluster_members = tuple(s4[nc_off + 11 : nc_off + 11 + nc])
-    elif tmpl4 in (5, 9):
-        # 4.5 (probability forecast) appends octets 35-47: probability
-        # index / total, probability type (code table 4.9: 0 below
-        # lower, 1 above upper, 2 between, 3 above lower, 4 below
-        # upper) and the two threshold limits as (scale factor, scaled
-        # value) pairs — both signed-magnitude, either coded missing
-        # when the type doesn't bound that side; 4.9 continues with the
-        # statistical block.
-        if len(s4) < 47:
-            raise ValueError(f"truncated product definition template 4.{tmpl4}")
-        probability_number = s4[34] if s4[34] != 0xFF else None
-        probability_total = s4[35] if s4[35] != 0xFF else None
-        probability_type = s4[36] if s4[36] != 0xFF else None
-        prob_lower_limit = _scaled_limit(s4, 37)
-        prob_upper_limit = _scaled_limit(s4, 42)
-    elif tmpl4 in (6, 10):
-        # 4.6 (percentile forecast — "the 90th-percentile
-        # precipitation" products ensembles publish) appends a single
-        # octet 35: the percentile (0-100); 4.10 continues with the
-        # statistical block.  An out-of-range octet is a corrupt
-        # section, not a bigger percentile.
-        if len(s4) < 35:
-            raise ValueError(f"truncated product definition template 4.{tmpl4}")
-        percentile_value = s4[34] if s4[34] != 0xFF else None
-        if percentile_value is not None and percentile_value > 100:
-            raise ValueError(
-                f"percentile value {percentile_value} out of range 0-100"
-            )
-    elif tmpl4 == 15:
-        # 4.15 (spatio-statistical processing — smoothed / re-gridded
-        # products) appends octets 35-37: the statistical process used
-        # WITHIN the spatial area (code table 4.10), the spatial
-        # processing type (code table 4.15) and the number of data
-        # points used.  This is an AREA statistic, not a time
-        # interval: statistical_process / interval_end stay None.
-        if len(s4) < 37:
-            raise ValueError("truncated product definition template 4.15")
-        spatial_statistical_process = s4[34] if s4[34] != 0xFF else None
-        spatial_process_type = s4[35] if s4[35] != 0xFF else None
-        spatial_points = s4[36] if s4[36] != 0xFF else None
-    statistical_process = None
-    interval_end = None
-    time_range_count = None
-    # statistical block start: octet 35 (4.8), 38 (4.11, after the
-    # three ensemble octets), 37 (4.12, after the two derived-forecast
-    # octets), 48 (4.9, after the thirteen probability octets) or 36
-    # (4.10, after the one percentile octet) — a parser reusing 4.8's
-    # offset on the extended forms would decode a garbage interval end.
-    # 4.13/4.14 and 4.34 are the VARIABLE-offset forms: their block
-    # follows the NC-long member list / NB-long band list.
-    stat_base = {8: 34, 11: 37, 12: 36, 9: 47, 10: 35, 61: 44}.get(tmpl4)
-    if tmpl4 in (13, 14):
-        stat_base = (57 if tmpl4 == 13 else 53) + 11 + cluster_size
-    if tmpl4 == 34:
-        # the other variable-offset statistical family: the block
-        # follows the NB-long band list and the three ensemble octets
-        stat_base = sat_stat_base
-    if stat_base is not None:
-        base = stat_base
-        if len(s4) < base + 24:  # the 24-octet single-spec extension
-            raise ValueError(f"truncated product definition template 4.{tmpl4}")
-        (end_year,) = struct.unpack_from(">H", s4, base)
-        interval_end = (
-            end_year, s4[base + 2], s4[base + 3], s4[base + 4], s4[base + 5]
-        )
-        # number of time-range specifications: n > 1 nests statistics
-        # ("average of DAILY MAXIMA"); only the FIRST (outermost) spec
-        # is surfaced as statistical_process, so n must ride along —
-        # without it a compound statistic would masquerade as a plain
-        # one.  n = 0 / coded-missing is spec-invalid.
-        n_ranges = s4[base + 7]
-        if n_ranges == 0 or n_ranges == 0xFF:
-            raise ValueError(
-                f"product definition template 4.{tmpl4} with "
-                "no time-range specifications"
-            )
-        if len(s4) < base + 12 + 12 * n_ranges:
-            raise ValueError(
-                f"truncated product definition template 4.{tmpl4} "
-                f"({n_ranges} time-range specifications)"
-            )
-        time_range_count = n_ranges
-        statistical_process = (
-            s4[base + 12] if s4[base + 12] != 0xFF else None
-        )
+    pdt = _parse_pdt(s[4])
 
     s5 = s[5]
     (tmpl5,) = struct.unpack_from(">H", s5, 9)
@@ -4345,8 +3983,6 @@ def _decode_field(s: dict[int, bytes]) -> Grib2Record:
         lat_first = lat_first + (nj - 1) * dlat  # La1 was the southern edge
     return Grib2Record(
         discipline=discipline,
-        category=category,
-        number=number,
         reftime=reftime,
         ni=ni,
         nj=nj,
@@ -4359,66 +3995,15 @@ def _decode_field(s: dict[int, bytes]) -> Grib2Record:
         reference_value=float(r),
         nbits=nbits,
         values=values,
-        level_type=level_type,
-        level_scale=level_scale,
-        level_value=level_value,
-        level2_type=level2_type,
-        level2_scale=level2_scale,
-        level2_value=level2_value,
         packing_template=tmpl5,
         gaussian_n=gaussian_n,
         latitudes_deg=latitudes,
         grid_template=tmpl_no,
         lambert_params=lambert_params,
-        statistical_process=statistical_process,
-        interval_end=interval_end,
-        ensemble_type=ensemble_type,
-        ensemble_member=ensemble_member,
-        ensemble_size=ensemble_size,
-        product_template=tmpl4_wire,
-        model_version=model_version,
-        constituent_type=constituent_type,
-        aerosol_type=aerosol_type,
-        aerosol_size_interval=aerosol_size_interval,
-        aerosol_first_size_m=aerosol_first_size_m,
-        aerosol_second_size_m=aerosol_second_size_m,
-        aerosol_wavelength_interval=aerosol_wavelength_interval,
-        aerosol_first_wavelength_m=aerosol_first_wavelength_m,
-        aerosol_second_wavelength_m=aerosol_second_wavelength_m,
-        derived_forecast=derived_forecast,
-        cluster_identifier=cluster_identifier,
-        cluster_total=cluster_total,
-        cluster_method=cluster_method,
-        cluster_size=cluster_size,
-        cluster_members=cluster_members,
-        cluster_stddev=cluster_stddev,
-        cluster_mean_distance=cluster_mean_distance,
-        probability_number=probability_number,
-        probability_total=probability_total,
-        probability_type=probability_type,
-        prob_lower_limit=prob_lower_limit,
-        prob_upper_limit=prob_upper_limit,
-        percentile_value=percentile_value,
-        satellite_bands=satellite_bands,
-        satellite_series=satellite_series,
-        satellite_numbers=satellite_numbers,
-        satellite_instruments=satellite_instruments,
-        central_wavenumbers=central_wavenumbers,
-        radar_sites=radar_sites,
-        radar_site_id=radar_site_id,
-        radar_site_number=radar_site_number,
-        radar_site_lat=radar_site_lat,
-        radar_site_lon=radar_site_lon,
-        radar_elevation_m=radar_elevation_m,
-        radar_operating_mode=radar_operating_mode,
-        forecast_hours=forecast_hours,
-        time_range_count=time_range_count,
         row_ni=row_ni,
         spectral_truncation=spectral_truncation,
         spectral_sub_truncation=spectral_sub,
-        spatial_statistical_process=spatial_statistical_process,
-        spatial_process_type=spatial_process_type,
-        spatial_points=spatial_points,
+        **pdt,
     )
 
 
@@ -4436,56 +4021,21 @@ def _field_inventory(s: dict[int, bytes]) -> str:
     A missing surface renders ``-``; a non-hour-convertible lead
     (calendar units) renders ``f-`` — LISTED, like wgrib2 lists every
     record, but never selected by an ``:f6$``-style match."""
-    s1, s4 = s[1], s[4]
+    s1 = s[1]
     (year,) = struct.unpack_from(">H", s1, 12)
-    (tmpl4,) = struct.unpack_from(">H", s4, 7)
-    if tmpl4 in _CHEM_AEROSOL_BASE:
-        # chemistry/aerosol family: the SHARED splice redirects level +
-        # lead rendering through the base-template offsets
-        s4, tmpl4 = _splice_chem_aerosol(s4, tmpl4)
-    if tmpl4 not in (
-        0, 1, 2, 3, 4, 5, 6, 7, 8, 9, 10, 11, 12, 13, 14, 15,
-        20, 30, 31, 32, 33, 34, 60, 61,
-    ):
-        # same gate as the decode and the landing inventory: rendering
-        # a layout-divergent template through the family offsets would
-        # print band/site octets as a fake level — the surfaces must
-        # never disagree
-        raise ValueError(f"unsupported product definition template {tmpl4}")
-    if tmpl4 in (20, 30, 31, 32, 33, 34):
-        # Satellite family (incl. the ensemble 4.33/4.34) and radar:
-        # no fixed surfaces (octets 23+ carry the band list / site
-        # block, not levels) — reading them through the family layout
-        # would render band data as a level.  4.31 and 4.20 also have
-        # no lead octets; 4.32/4.33/4.34 keep the family lead block.
-        lt = None
-        lvs = "-"
-        if tmpl4 in (32, 33, 34):
-            try:
-                fh: int | str = _forecast_hours(s4[17], _rs32be(s4, 18))
-            except ValueError:
-                fh = "-"
-        else:
-            fh = "-"
-    else:
-        lt, sc, lv = parse_fixed_surface(s4)
-        lt2, sc2, lv2 = parse_second_surface(s4)
-        # lenient TEXT rendering: fractional surfaces (sigma 0.995)
-        # list as their exact decimal instead of aborting the
-        # inventory — the loud stop lives in the decode path
-        # (surface_level)
-        lvs = surface_level_text(lv, sc)
-        if lv2 is not None:
-            lvs = f"{lvs}-{surface_level_text(lv2, sc2)}"
-        try:
-            fh = _forecast_hours(s4[17], _rs32be(s4, 18))
-        except ValueError:
-            fh = "-"
+    h = _parse_pdt(s[4], head=True)
+    # lenient TEXT rendering: fractional surfaces (sigma 0.995) list as
+    # their exact decimal instead of aborting the inventory — the loud
+    # stop lives in the decode path (surface_level)
+    lvs = surface_level_text(h["level_value"], h["level_scale"])
+    if h["level2_value"] is not None:
+        lvs += f"-{surface_level_text(h['level2_value'], h['level2_scale'])}"
+    lt, fh = h["level_type"], h["forecast_hours"]
     return (
-        f"d{s[0][6]}:c{s4[9]},n{s4[10]}:"
+        f"d{s[0][6]}:c{h['category']},n{h['number']}:"
         f"l{'-' if lt is None else lt}/{lvs}:"
         f"{year:04d}{s1[14]:02d}{s1[15]:02d}{s1[16]:02d}"
-        f":f{fh}"
+        f":f{'-' if fh is None else fh}"
     )
 
 

@@ -235,40 +235,26 @@ def _grib2_field_header(s: dict) -> dict:
     import struct
 
     from ..grid.grib2 import (
-        _forecast_hours,
-        _rs32be,
-        parse_fixed_surface,
-        parse_second_surface,
+        _GRID_TEMPLATES,
+        _parse_pdt,
         surface_level_lenient,
         surface_level_text,
     )
 
-    s1, s3, s4 = s[1], s[3], s[4]
+    s1, s3 = s[1], s[3]
     (year,) = struct.unpack_from(">H", s1, 12)
     # Mirror decode_grib2's template gates: reading Ni/Nj or level
     # octets through a different template's layout would emit garbage
     # metadata exactly where the full decode stops loudly.
     (tmpl3,) = struct.unpack_from(">H", s3, 12)
-    if tmpl3 not in (0, 1, 2, 3, 10, 20, 30, 40, 50):
-        # 3.40 (Gaussian), 3.30 (Lambert), 3.20 (polar stereo), 3.10
-        # (Mercator) and 3.1/3.2/3.3 (rotated/stretched) share 3.0's
-        # Nx/Ny octets; 3.50 (spherical harmonics) has no grid at all;
-        # anything else has a different layout and would yield garbage
-        # grid dimensions.
+    if tmpl3 not in _GRID_TEMPLATES:
         raise ValueError(f"unsupported grid definition template {tmpl3}")
-    (tmpl4,) = struct.unpack_from(">H", s4, 7)
-    from ..grid.grib2 import _CHEM_AEROSOL_BASE, _splice_chem_aerosol
-
-    if tmpl4 in _CHEM_AEROSOL_BASE:
-        # chemistry/aerosol family: the SHARED splice (grid.grib2) —
-        # one definition, so this surface can never disagree with the
-        # full decode or the codec-level inventory
-        s4, tmpl4 = _splice_chem_aerosol(s4, tmpl4)
-    if tmpl4 not in (
-        0, 1, 2, 3, 4, 5, 6, 7, 8, 9, 10, 11, 12, 13, 14, 15,
-        20, 30, 31, 32, 33, 34, 60, 61,
-    ):
-        raise ValueError(f"unsupported product definition template {tmpl4}")
+    # Category, number, surfaces and lead through the same template
+    # table as the full decode.  LENIENT here: a calendar-unit or
+    # sub-hour lead cannot fill the integer column, but the inventory
+    # must still LIST the record (wgrib2 lists every record of a mixed
+    # archive), so it reads None; the full decode keeps the loud stop.
+    h = _parse_pdt(s[4], head=True)
     if tmpl3 == 50:
         # Spectral records have no Ni/Nj — the inventory LISTS them
         # (wgrib2 lists spectral fields) with NULL dimensions; only the
@@ -292,55 +278,24 @@ def _grib2_field_header(s: dict) -> dict:
             raise ValueError(
                 f"grid dimensions coded missing on template {tmpl3}"
             )
-    if tmpl4 in (20, 30, 31, 32, 33, 34):
-        # Satellite family (30/31/32 and the ensemble-simulated
-        # 33/34): no fixed surfaces (octets 23+ carry the band list —
-        # reading them through the family layout would inventory band
-        # data as a level); 4.30/4.31 have no lead octets either
-        # (observations at the reference time).  Radar (20) is
-        # site-based: no surfaces, no lead.
-        level_type = scale = level_value = None
-        l2_type = l2_scale = l2_value = None
-        forecast_hours = None
-        if tmpl4 in (32, 33, 34):
-            try:
-                forecast_hours = _forecast_hours(s4[17], _rs32be(s4, 18))
-            except ValueError:
-                forecast_hours = None
-    else:
-        level_type, scale, level_value = parse_fixed_surface(s4)
-        l2_type, l2_scale, l2_value = parse_second_surface(s4)
-        # Lead time (octets 18-22) in whole hours — part of the header,
-        # so the inventory line can carry it and a ``match=`` regex can
-        # select leads (wgrib2 ``-match ':anl:'``) without decoding.
-        # LENIENT here: a calendar-unit lead (monthly means,
-        # code-table-4.4 unit 3) or a sub-hour lead can't fill the
-        # integer column, but the inventory must still LIST the record
-        # — wgrib2 lists every record of a mixed archive — so it
-        # surfaces as None instead of aborting the whole file's scan.
-        # The full decode path keeps the loud stop (there a mis-stamped
-        # valid time corrupts data downstream).
-        try:
-            forecast_hours = _forecast_hours(s4[17], _rs32be(s4, 18))
-        except ValueError:
-            forecast_hours = None
+    l2_value, l2_scale = h["level2_value"], h["level2_scale"]
     return {
-        "category": s4[9],
-        "number": s4[10],
-        "level_type": level_type,
+        "category": h["category"],
+        "number": h["number"],
+        "level_type": h["level_type"],
         # LENIENT on the inventory surface: a fractional level (sigma
         # 0.995, scaled soil depth) fills the integer column with NULL
         # — same convention as non-hour leads — and carries its exact
         # decimal in level_text for the inventory line; the full
         # decode keeps the loud surface_level stop.
-        "level": surface_level_lenient(level_value, scale),
-        "level_text": surface_level_text(level_value, scale),
-        "level2_type": l2_type,
+        "level": surface_level_lenient(h["level_value"], h["level_scale"]),
+        "level_text": surface_level_text(h["level_value"], h["level_scale"]),
+        "level2_type": h["level2_type"],
         "level2": surface_level_lenient(l2_value, l2_scale),
         "level2_text": (
             None if l2_value is None else surface_level_text(l2_value, l2_scale)
         ),
-        "forecast_hours": forecast_hours,
+        "forecast_hours": h["forecast_hours"],
         "year": year,
         "month": s1[14],
         "day": s1[15],

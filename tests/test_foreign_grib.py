@@ -1782,3 +1782,170 @@ def test_foreign_reforecast_grib2_decodes():
         [[0.325, 0.375, 25.925], [50.325, 0.475, 51.475]],
         rtol=0, atol=1e-12,
     )
+
+
+def _stat_block(end: tuple, specs: list) -> bytes:
+    """WMO 4.8-style statistical block: end of the overall interval
+    (year, month, day, hour, minute, second), n, total missing values,
+    then per time-range specification the process, increment type 2
+    (successive fields), range unit 1 (hour), range length, increment
+    unit 1 and increment 0."""
+    out = struct.pack(">H", end[0]) + bytes(end[1:])
+    out += bytes([len(specs)]) + struct.pack(">I", 0)
+    for process, hours in specs:
+        out += bytes([process, 2, 1]) + struct.pack(">I", hours)
+        out += bytes([1]) + struct.pack(">I", 0)
+    return out
+
+
+def test_foreign_cluster_statistical_4_13_decodes():
+    """FOREIGN-BYTES witness for template 4.13 (cluster over a
+    rectangular domain + statistical interval): the statistical block
+    follows the NC-long member list, so its octets move with NC — here
+    three members put it at octet 72."""
+    from monitoring_data_ingestion_spark.grid.grib2 import decode_grib2, inventory_line
+
+    sec4 = (
+        struct.pack(">IB", 107, 4)
+        + struct.pack(">H", 0)        # NV
+        + struct.pack(">H", 13)       # template 4.13
+        + bytes([1, 8])               # category 1, number 8 (total precip)
+        + bytes([4, 0, 0])            # gen process type 4 (ensemble), ids
+        + struct.pack(">H", 0) + bytes([0])  # cutoff
+        + bytes([1]) + struct.pack(">I", 24)  # +24 h
+        + bytes([1, 0]) + struct.pack(">I", 0)     # ground surface
+        + bytes([255, 255]) + b"\xff\xff\xff\xff"  # surface 2 missing
+        + bytes([0, 51])              # derived: unweighted mean of 51
+        + bytes([2, 255, 255, 6, 1])  # cluster 2 of 6, method 1
+        # domain N/S latitude, E/W longitude (W -10 deg sign-magnitude)
+        + struct.pack(">I", 70_000_000) + struct.pack(">I", 30_000_000)
+        + struct.pack(">I", 40_000_000)
+        + struct.pack(">I", 0x80000000 | 10_000_000)
+        + bytes([3])                  # NC = 3 forecasts in the cluster
+        + bytes([1]) + struct.pack(">I", 25)      # std dev 2.5
+        + bytes([0xFF]) + b"\xff\xff\xff\xff"     # distance: missing
+        + bytes([4, 17, 33])          # the member numbers
+        # average of daily maxima: n = 2, outermost process 0
+        + _stat_block((2023, 7, 16, 0, 0, 0), [(0, 24), (2, 1)])
+    )
+    assert len(sec4) == 107
+    msg = _foreign_with_sec4(sec4)
+    rec = decode_grib2(msg)
+    assert rec.product_template == 13
+    assert (rec.derived_forecast, rec.ensemble_size) == (0, 51)
+    assert (rec.cluster_identifier, rec.cluster_total, rec.cluster_method) == (2, 6, 1)
+    assert rec.cluster_size == 3 and rec.cluster_members == (4, 17, 33)
+    assert rec.cluster_stddev == 2.5 and rec.cluster_mean_distance is None
+    assert rec.interval_end == (2023, 7, 16, 0, 0)
+    assert rec.time_range_count == 2 and rec.statistical_process == 0
+    assert rec.forecast_hours == 24 and rec.level_type == 1
+    assert inventory_line(msg) == "d0:c1,n8:l1/0:2023071500:f24"
+    np.testing.assert_allclose(
+        rec.values,
+        [[0.325, 0.375, 25.925], [50.325, 0.475, 51.475]],
+        rtol=0, atol=1e-12,
+    )
+
+
+def test_foreign_ensemble_satellite_statistical_4_34_decodes():
+    """FOREIGN-BYTES witness for template 4.34 (simulated satellite,
+    individual ensemble member, statistical interval): no fixed
+    surfaces; the NB bands stand at octet 23, the three ensemble octets
+    follow the band list and the statistical block follows those."""
+    from monitoring_data_ingestion_spark.grid.grib2 import decode_grib2, inventory_line
+
+    sec4 = (
+        struct.pack(">IB", 72, 4)
+        + struct.pack(">H", 0)        # NV
+        + struct.pack(">H", 34)       # template 4.34
+        + bytes([4, 7])               # category 4, number 7
+        + bytes([2, 0, 0])            # gen process type, ids
+        + struct.pack(">H", 0) + bytes([0])  # cutoff
+        + bytes([1]) + struct.pack(">I", 6)  # +6 h
+        + bytes([2])                  # NB = 2 contributing bands
+        # series, number, instrument (2 octets), wave number scale/value
+        + struct.pack(">HHH", 333, 16, 615) + bytes([0x81]) + struct.pack(">I", 912)
+        + struct.pack(">HHH", 333, 16, 616) + bytes([1]) + struct.pack(">I", 77)
+        + bytes([3, 12, 30])          # ensemble: type 3, member 12 / 30
+        + _stat_block((2023, 7, 15, 6, 0, 0), [(1, 6)])
+    )
+    assert len(sec4) == 72
+    msg = _foreign_with_sec4(sec4)
+    rec = decode_grib2(msg)
+    assert rec.product_template == 34
+    assert rec.satellite_bands == 2
+    assert rec.satellite_series == (333, 333)
+    assert rec.satellite_instruments == (615, 616)
+    assert rec.central_wavenumbers == (9120.0, 7.7)
+    assert (rec.ensemble_type, rec.ensemble_member, rec.ensemble_size) == (3, 12, 30)
+    assert rec.interval_end == (2023, 7, 15, 6, 0)
+    assert rec.statistical_process == 1 and rec.time_range_count == 1
+    assert rec.forecast_hours == 6
+    assert rec.level_type is None and rec.level2_type is None
+    assert inventory_line(msg) == "d0:c4,n7:l-/-:2023071500:f6"
+
+
+def test_foreign_radar_4_20_decodes():
+    """FOREIGN-BYTES witness for template 4.20 (radar product): the
+    site block from octet 13, a sign-magnitude NEGATIVE site longitude,
+    the CCITT IA5 site id, and no lead or surface octets at all."""
+    from monitoring_data_ingestion_spark.grid.grib2 import decode_grib2, inventory_line
+
+    sec4 = (
+        struct.pack(">IB", 43, 4)
+        + struct.pack(">H", 0)        # NV
+        + struct.pack(">H", 20)       # template 4.20
+        + bytes([15, 1])              # category 15 (radar), number 1
+        + bytes([8])                  # gen process type: observation
+        + bytes([1, 1])               # one radar site; time unit: hour
+        + struct.pack(">I", 35_333_000)                # latitude 35.333
+        + struct.pack(">I", 0x80000000 | 97_278_000)   # longitude -97.278
+        + struct.pack(">H", 370)      # elevation (m)
+        + b"KTLX"                     # site id
+        + struct.pack(">H", 1234)     # numeric site id
+        + bytes([1, 0, 1, 1, 5])      # mode, calibration, QC, clutter, elev
+        + struct.pack(">H", 60)       # accumulation interval (min)
+        + bytes([18])                 # echo-top reference
+        + (250).to_bytes(3, "big")    # range bin spacing (m)
+        + struct.pack(">H", 100)      # radial angular spacing
+    )
+    assert len(sec4) == 43
+    msg = _foreign_with_sec4(sec4)
+    rec = decode_grib2(msg)
+    assert rec.product_template == 20
+    assert rec.radar_sites == 1 and rec.radar_site_id == "KTLX"
+    assert rec.radar_site_lat == 35.333 and rec.radar_site_lon == -97.278
+    assert rec.radar_elevation_m == 370 and rec.radar_site_number == 1234
+    assert rec.radar_operating_mode == 1
+    assert rec.forecast_hours is None and rec.level_type is None
+    assert inventory_line(msg) == "d0:c15,n1:l-/-:2023071500:f-"
+
+
+def test_foreign_deprecated_satellite_4_30_decodes():
+    """FOREIGN-BYTES witness for template 4.30 (the deprecated satellite
+    form): a 10-octet band whose instrument type is ONE octet — read
+    with 4.31's 11-octet band, the second band would start one octet
+    late."""
+    from monitoring_data_ingestion_spark.grid.grib2 import decode_grib2, inventory_line
+
+    sec4 = (
+        struct.pack(">IB", 34, 4)
+        + struct.pack(">H", 0)        # NV
+        + struct.pack(">H", 30)       # template 4.30
+        + bytes([5, 4])               # category 5, number 4
+        + bytes([8, 0])               # observation, generating process 0
+        + bytes([2])                  # NB = 2 bands
+        # series, number, instrument (1 octet), wave number scale/value
+        + struct.pack(">HH", 54, 1) + bytes([7]) + bytes([1]) + struct.pack(">I", 25)
+        + struct.pack(">HH", 54, 2) + bytes([9]) + bytes([0x82]) + struct.pack(">I", 3)
+    )
+    assert len(sec4) == 34
+    msg = _foreign_with_sec4(sec4)
+    rec = decode_grib2(msg)
+    assert rec.product_template == 30
+    assert rec.satellite_bands == 2
+    assert rec.satellite_series == (54, 54) and rec.satellite_numbers == (1, 2)
+    assert rec.satellite_instruments == (7, 9)
+    assert rec.central_wavenumbers == (2.5, 300.0)
+    assert rec.forecast_hours is None and rec.level_type is None
+    assert inventory_line(msg) == "d0:c5,n4:l-/-:2023071500:f-"

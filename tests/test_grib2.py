@@ -4335,3 +4335,227 @@ def test_runlength_roundtrip_property(nbits, tbl_n, nj, ni, miss, runs, seed):
     assert np.array_equal(np.isnan(rec.values), np.isnan(v))
     m = ~np.isnan(v)
     np.testing.assert_allclose(rec.values[m], v[m], rtol=0, atol=1e-12)
+
+
+def _section4_offset(msg: bytes) -> int:
+    pos = 16
+    while msg[pos + 4] != 4:
+        pos += int.from_bytes(msg[pos : pos + 4], "big")
+    return pos
+
+
+_STAT = dict(process=1, interval_end=(2020, 1, 2, 0, 0), range_hours=24)
+_BAND = dict(series=300, number=15, instrument=7, scale=-1, value=912)
+
+
+@pytest.mark.parametrize(
+    "kwargs, label",
+    [
+        (dict(statistical=dict(_STAT, range_hours=-1)), "statistical range hours -1"),
+        (dict(statistical=dict(_STAT, interval_end=(70000, 1, 2, 0, 0))),
+         "statistical interval end"),
+        (dict(statistical=dict(_STAT, interval_end=(2020, 1, 2, 300, 0))),
+         "statistical interval end"),
+        (dict(ensemble=dict(type=3, member=1, size=10),
+              model_version=(70000, 1, 1, 0, 0, 0)), "model version date"),
+        (dict(radar=dict(accumulation_minutes=70000)), "radar accumulation minutes 70000"),
+        (dict(radar=dict(bin_spacing_m=2**25)), f"radar bin spacing {2**25}"),
+        (dict(radar=dict(radial_spacing=-1)), "radar radial spacing -1"),
+        (dict(satellite=dict(bands=[dict(_BAND, series=70000)])), "satellite series 70000"),
+        (dict(category=300), "parameter category 300"),
+    ],
+)
+def test_out_of_width_product_fields_name_the_field(kwargs, label):
+    """A section-4 input that does not fit its octets stops with the
+    ValueError that names the field — never a raw struct.error,
+    OverflowError or bytes() range error from deep in the packer."""
+    import re
+
+    with pytest.raises(ValueError, match=f"^{re.escape(label)}.* out of range"):
+        encode_grib2_message(np.ones((2, 3)), **kwargs)
+
+
+def test_cluster_domain_needs_its_exact_value_count():
+    """The rectangular domain is four values and the circular one three:
+    a longer tuple would shift every later octet (the member count would
+    land inside the geometry), a shorter one leave octets out."""
+    cluster = dict(type=0, size=20, identifier=2, total=4, method=1, members=[1])
+    for domain in (dict(bounds=(1, 2, 3, 4, 5)), dict(center=(1, 2))):
+        with pytest.raises(ValueError, match="needs [34] values"):
+            encode_grib2_message(np.ones((2, 3)), cluster=dict(cluster, **domain))
+
+
+def test_statistical_interval_end_is_range_checked_both_ways():
+    """The interval end is a date like the model-version date: month 13
+    stops the encode, and a foreign message carrying it stops the full
+    decode — while the inventory, which never reads the statistical
+    block, still lists the record."""
+    v = np.ones((2, 3))
+    with pytest.raises(ValueError, match="statistical interval end .* out of range"):
+        encode_grib2_message(v, statistical=dict(_STAT, interval_end=(2020, 13, 2, 0, 0)))
+    msg = bytearray(encode_grib2_message(v, statistical=_STAT))
+    pos = _section4_offset(msg)
+    assert msg[pos + 36] == 1  # 4.8 octet 37: month of the interval end
+    msg[pos + 36] = 13
+    with pytest.raises(
+        ValueError, match=r"statistical interval end \(2020, 13, 2, 0, 0\) out of range"
+    ):
+        decode_grib2(bytes(msg))
+    assert inventory_line(bytes(msg)) == "d0:c0,n0:l1/0:2020010100:f0"
+
+
+def _template_kwargs(key: set) -> dict:
+    """Encode kwargs selecting the template whose selector set is
+    ``key`` (product kwargs plus the cluster domain / satellite form /
+    aerosol wavelength refinements)."""
+    kw = {
+        "ensemble": dict(ensemble=dict(type=3, member=7, size=20)),
+        "derived": dict(derived=dict(type=0, size=20)),
+        "probability": dict(probability=dict(number=1, total=3, type=1, upper=(1, 2731))),
+        "percentile": dict(percentile=90),
+        "spatial": dict(spatial=dict(stat=0, type=1, points=9)),
+        "error": dict(error=True),
+        "statistical": dict(statistical=_STAT),
+        "radar": dict(radar=dict(site_id="KTLX", lat_udeg=35_333_000)),
+        "chemistry": dict(chemistry=8),
+        "model_version": dict(model_version=(2017, 3, 15, 6, 30, 0)),
+    }
+    out = {}
+    for token in key & set(kw):
+        out.update(kw[token])
+    if "cluster" in key:
+        domain = (
+            dict(bounds=(60_000_000, 30_000_000, 40_000_000, 10_000_000))
+            if "bounds" in key
+            else dict(center=(45_000_000, 25_000_000, 500_000))
+        )
+        out["cluster"] = dict(
+            type=0, size=20, identifier=2, total=4, method=1, members=[1, 5, 9], **domain
+        )
+    if "satellite" in key:
+        out["satellite"] = dict(
+            bands=[_BAND], simulated="simulated" in key, deprecated="deprecated" in key
+        )
+    if "aerosol" in key:
+        out["aerosol"] = dict(type=62001, size_interval=2, first_size=(8, 25))
+        if "wavelength" in key:
+            out["aerosol"]["first_wavelength"] = (9, 550)
+    return out
+
+
+def _pdt_numbers():
+    from monitoring_data_ingestion_spark.grid.grib2 import _PDT
+
+    return sorted(_PDT)
+
+
+@pytest.mark.parametrize("tmpl", _pdt_numbers())
+def test_every_product_template_agrees_on_every_surface(tmpl):
+    """One case per entry of the template table: encode selects the
+    template from its kwargs, and the full decode, the inventory line
+    and the landing header read back the same category, number, both
+    surfaces and lead.  What to expect is stated from the WMO layouts,
+    not read from the table: radar and satellite products have no
+    surfaces, and only simulated satellite imagery keeps the lead."""
+    from monitoring_data_ingestion_spark.grid.grib2 import _PDT
+    from monitoring_data_ingestion_spark.sources.grib_source import _grib2_header
+
+    key = set(_PDT[tmpl][0])
+    kw = _template_kwargs(key)
+    surfaces = not key & {"satellite", "radar"}
+    lead = surfaces or "simulated" in key
+    if surfaces:
+        kw.update(level_type=100, level_value=500, level2=dict(type=100, value=700))
+    if lead:
+        kw["forecast"] = dict(unit=1, value=6)
+    msg = encode_grib2_message(np.ones((2, 3)), category=2, number=22, **kw)
+    rec = decode_grib2(msg)
+    head = _grib2_header(msg)
+    assert rec.product_template == tmpl
+    levels = (100, 500, 100, 700) if surfaces else (None,) * 4
+    assert (rec.level_type, rec.level_value, rec.level2_type, rec.level2_value) == levels
+    assert (head["level_type"], head["level"], head["level2_type"], head["level2"]) == levels
+    assert (rec.category, rec.number) == (head["category"], head["number"]) == (2, 22)
+    assert rec.forecast_hours == head["forecast_hours"] == (6 if lead else None)
+    assert inventory_line(msg) == (
+        "d0:c2,n22:" + ("l100/500-700" if surfaces else "l-/-")
+        + ":2020010100:" + ("f6" if lead else "f-")
+    )
+
+
+@pytest.mark.parametrize("tmpl", [16, 50])
+def test_template_outside_the_table_is_refused_on_every_surface(tmpl):
+    """4.16 and 4.50 have no layout in the table: the decode, the
+    inventory line and the landing header all refuse them by name
+    instead of reading octets through another template's offsets."""
+    import struct
+
+    from monitoring_data_ingestion_spark.sources.grib_source import _grib2_header
+
+    msg = bytearray(encode_grib2_message(np.ones((2, 3))))
+    struct.pack_into(">H", msg, _section4_offset(msg) + 7, tmpl)
+    for surface in (decode_grib2, inventory_line, _grib2_header):
+        with pytest.raises(
+            ValueError, match=f"^unsupported product definition template {tmpl}$"
+        ):
+            surface(bytes(msg))
+
+
+def test_product_templates_are_defined_only_by_the_table():
+    """Source scan: the section-4 layout lives in ``grib2._PDT`` alone.
+    Outside it, neither ``grib2.py`` nor ``grib_source.py`` compares a
+    product-template number against a literal, looks one up in a
+    literal dict, or spells out the supported set (ten or more template
+    numbers); and the grid-template gate is spelled once, as
+    ``_GRID_TEMPLATES``."""
+    import ast
+    import re
+    from pathlib import Path
+
+    import monitoring_data_ingestion_spark as pkg
+    from monitoring_data_ingestion_spark.grid.grib2 import _GRID_TEMPLATES, _PDT
+
+    pdt_name = re.compile(r"tmpl4|product_template|pdt", re.I)
+
+    def ints(node) -> set | None:
+        elts = node.elts if isinstance(node, (ast.Tuple, ast.Set, ast.List)) else (
+            node.keys if isinstance(node, ast.Dict) else [node]
+        )
+        vals = {e.value for e in elts if isinstance(e, ast.Constant) and type(e.value) is int}
+        return vals if elts and len(vals) == len(elts) else None
+
+    def names_pdt(node) -> bool:
+        return any(
+            pdt_name.search(getattr(n, "id", None) or getattr(n, "attr", None) or "")
+            for n in ast.walk(node)
+            if isinstance(n, (ast.Name, ast.Attribute))
+        )
+
+    root = Path(pkg.__file__).parent
+    found = []
+    for rel in ("grid/grib2.py", "sources/grib_source.py"):
+        tree = ast.parse((root / rel).read_text())
+        table = {
+            id(n)
+            for a in ast.walk(tree)
+            if isinstance(a, ast.Assign)
+            and any(getattr(t, "id", None) in ("_PDT", "_GRID_TEMPLATES") for t in a.targets)
+            for n in ast.walk(a)
+        }
+        for node in ast.walk(tree):
+            if id(node) in table:
+                continue
+            if isinstance(node, ast.Compare):
+                sides = [node.left, *node.comparators]
+                if any(names_pdt(x) for x in sides) and any(ints(x) for x in sides):
+                    found.append((rel, node.lineno, "compare"))
+            if isinstance(node, (ast.Call, ast.Subscript)) and names_pdt(node):
+                inner = node.func.value if isinstance(node, ast.Call) and isinstance(
+                    node.func, ast.Attribute
+                ) else getattr(node, "value", None)
+                if isinstance(inner, ast.Dict) and ints(inner):
+                    found.append((rel, node.lineno, "dict lookup"))
+            vals = ints(node) if isinstance(node, (ast.Tuple, ast.Set, ast.List)) else None
+            if vals and (len(vals) >= 10 and vals <= set(_PDT) or vals == _GRID_TEMPLATES):
+                found.append((rel, node.lineno, "template list"))
+    assert found == []
