@@ -50,36 +50,29 @@ the ``wgrib`` edition-1 path:
   product kwargs it was given and packs the blocks; the decoder and
   both inventories walk the same blocks, computing every offset from
   the widths before it.  A template outside the table raises.
-* Section 5 (Data representation): template 5.0 (simple packing with an
-  IEEE 754 binary32 reference value — GRIB2 dropped GRIB1's IBM float,
-  signed-magnitude binary/decimal scale factors, nbits), template 5.2
-  (complex packing: general group splitting with per-group reference/
-  width, optional missing-value management 1 — in-data all-ones
-  substitution instead of a bitmap — or 2, where the top TWO codes at
-  each width mark primary/secondary missing and the section-5
-  secondary substitute lands raw), template 5.3 (complex packing with
-  first- or second-order spatial differencing — the packing GFS and
-  most operational GRIB2 archives actually use; composes with both
-  missing-value managements by differencing the non-missing
-  subsequence only), template 5.4 (IEEE floating-point data — raw
-  binary32/binary64, no reference/scales/width), template 5.40
-  (JPEG2000: the scaled field as one lossless raw codestream,
-  grid/jpeg2000.py), template 5.41 (PNG, grid/png.py), template 5.42
-  (CCSDS 121.0 / AEC lossless Rice coding on the from-scratch
-  grid/aec.py codec — the packing post-2022 NCEP GFS output ships),
-  template 5.200 (run length with level values — the JMA
-  radar-composite packing: a level table in section 5, level-0
-  missing cells, base-LNGU run digits LSB-first per JMA Technical
-  Information No. 215), and template 5.61 (simple packing with
-  logarithm pre-processing:
-  Z = ln(Y + B), the ECMWF precipitation form).
+* Section 5 (Data representation): templates 5.0 (simple packing with
+  an IEEE 754 binary32 reference value — GRIB2 dropped GRIB1's IBM
+  float), 5.2/5.3 (complex packing: general group splitting, with
+  missing-value management 1 or 2 and, on 5.3, first- or second-order
+  spatial differencing), 5.4 (raw IEEE floats), 5.40 (JPEG2000,
+  grid/jpeg2000.py), 5.41 (PNG, grid/png.py), 5.42 (CCSDS / AEC,
+  grid/aec.py), 5.50/5.51 (spectral simple/complex packing, paired
+  with 3.50), 5.61 (simple packing of Z = ln(Y + B)) and 5.200 (run
+  length with level values, the JMA radar-composite packing).  Each is
+  ONE entry of the ``_DRT`` table: the packing kwarg (and spectral
+  form) that selects it, its blocks of fields in octet order — most
+  open with 5.0's R/E/D/nbits head — and its packing, the algorithm
+  that maps the increments X to section-7 bytes and back.  The same
+  packer and walker as section 4 read and write the blocks; every
+  template with the head decodes through one rule,
+  Y = (R + X·2^E)/10^D, with nbits 0 a constant field.
 * Section 6 (Bitmap): indicator 255 = none, 0 = bitmap present, 254 =
   the previously defined bitmap applies (multi-field messages; resolved
   by substitution in ``_iter_field_sections``).
 * Section 7 (Data): big-endian bit-packed increments,
   Y = (R + X·2^E) / 10^D — the same simple-packing formula as GRIB1;
   templates 7.2/7.3 carry grouped increments (+ initial values and the
-  difference minimum for 7.3) as laid out in _build_complex_s57.
+  difference minimum for 7.3) as laid out above _complex_encode.
 * Section 8: "7777".
 
 Record matching parity: :func:`inventory_line` renders a wgrib2-style
@@ -106,9 +99,8 @@ from typing import NamedTuple
 
 import numpy as np
 
-# GRIB2 shares GRIB1's bit packing and signed-magnitude 16-bit encoding
-# (both big-endian, top bit = sign) — one implementation, two editions.
-from .grib1 import _pack_bits, _rs16 as _rs16be, _s16 as _s16be, _unpack_bits
+# GRIB2 shares GRIB1's bit packing — one implementation, two editions.
+from .grib1 import _pack_bits, _unpack_bits
 from .grib1 import loud_truncation
 from .grib1 import quantize_simple_packing
 
@@ -879,47 +871,42 @@ def _signed_magnitude(v: int, width: int) -> bytes:
     return bytes(b)
 
 
-def _build_complex_s57(
-    x: np.ndarray,
-    missing: np.ndarray | None,
-    r_bytes: bytes,
-    binary_scale: int,
-    decimal_scale: int,
-    group_len: int,
-    spatial_order: int,
-    secondary: np.ndarray | None = None,
-    sub2_value: float | None = None,
-) -> tuple[bytes, bytes]:
-    """Build the (section 5 body, section 7 body) byte pair for complex
-    packing. ``x`` is the full int64 increment array (one entry per
-    packed point; entries at ``missing``/``secondary`` positions are
-    ignored); ``spatial_order`` 0 → template 5.2, 1/2 → 5.3.
-    ``secondary`` raises missing-value management to 2 (code table
-    5.5): the top TWO codes of every group width become the primary /
-    secondary markers, an all-secondary group codes as the
-    all-ones-minus-1 group reference, and ``sub2_value`` rides as the
-    section-5 secondary substitute the consumer lands at those
-    points."""
-    n = len(x)
-    if group_len < 1:
-        raise ValueError("group_len must be >= 1")
-    x = x.astype(np.int64).copy()
-    mvm = 2 if secondary is not None else (1 if missing is not None else 0)
+def _complex_encode(vals: np.ndarray, p: dict):
+    """Templates 5.2/5.3: quantize every point the masks leave, split
+    the increments into ``group_len`` runs and describe them in ``p``;
+    returns the section-7 emitter.  ``p["order"]`` is None on 5.2 and
+    the differencing order on 5.3.  A ``secondary`` mask raises
+    missing-value management to 2 (code table 5.5): the top TWO codes
+    of every group width become the primary / secondary markers, an
+    all-secondary group codes as the all-ones-minus-1 group reference,
+    and the secondary substitute rides in section 5 for the consumer to
+    land at those points."""
+    missing, sec = p["missing"], p["secondary"]
+    group_len, spatial_order = p["group_len"], p["order"]
+    n = len(vals)
+    mvm = 2 if sec is not None else (1 if missing is not None else 0)
     if mvm == 2 and missing is None:
         missing = np.zeros(n, dtype=bool)
-    sec = secondary if mvm == 2 else None
     miss_any = (
         None if mvm == 0 else (missing if sec is None else (missing | sec))
     )
-    reserve = 2 if mvm == 2 else (1 if mvm == 1 else 0)
-    tmpl = 2 if spatial_order == 0 else 3
+    x = _quantize(
+        vals if miss_any is None else vals[~miss_any], p, 64
+    ).astype(np.int64)
+    if miss_any is not None:
+        x_full = np.zeros(n, dtype=np.int64)
+        x_full[~miss_any] = x
+        x = x_full
+    if group_len < 1:
+        raise ValueError("group_len must be >= 1")
+    reserve = mvm  # marker codes at the top of every width
     extra = b""
     ww = 0
+    if spatial_order is not None and spatial_order not in (1, 2):
+        raise ValueError(
+            f"unsupported spatial differencing order {spatial_order}"
+        )
     if spatial_order:
-        if spatial_order not in (1, 2):
-            raise ValueError(
-                f"unsupported spatial differencing order {spatial_order}"
-            )
         # mvm composes with spatial differencing by differencing the
         # NON-MISSING subsequence only (the g2clib convention NCEP
         # precipitation products encode under): missing points pack as
@@ -1028,49 +1015,21 @@ def _build_complex_s57(
         refs[all_missing & all_secondary] = (1 << nbits_ref) - 2
     wref = int(widths.min()) if ng else 0
     wbits = int(int(widths.max()) - wref).bit_length() if ng else 0
-    len_ref = group_len
     len_bits = 0  # every group is group_len; the last comes from true-length
-    true_last = (n - starts[-1]) if ng else 0
-
-    if mvm:
-        sub1 = struct.pack(">f", _PRIMARY_MISSING_SUBSTITUTE)
-    else:
-        sub1 = b"\xff\xff\xff\xff"
-    if mvm == 2 and sub2_value is not None:
-        sub2 = struct.pack(">f", float(sub2_value))
-    else:
-        sub2 = b"\xff\xff\xff\xff"
-    s5_body = (
-        struct.pack(">I", n)
-        + struct.pack(">H", tmpl)
-        + r_bytes
-        + _s16be(binary_scale)
-        + _s16be(decimal_scale)
-        + bytes([nbits_ref])
-        + bytes([0])  # original field type: float
-        + bytes([1])  # group splitting method: general
-        + bytes([mvm])
-        + sub1
-        + sub2
-        + struct.pack(">I", ng)
-        + bytes([wref])
-        + bytes([wbits])
-        + struct.pack(">I", len_ref)
-        + bytes([1])  # group length increment
-        + struct.pack(">I", true_last)
-        + bytes([len_bits])
+    p.update(
+        nbits=nbits_ref, mvm=mvm, ng=ng, width_ref=wref, width_bits=wbits,
+        length_ref=group_len, length_inc=1,
+        last_length=(n - starts[-1]) if ng else 0, length_bits=len_bits,
+        primary_substitute=_PRIMARY_MISSING_SUBSTITUTE if mvm else None,
+        ww=ww,
     )
-    if tmpl == 3:
-        s5_body += bytes([spatial_order, ww])
-
-    s7_body = (
+    return lambda: (
         extra
         + _pack_varwidth([(refs.astype(np.uint64), nbits_ref)])
         + _pack_varwidth([((widths - wref).astype(np.uint64), wbits)])
         + _pack_varwidth([(np.zeros(ng, dtype=np.uint64), len_bits)])
         + _pack_varwidth(group_vals)
     )
-    return s5_body, s7_body
 
 
 def _rle_pack(levels: np.ndarray, nbits: int, mv: int) -> np.ndarray:
@@ -1166,46 +1125,36 @@ def _rle_unpack(
     return np.repeat(levels[: k + 1], runs[: k + 1])
 
 
-def _decode_complex_s7(
-    s5: bytes, s7: bytes, tmpl5: int, n_points: int
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+def _complex_decode(data: bytes, p: dict) -> np.ndarray:
     """Decode a template 7.2/7.3 data section against its 5.2/5.3
-    descriptor → (int64 increment array X, primary-missing bool mask,
-    secondary-missing bool mask), each length ``n_points``.  Under
-    missing-value management 2 the top TWO codes of every group width
-    (and of the reference width, for constant groups) are the primary
-    / secondary markers.  Spatial differencing (7.3) is integrated
-    here; the caller applies Y = (R + X·2^E)/10^D.
+    descriptor → the values: Y = (R + X·2^E)/10^D, NaN at primary
+    missing points and the section-5 secondary substitute (NaN when
+    coded missing) at secondary ones.  Under missing-value management
+    2 the top TWO codes of every group width (and of the reference
+    width, for constant groups) are the primary / secondary markers.
+    Spatial differencing (7.3) is integrated here.  ``nbits`` is the
+    group-reference width, so 0 is no constant field: the group widths
+    still carry values.
 
     Native-codec swap-in point: like the JPEG2000 path (see
     grid/jpeg2000.py module docstring), this pure-Python group
     unpacker is the per-record CPU constant at 100 TB; it runs inside
     the landing source's ``mapInPandas`` stage, which is the
     replaceable unit.  A native GRIB library (eccodes/g2clib) drops in
-    at this function's bytes→(X, missing) contract without touching
+    at this function's bytes→values contract without touching
     the scan, the pushdown, or the record schema."""
-    nbits_ref = s5[19]
-    mvm = s5[22]
+    nbits_ref, mvm, ng, n_points = p["nbits"], p["mvm"], p["ng"], p["n_present"]
     if mvm not in (0, 1, 2):
         raise ValueError(f"unsupported missing value management {mvm}")
-    (ng,) = struct.unpack_from(">I", s5, 31)
-    wref = s5[35]
-    wbits = s5[36]
-    (len_ref,) = struct.unpack_from(">I", s5, 37)
-    len_inc = s5[41]
-    (true_last,) = struct.unpack_from(">I", s5, 42)
-    len_bits = s5[46]
-    order = ww = 0
-    if tmpl5 == 3:
-        order, ww = s5[47], s5[48]
-        if order not in (1, 2):
-            raise ValueError(f"unsupported spatial differencing order {order}")
+    order = p.get("order")  # None: 5.2, no differencing
+    if order is not None and order not in (1, 2):
+        raise ValueError(f"unsupported spatial differencing order {order}")
 
-    data = s7[5:]
     off = 0
     ivals: list[int] = []
     gmin = 0
-    if tmpl5 == 3:
+    if order:
+        ww = p["ww"]
         if ww < 1:
             raise ValueError("missing extra-descriptor width (ww)")
         for _ in range(order + 1):
@@ -1243,12 +1192,12 @@ def _decode_complex_s7(
 
     refs = take(ng, nbits_ref)
     align()
-    widths = wref + take(ng, wbits)
+    widths = p["width_ref"] + take(ng, p["width_bits"])
     align()
-    lengths = len_ref + len_inc * take(ng, len_bits)
+    lengths = p["length_ref"] + p["length_inc"] * take(ng, p["length_bits"])
     align()
     if ng:
-        lengths[-1] = true_last
+        lengths[-1] = p["last_length"]
     if int(lengths.sum()) != n_points:
         raise ValueError(
             f"group lengths sum to {int(lengths.sum())}, expected {n_points}"
@@ -1285,7 +1234,7 @@ def _decode_complex_s7(
                 x[pos : pos + length] = ref + vals
         pos += length
 
-    if tmpl5 == 3:
+    if order:
         # With missing-value management the differencing ran over the
         # NON-MISSING subsequence only (g2clib's comunpack
         # convention): reconstruct on that subsequence — second
@@ -1315,34 +1264,42 @@ def _decode_complex_s7(
                 sub[2:] = ivals[1] + np.cumsum(g1)
         x = np.zeros(n_points, dtype=np.int64)
         x[pres_idx] = sub
-    return x, miss, miss2
+    y = _scale(p, x)
+    y[miss] = np.nan
+    # SECONDARY missing (mvm=2): the producer's declared substitute is
+    # what those points MEAN (e.g. "below detection threshold" radar
+    # returns) — landing it preserves information NaN would destroy.
+    sub2 = p["secondary_substitute"]
+    y[miss2] = np.nan if sub2 is None else sub2
+    return y
 
 
-# --- section 4: product definition templates ------------------------------
+# --- sections 1, 4 and 5 as octet tables -----------------------------------
 #
 # WMO-No. 306 (Manual on Codes, Vol. I.2) defines every product
-# definition template as an octet table, and wgrib2 reads each one from
-# a table.  So does this module: _PDT maps each template number to its
-# blocks in octet order, and one packer (_pack_fields) and one walker
-# (_parse_pdt) serve the encoder, the full decode and both inventories.
-# No offset is written down: the walker computes each one from the
-# widths before it, which is why a block that follows a counted list
-# (4.13/4.14 after the cluster members, 4.34 after the bands) needs no
-# special case.
+# definition and data representation template as an octet table, and
+# wgrib2 reads each one from a table.  So does this module: _PDT and
+# _DRT map each template number to its blocks in octet order, and one
+# packer (_pack_section) and one walker (_parse_section) serve the
+# encoder, the full decode and both inventories; section 1 is a lead
+# without a template.  No offset is written down: the walker computes
+# each one from the widths before it, which is why a block that follows
+# a counted list (4.13/4.14 after the cluster members, 4.34 after the
+# bands) needs no special case.
 
-_REQUIRED = object()  # no default: the product kwarg must carry the key
+_REQUIRED = object()  # no default: the source dict must carry the key
 
 
 class _F(NamedTuple):
-    """One section-4 field.  ``name`` is the Grib2Record field it
-    decodes to (None: not surfaced), ``key`` the dotted path the encoder
-    reads in the product kwargs (None: the kwarg itself), ``width`` its
-    octets (per item for a list) and ``label`` what its errors call it.
-    ``missing``: the all-ones word is coded missing, None both ways.
-    ``arg`` is the kind's parameter: a constant's bytes, an unsigned
-    field's ceiling, a signed field's (lo, hi, divisor), a scaled pair's
-    non-negative flag, the phrase an empty count reports, a list's
-    item fields."""
+    """One section field.  ``name`` is the key it decodes to (None: not
+    surfaced), ``key`` the dotted path the encoder reads in its source
+    dict (None: the source itself), ``width`` its octets (per item for a
+    list) and ``label`` what its errors call it.  ``missing``: the
+    all-ones word is coded missing, None both ways.  ``arg`` is the
+    kind's parameter: a constant's bytes, an unsigned field's ceiling, a
+    signed field's (lo, hi, divisor) (None: the plain integer), a
+    scaled pair's non-negative flag, the phrase an empty count reports,
+    a list's item fields."""
 
     name: str | None
     key: str | None
@@ -1652,8 +1609,8 @@ def _pack_u(f: _F, v) -> bytes:
     return v.to_bytes(f.width, "big")
 
 
-def _parse_u(f: _F, s4: bytes, off: int):
-    v = int.from_bytes(s4[off : off + f.width], "big")
+def _parse_u(f: _F, buf: bytes, off: int):
+    v = int.from_bytes(buf[off : off + f.width], "big")
     if f.missing and v == 256 ** f.width - 1:
         return None
     if f.arg is not None and v > f.arg:
@@ -1676,11 +1633,13 @@ def _sm_read(raw: bytes) -> int:
     return top - v if v & top else v
 
 
-def _parse_sm(f: _F, s4: bytes, off: int):
-    raw = s4[off : off + f.width]
+def _parse_sm(f: _F, buf: bytes, off: int):
+    raw = buf[off : off + f.width]
     if f.missing and raw == b"\xff" * f.width:
         return None
     v = _sm_read(raw)
+    if f.arg is None:
+        return v
     lo, hi, div = f.arg
     if not lo <= v <= hi:
         raise ValueError(f"{f.label} {v / div} out of range")
@@ -1720,12 +1679,12 @@ def _pack_surface(f: _F, v) -> bytes:
     return t + _pack_pair(f.label[1], (v.get("scale", 0), v["value"]))
 
 
-def _parse_surface(f: _F, s4: bytes, off: int) -> dict:
+def _parse_surface(f: _F, buf: bytes, off: int) -> dict:
     """A coded-missing type blanks the whole surface; so does an
     all-ones part.  Values are signed-MAGNITUDE (a -2 PVU surface is
     wire 0x80000002)."""
-    t = s4[off] if s4[off] != 0xFF else None
-    sc, raw = s4[off + 1 : off + 2], s4[off + 2 : off + 6]
+    t = buf[off] if buf[off] != 0xFF else None
+    sc, raw = buf[off + 1 : off + 2], buf[off + 2 : off + 6]
     scale = None if t is None or sc == b"\xff" else _sm_read(sc)
     value = None if t is None or raw == b"\xff" * 4 else _sm_read(raw)
     return {f"{f.name}_type": t, f"{f.name}_scale": scale, f"{f.name}_value": value}
@@ -1746,8 +1705,8 @@ def _pack_date(f: _F, v) -> bytes:
     return struct.pack(">HBBBBB", *p)
 
 
-def _parse_date(f: _F, s4: bytes, off: int) -> tuple:
-    p = struct.unpack_from(">HBBBBB", s4, off)
+def _parse_date(f: _F, buf: bytes, off: int) -> tuple:
+    p = struct.unpack_from(">HBBBBB", buf, off)
     if not _date_ok(p):
         raise ValueError(f"{f.label} {p[:5]} out of range")
     return p[:5]
@@ -1771,8 +1730,8 @@ def _pack_ascii(f: _F, v) -> bytes:
     return str(v).encode("ascii")
 
 
-def _parse_ascii(f: _F, s4: bytes, off: int):
-    raw = s4[off : off + f.width]
+def _parse_ascii(f: _F, buf: bytes, off: int):
+    raw = buf[off : off + f.width]
     if raw == b"\xff" * f.width:
         return None
     try:
@@ -1782,9 +1741,27 @@ def _parse_ascii(f: _F, s4: bytes, off: int):
 
 
 def _pack_count(f: _F, v) -> bytes:
-    if not 1 <= len(v) <= 254:
-        raise ValueError(f"{f.label} {len(v)} out of range 1-254")
-    return bytes([len(v)])
+    """A list's length: 0 and the all-ones word are refused both ways."""
+    hi = 256 ** f.width - 2
+    if not 1 <= len(v) <= hi:
+        raise ValueError(f"{f.label} {len(v)} out of range 1-{hi}")
+    return len(v).to_bytes(f.width, "big")
+
+
+def _pack_f32(f: _F, v) -> bytes:
+    """IEEE 754 binary32, rounded to nearest; past its range is loud."""
+    if v is None and f.missing:
+        return b"\xff" * 4
+    try:
+        return struct.pack(">f", float(v))
+    except OverflowError:
+        raise ValueError(f"{f.label} {v} out of range") from None
+
+
+def _parse_f32(f: _F, buf: bytes, off: int):
+    if f.missing and buf[off : off + 4] == b"\xff" * 4:
+        return None
+    return _f32_decode(buf[off : off + 4])
 
 
 _PACK = {
@@ -1797,15 +1774,17 @@ _PACK = {
     "lead": _pack_lead,
     "ascii": _pack_ascii,
     "count": _pack_count,
+    "f32": _pack_f32,
     "list": lambda f, v: b"".join(_pack_fields(f.arg, item) for item in v),
 }
 _PARSE = {
     "u": _parse_u,
     "sm": _parse_sm,
-    "pair": lambda f, s4, off: _scaled_limit(s4, off),
+    "pair": lambda f, buf, off: _scaled_limit(buf, off),
     "date": _parse_date,
-    "lead": lambda f, s4, off: _forecast_hours(s4[off], _rs32be(s4, off + 1)),
+    "lead": lambda f, buf, off: _forecast_hours(buf[off], _rs32be(buf, off + 1)),
     "ascii": _parse_ascii,
+    "f32": _parse_f32,
 }
 
 
@@ -1815,41 +1794,73 @@ def _pack_fields(fields, src) -> bytes:
     )
 
 
-def _parse_pdt(s4: bytes, head: bool = False) -> dict:
-    """Section 4 (5-octet header included) -> Grib2Record fields, walking
-    the template's blocks with a running offset.  Loud on every defect:
-    an unknown template, a truncated block, an empty count, an
-    out-of-range field.  ``head`` reads only the inventory fields (see
-    _HEAD_BLOCKS) and a lead the hours column cannot hold as None, the
-    way wgrib2 still lists such a record."""
-    (t,) = struct.unpack_from(">H", s4, 7)
-    if t not in _PDT:
-        raise ValueError(f"unsupported product definition template {t}")
-    # No lead or no surfaces on the template: None, never 4.0's lead 0.
-    out = dict.fromkeys((
-        "forecast_hours", "level_type", "level_scale", "level_value",
-        "level2_type", "level2_scale", "level2_value",
-    ))
-    out["product_template"] = t
-    off, count = 9, 0
-    for block in _PDT[t][1]:
-        if head and block not in _HEAD_BLOCKS:
-            break
-        if len(s4) < off + sum(f.width for f in block if f.kind != "list"):
-            raise ValueError(f"truncated product definition template 4.{t}")
+class _Section(NamedTuple):
+    """One section's layout after its 5-octet header.  ``lead`` is the
+    fields every message carries; on a templated section its last field
+    is the 2-octet template number, and ``table`` maps that number to
+    (what selects the template, its blocks), which follow the lead.
+    ``blank`` names the fields that read None when the template has no
+    such block; ``noun`` is what the errors call a template."""
+
+    number: int
+    noun: str
+    lead: tuple
+    table: dict | None = None
+    blank: tuple = ()
+
+
+def _frame(number: int, body: bytes) -> bytes:
+    return struct.pack(">IB", 5 + len(body), number) + body
+
+
+def _pack_section(sec: _Section, src: dict) -> bytes:
+    """The lead and, on a templated section, the blocks of the template
+    whose number ``src`` carries under the lead's last key."""
+    blocks = [sec.lead]
+    if sec.table is not None:
+        blocks += sec.table[src[sec.lead[-1].key]][1]
+    return _frame(sec.number, b"".join(_pack_fields(b, src) for b in blocks))
+
+
+def _template_number(sec: _Section, raw: bytes) -> int:
+    (t,) = struct.unpack_from(">H", raw, 3 + sum(f.width for f in sec.lead))
+    if t not in sec.table:
+        raise ValueError(f"unsupported {sec.noun} template {t}")
+    return t
+
+
+def _parse_section(sec: _Section, raw: bytes, head: bool = False) -> dict:
+    """A section (5-octet header included) -> its fields by name, walking
+    the lead and the template's blocks with a running offset.  Loud on
+    every defect: an unknown template, a truncated block, an empty
+    count, an out-of-range field.  ``head`` (section 4) reads only the
+    inventory fields (see _HEAD_BLOCKS) and a lead the hours column
+    cannot hold as None, the way wgrib2 still lists such a record."""
+    blocks, where = [sec.lead], None
+    if sec.table is not None:
+        t = _template_number(sec, raw)
+        blocks += sec.table[t][1]
+        where = f"{sec.noun} template {sec.number}.{t}"
+    out = dict.fromkeys(sec.blank)
+    off, count = 5, 0
+    for block in blocks:
+        if block is not sec.lead:
+            if head and block not in _HEAD_BLOCKS:
+                break
+            # A short lead already failed the template number's read
+            # (section 1: the date's), a torn record loud_truncation names.
+            if len(raw) < off + sum(f.width for f in block if f.kind != "list"):
+                raise ValueError(f"truncated {where}")
         for f in block:
             if f.kind == "list":
-                if len(s4) < off + count * f.width:
-                    raise ValueError(
-                        f"truncated product definition template 4.{t} "
-                        f"({count} {f.label})"
-                    )
+                if len(raw) < off + count * f.width:
+                    raise ValueError(f"truncated {where} ({count} {f.label})")
                 cols = {}
                 at = off
                 for i in f.arg:
                     if i.name is not None:
                         cols[i.name] = tuple(
-                            _PARSE[i.kind](i, s4, at + r * f.width)
+                            _PARSE[i.kind](i, raw, at + r * f.width)
                             for r in range(count)
                         )
                     at += i.width
@@ -1859,22 +1870,555 @@ def _parse_pdt(s4: bytes, head: bool = False) -> dict:
                 off += count * f.width
                 continue
             if f.kind == "count":
-                count = s4[off]
-                if count in (0, 0xFF):
-                    raise ValueError(
-                        f"product definition template 4.{t} with no {f.arg}"
-                    )
+                count = int.from_bytes(raw[off : off + f.width], "big")
+                if count in (0, 256 ** f.width - 1):
+                    raise ValueError(f"{where} with no {f.arg}")
                 out[f.name] = count
             elif f.kind == "surface":
-                out.update(_parse_surface(f, s4, off))
+                out.update(_parse_surface(f, raw, off))
             elif f.name is not None:
                 try:
-                    out[f.name] = _PARSE[f.kind](f, s4, off)
+                    out[f.name] = _PARSE[f.kind](f, raw, off)
                 except ValueError:
                     if not (head and f.kind == "lead"):
                         raise
             off += f.width
     return out
+
+
+def _field(name: str, width: int, kind: str, label: str, **kw) -> _F:
+    """A field whose decoded name is also its source key."""
+    return _F(name, name, width, kind, label, **kw)
+
+
+_DISCIPLINE = _F(None, None, 1, "u", "discipline")  # section 0's one field
+# Section 1: centre 74, subcentre 0, master/local tables 2/1, the
+# reference time is the start of the forecast; after it, production
+# status 0 (operational) and data type 1 (forecast).
+_S1 = _Section(1, "identification", (
+    _const(struct.pack(">HHBBB", 74, 0, 2, 1, 1)),
+    _field("reftime", 7, "date", "reference time"),
+    _const(b"\x00\x01"),
+))
+_S4 = _Section(
+    4,
+    "product definition",
+    (
+        _const(b"\x00\x00"),  # no coordinate values follow the template
+        _field("product_template", 2, "u", "product definition template"),
+    ),
+    _PDT,
+    # No lead or no surfaces on the template: None, never 4.0's lead 0.
+    blank=(
+        "forecast_hours", "level_type", "level_scale", "level_value",
+        "level2_type", "level2_scale", "level2_value",
+    ),
+)
+
+
+# --- section 5: data representation templates ------------------------------
+#
+# _DRT maps each template number to the (packing, spectral form) keys
+# that select it, with the parameters a key fixes; its blocks in octet
+# order; and its packing, which stays code because it is an algorithm.
+# ``encode(values, p)`` fills the section-5 fields into ``p`` and
+# returns the emitter of section 7's bytes, so section 5 packs first and
+# a bad width stops before any bit packing; ``decode(data, p)`` maps
+# section 7's data back to the values, ``p`` being the walker's dict.
+# Both sides add what the grid says: the spectral truncation, whether a
+# bitmap applies, and the grid shape (encode) or cell count (decode).
+# Every template that packs an X opens with 5.0's R/E/D/nbits head and
+# decodes it through _scale, Y = (R + X·2^E)/10^D; all but 5.2/5.3
+# (whose nbits is the group-reference width) go through _unscale, where
+# nbits 0 is a constant field.
+
+_SIMPLE_HEAD = (
+    _field("reference_value", 4, "f32", "reference value"),
+    _field("binary_scale", 2, "sm", "binary scale factor"),
+    _field("decimal_scale", 2, "sm", "decimal scale factor"),
+    _field("nbits", 1, "u", "nbits"),
+)
+_FLOAT = (_const(b"\x00"),)  # type of original field values: floating point
+# Group splitting method 1 (general), missing-value management (code
+# table 5.5) with its primary and secondary substitutes, then the group
+# descriptors: the reference and bit count of the widths and of the
+# lengths (the last group's length stands alone).
+_GROUPS = (
+    _const(b"\x01"),
+    _field("mvm", 1, "u", "missing value management"),
+    _F(None, "primary_substitute", 4, "f32", missing=True),
+    _field("secondary_substitute", 4, "f32", "secondary substitute",
+           missing=True),
+    _field("ng", 4, "u", "number of groups"),
+    _field("width_ref", 1, "u", "group width reference"),
+    _field("width_bits", 1, "u", "group width bits"),
+    _field("length_ref", 4, "u", "group length reference"),
+    _field("length_inc", 1, "u", "group length increment"),
+    _field("last_length", 4, "u", "last group length"),
+    _field("length_bits", 1, "u", "group length bits"),
+)
+# The differencing order and the octets each extra descriptor (the
+# initial values and the overall minimum) takes at the head of section 7.
+_DIFFERENCING = (
+    _field("order", 1, "u", "spatial differencing order"),
+    _field("ww", 1, "u", "extra descriptor octets"),
+)
+_PRECISION = (_field("precision", 1, "u", "IEEE precision"),)
+# Compression type (0 lossless, the one form decoded), then no target
+# compression ratio.
+_JPEG2000 = (
+    _field("compression", 1, "u", "JPEG2000 compression type", default=0),
+    _const(b"\xff"),
+)
+_AEC = (
+    _field("aec_flags", 1, "u", "AEC flags"),
+    _field("aec_block_size", 1, "u", "AEC block size"),
+    _field("aec_rsi", 2, "u", "AEC reference sample interval"),
+)
+_REAL_00 = (_field("real_00", 4, "f32", "real part of the (0,0) coefficient"),)
+# The Laplacian exponent P ×10^6, the JS/KS/MS sub-truncation and the
+# precision of the unpacked subset (code table 5.7).
+_LAPLACIAN = (
+    _F("laplacian", "laplacian_e6", 4, "sm", "Laplacian scaling exponent",
+       arg=(1 - (1 << 31), (1 << 31) - 1, 1e6)),
+    _field("js", 2, "u", "JS"),
+    _field("ks", 2, "u", "KS"),
+    _field("ms", 2, "u", "MS"),
+    _field("subset_precision", 1, "u", "unpacked-subset precision"),
+)
+_LOG = (_field("log_offset", 4, "f32", "pre-processing parameter B"),)
+# The code width, MV (the highest level the field uses), MVL and the
+# table's decimal scale, then the MVL scaled representative values.
+_RUN_LENGTH = (
+    _field("nbits", 1, "u", "nbits"),
+    _field("mv", 2, "u", "MV"),
+    _F("mvl", "rle_table", 2, "count", "level table size", arg="level values"),
+    _field("decimal_scale", 1, "sm", "decimal scale factor"),
+    _items("columns", "rle_table", "level values",
+           (_F("rle_table", None, 2, "u", "level value"),)),
+)
+
+
+def _quantize(vals: np.ndarray, p: dict, nbits: int) -> np.ndarray:
+    """Simple-packing quantization at ``nbits``: the stored R goes into
+    ``p``, the increments X come back."""
+    _, p["reference_value"], x = quantize_simple_packing(
+        vals, p["decimal_scale"], p["binary_scale"], nbits,
+        p["reference_value"], _f32_encode, _f32_encode_floor, _f32_decode,
+    )
+    return x
+
+
+def _scale(p: dict, x: np.ndarray) -> np.ndarray:
+    """Y = (R + X·2^E) / 10^D."""
+    return (
+        float(p["reference_value"])
+        + x.astype(np.float64) * (2.0 ** p["binary_scale"])
+    ) / (10.0 ** p["decimal_scale"])
+
+
+def _unscale(p: dict, read) -> np.ndarray:
+    """:func:`_scale` over the X ``read()`` returns.  A zero width is a
+    constant field whose stream is empty: every value is R / 10^D, and
+    ``read`` is never called."""
+    if p["nbits"] == 0:
+        return np.full(
+            p["n_present"],
+            float(p["reference_value"]) / (10.0 ** p["decimal_scale"]),
+        )
+    return _scale(p, read())
+
+
+def _simple_encode(vals: np.ndarray, p: dict):
+    x = _quantize(vals, p, p["nbits"])
+    return lambda: _pack_bits(x, p["nbits"])
+
+
+def _simple_decode(data: bytes, p: dict) -> np.ndarray:
+    return _unscale(p, lambda: _unpack_bits(data, p["n_present"], p["nbits"]))
+
+
+def _log_encode(vals: np.ndarray, p: dict):
+    """Z = ln(Y + B) simple-packs, so every present cell needs
+    Y + B > 0.  The transform uses the float32-ROUNDED B the wire
+    carries — like the reference value, which quantizes against its
+    f32-decoded form; a full-precision transform would leave a constant
+    |B - f32(B)| bias no nbits increase could remove."""
+    b = 0.0 if p["log_offset"] is None else float(np.float32(p["log_offset"]))
+    if np.isnan(vals).any():
+        raise ValueError(
+            "NaN cells need a bitmap (log packing transforms every "
+            "present cell)"
+        )
+    if (vals + b <= 0.0).any():
+        raise ValueError(
+            f"log packing needs Y + B > 0 for every present cell (B = {b})"
+        )
+    p["log_offset"] = b
+    return _simple_encode(np.log(vals + b), p)
+
+
+def _log_decode(data: bytes, p: dict) -> np.ndarray:
+    return np.exp(_simple_decode(data, p)) - float(p["log_offset"])
+
+
+def _aec_encode(vals: np.ndarray, p: dict):
+    """The increments CCSDS-encode with the GRIB-conventional parameters
+    (MSB, preprocessor on).  Quantizing at the caller's width matters:
+    nbits=0 with non-constant data must stop there, or the empty-stream
+    constant field would silently flatten it."""
+    from .aec import FLAG_MSB, FLAG_PREPROCESS, aec_encode
+
+    x = _quantize(vals, p, p["nbits"])
+    p["aec_flags"] = FLAG_MSB | FLAG_PREPROCESS
+    return lambda: b"" if p["nbits"] == 0 else aec_encode(
+        x, p["nbits"], flags=p["aec_flags"],
+        block_size=p["aec_block_size"], rsi=p["aec_rsi"],
+    )
+
+
+def _aec_decode(data: bytes, p: dict) -> np.ndarray:
+    from .aec import aec_decode
+
+    return _unscale(p, lambda: aec_decode(
+        bytes(data), p["n_present"], p["nbits"], flags=p["aec_flags"],
+        block_size=p["aec_block_size"], rsi=p["aec_rsi"],
+    ))
+
+
+def _spectral_encode(vals: np.ndarray, p: dict):
+    p["real_00"] = float(vals[0])
+    p["n_present"] = len(vals) - 1
+    return _simple_encode(vals[1:], p)
+
+
+def _spectral_decode(data: bytes, p: dict) -> np.ndarray:
+    if p["n_present"] != p["cells"] - 1:
+        raise ValueError(
+            f"T{p['truncation']} spectrum packs {p['cells'] - 1} values, "
+            f"section 5 declares {p['n_present']}"
+        )
+    return np.concatenate(([float(p["real_00"])], _simple_decode(data, p)))
+
+
+def _spectral_complex_encode(vals: np.ndarray, p: dict):
+    """The n <= TS sub-spectrum rides unpacked as IEEE-32 floats at the
+    head of section 7; every other value is multiplied by the Laplacian
+    weight (n(n+1))^P before simple packing — the weight flattens the
+    n^-k decay of spectral amplitudes, so fixed-width increments lose
+    far less precision.  The sub-spectrum holds n = 0, where the weight
+    is zero."""
+    ts = p["sub_truncation"]
+    deg2 = _spectral_degrees(p["truncation"])
+    sub = deg2 <= ts
+    dn = deg2[~sub].astype(np.float64)
+    rest = vals[~sub] * (dn * (dn + 1.0)) ** p["laplacian"]
+    p.update(
+        laplacian_e6=int(round(p["laplacian"] * 1e6)), js=ts, ks=ts, ms=ts,
+        subset_precision=1, n_present=len(rest),
+    )
+    emit = _simple_encode(rest, p)
+    return lambda: b"".join(_f32_encode(float(v)) for v in vals[sub]) + emit()
+
+
+def _spectral_complex_decode(data: bytes, p: dict) -> np.ndarray:
+    t, ts = p["truncation"], p["js"]
+    if not p["js"] == p["ks"] == p["ms"] or ts >= t:
+        raise ValueError(
+            f"only triangular sub-truncation below T supported "
+            f"(JS={p['js']}, KS={p['ks']}, MS={p['ms']}, T={t})"
+        )
+    if p["subset_precision"] != 1:
+        raise ValueError(
+            f"unsupported unpacked-subset precision {p['subset_precision']} "
+            "(only IEEE 32-bit)"
+        )
+    deg2 = _spectral_degrees(t)
+    sub = deg2 <= ts
+    n_sub = int(sub.sum())
+    if p["n_present"] != p["cells"] - n_sub:
+        raise ValueError(
+            f"TS={ts} sub-spectrum leaves {p['cells'] - n_sub} "
+            f"packed values, section 5 declares {p['n_present']}"
+        )
+    if len(data) < 4 * n_sub:
+        raise ValueError("truncated spectral sub-spectrum in section 7")
+    out = np.empty(p["cells"])
+    out[sub] = np.frombuffer(data, dtype=">f4", count=n_sub).astype(np.float64)
+    rest = _unscale(
+        p, lambda: _unpack_bits(data[4 * n_sub :], p["n_present"], p["nbits"])
+    )
+    dn = deg2[~sub].astype(np.float64)
+    out[~sub] = rest * (dn * (dn + 1.0)) ** (-p["laplacian"])
+    return out
+
+
+def _ieee_encode(vals: np.ndarray, p: dict):
+    """Values ride RAW: float32 precision loss is the caller's explicit
+    choice of packing, not a silent quantization, and NaN present cells
+    are as illegal as everywhere else (missing needs a bitmap)."""
+    if np.isnan(vals).any():
+        raise ValueError(
+            "NaN cells need a bitmap (template 5.4 packs raw floats)"
+        )
+    data = np.ascontiguousarray(vals, dtype=f">f{4 * p['precision']}").tobytes()
+    return lambda: data
+
+
+def _ieee_decode(data: bytes, p: dict) -> np.ndarray:
+    prec = p["precision"]
+    if prec not in (1, 2):
+        raise ValueError(
+            f"unsupported IEEE precision {prec} "
+            "(code table 5.7: 1 = binary32, 2 = binary64)"
+        )
+    p["nbits"] = 32 * prec
+    if len(data) < 4 * prec * p["n_present"]:
+        raise ValueError("truncated IEEE floating-point data section")
+    return np.frombuffer(
+        data, dtype=f">f{4 * prec}", count=p["n_present"]
+    ).astype(np.float64)
+
+
+def _raster_shape(p: dict, n: int) -> tuple:
+    """g2clib's jpcpack/pngpack layout: the full grid is the image; with
+    a bitmap the present values ride as one scanline."""
+    if p["shape"][1] is None:
+        raise ValueError(
+            "raster packings need a rectangular grid; use simple/complex"
+        )
+    return (1, n) if p["bitmap"] else p["shape"]
+
+
+def _raster_samples(what: str, samples: np.ndarray, n: int) -> np.ndarray:
+    x = samples.reshape(-1)
+    if len(x) != n:
+        raise ValueError(f"{what} raster holds {len(x)} samples, expected {n}")
+    return x
+
+
+def _j2k_encode(vals: np.ndarray, p: dict):
+    """One lossless raw JPEG2000 codestream (grid/jpeg2000.py).  An
+    all-masked field has no raster: nbits 0 and an empty section 7, the
+    constant-field convention."""
+    from .jpeg2000 import j2k_encode
+
+    shape = _raster_shape(p, len(vals))
+    x = _quantize(vals, p, 64)
+    need = 0 if len(vals) == 0 else max(int(x.max()).bit_length(), 1)
+    if need > 29:
+        raise ValueError(
+            f"increment range needs {need} bits — JPEG2000 packing caps at 29"
+        )
+    p["nbits"] = need
+    return lambda: b"" if need == 0 else j2k_encode(
+        x.reshape(shape).astype(np.int64), need
+    )
+
+
+def _j2k_decode(data: bytes, p: dict) -> np.ndarray:
+    from .jpeg2000 import j2k_decode
+
+    if p["compression"] != 0:
+        raise ValueError(
+            f"lossy JPEG2000 compression type {p['compression']} not supported"
+        )
+    return _unscale(p, lambda: _raster_samples(
+        "JPEG2000", j2k_decode(bytes(data))[0], p["n_present"]
+    ))
+
+
+def _png_encode(vals: np.ndarray, p: dict):
+    """One PNG image (grid/png.py): grayscale 8/16-bit, RGB for 24, RGBA
+    for 32, big-endian pixels — the g2clib/wgrib2 convention.  An
+    all-masked field is the constant field, as on 5.40."""
+    from .png import png_encode
+
+    shape = _raster_shape(p, len(vals))
+    x = _quantize(vals, p, 64)
+    need = int(x.max()).bit_length() if len(x) else 1
+    if need > 32:
+        raise ValueError(
+            f"increment range needs {need} bits — PNG packing caps at 32"
+        )
+    p["nbits"] = 0 if len(vals) == 0 else next(
+        b for b in (8, 16, 24, 32) if b >= max(need, 1)
+    )
+    return lambda: b"" if p["nbits"] == 0 else png_encode(
+        x.reshape(shape), p["nbits"]
+    )
+
+
+def _png_decode(data: bytes, p: dict) -> np.ndarray:
+    from .png import png_decode
+
+    return _unscale(p, lambda: _raster_samples(
+        "PNG", png_decode(bytes(data))[0], p["n_present"]
+    ))
+
+
+def _rle_encode(vals: np.ndarray, p: dict):
+    """No R/E/D quantization: the level table holds the MVL scaled
+    representative values (2-octet unsigned, physical = value /
+    10^decimal_scale), every present cell must BE a table value
+    exactly, NaN is level 0, and MV is the highest level this field
+    uses (the remaining code space 2^nbits − 1 − MV is the run-digit
+    base)."""
+    nbits, decimal_scale = p["nbits"], p["decimal_scale"]
+    if p["bitmap"]:
+        raise ValueError(
+            "run-length packing carries missing cells as level 0 "
+            "(no bitmap / missing-value management)"
+        )
+    if not 2 <= nbits <= 16:
+        raise ValueError(
+            f"run-length packing needs 2-16 bits per code, got {nbits}"
+        )
+    if not -126 <= decimal_scale <= 126:
+        raise ValueError(
+            f"decimal scale {decimal_scale} out of the one-octet "
+            "signed-magnitude range"
+        )
+    tbl = [int(t) for t in p["rle_table"]]
+    mvl = len(tbl)
+    if not 1 <= mvl <= (1 << nbits) - 2:
+        raise ValueError(
+            f"level table size {mvl} out of range 1-{(1 << nbits) - 2} "
+            f"for {nbits}-bit codes (one code is level 0, at least "
+            "one must remain for run digits)"
+        )
+    if any(not 0 <= t <= 0xFFFF for t in tbl):
+        raise ValueError("level-table entries are 2-octet unsigned")
+    if len(set(tbl)) != mvl:
+        raise ValueError("level-table entries must be distinct")
+    lookup = {t: k + 1 for k, t in enumerate(tbl)}
+    levels = np.zeros(len(vals), dtype=np.int64)
+    pres_mask = ~np.isnan(vals)
+    scaled = np.round(vals[pres_mask] * (10.0 ** decimal_scale))
+    exact = np.abs(vals[pres_mask] * (10.0 ** decimal_scale) - scaled)
+    if exact.size and float(exact.max()) > 1e-6:
+        raise ValueError(
+            "run-length packing is a LEVEL code: every present cell "
+            "must equal a table value exactly at the declared "
+            "decimal scale"
+        )
+    try:
+        levels[pres_mask] = [lookup[int(s)] for s in scaled]
+    except KeyError as exc:
+        raise ValueError(
+            f"cell value {int(exc.args[0])}/10^{decimal_scale} is "
+            "not in the level table"
+        ) from None
+    p.update(mv=int(levels.max()), rle_table=tbl)
+    codes = _rle_pack(levels, nbits, p["mv"])
+    return lambda: _pack_bits(codes, nbits)
+
+
+def _rle_decode(data: bytes, p: dict) -> np.ndarray:
+    nbits, mv, cells = p["nbits"], p["mv"], p["cells"]
+    if not 1 <= nbits <= 16:
+        raise ValueError(f"run-length code width {nbits} out of range 1-16")
+    # MV is the highest level THIS FIELD uses (codes above it are run
+    # digits); the table may define more levels than the field touches,
+    # so MVL >= MV is the usual shape — but a level the table can't
+    # resolve is checked after the stream decodes.
+    if mv > (1 << nbits) - 1:
+        raise ValueError(f"MV={mv} does not fit {nbits}-bit codes")
+    if p["bitmap"]:
+        # outside the JMA convention, and guessing the composition
+        # order would be silent corruption
+        raise ValueError(
+            "run-length packing (5.200) carries missing cells as "
+            "level 0, not a bitmap"
+        )
+    # the whole stream is nbits-wide codes; trailing byte-padding forms
+    # at most floor(7/nbits) phantom zero codes, which _rle_unpack
+    # accepts only as padding
+    codes = _unpack_bits(data, len(data) * 8 // nbits, nbits)
+    levels = _rle_unpack(codes, nbits, mv, cells)
+    if int(levels.max(initial=0)) > p["mvl"]:
+        raise ValueError(
+            f"run-length level {int(levels.max())} exceeds the "
+            f"{p['mvl']}-entry table"
+        )
+    out = np.full(cells, np.nan)
+    nz = levels > 0
+    table = np.asarray(p["rle_table"], dtype=np.float64)
+    out[nz] = table[levels[nz] - 1] / (10.0 ** p["decimal_scale"])
+    if p["n_present"] != cells:
+        raise ValueError(
+            f"section 5 declares {p['n_present']} points, the "
+            f"run-length grid has {cells}"
+        )
+    return out
+
+
+class _Drt(NamedTuple):
+    """One data representation template (see the section comment)."""
+
+    select: dict  # (packing, spectral form) -> the parameters it fixes
+    blocks: tuple
+    encode: object
+    decode: object
+
+
+_DRT = {
+    # Simple packing.
+    0: _Drt({("simple", None): {}}, (_SIMPLE_HEAD, _FLOAT),
+            _simple_encode, _simple_decode),
+    # Complex packing (general group splitting in ``group_len`` runs,
+    # optional missing-value management): 5.2 is 5.3 without the
+    # spatial differencing, the packing GFS and most operational GRIB2
+    # archives use.
+    2: _Drt({("complex", None): {"order": None}},
+            (_SIMPLE_HEAD, _FLOAT, _GROUPS), _complex_encode, _complex_decode),
+    3: _Drt({("complex_diff", None): {}},
+            (_SIMPLE_HEAD, _FLOAT, _GROUPS, _DIFFERENCING),
+            _complex_encode, _complex_decode),
+    # IEEE floating point: no reference value, scales or width; the
+    # precision (code table 5.7: 1 = binary32, 2 = binary64) is the
+    # whole template.
+    4: _Drt({("ieee32", None): {"precision": 1},
+             ("ieee64", None): {"precision": 2}},
+            (_PRECISION,), _ieee_encode, _ieee_decode),
+    # JPEG2000 and PNG: the scaled integer field as one image.
+    40: _Drt({("jpeg2000", None): {}}, (_SIMPLE_HEAD, _FLOAT, _JPEG2000),
+             _j2k_encode, _j2k_decode),
+    41: _Drt({("png", None): {}}, (_SIMPLE_HEAD, _FLOAT),
+             _png_encode, _png_decode),
+    # CCSDS 121.0 / AEC (grid/aec.py), the packing post-2022 NCEP GFS
+    # output ships: flags, block size, reference sample interval.
+    42: _Drt({("aec", None): {}}, (_SIMPLE_HEAD, _AEC),
+             _aec_encode, _aec_decode),
+    # Spectral simple packing, paired with grid 3.50 only: the (0,0)
+    # real part rides unpacked where 5.0 has the field-type octet.
+    50: _Drt({("simple", "truncation"): {}}, (_SIMPLE_HEAD, _REAL_00),
+             _spectral_encode, _spectral_decode),
+    # Spectral COMPLEX packing, the form operational IFS/ERA5 spectral
+    # archives use: a spectral dict with a sub_truncation selects it.
+    51: _Drt({("simple", "sub_truncation"): {}}, (_SIMPLE_HEAD, _LAPLACIAN),
+             _spectral_complex_encode, _spectral_complex_decode),
+    # Simple packing with logarithm pre-processing, the ECMWF
+    # precipitation form: B replaces the field-type octet.
+    61: _Drt({("log", None): {}}, (_SIMPLE_HEAD, _LOG),
+             _log_encode, _log_decode),
+    # Run length with level values, the JMA radar-composite packing
+    # (JMA Technical Information No. 215): no R/E/D head at all.
+    200: _Drt({("runlength", None): {}}, (_RUN_LENGTH,),
+              _rle_encode, _rle_decode),
+}
+_DRT_BY_KEY = {
+    key: (t, fixed) for t, d in _DRT.items() for key, fixed in d.select.items()
+}
+# The templates a spectral dict selects pair with grid 3.50 and nothing
+# else: their value sequence only means anything against its ordering.
+_SPECTRAL_DRT = frozenset(
+    t for t, d in _DRT.items() if any(form for _, form in d.select)
+)
+_S5 = _Section(5, "data representation", (
+    _field("n_present", 4, "u", "number of packed values"),
+    _field("packing_template", 2, "u", "data representation template"),
+), _DRT)
 
 
 def encode_grib2_message(
@@ -1950,7 +2494,10 @@ def encode_grib2_message(
     RGBA for 32, big-endian pixels, the g2clib/wgrib2 convention), or
     ``"jpeg2000"`` (5.40: the scaled integer field as one lossless raw
     JPEG2000 codestream, grid/jpeg2000.py — the packing most NCEP
-    GRIB2 products, e.g. GFS, actually ship).
+    GRIB2 products, e.g. GFS, actually ship), ``"ieee32"``/``"ieee64"``
+    (5.4), ``"aec"`` (5.42, with ``aec_block_size``/``aec_rsi``),
+    ``"log"`` (5.61, with ``log_offset`` as B) or ``"runlength"``
+    (5.200, with ``rle_table``); ``_DRT`` lists what selects each.
     ``missing_mask`` (bool, True = missing; complex only) encodes
     missing points via missing-value management 1 — in-data
     substitution instead of a section-6 bitmap.  ``secondary_mask``
@@ -1980,18 +2527,27 @@ def encode_grib2_message(
     coefficient must have zero imaginary part (validated — a synthesis
     would silently drop it).  Spectral data has no grid, bitmap or
     raster packing: only ``packing="simple"`` composes."""
+    # The data representation template: the packing and, for spectral
+    # data, the spectral key that names the form (_DRT's selectors).
+    form = None if spectral is None else (
+        "sub_truncation" if "sub_truncation" in spectral else "truncation"
+    )
+    if (packing, form) not in _DRT_BY_KEY:
+        raise ValueError(
+            f"unknown packing {packing!r}" if form is None
+            else "spectral data packs with template 5.50/5.51 (simple) only"
+        )
+    tmpl5, fixed = _DRT_BY_KEY[packing, form]
+    # A template-only kwarg (the masks, B, the level table) is refused
+    # unless the selected template has a field that carries it.
+    reads = {f.key for block in _DRT[tmpl5].blocks for f in block}
     spec_t: int | None = None
     spec_sub: int | None = None
     spec_p = 0.0
-    spec_unpacked: np.ndarray | None = None
     if spectral is not None:
         spec_t = int(spectral["truncation"])
         if spec_t < 1:
             raise ValueError("spectral truncation must be >= 1")
-        if packing != "simple":
-            raise ValueError(
-                "spectral data packs with template 5.50/5.51 (simple) only"
-            )
         if bitmap is not None or missing_mask is not None:
             raise ValueError("spectral data carries no bitmap/missing mask")
         if scanning_mode != 0x00:
@@ -2011,16 +2567,8 @@ def encode_grib2_message(
         vals[0::2] = c.real
         vals[1::2] = c.imag
         if "sub_truncation" in spectral:
-            # Template 5.51 (COMPLEX spectral packing — the form
-            # operational IFS/ERA5 spectral archives actually use):
-            # the low-wavenumber sub-spectrum (n <= TS, triangular)
-            # rides UNPACKED as IEEE-32 floats at the head of section
-            # 7, and every remaining value is multiplied by the
-            # Laplacian weight (n(n+1))^p BEFORE simple packing — the
-            # weight flattens the n^-k decay of spectral amplitudes so
-            # fixed-width increments lose far less precision.  The
-            # sub-spectrum must contain n = 0 (the weight is zero
-            # there) — guaranteed by 0 <= TS < T.
+            # Template 5.51: the sub-spectrum must contain n = 0, which
+            # 0 <= TS < T guarantees.
             spec_sub = int(spectral["sub_truncation"])
             spec_p = float(spectral.get("laplacian", 1.0))
             if not 0 <= spec_sub < spec_t:
@@ -2032,13 +2580,6 @@ def encode_grib2_message(
                 raise ValueError(
                     f"Laplacian scaling exponent {spec_p} out of range"
                 )
-            deg2 = _spectral_degrees(spec_t)
-            sub = deg2 <= spec_sub
-            spec_unpacked = vals[sub]
-            dn = deg2[~sub].astype(np.float64)
-            vals = np.concatenate(
-                (spec_unpacked, vals[~sub] * (dn * (dn + 1.0)) ** spec_p)
-            )
     else:
         vals = np.asarray(values, dtype=np.float64)
     reduced_arr: np.ndarray | None = None
@@ -2078,10 +2619,6 @@ def encode_grib2_message(
                 "missing_mask not supported on reduced grids "
                 "(use a bitmap)"
             )
-        if packing in ("png", "jpeg2000"):
-            raise ValueError(
-                "raster packings need a rectangular grid; use simple/complex"
-            )
     elif spec_t is None and vals.ndim != 2:
         raise ValueError("values must be (nj, ni)")
     if scanning_mode not in (0x00, 0x40):
@@ -2117,12 +2654,7 @@ def encode_grib2_message(
         raise ValueError("degenerate polar-stereographic true-scale latitude")
     if mercator is not None and not -90.0 < mercator["lad"] < 90.0:
         raise ValueError("degenerate Mercator true-scale latitude")
-    if packing not in (
-        "simple", "complex", "complex_diff", "png", "jpeg2000",
-        "ieee32", "ieee64", "log", "aec", "runlength",
-    ):
-        raise ValueError(f"unknown packing {packing!r}")
-    if (rle_table is not None) != (packing == "runlength"):
+    if (rle_table is not None) != ("rle_table" in reads):
         raise ValueError(
             "packing='runlength' and rle_table go together (the level "
             "table IS the quantization)"
@@ -2142,7 +2674,7 @@ def encode_grib2_message(
         else np.asarray(secondary_mask, dtype=bool)
     )
     if mm is not None or sm is not None:
-        if packing not in ("complex", "complex_diff"):
+        if "mvm" not in reads:
             raise ValueError(
                 "missing_mask/secondary_mask (missing-value management) "
                 "requires packing='complex' or 'complex_diff'"
@@ -2160,7 +2692,7 @@ def encode_grib2_message(
             )
     if sm is None and secondary_substitute is not None:
         raise ValueError("secondary_substitute requires secondary_mask")
-    if log_offset is not None and packing != "log":
+    if log_offset is not None and "log_offset" not in reads:
         raise ValueError("log_offset requires packing='log'")
     if (
         scanning_mode == 0x40
@@ -2177,340 +2709,25 @@ def encode_grib2_message(
         mm = None if mm is None else mm[::-1]
         sm = None if sm is None else sm[::-1]
     present = vals.reshape(-1)
-    if spec_sub is not None:
-        # Template 5.51: the scaled values past the unpacked
-        # sub-spectrum simple-pack; the sub-spectrum rides in section 7
-        # ahead of the bitstream.
-        present = present[len(spec_unpacked):]
-    elif spec_t is not None:
-        # Template 5.50: the (0,0) real coefficient rides unpacked in
-        # the template (IEEE-32); everything else simple-packs.
-        present = present[1:]
     if bm is not None:
         present = present[bm.reshape(-1)]
-    mm_flat = None if mm is None else mm.reshape(-1)
-    sm_flat = None if sm is None else sm.reshape(-1)
-    exclude = None
-    if mm_flat is not None or sm_flat is not None:
-        exclude = np.zeros(len(present), dtype=bool)
-        if mm_flat is not None:
-            exclude |= mm_flat
-        if sm_flat is not None:
-            exclude |= sm_flat
-        present = present[~exclude]
-    if packing in ("ieee32", "ieee64"):
-        # Template 5.4 (IEEE floating-point data): values ride RAW —
-        # no reference value, scales or quantization; octet 12 is the
-        # precision (code table 5.7: 1 = binary32, 2 = binary64).
-        # NaN present cells are as illegal as everywhere else (missing
-        # needs a bitmap), and float32 precision loss is the caller's
-        # explicit choice of packing, not a silent quantization.
-        if np.isnan(present).any():
-            raise ValueError(
-                "NaN cells need a bitmap (template 5.4 packs raw floats)"
-            )
-        if spec_t is not None:
-            raise ValueError(
-                "spectral data packs with template 5.50/5.51 (simple) only"
-            )
-        prec = 1 if packing == "ieee32" else 2
-        s5_body = (
-            struct.pack(">I", len(present))
-            + struct.pack(">H", 4)  # data representation template 5.4
-            + bytes([prec])
-        )
-        s7_body = np.ascontiguousarray(
-            present, dtype=">f4" if prec == 1 else ">f8"
-        ).tobytes()
-        r_bytes = b""  # unused below; 5.4 has no reference value
-    elif packing == "runlength":
-        # Template 5.200 (run length with level values — the JMA
-        # radar-composite packing): there is NO R/E/D quantization;
-        # ``rle_table`` holds the MVL scaled representative values
-        # (2-octet unsigned, physical = value / 10^decimal_scale),
-        # every present cell must BE a table value exactly, NaN is
-        # level 0, and MV is the highest level this field uses (the
-        # remaining code space 2^nbits − 1 − MV is the run-digit
-        # base).  Composes with the 4.20 radar products the way JMA
-        # composites ship.
-        if spec_t is not None:
-            raise ValueError(
-                "spectral data packs with template 5.50/5.51 (simple) only"
-            )
-        if bm is not None or mm is not None:
-            raise ValueError(
-                "run-length packing carries missing cells as level 0 "
-                "(no bitmap / missing-value management)"
-            )
-        if not 2 <= nbits <= 16:
-            raise ValueError(
-                f"run-length packing needs 2-16 bits per code, got {nbits}"
-            )
-        if not -126 <= decimal_scale <= 126:
-            raise ValueError(
-                f"decimal scale {decimal_scale} out of the one-octet "
-                "signed-magnitude range"
-            )
-        tbl = [int(t) for t in rle_table]
-        mvl = len(tbl)
-        if not 1 <= mvl <= (1 << nbits) - 2:
-            raise ValueError(
-                f"level table size {mvl} out of range 1-{(1 << nbits) - 2} "
-                f"for {nbits}-bit codes (one code is level 0, at least "
-                "one must remain for run digits)"
-            )
-        if any(not 0 <= t <= 0xFFFF for t in tbl):
-            raise ValueError("level-table entries are 2-octet unsigned")
-        if len(set(tbl)) != mvl:
-            raise ValueError("level-table entries must be distinct")
-        lookup = {t: k + 1 for k, t in enumerate(tbl)}
-        levels = np.zeros(len(present), dtype=np.int64)
-        pres_mask = ~np.isnan(present)
-        scaled = np.round(
-            present[pres_mask] * (10.0 ** decimal_scale)
-        )
-        exact = np.abs(
-            present[pres_mask] * (10.0 ** decimal_scale) - scaled
-        )
-        if exact.size and float(exact.max()) > 1e-6:
-            raise ValueError(
-                "run-length packing is a LEVEL code: every present cell "
-                "must equal a table value exactly at the declared "
-                "decimal scale"
-            )
-        try:
-            levels[pres_mask] = [lookup[int(s)] for s in scaled]
-        except KeyError as exc:
-            raise ValueError(
-                f"cell value {int(exc.args[0])}/10^{decimal_scale} is "
-                "not in the level table"
-            ) from None
-        mv = int(levels.max())
-        codes = _rle_pack(levels, nbits, mv)
-        s5_body = (
-            struct.pack(">I", len(present))
-            + struct.pack(">H", 200)  # data representation template
-            + bytes([nbits])
-            + struct.pack(">H", mv)
-            + struct.pack(">H", mvl)
-            + bytes(
-                [(0x80 | -decimal_scale) if decimal_scale < 0
-                 else decimal_scale]
-            )
-            + b"".join(struct.pack(">H", t) for t in tbl)
-        )
-        s7_body = _pack_bits(codes, nbits)
-        r_bytes = b""  # unused below; 5.200 has no reference value
-    else:
-        if packing == "log":
-            # Template 5.61 (simple packing with LOGARITHM
-            # pre-processing): Z = ln(Y + B) is what quantizes —
-            # flattening a dynamic range spanning decades (ECMWF
-            # precipitation-style products) into fixed-width
-            # increments.  Every present cell must satisfy Y + B > 0
-            # or the transform is undefined.
-            if spec_t is not None:
-                raise ValueError(
-                    "spectral data packs with template 5.50/5.51 "
-                    "(simple) only"
-                )
-            # transform with the float32-ROUNDED B the wire carries
-            # (section 5 stores IEEE-32) — like the reference value,
-            # which quantizes against its f32-decoded form; a full-
-            # precision transform would leave a constant |B - f32(B)|
-            # bias no nbits increase could remove
-            log_b = 0.0 if log_offset is None else float(
-                np.float32(log_offset)
-            )
-            if np.isnan(present).any():
-                raise ValueError(
-                    "NaN cells need a bitmap (log packing transforms "
-                    "every present cell)"
-                )
-            if (present + log_b <= 0.0).any():
-                raise ValueError(
-                    "log packing needs Y + B > 0 for every present "
-                    f"cell (B = {log_b})"
-                )
-            present = np.log(present + log_b)
-        # Complex packing computes per-group widths — the caller's
-        # nbits only constrains the SIMPLE/log/AEC templates; pass the
-        # quantizer a 64-bit ceiling otherwise.  Routing AEC through
-        # the width check matters: nbits=0 with non-constant data must
-        # stop here (the empty-stream constant-field convention would
-        # otherwise silently flatten the field).
-        q_nbits = nbits if packing in ("simple", "log", "aec") else 64
-        r_bytes, r, x = quantize_simple_packing(
-            present,
-            decimal_scale,
-            binary_scale,
-            q_nbits,
-            reference_value,
-            _f32_encode,
-            _f32_encode_floor,
-            _f32_decode,
-        )
-    if packing in ("ieee32", "ieee64", "runlength"):
-        pass  # s5/s7 bodies already built above
-    elif packing == "log":
-        # 5.61 keeps 5.0's R/E/D/width head; octets 21-24 carry B
-        # (IEEE-32) in place of 5.0's original-field-type octet.
-        s5_body = (
-            struct.pack(">I", len(present))
-            + struct.pack(">H", 61)  # data representation template 5.61
-            + r_bytes
-            + _s16be(binary_scale)
-            + _s16be(decimal_scale)
-            + bytes([nbits])
-            + struct.pack(">f", log_b)
-        )
-        s7_body = _pack_bits(x, nbits)
-    elif packing == "aec":
-        # Template 5.42: the scaled increments X CCSDS-encode with the
-        # GRIB-conventional parameters (MSB, preprocessor on) — the
-        # nbits=0 constant field keeps the empty-stream convention.
-        from .aec import FLAG_MSB, FLAG_PREPROCESS, aec_encode
-
-        aec_flags = FLAG_MSB | FLAG_PREPROCESS
-        s5_body = (
-            struct.pack(">I", len(present))
-            + struct.pack(">H", 42)  # data representation template 5.42
-            + r_bytes
-            + _s16be(binary_scale)
-            + _s16be(decimal_scale)
-            + bytes([nbits])
-            + bytes([aec_flags])
-            + bytes([aec_block_size])
-            + struct.pack(">H", aec_rsi)
-        )
-        s7_body = (
-            b""
-            if nbits == 0
-            else aec_encode(
-                x, nbits,
-                flags=aec_flags, block_size=aec_block_size, rsi=aec_rsi,
-            )
-        )
-    elif packing == "simple":
-        if spec_sub is not None:
-            # Template 5.51: Laplacian exponent ×10^6 (signed-
-            # magnitude), the JS/KS/MS sub-truncation and the
-            # precision of the unpacked subset (code table 5.7:
-            # 1 = IEEE 32-bit); section 7 leads with the unpacked
-            # sub-spectrum floats, then the packed bitstream.
-            tail = (
-                _s32be(int(round(spec_p * 1e6)))
-                + struct.pack(">HHH", spec_sub, spec_sub, spec_sub)
-                + bytes([1])
-            )
-            tmpl5_no = 51
-        elif spec_t is not None:
-            # 5.50 tails with the unpacked (0,0) real coefficient
-            # instead of 5.0's original-field-type octet
-            tail = _f32_encode(float(vals[0]))
-            tmpl5_no = 50
-        else:
-            tail = bytes([0])  # original field type: float
-            tmpl5_no = 0
-        s5_body = (
-            struct.pack(">I", len(present))
-            + struct.pack(">H", tmpl5_no)
-            + r_bytes
-            + _s16be(binary_scale)
-            + _s16be(decimal_scale)
-            + bytes([nbits])
-            + tail
-        )
-        s7_body = _pack_bits(x, nbits)
-        if spec_sub is not None:
-            s7_body = (
-                b"".join(_f32_encode(float(v)) for v in spec_unpacked)
-                + s7_body
-            )
-    elif packing == "jpeg2000":
-        from .jpeg2000 import j2k_encode
-
-        # An all-masked field has no raster to encode: nbits=0 + empty
-        # section 7 (the constant-field convention), decoded by the
-        # nbits==0 branch — never a zero-size image crash.
-        need = (
-            0
-            if len(present) == 0
-            else max(int(x.max()).bit_length(), 1)
-        )
-        if need > 29:
-            raise ValueError(
-                f"increment range needs {need} bits — JPEG2000 packing caps at 29"
-            )
-        # g2clib's jpcpack layout mirrors pngpack: the full grid is the
-        # image; with a bitmap the present values ride as one scanline.
-        shape = (1, len(present)) if bm is not None else (nj, ni)
-        s5_body = (
-            struct.pack(">I", len(present))
-            + struct.pack(">H", 40)  # data representation template 5.40
-            + r_bytes
-            + _s16be(binary_scale)
-            + _s16be(decimal_scale)
-            + bytes([need])
-            + bytes([0])  # original field type: float
-            + bytes([0])  # compression type: lossless
-            + bytes([255])  # target compression ratio: n/a (lossless)
-        )
-        s7_body = (
-            b"" if need == 0 else j2k_encode(x.reshape(shape).astype(np.int64), need)
-        )
-    elif packing == "png":
-        from .png import png_encode
-
-        need = int(x.max()).bit_length() if len(x) else 1
-        if need > 32:
-            raise ValueError(
-                f"increment range needs {need} bits — PNG packing caps at 32"
-            )
-        # An all-masked field has no raster: nbits=0 + empty section 7
-        # (constant-field convention), mirroring the JPEG2000 branch.
-        sample_bits = (
-            0
-            if len(present) == 0
-            else next(b for b in (8, 16, 24, 32) if b >= max(need, 1))
-        )
-        # g2clib's pngpack layout: the full grid is the image; with a
-        # bitmap, the present values pack as one ndpts×1 scanline.
-        shape = (1, len(present)) if bm is not None else (nj, ni)
-        s5_body = (
-            struct.pack(">I", len(present))
-            + struct.pack(">H", 41)  # data representation template 5.41
-            + r_bytes
-            + _s16be(binary_scale)
-            + _s16be(decimal_scale)
-            + bytes([sample_bits])
-            + bytes([0])  # original field type: float
-        )
-        s7_body = (
-            b"" if sample_bits == 0 else png_encode(x.reshape(shape), sample_bits)
-        )
-    else:
-        if exclude is not None:
-            x_full = np.zeros(len(exclude), dtype=np.int64)
-            x_full[~exclude] = x.astype(np.int64)
-        else:
-            x_full = x.astype(np.int64)
-        order = 0 if packing == "complex" else spatial_diff_order
-        s5_body, s7_body = _build_complex_s57(
-            x_full, mm_flat, r_bytes, binary_scale, decimal_scale,
-            group_len, order,
-            secondary=sm_flat, sub2_value=secondary_substitute,
-        )
-
-    def section(number_: int, body: bytes) -> bytes:
-        return struct.pack(">IB", 4 + 1 + len(body), number_) + body
-
-    s1 = section(
-        1,
-        struct.pack(">HHBBB", 74, 0, 2, 1, 1)  # centre, subcentre, tables, local, sig
-        + struct.pack(">HBBBBB", reftime[0], reftime[1], reftime[2], reftime[3], reftime[4], 0)
-        + bytes([0, 1]),  # production status, data type
-    )
+    p = {
+        "packing_template": tmpl5, "n_present": len(present),
+        "reference_value": reference_value, "binary_scale": binary_scale,
+        "decimal_scale": decimal_scale, "nbits": nbits,
+        "group_len": group_len, "order": spatial_diff_order,
+        "missing": None if mm is None else mm.reshape(-1),
+        "secondary": None if sm is None else sm.reshape(-1),
+        "secondary_substitute": secondary_substitute,
+        "log_offset": log_offset, "aec_block_size": aec_block_size,
+        "aec_rsi": aec_rsi, "rle_table": rle_table, "truncation": spec_t,
+        "sub_truncation": spec_sub, "laplacian": spec_p,
+        "shape": (nj, ni), "bitmap": bm is not None, **fixed,
+    }
+    emit = _DRT[tmpl5].encode(present, p)
+    s5 = _pack_section(_S5, p)
+    s7 = _frame(7, emit())
+    s1 = _pack_section(_S1, {"reftime": reftime})
     earth = (
         bytes([6, 0xFF])  # shape of earth: spherical r=6371229 m, no scale
         + b"\xff\xff\xff\xff"  # scaled radius (missing)
@@ -2524,7 +2741,7 @@ def encode_grib2_message(
         # kind), mode 1 (the standard complex ordering m = 0..M,
         # n = m..J).  Section 3's point count holds the number of
         # COMPLEX coefficients; there is no optional list.
-        s3 = section(
+        s3 = _frame(
             3,
             bytes([0])
             + struct.pack(">I", nj)  # (T+1)(T+2)/2 complex coefficients
@@ -2563,7 +2780,7 @@ def encode_grib2_message(
             + struct.pack(">I", int(round(mercator["dx_m"] * 1e3)))
             + struct.pack(">I", int(round(mercator["dy_m"] * 1e3)))
         )
-        s3 = section(
+        s3 = _frame(
             3,
             bytes([0])
             + struct.pack(">I", ni * nj)
@@ -2591,7 +2808,7 @@ def encode_grib2_message(
             + bytes([0])  # projection centre: north pole
             + bytes([scanning_mode])
         )
-        s3 = section(
+        s3 = _frame(
             3,
             bytes([0])
             + struct.pack(">I", ni * nj)
@@ -2623,7 +2840,7 @@ def encode_grib2_message(
             + _s32be(-90_000_000)  # south pole of projection
             + _s32be(0)
         )
-        s3 = section(
+        s3 = _frame(
             3,
             bytes([0])
             + struct.pack(">I", ni * nj)
@@ -2653,7 +2870,7 @@ def encode_grib2_message(
             + struct.pack(">I", nj // 2)  # N
             + bytes([scanning_mode])
         )
-        s3 = section(
+        s3 = _frame(
             3,
             bytes([0])
             + struct.pack(">I", int(reduced_arr.sum()))
@@ -2724,7 +2941,7 @@ def encode_grib2_message(
                     ">I", int(round(float(stretched["factor"]) * 1e6))
                 )
             )
-        s3 = section(
+        s3 = _frame(
             3,
             bytes([0])
             + struct.pack(">I", ni * nj)
@@ -2932,26 +3149,22 @@ def encode_grib2_message(
         raise ValueError(
             f"no product definition template combines {' + '.join(sorted(key))}"
         )
-    src = dict(
+    s4 = _pack_section(_S4, dict(
         products, category=category, number=number, forecast=forecast,
         level=dict(type=level_type, scale=level_scale, value=level_value),
-        level2=level2,
-    )
-    s4 = section(
-        4,
-        struct.pack(">HH", 0, tmpl4)  # no coordinate values; the template
-        + b"".join(_pack_fields(block, src) for block in _PDT[tmpl4][1]),
-    )
-    s5 = section(5, s5_body)
+        level2=level2, product_template=tmpl4,
+    ))
     if bm is not None:
         bm_bits = np.packbits(bm.reshape(-1).astype(np.uint8)).tobytes()
-        s6 = section(6, bytes([0]) + bm_bits)
+        s6 = _frame(6, bytes([0]) + bm_bits)
     else:
-        s6 = section(6, bytes([255]))
-    s7 = section(7, s7_body)
+        s6 = _frame(6, bytes([255]))
     body = s1 + s3 + s4 + s5 + s6 + s7
     total = 16 + len(body) + 4
-    s0 = MAGIC + bytes([0, 0, discipline, EDITION]) + struct.pack(">Q", total)
+    s0 = (
+        MAGIC + bytes([0, 0]) + _pack_u(_DISCIPLINE, discipline)
+        + bytes([EDITION]) + struct.pack(">Q", total)
+    )
     return s0 + body + TERMINATOR
 
 
@@ -3291,10 +3504,9 @@ def decode_grib2(msg: bytes) -> Grib2Record:
     regular AND reduced per-row-Ni form), 3.50 (spherical harmonic
     coefficients, triangular), plus the rotated/stretched lat/lon
     forms 3.1/3.2/3.3; every product template of the ``_PDT`` table
-    (the record's ``product_template`` carries the number); data
-    representation templates 5.0 (simple), 5.2/5.3 (complex ±
-    spatial differencing), 5.40 (JPEG2000), 5.41 (PNG), 5.50/5.51
-    (spectral simple/complex packing — must pair with 3.50).  Everything
+    (the record's ``product_template`` carries the number) and every
+    data representation template of the ``_DRT`` table (its
+    ``packing_template``; 5.50/5.51 must pair with 3.50).  Everything
     else raises — including multi-field messages, which this strict
     single-record API rejects via ``_sections``; use
     :func:`decode_grib2_fields` for those."""
@@ -3308,10 +3520,7 @@ def _decode_field(s: dict[int, bytes]) -> Grib2Record:
     """Decode one field from its resolved section dict (the shared body
     of :func:`decode_grib2` and :func:`decode_grib2_fields`)."""
     discipline = s[0][6]
-
-    s1 = s[1]
-    year, = struct.unpack_from(">H", s1, 12)
-    reftime = (year, s1[14], s1[15], s1[16], s1[17])
+    reftime = _parse_section(_S1, s[1])["reftime"]
 
     s3 = s[3]
     (tmpl_no,) = struct.unpack_from(">H", s3, 12)
@@ -3643,78 +3852,18 @@ def _decode_field(s: dict[int, bytes]) -> Grib2Record:
                     lambert_params["kind"] = "stretched_rotated"
                     lambert_params.update(st)
 
-    pdt = _parse_pdt(s[4])
+    pdt = _parse_section(_S4, s[4])
 
-    s5 = s[5]
-    (tmpl5,) = struct.unpack_from(">H", s5, 9)
-    if tmpl5 not in (0, 2, 3, 4, 40, 41, 42, 50, 51, 61, 200):
-        raise ValueError(f"unsupported data representation template {tmpl5}")
-    # Spectral grid ↔ spectral packing must pair: 5.50/5.51's value
-    # sequence only means anything against 3.50's coefficient ordering,
-    # and a gridded raster packed "as spectral" (or vice versa) would
-    # decode a garbage field with plausible statistics.
-    if (tmpl5 in (50, 51)) != (spectral_truncation is not None):
+    # Spectral grid <-> spectral packing must pair: a gridded raster
+    # packed "as spectral" (or vice versa) would decode a garbage field
+    # with plausible statistics.
+    tmpl5 = _template_number(_S5, s[5])
+    if (tmpl5 in _SPECTRAL_DRT) != (spectral_truncation is not None):
         raise ValueError(
             f"grid definition template {tmpl_no} cannot pair with data "
             f"representation template {tmpl5}"
         )
-    (n_present,) = struct.unpack_from(">I", s5, 5)
-    ieee_precision = None
-    if tmpl5 == 4:
-        # Template 5.4 (IEEE floating-point data): NO reference value,
-        # scales or width octets — octet 12 is the precision (code
-        # table 5.7).  Reading the 5.0 layout here would decode float
-        # bytes as R/E/D and mis-slice section 7.
-        if len(s5) < 12:
-            raise ValueError("truncated data representation template 5.4")
-        ieee_precision = s5[11]
-        if ieee_precision not in (1, 2):
-            raise ValueError(
-                f"unsupported IEEE precision {ieee_precision} "
-                "(code table 5.7: 1 = binary32, 2 = binary64)"
-            )
-        r = 0.0
-        binary_scale = decimal_scale = 0
-        nbits = 32 * ieee_precision
-    elif tmpl5 == 200:
-        # Template 5.200 (run length with level values — JMA radar
-        # composites): NO reference value or binary scale — octet 12
-        # is the code width, 13-14 MV (highest level used), 15-16 MVL
-        # (table size), 17 the one-octet signed-magnitude decimal
-        # scale, then the MVL 2-octet scaled representative values.
-        # Reading the 5.0 layout here would decode the table as R/E/D.
-        if len(s5) < 17:
-            raise ValueError("truncated data representation template 5.200")
-        nbits = s5[11]
-        (rle_mv,) = struct.unpack_from(">H", s5, 12)
-        (rle_mvl,) = struct.unpack_from(">H", s5, 14)
-        if not 1 <= nbits <= 16:
-            raise ValueError(
-                f"run-length code width {nbits} out of range 1-16"
-            )
-        # MV is the highest level THIS FIELD uses (codes above it are
-        # run digits); the table may define more levels than the field
-        # touches, so MVL >= MV is the usual shape — but a level the
-        # table can't resolve is checked after the stream decodes.
-        if rle_mv > (1 << nbits) - 1:
-            raise ValueError(
-                f"MV={rle_mv} does not fit {nbits}-bit codes"
-            )
-        decimal_scale = (
-            -(s5[16] & 0x7F) if s5[16] & 0x80 else s5[16]
-        )
-        if len(s5) < 17 + 2 * rle_mvl:
-            raise ValueError("truncated run-length level table")
-        rle_table = np.frombuffer(
-            s5, dtype=">u2", count=rle_mvl, offset=17
-        ).astype(np.float64)
-        r = 0.0
-        binary_scale = 0
-    else:
-        (r,) = struct.unpack_from(">f", s5, 11)
-        binary_scale = _rs16be(s5, 15)
-        decimal_scale = _rs16be(s5, 17)
-        nbits = s5[19]
+    p = _parse_section(_S5, s[5])
 
     s6 = s[6]
     if len(s6) < 6:
@@ -3744,224 +3893,11 @@ def _decode_field(s: dict[int, bytes]) -> Grib2Record:
         bitmap = bits.astype(bool)
     elif s6[5] != 255:
         raise ValueError(f"unsupported bitmap indicator {s6[5]}")
-    if bitmap is not None and tmpl5 == 200:
-        # 5.200 carries its missing cells as level 0 — a bitmap on top
-        # is outside the JMA convention, and guessing the composition
-        # order would be silent corruption
-        raise ValueError(
-            "run-length packing (5.200) carries missing cells as "
-            "level 0, not a bitmap"
-        )
-
-    s7 = s[7]
-    spectral_sub: int | None = None
-    if tmpl5 == 51:
-        # Template 5.51/7.51 (COMPLEX spectral packing — the
-        # operational IFS/ERA5 form): the n <= TS sub-spectrum rides
-        # UNPACKED as IEEE-32 floats at the head of section 7; every
-        # other value was multiplied by the Laplacian weight
-        # (n(n+1))^p before simple packing, so decode divides it back
-        # out.  Octets 21-24: p ×10^6 signed-magnitude; 25-30:
-        # JS/KS/MS (triangular TS here); 31: precision of the
-        # unpacked subset (code table 5.7; only 1 = IEEE 32-bit).
-        if len(s5) < 31:
-            raise ValueError("truncated data representation template 5.51")
-        lap_p = _rs32be(s5, 20) / 1e6
-        (sub_j,) = struct.unpack_from(">H", s5, 24)
-        (sub_k,) = struct.unpack_from(">H", s5, 26)
-        (sub_m,) = struct.unpack_from(">H", s5, 28)
-        if not (sub_j == sub_k == sub_m) or sub_j >= spectral_truncation:
-            raise ValueError(
-                f"only triangular sub-truncation below T supported "
-                f"(JS={sub_j}, KS={sub_k}, MS={sub_m}, "
-                f"T={spectral_truncation})"
-            )
-        if s5[30] != 1:
-            raise ValueError(
-                f"unsupported unpacked-subset precision {s5[30]} "
-                "(only IEEE 32-bit)"
-            )
-        spectral_sub = int(sub_j)
-        deg2 = _spectral_degrees(spectral_truncation)
-        sub = deg2 <= sub_j
-        n_sub = int(sub.sum())
-        if n_present != total_cells - n_sub:
-            raise ValueError(
-                f"TS={sub_j} sub-spectrum leaves {total_cells - n_sub} "
-                f"packed values, section 5 declares {n_present}"
-            )
-        if len(s7) < 5 + 4 * n_sub:
-            raise ValueError("truncated spectral sub-spectrum in section 7")
-        unpacked = np.frombuffer(
-            s7, dtype=">f4", count=n_sub, offset=5
-        ).astype(np.float64)
-        if nbits:
-            x = _unpack_bits(s7[5 + 4 * n_sub :], n_present, nbits)
-            rest = (
-                float(r) + x.astype(np.float64) * (2.0 ** binary_scale)
-            ) / (10.0 ** decimal_scale)
-        else:
-            rest = np.full(n_present, float(r) / (10.0 ** decimal_scale))
-        dn = deg2[~sub].astype(np.float64)
-        present_vals = np.empty(total_cells)
-        present_vals[sub] = unpacked
-        present_vals[~sub] = rest * (dn * (dn + 1.0)) ** (-lap_p)
-    elif tmpl5 == 50:
-        # Template 5.50/7.50 (spectral data simple packing): the (0,0)
-        # real coefficient rides UNPACKED as an IEEE-32 float in the
-        # template (octets 21-24); every other value of the mode-1
-        # sequence simple-packs in section 7.
-        if len(s5) < 24:
-            raise ValueError("truncated data representation template 5.50")
-        if n_present != total_cells - 1:
-            raise ValueError(
-                f"T{spectral_truncation} spectrum packs {total_cells - 1} "
-                f"values, section 5 declares {n_present}"
-            )
-        (re00,) = struct.unpack_from(">f", s5, 20)
-        if nbits:
-            x = _unpack_bits(s7[5:], n_present, nbits)
-            rest = (
-                float(r) + x.astype(np.float64) * (2.0 ** binary_scale)
-            ) / (10.0 ** decimal_scale)
-        else:
-            rest = np.full(n_present, float(r) / (10.0 ** decimal_scale))
-        present_vals = np.concatenate(([float(re00)], rest))
-    elif tmpl5 == 0:
-        if nbits:
-            x = _unpack_bits(s7[5:], n_present, nbits)
-            present_vals = (
-                float(r) + x.astype(np.float64) * (2.0 ** binary_scale)
-            ) / (10.0 ** decimal_scale)
-        else:
-            present_vals = np.full(n_present, float(r) / (10.0 ** decimal_scale))
-    elif tmpl5 == 42:
-        # Template 5.42 (CCSDS 121.0 / AEC — the lossless Rice coding
-        # NCEP adopted for operational GFS output; grid/aec.py is the
-        # from-scratch codec): octet 21 the CCSDS flags mask, 22 the
-        # block size, 23-24 the reference sample interval.
-        from .aec import aec_decode
-
-        if len(s5) < 24:
-            raise ValueError("truncated data representation template 5.42")
-        aec_flags, aec_block = s5[20], s5[21]
-        (aec_rsi,) = struct.unpack_from(">H", s5, 22)
-        if nbits == 0:  # constant field: empty stream, value is R/10^D
-            present_vals = np.full(
-                n_present, float(r) / (10.0 ** decimal_scale)
-            )
-        else:
-            x = aec_decode(
-                bytes(s7[5:]), n_present, nbits,
-                flags=aec_flags, block_size=aec_block, rsi=aec_rsi,
-            )
-            present_vals = (
-                float(r) + x.astype(np.float64) * (2.0 ** binary_scale)
-            ) / (10.0 ** decimal_scale)
-    elif tmpl5 == 61:
-        # Template 5.61 (simple packing with LOGARITHM PRE-PROCESSING
-        # — ECMWF precipitation-style products whose dynamic range
-        # spans decades): Z = ln(Y + B) simple-packs; octets 21-24
-        # carry the pre-processing parameter B (IEEE-32).  Decode
-        # inverts: Y = exp((R + X·2^E)/10^D) − B.
-        if len(s5) < 24:
-            raise ValueError("truncated data representation template 5.61")
-        (log_b,) = struct.unpack_from(">f", s5, 20)
-        if nbits:
-            x = _unpack_bits(s7[5:], n_present, nbits)
-            z = (
-                float(r) + x.astype(np.float64) * (2.0 ** binary_scale)
-            ) / (10.0 ** decimal_scale)
-        else:
-            z = np.full(n_present, float(r) / (10.0 ** decimal_scale))
-        present_vals = np.exp(z) - float(log_b)
-    elif tmpl5 == 4:
-        width = 4 * ieee_precision
-        if len(s7) < 5 + width * n_present:
-            raise ValueError("truncated IEEE floating-point data section")
-        present_vals = np.frombuffer(
-            s7,
-            dtype=">f4" if ieee_precision == 1 else ">f8",
-            count=n_present,
-            offset=5,
-        ).astype(np.float64)
-    elif tmpl5 == 200:
-        # the whole stream is nbits-wide codes; trailing byte-padding
-        # forms at most floor(7/nbits) phantom zero codes, which
-        # _rle_unpack accepts only as padding
-        n_codes = (len(s7) - 5) * 8 // nbits
-        codes = _unpack_bits(s7[5:], n_codes, nbits)
-        levels = _rle_unpack(codes, nbits, rle_mv, total_cells)
-        if int(levels.max(initial=0)) > rle_mvl:
-            raise ValueError(
-                f"run-length level {int(levels.max())} exceeds the "
-                f"{rle_mvl}-entry table"
-            )
-        present_vals = np.full(total_cells, np.nan)
-        nz = levels > 0
-        present_vals[nz] = rle_table[levels[nz] - 1] / (
-            10.0 ** decimal_scale
-        )
-        if n_present != total_cells:
-            raise ValueError(
-                f"section 5 declares {n_present} points, the "
-                f"run-length grid has {total_cells}"
-            )
-    elif tmpl5 == 41:
-        from .png import png_decode
-
-        if nbits == 0:  # constant field: empty raster, value is R/10^D
-            present_vals = np.full(n_present, float(r) / (10.0 ** decimal_scale))
-            samples = None
-        else:
-            samples, _ = png_decode(bytes(s7[5:]))
-        if samples is not None:
-            x = samples.reshape(-1)
-            if len(x) != n_present:
-                raise ValueError(
-                    f"PNG raster holds {len(x)} samples, expected {n_present}"
-                )
-            present_vals = (
-                float(r) + x.astype(np.float64) * (2.0 ** binary_scale)
-            ) / (10.0 ** decimal_scale)
-    elif tmpl5 == 40:
-        from .jpeg2000 import j2k_decode
-
-        if s5[21] != 0:
-            raise ValueError(
-                f"lossy JPEG2000 compression type {s5[21]} not supported"
-            )
-        if nbits == 0:
-            present_vals = np.full(n_present, float(r) / (10.0 ** decimal_scale))
-        else:
-            samples, _depth = j2k_decode(bytes(s7[5:]))
-            x = samples.reshape(-1)
-            if len(x) != n_present:
-                raise ValueError(
-                    f"JPEG2000 raster holds {len(x)} samples, expected {n_present}"
-                )
-            present_vals = (
-                float(r) + x.astype(np.float64) * (2.0 ** binary_scale)
-            ) / (10.0 ** decimal_scale)
-    else:
-        x, miss, miss2 = _decode_complex_s7(s5, s7, tmpl5, n_present)
-        present_vals = (
-            float(r) + x.astype(np.float64) * (2.0 ** binary_scale)
-        ) / (10.0 ** decimal_scale)
-        present_vals[miss] = np.nan
-        if miss2.any():
-            # SECONDARY missing (mvm=2): the producer's declared
-            # substitute (section 5 octets 28-31) is what those points
-            # MEAN (e.g. "below detection threshold" radar returns) —
-            # landing it preserves information NaN would destroy;
-            # a coded-missing substitute falls back to NaN like the
-            # primary kind.
-            sub2_raw = s5[27:31]
-            present_vals[miss2] = (
-                np.nan
-                if sub2_raw == b"\xff\xff\xff\xff"
-                else struct.unpack(">f", sub2_raw)[0]
-            )
+    p.update(
+        cells=total_cells, truncation=spectral_truncation,
+        bitmap=bitmap is not None,
+    )
+    present_vals = _DRT[tmpl5].decode(s[7][5:], p)
 
     if bitmap is not None:
         values = np.full(total_cells, np.nan)
@@ -3990,10 +3926,10 @@ def _decode_field(s: dict[int, bytes]) -> Grib2Record:
         lon_first_udeg=lon_first,
         dlat_udeg=dlat,
         dlon_udeg=dlon,
-        decimal_scale=decimal_scale,
-        binary_scale=binary_scale,
-        reference_value=float(r),
-        nbits=nbits,
+        decimal_scale=p.get("decimal_scale", 0),
+        binary_scale=p.get("binary_scale", 0),
+        reference_value=float(p.get("reference_value", 0.0)),
+        nbits=p["nbits"],
         values=values,
         packing_template=tmpl5,
         gaussian_n=gaussian_n,
@@ -4002,7 +3938,7 @@ def _decode_field(s: dict[int, bytes]) -> Grib2Record:
         lambert_params=lambert_params,
         row_ni=row_ni,
         spectral_truncation=spectral_truncation,
-        spectral_sub_truncation=spectral_sub,
+        spectral_sub_truncation=p.get("js"),
         **pdt,
     )
 
@@ -4021,9 +3957,8 @@ def _field_inventory(s: dict[int, bytes]) -> str:
     A missing surface renders ``-``; a non-hour-convertible lead
     (calendar units) renders ``f-`` — LISTED, like wgrib2 lists every
     record, but never selected by an ``:f6$``-style match."""
-    s1 = s[1]
-    (year,) = struct.unpack_from(">H", s1, 12)
-    h = _parse_pdt(s[4], head=True)
+    year, month, day, hour, _ = _parse_section(_S1, s[1])["reftime"]
+    h = _parse_section(_S4, s[4], head=True)
     # lenient TEXT rendering: fractional surfaces (sigma 0.995) list as
     # their exact decimal instead of aborting the inventory — the loud
     # stop lives in the decode path (surface_level)
@@ -4034,7 +3969,7 @@ def _field_inventory(s: dict[int, bytes]) -> str:
     return (
         f"d{s[0][6]}:c{h['category']},n{h['number']}:"
         f"l{'-' if lt is None else lt}/{lvs}:"
-        f"{year:04d}{s1[14]:02d}{s1[15]:02d}{s1[16]:02d}"
+        f"{year:04d}{month:02d}{day:02d}{hour:02d}"
         f":f{'-' if fh is None else fh}"
     )
 

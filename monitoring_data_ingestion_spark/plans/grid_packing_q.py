@@ -820,7 +820,7 @@ def grid_grib2_aec_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle; at 100 TB, 5.42 is why a post-2022 NCEP archive scan
     reads the producer's actual bytes (GFS moved to AEC), and the
     pure-Python block decoder is the same swap-in CPU constant as the
-    complex unpacker (grib2._decode_complex_s7 docstring).
+    complex unpacker (grib2._complex_decode docstring).
     """
     import numpy as np
 

@@ -236,13 +236,15 @@ def _grib2_field_header(s: dict) -> dict:
 
     from ..grid.grib2 import (
         _GRID_TEMPLATES,
-        _parse_pdt,
+        _S1,
+        _S4,
+        _parse_section,
         surface_level_lenient,
         surface_level_text,
     )
 
-    s1, s3 = s[1], s[3]
-    (year,) = struct.unpack_from(">H", s1, 12)
+    s3 = s[3]
+    year, month, day, hour, _ = _parse_section(_S1, s[1])["reftime"]
     # Mirror decode_grib2's template gates: reading Ni/Nj or level
     # octets through a different template's layout would emit garbage
     # metadata exactly where the full decode stops loudly.
@@ -254,7 +256,7 @@ def _grib2_field_header(s: dict) -> dict:
     # sub-hour lead cannot fill the integer column, but the inventory
     # must still LIST the record (wgrib2 lists every record of a mixed
     # archive), so it reads None; the full decode keeps the loud stop.
-    h = _parse_pdt(s[4], head=True)
+    h = _parse_section(_S4, s[4], head=True)
     if tmpl3 == 50:
         # Spectral records have no Ni/Nj — the inventory LISTS them
         # (wgrib2 lists spectral fields) with NULL dimensions; only the
@@ -297,9 +299,9 @@ def _grib2_field_header(s: dict) -> dict:
         ),
         "forecast_hours": h["forecast_hours"],
         "year": year,
-        "month": s1[14],
-        "day": s1[15],
-        "hour": s1[16],
+        "month": month,
+        "day": day,
+        "hour": hour,
         "ni": ni,
         "nj": nj,
         # bytes attributable to the field: its sections plus the

@@ -1488,6 +1488,102 @@ def test_foreign_log_grib2_decodes_to_pinned_values():
     np.testing.assert_allclose(rec.values, np.exp(z) - 2.0, rtol=0, atol=0)
 
 
+def _foreign_grib2_spectral(truncation: int, sec5: bytes, data: bytes) -> bytes:
+    """The base message's sections 1 and 4 around a hand-assembled grid
+    template 3.50 (spherical harmonic coefficients): J = K = M = T
+    (triangular), representation type 1 (associated Legendre), mode 1
+    (m = 0..T, n = m..T), section 3's point count the number of complex
+    coefficients; no bitmap."""
+    base = _foreign_grib2()
+    sec1 = base[16 : 16 + 21]
+    sec4 = base[16 + 21 + 72 : 16 + 21 + 72 + 34]
+    sec3 = (
+        struct.pack(">IB", 28, 3)
+        + bytes([0])  # source of grid definition
+        + struct.pack(">I", (truncation + 1) * (truncation + 2) // 2)
+        + bytes([0, 0])  # no optional list
+        + struct.pack(">H", 50)  # template 3.50
+        + struct.pack(">III", truncation, truncation, truncation)  # J, K, M
+        + bytes([1, 1])  # representation type 1, mode 1
+    )
+    assert len(sec3) == 28
+    sec6 = struct.pack(">IB", 6, 6) + bytes([255])
+    sec7 = struct.pack(">IB", 5 + len(data), 7) + data
+    body = sec1 + sec3 + sec4 + sec5 + sec6 + sec7
+    total = 16 + len(body) + 4
+    return b"GRIB" + bytes([0, 0, 0, 2]) + struct.pack(">Q", total) + body + b"7777"
+
+
+def test_foreign_spectral_simple_grib2_5_50_decodes():
+    """Foreign-bytes witness for template 5.50 (spectral simple packing)
+    on grid 3.50, T = 1: the real part of C(0,0) rides unpacked as an
+    IEEE float in section 5 octets 21-24; the other five reals of the
+    mode-1 sequence (im00, re01, im01, re11, im11) simple-pack with
+    R = -2.0, E = 0, D = 1 at 8 bits: X = [2, 37, 2, 7, 0] ->
+    Y = (X - 2)/10 = [0, 3.5, 0, 0.5, -0.2]."""
+    from monitoring_data_ingestion_spark.grid.grib2 import decode_grib2
+
+    sec5 = (
+        struct.pack(">IB", 24, 5)
+        + struct.pack(">I", 5)  # packed values: all but re00
+        + struct.pack(">H", 50)  # data representation template 5.50
+        + bytes([0xC0, 0x00, 0x00, 0x00])  # R = -2.0 IEEE 754
+        + bytes([0x00, 0x00])  # E = 0
+        + bytes([0x00, 0x01])  # D = +1
+        + bytes([8])  # bits per value
+        + bytes([0x41, 0x48, 0x00, 0x00])  # re00 = +12.5 IEEE 754
+    )
+    assert len(sec5) == 24
+    rec = decode_grib2(_foreign_grib2_spectral(1, sec5, bytes([2, 37, 2, 7, 0])))
+    assert rec.packing_template == 50
+    assert (rec.spectral_truncation, rec.spectral_sub_truncation) == (1, None)
+    assert (rec.nj, rec.ni) == (3, None)
+    np.testing.assert_allclose(
+        rec.spectral_coeffs, [12.5, 3.5, 0.5 - 0.2j], rtol=0, atol=1e-12
+    )
+
+
+def test_foreign_spectral_complex_grib2_5_51_decodes():
+    """Foreign-bytes witness for template 5.51 (spectral complex
+    packing) on grid 3.50, T = 2, JS = KS = MS = 1: the six reals of the
+    n <= 1 coefficients (0,0), (0,1), (1,1) ride unpacked as IEEE floats
+    at the head of section 7; the six reals of the n = 2 coefficients
+    (0,2), (1,2), (2,2) simple-pack (R = 0, E = 0, D = 0, 6 bits) after
+    the Laplacian weight (n(n+1))^P with P = 1 (octets 21-24 hold
+    P x 10^6): X = [6, 0, 12, 3, 30, 60] -> X / 6."""
+    from monitoring_data_ingestion_spark.grid.grib2 import decode_grib2
+
+    sec5 = (
+        struct.pack(">IB", 31, 5)
+        + struct.pack(">I", 6)  # packed values: the n = 2 reals
+        + struct.pack(">H", 51)  # data representation template 5.51
+        + struct.pack(">f", 0.0)  # R = 0
+        + bytes([0x00, 0x00])  # E = 0
+        + bytes([0x00, 0x00])  # D = 0
+        + bytes([6])  # bits per value
+        + struct.pack(">I", 1_000_000)  # P = 1.0 (x 10^6, sign-magnitude)
+        + struct.pack(">HHH", 1, 1, 1)  # JS, KS, MS
+        + bytes([1])  # unpacked subset precision: IEEE 32-bit
+    )
+    assert len(sec5) == 31
+    unpacked = bytes.fromhex(
+        "41200000" "00000000"  # C(0,0) = 10
+        "c0900000" "00000000"  # C(0,1) = -4.5
+        "40100000" "bfc00000"  # C(1,1) = 2.25 - 1.5i
+    )
+    bits = "".join(f"{x:06b}" for x in [6, 0, 12, 3, 30, 60]) + "0000"
+    packed = bytes(int(bits[i : i + 8], 2) for i in range(0, len(bits), 8))
+    assert len(packed) == 5
+    rec = decode_grib2(_foreign_grib2_spectral(2, sec5, unpacked + packed))
+    assert rec.packing_template == 51
+    assert (rec.spectral_truncation, rec.spectral_sub_truncation) == (2, 1)
+    np.testing.assert_allclose(
+        rec.spectral_coeffs,
+        [10.0, -4.5, 1.0, 2.25 - 1.5j, 2.0 + 0.5j, 5.0 + 10.0j],
+        rtol=0, atol=1e-12,
+    )
+
+
 def _foreign_with_sec4(sec4: bytes) -> bytes:
     """Rewrap the base foreign GRIB2 message around a hand-assembled
     replacement section 4 (sections 5-7 and the 10-bit payload are

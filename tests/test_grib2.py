@@ -4363,12 +4363,20 @@ _BAND = dict(series=300, number=15, instrument=7, scale=-1, value=912)
         (dict(radar=dict(radial_spacing=-1)), "radar radial spacing -1"),
         (dict(satellite=dict(bands=[dict(_BAND, series=70000)])), "satellite series 70000"),
         (dict(category=300), "parameter category 300"),
+        (dict(discipline=300), "discipline 300"),
+        (dict(reftime=(2020, 13, 40, 0, 0)), "reference time"),
+        (dict(reftime=(2020, 1, 1, 300, 0)), "reference time"),
+        (dict(reftime=(70000, 1, 1, 0, 0)), "reference time"),
+        (dict(nbits=300), "nbits 300"),
+        (dict(packing="aec", aec_block_size=300), "AEC block size 300"),
+        (dict(packing="aec", aec_rsi=70000), "AEC reference sample interval 70000"),
     ],
 )
 def test_out_of_width_product_fields_name_the_field(kwargs, label):
-    """A section-4 input that does not fit its octets stops with the
-    ValueError that names the field — never a raw struct.error,
-    OverflowError or bytes() range error from deep in the packer."""
+    """An input to section 0, 1, 4 or 5 that does not fit its octets
+    stops with the ValueError that names the field — never a raw
+    struct.error, OverflowError or bytes() range error from deep in the
+    packer.  Section 5's width stops before any bit packing."""
     import re
 
     with pytest.raises(ValueError, match=f"^{re.escape(label)}.* out of range"):
@@ -4502,20 +4510,35 @@ def test_template_outside_the_table_is_refused_on_every_surface(tmpl):
 
 
 def test_product_templates_are_defined_only_by_the_table():
-    """Source scan: the section-4 layout lives in ``grib2._PDT`` alone.
-    Outside it, neither ``grib2.py`` nor ``grib_source.py`` compares a
-    product-template number against a literal, looks one up in a
-    literal dict, or spells out the supported set (ten or more template
-    numbers); and the grid-template gate is spelled once, as
-    ``_GRID_TEMPLATES``."""
+    """Source scan: the section-4 layout lives in ``grib2._PDT`` alone
+    and the section-5 layout in ``grib2._DRT``.  Outside them, neither
+    ``grib2.py`` nor ``grib_source.py`` compares a product- or
+    data-representation-template number against a literal, looks one
+    up in a literal dict, or spells out the supported set (ten or more
+    product template numbers, five or more data representation ones);
+    and the grid-template gate is spelled once, as ``_GRID_TEMPLATES``."""
+    from monitoring_data_ingestion_spark.grid.grib2 import _DRT, _GRID_TEMPLATES, _PDT
+
+    found = []
+    for table_name, table_set, name_rx, shortest in (
+        ("_PDT", set(_PDT), r"tmpl4|product_template|pdt", 10),
+        ("_DRT", set(_DRT), r"tmpl5|packing_template", 5),
+    ):
+        found += _template_scan(table_name, table_set, name_rx, shortest, _GRID_TEMPLATES)
+    assert found == []
+
+
+def _template_scan(table_name, table_set, name_rx, shortest, grid_templates):
+    """The scan for one table: its name, its template numbers, the names
+    a template number goes by and the shortest literal list of numbers
+    that counts as a second spelling of the table."""
     import ast
     import re
     from pathlib import Path
 
     import monitoring_data_ingestion_spark as pkg
-    from monitoring_data_ingestion_spark.grid.grib2 import _GRID_TEMPLATES, _PDT
 
-    pdt_name = re.compile(r"tmpl4|product_template|pdt", re.I)
+    pdt_name = re.compile(name_rx, re.I)
 
     def ints(node) -> set | None:
         elts = node.elts if isinstance(node, (ast.Tuple, ast.Set, ast.List)) else (
@@ -4539,7 +4562,7 @@ def test_product_templates_are_defined_only_by_the_table():
             id(n)
             for a in ast.walk(tree)
             if isinstance(a, ast.Assign)
-            and any(getattr(t, "id", None) in ("_PDT", "_GRID_TEMPLATES") for t in a.targets)
+            and any(getattr(t, "id", None) in (table_name, "_GRID_TEMPLATES") for t in a.targets)
             for n in ast.walk(a)
         }
         for node in ast.walk(tree):
@@ -4548,14 +4571,61 @@ def test_product_templates_are_defined_only_by_the_table():
             if isinstance(node, ast.Compare):
                 sides = [node.left, *node.comparators]
                 if any(names_pdt(x) for x in sides) and any(ints(x) for x in sides):
-                    found.append((rel, node.lineno, "compare"))
+                    found.append((table_name, rel, node.lineno, "compare"))
             if isinstance(node, (ast.Call, ast.Subscript)) and names_pdt(node):
                 inner = node.func.value if isinstance(node, ast.Call) and isinstance(
                     node.func, ast.Attribute
                 ) else getattr(node, "value", None)
                 if isinstance(inner, ast.Dict) and ints(inner):
-                    found.append((rel, node.lineno, "dict lookup"))
+                    found.append((table_name, rel, node.lineno, "dict lookup"))
             vals = ints(node) if isinstance(node, (ast.Tuple, ast.Set, ast.List)) else None
-            if vals and (len(vals) >= 10 and vals <= set(_PDT) or vals == _GRID_TEMPLATES):
-                found.append((rel, node.lineno, "template list"))
-    assert found == []
+            if vals and (len(vals) >= shortest and vals <= table_set or vals == grid_templates):
+                found.append((table_name, rel, node.lineno, "template list"))
+    return found
+
+
+# What selects each data representation template, stated from the
+# encoder's kwargs rather than read from the table.
+_DRT_KWARGS = {
+    0: {},
+    2: dict(packing="complex"),
+    3: dict(packing="complex_diff"),
+    4: dict(packing="ieee32"),
+    40: dict(packing="jpeg2000"),
+    41: dict(packing="png"),
+    42: dict(packing="aec"),
+    50: dict(spectral=dict(truncation=3)),
+    51: dict(spectral=dict(truncation=3, sub_truncation=1)),
+    61: dict(packing="log", log_offset=1.0),
+    200: dict(packing="runlength", rle_table=[10, 20], nbits=4, decimal_scale=1),
+}
+
+
+def _drt_numbers():
+    from monitoring_data_ingestion_spark.grid.grib2 import _DRT
+
+    return sorted(_DRT)
+
+
+@pytest.mark.parametrize("tmpl", _drt_numbers())
+def test_truncated_data_representation_template_is_named(tmpl):
+    """Section 5 cut one octet short inside any template of the table
+    stops with the error that names the template, never the generic
+    torn-message error or a read past the section's end."""
+    import struct
+
+    kw = _DRT_KWARGS[tmpl]
+    v = _spectrum(3, 1) if "spectral" in kw else np.tile([1.0, 2.0], (3, 2))
+    msg = encode_grib2_message(v, **kw)
+    pos = 16
+    while msg[pos + 4] != 5:
+        pos += int.from_bytes(msg[pos : pos + 4], "big")
+    n = int.from_bytes(msg[pos : pos + 4], "big")
+    cut = bytearray(msg[: pos + n - 1] + msg[pos + n :])
+    struct.pack_into(">I", cut, pos, n - 1)
+    struct.pack_into(">Q", cut, 8, len(cut))
+    assert decode_grib2(msg).packing_template == tmpl
+    with pytest.raises(
+        ValueError, match=rf"^truncated data representation template 5\.{tmpl}\b"
+    ):
+        decode_grib2(bytes(cut))
