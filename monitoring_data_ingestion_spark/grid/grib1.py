@@ -59,6 +59,7 @@ import datetime
 import functools
 import math
 import struct
+import sys
 from dataclasses import dataclass
 
 import numpy as np
@@ -212,6 +213,22 @@ def _rs24(b: bytes, off: int) -> int:
     return -mag if b[off] & 0x80 else mag
 
 
+def _scale_factor(label: str, v: int, base: float) -> float:
+    """``base ** v`` for a scale factor both editions carry in 2 octets
+    of sign-magnitude.  Past that width, or where the power leaves the
+    normal float range, it stops naming the factor: an overflow would
+    escape as a raw OverflowError, and a zero or subnormal 2^E or 10^D
+    turns the increments, or the decoded values, into NaN."""
+    if -0x7FFF <= v <= 0x7FFF:
+        try:
+            f = base ** v
+        except OverflowError:
+            f = math.inf
+        if sys.float_info.min <= f < math.inf:
+            return f
+    raise ValueError(f"{label} {v} out of range")
+
+
 def quantize_simple_packing(
     present: np.ndarray,
     decimal_scale: int,
@@ -231,18 +248,20 @@ def quantize_simple_packing(
     stores nearest and fails loudly if it exceeds a data value. NaN in
     present cells is rejected — missing data must ride the bitmap, or
     the uint64 cast would emit platform-dependent garbage."""
+    ten_d = _scale_factor("decimal scale factor", decimal_scale, 10.0)
+    two_e = _scale_factor("binary scale factor", binary_scale, 2.0)
     present = np.asarray(present, dtype=np.float64)
     if np.isnan(present).any():
         raise ValueError(
             "present cells contain NaN — mask missing data with a bitmap"
         )
-    scaled = present * (10.0 ** decimal_scale)
+    scaled = present * ten_d
     if reference_value is None:
         rb = encode_ref_floor(float(scaled.min())) if len(scaled) else encode_ref(0.0)
     else:
         rb = encode_ref(reference_value)
     r = decode_ref(rb)
-    xf = np.round((scaled - r) / (2.0 ** binary_scale))
+    xf = np.round((scaled - r) / two_e)
     if len(xf) and xf.min() < 0:
         raise ValueError("reference_value exceeds a data value (negative increment)")
     x = xf.astype(np.uint64)

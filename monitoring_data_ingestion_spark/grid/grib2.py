@@ -9,34 +9,29 @@ the ``wgrib`` edition-1 path:
 
 * Section 0 (Indicator): "GRIB", discipline, edition 2, 64-bit length.
 * Section 1 (Identification): centre, reference time (full 16-bit year).
-* Section 3 (Grid definition): template 3.0 — regular lat/lon grid,
-  Ni×Nj, first-point lat/lon and increments in MICROdegrees (GRIB2's
-  10^-6 resolution vs GRIB1's millidegrees), scanning modes 0x00/0x40;
-  template 3.40 — global GAUSSIAN grid (ECMWF F-grids, ERA5's
-  native geometry): the Dj octets carry N and row latitudes are the
-  arcsin roots of Legendre P_2N (:func:`gaussian_latitudes`), in both
-  the regular and the REDUCED form (Ni coded missing + the section-3
-  points-per-parallel list; ragged values stay flat);
-  templates 3.30 — LAMBERT CONFORMAL conic (HRRR/NAM regional
-  archives) —, 3.20 — north POLAR STEREOGRAPHIC (sea-ice / Arctic
-  products) — and 3.10 — MERCATOR (tropical products): per-cell
-  geographic coordinates recovered through the spherical Snyder
-  inverses (:func:`lambert_inverse`, :func:`polar_stereo_inverse`,
-  :func:`mercator_inverse`), northern aspect for the conic/azimuthal
-  forms, values kept in storage order; templates 3.2/3.3 — STRETCHED
-  (and stretched+rotated) lat/lon, the ARPEGE/ALADIN Schmidt geometry:
-  the pole of stretching + ×10^6 factor decode through the vectorized
-  :func:`schmidt_unstretch` (tan-half-colatitude radial scaling about
-  the pole, c > 1 concentrating true resolution there), composed with
-  the shared unrotation for 3.3 — completing the lat/lon family
-  3.0/3.1/3.2/3.3; template 3.50 — SPHERICAL
-  HARMONIC coefficients (ERA5/IFS native spectral archives):
-  triangular truncation J = K = M, associated-Legendre type 1,
-  mode-1 complex ordering, pairing with data representation
-  template 5.50 (the (0,0) real part unpacked in the template, every
-  other value simple-packed) and synthesizing to a Gaussian grid
-  through :func:`spectral_synthesis` / :func:`spectral_legendre` —
-  never an implicit georef.
+* Section 3 (Grid definition): templates 3.0 (regular lat/lon, Ni×Nj,
+  first point and increments in MICROdegrees — GRIB2's 10^-6
+  resolution vs GRIB1's millidegrees — scanning modes 0x00/0x40),
+  3.1/3.2/3.3 (ROTATED, STRETCHED and stretched+rotated lat/lon: the
+  COSMO/HIRLAM and ARPEGE/ALADIN Schmidt geometries, per-cell
+  coordinates through :func:`schmidt_unstretch` and
+  :func:`rotated_unrotate`), 3.10 (MERCATOR), 3.20 (north POLAR
+  STEREOGRAPHIC) and 3.30 (LAMBERT CONFORMAL conic, HRRR/NAM), whose
+  per-cell coordinates come from the spherical Snyder inverses with
+  values kept in storage order, 3.40 (global GAUSSIAN, ERA5's native
+  geometry: Dj carries N and the rows are the roots of Legendre P_2N,
+  :func:`gaussian_latitudes`, in the regular and the REDUCED form — Ni
+  coded missing plus the points-per-parallel list, ragged values kept
+  flat) and 3.50 (SPHERICAL HARMONIC coefficients, triangular
+  truncation J = K = M in type-1 mode-1 order, paired with 5.50/5.51
+  and never an implicit georef: :func:`spectral_synthesis` makes the
+  grid).  Each is ONE entry of the ``_GDT`` table: the grid-family
+  kwarg that selects it, its blocks of fields in octet order (shape of
+  earth, Ni/Nj, the 3.0 body, the rotation and stretching blocks, the
+  projected bodies, 3.50's J/K/M) and its geometry, the arithmetic
+  that stays code.  The same packer and walker as sections 1, 4 and 5
+  write and read it; the landing header reads Ni/Nj through the walk's
+  head form.
 * Section 4 (Product definition): templates 4.0-4.15 (the 4.0 family:
   ensemble members, derived-ensemble and cluster products,
   probability, percentile, analysis/forecast error, statistical
@@ -124,15 +119,6 @@ def _f32_encode_floor(x: float) -> bytes:
 
 def _f32_decode(b: bytes) -> float:
     return struct.unpack(">f", b)[0]
-
-
-def _s32be(n: int) -> bytes:
-    """Signed-magnitude 32-bit (GRIB2 lat/lon in microdegrees) — the
-    width-4 case of :func:`_signed_magnitude` (defined below; bound at
-    call time)."""
-    if abs(int(n)) >= 1 << 31:
-        raise ValueError("signed-magnitude 32-bit overflow")
-    return _signed_magnitude(int(n), 4)
 
 
 def _rs32be(b: bytes, off: int) -> int:
@@ -514,30 +500,9 @@ def spectral_synthesis(coeffs, truncation: int, nj: int, ni: int):
     return out, lats
 
 
-def _projected_increment(g: bytes, off: int) -> int:
-    """Di/Dj of a projected grid template (millimetres).  Real-world
-    producers often leave the increments-given resolution bits unset on
-    projected grids even though Di/Dj are meaningful (HRRR ships flags
-    0x08), so the guard is on the all-ones MISSING sentinel itself —
-    decoding it as 4294967.295 m would scatter cells thousands of km
-    apart silently."""
-    (v,) = struct.unpack_from(">I", g, off)
-    if v in (0, 0xFFFFFFFF):
-        raise ValueError("projected-grid Di/Dj increment missing or zero")
-    return v
-
-
 # Shape-of-earth octet (code table 3.2) -> sphere radius in metres for
 # the codes the codec emits/accepts.
 _EARTH_RADIUS_M = {0: 6_367_470.0, 6: 6_371_229.0}
-
-# The grid definition templates the decode and the landing inventory
-# read.  3.1-3.3 (rotated/stretched), 3.10 (Mercator), 3.20 (polar
-# stereographic), 3.30 (Lambert) and 3.40 (Gaussian) share 3.0's Nx/Ny
-# octets; 3.50 (spherical harmonics) has no grid at all.  Any other
-# layout would yield garbage grid dimensions.
-_GRID_TEMPLATES = frozenset((0, 1, 2, 3, 10, 20, 30, 40, 50))
-
 
 @dataclass
 class Grib2Record:
@@ -1596,8 +1561,11 @@ def _lookup(src, key: str | None, default):
 
 
 def _pack_u(f: _F, v) -> bytes:
+    """An unsigned integer; a fraction would truncate silently, so it stops."""
     if v is None and f.missing:
         return b"\xff" * f.width
+    if int(v) != v:
+        raise ValueError(f"{f.label} {v} is not an integer")
     v = int(v)
     hi = f.arg if f.arg is not None else 256 ** f.width - 1 - f.missing
     if not 0 <= v <= hi:
@@ -1785,6 +1753,8 @@ _PARSE = {
     "lead": lambda f, buf, off: _forecast_hours(buf[off], _rs32be(buf, off + 1)),
     "ascii": _parse_ascii,
     "f32": _parse_f32,
+    "surface": _parse_surface,
+    "count": lambda f, buf, off: int.from_bytes(buf[off : off + f.width], "big"),
 }
 
 
@@ -1794,19 +1764,87 @@ def _pack_fields(fields, src) -> bytes:
     )
 
 
-class _Section(NamedTuple):
+class _Block(NamedTuple):
+    """A block laid out for the walker once, when its table is built:
+    its plain integers (1, 2 or 4 octets, no bounds) read with one
+    struct unpack (``ints`` is the format, not a compiled Struct, which
+    would not pickle into the functions Spark ships), with the (name,
+    all-ones word if coded missing, sign bit if signed-magnitude) of
+    those that need a fix-up; every other surfaced field with its
+    parser and its offset in the block (name None for a surface, whose
+    parse is several fields); the octets before any list; the count
+    that sizes the list and the list itself (always the block's last
+    field)."""
+
+    ints: str
+    names: tuple
+    fix: tuple
+    ops: tuple
+    width: int
+    count: _F | None
+    items: _F | None
+    in_head: bool
+    check: bool = True
+
+
+def _block(fields: tuple, in_head: bool, check: bool = True) -> _Block:
+    fmt, names, fix, ops, at, count, items = ">", [], [], [], 0, None, None
+    for f in fields:
+        if items is not None:
+            raise TypeError(f"{items.label}: a list must end its block")
+        if f.kind == "list":
+            items = f
+            continue
+        if f.kind == "count":
+            count = f
+        plain = f.width in (1, 2, 4) and (
+            f.kind == "count" or f.kind in ("u", "sm") and f.arg is None
+        )
+        if f.name is not None and plain:
+            fmt += " BH I"[f.width]
+            names.append(f.name)
+            if f.missing or f.kind == "sm":
+                fix.append((
+                    f.name, 256 ** f.width - 1 if f.missing else None,
+                    1 << (8 * f.width - 1) if f.kind == "sm" else 0,
+                ))
+        else:
+            fmt += f"{f.width}x"
+            if f.name is not None:
+                name = None if f.kind == "surface" else f.name
+                ops.append((name, _PARSE[f.kind], f, at))
+        at += f.width
+    return _Block(
+        fmt, tuple(names), tuple(fix), tuple(ops), at, count,
+        items, in_head, check,
+    )
+
+
+class _Section:
     """One section's layout after its 5-octet header.  ``lead`` is the
     fields every message carries; on a templated section its last field
-    is the 2-octet template number, and ``table`` maps that number to
-    (what selects the template, its blocks), which follow the lead.
+    is the 2-octet template number, and ``table`` maps that number to an
+    entry whose second item is its blocks, which follow the lead.
     ``blank`` names the fields that read None when the template has no
-    such block; ``noun`` is what the errors call a template."""
+    such block; ``head`` is the blocks a head read walks before it
+    stops; ``noun`` is what the errors call a template.  ``plans`` holds
+    each template's walk, laid out once."""
 
-    number: int
-    noun: str
-    lead: tuple
-    table: dict | None = None
-    blank: tuple = ()
+    def __init__(self, number, noun, lead, table=None, blank=(), head=()):
+        self.number, self.noun, self.lead = number, noun, lead
+        self.table, self.blank = table, blank
+        # A short lead fails the template number's read (section 1: the
+        # date's), a torn record loud_truncation names.
+        whole = _block(lead, True, check=False)
+        self.at = 3 + whole.width  # the template number's offset
+        self.plans = {None: (whole,)}
+        if table is not None:
+            # The walk reads the template number once, before the lead.
+            skip = _block((*lead[:-1], lead[-1]._replace(name=None)), True, False)
+            self.plans = {
+                t: (skip, *(_block(b, b in head) for b in entry[1]))
+                for t, entry in table.items()
+            }
 
 
 def _frame(number: int, body: bytes) -> bytes:
@@ -1823,66 +1861,79 @@ def _pack_section(sec: _Section, src: dict) -> bytes:
 
 
 def _template_number(sec: _Section, raw: bytes) -> int:
-    (t,) = struct.unpack_from(">H", raw, 3 + sum(f.width for f in sec.lead))
+    (t,) = struct.unpack_from(">H", raw, sec.at)
     if t not in sec.table:
         raise ValueError(f"unsupported {sec.noun} template {t}")
     return t
 
 
-def _parse_section(sec: _Section, raw: bytes, head: bool = False) -> dict:
+def _parse_section(
+    sec: _Section, raw: bytes, head: bool = False, t: int | None = None
+) -> dict:
     """A section (5-octet header included) -> its fields by name, walking
     the lead and the template's blocks with a running offset.  Loud on
     every defect: an unknown template, a truncated block, an empty
-    count, an out-of-range field.  ``head`` (section 4) reads only the
-    inventory fields (see _HEAD_BLOCKS) and a lead the hours column
-    cannot hold as None, the way wgrib2 still lists such a record."""
-    blocks, where = [sec.lead], None
-    if sec.table is not None:
-        t = _template_number(sec, raw)
-        blocks += sec.table[t][1]
-        where = f"{sec.noun} template {sec.number}.{t}"
+    count, an out-of-range field.  ``t``: the template number, when the
+    caller has read it already.  ``head`` reads only ``sec.head`` blocks
+    (the inventory fields) and a lead the hours column cannot hold as
+    None, the way wgrib2 still lists such a record."""
     out = dict.fromkeys(sec.blank)
-    off, count = 5, 0
-    for block in blocks:
-        if block is not sec.lead:
-            if head and block not in _HEAD_BLOCKS:
-                break
-            # A short lead already failed the template number's read
-            # (section 1: the date's), a torn record loud_truncation names.
-            if len(raw) < off + sum(f.width for f in block if f.kind != "list"):
-                raise ValueError(f"truncated {where}")
-        for f in block:
-            if f.kind == "list":
-                if len(raw) < off + count * f.width:
-                    raise ValueError(f"truncated {where} ({count} {f.label})")
-                cols = {}
-                at = off
-                for i in f.arg:
-                    if i.name is not None:
-                        cols[i.name] = tuple(
-                            _PARSE[i.kind](i, raw, at + r * f.width)
-                            for r in range(count)
-                        )
-                    at += i.width
-                if f.name == "first":
-                    cols = {k: c[0] for k, c in cols.items()}
-                out.update(cols)
-                off += count * f.width
-                continue
-            if f.kind == "count":
-                count = int.from_bytes(raw[off : off + f.width], "big")
-                if count in (0, 256 ** f.width - 1):
-                    raise ValueError(f"{where} with no {f.arg}")
-                out[f.name] = count
-            elif f.kind == "surface":
-                out.update(_parse_surface(f, raw, off))
-            elif f.name is not None:
-                try:
-                    out[f.name] = _PARSE[f.kind](f, raw, off)
-                except ValueError:
-                    if not (head and f.kind == "lead"):
-                        raise
-            off += f.width
+    if sec.table is not None:
+        if t is None:
+            t = _template_number(sec, raw)
+        out[sec.lead[-1].name] = t
+    off = 5
+    for b in sec.plans[t]:
+        if head and not b.in_head:
+            break
+        if b.check and len(raw) < off + b.width:
+            raise ValueError(f"truncated {sec.noun} template {sec.number}.{t}")
+        if b.names:
+            out.update(zip(b.names, struct.unpack_from(b.ints, raw, off)))
+            for name, missing, sign in b.fix:
+                v = out[name]
+                if v == missing:
+                    out[name] = None
+                elif v & sign:
+                    out[name] = sign - v
+        for name, parse, f, at in b.ops:
+            try:
+                v = parse(f, raw, off + at)
+            except ValueError:
+                if head and f.kind == "lead":
+                    continue
+                raise
+            if name is None:
+                out.update(v)
+            else:
+                out[name] = v
+        off += b.width
+        count = 0
+        if b.count is not None:
+            count = out[b.count.name]
+            if count in (0, 256 ** b.count.width - 1):
+                raise ValueError(
+                    f"{sec.noun} template {sec.number}.{t} with no {b.count.arg}"
+                )
+        f = b.items
+        if f is None:
+            continue
+        if len(raw) < off + count * f.width:
+            raise ValueError(
+                f"truncated {sec.noun} template {sec.number}.{t} ({count} {f.label})"
+            )
+        cols = {}
+        at = off
+        for i in f.arg:
+            if i.name is not None:
+                cols[i.name] = tuple(
+                    _PARSE[i.kind](i, raw, at + r * f.width) for r in range(count)
+                )
+            at += i.width
+        if f.name == "first":
+            cols = {k: c[0] for k, c in cols.items()}
+        out.update(cols)
+        off += count * f.width
     return out
 
 
@@ -1913,6 +1964,586 @@ _S4 = _Section(
         "forecast_hours", "level_type", "level_scale", "level_value",
         "level2_type", "level2_scale", "level2_value",
     ),
+    head=_HEAD_BLOCKS,
+)
+
+
+# --- section 3: grid definition templates ----------------------------------
+#
+# _GDT maps each grid definition template to the grid-family kwargs that
+# select it, its blocks in octet order, and its geometry, which stays
+# code because it is arithmetic.  ``encode(values, p)`` checks the
+# family's kwargs (``p`` holds them with the lat/lon and scanning
+# kwargs), fills the section-3 fields into ``p`` (Ni/Nj, the point
+# count and the template's wire integers) and returns the float64
+# values; ``decode(g, raw)`` turns the walker's dict ``g`` into the
+# record's grid fields.  Angles ride in microdegrees and projected
+# increments in millimetres, signed-magnitude where they can be
+# negative.  A coded-missing Ni is a reduced grid, legal only on a
+# template that carries the points-per-row list.
+
+_EARTH = (
+    # Code table 3.2 (the encoder writes 6, a sphere of radius
+    # 6371229 m), then the radius and axes it implies: not given.
+    _field("earth", 1, "u", "shape of earth", default=6),
+    _const(b"\xff" * 15),
+)
+_NINJ = (
+    _field("ni", 4, "u", "Ni", missing=True),
+    _field("nj", 4, "u", "Nj", missing=True),
+)
+# The 3.0 body: basic angle 0 with no subdivisions (coordinates in
+# microdegrees), La1/Lo1, the resolution flags (0x30: both increments
+# given), La2/Lo2, Di/Dj and the scanning mode (0x00 = +i,−j; 0x40 =
+# +i,+j, south row first).  3.40 shares it, with N (parallels pole to
+# equator) where 3.0 has Dj.
+_LATLON = (
+    _field("basic_angle", 4, "u", "basic angle", default=0),
+    _field("subdivisions", 4, "u", "basic angle subdivisions", default=0xFFFFFFFF),
+    _field("la1", 4, "sm", "La1"),
+    _field("lo1", 4, "sm", "Lo1"),
+    _field("flags", 1, "u", "resolution and component flags"),
+    _field("la2", 4, "sm", "La2"),
+    _field("lo2", 4, "sm", "Lo2"),
+    _field("di", 4, "u", "Di"),
+    _field("dj", 4, "u", "Dj"),
+    _field("scan", 1, "u", "scanning mode"),
+)
+# 3.1/3.3: the southern pole of projection and the angle of rotation.
+_ROTATION = (
+    _field("sp_lat", 4, "sm", "southern pole latitude"),
+    _field("sp_lon", 4, "sm", "southern pole longitude"),
+    _field("angle", 4, "sm", "angle of rotation"),
+)
+# 3.2/3.3: the pole of stretching and the stretching factor ×10^6.
+_STRETCHING = (
+    _field("st_lat", 4, "sm", "pole-of-stretching latitude"),
+    _field("st_lon", 4, "sm", "pole-of-stretching longitude"),
+    _field("st_c", 4, "u", "stretching factor"),
+)
+# The projected grids open alike: La1/Lo1 of cell (0, 0), the flags
+# (0x08: u/v relative to the grid) and LaD, where Di/Dj hold.
+_ANCHOR = (
+    _field("la1", 4, "sm", "La1"),
+    _field("lo1", 4, "sm", "Lo1"),
+    _const(b"\x08"),
+    _field("lad", 4, "sm", "LaD"),
+)
+# 3.10: La2/Lo2 (the encoder derives them from the mesh), the scanning
+# mode, the grid orientation (0: not rotated) and Di/Dj.
+_MERCATOR = (
+    _field("la2", 4, "sm", "La2"),
+    _field("lo2", 4, "sm", "Lo2"),
+    _field("scan", 1, "u", "scanning mode"),
+    _field("orientation", 4, "u", "Mercator grid orientation", default=0),
+    _field("dx", 4, "u", "Di"),
+    _field("dy", 4, "u", "Dj"),
+)
+# 3.20, and 3.30 up to its standard parallels: LoV, Dx/Dy, the
+# projection-centre flag (0: north pole on the plane), the scanning mode.
+_POLAR = (
+    _field("lov", 4, "sm", "LoV"),
+    _field("dx", 4, "u", "Dx"),
+    _field("dy", 4, "u", "Dy"),
+    _field("centre", 1, "u", "projection centre flag", default=0),
+    _field("scan", 1, "u", "scanning mode"),
+)
+# 3.30: the two standard parallels, then the south pole of projection
+# (-90°, 0°).
+_CONE = (
+    _field("latin1", 4, "sm", "Latin1"),
+    _field("latin2", 4, "sm", "Latin2"),
+    _const(_signed_magnitude(-90_000_000, 4) + bytes(4)),
+)
+# 3.50: the J/K/M pentagonal resolution (triangular: each is T), the
+# representation type (1: associated Legendre of the first kind) and
+# mode (1: the complex ordering m = 0..M, n = m..J).
+_SPECTRAL = (
+    _F("J", "truncation", 4, "u", "J"),
+    _F("K", "truncation", 4, "u", "K"),
+    _F("M", "truncation", 4, "u", "M"),
+    _field("spectral_type", 1, "u", "spectral representation type", default=1),
+    _field("spectral_mode", 1, "u", "spectral representation mode", default=1),
+)
+# 3.40's points-per-row list (north -> south) after the template body.
+# Its length is Nj, not a count field, so the walker reads none of it;
+# _gaussian_decode reads it at the lead's entry width.
+_ROWS = (
+    _F(None, "row_ni", 2, "list", "points per row", default=(),
+       arg=(_F(None, None, 2, "u", "points per row"),)),
+)
+
+
+def _e6(x) -> int:
+    """×10^6, rounded: microdegrees, or the stretching factor's octets."""
+    return int(round(float(x) * 1e6))
+
+
+def _grid_values(values, p: dict) -> np.ndarray:
+    """A (nj, ni) raster in a scanning mode the codec writes."""
+    vals = np.asarray(values, dtype=np.float64)
+    if vals.ndim != 2:
+        raise ValueError("values must be (nj, ni)")
+    if p["scan"] not in (0x00, 0x40):
+        raise ValueError(f"unsupported scanning mode 0x{p['scan']:02x}")
+    p["nj"], p["ni"] = vals.shape
+    p["npoints"] = vals.size
+    return vals
+
+
+def _latlon_encode(values, p: dict) -> np.ndarray:
+    """3.0-3.3: rows step down from ``lat_first_udeg`` (the northern
+    edge) by ``dlat_udeg``; under 0x40 La1 is the southern edge.  The
+    axes of a rotated or stretched grid are coordinates in that system."""
+    vals = _grid_values(values, p)
+    rot, st = p["rotated"], p["stretched"]
+    if rot is not None:
+        if not -90.0 <= float(rot["south_pole_lat"]) <= 90.0:
+            raise ValueError("rotated-grid southern pole latitude out of range")
+        p.update(
+            sp_lat=_e6(rot["south_pole_lat"]), sp_lon=_e6(rot["south_pole_lon"]),
+            angle=_e6(rot.get("angle", 0.0)),
+        )
+    if st is not None:
+        if not -90.0 <= float(st["pole_lat"]) <= 90.0:
+            raise ValueError("pole-of-stretching latitude out of range")
+        if not 0.0 < float(st["factor"]) < 4000.0:
+            raise ValueError(f"stretching factor {st['factor']} out of range")
+        p.update(
+            st_lat=_e6(st["pole_lat"]), st_lon=_e6(st["pole_lon"]),
+            st_c=_e6(st["factor"]),
+        )
+    north, south = p["la1"], p["la1"] - (p["nj"] - 1) * p["dj"]
+    p.update(
+        la1=south if p["scan"] else north, la2=north if p["scan"] else south,
+        lo2=p["lo1"] + (p["ni"] - 1) * p["di"], flags=0x30,
+    )
+    return vals
+
+
+def _gaussian_encode(values, p: dict) -> np.ndarray:
+    """3.40: the rows are the Gaussian latitudes, so La1/La2 are the
+    first and last of them, Dj holds N and the lat/dlat kwargs do not
+    apply.  ``reduced_ni`` (the points-per-parallel list, ``values`` the
+    flat ragged rows) codes Ni and Di missing and carries the list."""
+    rows = p["reduced_ni"]
+    if rows is None:
+        vals = _grid_values(values, p)
+        if p["scan"] != 0x00:
+            raise ValueError("Gaussian grids are encoded north-first only")
+        p.update(flags=0x30, lo2=p["lo1"] + (p["ni"] - 1) * p["di"])
+    else:
+        rows = np.asarray(rows, dtype=np.int64)
+        vals = np.asarray(values, dtype=np.float64)
+        if vals.ndim != 1 or len(vals) != int(rows.sum()):
+            raise ValueError(
+                "reduced-grid values must be flat with sum(reduced_ni) points"
+            )
+        if len(rows) % 2 or len(rows) < 2 or (rows <= 0).any():
+            raise ValueError(
+                "a global reduced Gaussian grid has an even positive parallel count"
+            )
+        if (rows > 0xFFFF).any():
+            raise ValueError("points-per-row exceeds the 2-octet list width")
+        if p["scan"] != 0x00:
+            raise ValueError("Gaussian grids are encoded north-first only")
+        bm = p["bitmap"]
+        if bm is not None and (np.ndim(bm) != 1 or len(bm) != len(vals)):
+            # the bitmap of the flat ragged rows is the same flat mask
+            raise ValueError(
+                "a reduced-grid bitmap must be flat with sum(reduced_ni) points"
+            )
+        if p["missing_mask"] is not None:
+            raise ValueError(
+                "missing_mask not supported on reduced grids (use a bitmap)"
+            )
+        nmax = int(rows.max())
+        p.update(
+            ni=None, nj=len(rows), npoints=int(rows.sum()), list_width=2,
+            list_kind=1, flags=0x00, di=0xFFFFFFFF, row_ni=rows,
+            lo2=p["lo1"] + int(round((nmax - 1) * 360e6 / nmax)),
+        )
+    lats = gaussian_latitudes(p["nj"])
+    p.update(la1=_e6(lats[0]), la2=_e6(lats[-1]), dj=p["nj"] // 2)
+    return vals
+
+
+def _anchor(p: dict, kw: dict) -> None:
+    """The projected grids' shared octets from the family's degrees and
+    metres (``kw`` keys la1, lo1 of cell (0, 0), lad, dx_m, dy_m)."""
+    p.update(
+        la1=_e6(kw["la1"]), lo1=_e6(kw["lo1"]), lad=_e6(kw["lad"]),
+        dx=int(round(kw["dx_m"] * 1e3)), dy=int(round(kw["dy_m"] * 1e3)),
+    )
+
+
+def _mercator_encode(values, p: dict) -> np.ndarray:
+    """3.10, true scale at LaD: La2/Lo2 are the far corner of the mesh,
+    through the Snyder forward/inverse pair."""
+    vals, mc = _grid_values(values, p), p["mercator"]
+    if not -90.0 < mc["lad"] < 90.0:
+        raise ValueError("degenerate Mercator true-scale latitude")
+    _anchor(p, mc)
+    radius = _EARTH_RADIUS_M[6]
+    x1, y1 = mercator_forward(mc["la1"], mc["lo1"], mc["lad"], radius)
+    sj = 1.0 if p["scan"] & 0x40 else -1.0
+    la2, lo2 = mercator_inverse(
+        float(x1) + (p["ni"] - 1) * mc["dx_m"],
+        float(y1) + sj * (p["nj"] - 1) * mc["dy_m"], mc["lad"], radius,
+    )
+    p.update(la2=_e6(la2), lo2=_e6(lo2))
+    return vals
+
+
+def _polar_encode(values, p: dict) -> np.ndarray:
+    """3.20, north aspect (``polar_stereo`` adds lov, the orientation)."""
+    vals, ps = _grid_values(values, p), p["polar_stereo"]
+    if ps["lad"] <= -90.0:
+        raise ValueError("degenerate polar-stereographic true-scale latitude")
+    _anchor(p, ps)
+    p["lov"] = _e6(ps["lov"])
+    return vals
+
+
+def _lambert_encode(values, p: dict) -> np.ndarray:
+    """3.30 (``lambert`` adds lov, latin1, latin2): the cone is checked
+    here, so a southern cone stops at encode."""
+    vals, lc = _grid_values(values, p), p["lambert"]
+    _lambert_setup(lc["lad"], lc["latin1"], lc["latin2"], _EARTH_RADIUS_M[6])
+    _anchor(p, lc)
+    p.update(lov=_e6(lc["lov"]), latin1=_e6(lc["latin1"]), latin2=_e6(lc["latin2"]))
+    return vals
+
+
+def _spectral_grid_encode(values, p: dict) -> np.ndarray:
+    """3.50: ``values`` is the 1-D complex C_n^m, m = 0..T, n = m..T;
+    the field is real, so every m = 0 coefficient has a zero imaginary
+    part (a synthesis would silently drop it).  The point count holds
+    the complex coefficients; the values return re/im interleaved."""
+    t = int(p["spectral"]["truncation"])
+    if t < 1:
+        raise ValueError("spectral truncation must be >= 1")
+    if p["bitmap"] is not None or p["missing_mask"] is not None:
+        raise ValueError("spectral data carries no bitmap/missing mask")
+    if p["scan"] != 0x00:
+        raise ValueError("spectral data has no scanning mode")
+    c = np.asarray(values)
+    npairs = (t + 1) * (t + 2) // 2
+    if c.ndim != 1 or len(c) != npairs or not np.iscomplexobj(c):
+        raise ValueError(
+            f"triangular T{t} spectrum is a 1-D complex array of "
+            f"{npairs} coefficients (m = 0..T, n = m..T)"
+        )
+    if len(c) and float(np.abs(c[: t + 1].imag).max()) != 0.0:
+        raise ValueError(
+            "m = 0 coefficients of a real field have zero imaginary part"
+        )
+    vals = np.empty(2 * npairs, dtype=np.float64)
+    vals[0::2] = c.real
+    vals[1::2] = c.imag
+    p.update(truncation=t, ni=None, nj=npairs, npoints=npairs)
+    return vals
+
+
+def _grid_shape(g: dict) -> tuple:
+    """(Ni, Nj).  Ni may be coded missing only on a template with the
+    points-per-row list (a reduced grid); any other sentinel dimension
+    has no per-row machinery, and decoding it would be silent geography
+    corruption (or overflow the landing's int32 column)."""
+    t, ni, nj = g["grid_template"], g["ni"], g["nj"]
+    if nj is None or (ni is None and _ROWS not in _GDT[t].blocks):
+        raise ValueError(f"grid dimensions coded missing on template {t}")
+    return ni, nj
+
+
+def _south_first(t: int, scan) -> bool:
+    """0x40 stores a lat/lon grid's rows south-first, and the codec's
+    values are north-first.  Projected grids have no latitude axis:
+    their values keep storage order, the scan bit orienting y."""
+    return scan == 0x40 and _LATLON in _GDT[t].blocks
+
+
+def _check_scan(scan: int) -> None:
+    """The same loud stop as grib1: any other mode reorders cells, and
+    reading it as row-major would be silent geography corruption."""
+    if scan not in (0x00, 0x40):
+        raise ValueError(
+            f"unsupported scanning mode 0x{scan:02x} (only +i,±j row-major)"
+        )
+
+
+def _affine(g: dict, flags: int) -> None:
+    """The 3.0 body's checks, shared with 3.40.  A non-default basic
+    angle re-scales every coordinate (a millidegree unit read as
+    microdegrees is 1000x off), so only basic angle 0 / coded missing or
+    the explicit 1/10^6 decodes.  An increment whose resolution flag
+    (``flags``) is unset holds the all-ones sentinel."""
+    _check_scan(g["scan"])
+    basic, subdiv = g["basic_angle"], g["subdivisions"]
+    if not (basic in (0, 0xFFFFFFFF) or (basic == 1 and subdiv == 1_000_000)):
+        raise ValueError(
+            f"non-default basic angle {basic}/{subdiv} not "
+            "supported (coordinates would not be microdegrees)"
+        )
+    if (g["flags"] & flags) != flags:
+        raise ValueError("direction increments not given (resolution flags)")
+
+
+def _latlon_decode(g: dict, raw: bytes) -> dict:
+    """3.0-3.3.  A rotated or stretched grid keeps its axes (already
+    north-first in that system) in the affine fields; lambert_params
+    carries the pole, angle and factor the lazy per-cell unstretch and
+    unrotation need, so no consumer reads those axes as geography."""
+    ni, nj = _grid_shape(g)
+    _affine(g, 0x30)
+    lp = None
+    if "sp_lat" in g:
+        lp = {
+            "kind": "rotated", "sp_lat": g["sp_lat"] / 1e6,
+            "sp_lon": g["sp_lon"] / 1e6, "angle": g["angle"] / 1e6,
+        }
+        if not -90.0 <= lp["sp_lat"] <= 90.0:
+            raise ValueError("rotated-grid southern pole latitude out of range")
+    if "st_c" in g:
+        if g["st_c"] in (0, 0xFFFFFFFF):
+            raise ValueError("stretching factor missing or zero")
+        st = {
+            "st_lat": g["st_lat"] / 1e6, "st_lon": g["st_lon"] / 1e6,
+            "st_c": g["st_c"] / 1e6,
+        }
+        if not -90.0 <= st["st_lat"] <= 90.0:
+            raise ValueError("pole-of-stretching latitude out of range")
+        lp = {"kind": "stretched", **st} if lp is None else {
+            **lp, "kind": "stretched_rotated", **st,
+        }
+    la1, dlat = g["la1"], g["dj"]
+    if g["scan"] == 0x40:
+        la1 += (nj - 1) * dlat  # La1 was the southern edge
+    return dict(
+        ni=ni, nj=nj, lat_first_udeg=la1, lon_first_udeg=g["lo1"],
+        dlat_udeg=dlat, dlon_udeg=g["di"], lambert_params=lp,
+    )
+
+
+def _gaussian_decode(g: dict, raw: bytes) -> dict:
+    """3.40, the global grid only (nj = 2N): a latitude subset would
+    need La1/La2 root matching, and assuming global would misplace rows.
+    Ni coded missing is the REDUCED grid (ERA5's native layout): the
+    section-3 optional list (interpretation 1, points per full
+    parallel) gives each row's count, and there is no common Di."""
+    ni, nj = _grid_shape(g)
+    row_ni = None
+    if ni is None:
+        w = g["list_width"]
+        if w == 0 or g["list_kind"] != 1:
+            raise ValueError(
+                "reduced grid without a points-per-row list "
+                f"(list octets {w}, interpretation {g['list_kind']})"
+            )
+        off = 5 + sum(b.width for b in _S3.plans[g["grid_template"]])
+        if len(raw) < off + nj * w:
+            raise ValueError("truncated points-per-row list")
+        row_ni = np.array(
+            [int.from_bytes(raw[off + k * w : off + (k + 1) * w], "big") for k in range(nj)],
+            dtype=np.int64,
+        )
+        if int(row_ni.sum()) != g["npoints"] or (row_ni <= 0).any():
+            raise ValueError(
+                "points-per-row list disagrees with the section-3 point count"
+            )
+    _affine(g, 0x20 if row_ni is None else 0x00)
+    n = g["dj"]
+    if g["scan"] != 0x00:
+        raise ValueError("Gaussian grids support north-first scanning only")
+    if nj != 2 * n:
+        raise ValueError(
+            f"non-global Gaussian grid (nj={nj}, N={n}) not supported"
+        )
+    return dict(
+        ni=ni, nj=nj, lat_first_udeg=g["la1"], lon_first_udeg=g["lo1"],
+        dlat_udeg=0, dlon_udeg=g["di"] if row_ni is None else 0,
+        gaussian_n=n, latitudes_deg=gaussian_latitudes(nj), row_ni=row_ni,
+    )
+
+
+def _increment(v: int) -> float:
+    """Di/Dj of a projected grid, mm -> m.  Producers often leave the
+    increments-given flags unset on projected grids although Di/Dj mean
+    something (HRRR ships flags 0x08), so the guard is on the all-ones
+    sentinel itself: 4294967.295 m would scatter cells silently."""
+    if v in (0, 0xFFFFFFFF):
+        raise ValueError("projected-grid Di/Dj increment missing or zero")
+    return v / 1e3
+
+
+def _projection(g: dict, kind: str) -> dict:
+    """The projected grids' shared reading into lambert_params: a
+    spherical earth, a northern single cone (the centre flag's bit 0x80
+    is the south pole on the plane, 0x40 a bi-polar projection), the
+    scanning mode, no grid rotation, La1/Lo1/LaD (and LoV) in degrees
+    and Di/Dj in metres."""
+    _grid_shape(g)
+    if g["earth"] not in _EARTH_RADIUS_M:
+        raise ValueError(
+            f"unsupported shape of earth {g['earth']} for projected grids"
+        )
+    if g.get("centre", 0) & 0xC0:
+        raise ValueError(
+            f"unsupported Lambert projection centre flag 0x{g['centre']:02x} "
+            "(southern / bi-polar cones not supported)"
+        )
+    _check_scan(g["scan"])
+    if g.get("orientation"):
+        raise ValueError(
+            f"non-zero Mercator grid orientation {g['orientation']} not supported"
+        )
+    lp = {"kind": kind, **{k: g[k] / 1e6 for k in ("la1", "lo1", "lad", "lov") if k in g}}
+    lp.update(
+        dx_m=_increment(g["dx"]), dy_m=_increment(g["dy"]),
+        radius_m=_EARTH_RADIUS_M[g["earth"]],
+    )
+    return lp
+
+
+def _anchored(g: dict, lp: dict, x1, y1) -> dict:
+    """The record of a projected grid: the anchor (x1, y1) and the mesh
+    orientation resolved now (+i east along a row; 0x40: +j steps +y),
+    the O(cells) inverse left to the first cell_lats/lons_deg access.
+    No affine lat/lon axes."""
+    lp.update(x1=float(x1), y1=float(y1), sj=1.0 if g["scan"] & 0x40 else -1.0)
+    return dict(
+        ni=g["ni"], nj=g["nj"], lat_first_udeg=g["la1"], lon_first_udeg=g["lo1"],
+        dlat_udeg=0, dlon_udeg=0, lambert_params=lp,
+    )
+
+
+def _mercator_decode(g: dict, raw: bytes) -> dict:
+    """3.10.  The Di/Dj-derived far corner must match the stated La2/Lo2
+    (to µdeg corner and mm increment rounding across the mesh), or the
+    record would decode with silently increment-derived geometry."""
+    lp = _projection(g, "mercator")
+    if not -90.0 < lp["lad"] < 90.0:
+        raise ValueError("degenerate Mercator true-scale latitude")
+    out = _anchored(g, lp, *mercator_forward(
+        lp["la1"], lp["lo1"], lp["lad"], lp["radius_m"]
+    ))
+    la2, lo2 = g["la2"] / 1e6, g["lo2"] / 1e6
+    la2_mesh, lo2_mesh = mercator_inverse(
+        lp["x1"] + (g["ni"] - 1) * lp["dx_m"],
+        lp["y1"] + lp["sj"] * (g["nj"] - 1) * lp["dy_m"],
+        lp["lad"], lp["radius_m"],
+    )
+    dlon_wrap = abs((float(lo2_mesh) - lo2 + 180.0) % 360.0 - 180.0)
+    if abs(float(la2_mesh) - la2) > 1e-3 or dlon_wrap > 1e-3:
+        raise ValueError(
+            "Mercator grid increments disagree with the stated far "
+            f"corner: Di/Dj-derived ({float(la2_mesh):.6f}, "
+            f"{float(lo2_mesh):.6f}) vs La2/Lo2 ({la2:.6f}, {lo2:.6f})"
+        )
+    return out
+
+
+def _polar_decode(g: dict, raw: bytes) -> dict:
+    lp = _projection(g, "ps")
+    if lp["lad"] <= -90.0:
+        raise ValueError("degenerate polar-stereographic true-scale latitude")
+    return _anchored(g, lp, *polar_stereo_forward(
+        lp["la1"], lp["lo1"], lp["lad"], lp["lov"], lp["radius_m"]
+    ))
+
+
+def _lambert_decode(g: dict, raw: bytes) -> dict:
+    lp = _projection(g, "lcc")
+    lp.update(latin1=g["latin1"] / 1e6, latin2=g["latin2"] / 1e6)
+    return _anchored(g, lp, *lambert_forward(
+        lp["la1"], lp["lo1"], lp["lad"], lp["lov"], lp["latin1"],
+        lp["latin2"], lp["radius_m"],
+    ))
+
+
+def _spectral_grid_decode(g: dict, raw: bytes) -> dict:
+    """3.50: only the triangular J = K = M truncation in type-1 mode-1
+    ordering; anything else reorders or redefines the coefficient
+    sequence, and guessing would synthesize a garbage field.  There is
+    no grid: ni is None, nj the complex-coefficient count, the affine
+    fields zero; synthesis to a Gaussian grid (spectral_synthesis) is
+    an explicit step, never an implicit georef."""
+    t = g["J"]
+    if not g["J"] == g["K"] == g["M"] or t < 1:
+        raise ValueError(
+            f"only triangular spectral truncation supported "
+            f"(J={g['J']}, K={g['K']}, M={g['M']})"
+        )
+    if g["spectral_type"] != 1 or g["spectral_mode"] != 1:
+        raise ValueError(
+            f"unsupported spectral representation type {g['spectral_type']} / "
+            f"mode {g['spectral_mode']}"
+        )
+    npairs = (t + 1) * (t + 2) // 2
+    if g["npoints"] != npairs:
+        raise ValueError(
+            f"T{t} spectrum has {npairs} complex coefficients, "
+            f"section 3 declares {g['npoints']}"
+        )
+    return dict(
+        ni=None, nj=npairs, lat_first_udeg=0, lon_first_udeg=0, dlat_udeg=0,
+        dlon_udeg=0, spectral_truncation=t,
+    )
+
+
+class _Gdt(NamedTuple):
+    """One grid definition template (see the section comment)."""
+
+    select: tuple  # each item: the grid-family kwargs that select it
+    blocks: tuple
+    encode: object
+    decode: object
+
+
+_GDT = {
+    0: _Gdt(((),), (_EARTH, _NINJ, _LATLON), _latlon_encode, _latlon_decode),
+    # Rotated (COSMO/HIRLAM), stretched (the ARPEGE/ALADIN Schmidt
+    # geometry) and stretched+rotated lat/lon: the 3.0 body, then the
+    # rotation block, the stretching block or both, in that order.
+    1: _Gdt((("rotated",),), (_EARTH, _NINJ, _LATLON, _ROTATION),
+            _latlon_encode, _latlon_decode),
+    2: _Gdt((("stretched",),), (_EARTH, _NINJ, _LATLON, _STRETCHING),
+            _latlon_encode, _latlon_decode),
+    3: _Gdt((("rotated", "stretched"),),
+            (_EARTH, _NINJ, _LATLON, _ROTATION, _STRETCHING),
+            _latlon_encode, _latlon_decode),
+    # Mercator (tropical products).
+    10: _Gdt((("mercator",),), (_EARTH, _NINJ, _ANCHOR, _MERCATOR),
+             _mercator_encode, _mercator_decode),
+    # North polar stereographic (sea ice, Arctic products): the Lambert
+    # layout without the standard parallels.
+    20: _Gdt((("polar_stereo",),), (_EARTH, _NINJ, _ANCHOR, _POLAR),
+             _polar_encode, _polar_decode),
+    # Lambert conformal conic (HRRR/NAM regional archives).
+    30: _Gdt((("lambert",),), (_EARTH, _NINJ, _ANCHOR, _POLAR, _CONE),
+             _lambert_encode, _lambert_decode),
+    # Global Gaussian (ECMWF F-grids, ERA5's native geometry), regular
+    # or reduced.
+    40: _Gdt((("gaussian",), ("reduced_ni",)), (_EARTH, _NINJ, _LATLON, _ROWS),
+             _gaussian_encode, _gaussian_decode),
+    # Spherical harmonic coefficients (ERA5/IFS spectral archives),
+    # paired with 5.50/5.51: no grid, no earth.
+    50: _Gdt((("spectral",),), (_SPECTRAL,),
+             _spectral_grid_encode, _spectral_grid_decode),
+}
+_GDT_BY_KEY = {frozenset(key): t for t, d in _GDT.items() for key in d.select}
+_S3 = _Section(
+    3,
+    "grid definition",
+    (
+        _const(b"\x00"),  # source: a grid definition template
+        _field("npoints", 4, "u", "number of data points"),
+        _field("list_width", 1, "u", "optional list entry width", default=0),
+        _field("list_kind", 1, "u", "optional list interpretation", default=0),
+        _field("grid_template", 2, "u", "grid definition template"),
+    ),
+    _GDT,
+    head=(_EARTH, _NINJ),  # what the landing header reads: Ni/Nj
 )
 
 
@@ -2541,130 +3172,44 @@ def encode_grib2_message(
     # A template-only kwarg (the masks, B, the level table) is refused
     # unless the selected template has a field that carries it.
     reads = {f.key for block in _DRT[tmpl5].blocks for f in block}
-    spec_t: int | None = None
+    # The grid definition template: the grid-family kwargs given (_GDT's
+    # selectors); its geometry checks them and fills section 3's fields.
+    family = dict(
+        gaussian=gaussian or None, reduced_ni=reduced_ni, lambert=lambert,
+        polar_stereo=polar_stereo, mercator=mercator, rotated=rotated,
+        stretched=stretched, spectral=spectral,
+    )
+    tmpl3 = _GDT_BY_KEY.get(frozenset(k for k, v in family.items() if v is not None))
+    if tmpl3 is None:
+        raise ValueError("choose exactly one grid family")
+    g3 = dict(
+        family, grid_template=tmpl3, scan=scanning_mode, la1=lat_first_udeg,
+        lo1=lon_first_udeg, di=dlon_udeg, dj=dlat_udeg, bitmap=bitmap,
+        missing_mask=missing_mask,
+    )
+    vals = _GDT[tmpl3].encode(values, g3)
     spec_sub: int | None = None
     spec_p = 0.0
-    if spectral is not None:
-        spec_t = int(spectral["truncation"])
-        if spec_t < 1:
-            raise ValueError("spectral truncation must be >= 1")
-        if bitmap is not None or missing_mask is not None:
-            raise ValueError("spectral data carries no bitmap/missing mask")
-        if scanning_mode != 0x00:
-            raise ValueError("spectral data has no scanning mode")
-        c = np.asarray(values)
-        npairs = (spec_t + 1) * (spec_t + 2) // 2
-        if c.ndim != 1 or len(c) != npairs or not np.iscomplexobj(c):
+    if form == "sub_truncation":
+        # Template 5.51: the sub-spectrum must contain n = 0, which
+        # 0 <= TS < T guarantees.
+        spec_sub = int(spectral["sub_truncation"])
+        spec_p = float(spectral.get("laplacian", 1.0))
+        if not 0 <= spec_sub < g3["truncation"]:
             raise ValueError(
-                f"triangular T{spec_t} spectrum is a 1-D complex array of "
-                f"{npairs} coefficients (m = 0..T, n = m..T)"
+                f"sub-truncation {spec_sub} must satisfy "
+                f"0 <= TS < T={g3['truncation']}"
             )
-        if len(c) and float(np.abs(c[: spec_t + 1].imag).max()) != 0.0:
+        if not -128.0 <= spec_p <= 128.0:
             raise ValueError(
-                "m = 0 coefficients of a real field have zero imaginary part"
+                f"Laplacian scaling exponent {spec_p} out of range"
             )
-        vals = np.empty(2 * npairs, dtype=np.float64)
-        vals[0::2] = c.real
-        vals[1::2] = c.imag
-        if "sub_truncation" in spectral:
-            # Template 5.51: the sub-spectrum must contain n = 0, which
-            # 0 <= TS < T guarantees.
-            spec_sub = int(spectral["sub_truncation"])
-            spec_p = float(spectral.get("laplacian", 1.0))
-            if not 0 <= spec_sub < spec_t:
-                raise ValueError(
-                    f"sub-truncation {spec_sub} must satisfy "
-                    f"0 <= TS < T={spec_t}"
-                )
-            if not -128.0 <= spec_p <= 128.0:
-                raise ValueError(
-                    f"Laplacian scaling exponent {spec_p} out of range"
-                )
-    else:
-        vals = np.asarray(values, dtype=np.float64)
-    reduced_arr: np.ndarray | None = None
-    if reduced_ni is not None:
-        # Reduced Gaussian grid: ``values`` is the FLAT ragged
-        # concatenation of rows (north -> south), ``reduced_ni`` the
-        # points-per-parallel list encoded into section 3's optional
-        # list with Ni/Di coded missing.
-        reduced_arr = np.asarray(reduced_ni, dtype=np.int64)
-        if vals.ndim != 1 or len(vals) != int(reduced_arr.sum()):
-            raise ValueError(
-                "reduced-grid values must be flat with sum(reduced_ni) points"
-            )
-        if len(reduced_arr) % 2 or len(reduced_arr) < 2 or (reduced_arr <= 0).any():
-            raise ValueError(
-                "a global reduced Gaussian grid has an even positive parallel count"
-            )
-        if (reduced_arr > 0xFFFF).any():
-            raise ValueError("points-per-row exceeds the 2-octet list width")
-        if scanning_mode != 0x00:
-            raise ValueError("Gaussian grids are encoded north-first only")
-        if bitmap is not None and (
-            np.asarray(bitmap).ndim != 1
-            or len(np.asarray(bitmap)) != len(vals)
-        ):
-            # the reduced layout is the FLAT ragged concatenation, so
-            # its bitmap is the same flat mask — section 6 carries
-            # sum(reduced_ni) bits in storage order (the decode side
-            # composed these generically all along; the encoder
-            # refusal was the r15 cross-edition asymmetry)
-            raise ValueError(
-                "a reduced-grid bitmap must be flat with "
-                "sum(reduced_ni) points"
-            )
-        if missing_mask is not None:
-            raise ValueError(
-                "missing_mask not supported on reduced grids "
-                "(use a bitmap)"
-            )
-    elif spec_t is None and vals.ndim != 2:
-        raise ValueError("values must be (nj, ni)")
-    if scanning_mode not in (0x00, 0x40):
-        raise ValueError(f"unsupported scanning mode 0x{scanning_mode:02x}")
-    if gaussian and scanning_mode != 0x00:
-        raise ValueError("Gaussian grids are encoded north-first only")
-    latlon_mod = rotated if rotated is not None else stretched
-    if sum(
-        x is not None
-        for x in (
-            gaussian or None, reduced_arr, lambert, polar_stereo, mercator,
-            latlon_mod, spec_t,
-        )
-    ) > 1:
-        raise ValueError("choose exactly one grid family")
-    if rotated is not None and not -90.0 <= float(
-        rotated["south_pole_lat"]
-    ) <= 90.0:
-        raise ValueError("rotated-grid southern pole latitude out of range")
-    if stretched is not None:
-        if not -90.0 <= float(stretched["pole_lat"]) <= 90.0:
-            raise ValueError("pole-of-stretching latitude out of range")
-        if not 0.0 < float(stretched["factor"]) < 4000.0:
-            raise ValueError(
-                f"stretching factor {stretched['factor']} out of range"
-            )
-    if lambert is not None:
-        _lambert_setup(
-            lambert["lad"], lambert["latin1"], lambert["latin2"],
-            _EARTH_RADIUS_M[6],
-        )  # validates the cone (loud southern-cone reject) at encode
-    if polar_stereo is not None and polar_stereo["lad"] <= -90.0:
-        raise ValueError("degenerate polar-stereographic true-scale latitude")
-    if mercator is not None and not -90.0 < mercator["lad"] < 90.0:
-        raise ValueError("degenerate Mercator true-scale latitude")
     if (rle_table is not None) != ("rle_table" in reads):
         raise ValueError(
             "packing='runlength' and rle_table go together (the level "
             "table IS the quantization)"
         )
-    if spec_t is not None:
-        nj, ni = len(vals) // 2, None  # complex coefficient count; no grid
-    elif reduced_arr is not None:
-        nj, ni = len(reduced_arr), None  # ragged rows: no common Ni
-    else:
-        nj, ni = vals.shape
+    nj, ni = g3["nj"], g3["ni"]
     bm = None if bitmap is None else np.asarray(bitmap, dtype=bool)
     if bm is not None and bm.shape != vals.shape:
         raise ValueError("bitmap shape must match values")
@@ -2694,16 +3239,8 @@ def encode_grib2_message(
         raise ValueError("secondary_substitute requires secondary_mask")
     if log_offset is not None and "log_offset" not in reads:
         raise ValueError("log_offset requires packing='log'")
-    if (
-        scanning_mode == 0x40
-        and lambert is None
-        and polar_stereo is None
-        and mercator is None
-    ):
-        # lat/lon grids: caller row 0 is ALWAYS northernmost; 0x40
-        # stores rows south-first on the wire.  Projected grids have no
-        # latitude axis — values are stored exactly as given and the
-        # scan bit only orients the per-cell y coordinates.
+    if _south_first(tmpl3, scanning_mode):
+        # caller row 0 is ALWAYS northernmost
         vals = vals[::-1]
         bm = None if bm is None else bm[::-1]
         mm = None if mm is None else mm[::-1]
@@ -2720,7 +3257,8 @@ def encode_grib2_message(
         "secondary": None if sm is None else sm.reshape(-1),
         "secondary_substitute": secondary_substitute,
         "log_offset": log_offset, "aec_block_size": aec_block_size,
-        "aec_rsi": aec_rsi, "rle_table": rle_table, "truncation": spec_t,
+        "aec_rsi": aec_rsi, "rle_table": rle_table,
+        "truncation": g3.get("truncation"),
         "sub_truncation": spec_sub, "laplacian": spec_p,
         "shape": (nj, ni), "bitmap": bm is not None, **fixed,
     }
@@ -2728,228 +3266,7 @@ def encode_grib2_message(
     s5 = _pack_section(_S5, p)
     s7 = _frame(7, emit())
     s1 = _pack_section(_S1, {"reftime": reftime})
-    earth = (
-        bytes([6, 0xFF])  # shape of earth: spherical r=6371229 m, no scale
-        + b"\xff\xff\xff\xff"  # scaled radius (missing)
-        + bytes([0xFF]) + b"\xff\xff\xff\xff"  # major axis sf + value (missing)
-        + bytes([0xFF]) + b"\xff\xff\xff\xff"  # minor axis sf + value (missing)
-    )
-    if spec_t is not None:
-        # Template 3.50 (spherical harmonic coefficients): J/K/M
-        # pentagonal resolution parameters (triangular here: all T),
-        # representation type 1 (associated Legendre of the first
-        # kind), mode 1 (the standard complex ordering m = 0..M,
-        # n = m..J).  Section 3's point count holds the number of
-        # COMPLEX coefficients; there is no optional list.
-        s3 = _frame(
-            3,
-            bytes([0])
-            + struct.pack(">I", nj)  # (T+1)(T+2)/2 complex coefficients
-            + bytes([0, 0])
-            + struct.pack(">H", 50)
-            + struct.pack(">III", spec_t, spec_t, spec_t)
-            + bytes([1, 1]),  # representation type 1, mode 1
-        )
-    elif mercator is not None:
-        # Template 3.10 (Mercator, true scale at LaD): La2/Lo2 derive
-        # from the mesh; Di/Dj ride in millimetres at LaD.  ``mercator``
-        # keys: la1, lo1 (degrees of cell 0,0), lad, dx_m, dy_m.
-        mx1, my1 = mercator_forward(
-            mercator["la1"], mercator["lo1"], mercator["lad"],
-            _EARTH_RADIUS_M[6],
-        )
-        sj_enc = 1.0 if scanning_mode & 0x40 else -1.0
-        la2, lo2 = mercator_inverse(
-            float(mx1) + (ni - 1) * mercator["dx_m"],
-            float(my1) + sj_enc * (nj - 1) * mercator["dy_m"],
-            mercator["lad"],
-            _EARTH_RADIUS_M[6],
-        )
-        tmpl310 = (
-            earth
-            + struct.pack(">I", ni)
-            + struct.pack(">I", nj)
-            + _s32be(int(round(mercator["la1"] * 1e6)))
-            + _s32be(int(round(mercator["lo1"] * 1e6)))
-            + bytes([0x08])
-            + _s32be(int(round(mercator["lad"] * 1e6)))
-            + _s32be(int(round(float(la2) * 1e6)))
-            + _s32be(int(round(float(lo2) * 1e6)))
-            + bytes([scanning_mode])
-            + struct.pack(">I", 0)  # orientation
-            + struct.pack(">I", int(round(mercator["dx_m"] * 1e3)))
-            + struct.pack(">I", int(round(mercator["dy_m"] * 1e3)))
-        )
-        s3 = _frame(
-            3,
-            bytes([0])
-            + struct.pack(">I", ni * nj)
-            + bytes([0, 0])
-            + struct.pack(">H", 10)
-            + tmpl310,
-        )
-    elif polar_stereo is not None:
-        # Template 3.20 (polar stereographic, north aspect): the 3.30
-        # layout truncated after the scanning mode (no standard
-        # parallels).  ``polar_stereo`` keys: la1, lo1 (degrees of cell
-        # 0,0), lad (true-scale latitude), lov (orientation), dx_m,
-        # dy_m (metres).
-        tmpl320 = (
-            earth
-            + struct.pack(">I", ni)
-            + struct.pack(">I", nj)
-            + _s32be(int(round(polar_stereo["la1"] * 1e6)))
-            + _s32be(int(round(polar_stereo["lo1"] * 1e6)))
-            + bytes([0x08])
-            + _s32be(int(round(polar_stereo["lad"] * 1e6)))
-            + _s32be(int(round(polar_stereo["lov"] * 1e6)))
-            + struct.pack(">I", int(round(polar_stereo["dx_m"] * 1e3)))
-            + struct.pack(">I", int(round(polar_stereo["dy_m"] * 1e3)))
-            + bytes([0])  # projection centre: north pole
-            + bytes([scanning_mode])
-        )
-        s3 = _frame(
-            3,
-            bytes([0])
-            + struct.pack(">I", ni * nj)
-            + bytes([0, 0])
-            + struct.pack(">H", 20)
-            + tmpl320,
-        )
-    elif lambert is not None:
-        # Template 3.30 (Lambert conformal conic): Nx/Ny share 3.0's
-        # octets, then La1/Lo1, LaD/LoV, Dx/Dy in MILLImetres, the
-        # projection-centre flag, scanning mode, and the two standard
-        # parallels. ``lambert`` keys: la1, lo1 (degrees of cell 0,0),
-        # lad, lov, latin1, latin2 (degrees), dx_m, dy_m (metres).
-        tmpl330 = (
-            earth
-            + struct.pack(">I", ni)
-            + struct.pack(">I", nj)
-            + _s32be(int(round(lambert["la1"] * 1e6)))
-            + _s32be(int(round(lambert["lo1"] * 1e6)))
-            + bytes([0x08])  # resolution/component flags (u/v grid-relative)
-            + _s32be(int(round(lambert["lad"] * 1e6)))
-            + _s32be(int(round(lambert["lov"] * 1e6)))
-            + struct.pack(">I", int(round(lambert["dx_m"] * 1e3)))
-            + struct.pack(">I", int(round(lambert["dy_m"] * 1e3)))
-            + bytes([0])  # projection centre: north pole on plane
-            + bytes([scanning_mode])
-            + _s32be(int(round(lambert["latin1"] * 1e6)))
-            + _s32be(int(round(lambert["latin2"] * 1e6)))
-            + _s32be(-90_000_000)  # south pole of projection
-            + _s32be(0)
-        )
-        s3 = _frame(
-            3,
-            bytes([0])
-            + struct.pack(">I", ni * nj)
-            + bytes([0, 0])
-            + struct.pack(">H", 30)
-            + tmpl330,
-        )
-    elif reduced_arr is not None:
-        # Template 3.40, REDUCED form: Ni and Di are coded missing and
-        # the points-per-parallel list rides after the 72-octet
-        # template body (2-octet entries, interpretation 1 — full
-        # circles), the layout ERA5's native archives ship.
-        lats = gaussian_latitudes(nj)
-        nmax = int(reduced_arr.max())
-        tmpl340 = (
-            earth
-            + b"\xff\xff\xff\xff"  # Ni: coded missing (per-row counts)
-            + struct.pack(">I", nj)
-            + struct.pack(">I", 0)  # basic angle
-            + b"\xff\xff\xff\xff"  # subdivisions (missing)
-            + _s32be(int(round(lats[0] * 1e6)))
-            + _s32be(lon_first_udeg)
-            + bytes([0x00])  # resolution flags: no common i-increment
-            + _s32be(int(round(lats[-1] * 1e6)))
-            + _s32be(lon_first_udeg + int(round((nmax - 1) * 360e6 / nmax)))
-            + b"\xff\xff\xff\xff"  # Di: coded missing
-            + struct.pack(">I", nj // 2)  # N
-            + bytes([scanning_mode])
-        )
-        s3 = _frame(
-            3,
-            bytes([0])
-            + struct.pack(">I", int(reduced_arr.sum()))
-            + bytes([2, 1])  # list entry width 2, points per full row
-            + struct.pack(">H", 40)
-            + tmpl340
-            + b"".join(struct.pack(">H", int(n)) for n in reduced_arr),
-        )
-    elif gaussian:
-        # Template 3.40: identical octet layout to 3.0 except La1/La2
-        # are the first/last GAUSSIAN latitudes and the Dj field holds
-        # N (parallels pole-to-equator).  Caller lat/dlat kwargs are
-        # ignored for the latitude axis — the grid IS the quadrature.
-        lats = gaussian_latitudes(nj)
-        lat_a = int(round(lats[0] * 1e6))
-        lat_b = int(round(lats[-1] * 1e6))
-        dj_field = struct.pack(">I", nj // 2)
-    else:
-        lat_a = lat_first_udeg if scanning_mode == 0 else lat_first_udeg - (nj - 1) * dlat_udeg
-        lat_b = lat_first_udeg - (nj - 1) * dlat_udeg if scanning_mode == 0 else lat_first_udeg
-        dj_field = struct.pack(">I", dlat_udeg)
-    if (
-        spec_t is None
-        and lambert is None
-        and polar_stereo is None
-        and mercator is None
-        and reduced_arr is None
-    ):
-        tmpl30 = (
-        earth
-        + struct.pack(">I", ni)
-        + struct.pack(">I", nj)
-        + struct.pack(">I", 0)  # basic angle
-        + b"\xff\xff\xff\xff"  # subdivisions (missing)
-        + _s32be(lat_a)
-        + _s32be(lon_first_udeg)
-        + bytes([0x30])  # resolution/component flags: both increments given
-        + _s32be(lat_b)
-        + _s32be(lon_first_udeg + (ni - 1) * dlon_udeg)
-        + struct.pack(">I", dlon_udeg)
-        + dj_field
-        + bytes([scanning_mode])  # 0x00 = +i,−j; 0x40 = +i,+j (south first)
-        )
-        # Template 3.1 (ROTATED lat/lon): the 3.0 body verbatim — its
-        # La1/Lo1/Di/Dj are coordinates IN THE ROTATED SYSTEM — plus
-        # the southern pole of projection and the angle of rotation
-        # (microdegrees, signed-magnitude, the g2clib template layout).
-        tmpl_extra = b""
-        tmpl_num = 40 if gaussian else 0
-        if rotated is not None:
-            tmpl_num = 1
-            tmpl_extra = (
-                _s32be(int(round(float(rotated["south_pole_lat"]) * 1e6)))
-                + _s32be(int(round(float(rotated["south_pole_lon"]) * 1e6)))
-                + _s32be(int(round(float(rotated.get("angle", 0.0)) * 1e6)))
-            )
-        if stretched is not None:
-            # Template 3.2 (stretched) appends the pole of stretching
-            # (µdeg signed-magnitude) + the stretching factor ×10^6;
-            # template 3.3 (stretched AND rotated) appends it AFTER the
-            # rotation block — the grid axes are coordinates in the
-            # rotated-and-stretched system.
-            tmpl_num = 3 if rotated is not None else 2
-            tmpl_extra += (
-                _s32be(int(round(float(stretched["pole_lat"]) * 1e6)))
-                + _s32be(int(round(float(stretched["pole_lon"]) * 1e6)))
-                + struct.pack(
-                    ">I", int(round(float(stretched["factor"]) * 1e6))
-                )
-            )
-        s3 = _frame(
-            3,
-            bytes([0])
-            + struct.pack(">I", ni * nj)
-            + bytes([0, 0])
-            + struct.pack(">H", tmpl_num)
-            + tmpl30
-            + tmpl_extra,
-        )
+    s3 = _pack_section(_S3, g3)
     # The product kwargs pick the section-4 template (_PDT lists the
     # kwargs each one needs) and fill its fields (the dotted keys in its
     # blocks): ``statistical`` {process, interval_end, range_hours,
@@ -3499,14 +3816,11 @@ def decode_grib2_fields(msg: bytes) -> "list[Grib2Record]":
 def decode_grib2(msg: bytes) -> Grib2Record:
     """Decode one SINGLE-FIELD GRIB2 message.
 
-    Grid templates 3.0 (lat/lon), 3.10 (Mercator), 3.20 (polar
-    stereographic), 3.30 (Lambert conformal), 3.40 (global Gaussian,
-    regular AND reduced per-row-Ni form), 3.50 (spherical harmonic
-    coefficients, triangular), plus the rotated/stretched lat/lon
-    forms 3.1/3.2/3.3; every product template of the ``_PDT`` table
-    (the record's ``product_template`` carries the number) and every
-    data representation template of the ``_DRT`` table (its
-    ``packing_template``; 5.50/5.51 must pair with 3.50).  Everything
+    Every grid definition template of the ``_GDT`` table (the record's
+    ``grid_template``), every product template of the ``_PDT`` table
+    (its ``product_template``) and every data representation template
+    of the ``_DRT`` table (its ``packing_template``; 5.50/5.51 must pair
+    with the spectral grid 3.50).  Everything
     else raises — including multi-field messages, which this strict
     single-record API rejects via ``_sections``; use
     :func:`decode_grib2_fields` for those."""
@@ -3522,335 +3836,11 @@ def _decode_field(s: dict[int, bytes]) -> Grib2Record:
     discipline = s[0][6]
     reftime = _parse_section(_S1, s[1])["reftime"]
 
-    s3 = s[3]
-    (tmpl_no,) = struct.unpack_from(">H", s3, 12)
-    if tmpl_no not in _GRID_TEMPLATES:
-        raise ValueError(f"unsupported grid definition template {tmpl_no}")
-    spectral_truncation: int | None = None
-    if tmpl_no == 50:
-        # Template 3.50 (spherical harmonic coefficients): J/K/M
-        # pentagonal resolution parameters, representation type
-        # (code table 3.6) and mode (3.7).  Only the triangular
-        # J = K = M truncation in type-1 (associated Legendre) mode-1
-        # ordering is supported -- anything else reorders or redefines
-        # the coefficient sequence, and guessing would synthesize a
-        # garbage field.  Section 3's point count holds the number of
-        # COMPLEX coefficients (T+1)(T+2)/2; there is no grid, so the
-        # affine fields are zero and consumers must key on
-        # spectral_truncation (the landing scan rejects these records:
-        # synthesis to a Gaussian grid -- spectral_synthesis -- is an
-        # explicit step, never an implicit georef).
-        sg = s3[14:]
-        if len(sg) < 14:
-            raise ValueError("truncated grid definition template 3.50")
-        (sj,) = struct.unpack_from(">I", sg, 0)
-        (sk,) = struct.unpack_from(">I", sg, 4)
-        (sm,) = struct.unpack_from(">I", sg, 8)
-        if not (sj == sk == sm) or sj < 1:
-            raise ValueError(
-                f"only triangular spectral truncation supported "
-                f"(J={sj}, K={sk}, M={sm})"
-            )
-        if sg[12] != 1 or sg[13] != 1:
-            raise ValueError(
-                f"unsupported spectral representation type {sg[12]} / "
-                f"mode {sg[13]}"
-            )
-        npairs = (sj + 1) * (sj + 2) // 2
-        (npoints3,) = struct.unpack_from(">I", s3, 6)
-        if npoints3 != npairs:
-            raise ValueError(
-                f"T{sj} spectrum has {npairs} complex coefficients, "
-                f"section 3 declares {npoints3}"
-            )
-        spectral_truncation = int(sj)
-        ni, nj = None, npairs
-        row_ni = None
-        lambert_params = None
-        gaussian_n = None
-        latitudes = None
-        dlat = dlon = lat_first = lon_first = 0
-        scan = 0x00
-    else:
-        g = s3[14:]  # 3.0/3.1/3.40 share one layout; 3.10/3.20/3.30 share Nx/Ny
-        (ni,) = struct.unpack_from(">I", g, 16)
-        (nj,) = struct.unpack_from(">I", g, 20)
-        row_ni: np.ndarray | None = None
-        if tmpl_no == 40 and ni == 0xFFFFFFFF:
-            # REDUCED Gaussian grid (ERA5's native archive layout): Ni is
-            # coded missing and section 3's optional list (octets 11-12:
-            # entry width + interpretation 1 = points per full parallel)
-            # carries the number of points on each row, north -> south.
-            if nj == 0xFFFFFFFF:
-                raise ValueError("grid dimensions coded missing on template 40")
-            list_w = s3[10]
-            if list_w == 0 or s3[11] != 1:
-                raise ValueError(
-                    "reduced grid without a points-per-row list "
-                    f"(list octets {s3[10]}, interpretation {s3[11]})"
-                )
-            off = 14 + 58  # template 3.40 body spans section octets 15-72
-            if len(s3) < off + nj * list_w:
-                raise ValueError("truncated points-per-row list")
-            row_ni = np.array(
-                [
-                    int.from_bytes(s3[off + k * list_w : off + (k + 1) * list_w], "big")
-                    for k in range(nj)
-                ],
-                dtype=np.int64,
-            )
-            (npoints3,) = struct.unpack_from(">I", s3, 6)
-            if int(row_ni.sum()) != npoints3 or (row_ni <= 0).any():
-                raise ValueError(
-                    "points-per-row list disagrees with the section-3 point count"
-                )
-            ni = None
-        elif ni == 0xFFFFFFFF or nj == 0xFFFFFFFF:
-            # quasi-regular geometry on any other template has no per-row
-            # machinery here — decoding it with sentinel dims would be
-            # silent geography corruption
-            raise ValueError(f"grid dimensions coded missing on template {tmpl_no}")
-        lambert_params: dict | None = None
-        if tmpl_no == 10:
-            # Template 3.10 (Mercator): its own octet layout past Lo1 —
-            # LaD at g[33], La2/Lo2, scanning at g[45], Di/Dj at g[50]/g[54]
-            # in millimetres at LaD.
-            if g[0] not in _EARTH_RADIUS_M:
-                raise ValueError(
-                    f"unsupported shape of earth {g[0]} for projected grids"
-                )
-            scan = g[45]
-            if scan not in (0x00, 0x40):
-                raise ValueError(
-                    f"unsupported scanning mode 0x{scan:02x} (only +i,±j row-major)"
-                )
-            (orientation,) = struct.unpack_from(">I", g, 46)
-            if orientation != 0:
-                # a rotated Mercator grid decoded as orientation-0 would be
-                # silent geography corruption
-                raise ValueError(
-                    f"non-zero Mercator grid orientation {orientation} not supported"
-                )
-            lambert_params = {
-                "kind": "mercator",
-                "la1": _rs32be(g, 24) / 1e6,
-                "lo1": _rs32be(g, 28) / 1e6,
-                "lad": _rs32be(g, 33) / 1e6,
-                "dx_m": _projected_increment(g, 50) / 1e3,
-                "dy_m": _projected_increment(g, 54) / 1e3,
-                "radius_m": _EARTH_RADIUS_M[g[0]],
-            }
-            if not -90.0 < lambert_params["lad"] < 90.0:
-                raise ValueError("degenerate Mercator true-scale latitude")
-            lp = lambert_params
-            x1, y1 = mercator_forward(
-                lp["la1"], lp["lo1"], lp["lad"], lp["radius_m"]
-            )
-            lp["x1"], lp["y1"] = float(x1), float(y1)
-            lp["sj"] = 1.0 if scan & 0x40 else -1.0
-            # Cross-check the Di/Dj-derived far corner against the
-            # message's stated La2/Lo2: a record whose increments disagree
-            # with its declared extent would otherwise decode with
-            # silently Di-derived geometry (loud-stop policy).  Tolerance
-            # covers µdeg corner rounding plus mm increment rounding
-            # accumulated across the mesh.
-            la2_stated = _rs32be(g, 37) / 1e6
-            lo2_stated = _rs32be(g, 41) / 1e6
-            la2_mesh, lo2_mesh = mercator_inverse(
-                lp["x1"] + (ni - 1) * lp["dx_m"],
-                lp["y1"] + lp["sj"] * (nj - 1) * lp["dy_m"],
-                lp["lad"],
-                lp["radius_m"],
-            )
-            dlon_wrap = abs(
-                (float(lo2_mesh) - lo2_stated + 180.0) % 360.0 - 180.0
-            )
-            if abs(float(la2_mesh) - la2_stated) > 1e-3 or dlon_wrap > 1e-3:
-                raise ValueError(
-                    "Mercator grid increments disagree with the stated far "
-                    f"corner: Di/Dj-derived ({float(la2_mesh):.6f}, "
-                    f"{float(lo2_mesh):.6f}) vs La2/Lo2 ({la2_stated:.6f}, "
-                    f"{lo2_stated:.6f})"
-                )
-            lat_first = _rs32be(g, 24)
-            lon_first = _rs32be(g, 28)
-        elif tmpl_no in (20, 30):
-            if g[0] not in _EARTH_RADIUS_M:
-                raise ValueError(
-                    f"unsupported shape of earth {g[0]} for projected grids"
-                )
-            if g[49] & 0xC0:
-                # bit 1 (0x80): south pole on the projection plane; bit 2
-                # (0x40): bi-polar symmetric projection — decoding either
-                # with a single northern cone would be silent geography
-                # corruption.
-                raise ValueError(
-                    f"unsupported Lambert projection centre flag 0x{g[49]:02x} "
-                    "(southern / bi-polar cones not supported)"
-                )
-            scan = g[50]
-            if scan not in (0x00, 0x40):
-                raise ValueError(
-                    f"unsupported scanning mode 0x{scan:02x} (only +i,±j row-major)"
-                )
-            lambert_params = {
-                "kind": "ps" if tmpl_no == 20 else "lcc",
-                "la1": _rs32be(g, 24) / 1e6,
-                "lo1": _rs32be(g, 28) / 1e6,
-                "lad": _rs32be(g, 33) / 1e6,
-                "lov": _rs32be(g, 37) / 1e6,
-                "dx_m": _projected_increment(g, 41) / 1e3,
-                "dy_m": _projected_increment(g, 45) / 1e3,
-                "radius_m": _EARTH_RADIUS_M[g[0]],
-            }
-            if tmpl_no == 20 and lambert_params["lad"] <= -90.0:
-                raise ValueError("degenerate polar-stereographic true-scale latitude")
-            lp = lambert_params
-            if tmpl_no == 30:
-                lp["latin1"] = _rs32be(g, 51) / 1e6
-                lp["latin2"] = _rs32be(g, 55) / 1e6
-                x1, y1 = lambert_forward(
-                    lp["la1"], lp["lo1"], lp["lad"], lp["lov"],
-                    lp["latin1"], lp["latin2"], lp["radius_m"],
-                )
-            else:
-                x1, y1 = polar_stereo_forward(
-                    lp["la1"], lp["lo1"], lp["lad"], lp["lov"], lp["radius_m"]
-                )
-            # Anchor + mesh orientation, resolved NOW; the O(cells) inverse
-            # runs lazily on first cell_lats/lons_deg access.  +i is always
-            # east along a row; scanning bit 0x40 means +j steps +y,
-            # otherwise -y.  No row normalization — projected grids have no
-            # latitude axis to normalize.
-            lp["x1"], lp["y1"] = float(x1), float(y1)
-            lp["sj"] = 1.0 if scan & 0x40 else -1.0
-            lat_first = _rs32be(g, 24)
-            lon_first = _rs32be(g, 28)
-        else:
-            lat_first = _rs32be(g, 32)
-            lon_first = _rs32be(g, 36)
-        # Same loud-stop policy as grib1: an unsupported scanning mode
-        # reorders cells — decoding it as row-major +i,−j is silent
-        # geography corruption; 0x40 (+j, south row first) is a pure row
-        # reorder and normalizes on decode. Resolution/component flags
-        # 0x20 AND 0x10 mean the i- and j-increments are given; if EITHER
-        # is unset that increment field holds the all-ones missing sentinel
-        # and dlat/dlon would decode as ~4.29e9 microdegrees — require both.
-        gaussian_n: int | None = None
-        latitudes: np.ndarray | None = None
-        if tmpl_no in (10, 20, 30):
-            dlat = dlon = 0  # projected grid: no affine lat/lon axes
-        else:
-            scan = g[57]
-            if scan not in (0x00, 0x40):
-                raise ValueError(
-                    f"unsupported scanning mode 0x{scan:02x} (only +i,±j row-major)"
-                )
-            # Basic angle / subdivisions (octets 39-46): a non-default
-            # unit re-scales EVERY coordinate and increment — reading a
-            # millidegree-unit grid as microdegrees is 1000x silent
-            # geography corruption, so only the default microdegree
-            # unit decodes: basic angle 0 / coded missing, or the
-            # equivalent explicit 1/10^6.
-            (basic,) = struct.unpack_from(">I", g, 24)
-            (subdiv,) = struct.unpack_from(">I", g, 28)
-            if not (
-                basic in (0, 0xFFFFFFFF)
-                or (basic == 1 and subdiv == 1_000_000)
-            ):
-                raise ValueError(
-                    f"non-default basic angle {basic}/{subdiv} not "
-                    "supported (coordinates would not be microdegrees)"
-                )
-            # 3.0 carries BOTH increments; if either flag is unset that
-            # field holds the all-ones missing sentinel and would decode as
-            # ~4.29e9 microdegrees.  3.40's Dj octets hold N (always
-            # meaningful), so only the i-increment flag applies there — and
-            # a REDUCED grid has no common i-increment at all (Di coded
-            # missing, per-row spacing 360/row_ni[j]).
-            need_flags = 0x00 if row_ni is not None else (
-                0x20 if tmpl_no == 40 else 0x30
-            )
-            if (g[40] & need_flags) != need_flags:
-                raise ValueError("direction increments not given (resolution flags)")
-            if row_ni is not None:
-                dlon = 0
-            else:
-                (dlon,) = struct.unpack_from(">I", g, 49)
-            if tmpl_no == 40:
-                # Dj's octets hold N; only the GLOBAL grid (nj == 2N) is
-                # supported — a latitude subset would need La1/La2 root
-                # matching, and silently assuming global would misplace rows.
-                (gaussian_n,) = struct.unpack_from(">I", g, 53)
-                if scan != 0x00:
-                    raise ValueError(
-                        "Gaussian grids support north-first scanning only"
-                    )
-                if nj != 2 * gaussian_n:
-                    raise ValueError(
-                        f"non-global Gaussian grid (nj={nj}, N={gaussian_n}) not supported"
-                    )
-                latitudes = gaussian_latitudes(nj)
-                dlat = 0
-            else:
-                (dlat,) = struct.unpack_from(">I", g, 53)
-            if tmpl_no in (1, 3):
-                # Templates 3.1/3.3 (ROTATED lat/lon — COSMO/HIRLAM;
-                # 3.3 adds stretching): the 3.0 body's axes are
-                # coordinates IN THE ROTATED SYSTEM; the southern pole
-                # of projection + angle of rotation follow at octets
-                # 73-84.  True per-cell coordinates come from the lazy
-                # unrotation (rotated_unrotate); the affine fields stay
-                # the ROTATED axes — consumers must not read them as
-                # geography, which is why the landing source treats
-                # these like the projected family (cell arrays, affine
-                # NULL).
-                if len(g) < 70:
-                    raise ValueError(
-                        f"truncated grid definition template 3.{tmpl_no}"
-                    )
-                lambert_params = {
-                    "kind": "rotated",
-                    "sp_lat": _rs32be(g, 58) / 1e6,
-                    "sp_lon": _rs32be(g, 62) / 1e6,
-                    "angle": _rs32be(g, 66) / 1e6,
-                }
-                if not -90.0 <= lambert_params["sp_lat"] <= 90.0:
-                    raise ValueError(
-                        "rotated-grid southern pole latitude out of range"
-                    )
-            if tmpl_no in (2, 3):
-                # Templates 3.2/3.3 (STRETCHED lat/lon — the ARPEGE/
-                # ALADIN Schmidt geometry): the pole of stretching
-                # (µdeg) + the stretching factor ×10^6 follow the 3.0
-                # body (3.2) or the rotation block (3.3).  The axes are
-                # coordinates in the stretched (and rotated, for 3.3)
-                # system; true per-cell coordinates come from the lazy
-                # Schmidt unstretch (then unrotation, for 3.3).
-                off = 70 if tmpl_no == 3 else 58
-                if len(g) < off + 12:
-                    raise ValueError(
-                        f"truncated grid definition template 3.{tmpl_no}"
-                    )
-                (raw_c,) = struct.unpack_from(">I", g, off + 8)
-                if raw_c in (0, 0xFFFFFFFF):
-                    raise ValueError(
-                        "stretching factor missing or zero"
-                    )
-                st = {
-                    "st_lat": _rs32be(g, off) / 1e6,
-                    "st_lon": _rs32be(g, off + 4) / 1e6,
-                    "st_c": raw_c / 1e6,
-                }
-                if not -90.0 <= st["st_lat"] <= 90.0:
-                    raise ValueError(
-                        "pole-of-stretching latitude out of range"
-                    )
-                if tmpl_no == 2:
-                    lambert_params = {"kind": "stretched", **st}
-                else:
-                    lambert_params["kind"] = "stretched_rotated"
-                    lambert_params.update(st)
+    g = _parse_section(_S3, s[3])
+    tmpl3 = g["grid_template"]
+    grid = _GDT[tmpl3].decode(g, s[3])
+    nj, ni, row_ni = grid["nj"], grid["ni"], grid.get("row_ni")
+    spectral_truncation = grid.get("spectral_truncation")
 
     pdt = _parse_section(_S4, s[4])
 
@@ -3860,10 +3850,10 @@ def _decode_field(s: dict[int, bytes]) -> Grib2Record:
     tmpl5 = _template_number(_S5, s[5])
     if (tmpl5 in _SPECTRAL_DRT) != (spectral_truncation is not None):
         raise ValueError(
-            f"grid definition template {tmpl_no} cannot pair with data "
+            f"grid definition template {tmpl3} cannot pair with data "
             f"representation template {tmpl5}"
         )
-    p = _parse_section(_S5, s[5])
+    p = _parse_section(_S5, s[5], t=tmpl5)
 
     s6 = s[6]
     if len(s6) < 6:
@@ -3911,34 +3901,20 @@ def _decode_field(s: dict[int, bytes]) -> Grib2Record:
             f"{'spectrum' if spectral_truncation is not None else 'reduced grid'}"
             f" holds {len(values)} values, expected {total_cells}"
         )
-    if scan == 0x40 and tmpl_no not in (10, 20, 30):
-        # south-first storage → normalize to north-first (lat/lon grids
-        # only; projected grids keep storage order — their per-cell
-        # coordinate arrays already reflect the scan direction)
-        values = values[::-1]
-        lat_first = lat_first + (nj - 1) * dlat  # La1 was the southern edge
+    if _south_first(tmpl3, g.get("scan")):
+        values = values[::-1]  # south-first storage -> north-first
     return Grib2Record(
         discipline=discipline,
         reftime=reftime,
-        ni=ni,
-        nj=nj,
-        lat_first_udeg=lat_first,
-        lon_first_udeg=lon_first,
-        dlat_udeg=dlat,
-        dlon_udeg=dlon,
         decimal_scale=p.get("decimal_scale", 0),
         binary_scale=p.get("binary_scale", 0),
         reference_value=float(p.get("reference_value", 0.0)),
         nbits=p["nbits"],
         values=values,
         packing_template=tmpl5,
-        gaussian_n=gaussian_n,
-        latitudes_deg=latitudes,
-        grid_template=tmpl_no,
-        lambert_params=lambert_params,
-        row_ni=row_ni,
-        spectral_truncation=spectral_truncation,
+        grid_template=tmpl3,
         spectral_sub_truncation=p.get("js"),
+        **grid,
         **pdt,
     )
 

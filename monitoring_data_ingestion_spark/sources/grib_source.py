@@ -232,54 +232,31 @@ def _grib2_field_header(s: dict) -> dict:
     come from ``_sections`` (single-field) or ``_iter_field_sections``
     (submessage archives), so header cost stays a few hundred bytes
     per field either way."""
-    import struct
-
     from ..grid.grib2 import (
-        _GRID_TEMPLATES,
         _S1,
+        _S3,
         _S4,
+        _grid_shape,
         _parse_section,
         surface_level_lenient,
         surface_level_text,
     )
 
-    s3 = s[3]
     year, month, day, hour, _ = _parse_section(_S1, s[1])["reftime"]
-    # Mirror decode_grib2's template gates: reading Ni/Nj or level
-    # octets through a different template's layout would emit garbage
-    # metadata exactly where the full decode stops loudly.
-    (tmpl3,) = struct.unpack_from(">H", s3, 12)
-    if tmpl3 not in _GRID_TEMPLATES:
-        raise ValueError(f"unsupported grid definition template {tmpl3}")
-    # Category, number, surfaces and lead through the same template
-    # table as the full decode.  LENIENT here: a calendar-unit or
-    # sub-hour lead cannot fill the integer column, but the inventory
-    # must still LIST the record (wgrib2 lists every record of a mixed
-    # archive), so it reads None; the full decode keeps the loud stop.
+    # Section 3 through the same template table as the full decode, in
+    # its head form: the template gate and Ni/Nj, and none of the
+    # geometry checks, which stay with the decode.  Section 4 likewise:
+    # a calendar-unit or sub-hour lead cannot fill the integer column,
+    # but the inventory must still LIST the record (wgrib2 lists every
+    # record of a mixed archive), so it reads None; the full decode
+    # keeps the loud stop.
+    g = _parse_section(_S3, s[3], head=True)
     h = _parse_section(_S4, s[4], head=True)
-    if tmpl3 == 50:
-        # Spectral records have no Ni/Nj — the inventory LISTS them
-        # (wgrib2 lists spectral fields) with NULL dimensions; only the
-        # gridpoint DECODE rejects them (grib_source._decode_batches).
-        ni = nj = None
-    else:
-        g = s3[14:]
-        (ni,) = struct.unpack_from(">I", g, 16)
-        (nj,) = struct.unpack_from(">I", g, 20)
-        if nj == 0xFFFFFFFF:
-            # nj is never legitimately missing; letting the sentinel
-            # through would overflow the int32 schema column opaquely
-            raise ValueError(
-                f"grid dimensions coded missing on template {tmpl3}"
-            )
-        if ni == 0xFFFFFFFF and tmpl3 == 40:
-            ni = None  # reduced Gaussian grid: per-row counts, no common Ni
-        elif ni == 0xFFFFFFFF:
-            # same gate as _decode_field: a sentinel Ni on any
-            # non-reduced template would inventory garbage dimensions
-            raise ValueError(
-                f"grid dimensions coded missing on template {tmpl3}"
-            )
+    # Spectral records have no Ni/Nj: the inventory LISTS them (wgrib2
+    # lists spectral fields) with NULL dimensions; only the gridpoint
+    # DECODE rejects them (grib_source._decode_batches).  A reduced
+    # Gaussian grid has no common Ni.
+    ni, nj = _grid_shape(g) if "nj" in g else (None, None)
     l2_value, l2_scale = h["level2_value"], h["level2_scale"]
     return {
         "category": h["category"],
@@ -710,7 +687,7 @@ def _decode_record_row(
             interval_end = pd.Timestamp(
                 year=ey, month=em, day=ed, hour=eh, minute=emi
             )
-        if rec.grid_template in (1, 2, 3, 10, 20, 30):
+        if rec.lambert_params is not None:
             # Projected grids (Mercator / polar stereo /
             # Lambert) have no affine lat/lon axes, and a
             # ROTATED and/or STRETCHED lat/lon grid's

@@ -1201,3 +1201,26 @@ def test_corrupt_scan_guards_fail_loudly_not_silently():
     bad2[gds_off + 6 : gds_off + 8] = b"\xff\xff"
     with pytest.raises(ValueError, match="points-per-row list"):
         decode_grib1(bytes(bad2))
+
+
+@pytest.mark.parametrize(
+    "kwargs, label",
+    [
+        (dict(binary_scale=40000), "binary scale factor 40000"),
+        (dict(binary_scale=-40000), "binary scale factor -40000"),
+        (dict(decimal_scale=400), "decimal scale factor 400"),
+        (dict(decimal_scale=-40000), "decimal scale factor -40000"),
+        (dict(binary_scale=-2000), "binary scale factor -2000"),
+        (dict(decimal_scale=-400), "decimal scale factor -400"),
+    ],
+)
+def test_out_of_range_scale_factors_name_the_field(kwargs, label):
+    """A binary or decimal scale factor past its 2-octet sign-magnitude
+    width, or whose power leaves the normal float range, stops with the
+    ValueError that names it — never a raw OverflowError, nor an nbits
+    complaint about the NaN increments a zero 2^E leaves, nor a message
+    a zero 10^D decodes to NaN."""
+    import re
+
+    with pytest.raises(ValueError, match=f"^{re.escape(label)} out of range"):
+        encode_grib1_message(np.ones((2, 3)), **kwargs)

@@ -4370,6 +4370,10 @@ _BAND = dict(series=300, number=15, instrument=7, scale=-1, value=912)
         (dict(nbits=300), "nbits 300"),
         (dict(packing="aec", aec_block_size=300), "AEC block size 300"),
         (dict(packing="aec", aec_rsi=70000), "AEC reference sample interval 70000"),
+        (dict(binary_scale=40000), "binary scale factor 40000"),
+        (dict(binary_scale=-40000), "binary scale factor -40000"),
+        (dict(decimal_scale=400), "decimal scale factor 400"),
+        (dict(decimal_scale=-400), "decimal scale factor -400"),
     ],
 )
 def test_out_of_width_product_fields_name_the_field(kwargs, label):
@@ -4510,25 +4514,27 @@ def test_template_outside_the_table_is_refused_on_every_surface(tmpl):
 
 
 def test_product_templates_are_defined_only_by_the_table():
-    """Source scan: the section-4 layout lives in ``grib2._PDT`` alone
-    and the section-5 layout in ``grib2._DRT``.  Outside them, neither
-    ``grib2.py`` nor ``grib_source.py`` compares a product- or
-    data-representation-template number against a literal, looks one
-    up in a literal dict, or spells out the supported set (ten or more
-    product template numbers, five or more data representation ones);
-    and the grid-template gate is spelled once, as ``_GRID_TEMPLATES``."""
-    from monitoring_data_ingestion_spark.grid.grib2 import _DRT, _GRID_TEMPLATES, _PDT
+    """Source scan: the section-3 layout lives in ``grib2._GDT`` alone,
+    the section-4 layout in ``grib2._PDT`` and the section-5 layout in
+    ``grib2._DRT``.  Outside them, neither ``grib2.py`` nor
+    ``grib_source.py`` compares a grid-, product- or
+    data-representation-template number against a literal, looks one up
+    in a literal dict, or spells out a list of them (four or more grid
+    template numbers, ten or more product ones, five or more data
+    representation ones)."""
+    from monitoring_data_ingestion_spark.grid.grib2 import _DRT, _GDT, _PDT
 
     found = []
     for table_name, table_set, name_rx, shortest in (
+        ("_GDT", set(_GDT), r"tmpl_no|tmpl3|grid_template", 4),
         ("_PDT", set(_PDT), r"tmpl4|product_template|pdt", 10),
         ("_DRT", set(_DRT), r"tmpl5|packing_template", 5),
     ):
-        found += _template_scan(table_name, table_set, name_rx, shortest, _GRID_TEMPLATES)
+        found += _template_scan(table_name, table_set, name_rx, shortest)
     assert found == []
 
 
-def _template_scan(table_name, table_set, name_rx, shortest, grid_templates):
+def _template_scan(table_name, table_set, name_rx, shortest):
     """The scan for one table: its name, its template numbers, the names
     a template number goes by and the shortest literal list of numbers
     that counts as a second spelling of the table."""
@@ -4562,7 +4568,7 @@ def _template_scan(table_name, table_set, name_rx, shortest, grid_templates):
             id(n)
             for a in ast.walk(tree)
             if isinstance(a, ast.Assign)
-            and any(getattr(t, "id", None) in (table_name, "_GRID_TEMPLATES") for t in a.targets)
+            and any(getattr(t, "id", None) == table_name for t in a.targets)
             for n in ast.walk(a)
         }
         for node in ast.walk(tree):
@@ -4579,7 +4585,7 @@ def _template_scan(table_name, table_set, name_rx, shortest, grid_templates):
                 if isinstance(inner, ast.Dict) and ints(inner):
                     found.append((table_name, rel, node.lineno, "dict lookup"))
             vals = ints(node) if isinstance(node, (ast.Tuple, ast.Set, ast.List)) else None
-            if vals and (len(vals) >= shortest and vals <= table_set or vals == grid_templates):
+            if vals and len(vals) >= shortest and vals <= table_set:
                 found.append((table_name, rel, node.lineno, "template list"))
     return found
 
@@ -4629,3 +4635,125 @@ def test_truncated_data_representation_template_is_named(tmpl):
         ValueError, match=rf"^truncated data representation template 5\.{tmpl}\b"
     ):
         decode_grib2(bytes(cut))
+
+
+def _patch_section3(msg: bytes, patch) -> bytes:
+    """``msg`` with section 3 replaced by ``patch(bytearray of it)``, the
+    section and message lengths re-framed around the result."""
+    import struct
+
+    pos = 16
+    while True:
+        ln, num = struct.unpack_from(">IB", msg, pos)
+        if num == 3:
+            break
+        pos += ln
+    s3 = bytearray(patch(bytearray(msg[pos : pos + ln])))
+    struct.pack_into(">I", s3, 0, len(s3))
+    out = msg[:pos] + bytes(s3) + msg[pos + ln :]
+    return out[:8] + struct.pack(">Q", len(out)) + out[16:]
+
+
+def _at(off: int, value: int, fmt: str = ">I"):
+    """A section-3 patch writing ``value`` at template octet ``off``
+    (0 = section octet 15, the first octet after the template number)."""
+    import struct
+
+    def patch(s3):
+        struct.pack_into(fmt, s3, 14 + off, value)
+        return s3
+
+    return patch
+
+
+_ROTATED = dict(rotated=dict(south_pole_lat=-32.5, south_pole_lon=10.0, angle=2.0))
+_STRETCHED = dict(stretched=dict(pole_lat=46.5, pole_lon=2.6, factor=2.4))
+_MERCATOR = dict(mercator=dict(la1=-10.0, lo1=100.0, lad=20.0, dx_m=50000.0, dy_m=50000.0))
+_POLAR = dict(polar_stereo=dict(
+    la1=47.5, lo1=-110.0, lad=60.0, lov=-100.0, dx_m=25000.0, dy_m=25000.0,
+))
+_LAMBERT = dict(lambert=dict(
+    la1=21.0, lo1=-122.0, lad=38.5, lov=-97.5, latin1=38.5, latin2=38.5,
+    dx_m=3000.0, dy_m=3000.0,
+))
+# Case -> (encode kwargs, section-3 patch, "decode" or "header", message).
+_SECTION3_STOPS = {
+    "Nj missing, decode": (
+        {}, _at(20, 0xFFFFFFFF), "decode", "grid dimensions coded missing on template 0",
+    ),
+    "Nj missing, header": (
+        {}, _at(20, 0xFFFFFFFF), "header", "grid dimensions coded missing on template 0",
+    ),
+    "Ni missing on 3.30, decode": (
+        _LAMBERT, _at(16, 0xFFFFFFFF), "decode",
+        "grid dimensions coded missing on template 30",
+    ),
+    "Ni missing on 3.30, header": (
+        _LAMBERT, _at(16, 0xFFFFFFFF), "header",
+        "grid dimensions coded missing on template 30",
+    ),
+    "Di/Dj zero": (
+        _POLAR, _at(41, 0), "decode", "projected-grid Di/Dj increment missing or zero",
+    ),
+    "rotated pole latitude": (
+        _ROTATED, _at(58, 95_000_000), "decode",
+        "rotated-grid southern pole latitude out of range",
+    ),
+    "stretching pole latitude": (
+        _STRETCHED, _at(58, 95_000_000), "decode",
+        "pole-of-stretching latitude out of range",
+    ),
+    "Mercator orientation": (
+        _MERCATOR, _at(46, 45_000_000), "decode",
+        "non-zero Mercator grid orientation 45000000 not supported",
+    ),
+    "Mercator corner": (
+        _MERCATOR, _at(37, 45_000_000), "decode",
+        "Mercator grid increments disagree with the stated far corner",
+    ),
+    "stretching factor zero": (
+        _STRETCHED, _at(66, 0), "decode", "stretching factor missing or zero",
+    ),
+    "unsupported template, decode": (
+        {}, _at(-2, 5, ">H"), "decode", "unsupported grid definition template 5",
+    ),
+    "unsupported template, header": (
+        {}, _at(-2, 5, ">H"), "header", "unsupported grid definition template 5",
+    ),
+    "truncated 3.1": (
+        _ROTATED, lambda s3: s3[:-4], "decode", "truncated grid definition template 3.1",
+    ),
+    "truncated 3.3": (
+        dict(_ROTATED, **_STRETCHED), lambda s3: s3[:-4], "decode",
+        "truncated grid definition template 3.3",
+    ),
+    "truncated 3.50": (
+        dict(spectral=dict(truncation=2)), lambda s3: s3[:-1], "decode",
+        "truncated grid definition template 3.50",
+    ),
+    "pentagonal truncation": (
+        dict(spectral=dict(truncation=2)), _at(4, 3), "decode",
+        "only triangular spectral truncation supported (J=2, K=3, M=2)",
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_SECTION3_STOPS))
+def test_section3_loud_stops_are_named(case):
+    """Every section-3 refusal a corrupt grid definition meets, built by
+    patching the octets of an encoded message, stops with its own
+    message, in the full decode and (where it reads them) the landing
+    header."""
+    import re
+
+    from monitoring_data_ingestion_spark.sources.grib_source import _grib2_header
+
+    kw, patch, reader, message = _SECTION3_STOPS[case]
+    if "spectral" in kw:
+        v = np.array([3.0, 1.0, -2.0, 1 + 1j, 2 - 1j, 0.5j])
+    else:
+        v = np.arange(12.0).reshape(3, 4)
+    msg = _patch_section3(encode_grib2_message(v, **kw), patch)
+    read = decode_grib2 if reader == "decode" else _grib2_header
+    with pytest.raises(ValueError, match="^" + re.escape(message)):
+        read(msg)

@@ -1,10 +1,14 @@
 """Golden encode digests: the sha256 of one seeded GRIB2 message per data
 representation template, plus the forms that take other paths through
 the codec (bitmap, constant field, missing-value management 1 and 2,
-the reduced Gaussian grid, a statistical product).  A codec change that
-moves one output byte fails here, so a refactor of the encoder proves
-byte identity inside the test suite.  The digests were computed with
-the encoder as it stood before section 5 became a table."""
+the reduced Gaussian grid, a statistical product), and one per grid
+definition template form those leave out (3.0 south-first, 3.1, 3.2,
+3.3, 3.10, 3.20, 3.30 and the regular 3.40).  A codec change that moves
+one output byte fails here, so a refactor of the encoder proves byte
+identity inside the test suite.  The section-5 digests were computed
+with the encoder as it stood before section 5 became a table, the
+section-3 digests with the encoder as it stood before section 3 became
+one (``_GDT``)."""
 
 from __future__ import annotations
 
@@ -108,6 +112,54 @@ _GOLDEN = {
 }
 
 
+def _grid_cases() -> dict:
+    """Case name -> (grid template, encode kwargs with ``values``)."""
+    rng = np.random.default_rng(20261020)
+    v = np.round(rng.uniform(200.0, 320.0, size=(6, 8)), 1)
+    simple = dict(values=v, decimal_scale=1, nbits=12)
+    rotated = dict(south_pole_lat=-32.5, south_pole_lon=10.0, angle=2.0)
+    stretched = dict(pole_lat=46.5, pole_lon=2.6, factor=2.4)
+    return {
+        "3.0 south-first": (0, dict(
+            simple, scanning_mode=0x40, lat_first_udeg=40_000_000,
+            lon_first_udeg=-10_000_000, dlat_udeg=500_000, dlon_udeg=250_000,
+        )),
+        "3.1 rotated": (1, dict(simple, rotated=rotated)),
+        "3.2 stretched": (2, dict(simple, stretched=stretched)),
+        "3.3 stretched rotated": (3, dict(simple, rotated=rotated, stretched=stretched)),
+        "3.10 Mercator": (10, dict(simple, mercator=dict(
+            la1=-10.0, lo1=100.0, lad=20.0, dx_m=50000.0, dy_m=50000.0,
+        ))),
+        "3.20 polar stereographic": (20, dict(simple, polar_stereo=dict(
+            la1=47.5, lo1=-110.0, lad=60.0, lov=-100.0, dx_m=25000.0, dy_m=25000.0,
+        ))),
+        "3.30 Lambert": (30, dict(simple, scanning_mode=0x40, lambert=dict(
+            la1=21.0, lo1=-122.0, lad=38.5, lov=-97.5, latin1=38.5, latin2=38.5,
+            dx_m=3000.0, dy_m=3000.0,
+        ))),
+        "3.40 regular Gaussian": (40, dict(
+            simple, gaussian=True, lon_first_udeg=0, dlon_udeg=45_000_000,
+        )),
+    }
+
+
+_GRID_GOLDEN = {
+    "3.0 south-first": "33107f63cb40a9d755249a3d7983ac89eb29c9e2a31e165600d8a283f8c92d3c",
+    "3.1 rotated": "6cabb15246e59676f548b1b66b5e7dc9874a128a50b8205e15986b371141cace",
+    "3.2 stretched": "bd02366ed4ea437fcebd85dac6a695a874504b096f64c776e77e8415b1556d73",
+    "3.3 stretched rotated": "c7a4ff19fe45e1f5fcf632ac0ed8d7271eb2065a96054a5bdc25f2bfea538893",
+    "3.10 Mercator": "5b6a1080fb614fb546ada45f8e6e5232d5fefb217e4a8b136efe106f989b92ca",
+    "3.20 polar stereographic": "706f69ce661005d32fc4d1e9488322030879e7a1771dbeb133713349272003b6",
+    "3.30 Lambert": "41d96031566f9d39ebb44eeee8dd16ebbdc4a502de7e9ab162b45d28b0ccf454",
+    "3.40 regular Gaussian": "0763cd9f66e159b3f9c3e1f7fb9c53cd782578a8307976e7b214637fb253eadc",
+}
+
+
+def _encode(kw: dict) -> bytes:
+    kw = dict(kw)
+    return encode_grib2_message(kw.pop("values"), **kw)
+
+
 @pytest.mark.parametrize("name", sorted(_GOLDEN))
 def test_encode_matches_its_golden_digest(name):
     tmpl, kw = _cases()[name]
@@ -120,3 +172,20 @@ def test_encode_matches_its_golden_digest(name):
 def test_golden_cases_cover_every_data_representation_template():
     assert {t for t, _ in _cases().values()} == _TEMPLATES
     assert set(_cases()) == set(_GOLDEN)
+
+
+@pytest.mark.parametrize("name", sorted(_GRID_GOLDEN))
+def test_grid_encode_matches_its_golden_digest(name):
+    tmpl, kw = _grid_cases()[name]
+    msg = _encode(kw)
+    assert decode_grib2(msg).grid_template == tmpl
+    assert hashlib.sha256(msg).hexdigest() == _GRID_GOLDEN[name]
+
+
+def test_golden_cases_cover_every_grid_definition_template():
+    """A grid template the table gains cannot land without a digest."""
+    from monitoring_data_ingestion_spark.grid.grib2 import _GDT
+
+    assert set(_grid_cases()) == set(_GRID_GOLDEN)
+    grids = {decode_grib2(_encode(kw)).grid_template for _, kw in _cases().values()}
+    assert grids | {t for t, _ in _grid_cases().values()} == set(_GDT)
