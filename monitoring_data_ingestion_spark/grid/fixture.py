@@ -26,6 +26,8 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..ingest.sinks import swap_dirs
+
 BASE_YEAR = 1991
 NODATA = -9999.0
 VAR_OFFSETS = {"t2m": 0.0, "precip": 100.0, "unused_var": 500.0}
@@ -92,8 +94,8 @@ def write_grid_landing(
     end_month: str,
     n_cells: int = N_CELLS,
 ) -> None:
-    """Materialize the landing dir: ONE partitioned write, then rename the
-    partition dirs to the gridmonths ``YYYY-MM.parquet`` entries (cheap
+    """Materialize the landing dir: ONE partitioned write, then swap the
+    partition dirs in as the gridmonths ``YYYY-MM.parquet`` entries (cheap
     driver-side renames — the data itself never passes the driver)."""
     os.makedirs(landing_dir, exist_ok=True)
     staging = os.path.join(landing_dir, "_staging")
@@ -105,9 +107,12 @@ def write_grid_landing(
         .partitionBy("mk")
         .parquet(staging)
     )
-    for part_dir in glob.glob(os.path.join(staging, "mk=*")):
-        key = os.path.basename(part_dir).split("=", 1)[1]
-        os.rename(part_dir, os.path.join(landing_dir, f"{key}.parquet"))
+    swap_dirs(
+        [
+            (part_dir, os.path.join(landing_dir, f"{part_dir.split('mk=')[-1]}.parquet"))
+            for part_dir in glob.glob(os.path.join(staging, "mk=*"))
+        ]
+    )
     # The staging root now holds only _SUCCESS/metadata remnants — remove
     # it so the landing dir contains exactly the gridmonths entries.
     shutil.rmtree(staging, ignore_errors=True)

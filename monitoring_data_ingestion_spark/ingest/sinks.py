@@ -19,9 +19,13 @@ installed), heartbeat (src/rabbit.js:14-16), merged inventory scan
 (src/rabbit.js:73-85), and the HMAC-signed webhook notification
 (src/utility.js:144-163).
 
-DataFrame outputs use `df.write.parquet` with overwrite semantics — Spark's
-v2 file committer provides the same atomic-publish guarantee for a
-directory of part files.
+Directories of part files are published by the same rule, one level up:
+Spark writes them into a hidden staging directory, and :func:`swap_dirs`
+moves each one to its destination — the old directory aside, the new one
+in, the old one deleted.  ``df.write.mode("overwrite").parquet(path)``
+gives no such guarantee: Spark deletes ``path`` before its job runs, so a
+failed job leaves no directory at all.  A failure inside the swap moves
+everything back, so a reader finds the previous directories again.
 """
 
 from __future__ import annotations
@@ -29,6 +33,7 @@ from __future__ import annotations
 import glob
 import json
 import os
+import shutil
 import urllib.request
 import uuid
 from contextlib import contextmanager
@@ -68,6 +73,36 @@ def atomic_open(path: str) -> Iterator[BinaryIO]:
     except BaseException:
         os.unlink(tmp)
         raise
+
+
+def swap_dirs(moves: list[tuple[str, str]]) -> None:
+    """Move each staged directory of ``(staged, dest)`` pairs to ``dest``,
+    replacing what is there: every existing ``dest`` goes aside to
+    ``{dest}.__old-*``, every staged directory goes in, then the old ones
+    are deleted.  If a move raises, the moves already made are undone —
+    staged directories back to their staging paths, old ones back in
+    place — and the error propagates; the staged trees are the caller's
+    to remove.  A hard kill between the two steps strands an old
+    directory under ``.__old-*``
+    (``operators.compaction.recover_compaction`` renames it back)."""
+    tag = uuid.uuid4().hex[:8]
+    aside: list[tuple[str, str]] = []
+    placed: list[tuple[str, str]] = []
+    try:
+        for _, dest in moves:
+            if os.path.lexists(dest):
+                os.rename(dest, f"{dest}.__old-{tag}")
+                aside.append((f"{dest}.__old-{tag}", dest))
+        for staged, dest in moves:
+            os.makedirs(os.path.dirname(os.path.abspath(dest)), exist_ok=True)
+            os.rename(staged, dest)
+            placed.append((dest, staged))
+    except BaseException:
+        for src, back in [*reversed(placed), *reversed(aside)]:
+            os.rename(src, back)
+        raise
+    for old, _ in aside:
+        shutil.rmtree(old)
 
 
 def write_file_atomically(path: str, data: bytes) -> None:

@@ -15,9 +15,10 @@ Design:
 * ``compact_parquet`` rewrites via a single Spark job (coalesce to the
   planned file count — a NARROW dependency, no shuffle; the data is
   already partitioned arbitrarily and compaction must not reorder it) and
-  commits by atomic directory swap, so readers never observe a half-
-  compacted table and a crashed compaction leaves the original intact
-  (S7's atomic-rename contract applied to maintenance).
+  commits by the directory swap ``ingest.sinks.swap_dirs``, so readers
+  never observe a half-compacted table and a crashed compaction leaves
+  the original intact (S7's atomic-rename contract applied to
+  maintenance).
 * Partitioned layouts compact per partition directory (each partition is
   its own swap unit), which is how a 100 TB table compacts incrementally.
 * ``compact_versioned`` compacts a VersionedTable snapshot through its
@@ -34,6 +35,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import SparkSession
 
+from ..ingest.sinks import swap_dirs
 from ..sources.versioned import VersionedTable
 
 DEFAULT_TARGET_MB = 128
@@ -110,10 +112,11 @@ def compact_parquet(
     """Rewrite ``path`` to the planned file count and swap it in.
 
     The rewrite is ``coalesce`` (narrow — no shuffle, no reordering of
-    row groups beyond file concatenation). The swap is rename(old→trash),
-    rename(new→old), delete(trash): a reader holding the old listing
-    finishes against intact files, and a crash before the FIRST rename
-    leaves the original untouched.
+    row groups beyond file concatenation) into a staging sibling, which
+    ``ingest.sinks.swap_dirs`` swaps in: old aside, new in, old deleted.
+    A reader holding the old listing finishes against intact files, and a
+    failed rewrite or swap leaves the original in place and no staging
+    litter.
 
     Durability caveat (local filesystems): between the two renames the
     table path briefly does not exist, and a hard kill inside that window
@@ -139,17 +142,11 @@ def compact_parquet(
     if not plan.worth_it:
         return plan
     staging = f"{path}.__compact-{uuid.uuid4().hex[:8]}"
-    spark.read.parquet(path).coalesce(plan.target_files).write.mode("overwrite").parquet(
-        staging
-    )
-    trash = f"{path}.__old-{uuid.uuid4().hex[:8]}"
-    os.rename(path, trash)
     try:
-        os.rename(staging, path)
-    except BaseException:  # roll back the first rename on any failure
-        os.rename(trash, path)
-        raise
-    shutil.rmtree(trash)
+        spark.read.parquet(path).coalesce(plan.target_files).write.parquet(staging)
+        swap_dirs([(staging, path)])
+    finally:
+        shutil.rmtree(staging, ignore_errors=True)
     return plan
 
 

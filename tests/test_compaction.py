@@ -92,8 +92,9 @@ def test_swap_failure_rolls_back(spark, tmp_path, monkeypatch):
     except OSError:
         raised = True
     assert raised
-    # Original data intact at the original path.
+    # Original data intact at the original path, no staging/trash litter.
     assert spark.read.parquet(path).count() == 400
+    assert [d for d in os.listdir(tmp_path) if "__" in d] == []
 
 
 def test_partitioned_root_refuses_flattening(spark, tmp_path):

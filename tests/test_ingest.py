@@ -5,12 +5,16 @@ from __future__ import annotations
 
 import json
 import os
+from datetime import datetime, timezone
 
 import pytest
 from pyspark.sql import functions as F
 
-from monitoring_data_ingestion_spark.ingest import IngestScheduler, StateStore
-from monitoring_data_ingestion_spark.ingest.gridded_source import GriddedMonthlySource
+from monitoring_data_ingestion_spark.ingest import IngestScheduler, SourceState, StateStore
+from monitoring_data_ingestion_spark.ingest.gridded_source import (
+    GriddedMonthlySource,
+    layer_name,
+)
 from monitoring_data_ingestion_spark.ingest.runner import NoUpdateNeeded
 
 from .gridfix import BASE_YEAR, DATASETS, LATS, LONS, cell_value, write_fixture
@@ -152,3 +156,135 @@ def test_retry_wrapper(spark, tmp_path):
     assert run.ok and run.skipped
     assert len(attempts) == 3
     assert sleeps == [5.0, 5.0]
+
+
+# ---------------------------------------------------------------------------
+# One-write publish: every layer of a month in one Spark write, swapped in.
+# ---------------------------------------------------------------------------
+
+LAYERS = [layer_name(ds["filename"]) for ds in DATASETS]
+
+
+def _fresh_source(env, tmp_path) -> GriddedMonthlySource:
+    """A source over the shared landing with its own, empty output root."""
+    return GriddedMonthlySource(
+        name="gridsource",
+        landing_dir=env[0].landing_dir,
+        output_root=str(tmp_path / "out"),
+        normal_years=range(1991, 1994),
+        epoch="1993-01-01",
+    )
+
+
+def test_empty_layer_publishes_its_columns(spark, env, tmp_path):
+    """A dataset whose variable is absent from the landing month has no
+    rows, so the partitioned write makes no directory for it; the month
+    still publishes, readable, with the other layers' columns and types."""
+    src = _fresh_source(env, tmp_path)
+    absent = {"filename": "gridsource-absent", "variable": "no_such_variable"}
+    result = src.forage(spark, SourceState(), DATASETS + [absent])
+    assert result.metadatas[-1]["layer_name"] == "gridsource_absent"
+    empty = spark.read.parquet(os.path.join(src.output_root, "gridsource_absent", "month=1993-01"))
+    full = spark.read.parquet(
+        os.path.join(src.output_root, "gridsource_temperature_2_m", "month=1993-01")
+    )
+    assert empty.count() == 0
+    assert sorted(empty.dtypes) == sorted(full.dtypes)
+    assert {c for c, _ in full.dtypes} == {"time", "lat", "lon", "variable", "value"}
+
+
+@pytest.mark.parametrize("column", ["value", "variable"])
+def test_landing_file_missing_a_column_fails_by_name(spark, tmp_path, column):
+    """The landing scan reads with the declared contract; a file without a
+    contract column fails the run naming it instead of reading NULLs."""
+    landing = str(tmp_path / "landing")
+    spark.createDataFrame(
+        [(datetime(1993, 1, 1, tzinfo=timezone.utc), LATS[1], LONS[1], "t2m", 1.0)],
+        "time timestamp, lat double, lon double, variable string, value double",
+    ).drop(column).write.parquet(os.path.join(landing, "1993-01.parquet"))
+    src = GriddedMonthlySource(
+        name="broken", landing_dir=landing, output_root=str(tmp_path / "out"), epoch="1993-01-01"
+    )
+    run = IngestScheduler(spark, StateStore(src.output_root), max_retries=0).run_once(
+        src, DATASETS[:1]
+    )
+    assert not run.ok
+    assert f"lacks column(s) ['{column}']" in run.error
+    assert StateStore(src.output_root).load_source("broken").date is None
+
+
+@pytest.mark.parametrize("fail_in", ["write", "swap"])
+def test_failed_republish_keeps_last_good_month(spark, env, tmp_path, monkeypatch, fail_in):
+    """Republish a published month with a failure injected after the
+    staged write, or inside the swap after the first layer moved in: the
+    previous month's files and values stay, no staging or ``.__old-*``
+    litter is left, and a clean re-run converges to the same values."""
+    import monitoring_data_ingestion_spark.ingest.sinks as sinks
+    from pyspark.sql import DataFrameWriter
+
+    src = _fresh_source(env, tmp_path)
+    state = SourceState()
+    src.forage(spark, state, DATASETS)
+
+    def month(layer):
+        d = os.path.join(src.output_root, layer, "month=1993-01")
+        rows = spark.read.parquet(d).orderBy("lat", "lon").collect()
+        return sorted(f for f in os.listdir(d) if f.startswith("part-")), rows
+
+    before = {layer: month(layer) for layer in LAYERS}
+    if fail_in == "write":
+        real_parquet = DataFrameWriter.parquet
+
+        def failing_parquet(self, path, *args, **kwargs):
+            real_parquet(self, path, *args, **kwargs)
+            raise RuntimeError("injected write failure")
+
+        monkeypatch.setattr(DataFrameWriter, "parquet", failing_parquet)
+    else:
+        real_rename = os.rename
+        moved_in = []
+
+        def failing_rename(src_, dst):
+            if ".staging-" in src_:
+                moved_in.append(dst)
+                if len(moved_in) == 2:
+                    raise OSError("injected swap failure")
+            real_rename(src_, dst)
+
+        monkeypatch.setattr(sinks.os, "rename", failing_rename)
+    with pytest.raises((RuntimeError, OSError), match="injected"):
+        src.forage(spark, SourceState(normals=state.normals), DATASETS)
+    monkeypatch.undo()
+
+    assert {layer: month(layer) for layer in LAYERS} == before
+    litter = [
+        name
+        for _, dirs, files in os.walk(src.output_root)
+        for name in dirs + files
+        if ".staging-" in name or ".__old-" in name
+    ]
+    assert litter == []
+    src.forage(spark, SourceState(normals=state.normals), DATASETS)
+    after = {layer: month(layer) for layer in LAYERS}
+    for layer in LAYERS:
+        assert after[layer][1] == before[layer][1]
+        assert after[layer][0] != before[layer][0]  # a new publish, not the old files
+
+
+def test_forage_runs_broadcast_and_write_jobs_only(spark, env, tmp_path):
+    """With the month's normal memoized, one forage submits at most two
+    Spark jobs: the normal's broadcast and the one write of every layer.
+    Both scans read declared schemas, so no footer job runs."""
+    src = _fresh_source(env, tmp_path)
+    state = SourceState()
+    src.get_normal(spark, state, "t2m", 1)
+    sc = spark.sparkContext
+    group = f"forage-{tmp_path.name}"
+    sc.setJobGroup(group, group)
+    try:
+        src.forage(spark, state, DATASETS)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 1 <= len(jobs) <= 2, jobs

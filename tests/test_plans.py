@@ -257,8 +257,11 @@ def test_one_publish_rule_on_disk():
     scratch trees through ``session_cache.scratch_tree``: a source scan
     finds no other ``os.rename``/``os.replace`` and no query module that
     picks its own temp dir or registers its own exit sweep. The
-    allowlisted renames are different operations: a directory swap, and
-    part-file/directory moves out of a Spark staging write."""
+    allowlisted renames are different operations: the directory swap
+    ``ingest.sinks.swap_dirs`` (``forage``, ``compact_parquet`` and the
+    grid landing fixture move Spark staging writes into place through
+    it), stranded-swap recovery, and a part-file move out of a Spark
+    staging write."""
     import ast
     from pathlib import Path
 
@@ -266,9 +269,8 @@ def test_one_publish_rule_on_disk():
 
     allowed_renames = {
         ("ingest/sinks.py", "atomic_open"),
+        ("ingest/sinks.py", "swap_dirs"),
         ("operators/compaction.py", "recover_compaction"),
-        ("operators/compaction.py", "compact_parquet"),
-        ("grid/fixture.py", "write_grid_landing"),
         ("scripts/scale_probe.py", "_write_single_file"),
     }
     root = Path(pkg.__file__).parent
