@@ -546,6 +546,32 @@ def _grib1_hours(unit: int, value: int) -> int:
 
 
 # --- message model --------------------------------------------------------
+#
+# What both editions' records share: the spectral view of a spherical-
+# harmonic record and the per-cell coordinates of a reduced grid.
+
+
+def spectral_coeffs(rec) -> np.ndarray | None:
+    """Complex coefficients C_n^m in mode-1 order (m = 0..T, n = m..T)
+    of a spectral record; None on gridded records."""
+    if rec.spectral_truncation is None:
+        return None
+    return rec.values[0::2] + 1j * rec.values[1::2]
+
+
+def reduced_grid_cells(rec, lon_first_deg: float):
+    """Per-cell (lat, lon) of a reduced grid, flat storage order, both
+    editions: row j's latitude repeats row_ni[j] times; its longitudes
+    are lon_first + i·360/row_ni[j] (full parallels, the only form the
+    decoders admit).  Computed once per record."""
+    cells = getattr(rec, "_cells", None)
+    if cells is None:
+        lats = np.repeat(rec.latitudes_deg, rec.row_ni)
+        lons = np.concatenate(
+            [(np.arange(n) * 360.0) / n + lon_first_deg for n in rec.row_ni]
+        )
+        cells = rec._cells = (lats, lons)
+    return cells
 
 
 @dataclass
@@ -623,13 +649,7 @@ class Grib1Record:
     # (quadrature latitudes + per-cell coordinate arrays).
     row_ni: np.ndarray | None = None
 
-    @property
-    def spectral_coeffs(self) -> np.ndarray | None:
-        """Complex coefficients C_n^m in mode-1 order (m = 0..T,
-        n = m..T) of a spectral record; None on gridded records."""
-        if self.spectral_truncation is None:
-            return None
-        return self.values[0::2] + 1j * self.values[1::2]
+    spectral_coeffs = property(spectral_coeffs)
 
     @property
     def cell_lats_deg(self) -> np.ndarray | None:
@@ -648,21 +668,7 @@ class Grib1Record:
         return self._rotated_cells()[1]
 
     def _reduced_cells(self):
-        """Per-cell (lat, lon) of a reduced Gaussian grid, flat storage
-        order — the same convention as GRIB2's template-3.40 reduced
-        form: row j's quadrature latitude repeats row_ni[j] times; its
-        longitudes are lon_first + i·360/row_ni[j] (full parallels,
-        the only form the decoder admits)."""
-        cells = getattr(self, "_cells", None)
-        if cells is None:
-            lon0 = self.lon_first_mdeg / 1e3
-            lats = np.repeat(self.latitudes_deg, self.row_ni)
-            lons = np.concatenate(
-                [(np.arange(n) * 360.0) / n + lon0 for n in self.row_ni]
-            )
-            cells = (lats, lons)
-            self._cells = cells
-        return cells
+        return reduced_grid_cells(self, self.lon_first_mdeg / 1e3)
 
     def _rotated_cells(self):
         cells = getattr(self, "_cells", None)
@@ -1262,9 +1268,18 @@ def encode_grib1_message(
     )
 
 
-def iter_messages(buf: bytes):
-    """Scan a (possibly multi-record) GRIB1 file: yield each message's
-    exact bytes in order — the record inventory ``wgrib`` prints."""
+# Indicator octets and the least total length per edition: an edition-1
+# indicator is 8 octets with a 24-bit length, an edition-2 one 16 octets
+# with a 64-bit length; a message must also hold the 4-octet 7777.
+_INDICATORS = {1: (8, 12), 2: (16, 20)}
+
+
+def iter_grib_messages(buf: bytes, edition: int | None = None):
+    """Scan a (possibly multi-record, possibly mixed-edition) GRIB file:
+    yield (edition, message bytes) per message, in order.  Real archives
+    mix editions across products (ERA5 surface vs wave, GFS), so the
+    edition is read per message from the indicator; ``edition`` makes
+    any other edition a loud stop."""
     buf = bytes(buf)
     pos = 0
     n = len(buf)
@@ -1274,24 +1289,39 @@ def iter_messages(buf: bytes):
             return
         if idx + 8 > n:
             raise ValueError("truncated GRIB indicator section")
-        total = _r24(buf, idx + 4)
-        if buf[idx + 7] != EDITION:
-            raise ValueError(f"unsupported GRIB edition {buf[idx + 7]}")
-        if total < 12:
+        ed = buf[idx + 7]
+        if ed not in _INDICATORS or edition not in (None, ed):
+            raise ValueError(f"unsupported GRIB edition {ed}")
+        head, least = _INDICATORS[ed]
+        if idx + head > n:
+            raise ValueError("truncated GRIB indicator section")
+        # Read the length in place: slicing the rest of the buffer per
+        # record would copy O(n²) bytes on many-record files.
+        total = _r24(buf, idx + 4) if ed == 1 else int.from_bytes(
+            buf[idx + 8 : idx + 16], "big"
+        )
+        if total < least:
             # A zeroed/implausible length is a framing error: end <= idx
             # would re-find the same magic forever (an unbounded scan),
             # and the terminator check would read bytes BEFORE this
             # message (the previous record's own 7777 would "pass").
             raise ValueError(
-                f"GRIB1 indicator declares impossible length {total}"
+                f"GRIB{ed} indicator declares impossible length {total}"
             )
         end = idx + total
         if end > n:
             raise ValueError("truncated GRIB message")
         if buf[end - 4 : end] != TERMINATOR:
             raise ValueError("missing 7777 terminator")
-        yield buf[idx:end]
+        yield ed, buf[idx:end]
         pos = end
+
+
+def iter_messages(buf: bytes):
+    """Scan a (possibly multi-record) GRIB1 file: yield each message's
+    exact bytes in order — the record inventory ``wgrib`` prints."""
+    for _, msg in iter_grib_messages(buf, EDITION):
+        yield msg
 
 
 def select_record(buf: bytes, record_number: int) -> bytes:

@@ -96,6 +96,7 @@ import numpy as np
 
 # GRIB2 shares GRIB1's bit packing — one implementation, two editions.
 from .grib1 import _pack_bits, _unpack_bits
+from .grib1 import iter_grib_messages, reduced_grid_cells, spectral_coeffs
 from .grib1 import loud_truncation
 from .grib1 import quantize_simple_packing
 
@@ -697,13 +698,7 @@ class Grib2Record:
     # unpacked low-wavenumber subset (None on 5.50 / gridded records).
     spectral_sub_truncation: int | None = None
 
-    @property
-    def spectral_coeffs(self) -> np.ndarray | None:
-        """Complex coefficients C_n^m in mode-1 order (m = 0..T,
-        n = m..T) of a spectral record; None on gridded records."""
-        if self.spectral_truncation is None:
-            return None
-        return self.values[0::2] + 1j * self.values[1::2]
+    spectral_coeffs = property(spectral_coeffs)
 
     # Per-cell geographic coordinates (nj, ni) IN STORAGE ORDER —
     # computed lazily on first access (consumers like the landing
@@ -759,20 +754,7 @@ class Grib2Record:
         return cells
 
     def _reduced_cells(self):
-        """Per-cell (lat, lon) of a reduced Gaussian grid, flat storage
-        order: row j's latitude repeats row_ni[j] times; its longitudes
-        are lon_first + i·360/row_ni[j] (full parallels, the only form
-        the decoder admits)."""
-        cells = getattr(self, "_cells", None)
-        if cells is None:
-            lon0 = self.lon_first_udeg / 1e6
-            lats = np.repeat(self.latitudes_deg, self.row_ni)
-            lons = np.concatenate(
-                [(np.arange(n) * 360.0) / n + lon0 for n in self.row_ni]
-            )
-            cells = (lats, lons)
-            self._cells = cells
-        return cells
+        return reduced_grid_cells(self, self.lon_first_udeg / 1e6)
 
     @property
     def cell_lats_deg(self) -> np.ndarray | None:
@@ -1549,8 +1531,8 @@ _HEAD_BLOCKS = (
 )
 
 
-def _lookup(src, key: str | None, default):
-    for part in key.split(".") if key else ():
+def _lookup(src, path: tuple, default):
+    for part in path:
         if not isinstance(src, dict):
             src = src[int(part)]
         elif part in src or default is _REQUIRED:
@@ -1743,7 +1725,6 @@ _PACK = {
     "ascii": _pack_ascii,
     "count": _pack_count,
     "f32": _pack_f32,
-    "list": lambda f, v: b"".join(_pack_fields(f.arg, item) for item in v),
 }
 _PARSE = {
     "u": _parse_u,
@@ -1758,10 +1739,26 @@ _PARSE = {
 }
 
 
-def _pack_fields(fields, src) -> bytes:
-    return b"".join(
-        _PACK[f.kind](f, _lookup(src, f.key, f.default)) for f in fields
+def _pack_plan(fields) -> tuple:
+    """Per field: the field, its source key split into a path, and its
+    kind's packer or, for a list, its items' plan — laid out once, so
+    packing neither splits a key nor looks up a kind."""
+    return tuple(
+        (f, tuple(f.key.split(".")) if f.key else (),
+         _pack_plan(f.arg) if f.kind == "list" else _PACK[f.kind])
+        for f in fields
     )
+
+
+def _pack_fields(plan, src) -> bytes:
+    out = []
+    for f, path, pack in plan:
+        v = _lookup(src, path, f.default)
+        if f.kind == "list":
+            out.extend(_pack_fields(pack, item) for item in v)
+        else:
+            out.append(pack(f, v))
+    return b"".join(out)
 
 
 class _Block(NamedTuple):
@@ -1828,7 +1825,8 @@ class _Section:
     ``blank`` names the fields that read None when the template has no
     such block; ``head`` is the blocks a head read walks before it
     stops; ``noun`` is what the errors call a template.  ``plans`` holds
-    each template's walk, laid out once."""
+    each template's walk and ``packs`` its pack plan, both laid out
+    once."""
 
     def __init__(self, number, noun, lead, table=None, blank=(), head=()):
         self.number, self.noun, self.lead = number, noun, lead
@@ -1838,11 +1836,16 @@ class _Section:
         whole = _block(lead, True, check=False)
         self.at = 3 + whole.width  # the template number's offset
         self.plans = {None: (whole,)}
+        self.packs = {None: _pack_plan(lead)}
         if table is not None:
             # The walk reads the template number once, before the lead.
             skip = _block((*lead[:-1], lead[-1]._replace(name=None)), True, False)
             self.plans = {
                 t: (skip, *(_block(b, b in head) for b in entry[1]))
+                for t, entry in table.items()
+            }
+            self.packs = {
+                t: _pack_plan(lead + sum(entry[1], ()))
                 for t, entry in table.items()
             }
 
@@ -1854,10 +1857,8 @@ def _frame(number: int, body: bytes) -> bytes:
 def _pack_section(sec: _Section, src: dict) -> bytes:
     """The lead and, on a templated section, the blocks of the template
     whose number ``src`` carries under the lead's last key."""
-    blocks = [sec.lead]
-    if sec.table is not None:
-        blocks += sec.table[src[sec.lead[-1].key]][1]
-    return _frame(sec.number, b"".join(_pack_fields(b, src) for b in blocks))
+    t = None if sec.table is None else src[sec.lead[-1].key]
+    return _frame(sec.number, _pack_fields(sec.packs[t], src))
 
 
 def _template_number(sec: _Section, raw: bytes) -> int:
@@ -3535,32 +3536,8 @@ def merge_grib2_fields(msgs: "list[bytes]") -> bytes:
 
 def iter_messages2(buf: bytes):
     """Scan a multi-record GRIB2 file: yield each message's exact bytes."""
-    buf = bytes(buf)
-    pos = 0
-    n = len(buf)
-    while pos < n:
-        idx = buf.find(MAGIC, pos)
-        if idx < 0:
-            return
-        if idx + 16 > n:
-            raise ValueError("truncated GRIB2 indicator section")
-        if buf[idx + 7] != EDITION:
-            raise ValueError(f"unsupported GRIB edition {buf[idx + 7]}")
-        (total,) = struct.unpack_from(">Q", buf, idx + 8)
-        if total < 20:
-            # zeroed/implausible length: end <= idx re-finds the same
-            # magic forever, and the terminator check would read bytes
-            # BEFORE this message (the previous record's own 7777)
-            raise ValueError(
-                f"GRIB2 indicator declares impossible length {total}"
-            )
-        end = idx + total
-        if end > n:
-            raise ValueError("truncated GRIB2 message")
-        if buf[end - 4 : end] != TERMINATOR:
-            raise ValueError("missing 7777 terminator")
-        yield buf[idx:end]
-        pos = end
+    for _, msg in iter_grib_messages(buf, EDITION):
+        yield msg
 
 
 def _sections(msg: bytes) -> dict[int, bytes]:

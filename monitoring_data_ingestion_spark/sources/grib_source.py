@@ -1,5 +1,6 @@
-"""File-based GRIB1 source: point the engine at a directory of ``.grib``
-downloads and get cells as a DataFrame — batch or streaming.
+"""File-based GRIB source: point the engine at a directory of ``.grib``
+downloads (edition 1, edition 2 or both mixed) and get cells as a
+DataFrame — batch or streaming.
 
 This is the literal form of the reference's ingest entry: its sources
 download GRIB files into a landing area and every downstream step reads
@@ -7,8 +8,16 @@ those bytes (/root/reference/src/sources/era5monthly.js:172-195 download,
 src/file-conversions.js record extract). Here the landing directory is
 scanned with Spark's ``binaryFile`` source (path/length/content rows,
 works identically under ``read`` and ``readStream``), each file's
-records decode through the pure-Python codec (grid/grib1.py) inside one
-Arrow ``mapInPandas`` stage, and the raster becomes relational rows.
+records decode through the pure-Python codecs (grid/grib1.py for
+edition 1, grid/grib2.py for edition 2, per message) inside one Arrow
+``mapInPandas`` stage, and the raster becomes relational rows.
+
+One rule lands a record of either edition (:func:`_decode_record_row`):
+every ``RECORD_SCHEMA`` product column copies from the decoded record's
+same-named field, and one georeference mapping fills the grid columns.
+Only the decode call, the level rule (edition-1 layer octets, edition-2
+scaled surfaces) and how a coordinate reads in millidegrees differ per
+edition.  The header-only inventory follows the same by-name rule.
 
 Layering:
 
@@ -39,7 +48,7 @@ from typing import Iterator
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..grid.grib1 import loud_truncation
+from ..grid.grib1 import iter_grib_messages, loud_truncation
 
 _LOUD_CODEC: dict = {}
 
@@ -92,51 +101,6 @@ def _columns(schema: str) -> list[str]:
 _RECORD_COLUMNS = _columns(RECORD_SCHEMA)
 
 
-def iter_grib_messages(buf: bytes):
-    """Edition-sniffing scan of a (possibly mixed) GRIB archive file:
-    yields (edition, message bytes) per record. Real archives mix
-    editions across products (ERA5 surface vs wave, GFS), so the landing
-    scan dispatches per message on the indicator's edition octet rather
-    than assuming one codec per file."""
-    import struct
-
-    buf = bytes(buf)
-    pos = 0
-    n = len(buf)
-    while pos < n:
-        idx = buf.find(b"GRIB", pos)
-        if idx < 0:
-            return
-        if idx + 16 > n:
-            raise ValueError("truncated GRIB indicator section")
-        edition = buf[idx + 7]
-        # Parse the message length in place — slicing the remaining
-        # buffer per record would copy O(n²) bytes on many-record files.
-        if edition == 1:
-            total = (buf[idx + 4] << 16) | (buf[idx + 5] << 8) | buf[idx + 6]
-            min_total = 12  # indicator + room for the 7777 inside
-        elif edition == 2:
-            (total,) = struct.unpack_from(">Q", buf, idx + 8)
-            min_total = 20  # 16-octet indicator + the 7777
-        else:
-            raise ValueError(f"unsupported GRIB edition {edition}")
-        if total < min_total:
-            # A zeroed/implausible indicator length is a FRAMING error:
-            # end <= idx would re-find the same magic forever (the
-            # quarantine loop then emits unbounded manifest rows), and
-            # the terminator check would read bytes BEFORE this message.
-            raise ValueError(
-                f"GRIB indicator declares impossible length {total}"
-            )
-        end = idx + total
-        if end > n:
-            raise ValueError("truncated GRIB message")
-        if buf[end - 4 : end] != b"7777":
-            raise ValueError("missing 7777 terminator")
-        yield edition, buf[idx:end]
-        pos = end
-
-
 def _udeg_to_mdeg(udeg: int) -> int:
     """GRIB2 microdegrees → the unified millidegree columns, EXACTLY.
     Sub-millidegree grids raise instead of silently truncating (floor
@@ -151,16 +115,6 @@ def _udeg_to_mdeg(udeg: int) -> int:
     return q
 
 
-def _apply_surface_scale(value: int | None, scale: int | None) -> int | None:
-    """Template 4.0 fixed surface (scaled value, scale factor) → integer
-    level — the cross-surface helper lives in grid.grib2 (shared with
-    the codec-level inventory line so the two renderings can never
-    disagree on the same record's level)."""
-    from ..grid.grib2 import surface_level
-
-    return surface_level(value, scale)
-
-
 INVENTORY_SCHEMA = (
     "path string, record_number int, edition int, parameter int, "
     "category int, number int, level_type int, level int, "
@@ -169,6 +123,8 @@ INVENTORY_SCHEMA = (
     "total_bytes int, error string"
 )
 _INVENTORY_COLUMNS = _columns(INVENTORY_SCHEMA)
+# What a record's header fills; the scan adds the rest.
+_INVENTORY_FIELDS = _INVENTORY_COLUMNS[2:-1]
 
 
 def _parse_on_error(on_error: str) -> bool:
@@ -305,6 +261,13 @@ def _record_units(buf: bytes):
                 yield 2, msg, s
 
 
+def _layer_type(level_type: int | None, level2: int | None) -> int | None:
+    """Edition 1 describes a layer with ONE level type: its bottom lands
+    in ``level2`` with ``level2_type`` the same table-3 code, so "is a
+    layer" is ``level2 IS NOT NULL`` across editions."""
+    return level_type if level2 is not None else None
+
+
 @loud_truncation
 def _unified_inventory(edition: int, msg: bytes, s: dict | None = None) -> dict:
     """One header dict per record, both editions, value bits untouched."""
@@ -312,24 +275,9 @@ def _unified_inventory(edition: int, msg: bytes, s: dict | None = None) -> dict:
 
     if edition == 1:
         h = inspect_grib1(msg)
-        return {
-            "edition": 1,
-            "parameter": h["parameter"],
-            "category": None,
-            "number": None,
-            "level_type": h["level_type"],
-            "level": h["level"],
-            "level2_type": h["level_type"] if h["level2"] is not None else None,
-            "level2": h["level2"],
-            "forecast_hours": h["forecast_hours"],
-            "year": h["year"],
-            "month": h["month"],
-            "day": h["day"],
-            "hour": h["hour"],
-            "ni": h.get("ni"),
-            "nj": h.get("nj"),
-            "total_bytes": h["total_bytes"],
-        }
+        out = {c: h.get(c) for c in _INVENTORY_FIELDS}
+        out.update(edition=1, level2_type=_layer_type(h["level_type"], h["level2"]))
+        return out
     from ..grid.grib2 import _sections
 
     return {
@@ -417,6 +365,75 @@ def grib_inventory(
     )
 
 
+# The columns the landing rule fills itself.  Every other RECORD_SCHEMA
+# column is a product column, copied from the decoded record's
+# same-named attribute (None where that edition has no such field).
+_GEOREF_COLUMNS = (
+    "lat_first_mdeg", "lon_first_mdeg", "dlat_mdeg", "dlon_mdeg",
+    "latitudes_udeg", "cell_lats_deg", "cell_lons_deg",
+)
+_PRODUCT_COLUMNS = [
+    c for c in _RECORD_COLUMNS
+    if c not in {
+        "path", "record_number", "edition", "year", "month", "day", "hour",
+        "values", "error", *_GEOREF_COLUMNS,
+    }
+]
+# Calendar tuples (year, month, day, hour, minute) that land as timestamps.
+_TIMESTAMP_COLUMNS = ("interval_end", "model_version")
+
+
+def _timestamp(t: tuple):
+    import pandas as pd
+
+    y, mo, d, h, mi = t
+    return pd.Timestamp(year=y, month=mo, day=d, hour=h, minute=mi)
+
+
+def _exact_udeg(lats_deg) -> list[int]:
+    """Quadrature latitudes (degrees) -> exact microdegrees."""
+    return [int(round(float(v) * 1e6)) for v in lats_deg]
+
+
+def _georef(rec, mdeg) -> dict:
+    """The georeference columns of a decoded record, both editions;
+    ``mdeg(field)`` reads a coordinate field in exact millidegrees.
+    A column a grid family does not have stays NULL — visible, never
+    fabricated.
+
+    1. Ragged rows (reduced Gaussian or lat/lon): no common Ni or dlon,
+       so quadrature latitudes per parallel in exact microdegrees AND
+       per-cell coordinates, values flat in storage order.
+    2. Gaussian: no affine latitude axis (never a fabricated dlat); the
+       exact quadrature latitudes ride along.
+    3. Per-cell coordinates: projected grids (Mercator, polar
+       stereographic, Lambert) have no affine lat/lon axes, and a
+       rotated and/or stretched grid's affine fields are coordinates in
+       THAT system, so either read as geography would be silent
+       corruption.  The georeference is the codec's per-cell coordinate
+       arrays in storage order.
+    4. Affine lat/lon."""
+    if rec.row_ni is not None:
+        return {
+            "lon_first_mdeg": mdeg("lon_first"),
+            "latitudes_udeg": _exact_udeg(rec.latitudes_deg),
+            "cell_lats_deg": rec.cell_lats_deg.tolist(),
+            "cell_lons_deg": rec.cell_lons_deg.tolist(),
+        }
+    if rec.gaussian_n is not None:
+        return {
+            "lon_first_mdeg": mdeg("lon_first"),
+            "dlon_mdeg": mdeg("dlon"),
+            "latitudes_udeg": _exact_udeg(rec.latitudes_deg),
+        }
+    if rec.cell_lats_deg is not None:
+        return {
+            "cell_lats_deg": rec.cell_lats_deg.reshape(-1).tolist(),
+            "cell_lons_deg": rec.cell_lons_deg.reshape(-1).tolist(),
+        }
+    return {f"{f}_mdeg": mdeg(f) for f in ("lat_first", "lon_first", "dlat", "dlon")}
+
+
 def _decode_record_row(
     path, n, edition, msg, s, rx, synthesize_spectral,
     predefined_bitmaps=None,
@@ -425,416 +442,91 @@ def _decode_record_row(
     ``match=`` regex rejects it header-side — the shared per-unit body
     of the fail-fast and quarantine scan modes (every reject in here
     is a ValueError, which ``on_error='quarantine'`` converts to an
-    error row instead of failing the whole scan)."""
-    import pandas as pd
+    error row instead of failing the whole scan).
 
+    One rule lands both editions: product columns copy by name, and
+    only the decode call, the level rule and the millidegree read of a
+    coordinate differ per edition.  GRIB1 has no product template and
+    no (category, number) pair; GRIB2 has no ``parameter``, whose
+    numbering would collide with GRIB1's (c0,n11 vs TMP=11), so
+    consumers key jointly on (edition, parameter, category, number)."""
     from ..grid.grib1 import decode_grib1
-    from ..grid.grib2 import _decode_field, spectral_synthesis
+    from ..grid.grib2 import _decode_field, spectral_synthesis, surface_level
 
-    # Predicate pushdown to the codec boundary: the regex
-    # runs over the header-derived inventory line, so a
-    # non-matching record costs a header parse — its value
-    # bits are never unpacked (wgrib2 -match semantics).
-    # Records are FIELDS: a multi-field message's fields
+    # Predicate pushdown to the codec boundary: the regex runs over the
+    # header-derived inventory line, so a non-matching record costs a
+    # header parse — its value bits are never unpacked (wgrib2 -match
+    # semantics).  Records are FIELDS: a multi-field message's fields
     # number, match and decode independently.
-    if rx is not None and not rx.search(
-        inventory_line(edition, msg, s)
-    ):
+    if rx is not None and not rx.search(inventory_line(edition, msg, s)):
         return None
-    grid_template = stat_process = interval_end = None
-    product_template = None
-    fc_hours = None
-    level2_type = level2 = None
-    time_ranges = None
-    ens_member = ens_size = derived_fc = None
-    cluster_id = cluster_tot = cluster_sz = None
-    prob_type = prob_lo = prob_hi = pctl = None
-    sat_bands = sat_series = sat_numbers = None
-    sat_instruments = sat_waves = None
-    rdr_sites = rdr_site_id = rdr_site_number = None
-    rdr_lat = rdr_lon = rdr_elev = rdr_mode = None
-    chem_constituent = aero_type = aero_size_interval = None
-    aero_size1 = aero_size2 = None
-    aero_wl_interval = aero_wl1 = aero_wl2 = None
-    model_version = None
-    cell_lats = cell_lons = None
     if edition == 1:
         rec = decode_grib1(msg, predefined_bitmaps=predefined_bitmaps)
-        if (
-            rec.spectral_truncation is not None
-            and synthesize_spectral is None
-        ):
-            # Same boundary as the GRIB2 branch: spectral
-            # records have no gridpoint cells to land —
-            # inventory lists them, match= can skip them,
-            # synthesis (grib2.spectral_synthesis) is the
-            # explicit decode route.
-            raise ValueError(
-                f"record {n}: spectral field (T"
-                f"{rec.spectral_truncation}) cannot land as "
-                "gridpoints — synthesize explicitly via "
-                "synthesize_spectral=(nj, ni) / "
-                "grib2.spectral_synthesis, or exclude it "
-                "with match="
-            )
-        level_type, level = rec.level_type, rec.level
-        # Layer level types split octets 11-12 as (top,
-        # bottom); the bottom lands in the unified level2
-        # column with level2_type = the SAME table-3 code
-        # (edition 1 describes a layer with one type), so
-        # "is a layer" is level2 IS NOT NULL across editions.
-        if rec.level2 is not None:
-            level2_type, level2 = rec.level_type, rec.level2
-        parameter = rec.parameter
-        category = number = None
-        # PDS octets 18-21 normalized by the codec onto the
-        # SAME cross-edition surface GRIB2 uses: lead hours,
-        # statistical process in 4.10 numbering (TRI 3
-        # average → 0, TRI 4 accumulation → 1) and the
-        # interval end — so "accumulated precip since f006"
-        # filters identically on mixed-edition archives.
-        fc_hours = rec.forecast_hours
-        stat_process = rec.statistical_process
-        if rec.interval_end is not None:
-            ey, em, ed, eh, emi = rec.interval_end
-            interval_end = pd.Timestamp(
-                year=ey, month=em, day=ed, hour=eh, minute=emi
-            )
-        if rec.row_ni is not None:
-            # Edition-1 REDUCED Gaussian rows: same landing
-            # contract as GRIB2's reduced template 3.40 —
-            # quadrature latitudes per parallel in exact
-            # microdegrees AND per-cell coordinates (rows
-            # are ragged — no common ni/dlon; ``ni`` stays
-            # NULL, values stay flat in storage order).
-            lat0 = dlat = dlon = None
-            lats_udeg = [
-                int(round(float(v) * 1e6))
-                for v in rec.latitudes_deg
-            ]
-            lon0 = rec.lon_first_mdeg
-            cell_lats = rec.cell_lats_deg.tolist()
-            cell_lons = rec.cell_lons_deg.tolist()
-        elif rec.gaussian_n is not None:
-            # Edition-1 Gaussian grid: same landing contract
-            # as GRIB2 template 3.40 — no affine latitude
-            # axis (NULL, never a fabricated dlat), exact
-            # quadrature latitudes in microdegrees.
-            lat0 = dlat = None
-            lats_udeg = [
-                int(round(float(v) * 1e6))
-                for v in rec.latitudes_deg
-            ]
-            lon0, dlon = rec.lon_first_mdeg, rec.dlon_mdeg
-        elif rec.rotated_pole is not None:
-            # Edition-1 rotated lat/lon (type 10): same
-            # landing contract as GRIB2 template 3.1 — the
-            # affine fields are ROTATED coordinates (NULL,
-            # never read as geography); true per-cell
-            # coordinates ride the cell arrays.
-            lat0 = lon0 = dlat = dlon = None
-            lats_udeg = None
-            cell_lats = rec.cell_lats_deg.reshape(-1).tolist()
-            cell_lons = rec.cell_lons_deg.reshape(-1).tolist()
-        else:
-            lat0, lon0 = rec.lat_first_mdeg, rec.lon_first_mdeg
-            dlat, dlon = rec.dlat_mdeg, rec.dlon_mdeg
-            lats_udeg = None
     else:
         rec = _loud(_decode_field)(s)
-        if (
-            rec.spectral_truncation is not None
-            and synthesize_spectral is None
-        ):
-            # Spherical-harmonic records have NO gridpoint
-            # cells — landing them on RECORD_SCHEMA would
-            # fabricate a zero-increment georef.  The
-            # inventory path LISTS them (ni/nj NULL) and a
-            # ``match=`` regex can skip them header-side;
-            # decoding is the explicit codec route:
-            # decode_grib2(...).spectral_coeffs →
-            # grib2.spectral_synthesis onto a Gaussian grid.
-            raise ValueError(
-                f"record {n}: spectral field (T"
-                f"{rec.spectral_truncation}) cannot land as "
-                "gridpoints — synthesize explicitly via "
-                "synthesize_spectral=(nj, ni) / "
-                "grib2.spectral_synthesis, or exclude it "
-                "with match="
-            )
-        grid_template = rec.grid_template
-        # which 4.x template produced the record — NULL
-        # on edition 1 (GRIB1 has no PDT numbering);
-        # makes 4.7 error fields distinguishable from
-        # the layout-identical 4.0 analysis
-        product_template = rec.product_template
-        # GRIB2 parameters are (category, number) pairs with
-        # their own numbering — folding them into GRIB1's
-        # parameter column would collide (c0,n11 vs GRIB1
-        # TMP=11). Keep the raw pair in their own columns and
-        # leave ``parameter`` NULL; consumers key jointly on
-        # (edition, parameter, category, number).
-        parameter = None
-        category, number = rec.category, rec.number
-        # Template 4.0 first fixed surface → the unified
-        # level columns; coded-missing surfaces stay NULL
-        # (a level filter must fail VISIBLY, not match 0).
-        level_type = rec.level_type
-        level = _apply_surface_scale(rec.level_value, rec.level_scale)
-        # Second fixed surface (octets 29-34): the layer
-        # bottom — NULL (coded missing) on point levels, so
-        # a 0-10 cm soil LAYER can't masquerade as a point
-        # measurement at its top surface.
-        level2_type = rec.level2_type
-        level2 = _apply_surface_scale(
-            rec.level2_value, rec.level2_scale
+    if rec.spectral_truncation is not None and synthesize_spectral is None:
+        # Spherical-harmonic records have NO gridpoint cells — landing
+        # them would fabricate a zero-increment georef.  The inventory
+        # LISTS them (ni/nj NULL), ``match=`` can skip them header-side,
+        # and synthesis is the explicit decode route.
+        raise ValueError(
+            f"record {n}: spectral field (T{rec.spectral_truncation}) cannot "
+            "land as gridpoints — synthesize explicitly via "
+            "synthesize_spectral=(nj, ni) / grib2.spectral_synthesis, or "
+            "exclude it with match="
         )
-        # Template 4.8 statistical processing: NULL on 4.0
-        # (instantaneous), so accumulation-vs-instantaneous
-        # is filterable on landed archives.
-        stat_process = rec.statistical_process
-        # Templates 4.1/4.11: ensemble membership columns,
-        # NULL on deterministic products — control-vs-
-        # perturbed is filterable on landed archives.
-        ens_member = rec.ensemble_member
-        ens_size = rec.ensemble_size
-        # Templates 4.2/4.12 (derived-ensemble products:
-        # mean / spread) and 4.5/4.9 (probability
-        # forecasts): the derived-forecast code, the
-        # probability type and its decoded threshold
-        # limits land beside the ensemble columns — NULL
-        # everywhere else, so member-vs-mean-vs-P(>thr) is
-        # a plain column filter on landed archives.
-        # Forecast lead (octets 18-22, whole 4.0 family)
-        # in whole hours.
-        fc_hours = rec.forecast_hours
-        derived_fc = rec.derived_forecast
-        # Templates 4.3/4.4 (cluster-derived
-        # forecasts): which cluster, how many
-        # clusters, how many members in this one —
-        # NULL on every other product, so
-        # per-cluster selection is a column filter.
-        cluster_id = rec.cluster_identifier
-        cluster_tot = rec.cluster_total
-        cluster_sz = rec.cluster_size
-        prob_type = rec.probability_type
-        prob_lo = rec.prob_lower_limit
-        prob_hi = rec.prob_upper_limit
-        # Templates 4.6/4.10: the percentile (0-100)
-        # this field represents.
-        pctl = rec.percentile_value
-        # Templates 4.31/4.32 (satellite products): the
-        # contributing-band count plus per-band instrument
-        # types and central wave numbers (m^-1) — NULL on
-        # every non-satellite product, so "only band-13
-        # imagery" is a plain column filter on landed
-        # archives.  The level columns stay NULL here (a
-        # satellite view has no fixed surface), and
-        # forecast_hours is NULL on the observational 4.31.
-        sat_bands = rec.satellite_bands
-        if rec.satellite_series is not None:
-            sat_series = list(rec.satellite_series)
-        if rec.satellite_numbers is not None:
-            sat_numbers = list(rec.satellite_numbers)
-        if rec.satellite_instruments is not None:
-            sat_instruments = list(rec.satellite_instruments)
-        if rec.central_wavenumbers is not None:
-            sat_waves = [
-                None if w is None else float(w)
-                for w in rec.central_wavenumbers
-            ]
-        # Template 4.20 (radar): site-based metadata — NULL
-        # on every non-radar product, so "only site KTLX" /
-        # "only clear-air mode" are plain column filters on
-        # landed archives.  Level columns and forecast_hours
-        # stay NULL (an observation with no fixed surface).
-        rdr_sites = rec.radar_sites
-        rdr_site_id = rec.radar_site_id
-        rdr_site_number = rec.radar_site_number
-        rdr_lat = rec.radar_site_lat
-        rdr_lon = rec.radar_site_lon
-        rdr_elev = rec.radar_elevation_m
-        rdr_mode = rec.radar_operating_mode
-        # Templates 4.40-4.43 / 4.44-4.48 (chemistry / aerosol — the
-        # CAMS product families): the code-table-4.230 constituent or
-        # code-table-4.233 aerosol type plus the decoded size /
-        # wavelength intervals — NULL on every other product, so
-        # "only NO2" / "only PM2.5-range aerosol" are plain column
-        # filters on landed archives.
-        chem_constituent = rec.constituent_type
-        aero_type = rec.aerosol_type
-        aero_size_interval = rec.aerosol_size_interval
-        aero_size1 = rec.aerosol_first_size_m
-        aero_size2 = rec.aerosol_second_size_m
-        aero_wl_interval = rec.aerosol_wavelength_interval
-        aero_wl1 = rec.aerosol_first_wavelength_m
-        aero_wl2 = rec.aerosol_second_wavelength_m
-        # Templates 4.60/4.61 (ensemble reforecast): the model-version
-        # date — what separates the runs of different model versions a
-        # decades-deep reforecast archive interleaves.
-        if rec.model_version is not None:
-            vy, vmo, vd, vh, vmi = rec.model_version
-            model_version = pd.Timestamp(
-                year=vy, month=vmo, day=vd, hour=vh, minute=vmi
-            )
-        # 4.8-family: how many time-range specifications
-        # the statistical section nests — count > 1 marks
-        # a compound statistic ("average of daily maxima")
-        # whose INNER processes are not surfaced.
-        time_ranges = rec.time_range_count
-        if rec.interval_end is not None:
-            ey, em, ed, eh, emi = rec.interval_end
-            interval_end = pd.Timestamp(
-                year=ey, month=em, day=ed, hour=eh, minute=emi
-            )
-        if rec.lambert_params is not None:
-            # Projected grids (Mercator / polar stereo /
-            # Lambert) have no affine lat/lon axes, and a
-            # ROTATED and/or STRETCHED lat/lon grid's
-            # (3.1/3.2/3.3) affine axes are coordinates in
-            # the ROTATED/STRETCHED system — reading
-            # either as geography would be silent
-            # corruption, so the mdeg georef stays NULL
-            # (visible, never fabricated) and the
-            # georeference is the per-cell coordinate
-            # arrays in STORAGE order, recovered through the
-            # codec's vectorized inverse projection /
-            # unrotation.
-            lat0 = lon0 = dlat = dlon = None
-            lats_udeg = None
-            cell_lats = rec.cell_lats_deg.reshape(-1).tolist()
-            cell_lons = rec.cell_lons_deg.reshape(-1).tolist()
-        elif rec.row_ni is not None:
-            # Reduced Gaussian rows: quadrature latitudes per
-            # parallel in exact microdegrees AND per-cell
-            # coordinates (rows are ragged — there is no
-            # common Ni/dlon; ``ni`` stays NULL).
-            lat0 = dlat = dlon = None
-            lats_udeg = [
-                int(round(float(v) * 1e6))
-                for v in rec.latitudes_deg
-            ]
-            lon0 = _udeg_to_mdeg(rec.lon_first_udeg)
-            cell_lats = rec.cell_lats_deg.tolist()
-            cell_lons = rec.cell_lons_deg.tolist()
-        elif rec.gaussian_n is not None:
-            # Gaussian rows have no affine latitude axis:
-            # the mdeg georef stays NULL (visible, never a
-            # fabricated dlat) and the exact quadrature
-            # latitudes ride along in microdegrees.
-            lat0 = dlat = None
-            lats_udeg = [
-                int(round(float(v) * 1e6))
-                for v in rec.latitudes_deg
-            ]
-            lon0 = _udeg_to_mdeg(rec.lon_first_udeg)
-            dlon = _udeg_to_mdeg(rec.dlon_udeg)
-        else:
-            lats_udeg = None
-            lat0, lon0 = _udeg_to_mdeg(
-                rec.lat_first_udeg
-            ), _udeg_to_mdeg(rec.lon_first_udeg)
-            dlat, dlon = _udeg_to_mdeg(
-                rec.dlat_udeg
-            ), _udeg_to_mdeg(rec.dlon_udeg)
-    values_arr = rec.values
-    ni_out, nj_out = rec.ni, rec.nj
-    if rec.spectral_truncation is not None:
-        # EXPLICIT synthesis at the scan edge (opt-in): the
-        # spectrum lands as the global Gaussian raster the
-        # caller asked for — quadrature latitudes in exact
-        # microdegrees like a native Gaussian record, lon
-        # axis from 0°E with the affine step, and
-        # grid_template 50 marking the raster as
-        # SYNTHESIZED so consumers can tell it from a
-        # producer-gridded field.  Product metadata (level,
-        # lead, statistics) rides unchanged.
+    row = dict.fromkeys(_RECORD_COLUMNS)
+    row.update(path=path, record_number=n, edition=edition)
+    for c in _PRODUCT_COLUMNS:
+        v = getattr(rec, c, None)
+        if isinstance(v, tuple):
+            v = _timestamp(v) if c in _TIMESTAMP_COLUMNS else list(v)
+        row[c] = v
+    row["year"], row["month"], row["day"], row["hour"] = rec.reftime[:4]
+    if edition == 1:
+        # Layer level types split octets 11-12 as (top, bottom).
+        row["level2_type"] = _layer_type(rec.level_type, rec.level2)
+
+        def mdeg(f):
+            return getattr(rec, f"{f}_mdeg")
+    else:
+        # The fixed surfaces (scaled value, scale factor) → integer
+        # levels; coded-missing surfaces stay NULL (a level filter must
+        # fail VISIBLY, not match 0), and a point level's NULL second
+        # surface keeps a 0-10 cm soil LAYER from masquerading as a
+        # point measurement at its top.
+        row["level"] = surface_level(rec.level_value, rec.level_scale)
+        row["level2"] = surface_level(rec.level2_value, rec.level2_scale)
+
+        def mdeg(f):
+            return _udeg_to_mdeg(getattr(rec, f"{f}_udeg"))
+    values = rec.values
+    if rec.spectral_truncation is None:
+        row.update(_georef(rec, mdeg))
+    else:
+        # EXPLICIT synthesis at the scan edge (opt-in): the spectrum
+        # lands as the global Gaussian raster the caller asked for —
+        # quadrature latitudes in exact microdegrees like a native
+        # Gaussian record, lon axis from 0°E with the affine step, and
+        # grid_template 50 marking the raster SYNTHESIZED so consumers
+        # can tell it from a producer-gridded field.  Product metadata
+        # (level, lead, statistics) rides unchanged.
         nj_s, ni_s = synthesize_spectral
         if 360_000 % ni_s:
             raise ValueError(
                 f"synthesis ni={ni_s} must divide the "
                 "360000-mdeg circle for an exact grid step"
             )
-        values_arr, s_lats = _loud(spectral_synthesis)(
-            rec.spectral_coeffs,
-            rec.spectral_truncation,
-            nj_s,
-            ni_s,
+        values, s_lats = _loud(spectral_synthesis)(
+            rec.spectral_coeffs, rec.spectral_truncation, nj_s, ni_s
         )
-        ni_out, nj_out = ni_s, nj_s
-        grid_template = 50
-        lat0 = dlat = None
-        lats_udeg = [
-            int(round(float(v) * 1e6)) for v in s_lats
-        ]
-        lon0, dlon = 0, 360_000 // ni_s
-        cell_lats = cell_lons = None
-    return (
-        {
-            "path": path,
-            "record_number": n,
-            "edition": edition,
-            "grid_template": grid_template,
-            "product_template": product_template,
-            "parameter": parameter,
-            "category": category,
-            "number": number,
-            "level_type": level_type,
-            "level": level,
-            "level2_type": level2_type,
-            "level2": level2,
-            "year": rec.reftime[0],
-            "month": rec.reftime[1],
-            "day": rec.reftime[2],
-            "hour": rec.reftime[3],
-            "forecast_hours": fc_hours,
-            "statistical_process": stat_process,
-            "interval_end": interval_end,
-            "time_range_count": time_ranges,
-            "ensemble_member": ens_member,
-            "ensemble_size": ens_size,
-            "derived_forecast": derived_fc,
-            "cluster_identifier": cluster_id,
-            "cluster_total": cluster_tot,
-            "cluster_size": cluster_sz,
-            "probability_type": prob_type,
-            "prob_lower_limit": prob_lo,
-            "prob_upper_limit": prob_hi,
-            "percentile_value": pctl,
-            "satellite_bands": sat_bands,
-            "satellite_series": sat_series,
-            "satellite_numbers": sat_numbers,
-            "satellite_instruments": sat_instruments,
-            "central_wavenumbers": sat_waves,
-            "radar_sites": rdr_sites,
-            "radar_site_id": rdr_site_id,
-            "radar_site_number": rdr_site_number,
-            "radar_site_lat": rdr_lat,
-            "radar_site_lon": rdr_lon,
-            "radar_elevation_m": rdr_elev,
-            "radar_operating_mode": rdr_mode,
-            "constituent_type": chem_constituent,
-            "aerosol_type": aero_type,
-            "aerosol_size_interval": aero_size_interval,
-            "aerosol_first_size_m": aero_size1,
-            "aerosol_second_size_m": aero_size2,
-            "aerosol_wavelength_interval": aero_wl_interval,
-            "aerosol_first_wavelength_m": aero_wl1,
-            "aerosol_second_wavelength_m": aero_wl2,
-            "model_version": model_version,
-            "ni": ni_out,
-            "nj": nj_out,
-            "lat_first_mdeg": lat0,
-            "lon_first_mdeg": lon0,
-            "dlat_mdeg": dlat,
-            "dlon_mdeg": dlon,
-            "latitudes_udeg": lats_udeg,
-            "cell_lats_deg": cell_lats,
-            "cell_lons_deg": cell_lons,
-            "values": values_arr.reshape(-1).tolist(),
-        "error": None,
-        }
-    )
+        row.update(
+            ni=ni_s, nj=nj_s, grid_template=50,
+            latitudes_udeg=_exact_udeg(s_lats), lon_first_mdeg=0,
+            dlon_mdeg=360_000 // ni_s,
+        )
+    row["values"] = values.reshape(-1).tolist()
+    return row
 
 
 def _decode_batches(
@@ -873,6 +565,14 @@ def _decode_batches(
         yield pd.DataFrame(rows, columns=_RECORD_COLUMNS)
 
 
+def _decode_stage(files: DataFrame, **options) -> DataFrame:
+    """The one decode stage of the batch and streaming scans: binaryFile
+    rows → RECORD_SCHEMA rows through ``_decode_batches``."""
+    return files.select("path", "content").mapInPandas(
+        partial(_decode_batches, **options), schema=RECORD_SCHEMA
+    )
+
+
 def grib1_records(
     spark: SparkSession,
     path: str,
@@ -900,16 +600,12 @@ def grib1_records(
     (grid.grib1.decode_grib1); the small catalog ships inside the
     Arrow-stage closure, so at 100 TB it broadcasts once per executor
     like any other serialized task constant."""
-    files = spark.read.format("binaryFile").load(path).select("path", "content")
-    return files.mapInPandas(
-        partial(
-            _decode_batches,
-            match=match,
-            synthesize_spectral=synthesize_spectral,
-            on_error=on_error,
-            predefined_bitmaps=predefined_bitmaps,
-        ),
-        schema=RECORD_SCHEMA,
+    return _decode_stage(
+        spark.read.format("binaryFile").load(path),
+        match=match,
+        synthesize_spectral=synthesize_spectral,
+        on_error=on_error,
+        predefined_bitmaps=predefined_bitmaps,
     )
 
 
@@ -941,16 +637,12 @@ def grib1_records_stream(
     )
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    files = reader.load(path).select("path", "content")
-    return files.mapInPandas(
-        partial(
-            _decode_batches,
-            match=match,
-            synthesize_spectral=synthesize_spectral,
-            on_error=on_error,
-            predefined_bitmaps=predefined_bitmaps,
-        ),
-        schema=RECORD_SCHEMA,
+    return _decode_stage(
+        reader.load(path),
+        match=match,
+        synthesize_spectral=synthesize_spectral,
+        on_error=on_error,
+        predefined_bitmaps=predefined_bitmaps,
     )
 
 

@@ -7,6 +7,7 @@ from __future__ import annotations
 import os
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from monitoring_data_ingestion_spark.grid.grib1 import encode_grib1_message
@@ -159,6 +160,27 @@ def test_mixed_edition_landing_decodes_both(spark, tmp_path):
     assert rows[0]["lat_first_mdeg"] == rows[1]["lat_first_mdeg"] == 90_000
     cells = grib1_cells(grib1_records(spark, landing))
     assert cells.count() == 24
+
+
+def test_one_framing_scanner_for_both_editions():
+    """The landing scan and both codecs' scanners frame messages through
+    one loop; the per-edition scanners still stop at the other edition."""
+    from monitoring_data_ingestion_spark.grid import grib1, grib2
+    from monitoring_data_ingestion_spark.sources import grib_source
+
+    assert grib_source.iter_grib_messages is grib1.iter_grib_messages
+    v = np.arange(12, dtype=np.float64).reshape(3, 4)
+    m1 = encode_grib1_message(v, reference_value=0.0, nbits=8)
+    m2 = grib2.encode_grib2_message(v, reference_value=0.0, nbits=8)
+    assert list(grib1.iter_grib_messages(m2 + m1 + m2)) == [(2, m2), (1, m1), (2, m2)]
+    assert list(grib1.iter_messages(m1 + m1)) == [m1, m1]
+    assert list(grib2.iter_messages2(m2 + m2)) == [m2, m2]
+    with pytest.raises(ValueError, match="unsupported GRIB edition 2"):
+        list(grib1.iter_messages(m1 + m2))
+    with pytest.raises(ValueError, match="unsupported GRIB edition 1"):
+        list(grib2.iter_messages2(m2 + m1))
+    with pytest.raises(ValueError, match="truncated GRIB indicator section"):
+        list(grib1.iter_grib_messages(m1 + m2[:12]))
 
 
 def test_mixed_edition_levels_filterable_across_editions(spark, tmp_path):
@@ -1235,3 +1257,366 @@ def test_spectral_synthesis_through_landing_scan(spark, tmp_path):
     # without the opt-in the boundary still stops loudly
     with pytest.raises(Exception, match="synthesize_spectral"):
         grib1_records(spark, landing).collect()
+
+
+# --- landing-row golden digests ---------------------------------------------
+#
+# The sha256 of every record's landing row (``_decode_record_row``) and
+# inventory dict (``_unified_inventory``) over a corpus of every GRIB1
+# grid and time form, the GRIB2 product families, and every section-5
+# and section-3 case of the encode goldens.  The digests were taken
+# before the two editions' per-edition row builders became one by-name
+# rule, so that refactor (and any later one) proves its rows identical.
+
+
+def _spectrum(truncation: int) -> np.ndarray:
+    npairs = (truncation + 1) * (truncation + 2) // 2
+    c = (np.arange(npairs) - 5.0 + 1j * (np.arange(npairs) % 7)).astype(complex)
+    c[: truncation + 1] = c[: truncation + 1].real
+    return c
+
+
+def _landing_corpus() -> dict:
+    """Case name -> one GRIB message (edition 1 or 2)."""
+    from monitoring_data_ingestion_spark.grid.grib2 import encode_grib2_message
+
+    from .test_grib2_golden import _cases, _grid_cases
+
+    rng = np.random.default_rng(20261021)
+    v = np.round(rng.uniform(200.0, 320.0, size=(4, 6)), 1)
+    bitmap = rng.random((4, 6)) < 0.75
+    rows = [4, 6, 6, 4]
+    ragged = np.round(rng.uniform(0.0, 50.0, size=sum(rows)), 1)
+    g1 = dict(decimal_scale=1, nbits=12)
+
+    def e1(values, **kw):
+        return encode_grib1_message(values, **{**g1, **kw})
+
+    def e2(**kw):
+        return encode_grib2_message(v, **{**g1, **kw})
+
+    ens = dict(type=3, member=2, size=10)
+    stat = dict(process=1, interval_end=(2020, 1, 2, 0, 0), range_hours=24)
+    bands = [
+        dict(series=333, number=17, instrument=616, scale=-3, value=717),
+        dict(series=333, number=18, instrument=620, scale=2, value=98765),
+    ]
+    corpus = {
+        "g1 regular": e1(v, parameter=11, reftime=(2020, 3, 4, 6, 0)),
+        "g1 south-first": e1(
+            v, scanning_mode=0x40, lat_first_mdeg=-10_000, lon_first_mdeg=20_000,
+            dlat_mdeg=500, dlon_mdeg=250,
+        ),
+        "g1 bitmap": e1(v, bitmap=bitmap, parameter=61),
+        "g1 Gaussian": e1(v, gaussian=True, lon_first_mdeg=0, dlon_mdeg=60_000),
+        "g1 rotated": e1(
+            v, rotated=dict(south_pole_lat=-30.0, south_pole_lon=10.0, angle=2.0),
+        ),
+        "g1 reduced Gaussian": e1(ragged, reduced_ni=rows, lon_first_mdeg=0),
+        "g1 reduced lat/lon": e1(
+            ragged, reduced_ni=rows, reduced_latlon=True, dlat_mdeg=500,
+        ),
+        "g1 statistical": e1(v, statistical=dict(process=1, start=0, end=6)),
+        "g1 16-bit lead": e1(v, forecast=dict(unit=1, value=300)),
+        "g1 layer": e1(v, level_type=112, level=0, level2=10),
+        "g1 spectral": encode_grib1_message(
+            _spectrum(4), spectral=dict(truncation=4), nbits=8, parameter=80,
+            forecast=dict(unit=1, value=6),
+        ),
+        "g1 second-order": e1(v, second_order=dict(groups="rows")),
+        "g2 layer": e2(level_type=106, level_value=0, level2=dict(type=106, value=2)),
+        "g2 ensemble": e2(ensemble=ens, forecast=dict(unit=1, value=6)),
+        "g2 derived": e2(derived=dict(type=4, size=20)),
+        "g2 cluster": e2(cluster=dict(
+            type=1, size=51, identifier=2, hires=1, lores=3, total=6, method=1,
+            members=[3, 7, 11], stddev=(2, 125), distance=(1, 37),
+            bounds=(60_000_000, 30_000_000, 40_000_000, -10_000_000),
+        )),
+        "g2 probability": e2(
+            probability=dict(number=1, total=3, type=2, lower=(0, -10), upper=(1, 255)),
+            statistical=stat,
+        ),
+        "g2 percentile": e2(percentile=90),
+        "g2 spatial": e2(spatial=dict(stat=2, type=3, points=9)),
+        "g2 satellite": e2(category=4, number=7, satellite=dict(bands=bands)),
+        "g2 simulated satellite": e2(
+            category=4, number=7, satellite=dict(simulated=True, bands=bands[:1]),
+            forecast=dict(unit=1, value=12),
+        ),
+        "g2 radar": e2(discipline=15, category=1, number=195, radar=dict(
+            sites=3, site_id="KTLX", site_number=351, lat_udeg=35_333_000,
+            lon_udeg=-97_278_000, elevation_m=370, mode=2,
+        )),
+        "g2 chemistry": e2(chemistry=8, statistical=stat),
+        "g2 aerosol": e2(aerosol=dict(
+            type=62001, size_interval=2, first_size=(8, 25), second_size=(7, 100),
+            wavelength_interval=11, first_wavelength=(9, 550),
+            second_wavelength=(9, 650),
+        )),
+        "g2 reforecast": e2(ensemble=ens, model_version=(2019, 5, 27, 12, 0, 0)),
+    }
+    for cases in (_cases(), _grid_cases()):
+        for name, (_, kw) in cases.items():
+            kw = dict(kw)
+            corpus[f"g2 golden {name}"] = encode_grib2_message(kw.pop("values"), **kw)
+    return corpus
+
+
+def _digest(d: dict) -> str:
+    import hashlib
+    import json
+
+    blob = json.dumps(d, sort_keys=True, default=repr)
+    return hashlib.sha256(blob.encode()).hexdigest()
+
+
+def _landed(msg: bytes) -> tuple:
+    """(landing rows, inventory dicts) of one message's records."""
+    from monitoring_data_ingestion_spark.sources.grib_source import (
+        _decode_record_row,
+        _record_units,
+        _unified_inventory,
+    )
+
+    rows, inventory = [], []
+    for n, (edition, m, s) in enumerate(_record_units(msg), start=1):
+        rows.append(_decode_record_row("corpus", n, edition, m, s, None, (6, 8)))
+        inventory.append(_unified_inventory(edition, m, s))
+    return rows, inventory
+
+
+_LANDING_GOLDEN = {
+    "g1 16-bit lead": [(
+        "08259f8aedafb5b65cad054ced5ea6fe34c239067da72b83aabf7bff0ce5dd35",
+        "53146d18fc5452ecc5338c3f5d2e10b284d5d120a3535e48fa29514f41844c56",
+    )],
+    "g1 Gaussian": [(
+        "993aaf9db4f070b95d36d2a6c226e577ec1d9e64624f28454a64ec4ddc6e454f",
+        "f8ea39c1ebffb814d99585733cb72cc9ec761b4b88d13c16b8a5df277e6162c1",
+    )],
+    "g1 bitmap": [(
+        "ec0efa14c02fabf0c80c23c88d3f6d748591bef6e4eb13c64fa5cbc7df5b23d1",
+        "48bc2d4a11df1a1870cb3b61b6cbd9a67f9858d791dc724ad1cea40bf0c89d61",
+    )],
+    "g1 layer": [(
+        "197addde60ae6748c1448eda634ae66633d087cbcadb8b118517efa70d8917f1",
+        "57effbe4b0bec36701bbdd77ac9534bf25c8bacbc0781113b8c5d04a8318b0a6",
+    )],
+    "g1 reduced Gaussian": [(
+        "b811d1a16d9d4f564072ac7413dd8bd5e0a4eb18c8f1d21c1ab7ef2efe44e97e",
+        "c7057af27fd920959666105c5f02a3c2ee8157c9c904289fe635040e65ea26f9",
+    )],
+    "g1 reduced lat/lon": [(
+        "a9e4a0c80b543198e94955aeeb487d38eb68f29625945be0c422c4a352b0e461",
+        "c7057af27fd920959666105c5f02a3c2ee8157c9c904289fe635040e65ea26f9",
+    )],
+    "g1 regular": [(
+        "19b47e875d474df0776863ddfbd840bcd94059a3170d1920a1bb159925790b76",
+        "2a3ef16a58b260829af47ee70a6c5c7a6d762976f77150bbff73541b128abe8c",
+    )],
+    "g1 rotated": [(
+        "f470e251fb612d965cd04f32775300fefdcaffebeb04b75567d796d25849abf5",
+        "f6aa8ac5aac4ac63dbfbd8b1c6829975095e0a52604eed5b95cbb34f7044be41",
+    )],
+    "g1 second-order": [(
+        "b99f4bcbb8bd1c3ebffc6bc5864295a7d8f4cf9b3a2c06729278a6104939d56e",
+        "72938ed02f817ce5cb3b78380bbb1c18444e2f4fb59fc949b1554d436913bab6",
+    )],
+    "g1 south-first": [(
+        "7e278000ab3db9a04b7a545e1cb415682cbf3b4638f7799a2f9d878dbeed7c9d",
+        "f8ea39c1ebffb814d99585733cb72cc9ec761b4b88d13c16b8a5df277e6162c1",
+    )],
+    "g1 spectral": [(
+        "7125de51e19dc390c4e0f83cba6d584c2a9a12eee21d2cae6767554cc5b22497",
+        "43f7d50bab934cdaaacbfc6affc4b66a7a45e8c4516ea3c0b843a588cb01fe08",
+    )],
+    "g1 statistical": [(
+        "dbdac965de0eb9d549baa872ec11f51a9b220b2addf908f35166ce40eac3879c",
+        "f8ea39c1ebffb814d99585733cb72cc9ec761b4b88d13c16b8a5df277e6162c1",
+    )],
+    "g2 aerosol": [(
+        "8518f233fc8d3152274aca2800604421f9a42e0eee6212a4828d364a80382322",
+        "4195b6b225aaef850c4b5dde6bcbe4ead5d96ef18f4d511a756e4be127aaf15b",
+    )],
+    "g2 chemistry": [(
+        "9d30ffe9a0250390d5091be0d904117236bbc16c1dbdd732b830e724f4ec533d",
+        "68871f3476ca3d5ad2e09ea2f31630c74562527b497a71a0db8166a54b04b31b",
+    )],
+    "g2 cluster": [(
+        "a35a7829fd9442b3f3edd887b0389b24b6f7340a57ed3aaa3dc61a3ca35fa2fb",
+        "533b5ad67825621ebc997afd0a8b74d719a3b5e819af3a70fef5fc63e29b85d4",
+    )],
+    "g2 derived": [(
+        "e9fbb5f43e0dedcfdfccf8163221d77974167480842b75622b189ef5e9151fb7",
+        "b377f461b84d405a17f5ac33780cef15462d84ba7436a614d1ca8689e8483c54",
+    )],
+    "g2 ensemble": [(
+        "2c3076b40555aee00dde30dd4d36a6c29febd06e1dc3b2dda41ac04efca8ae65",
+        "ea10fbd4b4ad81ed51d5acb0f0da75e68b550ff52d1d618fc74daae9c62eea17",
+    )],
+    "g2 golden 3.0 south-first": [(
+        "be474169a276e5cfd3ab7b9d978dd5f31358f34bec57aa89bbff42b3b9258123",
+        "f8688763d2335861a40a17621c00d771cd611d6c6e7c5b603173f1f6f4ac34e0",
+    )],
+    "g2 golden 3.1 rotated": [(
+        "68901291769f9dc78c3b018b6334f2176d73f20ae570cb05b46be5fc74ef4cbb",
+        "e2ea88c0318641dbf136113aae41203325ce4f5f7cf2e35bbc12f6b70de3db4b",
+    )],
+    "g2 golden 3.10 Mercator": [(
+        "7c4fac4ffa08209b401aa5d0b1a5fafff4dc37b1107fbaed3734d75193a39a85",
+        "f8688763d2335861a40a17621c00d771cd611d6c6e7c5b603173f1f6f4ac34e0",
+    )],
+    "g2 golden 3.2 stretched": [(
+        "59e06d02da2bcc37eb128bdedaf5c7a17aca5a7915a0237c2a63608142886e2d",
+        "e2ea88c0318641dbf136113aae41203325ce4f5f7cf2e35bbc12f6b70de3db4b",
+    )],
+    "g2 golden 3.20 polar stereographic": [(
+        "596acd8054f3f6e93dd5d8de59a5bb869d6d796ed6931faf52c621e7f10fa697",
+        "0f4e889ea361a0569e180522f25ceab7fe8992d8891f9e7bb69d6970bc2622b8",
+    )],
+    "g2 golden 3.3 stretched rotated": [(
+        "293faa57281d32d95f078852675aa2eb1ba9ed9c8d941ca1b1a93fdcedc4efbb",
+        "39249cededbe77e5fa57fde49b517bfd91c439fca7e1af21c96c76cd09e6823a",
+    )],
+    "g2 golden 3.30 Lambert": [(
+        "aec2ef1d083f0d1e544f23b99163252a98e54d98c86e3244a2dab1cda7da096d",
+        "5c5ffa9fd4049d299f61b7146269a8e101184d3575982212dfcd259b6c535006",
+    )],
+    "g2 golden 3.40 regular Gaussian": [(
+        "75402e1c988462b8f47dc9b442fdedb81051c9e4bfc9038d936a9369fc09785f",
+        "f8688763d2335861a40a17621c00d771cd611d6c6e7c5b603173f1f6f4ac34e0",
+    )],
+    "g2 golden 5.0": [(
+        "302937f045117d36779b8043133da9b0c0b0730f3ef306a26625b4acbcfe4bac",
+        "f8688763d2335861a40a17621c00d771cd611d6c6e7c5b603173f1f6f4ac34e0",
+    )],
+    "g2 golden 5.0 bitmap": [(
+        "e7fea8f292588171a095b0b17962d4f6fd4b7715bb105fd8e7894d9d198106d6",
+        "cf7b941d278972d936bfc1d83b817dc3b60f2d4ebb6a54e57a1f662df8e70761",
+    )],
+    "g2 golden 5.0 constant": [(
+        "af978701f8469b15120e371a7508fd94c5683965a60511165a3940317f0cf423",
+        "e6b9cfe6c5c1c8e51260f0fc99d6ccf35b86782fcce8692e25a6158c8081b21e",
+    )],
+    "g2 golden 5.0 reduced Gaussian": [(
+        "5d4ac3d24cff85bad112773c6d084a91b142d8ea95dda53f097b8e4df43f0cee",
+        "60147bf3147e0635f8b88f6905931d2cd77cfdb45b872c55f1e5a3c4beb20a88",
+    )],
+    "g2 golden 5.0 statistical product": [(
+        "123e0d3f7c17a01348a46a2de4841fd20675b3e6ce1492ed213f3a1ee938f9c8",
+        "5ec567280f96154eeee9c7d801fd0cd5919ab3c7f130cee20ae032b7c47d60e8",
+    )],
+    "g2 golden 5.2": [(
+        "302937f045117d36779b8043133da9b0c0b0730f3ef306a26625b4acbcfe4bac",
+        "8225fc0ac34118f57bd318544a55d5900701f37d19ea32d432c1b8d194b4ff09",
+    )],
+    "g2 golden 5.2 mvm=1": [(
+        "06ff81509985727c9ee8a76c0458c63259ec8b0b50a30ae0b865500f6736cd0e",
+        "8225fc0ac34118f57bd318544a55d5900701f37d19ea32d432c1b8d194b4ff09",
+    )],
+    "g2 golden 5.200": [(
+        "726139e1ea7de5cb17e9bc698e5df9a1baca49392e7b7d619014ed8cd05bd138",
+        "f402d1087e588afe59d9b607d65ff467629a33282581a91c14c3274264a07ff6",
+    )],
+    "g2 golden 5.3 order 1": [(
+        "302937f045117d36779b8043133da9b0c0b0730f3ef306a26625b4acbcfe4bac",
+        "259105103b42b9baef383d324288810ff461ba4f828a7c5c29e1c701bf6b391b",
+    )],
+    "g2 golden 5.3 order 2 mvm=2": [(
+        "401b85c96c4246fb35e0da10c87ae8b8f06bf0c0044aa00a0465ec5918405e19",
+        "0f62ab82551b64136399079222c357c5f30fe603536772f0de99106af62d2891",
+    )],
+    "g2 golden 5.4 binary32": [(
+        "5d25bcca3894ab2338b978aea4102ced9c974e5e23bac00a5acfc5b56f4f3ae5",
+        "d63fcd6103b25766274a65eee31047dc4d30aa99b5b3fe27046ee1e69c512401",
+    )],
+    "g2 golden 5.4 binary64": [(
+        "e7fea8f292588171a095b0b17962d4f6fd4b7715bb105fd8e7894d9d198106d6",
+        "607f4429d3c883b1bbeb3962db129d176ddc0a65e410100705f984f5c91d671d",
+    )],
+    "g2 golden 5.40": [(
+        "302937f045117d36779b8043133da9b0c0b0730f3ef306a26625b4acbcfe4bac",
+        "d63fcd6103b25766274a65eee31047dc4d30aa99b5b3fe27046ee1e69c512401",
+    )],
+    "g2 golden 5.40 bitmap": [(
+        "e7fea8f292588171a095b0b17962d4f6fd4b7715bb105fd8e7894d9d198106d6",
+        "cd2faa7751de24579921fbb392b5c9c46e8c81e1a3b24e680bea0adb6a6e599b",
+    )],
+    "g2 golden 5.41": [(
+        "302937f045117d36779b8043133da9b0c0b0730f3ef306a26625b4acbcfe4bac",
+        "1bca6c839491b66023543cc61fededf447d3ab896993962c03f7a50566f6e883",
+    )],
+    "g2 golden 5.42": [(
+        "302937f045117d36779b8043133da9b0c0b0730f3ef306a26625b4acbcfe4bac",
+        "8522f754616ea161a1d6d650e9f8e4a27603db04b766872fc3a05200114dab7c",
+    )],
+    "g2 golden 5.50 spectral": [(
+        "74cac74d91eb2178a6e0fd0752e3ec63f3aeae2c9e5a15e0027f25f8be62a13c",
+        "848d31189f8f253cf8f2a6c85d18eb53fa50b968bfaeee3d51d9c9f5125d5b91",
+    )],
+    "g2 golden 5.51 spectral": [(
+        "12d5e393d934397f89afe33dc05fb93cd7f871f80434edbe0cd8533d7e45fc37",
+        "a12cb650e271a3a70fc22489e599b6e82a5d1bc8d3bd9b33c6b0dae307b9eae6",
+    )],
+    "g2 golden 5.61": [(
+        "25792fca6589fb51b01c3d94991ca03a59d330e5632a6435473b86a5c7f18f06",
+        "b844ae01654b97e64692772f79127eeecc210052a51886640fb8e73db8ce4cf0",
+    )],
+    "g2 layer": [(
+        "7c060e0a9bdcb394ac9df654be207fcbfc98f9d6660e21fcc216aa7dcde9eadd",
+        "7f64cf953c552716b14ae79cc406b8fb3d33946c20a5bf9a1ab034132a7d22ef",
+    )],
+    "g2 percentile": [(
+        "ef18b261fa2e3598b2585803dae75eb22f5a51cb414647c809ba8ed03f797a4e",
+        "470d418633cf7c466b00eafcf65e95c4a16fb91ff936a3246493c34bfa59272b",
+    )],
+    "g2 probability": [(
+        "2539e9c6749fd8c5f05dedc74703970f2df5a9323b000904d459151f9197dc2c",
+        "533b5ad67825621ebc997afd0a8b74d719a3b5e819af3a70fef5fc63e29b85d4",
+    )],
+    "g2 radar": [(
+        "1f2819c00c2c1ce1eaeac8752e62684681b4ad4d79e96a2d55739369023522e4",
+        "66b81499a039b5f0967548f933f702e597684a7eb6ed59e23cb21323d5eaebd1",
+    )],
+    "g2 reforecast": [(
+        "8bf5dd1422ebc1d0eb22cd741445d5e04a82e9e7b1ef269338573c2ab653af12",
+        "a8fe4960b90f1a2d0a21ac92893310f657d3e1560a325a55c1f1959959143329",
+    )],
+    "g2 satellite": [(
+        "b04360307625bcbebbca067b8657861c7468777d2b2e1edc77d2d99711a6d968",
+        "dd58c164ca542969b707e5a9175a209c87f08dedface6b91dc935336db06846e",
+    )],
+    "g2 simulated satellite": [(
+        "98061d2111a08a604fa076ce97e14a01fc9b44081199c5d12a76ba5ce7f3b714",
+        "c112de81de1383775c6d89fe7f1e92f51c5d931fd22c0dc2dd7696d2883bc9cf",
+    )],
+    "g2 spatial": [(
+        "1ab9d2e845a4d7e4134b8ded4ff70ffbfd52fe74c8193e2beb44b7d73f67d522",
+        "6158a916a39699eed98bfc2fb313f8bd68766686e6ff6137a820fa4ccf4613d4",
+    )],
+}
+
+
+def test_landing_golden_covers_the_corpus():
+    assert set(_LANDING_GOLDEN) == set(_landing_corpus())
+
+
+@pytest.mark.filterwarnings("ignore:spectral m=0")
+@pytest.mark.parametrize("name", sorted(_LANDING_GOLDEN))
+def test_landing_rows_match_their_golden_digests(name):
+    rows, inventory = _landed(_landing_corpus()[name])
+    assert [(_digest(r), _digest(h)) for r, h in zip(rows, inventory)] == (
+        _LANDING_GOLDEN[name]
+    )
+
+
+@pytest.mark.filterwarnings("ignore:spectral m=0")
+def test_landing_corpus_fills_every_record_column():
+    """Under the by-name copy a renamed record field would NULL its
+    column silently; every column but ``error`` must be set somewhere."""
+    from monitoring_data_ingestion_spark.sources.grib_source import _RECORD_COLUMNS
+
+    rows = [r for msg in _landing_corpus().values() for r in _landed(msg)[0]]
+    assert all(list(r) == _RECORD_COLUMNS for r in rows)
+    never = [c for c in _RECORD_COLUMNS if all(r[c] is None for r in rows)]
+    assert never == ["error"]
